@@ -31,7 +31,8 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
     ``rows``: list of tuples/Rows (positional) or dicts (by name, missing
     keys NULL-filled).  ``schema``: DDL string or StructType.  Anything
     the Arrow path cannot represent exactly falls back to the classic
-    createDataFrame with identical semantics.
+    createDataFrame with identical semantics — including positional rows
+    whose length differs from the schema width, which it rejects.
     """
     struct = schema
     if not isinstance(struct, StructType):
@@ -41,20 +42,17 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             struct = _parse_datatype_string(schema)
         except Exception:
             return spark.createDataFrame(rows, schema)
+    names = struct.fieldNames()
+    by_name = bool(rows) and isinstance(rows[0], dict)
     if not any(
         isinstance(f.dataType, (TimestampType, TimestampNTZType))
         for f in struct.fields
-    ):
+    ) and (by_name or all(len(r) == len(names) for r in rows)):
         try:
             import pyarrow as pa
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            names = struct.fieldNames()
-            data = (
-                rows
-                if rows and isinstance(rows[0], dict)
-                else [dict(zip(names, r)) for r in rows]
-            )
+            data = rows if by_name else [dict(zip(names, r)) for r in rows]
             tbl = pa.Table.from_pylist(data, schema=to_arrow_schema(struct))
             return spark.createDataFrame(tbl, struct)
         except Exception:

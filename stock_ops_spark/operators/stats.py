@@ -61,6 +61,29 @@ def merge_stats(existing: DataFrame | None, delta: DataFrame, keys: list[str]) -
     )
 
 
+def fold_stats(tbl, keys, sums=("rc",), mins=("lo",), maxs=("hi",), lists=()):
+    """The one null-safe stats fold on the driver (``merge_stats`` is its
+    Spark counterpart): one pyarrow ``group_by`` over an Arrow table of
+    per-key stat rows — sum of each count column
+    (NULL counts as 0), min of each low and max of each high (NULLs
+    ignored, like Spark's least/greatest), plus the listed columns
+    gathered per key.  Folding a concatenation of stat tables is their
+    merge, because every aggregate is associative."""
+    import pyarrow.compute as pc
+
+    zero = pc.ScalarAggregateOptions(min_count=0)
+    aggs = (
+        [(c, "sum", zero) for c in sums]
+        + [(c, "min") for c in mins]
+        + [(c, "max") for c in maxs]
+        + [(c, "list") for c in lists]
+    )
+    out = tbl.group_by(list(keys), use_threads=False).aggregate(aggs)
+    names = {f"{a[0]}_{a[1]}": a[0] for a in aggs}
+    out = out.rename_columns([names.get(c, c) for c in out.column_names])
+    return out.select([*keys, *sums, *mins, *maxs, *lists])
+
+
 class StatsTable:
     """A small parquet-backed stats catalog for one dataset.
 
@@ -152,11 +175,26 @@ class StatsTable:
                 shutil.rmtree(cand, ignore_errors=True)
         return None
 
-    def update(self, delta: DataFrame) -> None:
+    def update(self, delta) -> None:
+        """Merge a stats delta — a DataFrame, or an Arrow table with the
+        same columns — into the catalog.  The default stats merge runs
+        driver-side (``_merge_arrow``) whenever it covers the value
+        domains; otherwise, and for a custom ``merge_fn``, Spark merges."""
         import shutil
 
-        if self.merge_fn is merge_stats and self._update_arrow(delta):
-            return
+        import pyarrow as pa
+
+        if self.merge_fn is merge_stats:
+            tbl = delta
+            if not isinstance(tbl, pa.Table):
+                try:
+                    tbl = delta.select(*self._cols).toArrow()  # tiny by contract
+                except Exception:
+                    tbl = None
+            if tbl is not None and self._merge_arrow(tbl):
+                return
+        if isinstance(delta, pa.Table):
+            delta = self.spark.createDataFrame(delta)
         existing = self.read()
         merged = self.merge_fn(existing, delta, self.keys)
         # merged's plan reads self.path, which the swap below replaces —
@@ -170,56 +208,49 @@ class StatsTable:
         os.rename(self._tmp, self.path)
         shutil.rmtree(self._aside, ignore_errors=True)
 
-    def _update_arrow(self, delta: DataFrame) -> bool:
-        """Driver-side merge fast path for the DEFAULT stats merge (r12,
-        guide §1/§5).  The stats catalog is tiny by contract (one row
-        per ticker[, interval]), yet the Spark-side update paid three
-        jobs per call — read, checkpoint of the merged plan, coalesced
-        write — twice per ``ParquetStore.ingest_batch``; profiled at
-        ~0.3 s per call on the e2e replay floor (q334/q333/q45).  Here
-        the batch's delta is one small collect, the merge is a python
-        fold (same null-safe least/greatest semantics as
-        ``merge_stats``), and the write is one pyarrow file installed
-        through the SAME tmp-dir + two-rename swap, so the crash story
-        is unchanged.  Returns False — caller falls back to the Spark
-        merge — for value domains this path does not cover (ts cells
-        are int64 or string for every mode's ``batch_stats``; anything
-        else, or an undecidable type, declines).  MatView's custom
-        ``merge_fn`` never reaches this path."""
-        cols = self.keys + ["row_count", "min_ts", "max_ts"]
-        try:
-            drows = delta.select(*cols).collect()  # tiny by contract
-        except Exception:
-            return False
-        return self._merge_rows_arrow(drows)
+    @property
+    def _cols(self) -> list[str]:
+        return self.keys + ["row_count", "min_ts", "max_ts"]
 
-    def update_rows(self, rows: list) -> bool:
-        """Zero-job twin of ``update`` for a stats delta the caller has
-        ALREADY computed driver-side (the r12 micro-commit path): rows
-        are dicts/Rows with ``keys + [row_count, min_ts, max_ts]``.
-        Returns False — and writes nothing — when the merge needs Spark
-        (custom merge_fn, foreign catalog schema, uncovered ts domain);
-        the caller then goes through ``update`` with a DataFrame."""
-        if self.merge_fn is not merge_stats:
-            return False
-        return self._merge_rows_arrow(rows)
-
-    def _merge_rows_arrow(self, drows: list) -> bool:
+    def _merge_arrow(self, delta) -> bool:
+        """Driver-side merge for the DEFAULT stats merge (r12, guide
+        §1/§5).  The stats catalog is tiny by contract (one row per
+        ticker[, interval]), yet the Spark-side update paid three jobs
+        per call — read, checkpoint of the merged plan, coalesced write —
+        twice per ``ParquetStore.ingest_batch``; profiled at ~0.3 s per
+        call on the e2e replay floor (q334/q333/q45).  Here the existing
+        catalog and the delta are concatenated and folded with
+        ``fold_stats`` (the null-safe least/greatest of ``merge_stats``),
+        and the result is one pyarrow file installed through the SAME
+        tmp-dir + two-rename swap, so the crash story is unchanged.
+        Returns False — writing nothing; the caller falls back to the
+        Spark merge — for value domains this path does not cover: keys
+        must be strings, counts int64 and ts cells int64 or string on
+        both sides (anything else, or NULL-typed ts with nothing to
+        type them by, declines)."""
         import shutil
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        cols = self.keys + ["row_count", "min_ts", "max_ts"]
+        cols = self._cols
 
-        def _ok(v) -> bool:
-            return v is None or isinstance(v, (int, str))
+        def _covered(schema) -> bool:
+            def ok(c, *preds):
+                t = schema.field(c).type
+                return pa.types.is_null(t) or any(p(t) for p in preds)
 
-        if not all(
-            _ok(r["min_ts"]) and _ok(r["max_ts"])
-            and all(v is None or isinstance(v, str) for v in (r[k] for k in self.keys))
-            for r in drows
-        ):
+            return (
+                not set(cols) - set(schema.names)
+                and all(ok(k, pa.types.is_string) for k in self.keys)
+                and ok("row_count", pa.types.is_int64)
+                and all(
+                    ok(c, pa.types.is_int64, pa.types.is_string)
+                    for c in ("min_ts", "max_ts")
+                )
+            )
+
+        if not _covered(delta.schema):
             return False
 
         # existing rows with read()'s exact adoption/heal semantics
@@ -245,79 +276,32 @@ class StatsTable:
                 shutil.rmtree(self._tmp, ignore_errors=True)
                 shutil.rmtree(self._aside, ignore_errors=True)
                 break
-        if existing is not None and (
-            set(cols) - set(existing.column_names)
-            or not all(
-                pa.types.is_int64(existing.schema.field(c).type)
-                or pa.types.is_string(existing.schema.field(c).type)
-                or pa.types.is_null(existing.schema.field(c).type)
-                for c in ("row_count", "min_ts", "max_ts")
-            )
-            or not all(
-                pa.types.is_string(existing.schema.field(k).type)
-                or pa.types.is_null(existing.schema.field(k).type)
-                for k in self.keys
-            )
-        ):
-            return False  # foreign schema: let the Spark merge resolve it
-
-        def _nmin(a, b):
-            return b if a is None else a if b is None else min(a, b)
-
-        def _nmax(a, b):
-            return b if a is None else a if b is None else max(a, b)
-
-        fold: dict = {}
+        parts = [delta.select(cols)]
         if existing is not None:
-            edata = {c: existing.column(c).to_pylist() for c in cols}
-            for i in range(existing.num_rows):
-                k = tuple(edata[c][i] for c in self.keys)
-                fold[k] = [
-                    edata["row_count"][i] or 0,
-                    edata["min_ts"][i],
-                    edata["max_ts"][i],
-                ]
-        for r in drows:
-            k = tuple(r[c] for c in self.keys)
-            e = fold.get(k)
-            if e is None:
-                fold[k] = [r["row_count"] or 0, r["min_ts"], r["max_ts"]]
-            else:
-                e[0] += r["row_count"] or 0
-                e[1] = _nmin(e[1], r["min_ts"])
-                e[2] = _nmax(e[2], r["max_ts"])
-        if not fold:
-            return False  # nothing to write and no schema to write it with
-
-        ts_vals = [v for e in fold.values() for v in (e[1], e[2]) if v is not None]
-        if ts_vals:
-            if all(isinstance(v, str) for v in ts_vals):
-                ts_type = pa.string()
-            elif all(isinstance(v, int) for v in ts_vals):
-                ts_type = pa.int64()
-            else:
-                return False  # mixed domain: fall back
-        elif existing is not None:
-            ts_type = existing.schema.field("min_ts").type
-            if pa.types.is_null(ts_type):
-                ts_type = pa.int64()
-        else:
-            return False  # all-NULL ts with no prior schema: fall back
-
-        keys_sorted = sorted(fold, key=lambda k: tuple(map(str, k)))
-        arrays = [
-            pa.array([k[i] for k in keys_sorted], type=pa.string())
-            for i in range(len(self.keys))
-        ] + [
-            pa.array([fold[k][0] for k in keys_sorted], type=pa.int64()),
-            pa.array([fold[k][1] for k in keys_sorted], type=ts_type),
-            pa.array([fold[k][2] for k in keys_sorted], type=ts_type),
-        ]
-        tbl = pa.table(arrays, names=cols)
+            if not _covered(existing.schema):
+                return False  # foreign schema: let the Spark merge resolve it
+            parts.insert(0, existing.select(cols))
+        try:
+            both = pa.concat_tables(parts, promote_options="default")
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            return False  # mixed ts domains: let the Spark merge resolve it
+        merged = fold_stats(
+            both, self.keys, ("row_count",), ("min_ts",), ("max_ts",)
+        )
+        ts_type = merged.schema.field("min_ts").type
+        if not merged.num_rows or pa.types.is_null(ts_type):
+            return False  # nothing to write, or no ts type to write it with
+        merged = merged.cast(
+            pa.schema(
+                [(k, pa.string()) for k in self.keys]
+                + [("row_count", pa.int64()), ("min_ts", ts_type),
+                   ("max_ts", ts_type)]
+            )
+        ).sort_by([(k, "ascending") for k in self.keys])
         shutil.rmtree(self._tmp, ignore_errors=True)
         shutil.rmtree(self._aside, ignore_errors=True)
         os.makedirs(self._tmp)
-        pq.write_table(tbl, os.path.join(self._tmp, "part-00000.parquet"))
+        pq.write_table(merged, os.path.join(self._tmp, "part-00000.parquet"))
         if os.path.exists(self.path):
             os.rename(self.path, self._aside)
         os.rename(self._tmp, self.path)

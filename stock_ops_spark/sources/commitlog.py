@@ -50,19 +50,24 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.stats import batch_stats, merge_stats
+from stock_ops_spark.operators.stats import batch_stats, fold_stats, merge_stats
 from stock_ops_spark.operators.versioning import latest_version_view
 from stock_ops_spark.sources.microcommit import (
+    Delta,
+    as_catalog_stats,
     collect_micro,
-    dir_meta_micro,
     materialize_micro,
-    stat_rows_micro,
-    write_micro,
 )
+
+# Commits reach write_micro through Delta.write; the name stays importable
+# here because perfbench's traced run wraps it at this module.
+from stock_ops_spark.sources.microcommit import write_micro  # noqa: F401
 from stock_ops_spark.sources.ingest import (
     _MAX_PRUNE_PARTITIONS,
     cluster_for_write,
@@ -73,6 +78,58 @@ from stock_ops_spark.sources.layout import (
     mode_root,
     with_partition_cols,
 )
+
+
+def _j(v):
+    """JSON-coerce a bound for the commit payload: dates and other
+    non-JSON scalars become their ISO/str form, which orders the same."""
+    return v if v is None or isinstance(v, (int, float, str)) else str(v)
+
+
+def _span(lo, hi) -> list:
+    """[min of ``lo``, max of ``hi``] (Arrow arrays), NULLs ignored."""
+    return [_j(pc.min(lo).as_py()), _j(pc.max(hi).as_py())]
+
+
+def _meta_of(stats, tsc: str) -> dict:
+    """Per-dir data-skipping bounds from a grouped-stats table (keyed by
+    ticker, with ``rc``/``lo``/``hi``): [min, max] of ticker and of the
+    mode's time column, NULLs ignored, plus the dir's row count — the
+    same shape as ``ManifestStore._dir_meta``."""
+    return {
+        "ticker": _span(stats["ticker"], stats["ticker"]),
+        tsc: _span(stats["lo"], stats["hi"]),
+        # per-dir row count: free here, and it makes the live store size
+        # a DRIVER-SIDE fold of the manifest — the auto-compaction
+        # cadence reads it without a Spark job
+        "n": pc.sum(stats["rc"]).as_py() or 0,
+    }
+
+
+def _touched_parts(stats, parts: list[str]) -> list[tuple]:
+    """The distinct partition tuples of a grouped-stats table's ``tp``
+    lists, or ``[]`` — ``compute_versioned_delta``'s "known over-cap" —
+    when there are more than ``_MAX_PRUNE_PARTITIONS`` (one key's list
+    hit its cap, or the union is past it)."""
+    tp = stats["tp"]
+    if stats.num_rows and (
+        pc.max(pc.list_value_length(tp)).as_py() > _MAX_PRUNE_PARTITIONS
+    ):
+        return []
+    flat = pa.Table.from_struct_array(pc.list_flatten(tp).combine_chunks())
+    uniq = flat.group_by(parts, use_threads=False).aggregate([])
+    if uniq.num_rows > _MAX_PRUNE_PARTITIONS:
+        return []
+    return list(zip(*(uniq[c].to_pylist() for c in parts)))
+
+
+def _probe(df: DataFrame) -> Delta:
+    """A ``Delta`` for a frame that is cheap to re-read but not yet
+    materialized (a rewrite over checkpointed parts, a change set): the
+    ``collect_micro`` probe, with the row count known only when it
+    collected."""
+    tbl = collect_micro(df)
+    return Delta(df, None if tbl is None else tbl.num_rows, tbl)
 
 
 class CommitConflict(Exception):
@@ -359,21 +416,18 @@ class ManifestStore:
         state = self.log(mode).state(at_version)
         meta = state["meta"]
 
-        def j(v):
-            return v if v is None or isinstance(v, (int, float, str)) else str(v)
-
         def overlaps(m: dict | None) -> bool:
             if not m:
                 return True  # unknown bounds: must read
             tk = m.get("ticker")
             if ticker is not None and tk and tk[0] is not None:
-                if j(ticker) < tk[0] or j(ticker) > tk[1]:
+                if _j(ticker) < tk[0] or _j(ticker) > tk[1]:
                     return False
             tb = m.get(tsc)
             if tb and tb[0] is not None:
-                if ts_max is not None and j(ts_max) < tb[0]:
+                if ts_max is not None and _j(ts_max) < tb[0]:
                     return False
-                if ts_min is not None and j(ts_min) > tb[1]:
+                if ts_min is not None and _j(ts_min) > tb[1]:
                     return False
             return True
 
@@ -441,103 +495,27 @@ class ManifestStore:
     def interval_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "interval")
 
-    @staticmethod
-    def _fold_bid_rows(grows: list, gb_base: list) -> list[dict]:
-        """Fold a group commit's per-(group key, batch id) stat rows to
-        bid-free rows for the stats increment — driver-side, trivially
-        small (keys the group touches)."""
-        def _nmin(a, b):
-            return b if a is None else a if b is None else min(a, b)
-
-        def _nmax(a, b):
-            return b if a is None else a if b is None else max(a, b)
-
-        fold: dict = {}
-        for r in grows:
-            k = tuple(r[c] for c in gb_base)
-            e = fold.get(k)
-            if e is None:
-                fold[k] = {
-                    **{c: r[c] for c in gb_base},
-                    "rc": r["rc"],
-                    "lo": r["lo"],
-                    "hi": r["hi"],
-                }
-            else:
-                e["rc"] += r["rc"]
-                e["lo"] = _nmin(e["lo"], r["lo"])
-                e["hi"] = _nmax(e["hi"], r["hi"])
-        return [fold[k] for k in sorted(fold, key=str)]
-
     def _write_stats_increment(
-        self, log, stats_dir: str, mode: str, grows: list
+        self, log, stats_dir: str, mode: str, grows
     ) -> dict:
         """Materialize one ingest's stats increment from the already-
-        collected per-(ticker[, interval]) rows — pyarrow on the driver,
-        zero Spark jobs (r8).  The rows are small by contract (the keys
-        ONE batch touches), the schema matches ``batch_stats`` exactly
-        (same column names/order/types), and ``_read_stats`` folds the
-        files with Spark-written snapshots interchangeably.  The ts
-        columns are plain integers (epoch s/ms) or ISO-8601 strings
-        (interday — ``str(date)`` equals Spark's CAST(date AS STRING)),
-        so no timestamp-encoding ambiguity exists on this path."""
-        import pyarrow as pa
+        computed grouped-stats table (``Delta.stat_rows``) — pyarrow on
+        the driver, zero Spark jobs (r8).  The table is small by contract
+        (the keys ONE batch touches); ``fold_stats`` folds it to the
+        catalog keys (dropping a group commit's batch ids, and interval
+        for the table stats), and ``as_catalog_stats`` gives the files
+        ``batch_stats``'s exact schema, so ``_read_stats`` folds them
+        with Spark-written snapshots interchangeably."""
         import pyarrow.parquet as pq
 
-        ts_type = (
-            pa.string() if mode == "historical_interday" else pa.int64()
-        )
-
-        def _ts(v):
-            return v if isinstance(v, (int, str)) or v is None else str(v)
-
-        if mode == "streaming":
-            trows = [
-                (r["ticker"], r["rc"], _ts(r["lo"]), _ts(r["hi"]))
-                for r in grows
-            ]
-            files = {"table": (["ticker"], trows)}
-        else:
-            def _nmin(a, b):
-                return b if a is None else a if b is None else min(a, b)
-
-            def _nmax(a, b):
-                return b if a is None else a if b is None else max(a, b)
-
-            fold: dict = {}
-            for r in grows:
-                e = fold.get(r["ticker"])
-                if e is None:
-                    fold[r["ticker"]] = [r["rc"], r["lo"], r["hi"]]
-                else:
-                    e[0] += r["rc"]
-                    e[1] = _nmin(e[1], r["lo"])
-                    e[2] = _nmax(e[2], r["hi"])
-            trows = [
-                (t, v[0], _ts(v[1]), _ts(v[2]))
-                for t, v in sorted(fold.items())
-            ]
-            irows = [
-                (r["ticker"], r["interval"], r["rc"], _ts(r["lo"]), _ts(r["hi"]))
-                for r in grows
-            ]
-            files = {
-                "table": (["ticker"], trows),
-                "interval": (["ticker", "interval"], irows),
-            }
-
+        whichs = ["table"] if mode == "streaming" else ["table", "interval"]
         os.makedirs(os.path.join(log.log_dir, stats_dir), exist_ok=True)
         stats_ptr = {}
-        for which, (keys, rows) in files.items():
-            names = keys + ["row_count", "min_ts", "max_ts"]
-            types = [pa.string()] * len(keys) + [pa.int64(), ts_type, ts_type]
-            cols = [
-                pa.array([row[i] for row in rows], type=types[i])
-                for i in range(len(names))
-            ]
+        for which in whichs:
+            keys = self._STATS_KEYS[which]
             rel = os.path.join(stats_dir, which)
             pq.write_table(
-                pa.table(cols, names=names),
+                as_catalog_stats(fold_stats(grows, keys), keys, mode),
                 os.path.join(log.log_dir, rel),
             )
             stats_ptr[which] = rel
@@ -668,7 +646,7 @@ class ManifestStore:
             return [self.ingest_batch(b, mode) for b in batches]
 
     @staticmethod
-    def _check_group_disjoint(grows: list, gb_base: list) -> None:
+    def _check_group_disjoint(grows, gb_base: list) -> None:
         """Prove pairwise key-disjointness of a group's batches from the
         per-(group key, batch id) stat rows of the POST-DEDUP delta, or
         raise ``_GroupOverlap``.  Sound because a key shared by two
@@ -679,7 +657,7 @@ class ManifestStore:
         NULL timestamps fall outside every rectangle → conservative
         abort."""
         per: dict = {}
-        for r in grows:
+        for r in grows.to_pylist():
             if (
                 r["ticker"] is None
                 or r["lo"] is None
@@ -733,102 +711,43 @@ class ManifestStore:
         log = self.log(mode)
         tsc = S.TS_COL[mode]
         ign = (_GBID,) if n_bids else ()
-
-        def _j(v):
-            return (
-                v
-                if v is None or isinstance(v, (int, float, str))
-                else str(v)
-            )
-
         gb_base = ["ticker"] if mode == "streaming" else ["ticker", "interval"]
         gb = gb_base + list(ign)
-        st_aggs = [
-            F.count(F.lit(1)).alias("rc"),
-            F.count(tsc).alias("nts"),
-            F.min(tsc).alias("lo"),
-            F.max(tsc).alias("hi"),
-        ]
-        if parts:
-            st_aggs.append(
-                F.slice(
-                    F.collect_set(F.struct(*parts)),
-                    1,
-                    _MAX_PRUNE_PARTITIONS + 1,
-                ).alias("tp")
-            )
-
-        def _stat_rows(df):
-            # ONE job serves the emptiness gate, the data-skipping
-            # bounds, the per-key stats increment AND the touched-
-            # partition literals: the grouped aggregate is small by
-            # contract (keys this one batch touches), so everything
-            # else derives driver-side for free.
-            return df.groupBy(*gb).agg(*st_aggs).collect()
-
-        def _meta_of(grows):
-            los = [r["lo"] for r in grows if r["lo"] is not None]
-            his = [r["hi"] for r in grows if r["hi"] is not None]
-            tks = [r["ticker"] for r in grows if r["ticker"] is not None]
-            return {
-                "ticker": [
-                    _j(min(tks)) if tks else None,
-                    _j(max(tks)) if tks else None,
-                ],
-                tsc: [
-                    _j(min(los)) if los else None,
-                    _j(max(his)) if his else None,
-                ],
-                # per-dir row count: free here, and it makes the live
-                # store size a DRIVER-SIDE fold of the manifest — the
-                # auto-compaction cadence reads it without a Spark job
-                "n": sum(r["rc"] for r in grows),
-            }
 
         def _zero():
             return [0] * n_bids if n_bids else 0
 
         def _materialize(v):
-            """(delta DF, stat rows, arrow table | None): the r12
-            micro-commit fast path.  One eager checkpoint with the row
-            count riding as an Observation; a delta proven ≤ the micro
-            bound additionally comes back as one Arrow table collected
-            from the checkpointed blocks, so the stat rows derive
-            in-process (no grouped-collect job) and the batch files can
-            be written driver-side.  The returned DF is always the
-            checkpointed one — parallel partitions for the overlap
-            re-dedup (see sources/microcommit.py)."""
-            v, _n, mtbl = materialize_micro(v)
-            if mtbl is None:
-                return v, _stat_rows(v), None
-            return (
-                v,
-                stat_rows_micro(
-                    mtbl, gb, tsc, parts, _MAX_PRUNE_PARTITIONS
-                ),
-                mtbl,
-            )
+            """(Delta, stat rows): one eager checkpoint with the row count
+            riding as an Observation; the stat rows come from the
+            grouped-stats kernel when the delta proved micro, else from
+            one grouped-aggregate job (see sources/microcommit.py).  The
+            Delta's DataFrame is the checkpointed one — parallel
+            partitions for the overlap re-dedup."""
+            d = materialize_micro(v)
+            if not d.n:
+                return d, None
+            return d, d.stat_rows(gb, tsc, parts, _MAX_PRUNE_PARTITIONS)
 
         for _attempt in range(self.MAX_COMMIT_RETRIES):
             state = log.state()
             versioned = compute_versioned_delta(
                 batch, None, mode, self.tz, ignore_cols=ign
             )
-            versioned, grows, mtbl = _materialize(versioned)
+            delta, grows = _materialize(versioned)
+            if not delta.n:
+                return _zero()
             if n_bids:
                 # prove pairwise batch disjointness BEFORE any write;
                 # raises _GroupOverlap -> caller ingests sequentially
                 self._check_group_disjoint(grows, gb_base)
-            n = sum(r["rc"] for r in grows)
-            if not n:
-                return _zero()
-            dir_meta = _meta_of(grows)
+            n = delta.n
+            dir_meta = _meta_of(grows, tsc)
             # rectangle pruning is only sound when every key is non-NULL
             # (NULL keys fall outside any recorded bounds)
             keys_total = (
-                sum(r["nts"] for r in grows) == n
-                and all(r["ticker"] is not None for r in grows)
-                and dir_meta["ticker"][0] is not None
+                pc.sum(grows["nts"]).as_py() == n
+                and grows["ticker"].null_count == 0
                 and dir_meta[tsc][0] is not None
             )
             meta = state["meta"]
@@ -851,65 +770,39 @@ class ManifestStore:
                 # pass against just those dirs.  The optimistic delta is
                 # the checkpointed, already-routed batch — re-planning
                 # from it avoids re-paying the batch's own source.
-                touched = None
-                if parts and all(
-                    r["tp"] is not None and len(r["tp"]) <= _MAX_PRUNE_PARTITIONS
-                    for r in grows
-                ):
-                    tset = {tuple(t) for r in grows for t in r["tp"]}
-                    touched = list(tset) if len(tset) <= _MAX_PRUNE_PARTITIONS else []
                 existing = self._read_dirs(mode, overlap)
                 versioned = compute_versioned_delta(
-                    versioned.drop("version", *parts),
+                    delta.df.drop("version", *parts),
                     existing,
                     mode,
                     self.tz,
-                    touched=touched,
+                    touched=_touched_parts(grows, parts) if parts else None,
                     ignore_cols=ign,
                 )
-                versioned, grows, mtbl = _materialize(versioned)
+                delta, grows = _materialize(versioned)
                 # no group re-check needed: the store anti-join only
                 # REMOVES rows — it cannot create cross-batch overlap
-                n = sum(r["rc"] for r in grows)
-                if not n:
+                if not delta.n:
                     return _zero()
-                dir_meta = _meta_of(grows)
+                n = delta.n
+                dir_meta = _meta_of(grows, tsc)
             base_version = state["version"]
             new_version = base_version + 1
             batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
-            out_frame = versioned.drop(*ign) if n_bids else versioned
+            out = delta.drop(*ign)
             # distinct partition-tuple count, free from the stats rows:
             # pins the write's repartition width so each partition value
             # is one task and its file create runs in parallel (r12 —
             # see cluster_for_write)
-            n_parts = None
-            if parts and all(
-                r["tp"] is not None and len(r["tp"]) <= _MAX_PRUNE_PARTITIONS
-                for r in grows
-            ):
-                nset = len({tuple(t) for r in grows for t in r["tp"]})
-                if nset <= _MAX_PRUNE_PARTITIONS:
-                    n_parts = nset
-            dest = os.path.join(self.data_path(mode), batch_dir)
-            out_tbl = (
-                mtbl.drop_columns(list(ign))
-                if (mtbl is not None and ign)
-                else mtbl
-            )
+            n_parts = len(_touched_parts(grows, parts)) if parts else None
             # micro deltas: files come straight from the collected Arrow
             # table, driver-side — the fresh batch dir stays invisible
             # until the manifest rename, so the crash model is unchanged
-            if out_tbl is None or not write_micro(
-                out_tbl, parts, ["ticker", tsc], dest
-            ):
-                writer = cluster_for_write(
-                    out_frame, mode, n_rows=n, n_parts=n_parts
-                ).write.option(
-                    "compression", "zstd"
-                )
-                if parts:
-                    writer = writer.partitionBy(*parts)
-                writer.parquet(dest)
+            out.write(
+                os.path.join(self.data_path(mode), batch_dir),
+                mode,
+                n_parts=n_parts,
+            )
 
             # batch-only stats depend ONLY on this delta — written ONCE
             # as a version-independent INCREMENT (r8); readers fold it.
@@ -930,7 +823,7 @@ class ManifestStore:
                 for which, by_interval in whichs:
                     bdf = merge_stats(
                         self._read_stats(mode, which),
-                        batch_stats(out_frame, mode, by_interval),
+                        batch_stats(out.df, mode, by_interval),
                         self._STATS_KEYS[which],
                     )
                     rel = os.path.join(stats_dir, which)
@@ -940,11 +833,8 @@ class ManifestStore:
                     stats_ptr[which] = rel
             else:
                 stats_dir = f"stats-inc-{uuid.uuid4().hex[:12]}"
-                inc_rows = (
-                    self._fold_bid_rows(grows, gb_base) if n_bids else grows
-                )
                 stats_ptr = self._write_stats_increment(
-                    log, stats_dir, mode, inc_rows
+                    log, stats_dir, mode, grows
                 )
             stats_key = "stats" if fold_now else "stats_inc"
 
@@ -984,12 +874,11 @@ class ManifestStore:
                             except RuntimeError:
                                 pass
                     for obs in self.observers:
-                        obs(out_frame, mode)
+                        obs(out.df, mode)
                     if n_bids:
-                        return [
-                            sum(r["rc"] for r in grows if r[_GBID] == i)
-                            for i in range(n_bids)
-                        ]
+                        per = fold_stats(grows, [_GBID], mins=(), maxs=())
+                        got = dict(zip(*per.to_pydict().values()))
+                        return [got.get(i, 0) for i in range(n_bids)]
                     return n
                 except CommitConflict:
                     head = log.version()
@@ -1048,12 +937,8 @@ class ManifestStore:
         ).collect()[0]
         if not b[0] or b[1] != b[0] or b[2] != b[0]:
             return dirs  # empty or NULL keys: cannot bound
-
-        def j(v):
-            return v if v is None or isinstance(v, (int, float, str)) else str(v)
-
-        bt = [j(b[3]), j(b[4])]
-        bts = [j(b[5]), j(b[6])]
+        bt = [_j(b[3]), _j(b[4])]
+        bts = [_j(b[5]), _j(b[6])]
         meta = state["meta"]
 
         def may_touch(m: dict | None) -> bool:
@@ -1089,9 +974,10 @@ class ManifestStore:
     def _dir_meta(self, df: DataFrame, mode: str) -> dict:
         """Per-dir data-skipping bounds: [min, max] of ticker and the
         mode's time column — the commit-level twin of parquet footer
-        stats.  One bounded scalar aggregate per written dir; values
-        are JSON-coerced (dates → ISO strings, which compare in the
-        same order)."""
+        stats.  One bounded scalar aggregate — compaction's fallback
+        when an old dir has no recorded bounds (written batch dirs take
+        theirs from ``_meta_of``); values are JSON-coerced (dates → ISO
+        strings, which compare in the same order)."""
         cols = ["ticker", S.TS_COL[mode]]
         cols = [c for c in cols if c in df.columns]
         if not cols:
@@ -1101,74 +987,31 @@ class ManifestStore:
             aggs += [F.min(c), F.max(c)]
         aggs.append(F.count(F.lit(1)))
         row = df.agg(*aggs).collect()[0]
-
-        def j(v):
-            return v if v is None or isinstance(v, (int, float, str)) else str(v)
-
         meta = {
-            c: [j(row[2 * i]), j(row[2 * i + 1])] for i, c in enumerate(cols)
+            c: [_j(row[2 * i]), _j(row[2 * i + 1])] for i, c in enumerate(cols)
         }
         meta["n"] = row[2 * len(cols)]
         return meta
 
-    def _materialize_small(self, df: DataFrame):
-        """(checkpointed df, n, arrow table | None): the r12 micro
-        materialization — one eager checkpoint whose count rides as an
-        Observation (the count job is gone), plus a cheap Arrow collect
-        from the checkpointed blocks when the frame proves micro, so
-        downstream driver work (batch-dir files, dir meta, CDC files,
-        uniqueness checks) needs no further jobs.  The DataFrame keeps
-        the checkpoint's parallel partitioning (see
-        sources/microcommit.py)."""
-        return materialize_micro(df)
-
     def _write_batch_dir(
-        self,
-        df: DataFrame,
-        mode: str,
-        meta_out: dict | None = None,
-        n_rows: int | None = None,
+        self, delta: Delta, mode: str, meta_out: dict | None = None
     ) -> str:
-        parts = PARTITION_COLS[mode]
-        tsc = S.TS_COL[mode]
+        """Write ``delta`` as a fresh batch dir (invisible until the
+        manifest commit) and record its data-skipping bounds in
+        ``meta_out`` — from the grouped-stats table, so a micro delta
+        costs no job for them."""
         batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
-        dest = os.path.join(self.data_path(mode), batch_dir)
-        # micro rewrites (merge/delete/retain of a small store slice):
-        # files + data-skipping meta both derive from one collect; the
-        # fresh dir stays invisible until the manifest commit
-        mtbl = collect_micro(df)
-        if mtbl is not None:
-            if not write_micro(mtbl, parts, ["ticker", tsc], dest):
-                src = self.spark.createDataFrame(mtbl)
-                writer = cluster_for_write(
-                    src, mode, n_rows=mtbl.num_rows
-                ).write.option("compression", "zstd")
-                if parts:
-                    writer = writer.partitionBy(*parts)
-                writer.parquet(dest)
-            if meta_out is not None:
-                meta_out[batch_dir] = dir_meta_micro(mtbl, ["ticker", tsc])
-            return batch_dir
-        writer = cluster_for_write(df, mode, n_rows=n_rows).write.option(
-            "compression", "zstd"
-        )
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(dest)
+        delta.write(os.path.join(self.data_path(mode), batch_dir), mode)
         if meta_out is not None:
-            meta_out[batch_dir] = self._dir_meta(df, mode)
+            tsc = S.TS_COL[mode]
+            meta_out[batch_dir] = _meta_of(delta.stat_rows(["ticker"], tsc), tsc)
         return batch_dir
 
     def _write_cdc(self, log: ManifestLog, version: int, cdc: DataFrame) -> str:
         rel = f"cdc-{version:08d}-{uuid.uuid4().hex[:8]}"
-        dest = os.path.join(log.log_dir, rel)
         # micro change sets: one driver-side file (no sort — CDC rows
         # carry no ordering contract), invisible until the commit
-        mtbl = collect_micro(cdc)
-        if mtbl is not None and write_micro(mtbl, [], [], dest):
-            return rel
-        src = self.spark.createDataFrame(mtbl) if mtbl is not None else cdc
-        src.write.option("compression", "zstd").parquet(dest)
+        _probe(cdc).write(os.path.join(log.log_dir, rel))
         return rel
 
     def _check_observers(self, action: str, on_observers: str) -> None:
@@ -1215,21 +1058,17 @@ class ManifestStore:
         self._check_observers("merge", on_observers)
         keys = S.INDEX_COLS[mode]
         log = self.log(mode)
-        src, _n_src, stbl = self._materialize_small(source)
+        src, _n_src, stbl = materialize_micro(source)
         if stbl is not None:
             # driver-side key-uniqueness check over the collected rows —
             # same NULL handling as groupBy (NULL keys form groups)
-            from collections import Counter
-
-            kcols = [stbl.column(k).to_pylist() for k in keys]
-            if stbl.num_rows and max(
-                Counter(zip(*kcols)).values()
-            ) > 1:
-                raise ValueError("merge source must be unique on index keys")
+            per_key = stbl.group_by(keys).aggregate([([], "count_all")])
+            dup = pc.max(per_key["count_all"]).as_py() > 1
         else:
             dup = src.groupBy(*keys).count().where(F.col("count") > 1).limit(1)
-            if dup.count():
-                raise ValueError("merge source must be unique on index keys")
+            dup = dup.count() > 0
+        if dup:
+            raise ValueError("merge source must be unique on index keys")
         src_payload = [c for c in src.columns if c not in keys]
         for _attempt in range(self.MAX_COMMIT_RETRIES):
             state = log.state()
@@ -1275,10 +1114,12 @@ class ManifestStore:
                     if c not in tdf.columns
                 ]
                 post = tdf.join(s2, on=keys, how="inner").select(*repl, *new_cols)
-                post, n_upd, _ptbl = self._materialize_small(post)
+                post, n_upd, _ptbl = materialize_micro(post)
                 rewrite = keep.unionByName(post, allowMissingColumns=True)
                 adds.append(
-                    self._write_batch_dir(rewrite, mode, meta_out=meta_map)
+                    self._write_batch_dir(
+                        _probe(rewrite), mode, meta_out=meta_map
+                    )
                 )
                 removes = list(touched)
                 cdc_frames.append(
@@ -1294,7 +1135,8 @@ class ManifestStore:
             else:
                 ins_src = src
             inserts = compute_versioned_delta(ins_src, None, mode, self.tz)
-            inserts, n_ins, _itbl = self._materialize_small(inserts)
+            ins = materialize_micro(inserts)
+            inserts, n_ins = ins.df, ins.n
             # pure update: carry the stats snapshot AND the outstanding
             # increment chain forward verbatim (index keys can't move);
             # with inserts, materialize a fresh cumulative snapshot
@@ -1305,7 +1147,7 @@ class ManifestStore:
             if n_ins:
                 stats_incs = []
                 adds.append(
-                    self._write_batch_dir(inserts, mode, meta_out=meta_map)
+                    self._write_batch_dir(ins, mode, meta_out=meta_map)
                 )
                 cdc_frames.append(
                     inserts.withColumn("_change_type", F.lit("insert"))
@@ -1408,17 +1250,13 @@ class ManifestStore:
                 return {"deleted": 0, "rewritten_dirs": 0,
                         "version": state["version"]}
             tdf = self._read_dirs(mode, touched)
-            doomed, n_del, _dtbl = self._materialize_small(
-                tdf.where(cond_true)
-            )
-            keep, n_keep, _ktbl = self._materialize_small(tdf.where(~cond_true))
+            doomed, n_del, _dtbl = materialize_micro(tdf.where(cond_true))
+            keep = materialize_micro(tdf.where(~cond_true))
             adds = []
             meta_map: dict[str, dict] = {}
-            if n_keep:
+            if keep.n:
                 adds.append(
-                    self._write_batch_dir(
-                        keep, mode, meta_out=meta_map, n_rows=n_keep
-                    )
+                    self._write_batch_dir(keep, mode, meta_out=meta_map)
                 )
             new_version = state["version"] + 1
             untouched = [d for d in state["dirs"] if d not in touched]
@@ -1526,11 +1364,7 @@ class ManifestStore:
         """
         self._check_observers("retain_before", on_observers)
         tsc = S.TS_COL[mode]
-
-        def j(v):
-            return v if v is None or isinstance(v, (int, float, str)) else str(v)
-
-        cut = j(cutoff)
+        cut = _j(cutoff)
         log = self.log(mode)
         for _attempt in range(self.MAX_COMMIT_RETRIES):
             state = log.state()
@@ -1538,9 +1372,9 @@ class ManifestStore:
             straddle: list[str] = []
             for d in state["dirs"]:
                 tb = (state["meta"].get(d) or {}).get(tsc)
-                if tb and tb[1] is not None and j(tb[1]) < cut:
+                if tb and tb[1] is not None and _j(tb[1]) < cut:
                     doomed_dirs.append(d)
-                elif tb and tb[0] is not None and j(tb[0]) >= cut:
+                elif tb and tb[0] is not None and _j(tb[0]) >= cut:
                     continue  # provably all-retained: untouched
                 else:
                     straddle.append(d)
@@ -1552,17 +1386,17 @@ class ManifestStore:
             affected = None  # tickers whose stats must be recomputed
             if straddle:
                 sdf = self._read_dirs(mode, straddle)
-                expired, n_exp, _etbl = self._materialize_small(
+                expired, n_exp, _etbl = materialize_micro(
                     sdf.where(F.col(tsc) < F.lit(cutoff))
                 )
                 if n_exp:
-                    keep, n_keep, _ktbl = self._materialize_small(
+                    keep = materialize_micro(
                         sdf.where(~(F.col(tsc) < F.lit(cutoff)))
                     )
-                    if n_keep:
+                    if keep.n:
                         adds.append(
                             self._write_batch_dir(
-                                keep, mode, meta_out=meta_map, n_rows=n_keep
+                                keep, mode, meta_out=meta_map
                             )
                         )
                     removes += straddle
@@ -1588,7 +1422,7 @@ class ManifestStore:
             if not removes:
                 return {"deleted_dirs": 0, "rewritten_dirs": 0,
                         "version": state["version"]}
-            affected, _n_aff, _atbl = self._materialize_small(affected)
+            affected = affected.localCheckpoint(eager=True)
             new_version = state["version"] + 1
             untouched = [d for d in state["dirs"] if d not in set(removes)]
             post = self._read_dirs(mode, untouched + adds)
@@ -1792,32 +1626,19 @@ class ManifestStore:
             # data-skipping bounds for the compacted dir: fold the old
             # dirs' recorded bounds when every one has them (no extra
             # scan); otherwise one scalar aggregate over the rewrite
-            olds = [state["meta"].get(d) for d in state["dirs"]]
-            if all(olds):
-                new_meta: dict = {}
-                for m in olds:
-                    for col, v in m.items():
-                        if col == "n":  # per-dir row count: sum, not span
-                            if v is not None:
-                                new_meta["n"] = (new_meta.get("n") or 0) + v
-                            continue
-                        lo, hi = v
-                        if col in new_meta:
-                            plo, phi = new_meta[col]
-                            new_meta[col] = [
-                                lo if (plo is None or
-                                       (lo is not None and lo < plo))
-                                else plo,
-                                hi if (phi is None or
-                                       (hi is not None and hi > phi))
-                                else phi,
-                            ]
-                        else:
-                            new_meta[col] = [lo, hi]
+            if all(metas):
+                new_meta = {
+                    c: _span(
+                        pa.array([m[c][0] for m in metas if c in m]),
+                        pa.array([m[c][1] for m in metas if c in m]),
+                    )
+                    for c in dict.fromkeys(c for m in metas for c in m)
+                    if c != "n"
+                }
                 # a pre-r8 dir without "n" leaves the fold without one
                 # (unknown beats wrong; the cadence treats missing as 0)
-                if any("n" not in m for m in olds):
-                    new_meta.pop("n", None)
+                if live_rows is not None:
+                    new_meta["n"] = live_rows
             else:
                 new_meta = self._dir_meta(df, mode)
             try:
@@ -1956,10 +1777,10 @@ class ManifestStore:
         df = pstore.read_all(mode)
         if df is None:
             return {"adopted_rows": 0, "version": 0}
-        df = df.localCheckpoint(eager=True)
-        n = df.count()
+        delta = materialize_micro(df)
+        df, n = delta.df, delta.n
         meta_map: dict[str, dict] = {}
-        batch_dir = self._write_batch_dir(df, mode, meta_out=meta_map)
+        batch_dir = self._write_batch_dir(delta, mode, meta_out=meta_map)
         stats_ptr = {}
         stats_dir = f"stats-{1:08d}-{uuid.uuid4().hex[:8]}"
         for which, by_interval in (("table", False), ("interval", True)):

@@ -30,12 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.stats import StatsTable, batch_stats
-from stock_ops_spark.sources.microcommit import (
-    batch_stats_rows_micro,
-    materialize_micro,
-    write_micro,
-)
+from stock_ops_spark.operators.stats import StatsTable
+from stock_ops_spark.sources.microcommit import materialize_micro
 from stock_ops_spark.operators.versioning import assign_versions, latest_version_view
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
@@ -252,7 +248,6 @@ class ParquetStore:
         """
         existing = self.read_all(mode)
         versioned = compute_versioned_delta(batch, existing, mode, self.tz)
-        parts = PARTITION_COLS[mode]
         # Sever lineage BEFORE appending: versioned's plan scans the store
         # path, and writing to that path invalidates any cache over it
         # (refreshByPath) — a plain .cache() would silently recompute the
@@ -260,57 +255,21 @@ class ParquetStore:
         # stats delta.  The checkpoint carries its row count as an
         # Observation, and a delta proven micro additionally comes back
         # as one Arrow table collected from the checkpointed blocks —
-        # the append files, both stats merges and the observers' input
-        # then derive driver-side (r12, sources/microcommit.py).
-        versioned, n, mtbl = materialize_micro(versioned)
-        if mtbl is not None and n:
-            if not write_micro(
-                mtbl,
-                parts,
-                ["ticker", S.TS_COL[mode]],
-                self.data_path(mode),
-                live_tree=True,
-            ):
-                writer = cluster_for_write(
-                    versioned, mode, n_rows=n
-                ).write.mode("append").option("compression", "zstd")
-                if parts:
-                    writer = writer.partitionBy(*parts)
-                writer.parquet(self.data_path(mode))
-            self._update_stats_micro(mtbl, versioned, mode)
-            for obs in self.observers:
-                obs(versioned, mode)
-            return n
-        if n:
-            writer = cluster_for_write(versioned, mode, n_rows=n).write.mode(
-                "append"
-            ).option("compression", "zstd")
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(self.data_path(mode))
-
+        # the append files and both stats merges then derive driver-side
+        # (sources/microcommit.py).
+        delta = materialize_micro(versioned)
+        if delta.n:
+            delta.write(self.data_path(mode), mode, live_tree=True)
             self._stats(mode, by_interval=False).update(
-                batch_stats(versioned, mode, by_interval=False)
+                delta.batch_stats(mode, by_interval=False)
             )
             if mode != "streaming":  # A6 interval stats: non-streaming only
                 self._stats(mode, by_interval=True).update(
-                    batch_stats(versioned, mode, by_interval=True)
+                    delta.batch_stats(mode, by_interval=True)
                 )
             for obs in self.observers:
-                obs(versioned, mode)
-        return n
-
-    def _update_stats_micro(self, mtbl, vdf: DataFrame, mode: str) -> None:
-        """Both A5/A6 stats merges from the already-collected delta —
-        zero Spark jobs on the covered domains, DataFrame fallback
-        otherwise (same result either way)."""
-        st = self._stats(mode, by_interval=False)
-        if not st.update_rows(batch_stats_rows_micro(mtbl, mode, False)):
-            st.update(batch_stats(vdf, mode, by_interval=False))
-        if mode != "streaming":  # A6 interval stats: non-streaming only
-            st2 = self._stats(mode, by_interval=True)
-            if not st2.update_rows(batch_stats_rows_micro(mtbl, mode, True)):
-                st2.update(batch_stats(vdf, mode, by_interval=True))
+                obs(delta.df, mode)
+        return delta.n
 
     # -- maintenance -----------------------------------------------------
     def compact(self, mode: str, target_file_bytes: int | None = None) -> dict:

@@ -1,4 +1,4 @@
-"""Driver-side micro-commit fast path for tiny ingest deltas (r12, §1/§5/§6).
+"""Materialized commit deltas, and the one driver-side kernel per statistic.
 
 The e2e replay floor is per-commit Spark FIXED cost, not data volume: a
 ~8k-row delta (≈1 MB) pays an eager localCheckpoint job, a grouped-stats
@@ -9,15 +9,26 @@ measured 1.5-2.5 s per commit while the napkin floor (guide §1.3) for
 correct execution is: run the dedup/version plan ONCE, pull the rows to
 the driver as one Arrow table, and derive everything downstream — the
 grouped stat rows, the partitioned batch-dir files, the stats-catalog
-increment — in-process, the same posture as ``StatsTable._update_arrow``.
+increment — in-process.
 
-Boundedness is proven, not assumed: ``collect_micro`` collects through a
-``limit(bound+1)`` and DECLINES (returns None) when the extra row shows
-up, so an unbounded backfill never lands on the driver (guide §5) — it
-keeps the distributed checkpoint/write path, where its cost is real work.
-At 100 TB, production batches exceed the bound and take the Spark path;
-the fast path covers exactly the micro-batch regime where per-job fixed
-costs dominate the hardware floor.
+Every commit path holds its delta as one ``Delta`` value: the
+checkpointed DataFrame, its row count, and — only when the count proved
+it micro — the same rows as an Arrow table.  ``Delta`` is the single
+place that chooses between the two implementations of each operation,
+from whether ``tbl`` is set:
+
+- stat rows: ``grouped_stats`` (pyarrow ``group_by``) or ``_stat_rows``
+  (Spark ``groupBy().agg()``), both returning the same Arrow columns;
+- catalog stats: the same kernel, or ``operators.stats.batch_stats``;
+- files: ``write_micro``, or ``ingest.cluster_for_write`` and the Spark
+  writer.
+
+Boundedness is proven, not assumed: ``materialize_micro`` only collects
+when the checkpoint's observed count is within the bound, and
+``collect_micro`` collects through a ``limit(bound+1)`` and DECLINES
+(returns None) when the extra row shows up, so an unbounded backfill
+never lands on the driver (guide §5) — it keeps the distributed
+checkpoint/write path, where its cost is real work.
 
 Write-path crash model (matches the Spark committer it replaces):
 
@@ -42,8 +53,17 @@ from __future__ import annotations
 
 import os
 import uuid
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from stock_ops_spark.operators.stats import batch_stats, fold_stats
+from stock_ops_spark.schemas import TS_COL
+from stock_ops_spark.sources.layout import PARTITION_COLS
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: Proven-size bound for pulling a delta to the driver: 128k rows of
 #: ~100 B tick data ≈ 13 MB — far under driver collect budgets, far over
@@ -74,19 +94,17 @@ def collect_micro(df: DataFrame, bound: int = MICRO_COMMIT_ROWS):
     return tbl
 
 
-def materialize_micro(df: DataFrame, bound: int = MICRO_COMMIT_ROWS):
-    """(checkpointed df, n, Arrow table | None) — the safe micro
-    materialization for a frame of UNKNOWN size: one eager
+def materialize_micro(df: DataFrame, bound: int = MICRO_COMMIT_ROWS) -> "Delta":
+    """The ``Delta`` of a frame of UNKNOWN size: one eager
     localCheckpoint whose row count rides along as an Observation (no
     count job), then — only when the count proves the frame micro — one
     cheap Arrow collect *from the checkpointed blocks*.  The frame is
     never computed twice (the r12.1 lesson: a direct ``limit`` probe
     re-ran just-over-bound sf1 deltas in full before falling back), and
-    the returned DataFrame keeps the checkpoint's parallel partitioning
-    so downstream distributed consumers (overlap re-dedup, rewrites) do
-    not collapse onto a single-partition local relation."""
+    the DataFrame keeps the checkpoint's parallel partitioning so
+    downstream distributed consumers (overlap re-dedup, rewrites) do not
+    collapse onto a single-partition local relation."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     obs = Observation()
     ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
@@ -101,87 +119,140 @@ def materialize_micro(df: DataFrame, bound: int = MICRO_COMMIT_ROWS):
             tbl = None
         if tbl is not None and tbl.num_rows != n:
             tbl = None  # should not happen; never trust a mismatch
-    return ck, n, tbl
+    return Delta(ck, n, tbl)
 
 
-def _columns(tbl, names):
-    return {c: tbl.column(c).to_pylist() for c in names}
+def grouped_stats(tbl, keys, ts_col: str, parts=(), part_cap=None):
+    """Per ``keys`` group of a collected delta: ``rc`` (rows), ``nts``
+    (non-NULL ts), ``lo``/``hi`` (min/max ts, NULLs ignored) and — when
+    ``parts`` is given — ``tp``, the distinct partition tuples as a list
+    of structs capped at ``part_cap + 1`` (one over the cap is enough to
+    signal "over cap").  Two pyarrow ``group_by`` passes: the first over
+    ``keys + parts`` yields one row per distinct (key, partition tuple),
+    the second folds those per key and lists their partition values.
+    NULL keys and NULL partition values form their own groups, as in
+    Spark's ``groupBy``; the columns are those of ``_stat_rows``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, parts = list(keys), list(parts)
+    fine = tbl.group_by(keys + parts, use_threads=False).aggregate(
+        [([], "count_all"), (ts_col, "count"), (ts_col, "min"), (ts_col, "max")]
+    )
+    names = {"count_all": "rc", f"{ts_col}_count": "nts",
+             f"{ts_col}_min": "lo", f"{ts_col}_max": "hi"}
+    fine = fine.rename_columns([names.get(c, c) for c in fine.column_names])
+    out = fold_stats(fine, keys, sums=("rc", "nts"), lists=parts)
+    if not parts:
+        return out
+    lists = [out[p].combine_chunks() for p in parts]
+    tp = pa.ListArray.from_arrays(
+        lists[0].offsets,
+        pa.StructArray.from_arrays([pc.list_flatten(a) for a in lists], names=parts),
+    )
+    if part_cap is not None:
+        tp = pc.list_slice(tp, 0, part_cap + 1)
+    return out.drop_columns(parts).append_column("tp", tp)
 
 
-def stat_rows_micro(
-    tbl, gb: list[str], ts_col: str, parts: list[str], part_cap: int
-) -> list[dict]:
-    """Driver twin of ``ManifestStore._ingest_frame._stat_rows``: per
-    group key — rc, non-null-ts count, min/max ts, and (when the mode is
-    partitioned) the distinct partition tuples capped at ``part_cap + 1``
-    (one over the cap is enough to signal "over cap", matching the Spark
-    side's ``slice(collect_set(...), 1, cap+1)``).  Value semantics match
-    Spark's: min/max ignore NULLs, and the ts domain per mode (int epoch
-    or datetime.date) orders identically in Python."""
-    need = list(dict.fromkeys(gb + [ts_col] + parts))
-    data = _columns(tbl, need)
-    agg: dict = {}
-    n = tbl.num_rows
-    for i in range(n):
-        k = tuple(data[c][i] for c in gb)
-        e = agg.get(k)
-        if e is None:
-            e = agg[k] = {"rc": 0, "nts": 0, "lo": None, "hi": None,
-                          "tp": set() if parts else None}
-        e["rc"] += 1
-        ts = data[ts_col][i]
-        if ts is not None:
-            e["nts"] += 1
-            if e["lo"] is None or ts < e["lo"]:
-                e["lo"] = ts
-            if e["hi"] is None or ts > e["hi"]:
-                e["hi"] = ts
-        if parts:
-            tp = e["tp"]
-            if len(tp) <= part_cap:
-                tp.add(tuple(data[c][i] for c in parts))
-    rows = []
-    for k, e in agg.items():
-        r = dict(zip(gb, k))
-        r.update(rc=e["rc"], nts=e["nts"], lo=e["lo"], hi=e["hi"])
-        if parts:
-            r["tp"] = sorted(e["tp"])
-        rows.append(r)
-    return rows
-
-
-def batch_stats_rows_micro(tbl, mode: str, by_interval: bool) -> list[dict]:
-    """Driver twin of ``operators.stats.batch_stats`` over a collected
-    delta: row_count / min_ts / max_ts per ticker(, interval), with the
-    interday date rendered as its ISO string exactly like the Spark
-    side's CAST(date AS STRING)."""
-    from stock_ops_spark.schemas import TS_COL
-
-    keys = ["ticker", "interval"] if by_interval else ["ticker"]
-    ts_col = TS_COL[mode]
-    data = _columns(tbl, list(dict.fromkeys(keys + [ts_col])))
-    as_str = mode == "historical_interday"
-    agg: dict = {}
-    for i in range(tbl.num_rows):
-        k = tuple(data[c][i] for c in keys)
-        ts = data[ts_col][i]
-        if ts is not None and as_str:
-            ts = str(ts)
-        e = agg.get(k)
-        if e is None:
-            agg[k] = [1, ts, ts]
-            continue
-        e[0] += 1
-        if ts is not None:
-            if e[1] is None or ts < e[1]:
-                e[1] = ts
-            if e[2] is None or ts > e[2]:
-                e[2] = ts
-    return [
-        {**dict(zip(keys, k)), "row_count": e[0], "min_ts": e[1],
-         "max_ts": e[2]}
-        for k, e in agg.items()
+def _stat_rows(df: DataFrame, keys, ts_col: str, parts=(), part_cap=None):
+    """The Spark implementation of ``grouped_stats`` (same columns, as
+    Arrow): ONE grouped aggregate job.  It is small by contract — the
+    keys one batch touches — so it serves the emptiness gate, the
+    data-skipping bounds, the stats increment and the touched-partition
+    literals at once."""
+    aggs = [
+        F.count(F.lit(1)).alias("rc"),
+        F.count(ts_col).alias("nts"),
+        F.min(ts_col).alias("lo"),
+        F.max(ts_col).alias("hi"),
     ]
+    if parts:
+        tp = F.collect_set(F.struct(*parts))
+        if part_cap is not None:
+            tp = F.slice(tp, 1, part_cap + 1)
+        aggs.append(tp.alias("tp"))
+    return df.groupBy(*keys).agg(*aggs).toArrow()
+
+
+def as_catalog_stats(st, keys, mode: str):
+    """Stat rows (``keys`` + rc/lo/hi) in the stats-catalog schema of
+    ``operators.stats.batch_stats``: string keys, int64 ``row_count``,
+    and ``min_ts``/``max_ts`` as int64 epochs — or, interday, the ISO
+    date string, which is Spark's CAST(date AS STRING)."""
+    import pyarrow as pa
+
+    ts = pa.string() if mode == "historical_interday" else pa.int64()
+    return pa.table(
+        [st[k].cast(pa.string()) for k in keys]
+        + [st["rc"].cast(pa.int64()), st["lo"].cast(ts), st["hi"].cast(ts)],
+        names=[*keys, "row_count", "min_ts", "max_ts"],
+    )
+
+
+class Delta(NamedTuple):
+    """A commit's materialized delta: ``df`` (checkpointed, or cheap to
+    re-read), its row count ``n`` (None when unknown) and — when the
+    count proved it micro — the same rows as the Arrow table ``tbl``.
+    Each method below runs the driver-side implementation when ``tbl``
+    is set and the Spark one otherwise; the results are the same either
+    way.  A tuple, so ``df, n, tbl = materialize_micro(...)`` unpacks."""
+
+    df: DataFrame
+    n: int | None
+    tbl: pa.Table | None = None
+
+    def drop(self, *cols: str) -> "Delta":
+        """The same delta without caller-internal tag columns."""
+        if not cols:
+            return self
+        tbl = None if self.tbl is None else self.tbl.drop_columns(list(cols))
+        return Delta(self.df.drop(*cols), self.n, tbl)
+
+    def stat_rows(self, keys, ts_col: str, parts=(), part_cap=None):
+        """Per-key rc/nts/lo/hi[/tp] (see ``grouped_stats``), as Arrow."""
+        if self.tbl is not None:
+            return grouped_stats(self.tbl, keys, ts_col, parts, part_cap)
+        return _stat_rows(self.df, keys, ts_col, parts, part_cap)
+
+    def batch_stats(self, mode: str, by_interval: bool):
+        """``operators.stats.batch_stats`` of the delta, as Arrow."""
+        if self.tbl is None:
+            return batch_stats(self.df, mode, by_interval).toArrow()
+        keys = ["ticker", "interval"] if by_interval else ["ticker"]
+        return as_catalog_stats(
+            grouped_stats(self.tbl, keys, TS_COL[mode]), keys, mode
+        )
+
+    def write(
+        self,
+        dest: str,
+        mode: str | None = None,
+        live_tree: bool = False,
+        n_parts: int | None = None,
+    ) -> None:
+        """Write the delta under ``dest``, partitioned and clustered for
+        ``mode`` (None: unpartitioned and unsorted — change-feed files).
+        Driver-side through ``write_micro`` when the rows are here and
+        their domains are covered; otherwise the Spark writer over
+        ``cluster_for_write``, appending when ``live_tree``."""
+        from stock_ops_spark.sources.ingest import cluster_for_write
+
+        parts = PARTITION_COLS[mode] if mode else []
+        order = ["ticker", TS_COL[mode]] if mode else []
+        if self.tbl is not None and write_micro(
+            self.tbl, parts, order, dest, live_tree=live_tree
+        ):
+            return
+        df = self.df
+        if mode:
+            df = cluster_for_write(df, mode, n_rows=self.n, n_parts=n_parts)
+        writer = df.write.option("compression", "zstd")
+        if live_tree:
+            writer = writer.mode("append")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(dest)
 
 
 def _writable_types(tbl, parts: list[str]) -> bool:
@@ -251,17 +322,17 @@ def write_micro(
     if not parts:
         _write_one(tbl, dest)
         return True
-    vals = [tbl.column(c).to_pylist() for c in parts]
-    n = tbl.num_rows
-    data_tbl = tbl.drop_columns(list(parts))
+    # rows are sorted by the partition columns, so each distinct tuple
+    # is one contiguous run, and single-threaded group_by lists the
+    # tuples in that order with their run lengths
+    runs = tbl.group_by(list(parts), use_threads=False).aggregate(
+        [([], "count_all")]
+    )
+    keys = list(zip(*(runs[c].to_pylist() for c in parts)))
     starts = [0]
-    keys = [tuple(v[0] for v in vals)]
-    for i in range(1, n):
-        t = tuple(v[i] for v in vals)
-        if t != keys[-1]:
-            starts.append(i)
-            keys.append(t)
-    starts.append(n)
+    for size in runs["count_all"].to_pylist():
+        starts.append(starts[-1] + size)
+    data_tbl = tbl.drop_columns(list(parts))
     if len(keys) > MICRO_WRITE_MAX_FILES:
         # a wide-span commit (hundreds of partition values): the Spark
         # writer's one-task-per-value layout beats driver-side creates
@@ -287,26 +358,3 @@ def write_micro(
     with ThreadPoolExecutor(max_workers=16) as pool:
         list(pool.map(lambda sd: _write_one(*sd), jobs))
     return True
-
-
-def dir_meta_micro(tbl, cols: list[str]) -> dict:
-    """Driver twin of ``ManifestStore._dir_meta`` over a collected
-    delta: [min, max] per bound column (NULL-skipping, like Spark's
-    min/max) plus the row count, JSON-coerced the same way."""
-    import pyarrow.compute as pc
-
-    def j(v):
-        return v if v is None or isinstance(v, (int, float, str)) else str(v)
-
-    meta: dict = {}
-    for c in cols:
-        if c not in tbl.column_names:
-            continue
-        if tbl.num_rows:
-            mm = pc.min_max(tbl.column(c))
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
-        else:
-            lo = hi = None
-        meta[c] = [j(lo), j(hi)]
-    meta["n"] = tbl.num_rows
-    return meta

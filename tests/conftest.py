@@ -45,6 +45,17 @@ def _slow_entries() -> tuple[set, set]:
     return mods, nodes
 
 
+def pytest_report_header(config):
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+        return "test tier: FULL (slow_manifest.txt deselects nothing)"
+    mods, nodes = _slow_entries()
+    return (
+        f"test tier: FAST — tests/slow_manifest.txt deselects {len(mods)} "
+        f"module(s) and {len(nodes)} test(s); the release gate is the full "
+        "tier: SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q"
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return

@@ -1,6 +1,7 @@
-"""Pins for the r12 micro-commit fast path (sources/microcommit.py):
-the driver-side twins must be value-identical to the Spark operators
-they replace, the written layout must be Spark-reader-compatible, and
+"""Pins for materialized commit deltas (sources/microcommit.py): the
+grouped-stats kernel and the null-safe fold must be value-identical to
+the Spark aggregates they stand in for — over NULL, empty and single-row
+domains too — the written layout must be Spark-reader-compatible, and
 uncovered domains must decline (fall back) rather than mis-encode.
 """
 
@@ -9,8 +10,13 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow as pa
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from stock_ops_spark.operators.stats import StatsTable, merge_stats
+from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources import microcommit as MC
 from stock_ops_spark.sources.ingest import ParquetStore
 from stock_ops_spark.sources.layout import PARTITION_COLS, with_partition_cols
@@ -32,7 +38,18 @@ def _batch(spark, extra_rows=()):
     )
 
 
-def test_stat_rows_micro_matches_spark_aggregate(spark):
+def _by_key(stats, keys, parts=()):
+    """Grouped-stats table -> {key tuple: (rc, nts, lo, hi, {tp})}."""
+    out = {}
+    for r in stats.to_pylist():
+        tp = frozenset(
+            tuple(t[p] for p in parts) for t in (r.get("tp") or [])
+        )
+        out[tuple(r[k] for k in keys)] = (r["rc"], r["nts"], r["lo"], r["hi"], tp)
+    return out
+
+
+def test_stat_rows_kernel_matches_spark_aggregate(spark):
     routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
     # NULL-ts row exercises the nts/min/max NULL handling
     routed = routed.withColumn(
@@ -45,29 +62,10 @@ def test_stat_rows_micro_matches_spark_aggregate(spark):
     parts = PARTITION_COLS["streaming"]
     tbl = MC.collect_micro(routed)
     assert tbl is not None
-    got = {
-        r["ticker"]: (r["rc"], r["nts"], r["lo"], r["hi"], set(r["tp"]))
-        for r in MC.stat_rows_micro(tbl, gb, "timestamp_UTC_ms", parts, 256)
-    }
-    want_rows = (
-        routed.groupBy("ticker")
-        .agg(
-            F.count(F.lit(1)).alias("rc"),
-            F.count("timestamp_UTC_ms").alias("nts"),
-            F.min("timestamp_UTC_ms").alias("lo"),
-            F.max("timestamp_UTC_ms").alias("hi"),
-            F.collect_set(F.struct(*parts)).alias("tp"),
-        )
-        .collect()
-    )
-    want = {
-        r["ticker"]: (
-            r["rc"], r["nts"], r["lo"], r["hi"],
-            {tuple(t) for t in r["tp"]},
-        )
-        for r in want_rows
-    }
-    assert got == want
+    got = MC.grouped_stats(tbl, gb, "timestamp_UTC_ms", parts, 256)
+    want = MC._stat_rows(routed, gb, "timestamp_UTC_ms", parts, 256)
+    assert got.column_names == want.column_names
+    assert _by_key(got, gb, parts) == _by_key(want, gb, parts)
 
 
 def test_write_micro_layout_readable_and_clustered(spark, tmp_path):
@@ -83,9 +81,8 @@ def test_write_micro_layout_readable_and_clustered(spark, tmp_path):
     assert len(files) == n_parts
     assert all("/year=" in f and "/month=" in f and "/day=" in f for f in files)
     back = spark.read.parquet(dest)
-    assert {tuple(map(str, c)) for c in back.dtypes} == {
-        tuple(map(str, c)) for c in routed.dtypes
-    } or set(back.columns) == set(routed.columns)
+    assert set(back.columns) == set(routed.columns)
+    assert dict(back.dtypes) == dict(routed.dtypes)
     assert sorted(map(tuple, back.collect())) == sorted(
         map(tuple, routed.collect())
     )
@@ -135,20 +132,13 @@ def test_ingest_falls_back_and_stays_correct_on_decimal_payload(
     assert store.ingest_batch(batch, "streaming") == 0
 
 
-def test_dir_meta_micro_matches_spark_meta(spark):
+def test_meta_of_matches_spark_dir_meta(spark, tmp_path):
     routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
     tbl = MC.collect_micro(routed)
-    got = MC.dir_meta_micro(tbl, ["ticker", "timestamp_UTC_ms"])
-    row = routed.agg(
-        F.min("ticker"), F.max("ticker"),
-        F.min("timestamp_UTC_ms"), F.max("timestamp_UTC_ms"),
-        F.count(F.lit(1)),
-    ).collect()[0]
-    assert got == {
-        "ticker": [row[0], row[1]],
-        "timestamp_UTC_ms": [row[2], row[3]],
-        "n": row[4],
-    }
+    ts = "timestamp_UTC_ms"
+    got = CL._meta_of(MC.grouped_stats(tbl, ["ticker"], ts), ts)
+    store = CL.ManifestStore(spark, str(tmp_path / "m"))
+    assert got == store._dir_meta(routed, "streaming")
 
 
 def test_materialize_micro_counts_and_parallelism(spark):
@@ -167,3 +157,141 @@ def test_materialize_micro_counts_and_parallelism(spark):
     ck2, n2, tbl2 = MC.materialize_micro(df, bound=99)
     assert n2 == 100 and tbl2 is None
     assert ck2.count() == 100
+
+
+def test_micro_ingest_null_ts_matches_distributed(spark, tmp_path, monkeypatch):
+    # one ticker with both a NULL-ts and a non-NULL-ts row: the NULL ts
+    # routes to NULL partition values, so that ticker's partition tuples
+    # mix NULL and non-NULL.  The micro commit must take it exactly as
+    # the distributed commit (forced with bound 0) does.
+    batch = _batch(
+        spark, extra_rows=[("AAPL", None, 99.0, 5, None, None, None, None)]
+    )
+
+    def ingest(root):
+        store = CL.ManifestStore(spark, str(root))
+        assert store.ingest_batch(batch, "streaming") == 5
+        rows = store.read_all("streaming").select(
+            "ticker", "timestamp_UTC_ms", "price"
+        )
+        stats = store.table_stats("streaming")
+        meta = store.log("streaming").state()["meta"]
+        return (
+            sorted(map(tuple, rows.collect()), key=str),
+            sorted(map(tuple, stats.collect()), key=str),
+            sorted(meta.values(), key=str),
+        )
+
+    micro = ingest(tmp_path / "micro")
+    assert ("AAPL", None, 99.0) in micro[0]
+    assert ("AAPL", 1700000000000, 100.0) in micro[0]
+    monkeypatch.setattr(
+        CL, "materialize_micro", lambda df: MC.materialize_micro(df, bound=0)
+    )
+    assert ingest(tmp_path / "dist") == micro
+
+
+_TICKERS = st.sampled_from([None, "AAPL", "MSFT"])
+_ROWS = st.lists(
+    st.tuples(
+        _TICKERS,
+        st.sampled_from([None, "1m", "5m"]),
+        st.one_of(st.none(), st.integers(1_700_000_000_000, 1_700_000_000_009)),
+        st.sampled_from([None, 2023, 2024]),
+        st.sampled_from([None, 1, 2]),
+    ),
+    max_size=12,
+)
+_SCHEMA = pa.schema([
+    ("ticker", pa.string()),
+    ("interval", pa.string()),
+    ("timestamp_UTC_ms", pa.int64()),
+    ("year", pa.int32()),
+    ("month", pa.int32()),
+])
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    rows=_ROWS,
+    keys=st.sampled_from([["ticker"], ["ticker", "interval"]]),
+    parts=st.sampled_from([[], ["year"], ["year", "month"]]),
+    by_interval=st.booleans(),
+)
+@example(rows=[], keys=["ticker"], parts=["year"], by_interval=True)
+@example(
+    rows=[("AAPL", "1m", None, None, None)],
+    keys=["ticker", "interval"], parts=["year", "month"], by_interval=False,
+)
+def test_kernel_parity_with_spark_aggregates(spark, rows, keys, parts, by_interval):
+    tbl = pa.Table.from_pylist(
+        [dict(zip(_SCHEMA.names, r)) for r in rows], schema=_SCHEMA
+    )
+    df = spark.createDataFrame(tbl)
+    ts = "timestamp_UTC_ms"
+    assert _by_key(MC.grouped_stats(tbl, keys, ts, parts, 256), keys, parts) == (
+        _by_key(MC._stat_rows(df, keys, ts, parts, 256), keys, parts)
+    )
+    skeys = ["ticker", "interval"] if by_interval else ["ticker"]
+
+    def catalog(delta):
+        got = delta.batch_stats("streaming", by_interval).to_pylist()
+        return sorted(
+            ((tuple(r[k] for k in skeys), r["row_count"], r["min_ts"],
+              r["max_ts"]) for r in got),
+            key=str,
+        )
+
+    assert catalog(MC.Delta(df, len(rows), tbl)) == catalog(
+        MC.Delta(df, len(rows), None)
+    )
+
+
+def test_kernel_caps_partition_tuples_like_spark(spark):
+    rows = [("AAPL", "1m", 1, y, m) for y in (2023, 2024) for m in (1, 2)]
+    tbl = pa.Table.from_pylist(
+        [dict(zip(_SCHEMA.names, r)) for r in rows], schema=_SCHEMA
+    )
+    args = (["ticker"], "timestamp_UTC_ms", ["year", "month"], 2)
+    got = MC.grouped_stats(tbl, *args).column("tp").to_pylist()
+    want = MC._stat_rows(spark.createDataFrame(tbl), *args).column("tp")
+    assert [len(t) for t in got] == [len(t) for t in want.to_pylist()] == [3]
+
+
+def test_interday_batch_stats_are_iso_strings(spark):
+    import datetime as dt
+
+    rows = [("AAPL", "1d", dt.date(2024, 1, 3)), ("AAPL", "1d", dt.date(2023, 12, 29)),
+            ("MSFT", "1d", None)]
+    df = spark.createDataFrame(rows, "ticker string, interval string, date date")
+    tbl = df.toArrow()
+    micro = MC.Delta(df, 3, tbl).batch_stats("historical_interday", True)
+    dist = MC.Delta(df, 3, None).batch_stats("historical_interday", True)
+    assert micro.schema.types == dist.schema.types
+    assert sorted(micro.to_pylist(), key=str) == sorted(dist.to_pylist(), key=str)
+    assert ("2023-12-29", "2024-01-03") in {
+        (r["min_ts"], r["max_ts"]) for r in micro.to_pylist()
+    }
+
+
+def test_stats_table_arrow_merge_matches_spark_merge(spark, tmp_path):
+    schema = "ticker string, row_count bigint, min_ts bigint, max_ts bigint"
+    prior = [("AAPL", 2, 10, 20), ("MSFT", 1, None, None), (None, 1, 5, 5)]
+    delta = [("AAPL", 1, 5, None), ("MSFT", 2, 7, 9), ("NVDA", 1, None, None)]
+    arrow = StatsTable(spark, str(tmp_path / "a"), ["ticker"])
+    arrow.update(spark.createDataFrame(prior, schema))
+    arrow.update(pa.Table.from_pylist(
+        [dict(zip(["ticker", "row_count", "min_ts", "max_ts"], r)) for r in delta]
+    ))
+    want = merge_stats(
+        spark.createDataFrame(prior, schema),
+        spark.createDataFrame(delta, schema),
+        ["ticker"],
+    )
+    assert sorted(map(tuple, arrow.read().collect()), key=str) == sorted(
+        map(tuple, want.collect()), key=str
+    )

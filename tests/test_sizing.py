@@ -1,5 +1,7 @@
 """plans/sizing.py: the rules' bounds, monotonicity, and the 100 TB shape."""
 
+import os
+
 from stock_ops_spark.plans.sizing import (
     GB,
     MB,
@@ -289,4 +291,27 @@ def test_session_disables_leaky_checkpoint_checksum(spark):
         spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
         == "false"
     )
-    assert spark.conf.get("spark.cleaner.periodicGC.interval") == "5min"
+    # the cleaner interval is Spark's default unless the deployment asks
+    if not os.environ.get("SPARK_GRAFT_PERIODIC_GC"):
+        conf = spark.sparkContext.getConf()
+        assert conf.get("spark.cleaner.periodicGC.interval") is None
+
+
+def test_periodic_gc_conf_only_when_env_set(spark, monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from stock_ops_spark.session import get_spark
+
+    built: list[dict] = []
+
+    def capture(builder):
+        built.append(dict(builder._options))
+        return spark  # the live session: no second context
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.delenv("SPARK_GRAFT_PERIODIC_GC", raising=False)
+    get_spark("t", master="local[1]")
+    monkeypatch.setenv("SPARK_GRAFT_PERIODIC_GC", "5min")
+    get_spark("t", master="local[1]")
+    assert "spark.cleaner.periodicGC.interval" not in built[0]
+    assert built[1]["spark.cleaner.periodicGC.interval"] == "5min"
