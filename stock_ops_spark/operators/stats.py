@@ -4,9 +4,12 @@ The reference maintains ``__table_stats__`` (row_count, min/max ts, min/max
 date) and ``__interval_stats__`` (the same, grouped by interval) per DB
 file, merged O(1) per batch (``sql_db.py:540-669``).  Parquet footers
 already carry per-file min/max, but the engine still exposes the same
-*catalog view*: a tiny stats parquet per dataset, merged per ingested
-batch with one aggregate + one coalesced overwrite — never a rescan of the
-store.
+*catalog view*, merged per ingested batch from the batch alone — never a
+rescan of the store.  The store publishes each batch's stats increment in
+the same manifest commit as its data (``sources/commitlog.py``); this
+module holds the aggregate (``batch_stats``), its Spark merge
+(``merge_stats``), the driver-side fold (``fold_stats``), and the
+swap-installed table a materialized view folds into (``StatsTable``).
 """
 
 from __future__ import annotations
@@ -15,7 +18,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from stock_ops_spark.schemas import TS_COL
 
@@ -85,25 +87,21 @@ def fold_stats(tbl, keys, sums=("rc",), mins=("lo",), maxs=("hi",), lists=()):
 
 
 class StatsTable:
-    """A small parquet-backed stats catalog for one dataset.
+    """A small parquet-backed table installed by swap: the persisted
+    partial-aggregate table ``plans/matview.MatView`` folds into.
 
-    Crash safety: ``update`` materializes the merged stats into a
+    ``merge_fn(existing | None, delta, keys) -> merged`` folds one
+    delta into the installed rows (MatView passes its additive-measure
+    merge; ``merge_stats`` is the min/max/row_count stats merge).
+
+    Crash safety: ``update`` materializes the merged rows into a
     sibling ``.tmp`` directory and installs it with two renames (the
     ``streaming/dedup.py`` swap discipline) — a SIGKILL at ANY point
-    leaves either the old or the new stats directory whole, never a
+    leaves either the old or the new directory whole, never a
     half-written directory that poisons readers with
-    UNABLE_TO_INFER_SCHEMA (caught live by the hard-kill test in
-    ``tests/test_crash_recovery.py``).  ``read`` additionally adopts a
+    UNABLE_TO_INFER_SCHEMA.  ``read`` additionally adopts a
     completed-but-uninstalled ``.tmp`` / restores a stranded ``.old``
     so a kill BETWEEN the two renames loses nothing.
-
-    One window remains inherently open with plain parquet (no commit
-    log): a kill after the data append but before the stats merge
-    leaves the catalog one batch behind the store — the replay dedups
-    the rows away, so the skipped merge never re-fires.  ``rebuild``
-    heals that by re-aggregating the store (bounded, maintenance-time
-    only); Delta/Iceberg close it with a transaction log, plain
-    parquet cannot.
     """
 
     def __init__(
@@ -111,15 +109,12 @@ class StatsTable:
         spark: SparkSession,
         path: str,
         keys: list[str],
-        merge_fn=None,
+        merge_fn,
     ):
         self.spark = spark
         self.path = path
         self.keys = keys
-        # (existing|None, delta, keys) -> merged.  Defaults to the
-        # min/max/row_count stats merge; MatView reuses this table's
-        # crash-safe swap machinery with an additive-measure merge.
-        self.merge_fn = merge_fn or merge_stats
+        self.merge_fn = merge_fn
 
     @property
     def _tmp(self) -> str:
@@ -175,26 +170,11 @@ class StatsTable:
                 shutil.rmtree(cand, ignore_errors=True)
         return None
 
-    def update(self, delta) -> None:
-        """Merge a stats delta — a DataFrame, or an Arrow table with the
-        same columns — into the catalog.  The default stats merge runs
-        driver-side (``_merge_arrow``) whenever it covers the value
-        domains; otherwise, and for a custom ``merge_fn``, Spark merges."""
+    def update(self, delta: DataFrame) -> None:
+        """Fold ``delta`` into the table with ``merge_fn`` and install
+        the result by swap."""
         import shutil
 
-        import pyarrow as pa
-
-        if self.merge_fn is merge_stats:
-            tbl = delta
-            if not isinstance(tbl, pa.Table):
-                try:
-                    tbl = delta.select(*self._cols).toArrow()  # tiny by contract
-                except Exception:
-                    tbl = None
-            if tbl is not None and self._merge_arrow(tbl):
-                return
-        if isinstance(delta, pa.Table):
-            delta = self.spark.createDataFrame(delta)
         existing = self.read()
         merged = self.merge_fn(existing, delta, self.keys)
         # merged's plan reads self.path, which the swap below replaces —
@@ -203,121 +183,6 @@ class StatsTable:
         shutil.rmtree(self._tmp, ignore_errors=True)
         shutil.rmtree(self._aside, ignore_errors=True)
         merged.coalesce(1).write.mode("overwrite").parquet(self._tmp)
-        if os.path.exists(self.path):
-            os.rename(self.path, self._aside)
-        os.rename(self._tmp, self.path)
-        shutil.rmtree(self._aside, ignore_errors=True)
-
-    @property
-    def _cols(self) -> list[str]:
-        return self.keys + ["row_count", "min_ts", "max_ts"]
-
-    def _merge_arrow(self, delta) -> bool:
-        """Driver-side merge for the DEFAULT stats merge (r12, guide
-        §1/§5).  The stats catalog is tiny by contract (one row per
-        ticker[, interval]), yet the Spark-side update paid three jobs
-        per call — read, checkpoint of the merged plan, coalesced write —
-        twice per ``ParquetStore.ingest_batch``; profiled at ~0.3 s per
-        call on the e2e replay floor (q334/q333/q45).  Here the existing
-        catalog and the delta are concatenated and folded with
-        ``fold_stats`` (the null-safe least/greatest of ``merge_stats``),
-        and the result is one pyarrow file installed through the SAME
-        tmp-dir + two-rename swap, so the crash story is unchanged.
-        Returns False — writing nothing; the caller falls back to the
-        Spark merge — for value domains this path does not cover: keys
-        must be strings, counts int64 and ts cells int64 or string on
-        both sides (anything else, or NULL-typed ts with nothing to
-        type them by, declines)."""
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        cols = self._cols
-
-        def _covered(schema) -> bool:
-            def ok(c, *preds):
-                t = schema.field(c).type
-                return pa.types.is_null(t) or any(p(t) for p in preds)
-
-            return (
-                not set(cols) - set(schema.names)
-                and all(ok(k, pa.types.is_string) for k in self.keys)
-                and ok("row_count", pa.types.is_int64)
-                and all(
-                    ok(c, pa.types.is_int64, pa.types.is_string)
-                    for c in ("min_ts", "max_ts")
-                )
-            )
-
-        if not _covered(delta.schema):
-            return False
-
-        # existing rows with read()'s exact adoption/heal semantics
-        existing = None
-        if os.path.exists(self.path):
-            try:
-                existing = pq.read_table(self.path)
-                shutil.rmtree(self._tmp, ignore_errors=True)
-                shutil.rmtree(self._aside, ignore_errors=True)
-            except Exception:
-                existing = None
-                shutil.rmtree(self.path, ignore_errors=True)
-        if existing is None:
-            for cand in (self._tmp, self._aside):
-                if not os.path.exists(cand):
-                    continue
-                try:
-                    existing = pq.read_table(cand)
-                except Exception:
-                    shutil.rmtree(cand, ignore_errors=True)
-                    continue
-                os.rename(cand, self.path)
-                shutil.rmtree(self._tmp, ignore_errors=True)
-                shutil.rmtree(self._aside, ignore_errors=True)
-                break
-        parts = [delta.select(cols)]
-        if existing is not None:
-            if not _covered(existing.schema):
-                return False  # foreign schema: let the Spark merge resolve it
-            parts.insert(0, existing.select(cols))
-        try:
-            both = pa.concat_tables(parts, promote_options="default")
-        except (pa.ArrowInvalid, pa.ArrowTypeError):
-            return False  # mixed ts domains: let the Spark merge resolve it
-        merged = fold_stats(
-            both, self.keys, ("row_count",), ("min_ts",), ("max_ts",)
-        )
-        ts_type = merged.schema.field("min_ts").type
-        if not merged.num_rows or pa.types.is_null(ts_type):
-            return False  # nothing to write, or no ts type to write it with
-        merged = merged.cast(
-            pa.schema(
-                [(k, pa.string()) for k in self.keys]
-                + [("row_count", pa.int64()), ("min_ts", ts_type),
-                   ("max_ts", ts_type)]
-            )
-        ).sort_by([(k, "ascending") for k in self.keys])
-        shutil.rmtree(self._tmp, ignore_errors=True)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        os.makedirs(self._tmp)
-        pq.write_table(merged, os.path.join(self._tmp, "part-00000.parquet"))
-        if os.path.exists(self.path):
-            os.rename(self.path, self._aside)
-        os.rename(self._tmp, self.path)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        return True
-
-    def rebuild(self, store_df: DataFrame, mode: str, by_interval: bool) -> None:
-        """Maintenance-time heal: recompute the catalog from the store
-        itself (one full aggregate — bounded, never on the hot path)."""
-        import shutil
-
-        full = batch_stats(store_df, mode, by_interval)
-        full = full.localCheckpoint(eager=True)
-        shutil.rmtree(self._tmp, ignore_errors=True)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        full.coalesce(1).write.mode("overwrite").parquet(self._tmp)
         if os.path.exists(self.path):
             os.rename(self.path, self._aside)
         os.rename(self._tmp, self.path)

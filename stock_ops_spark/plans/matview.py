@@ -16,8 +16,8 @@ pure fold; it also dictates the contract:
 - **Append-only under observers.**  A retraction or in-place update is
   not expressible with additive partials (min/max cannot un-see a
   value).  Wire the view to the POST-dedup delta the store computes
-  (``ParquetStore``'s ``observers`` hook hands over exactly the rows
-  that entered the store, exactly once) — never to raw pre-dedup
+  (``ManifestStore``'s ``observers`` hook hands over exactly the rows
+  each committed ingest added, exactly once) — never to raw pre-dedup
   batches, which replay on checkpoint recovery.
 - **Updates/deletes via the CDC feed.**  Against a ``ManifestStore``
   (which has MERGE/DELETE and a ``read_changes`` feed), ``sync`` pulls
@@ -264,8 +264,8 @@ class MatView:
         self._table.update(self._partial(delta))
 
     def observer(self) -> Callable[[DataFrame, str], None]:
-        """Adapter for ``ParquetStore(observers=[...])``: ignores the
-        mode argument and folds every post-dedup delta."""
+        """Adapter for ``ManifestStore(observers=[...])``: ignores the
+        mode argument and folds every committed post-dedup delta."""
         return lambda delta, _mode: self.refresh(delta)
 
     # -- CDC maintenance (ManifestStore.read_changes) --------------------

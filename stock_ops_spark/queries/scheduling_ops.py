@@ -215,7 +215,7 @@ def q334_scheduler_run_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SchedulerService.tick`` at 2025-01-09T00:00Z catches up every
     deployment from its DTSTART (the Prefect stand-in's recovery path),
     dispatches each run through ``sources/services.run_command`` into a
-    dedup-versioned ParquetStore, and the output folds the RUN LOG
+    dedup-versioned ManifestStore, and the output folds the RUN LOG
     against the STORE: per deployment, runs created / completed, rows
     appended across runs, and distinct ingested days.  The oracle
     reconstructs all four from first principles (fires = generate_series
@@ -236,7 +236,7 @@ def q334_scheduler_run_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_schedule,
         spark_runner,
     )
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.sources.providers import Provider, register
 
     def _bars(ticker, exchange, interval, start, end):
@@ -296,7 +296,7 @@ def q334_scheduler_run_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ops.schedule_deployment(cfg)
             dep_ticker[cfg["deployment_id"]] = r.r_name
 
-        store = ParquetStore(spark, root + "/store", provider="sched-bars")
+        store = ManifestStore(spark, root + "/store", provider="sched-bars")
         sched = SchedulerService(
             api, spark_runner(spark, store, provider="sched-bars")
         )

@@ -1207,12 +1207,11 @@ class DeploymentOps:
             }
         if self.mode == "maintain":
             # engine extension: scheduled store maintenance (see
-            # services.run_command's maintain_store branch); op args
-            # pass through verbatim (target_file_bytes, keep_from, ...)
+            # services.run_command's maintain_store branch); retain's
+            # keep_from passes through verbatim
             cmd = {"op": cfg["op"], "mode": cfg["store_mode"]}
-            for k in ("target_file_bytes", "keep_from"):
-                if k in cfg:
-                    cmd[k] = cfg[k]
+            if "keep_from" in cfg:
+                cmd["keep_from"] = cfg["keep_from"]
             return cmd
         if self.mode == "drain":
             # engine extension: cron-style streaming — each fire drains

@@ -139,15 +139,13 @@ def get_spark(
         # Output commit: v2 commits task files straight to the final dir
         # (one rename per file instead of two) and we skip the _SUCCESS
         # marker nobody reads.  Halving the metadata ops matters here
-        # because commit-heavy paths (ManifestStore batch dirs, store
-        # appends) write many small files, and the sandbox's ext4 is
+        # because commit-heavy paths (ManifestStore batch dirs) write
+        # many small files, and the sandbox's ext4 is
         # mounted with `discard` — every create/rename/delete can stall
         # on the virtio disk (measured: q316 e2e 14.1/12.8 s v1 vs
         # 13.3/11.4 s v2, same session, alternating).  Crash model is
-        # unchanged: manifest commits make batch dirs visible atomically
-        # (v2 partials are invisible debris), and ParquetStore appends
-        # are at-least-once + dedup-on-replay, which absorbs a partially
-        # committed job's files exactly like any other replay.
+        # unchanged: manifest commits make batch dirs visible atomically,
+        # so v2 partials are invisible debris.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )

@@ -1,13 +1,11 @@
-"""Manifest commit log: the crash window plain parquet cannot close,
-closed.
+"""The store: partitioned parquet under a manifest commit log.
 
-``ParquetStore`` is crash-safe except for ONE documented window (see
-``operators/stats.StatsTable``): a kill after the data append but
-before the stats merge leaves the catalog a batch behind, healed only
-by a maintenance-time ``rebuild_stats``.  The root cause is structural
-— data files and catalog state are two writes with no transaction
-around them.  ``ManifestStore`` adds the transaction, the same way
-Delta Lake / Iceberg do, reduced to what plain files can guarantee:
+``ManifestStore`` is the engine's one store.  Every write — ingest,
+merge, delete, retain, compaction — touches two things, the data files
+and the stats catalog, and a plain append of each would leave a window
+where a kill lands between them.  The reference closes that window with
+SQLite's journal; this module closes it the way Delta Lake / Iceberg
+do, reduced to what plain files can guarantee:
 
 - every ingest writes its data to a FRESH batch directory
   (``batch-<uuid>/``, invisible to readers — nothing lists it);
@@ -23,7 +21,7 @@ Delta Lake / Iceberg do, reduced to what plain files can guarantee:
 A SIGKILL anywhere leaves either no commit (data + stats dirs are
 unreferenced orphans, swept by ``gc_orphans``; the streaming replay
 re-ingests the batch) or a complete commit.  There is no torn state
-and no stats lag — ``rebuild_stats`` becomes unnecessary here.
+and no stats lag, so there is no stats-rebuild job to run.
 
 Concurrent writers get optimistic concurrency: the commit encodes the
 expected version; on collision the loser recomputes its delta against
@@ -52,6 +50,7 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -306,10 +305,11 @@ def _conflict_backoff(attempt: int) -> None:
 
 
 class ManifestStore:
-    """``ParquetStore``'s ingest semantics under a manifest commit log.
+    """Partitioned-parquet store for one (provider, exchange), every
+    write published by a manifest commit.
 
-    Same dedup/versioning/stats contract (shared helpers in
-    ``sources/ingest.py``); different physical layout:
+    The dedup/versioning contract lives in ``sources/ingest.py``; the
+    physical layout is:
 
         <root>/<provider>/<exchange>/<mode>/batch-<uuid>/<hive parts>/
         <root>/<provider>/<exchange>/<mode>__log/NNNNNNNN.json
@@ -338,11 +338,14 @@ class ManifestStore:
         self.provider = provider
         self.exchange = exchange
         self.tz = tz
-        # Same contract as ParquetStore.observers, with one OCC nuance:
-        # observers fire only AFTER try_commit succeeds — a losing
-        # attempt's delta was computed against a stale version and is
-        # recomputed on retry, so folding it would double-count exactly
-        # the rows the winner already committed.
+        # delta observers: callables (versioned_delta, mode) handed the
+        # POST-dedup rows of each non-empty ingest (already
+        # localCheckpoint'd — safe to aggregate without recomputation);
+        # incremental materialized views (plans/matview) ride this hook.
+        # They fire only AFTER try_commit succeeds — a losing attempt's
+        # delta was computed against a stale version and is recomputed
+        # on retry, so folding it would double-count exactly the rows
+        # the winner already committed.
         self.observers = list(observers or [])
         # Reads union one relation per live batch dir, so read (and the
         # ingest dedup probe, which reads) degrades linearly in commits
@@ -382,10 +385,9 @@ class ManifestStore:
         return out
 
     def read_all(self, mode: str, at_version: int | None = None) -> DataFrame | None:
-        """Current (or time-travel) snapshot.  Every dir it reads was
-        published by a complete commit, so there is no torn-footer
-        debris to tolerate — the reason ``ParquetStore.read_all`` needs
-        an UNABLE_TO_INFER_SCHEMA escape and this does not."""
+        """Current (or time-travel) snapshot, or None before the first
+        commit.  Every dir it reads was published by a complete commit,
+        so uncommitted or crashed-write debris is never listed."""
         state = self.log(mode).state(at_version)
         return self._read_dirs(mode, state["dirs"])
 
@@ -680,7 +682,7 @@ class ManifestStore:
     def _ingest_frame(
         self, batch: DataFrame, mode: str, n_bids: int | None
     ) -> int | list[int]:
-        """Exactly ``ParquetStore.ingest_batch``'s contract, atomically.
+        """The ingest contract (``sources/ingest.py``), atomically.
 
         Optimistic concurrency, two-tier:
 
@@ -1339,11 +1341,10 @@ class ManifestStore:
         self, mode: str, cutoff, cdc: bool = False,
         on_observers: str = "error",
     ) -> dict:
-        """Retention as a manifest commit — the commit-log twin of
-        ``maintenance.retain``'s directory-delete (reference parity: the
-        Redis ``XTRIM`` analog, writer.py:293-297), driven by the
-        commit-level data-skipping bounds instead of Hive directory
-        names:
+        """Retention as a manifest commit (reference parity: the Redis
+        ``XTRIM`` analog, writer.py:293-297): drop rows whose time
+        column is below ``cutoff``, driven by the commit-level
+        data-skipping bounds:
 
         - dirs whose recorded ts upper bound < ``cutoff`` are removed
           METADATA-ONLY — zero data bytes read (their one-column ticker
@@ -1479,7 +1480,8 @@ class ManifestStore:
                 log.try_commit(new_version, payload)
                 return {
                     "deleted_dirs": n_dropped_dirs,
-                    "rewritten_dirs": len(straddle),
+                    # straddlers are removed only when they held expired rows
+                    "rewritten_dirs": len(removes) - n_dropped_dirs,
                     "version": new_version,
                 }
             except CommitConflict:
@@ -1502,10 +1504,10 @@ class ManifestStore:
     def widen_types(self, mode: str) -> dict:
         """Cast-rewrite files whose physical column types conflict (the
         NONE→REAL affinity migration, reference sql_db.py:69-173) — the
-        same footer-driven per-file rewrite as ``maintenance.widen_types``
+        footer-driven per-file rewrite of ``maintenance.widen_types``
         (file names unchanged, so every commit's dir references stay
         valid; a kill mid-sweep leaves a subset widened, and re-running
-        heals — same contract as the plain store)."""
+        heals)."""
         from stock_ops_spark.sources import maintenance as M
 
         return M.widen_types(self, mode)
@@ -1571,7 +1573,7 @@ class ManifestStore:
                     os.path.join(log.log_dir, c["cdc"])
                 )
             elif op in ("ingest", "convert"):
-                # convert_from adopts a ParquetStore snapshot as version
+                # convert_from adopts a Hive-parquet tree as version
                 # 1 — its rows ARE the feed's opening changes (a fresh
                 # MatView that "just syncs" from cursor 0 must see them;
                 # skipping convert here silently produced a view missing
@@ -1754,29 +1756,37 @@ class ManifestStore:
                 continue
         raise RuntimeError(f"restore lost {self.MAX_COMMIT_RETRIES} races")
 
-    def convert_from(self, pstore, mode: str) -> dict:
-        """Adopt an existing ``ParquetStore`` dataset as this manifest
-        store's version 1 — the migration path a team with months of
-        plain-parquet history needs to move onto the commit log without
-        re-ingesting (Delta's CONVERT TO DELTA).  One bandwidth-bound
-        rewrite of the current snapshot into a fresh batch dir, the
-        running stats recomputed from the adopted rows (the ParquetStore
-        may be carrying a healed/rebuilt StatsTable; recomputation makes
-        the commit self-consistent by construction), both published in
-        one atomic commit with data-skipping bounds.  The source store
-        is untouched; subsequent ``ingest_batch`` calls dedup/version
-        against the adopted history exactly as if it had been ingested
-        here.  Refuses a non-empty target (the adopted snapshot must BE
-        version 1, or time travel would lie)."""
+    def convert_from(self, path: str, mode: str) -> dict:
+        """Adopt an existing Hive-partitioned parquet tree at ``path`` as
+        this manifest store's version 1 — the migration path a team with
+        months of plain-parquet history needs to move onto the commit
+        log without re-ingesting (Delta's CONVERT TO DELTA).  The tree is
+        read with ``mergeSchema`` (files written before a column existed
+        surface it as NULL), then one bandwidth-bound rewrite of it lands
+        in a fresh batch dir, the running stats are computed from the
+        adopted rows, and both publish in one atomic commit with
+        data-skipping bounds.  The source tree is untouched; subsequent
+        ``ingest_batch`` calls dedup/version against the adopted history
+        exactly as if it had been ingested here, so the rows should carry
+        the store's columns (``version`` and the mode's partition
+        columns included).  Refuses a non-empty target (the adopted
+        snapshot must BE version 1, or time travel would lie)."""
         log = self.log(mode)
         if log.version() != 0:
             raise ValueError(
                 f"convert_from requires an empty target log; {mode} is at "
                 f"version {log.version()}"
             )
-        df = pstore.read_all(mode)
-        if df is None:
+        if not os.path.exists(path):
             return {"adopted_rows": 0, "version": 0}
+        try:
+            df = self.spark.read.option("mergeSchema", "true").parquet(path)
+        except AnalysisException as e:
+            # a tree with no committed footers yet (only staging debris)
+            # is an empty source, not an error
+            if "UNABLE_TO_INFER_SCHEMA" in str(e):
+                return {"adopted_rows": 0, "version": 0}
+            raise
         delta = materialize_micro(df)
         df, n = delta.df, delta.n
         meta_map: dict[str, dict] = {}

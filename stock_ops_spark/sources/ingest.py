@@ -1,18 +1,21 @@
-"""Batch ingestion with full reference semantics (S5, A1-A6).
+"""The ingest contract's shared delta computation (S5, A1-A6).
 
-One ``ParquetStore.ingest_batch`` call is the Spark-first equivalent of the
-reference's entire Redis-buffer → writer → SQLite path
-(``writer.py:259-353`` + ``sql_db.py:345-671``): normalize is assumed done
-upstream (operators in ``transform``), then
+Every store commit (``sources/commitlog.ManifestStore``) is the
+Spark-first equivalent of the reference's entire Redis-buffer → writer →
+SQLite path (``writer.py:259-353`` + ``sql_db.py:345-671``).  Normalize is
+assumed done upstream (operators in ``transform``); this module holds the
+steps every commit path shares:
 
 1. P5  drop all-null-payload rows
 2. A3  within-batch exact dedup (NULL-safe, whole payload)
 3. A2  event-time partition routing columns (exchange-local Y/M/D)
 4. A3  anti-join vs existing rows with identical (key, payload)
 5. A4  version = prior max(version) per key + row_number within batch
-6. append to Hive-partitioned parquet (dynamic partition overwrite OFF —
-   pure append, matching the reference's append-only versioned log)
-7. A5/A6 incremental stats merge
+
+(``compute_versioned_delta``), plus the write layout of the delta
+(``cluster_for_write``).  The append into a fresh batch directory and
+the A5/A6 stats increment are the commit's, published together by one
+manifest commit.
 
 Scale posture: the existing-store probe (steps 4-5) reads ONLY the
 partitions the batch touches — partition values are collected from the
@@ -23,19 +26,13 @@ and broadcast when small.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.stats import StatsTable
-from stock_ops_spark.sources.microcommit import materialize_micro
-from stock_ops_spark.operators.versioning import assign_versions, latest_version_view
+from stock_ops_spark.operators.versioning import assign_versions
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
-    mode_root,
     partition_values_predicate,
     with_partition_cols,
 )
@@ -54,12 +51,12 @@ def compute_versioned_delta(
     touched: list | None = None,
     ignore_cols: tuple = (),
 ) -> DataFrame:
-    """Steps 1-5 of the ingest contract (P5/A2/A3/A4), shared by
-    ``ParquetStore`` and the manifest-committed store
-    (``sources/commitlog.py``): route partitions, align evolved schemas
-    both ways, prune the existing-store probe to the touched partitions,
-    dedup against it, and assign versions.  Returns the lazy delta —
-    the caller decides how to materialize and commit it.
+    """Steps 1-5 of the ingest contract (P5/A2/A3/A4), shared by every
+    commit path of the store (``sources/commitlog.py``): route
+    partitions, align evolved schemas both ways, prune the
+    existing-store probe to the touched partitions, dedup against it,
+    and assign versions.  Returns the lazy delta — the caller decides
+    how to materialize and commit it.
 
     ``touched``: optional precomputed partition-value tuples the batch
     hits (a caller that already ran an aggregate over the routed batch
@@ -160,7 +157,9 @@ def cluster_for_write(
     satisfied by our sort and each file really is (ticker, ts)-runs.
     ``n_rows``: when the caller already knows the delta's size (the
     ingest paths collect it pre-write), small deltas are additionally
-    repartitioned onto the partition columns — see SMALL_WRITE_ROWS.
+    repartitioned onto the partition columns — one file in all for an
+    unpartitioned mode, so compacting one folds it to a single file —
+    see SMALL_WRITE_ROWS.
     ``n_parts``: the delta's distinct partition-tuple count when the
     caller already collected it (the ingest stats job does).  Passing
     it pins the repartition width EXPLICITLY, which matters on the
@@ -174,146 +173,11 @@ def cluster_for_write(
     in parallel."""
     parts = PARTITION_COLS[mode]
     out = versioned
-    if parts and n_rows is not None and 0 < n_rows <= SMALL_WRITE_ROWS:
-        if n_parts:
+    if n_rows is not None and 0 < n_rows <= SMALL_WRITE_ROWS:
+        if not parts:
+            out = out.repartition(1)  # unpartitioned: the one "value"
+        elif n_parts:
             out = out.repartition(n_parts, *[F.col(c) for c in parts])
         else:
             out = out.repartition(*parts)
     return out.sortWithinPartitions(*parts, "ticker", S.TS_COL[mode])
-
-
-class ParquetStore:
-    """Partitioned-parquet store for one (provider, exchange)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        provider: str = "EODHD",
-        exchange: str = "US",
-        tz: str = "America/New_York",
-        observers: list | None = None,
-    ):
-        self.spark = spark
-        self.root = root
-        self.provider = provider
-        self.exchange = exchange
-        self.tz = tz
-        # delta observers: callables (versioned_delta, mode) invoked after
-        # each non-empty append with the POST-dedup delta (already
-        # localCheckpoint'd — safe to aggregate without recomputation).
-        # This is the hook incremental materialized views (plans/matview)
-        # ride: they see exactly the rows that entered the store, once.
-        self.observers = list(observers or [])
-
-    # -- paths -----------------------------------------------------------
-    def data_path(self, mode: str) -> str:
-        return mode_root(self.root, mode, self.provider, self.exchange)
-
-    def _stats(self, mode: str, by_interval: bool) -> StatsTable:
-        name = "interval_stats" if by_interval else "table_stats"
-        path = os.path.join(self.data_path(mode) + "__meta", name)
-        keys = ["ticker", "interval"] if by_interval else ["ticker"]
-        return StatsTable(self.spark, path, keys)
-
-    # -- read ------------------------------------------------------------
-    def read_all(self, mode: str) -> DataFrame | None:
-        """Union-schema read: mergeSchema resolves files written before a
-        column existed (the reference's ALTER TABLE ADD COLUMN evolution,
-        sql_db.py:306-343, without any rewrite — old files surface the new
-        column as NULL)."""
-        path = self.data_path(mode)
-        if not os.path.exists(path):
-            return None
-        try:
-            return self.spark.read.option("mergeSchema", "true").parquet(path)
-        except AnalysisException as e:
-            # A concurrent first append (or a crash during it) can leave the
-            # directory present with zero committed footers — only staging
-            # debris (`_temporary`, in-flight task files).  To a reader that
-            # is an empty store, not an error; the next committed batch makes
-            # it readable.  Caught live by the SIGKILL crash-recovery test.
-            if "UNABLE_TO_INFER_SCHEMA" in str(e):
-                return None
-            raise
-
-    # -- write -----------------------------------------------------------
-    def ingest_batch(self, batch: DataFrame, mode: str) -> int:
-        """Returns number of rows appended.
-
-        Schema evolution (§1.3): columns beyond the mode's declared schema
-        are accepted and stored; they join the payload set for dedup /
-        versioning purposes (the reference compares the incoming payload's
-        own keys, sql_db.py:487-497 — extra columns are payload).
-        """
-        existing = self.read_all(mode)
-        versioned = compute_versioned_delta(batch, existing, mode, self.tz)
-        # Sever lineage BEFORE appending: versioned's plan scans the store
-        # path, and writing to that path invalidates any cache over it
-        # (refreshByPath) — a plain .cache() would silently recompute the
-        # anti-join against the already-appended data and yield an empty
-        # stats delta.  The checkpoint carries its row count as an
-        # Observation, and a delta proven micro additionally comes back
-        # as one Arrow table collected from the checkpointed blocks —
-        # the append files and both stats merges then derive driver-side
-        # (sources/microcommit.py).
-        delta = materialize_micro(versioned)
-        if delta.n:
-            delta.write(self.data_path(mode), mode, live_tree=True)
-            self._stats(mode, by_interval=False).update(
-                delta.batch_stats(mode, by_interval=False)
-            )
-            if mode != "streaming":  # A6 interval stats: non-streaming only
-                self._stats(mode, by_interval=True).update(
-                    delta.batch_stats(mode, by_interval=True)
-                )
-            for obs in self.observers:
-                obs(delta.df, mode)
-        return delta.n
-
-    # -- maintenance -----------------------------------------------------
-    def compact(self, mode: str, target_file_bytes: int | None = None) -> dict:
-        """Coalesce micro-batch file litter (see sources/maintenance.py)."""
-        from stock_ops_spark.sources import maintenance as M
-
-        kw = {} if target_file_bytes is None else {"target_file_bytes": target_file_bytes}
-        return M.compact(self, mode, **kw)
-
-    def retain(self, mode: str, keep_from: tuple) -> list[str]:
-        """Drop partitions older than an exchange-local date bound."""
-        from stock_ops_spark.sources import maintenance as M
-
-        return M.retain(self, mode, keep_from)
-
-    def widen_types(self, mode: str) -> dict:
-        """Cast-rewrite files with conflicting physical column types."""
-        from stock_ops_spark.sources import maintenance as M
-
-        return M.widen_types(self, mode)
-
-    # -- catalog views ---------------------------------------------------
-    def table_stats(self, mode: str) -> DataFrame | None:
-        return self._stats(mode, by_interval=False).read()
-
-    def interval_stats(self, mode: str) -> DataFrame | None:
-        return self._stats(mode, by_interval=True).read()
-
-    def rebuild_stats(self, mode: str) -> None:
-        """Maintenance-time heal for the stats catalog: re-aggregate the
-        store (one bounded pass).  Closes the crash window where a kill
-        lands after the data append but before the stats merge — the
-        replay dedups the rows away, so the skipped merge never
-        re-fires (see StatsTable docstring)."""
-        data = self.read_all(mode)
-        if data is None:
-            return
-        self._stats(mode, by_interval=False).rebuild(data, mode, by_interval=False)
-        if mode != "streaming":
-            self._stats(mode, by_interval=True).rebuild(data, mode, by_interval=True)
-
-    def latest(self, mode: str) -> DataFrame | None:
-        """O5 'current' view of the store."""
-        df = self.read_all(mode)
-        if df is None:
-            return None
-        return latest_version_view(df, S.INDEX_COLS[mode])

@@ -1,41 +1,29 @@
-"""Store maintenance jobs: compaction, retention trim, type-widening.
+"""Type-widening migration for the store's parquet files.
 
-The reference keeps its store healthy with (a) Redis ``XTRIM`` retention on
-the ingest buffer (``src/stockops/data/database/writer.py:35-37,293-297``)
-and (b) an opportunistic table rebuild when a previously-untyped column's
-true affinity is learned (``src/stockops/data/database/sql_db.py:69-173``,
-``_migrate_table_schema``).  A parquet store accumulates the analogous debt
-differently — streaming ``foreachBatch`` appends one small file set per
-micro-batch per partition — so the Spark-first maintenance surface is:
+The reference learns a previously-untyped column's true affinity and
+rebuilds the table opportunistically
+(``src/stockops/data/database/sql_db.py:69-173``, ``_migrate_table_schema``).
+A parquet store meets the same debt as files whose physical column types
+conflict (the NONE→REAL / int-then-float case that breaks a
+``mergeSchema`` read):
 
-- :func:`compact`      — coalesce small files per Hive partition to a
-  target size, preserving the (ticker, ts) row-group clustering.  One
-  distributed job with dynamic partition overwrite; no driver data loop.
-- :func:`retain`       — drop partitions older than an exchange-local
-  date bound (the XTRIM analog).  Pure metadata: directory deletes, no
-  data job at all.
-- :func:`widen_types`  — detect files whose physical column types
-  conflict (the NONE→REAL / int-then-float case that breaks a
-  ``mergeSchema`` read) and cast-rewrite ONLY those files to the widened
+- :func:`scan_type_conflicts` — footer-only scan (pyarrow, no data IO)
+  naming the columns whose files disagree and the widened type;
+- :func:`widen_types` — cast-rewrite ONLY those files to the widened
   type, in place, distributed over executors.
 
-Scale posture: compaction touches each byte once (read + write) and only
-the partitions asked for; retention touches zero data bytes; widening
-touches only the minority files that disagree with the widened schema —
-at 100 TB none of these ever rewrites the whole store.
+File names are unchanged, so ``ManifestStore.widen_types`` runs this
+under a manifest without touching the log.  Compaction and retention are
+manifest commits (``ManifestStore.compact`` / ``retain_before``).
+
+Scale posture: widening touches only the minority files that disagree
+with the widened schema — at 100 TB it never rewrites the whole store.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
-
-from pyspark.sql import functions as F
-
-from stock_ops_spark import schemas as S
-from stock_ops_spark.sources.layout import PARTITION_COLS, partition_values_predicate
-
-_DEFAULT_TARGET_BYTES = 128 << 20  # one HDFS-ish block per output file
 
 
 def _data_files(path: str) -> list[str]:
@@ -46,164 +34,6 @@ def _data_files(path: str) -> list[str]:
                 out.append(os.path.join(dirpath, f))
     return out
 
-
-def _partition_dirs(root: str, parts: list[str]) -> list[tuple[str, dict[str, int]]]:
-    """[(dir, {col: value})] for every leaf Hive partition directory."""
-    found = []
-
-    def walk(d: str, depth: int, vals: dict[str, int]):
-        if depth == len(parts):
-            found.append((d, dict(vals)))
-            return
-        col = parts[depth]
-        for name in sorted(os.listdir(d)):
-            if name.startswith(f"{col}="):
-                vals[col] = int(name.split("=", 1)[1])
-                walk(os.path.join(d, name), depth + 1, vals)
-                del vals[col]
-
-    if os.path.exists(root):
-        walk(root, 0, {})
-    return found
-
-
-# ---------------------------------------------------------------------------
-# Compaction
-# ---------------------------------------------------------------------------
-
-
-def compact(store, mode: str, target_file_bytes: int = _DEFAULT_TARGET_BYTES) -> dict:
-    """Coalesce littered Hive partitions to ~size/target files each.
-
-    Litter-aware: a partition is selected only when its file count
-    exceeds what its byte size warrants (ceil(bytes/target) — plus slack
-    for one in-flight micro-batch), so steady-state partitions that were
-    already compacted are never re-read.  At 100 TB this is the
-    difference between a bounded nightly job over the day's hot
-    partitions and a full-store rewrite.
-
-    One distributed job over the selected partitions only: read (static
-    partition pruning via the partition-column filter) → repartition on
-    (partition cols, salt) so every output directory is written by a
-    bounded number of tasks → ``sortWithinPartitions(ticker, ts)`` to
-    restore the row-group clustering the reader's min/max pruning relies
-    on → dynamic-partition overwrite, which replaces exactly the
-    partitions that were read.  Returns
-    {"files_before": n, "files_after": m, "partitions_compacted": k}.
-    """
-    path = store.data_path(mode)
-    files = _data_files(path)
-    if not files:
-        return {"files_before": 0, "files_after": 0, "partitions_compacted": 0}
-    parts = PARTITION_COLS[mode]
-    ts_col = S.TS_COL[mode]
-    spark = store.spark
-
-    # pick only littered partitions: more files than their size warrants
-    dirty: list[dict[str, int]] = []
-    dirty_bytes = 0
-    if parts:
-        for d, vals in _partition_dirs(path, parts):
-            pfiles = _data_files(d)
-            size = sum(os.path.getsize(f) for f in pfiles)
-            warranted = -(-size // target_file_bytes)  # ceil, ≥1
-            if len(pfiles) > max(1, warranted):
-                dirty.append(vals)
-                dirty_bytes += size
-        if not dirty:
-            return {
-                "files_before": len(files),
-                "files_after": len(files),
-                "partitions_compacted": 0,
-            }
-    else:
-        dirty_bytes = sum(os.path.getsize(f) for f in files)
-        warranted = -(-dirty_bytes // target_file_bytes)  # ceil, ≥1
-        if len(files) <= max(1, warranted):
-            # steady state: same litter check as the partitioned path —
-            # never a full-store rewrite on an already-compacted dataset
-            return {
-                "files_before": len(files),
-                "files_after": len(files),
-                "partitions_compacted": 0,
-            }
-
-    files_per_part = max(1, round(dirty_bytes / max(1, len(dirty)) / target_file_bytes))
-
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    if parts:
-        df = df.where(
-            partition_values_predicate(parts, [tuple(v[c] for c in parts) for v in dirty])
-        )
-    # Sever lineage from the path we are about to overwrite (same hazard as
-    # ingest_batch: writing to a read path invalidates plan caches mid-job).
-    df = df.localCheckpoint(eager=True)
-
-    salt = F.pmod(F.xxhash64("ticker"), F.lit(files_per_part)).alias("__salt")
-    if parts:
-        repartitioned = df.repartition(*[F.col(c) for c in parts], salt)
-    else:
-        repartitioned = df.repartition(files_per_part, salt)
-    # partition-column prefix (r12, §6): the V1 writer requires task rows
-    # ordered by the dynamic-partition columns and would re-sort (and
-    # de-cluster) a (ticker, ts)-only order — see cluster_for_write
-    clustered = repartitioned.sortWithinPartitions(*parts, "ticker", ts_col)
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer = clustered.write.mode("overwrite").option("compression", "zstd")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return {
-        "files_before": len(files),
-        "files_after": len(_data_files(path)),
-        "partitions_compacted": len(dirty) if parts else 1,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Retention (XTRIM analog)
-# ---------------------------------------------------------------------------
-
-
-def retain(store, mode: str, keep_from: tuple) -> list[str]:
-    """Delete partitions strictly older than ``keep_from`` (exchange-local
-    (year,), (year, month) or (year, month, day) per the mode's grain).
-
-    Metadata-only: compares the Hive partition tuple and removes whole
-    directories — zero data bytes read.  Returns deleted directory paths.
-    Raises for the unpartitioned interday mode (use a filtered rewrite —
-    deleting by row there is a data job by construction).
-    """
-    import shutil
-
-    parts = PARTITION_COLS[mode]
-    if not parts:
-        raise ValueError(f"mode {mode!r} is unpartitioned; retention needs a rewrite")
-    bound = tuple(keep_from)
-    if len(bound) > len(parts):
-        raise ValueError(f"bound {bound} deeper than partition grain {parts}")
-    deleted = []
-    for d, vals in _partition_dirs(store.data_path(mode), parts):
-        tup = tuple(vals[c] for c in parts)[: len(bound)]
-        if tup < bound:
-            shutil.rmtree(d)
-            deleted.append(d)
-    # prune now-empty intermediate dirs (year=Y left empty after its months go)
-    root = store.data_path(mode)
-    for dirpath, dirs, files in sorted(os.walk(root), key=lambda t: -len(t[0])):
-        if dirpath != root and not dirs and not files:
-            os.rmdir(dirpath)
-    return deleted
-
-
-# ---------------------------------------------------------------------------
-# Type-widening migration
-# ---------------------------------------------------------------------------
 
 _WIDEN_ORDER = {
     "null": 0,

@@ -19,7 +19,6 @@ from whether ``tbl`` is set:
 
 - stat rows: ``grouped_stats`` (pyarrow ``group_by``) or ``_stat_rows``
   (Spark ``groupBy().agg()``), both returning the same Arrow columns;
-- catalog stats: the same kernel, or ``operators.stats.batch_stats``;
 - files: ``write_micro``, or ``ingest.cluster_for_write`` and the Spark
   writer.
 
@@ -30,16 +29,10 @@ when the checkpoint's observed count is within the bound, and
 never lands on the driver (guide §5) — it keeps the distributed
 checkpoint/write path, where its cost is real work.
 
-Write-path crash model (matches the Spark committer it replaces):
-
-- ManifestStore batch dirs are INVISIBLE until the manifest rename
-  publishes them — files are written straight into the fresh batch dir;
-  a crash strands unreferenced debris, exactly like v2-committer partials.
-- ParquetStore appends land in the LIVE tree, so each file is written to
-  a dot-hidden temp name (readers skip ``.``/``_`` prefixes) and renamed
-  into place — per-file atomicity identical to a task commit; a partially
-  renamed batch is absorbed by at-least-once + dedup-on-replay, the same
-  contract the v2 committer already relies on.
+Write-path crash model (matches the Spark committer it replaces): batch
+dirs are INVISIBLE until the manifest commit publishes them, so files are
+written straight into the fresh batch dir; a crash strands unreferenced
+debris, exactly like v2-committer partials.
 
 File compatibility: zstd parquet, one file per partition value, rows
 sorted by (partition cols, ticker, ts) — the exact layout
@@ -58,7 +51,7 @@ from typing import TYPE_CHECKING, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stock_ops_spark.operators.stats import batch_stats, fold_stats
+from stock_ops_spark.operators.stats import fold_stats
 from stock_ops_spark.schemas import TS_COL
 from stock_ops_spark.sources.layout import PARTITION_COLS
 
@@ -215,41 +208,24 @@ class Delta(NamedTuple):
             return grouped_stats(self.tbl, keys, ts_col, parts, part_cap)
         return _stat_rows(self.df, keys, ts_col, parts, part_cap)
 
-    def batch_stats(self, mode: str, by_interval: bool):
-        """``operators.stats.batch_stats`` of the delta, as Arrow."""
-        if self.tbl is None:
-            return batch_stats(self.df, mode, by_interval).toArrow()
-        keys = ["ticker", "interval"] if by_interval else ["ticker"]
-        return as_catalog_stats(
-            grouped_stats(self.tbl, keys, TS_COL[mode]), keys, mode
-        )
-
     def write(
-        self,
-        dest: str,
-        mode: str | None = None,
-        live_tree: bool = False,
-        n_parts: int | None = None,
+        self, dest: str, mode: str | None = None, n_parts: int | None = None
     ) -> None:
-        """Write the delta under ``dest``, partitioned and clustered for
-        ``mode`` (None: unpartitioned and unsorted — change-feed files).
-        Driver-side through ``write_micro`` when the rows are here and
-        their domains are covered; otherwise the Spark writer over
-        ``cluster_for_write``, appending when ``live_tree``."""
+        """Write the delta under the fresh directory ``dest``, partitioned
+        and clustered for ``mode`` (None: unpartitioned and unsorted —
+        change-feed files).  Driver-side through ``write_micro`` when the
+        rows are here and their domains are covered; otherwise the Spark
+        writer over ``cluster_for_write``."""
         from stock_ops_spark.sources.ingest import cluster_for_write
 
         parts = PARTITION_COLS[mode] if mode else []
         order = ["ticker", TS_COL[mode]] if mode else []
-        if self.tbl is not None and write_micro(
-            self.tbl, parts, order, dest, live_tree=live_tree
-        ):
+        if self.tbl is not None and write_micro(self.tbl, parts, order, dest):
             return
         df = self.df
         if mode:
             df = cluster_for_write(df, mode, n_rows=self.n, n_parts=n_parts)
         writer = df.write.option("compression", "zstd")
-        if live_tree:
-            writer = writer.mode("append")
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(dest)
@@ -283,13 +259,11 @@ def write_micro(
     parts: list[str],
     order_cols: list[str],
     dest: str,
-    live_tree: bool = False,
 ) -> bool:
     """Write a collected delta as partitioned zstd parquet, driver-side.
     Returns False (writing NOTHING) when any value domain falls outside
     what this path encodes identically to Spark's writer — the caller
-    then uses the Spark write.  ``live_tree`` selects the dot-hidden
-    temp-name + rename protocol for appends into a reader-visible tree."""
+    then uses the Spark write."""
     import pyarrow.parquet as pq
 
     if tbl.num_rows == 0 or not _writable_types(tbl, parts):
@@ -311,13 +285,7 @@ def write_micro(
     def _write_one(sub, d: str) -> None:
         os.makedirs(d, exist_ok=True)
         name = f"part-00000-{uuid.uuid4().hex}.zstd.parquet"
-        final = os.path.join(d, name)
-        if live_tree:
-            tmp = os.path.join(d, f".{name}.tmp")
-            pq.write_table(sub, tmp, compression="zstd")
-            os.rename(tmp, final)
-        else:
-            pq.write_table(sub, final, compression="zstd")
+        pq.write_table(sub, os.path.join(d, name), compression="zstd")
 
     if not parts:
         _write_one(tbl, dest)

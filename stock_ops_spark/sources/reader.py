@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stock_ops_spark.schemas import TS_COL
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.layout import PARTITION_COLS
 
 
@@ -79,16 +79,15 @@ def _partition_range_pred(parts: list[str], start: _dt.datetime, end: _dt.dateti
 
 
 class ReadProcess:
-    """Mirror of the reference ReadProcess over either store.
+    """Mirror of the reference ReadProcess over the store.
 
-    Duck-typed over ``ParquetStore`` AND ``ManifestStore``: both expose
-    ``read_all(mode)`` and ``tz``.  When the store offers commit-level
-    data skipping (``read_where`` — the manifest store), the range read
-    uses it so batch dirs provably outside the (ticker, ts) bounds are
-    never listed at all; the full predicate is still applied below, so
-    the prune is an optimization, never a semantics change."""
+    The range read goes through the store's commit-level data skipping
+    (``ManifestStore.read_where``), so batch dirs provably outside the
+    (ticker, ts) bounds are never listed at all; the full predicate is
+    still applied below, so the prune is an optimization, never a
+    semantics change."""
 
-    def __init__(self, store: ParquetStore | object):
+    def __init__(self, store: ManifestStore):
         self.store = store
         self.tz = store.tz
 
@@ -116,11 +115,7 @@ class ReadProcess:
             lo_v, hi_v = lo_s * mult, hi_s * mult
             lo, hi = F.lit(lo_v), F.lit(hi_v)
 
-        read_where = getattr(self.store, "read_where", None)
-        if read_where is not None:
-            df = read_where(mode, ticker=ticker, ts_min=lo_v, ts_max=hi_v)
-        else:
-            df = self.store.read_all(mode)
+        df = self.store.read_where(mode, ticker=ticker, ts_min=lo_v, ts_max=hi_v)
         if df is None:
             raise EmptyReadError(f"no data ingested for mode={mode}")
 

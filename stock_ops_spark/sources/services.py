@@ -4,7 +4,7 @@ The reference's historical task (``eodhd_historical_service.py:160-210``)
 fetches REST bars, transforms row-at-a-time, and emits each row through the
 Redis buffer to the writer.  Here the whole tail collapses: fetch →
 ``spark.createDataFrame`` → declarative transform (sources/transform.py) →
-``ParquetStore.ingest_batch`` (dedup/version/stats in one shot).
+``ManifestStore.ingest_batch`` (dedup/version/stats in one commit).
 
 The streaming task drains the provider's frame iterator into the store the
 same way — or, for a live deployment, frames land in files/Kafka and
@@ -13,14 +13,17 @@ same way — or, for a live deployment, frames land in files/Kafka and
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import SparkSession
 
 from stock_ops_spark.localrel import local_relation
 from stock_ops_spark.schemas import INTERDAY_INTERVALS
 from stock_ops_spark.sources import resilience as R
 from stock_ops_spark.sources import transform as X
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.providers import get as get_provider
+from stock_ops_spark.sources.reader import _local_wall_to_epoch
 
 _INTERDAY_RAW = (
     "date string, open double, high double, low double, close double, "
@@ -35,7 +38,7 @@ _QUOTE_RAW = "s string, t long, ap double, bp double, `as` long, bs long"
 
 def run_historical_task(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     ticker: str,
     exchange: str,
@@ -81,7 +84,7 @@ def run_historical_task(
 
 def run_stream_task(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     tickers: list[str],
     exchange: str,
@@ -128,9 +131,23 @@ def run_stream_task(
     return store.ingest_batch(normalized, "streaming")
 
 
+def _keep_from_cutoff(mode: str, keep_from, tz: str):
+    """The ``retain_before`` cutoff for a ``(year[, month[, day]])``
+    bound: exchange-local midnight of its first day, in the mode's time
+    column — epoch seconds (intraday), epoch ms (streaming) or an ISO
+    date (interday)."""
+    if not 1 <= len(keep_from) <= 3:
+        raise ValueError(f"keep_from {keep_from!r} is not (year[, month[, day]])")
+    day = _dt.date(*(tuple(keep_from) + (1, 1))[:3])
+    if mode == "historical_interday":
+        return day.isoformat()
+    s = _local_wall_to_epoch(f"{day} 00:00", tz)
+    return s * 1000 if mode == "streaming" else s
+
+
 def run_command(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     command_type: str,
     command: dict,
     provider: str = "EODHD-mock",
@@ -144,7 +161,17 @@ def run_command(
 
     The reference's exactly-one-service invariant becomes an explicit
     command_type check; unknown types raise (the Prefect flow's
-    ValueError path)."""
+    ValueError path).
+
+    ``maintain_store`` runs one store maintenance op as a manifest
+    commit (``widen_types``: a file-name-preserving rewrite) and returns
+    a job size instead of rows, so the scheduler's run log stays uniform:
+
+    - ``compact``: live batch dirs folded away (dirs before - 1, or 0);
+    - ``retain`` (``keep_from`` = exchange-local ``(year[, month[,
+      day]])``, the first day kept): batch dirs dropped whole or
+      rewritten without their expired rows;
+    - ``widen_types``: files cast-rewritten."""
     if command_type == "fetch_historical":
         return run_historical_task(
             spark,
@@ -200,27 +227,18 @@ def run_command(
         # Redis buffer inline at write time, writer.py:35-37,293-297 —
         # a parquet store runs maintenance as SCHEDULED jobs, which is
         # exactly what the scheduling module dispatches here).  Command:
-        # {op: compact|retain|widen_types, mode: <store mode>, ...args}.
-        # Returns a job-size integer so the scheduler's run log stays
-        # uniform (files coalesced away / partitions dropped / files
-        # rewritten).
-        from stock_ops_spark.sources import maintenance as M
-
+        # {op: compact|retain|widen_types, mode: <store mode>,
+        # keep_from?} — the counts returned are in the docstring.
         op = command["op"]
         mode = command["mode"]
         if op == "compact":
-            res = M.compact(
-                store,
-                mode,
-                target_file_bytes=int(
-                    command.get("target_file_bytes", 128 << 20)
-                ),
-            )
-            return res["files_before"] - res["files_after"]
+            return max(0, store.compact(mode)["rewritten"] - 1)
         if op == "retain":
-            return len(M.retain(store, mode, tuple(command["keep_from"])))
+            cutoff = _keep_from_cutoff(mode, command["keep_from"], store.tz)
+            res = store.retain_before(mode, cutoff)
+            return res["deleted_dirs"] + res["rewritten_dirs"]
         if op == "widen_types":
-            return M.widen_types(store, mode).get("files_rewritten", 0)
+            return store.widen_types(mode)["files_rewritten"]
         raise ValueError(f"Unsupported maintenance op: {op!r}")
     if command_type == "start_stream":
         tickers = command["tickers"]
@@ -241,7 +259,7 @@ def run_command(
 
 def run_historical_backfill(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     tickers: list[str],
     exchange: str,

@@ -205,7 +205,7 @@ class StreamingNearDupIndex:
         """Bound the index's file count and (optionally) its age.
 
         ``process_batch`` appends one file set per micro-batch forever —
-        the same litter debt ``sources/maintenance.compact`` pays down for
+        the same litter debt ``ManifestStore.compact`` pays down for
         the table store.  Here the index is two flat parquet datasets, so
         maintenance is one bounded rewrite each:
 

@@ -7,7 +7,7 @@ the same effectively-once outcome with zero custom recovery code
 (XAUTOCLAIM, pending-claim, XTRIM all disappear, ST1/ST5/ST7).
 
 - ``stream_ingest``: any streaming DataFrame of normalized records →
-  ParquetStore, one dedup/version/append per micro-batch.  The trigger
+  ManifestStore, one dedup/version/commit per micro-batch.  The trigger
   interval is the micro-batch accumulation knob (reference BUFFER_BLOCK_MS,
   A8); ``maxFilesPerTrigger``/``maxOffsetsPerTrigger`` are the batch-size
   bound (BUFFER_BATCH).
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from stock_ops_spark.schemas import STREAMING
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 
 
 class GroupCommitCoordinator:
@@ -78,7 +78,7 @@ class GroupCommitCoordinator:
 
     def __init__(
         self,
-        store,
+        store: ManifestStore,
         mode: str = "streaming",
         linger_s: float | str = "auto",
         max_group: int = 64,
@@ -140,14 +140,9 @@ class GroupCommitCoordinator:
                     take, self._queue = self._queue[:g], self._queue[g:]
                 if take:
                     try:
-                        ing = getattr(self.store, "ingest_group", None)
-                        if ing is not None:
-                            ns = ing([t["df"] for t in take], self.mode)
-                        else:  # plain ParquetStore: no group path
-                            ns = [
-                                self.store.ingest_batch(t["df"], self.mode)
-                                for t in take
-                            ]
+                        ns = self.store.ingest_group(
+                            [t["df"] for t in take], self.mode
+                        )
                         self.groups_committed.append(len(take))
                         for t, n in zip(take, ns):
                             t["n"] = n
@@ -169,7 +164,7 @@ class GroupCommitCoordinator:
 
 def stream_ingest(
     stream: DataFrame,
-    store: ParquetStore,
+    store: ManifestStore,
     mode: str = "streaming",
     checkpoint: str | None = None,
     trigger_seconds: int = 10,

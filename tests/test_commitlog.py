@@ -1,9 +1,10 @@
-"""ManifestStore: the commit-log upgrade of ParquetStore.
+"""ManifestStore: the store's commit log.
 
-Contract under test: same ingest semantics (dedup/version/stats, via
-the shared helpers), PLUS the properties only a transaction log can
-give — data+stats atomicity under SIGKILL, optimistic concurrency,
-snapshot time travel, atomic compaction, orphan GC.
+Contract under test: the ingest semantics (dedup/version/stats, via the
+shared helpers), PLUS the properties only a transaction log can give —
+data+stats atomicity under SIGKILL, optimistic concurrency, snapshot
+time travel, atomic compaction, orphan GC, adoption of a plain Hive
+parquet tree.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from stock_ops_spark.sources.commitlog import (
     ManifestLog,
     ManifestStore,
 )
-from stock_ops_spark.sources.ingest import ParquetStore
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -73,30 +73,7 @@ def test_state_folds_adds_and_removes(tmp_path):
     assert log.state(at_version=2)["stats"] == {"table": "s2"}
 
 
-# -- store semantics parity ----------------------------------------------
-
-
-def test_ingest_matches_parquet_store(spark, tmp_path, mstore):
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    for rows in (ROWS_B1, ROWS_B2, ROWS_B2):  # third is a full replay
-        nm = mstore.ingest_batch(_df(spark, rows), MODE)
-        np_ = pstore.ingest_batch(_df(spark, rows), MODE)
-        assert nm == np_
-    m = mstore.read_all(MODE)
-    p = pstore.read_all(MODE)
-    cols = sorted(p.columns)
-    key = lambda r: tuple(str(r[c]) for c in cols)  # noqa: E731
-    assert sorted(map(key, m.select(*cols).collect())) == sorted(
-        map(key, p.select(*cols).collect())
-    )
-    # stats parity too — and the manifest store needed no rebuild
-    ms = {r["ticker"]: r for r in mstore.table_stats(MODE).collect()}
-    ps = {r["ticker"]: r for r in pstore.table_stats(MODE).collect()}
-    assert set(ms) == set(ps)
-    for t in ms:
-        assert ms[t]["row_count"] == ps[t]["row_count"]
-        assert ms[t]["min_ts"] == ps[t]["min_ts"]
-        assert ms[t]["max_ts"] == ps[t]["max_ts"]
+# -- time travel ----------------------------------------------------------
 
 
 def test_time_travel_snapshots(spark, mstore):
@@ -204,8 +181,8 @@ for start in range(0, 40, 5):
 def test_sigkill_mid_ingest_keeps_data_and_stats_atomic(spark, tmp_path):
     """Kill -9 a child between commits and mid-commit: every surviving
     version must have data and stats CONSISTENT with each other (the
-    window ParquetStore documents as unclosable without a log), and a
-    replay converges with no rebuild_stats call."""
+    window a plain parquet append cannot close without a log), and a
+    replay converges with no stats-rebuild step."""
     root = str(tmp_path / "mstore")
     script = tmp_path / "child.py"
     script.write_text(_CHILD.format(repo=REPO, root=root))
@@ -634,23 +611,35 @@ def test_read_where_unknown_meta_is_read_not_skipped(spark, mstore):
     assert df.count() == 0  # residual filter still correct
 
 
-# -- ParquetStore -> ManifestStore migration ------------------------------
+# -- plain Hive-parquet tree -> ManifestStore migration ---------------------
 
 
-def test_convert_from_parquet_store(spark, tmp_path, mstore):
+def _hive_tree(spark, tmp_path, *batches):
+    """A plain ``partitionBy`` parquet tree holding the store rows the
+    batches ingest to (versions and partition columns included), plus
+    the store that computed them — the shape of a pre-manifest history."""
+    from stock_ops_spark.sources.layout import PARTITION_COLS
+
+    src = ManifestStore(spark, str(tmp_path / "src"))
+    for rows in batches:
+        src.ingest_batch(_df(spark, rows), MODE)
+    path = str(tmp_path / "hive")
+    src.read_all(MODE).write.partitionBy(*PARTITION_COLS[MODE]).parquet(path)
+    return path, src
+
+
+def test_convert_from_hive_parquet_tree(spark, tmp_path, mstore):
     """Adopting a plain-parquet history: snapshot equality, stats
     self-consistency, and dedup continuity for subsequent ingests."""
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    pstore.ingest_batch(_df(spark, ROWS_B1), MODE)
-    pstore.ingest_batch(_df(spark, ROWS_B2), MODE)
-    res = mstore.convert_from(pstore, MODE)
+    path, src = _hive_tree(spark, tmp_path, ROWS_B1, ROWS_B2)
+    res = mstore.convert_from(path, MODE)
     assert res["version"] == 1 and res["adopted_rows"] == 5
     canon = lambda df: sorted(  # noqa: E731
         map(str, (sorted(r.asDict().items()) for r in df.collect()))
     )
-    assert canon(mstore.read_all(MODE)) == canon(pstore.read_all(MODE))
+    assert canon(mstore.read_all(MODE)) == canon(src.read_all(MODE))
     # stats recomputed from adopted rows match the source's running stats
-    assert canon(mstore.table_stats(MODE)) == canon(pstore.table_stats(MODE))
+    assert canon(mstore.table_stats(MODE)) == canon(src.table_stats(MODE))
     # dedup continuity: a full replay of either source batch is a no-op
     assert mstore.ingest_batch(_df(spark, ROWS_B2), MODE) == 0
     # fresh rows still land (version 2)
@@ -658,7 +647,7 @@ def test_convert_from_parquet_store(spark, tmp_path, mstore):
     assert mstore.version(MODE) == 2
     # a second adoption must refuse: version 1 is already taken
     with pytest.raises(ValueError, match="empty target"):
-        mstore.convert_from(pstore, MODE)
+        mstore.convert_from(path, MODE)
     # adopted dir carries data-skipping bounds
     st = mstore.log(MODE).state()
     assert any("timestamp_UTC_s" in m for m in st["meta"].values())
@@ -827,12 +816,10 @@ def test_read_changes_includes_convert_commit(spark, tmp_path, mstore):
     """A convert_from adoption IS version 1's change set: a fresh CDC
     consumer (cursor 0) must see every adopted row, with the change type
     derived from the adopted version column exactly like ingest."""
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    pstore.ingest_batch(_df(spark, ROWS_B1), MODE)
     # conflict re-send: same key, changed payload -> version 2 row
     bump = [("SPY", 1751463000, 617.24, 618.72, 616.61, 999.0, 11824245, "1h")]
-    pstore.ingest_batch(_df(spark, bump), MODE)
-    mstore.convert_from(pstore, MODE)
+    path, _ = _hive_tree(spark, tmp_path, ROWS_B1, bump)
+    mstore.convert_from(path, MODE)
     feed = mstore.read_changes(MODE, from_version=0)
     assert feed is not None
     counts = {

@@ -50,11 +50,11 @@ _CHILD = r"""
 import sys, json
 sys.path.insert(0, {repo!r})
 from stock_ops_spark.session import get_spark
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.streaming.ingest import file_trade_source, stream_ingest
 
 spark = get_spark("crash-child", master="local[2]", shuffle_partitions=2)
-store = ParquetStore(spark, {store!r})
+store = ManifestStore(spark, {store!r})
 q = stream_ingest(
     file_trade_source(spark, {src!r}, max_files_per_trigger=1),
     store,
@@ -90,7 +90,7 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
     )
     # Wait for PARTIAL progress (some output, not all bursts), then KILL
     # -9: no shutdown hook, no checkpoint finalization, no JVM exit path.
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     deadline = time.time() + 240
     partial_seen = False
@@ -98,7 +98,7 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
         while time.time() < deadline:
             if proc.poll() is not None:
                 break  # child died early — restart below still must converge
-            probe = ParquetStore(spark, store_dir).read_all("streaming")
+            probe = ManifestStore(spark, store_dir).read_all("streaming")
             n = probe.count() if probe is not None else 0
             if n > 0:
                 partial_seen = True
@@ -110,7 +110,7 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
         proc.wait(timeout=30)
     assert partial_seen, "child produced no output before the kill window"
 
-    killed_at = ParquetStore(spark, store_dir).read_all("streaming").count()
+    killed_at = ManifestStore(spark, store_dir).read_all("streaming").count()
     total = N_BURSTS * ROWS_PER_BURST
     assert killed_at <= total  # sanity: the kill really interrupted a run
     # (usually killed_at < total; equality just means the child was fast —
@@ -119,7 +119,7 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
     # Restart from the SAME checkpoint in this session, drain everything.
     from stock_ops_spark.streaming.ingest import file_trade_source, stream_ingest
 
-    store = ParquetStore(spark, store_dir)
+    store = ManifestStore(spark, store_dir)
     q = stream_ingest(
         file_trade_source(spark, str(src), max_files_per_trigger=1),
         store,
@@ -155,13 +155,9 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
     q2.awaitTermination(240)
     assert store.read_all("streaming").count() == total
 
-    # The stats catalog must also survive the kill: the swap-based
-    # StatsTable never leaves a torn directory (read() returns a frame
-    # or None, never raises), and rebuild_stats converges the catalog
-    # to the store exactly even when the kill landed between the data
-    # append and the stats merge.
-    st = store.table_stats("streaming")  # must not raise on debris
-    store.rebuild_stats("streaming")
+    # The stats catalog must also survive the kill with no repair step:
+    # each batch's stats publish in the same manifest commit as its
+    # data, so the catalog equals the store however the kill landed.
     st = store.table_stats("streaming")
     assert st is not None
     by_ticker = {r["ticker"]: r["row_count"] for r in st.collect()}
@@ -173,19 +169,19 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
 
 
 def test_stats_swap_recovery_states(spark, tmp_path):
-    """Unit twin of the SIGKILL test: drive StatsTable through each
-    crash state the two-rename swap can leave behind and assert read()
-    recovers the last whole generation (never raises, never loses a
-    committed merge)."""
+    """Drive StatsTable (the swap-installed table MatView folds into)
+    through each crash state the two-rename swap can leave behind and
+    assert read() recovers the last whole generation (never raises,
+    never loses a committed merge)."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    from stock_ops_spark.operators.stats import StatsTable
+    from stock_ops_spark.operators.stats import StatsTable, merge_stats
 
     path = str(tmp_path / "stats")
-    t = StatsTable(spark, path, ["ticker"])
+    t = StatsTable(spark, path, ["ticker"], merge_stats)
 
     def delta(ticker, n, lo, hi):
         return spark.createDataFrame(
@@ -216,12 +212,3 @@ def test_stats_swap_recovery_states(spark, tmp_path):
     open(path + "/part-torn.parquet", "wb").close()
     assert t.read().collect()[0]["row_count"] == 10  # aside restored
     assert not os.path.exists(path + ".old")
-
-    # rebuild converges the catalog to an arbitrary store frame
-    store_df = spark.createDataFrame(
-        [("SPY", 1_700000000_000, 1.0), ("VOO", 1_700000060_000, 2.0)],
-        "ticker string, timestamp_UTC_ms long, price double",
-    )
-    t.rebuild(store_df, "streaming", by_interval=False)
-    got = {r["ticker"]: r["row_count"] for r in t.read().collect()}
-    assert got == {"SPY": 1, "VOO": 1}

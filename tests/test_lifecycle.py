@@ -13,13 +13,13 @@ from pyspark.sql import functions as F
 from stock_ops_spark import schemas as S
 from stock_ops_spark.operators.asof import asof_join_nearest
 from stock_ops_spark.operators.ohlc import session_ohlc
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.reader import ReadProcess
 from stock_ops_spark.sources.transform import interday, trades
 
 
 def test_full_lifecycle_trades_to_session_ohlc(spark, tmp_path):
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
 
     # --- ingest a day of trades (2025-08-18, NY session) via the S2 path
     # 13:30 UTC = 09:30 EDT session open; 20:00 UTC = 16:00 close

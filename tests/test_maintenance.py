@@ -3,6 +3,8 @@
 Parity targets: reference XTRIM retention (writer.py:35-37,293-297) and
 opportunistic schema migration (sql_db.py:69-173); compaction is the
 parquet-native need their SQLite store never has (micro-batch file litter).
+Every op is a ManifestStore commit; retention and widening over the
+manifest layout are pinned in tests/test_store_unification.py too.
 """
 
 from __future__ import annotations
@@ -12,12 +14,9 @@ import os
 import pytest
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.sources.ingest import ParquetStore
-from stock_ops_spark.sources.maintenance import (
-    _data_files,
-    _widened,
-    scan_type_conflicts,
-)
+from stock_ops_spark.sources import services
+from stock_ops_spark.sources.commitlog import ManifestStore
+from stock_ops_spark.sources.maintenance import _data_files, _widened
 
 # three months across a year boundary, exchange tz America/New_York
 # 1734705000 = 2024-12-20 09:30 EST, 1736951400 = 2025-01-15 09:30 EST,
@@ -32,7 +31,18 @@ ROWS_BY_MONTH = [
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return ParquetStore(spark, str(tmp_path / "store"))
+    # no auto-compaction: each ingest stays its own batch dir (the litter)
+    return ManifestStore(spark, str(tmp_path / "store"), auto_compact_every=0)
+
+
+def _live_files(store, mode: str) -> list[str]:
+    """Data files of the batch dirs the current manifest references."""
+    root = store.data_path(mode)
+    return [
+        f
+        for d in store.log(mode).state()["dirs"]
+        for f in _data_files(os.path.join(root, d))
+    ]
 
 
 def _ingest_many_small_batches(spark, store, n_batches=4):
@@ -45,17 +55,16 @@ def _ingest_many_small_batches(spark, store, n_batches=4):
 
 def test_compact_reduces_files_preserves_rows_and_stats(spark, store):
     _ingest_many_small_batches(spark, store, n_batches=4)
-    path = store.data_path("historical_intraday")
-    before_files = _data_files(path)
-    assert len(before_files) >= 4  # one file set per micro-batch append
+    before_files = _live_files(store, "historical_intraday")
+    assert len(before_files) >= 4  # one batch dir per micro-batch commit
 
     before_rows = sorted(map(tuple, store.read_all("historical_intraday").collect()))
     before_stats = sorted(map(tuple, store.table_stats("historical_intraday").collect()))
 
     res = store.compact("historical_intraday")
-    assert res["files_after"] < res["files_before"]
-    # single partition (2025-01) → exactly one file at the default target
-    assert res["files_after"] == 1
+    assert res == {"rewritten": 4, "dirs_before": 4}
+    # single partition (2025-01) → exactly one live file
+    assert len(_live_files(store, "historical_intraday")) == 1
 
     after_rows = sorted(map(tuple, store.read_all("historical_intraday").collect()))
     assert after_rows == before_rows
@@ -68,81 +77,62 @@ def test_compact_reduces_files_preserves_rows_and_stats(spark, store):
     )
     assert store.ingest_batch(df, "historical_intraday") == 0  # exact dup
 
+    # steady state: one live dir, nothing to rewrite
+    assert store.compact("historical_intraday")["rewritten"] == 0
+
 
 def test_compact_preserves_ticker_ts_clustering(spark, store):
-    df = spark.createDataFrame(ROWS_BY_MONTH, schema=S.HISTORICAL_INTRADAY)
-    store.ingest_batch(df, "historical_intraday")
+    for row in ROWS_BY_MONTH:
+        df = spark.createDataFrame([row], schema=S.HISTORICAL_INTRADAY)
+        store.ingest_batch(df, "historical_intraday")
     store.compact("historical_intraday")
 
     import pyarrow.parquet as pq
 
-    for f in _data_files(store.data_path("historical_intraday")):
+    files = _live_files(store, "historical_intraday")
+    assert len(files) == 3  # one file per month partition
+    for f in files:
         t = pq.read_table(f, columns=["ticker", "timestamp_UTC_s"]).to_pandas()
         key = list(zip(t["ticker"], t["timestamp_UTC_s"]))
         assert key == sorted(key)  # rows clustered for min/max pruning
 
 
 def test_retain_drops_old_partitions_metadata_only(spark, store):
-    df = spark.createDataFrame(ROWS_BY_MONTH, schema=S.HISTORICAL_INTRADAY)
+    # one commit per month; keep_from is exchange-local, so the cutoff is
+    # 2025-01-01 00:00 New York — a UTC-midnight cutoff would keep the
+    # 2024-12-31 23:30 EST row (04:30 UTC on Jan 1)
+    last_2024 = 1735705800  # 2024-12-31 23:30 EST
+    for ts in (1734705000, last_2024):
+        df = spark.createDataFrame(
+            [("SPY", ts, 600.0, 601.0, 599.0, 600.5, 1000, "1h")],
+            schema=S.HISTORICAL_INTRADAY,
+        )
+        store.ingest_batch(df, "historical_intraday")
+    df = spark.createDataFrame(ROWS_BY_MONTH[1:], schema=S.HISTORICAL_INTRADAY)
     store.ingest_batch(df, "historical_intraday")
-    root = store.data_path("historical_intraday")
-    assert os.path.exists(os.path.join(root, "year=2024", "month=12"))
+    log = store.log("historical_intraday")
+    assert len(log.state()["dirs"]) == 3
 
-    deleted = store.retain("historical_intraday", (2025, 1))
-    assert len(deleted) == 1 and "year=2024" in deleted[0]
-    assert not os.path.exists(os.path.join(root, "year=2024"))  # empty parent pruned
+    n = services.run_command(
+        spark, store, "maintain_store",
+        {"op": "retain", "mode": "historical_intraday", "keep_from": [2025, 1]},
+    )
+    assert n == 2  # both 2024 batch dirs dropped whole
+    retain = log.commits()[-1]
+    assert retain["op"] == "retain" and retain["adds"] == []  # no rewrite
+    assert len(retain["removes"]) == 2
 
     left = store.read_all("historical_intraday")
     assert left.count() == 3
     assert {r.year for r in left.select("year").distinct().collect()} == {2025}
 
-    # keep_from deeper than grain raises; unpartitioned mode raises
+    # keep_from deeper than (year, month, day) raises
     with pytest.raises(ValueError):
-        store.retain("historical_intraday", (2025, 1, 1))
-    with pytest.raises(ValueError):
-        store.retain("historical_interday", (2025,))
-
-
-def test_widen_types_fixes_conflicting_files(spark, store):
-    # batch 1 carries an extra int column; batch 2 the same column as double
-    # (the reference's NONE→REAL affinity-learned-later case) — the merged
-    # read fails until the int files are cast-rewritten
-    from pyspark.sql import types as T
-
-    def plus_score(t: str) -> T.StructType:  # .add() mutates; build fresh
-        return T.StructType(
-            list(S.HISTORICAL_INTRADAY.fields) + [T.StructField("score", t, True)]
+        services.run_command(
+            spark, store, "maintain_store",
+            {"op": "retain", "mode": "historical_intraday",
+             "keep_from": [2025, 1, 1, 0]},
         )
-
-    b1 = spark.createDataFrame(
-        [("SPY", 1736951400, 1.0, 2.0, 0.5, 1.5, 10, "1h", 7)],
-        schema=plus_score(T.LongType()),
-    )
-    store.ingest_batch(b1, "historical_intraday")
-    b2 = spark.createDataFrame(
-        [("SPY", 1736955000, 1.0, 2.0, 0.5, 1.5, 10, "1h", 7.5)],
-        schema=plus_score(T.DoubleType()),
-    )
-    store.ingest_batch(b2, "historical_intraday")
-
-    conflicts = scan_type_conflicts(store, "historical_intraday")
-    assert conflicts["score"]["widened"] == "double"
-    with pytest.raises(Exception):  # conflicting physical types break the read
-        store.read_all("historical_intraday").collect()
-
-    res = store.widen_types("historical_intraday")
-    assert res["columns"] == {"score": "double"}
-    assert res["files_rewritten"] >= 1
-    assert scan_type_conflicts(store, "historical_intraday") == {}
-
-    rows = {
-        (r.timestamp_UTC_s, r.score)
-        for r in store.read_all("historical_intraday").collect()
-    }
-    assert rows == {(1736951400, 7.0), (1736955000, 7.5)}
-
-    # idempotent: second run touches nothing
-    assert store.widen_types("historical_intraday")["files_rewritten"] == 0
 
 
 def test_widened_rules():
@@ -154,34 +144,9 @@ def test_widened_rules():
         _widened({"string", "int64"})
 
 
-def test_compact_touches_only_littered_partitions(spark, store):
-    # litter 2025-01 with four micro-batches; 2024-12 gets one clean file
-    _ingest_many_small_batches(spark, store, n_batches=4)
-    df = spark.createDataFrame(
-        [("SPY", 1734705000, 600.0, 601.0, 599.0, 600.5, 1000, "1h")],
-        schema=S.HISTORICAL_INTRADAY,
-    )
-    store.ingest_batch(df, "historical_intraday")
-    root = store.data_path("historical_intraday")
-    clean_dir = os.path.join(root, "year=2024", "month=12")
-    clean_before = {f: os.stat(f).st_ino for f in _data_files(clean_dir)}
-
-    res = store.compact("historical_intraday")
-    assert res["partitions_compacted"] == 1  # only the littered 2025-01
-    # the clean partition's files were not rewritten (same inodes)
-    assert {f: os.stat(f).st_ino for f in _data_files(clean_dir)} == clean_before
-    assert len(_data_files(os.path.join(root, "year=2025", "month=1"))) == 1
-    assert store.read_all("historical_intraday").count() == 5
-
-    # steady state: second run selects nothing and reads nothing
-    res2 = store.compact("historical_intraday")
-    assert res2["partitions_compacted"] == 0
-    assert res2["files_after"] == res2["files_before"]
-
-
 def test_compact_unpartitioned_mode(spark, store):
-    # interday mode is unpartitioned: compaction coalesces the whole
-    # dataset's litter via the salt-only path
+    # interday mode is unpartitioned: compaction folds the whole
+    # dataset's batch dirs into one file
     import datetime as _dt
 
     rows = [
@@ -191,13 +156,12 @@ def test_compact_unpartitioned_mode(spark, store):
     for r in rows:
         df = spark.createDataFrame([r], schema=S.HISTORICAL_INTERDAY)
         assert store.ingest_batch(df, "historical_interday") == 1
-    path = store.data_path("historical_interday")
-    assert len(_data_files(path)) >= 4
+    assert len(_live_files(store, "historical_interday")) == 4
 
     before = sorted(map(tuple, store.read_all("historical_interday").collect()))
     res = store.compact("historical_interday")
-    assert res["files_after"] < res["files_before"]
-    assert res["files_after"] == 1
+    assert res["rewritten"] == 4
+    assert len(_live_files(store, "historical_interday")) == 1
     after = sorted(map(tuple, store.read_all("historical_interday").collect()))
     assert after == before
 
@@ -228,7 +192,7 @@ def test_compact_preserves_evolved_schema_reads(spark, store):
         )
 
     before = snapshot()
-    res = store.compact("historical_intraday")
-    assert res["files_after"] == 1
+    store.compact("historical_intraday")
+    assert len(_live_files(store, "historical_intraday")) == 1
     after = snapshot()
     assert after == before == [(1736951400, None), (1736955000, 1.25)]

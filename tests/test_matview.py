@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.plans.matview import MatView
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 
 MEASURES = {
     "n": ("count", None),
@@ -74,7 +74,7 @@ def test_observer_sees_post_dedup_delta_only(spark, tmp_path):
     replaying the same batch (checkpoint-recovery shape) must NOT
     double-count, because the dedup empties the second delta."""
     mv = _mv(spark, tmp_path)
-    store = ParquetStore(
+    store = ManifestStore(
         spark, str(tmp_path / "store"), observers=[mv.observer()]
     )
     batch = spark.createDataFrame(_rows(1), schema=S.HISTORICAL_INTRADAY)
@@ -90,7 +90,7 @@ def test_view_matches_store_after_mixed_ingest(spark, tmp_path):
     """End-to-end: after several batches with partial overlap, the view
     equals a full recompute over what the STORE holds."""
     mv = _mv(spark, tmp_path)
-    store = ParquetStore(
+    store = ManifestStore(
         spark, str(tmp_path / "store"), observers=[mv.observer()]
     )
     for s in range(3):
@@ -136,10 +136,8 @@ def test_swap_debris_recovery(spark, tmp_path):
 
 
 def test_manifest_store_observer_fires_after_commit(spark, tmp_path):
-    """ManifestStore parity: observers see each committed delta exactly
-    once, and a replayed batch (empty delta) folds nothing."""
-    from stock_ops_spark.sources.commitlog import ManifestStore
-
+    """Observers see each committed delta exactly once, and a replayed
+    batch (empty delta) folds nothing."""
     mv = _mv(spark, tmp_path)
     store = ManifestStore(
         spark, str(tmp_path / "mstore"), observers=[mv.observer()]
@@ -193,7 +191,7 @@ def test_streaming_ingest_maintains_view(spark, tmp_path):
         ["ticker"],
         {"n": ("count", None), "vol": ("sum", "CAST(volume AS BIGINT)")},
     )
-    store = ParquetStore(
+    store = ManifestStore(
         spark, str(tmp_path / "store"), observers=[mv.observer()]
     )
     q = stream_ingest(
@@ -223,7 +221,6 @@ def test_streaming_ingest_maintains_view(spark, tmp_path):
 
 # -- CDC-driven maintenance (ManifestStore.read_changes) -------------------
 
-from stock_ops_spark.sources.commitlog import ManifestStore  # noqa: E402
 
 MODE = "historical_intraday"
 CDC_ROWS_A = [
@@ -426,12 +423,14 @@ def test_fresh_view_syncs_from_converted_store(spark, tmp_path):
     """matview docstring promise: a fresh empty view can 'just sync'
     from cursor 0 — which requires convert_from's adopted snapshot to
     appear in the change feed (it is version 1's change set)."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.layout import PARTITION_COLS
 
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    pstore.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
+    src = ManifestStore(spark, str(tmp_path / "src"))
+    src.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
+    hive = str(tmp_path / "hive")
+    src.read_all(MODE).write.partitionBy(*PARTITION_COLS[MODE]).parquet(hive)
     store = ManifestStore(spark, str(tmp_path / "cstore"))
-    store.convert_from(pstore, MODE)
+    store.convert_from(hive, MODE)
     mv = MatView(spark, str(tmp_path / "cmv"), ["ticker"], SUB_MEASURES)
     res = mv.sync(store, MODE)
     assert (res["from"], res["to"]) == (0, 1)
@@ -659,7 +658,7 @@ def test_join_view_stream_sync(spark, tmp_path):
 def test_join_view_observer_path(spark, tmp_path):
     """join_dim works on the OBSERVER (refresh) path too: every
     post-dedup delta is enriched before the partial fold, so a
-    ParquetStore-maintained join view equals the fact⋈dim recompute."""
+    store-observer-maintained join view equals the fact⋈dim recompute."""
     mv = MatView(
         spark,
         str(tmp_path / "jmv_obs"),
@@ -668,8 +667,8 @@ def test_join_view_observer_path(spark, tmp_path):
         join_dim=_dim(spark),
         join_on=["ticker"],
     )
-    store = ParquetStore(
-        spark, str(tmp_path / "pstore"), observers=[mv.observer()]
+    store = ManifestStore(
+        spark, str(tmp_path / "store"), observers=[mv.observer()]
     )
     store.ingest_batch(_fact_df(spark, CDC_ROWS_A), "historical_intraday")
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), "historical_intraday")

@@ -15,10 +15,9 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from stock_ops_spark.operators.stats import StatsTable, merge_stats
+from stock_ops_spark.operators.stats import batch_stats
 from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources import microcommit as MC
-from stock_ops_spark.sources.ingest import ParquetStore
 from stock_ops_spark.sources.layout import PARTITION_COLS, with_partition_cols
 
 
@@ -122,7 +121,7 @@ def test_ingest_falls_back_and_stays_correct_on_decimal_payload(
     batch = _batch(spark).withColumn(
         "fee", F.lit("0.25").cast("decimal(6,4)")
     )
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = CL.ManifestStore(spark, str(tmp_path / "store"))
     n = store.ingest_batch(batch, "streaming")
     assert n == 4
     back = store.read_all("streaming")
@@ -191,6 +190,16 @@ def test_micro_ingest_null_ts_matches_distributed(spark, tmp_path, monkeypatch):
     assert ingest(tmp_path / "dist") == micro
 
 
+def _catalog_micro(tbl, mode, keys):
+    """A micro commit's stats-catalog rows: the kernel's stat rows in
+    ``batch_stats``'s schema, as ``ManifestStore`` writes its increments."""
+    from stock_ops_spark.schemas import TS_COL
+
+    return MC.as_catalog_stats(
+        MC.grouped_stats(tbl, keys, TS_COL[mode]), keys, mode
+    )
+
+
 _TICKERS = st.sampled_from([None, "AAPL", "MSFT"])
 _ROWS = st.lists(
     st.tuples(
@@ -238,16 +247,15 @@ def test_kernel_parity_with_spark_aggregates(spark, rows, keys, parts, by_interv
     )
     skeys = ["ticker", "interval"] if by_interval else ["ticker"]
 
-    def catalog(delta):
-        got = delta.batch_stats("streaming", by_interval).to_pylist()
+    def catalog(stats):
         return sorted(
             ((tuple(r[k] for k in skeys), r["row_count"], r["min_ts"],
-              r["max_ts"]) for r in got),
+              r["max_ts"]) for r in stats.to_pylist()),
             key=str,
         )
 
-    assert catalog(MC.Delta(df, len(rows), tbl)) == catalog(
-        MC.Delta(df, len(rows), None)
+    assert catalog(_catalog_micro(tbl, "streaming", skeys)) == catalog(
+        batch_stats(df, "streaming", by_interval).toArrow()
     )
 
 
@@ -268,30 +276,11 @@ def test_interday_batch_stats_are_iso_strings(spark):
     rows = [("AAPL", "1d", dt.date(2024, 1, 3)), ("AAPL", "1d", dt.date(2023, 12, 29)),
             ("MSFT", "1d", None)]
     df = spark.createDataFrame(rows, "ticker string, interval string, date date")
-    tbl = df.toArrow()
-    micro = MC.Delta(df, 3, tbl).batch_stats("historical_interday", True)
-    dist = MC.Delta(df, 3, None).batch_stats("historical_interday", True)
+    keys = ["ticker", "interval"]
+    micro = _catalog_micro(df.toArrow(), "historical_interday", keys)
+    dist = batch_stats(df, "historical_interday", True).toArrow()
     assert micro.schema.types == dist.schema.types
     assert sorted(micro.to_pylist(), key=str) == sorted(dist.to_pylist(), key=str)
     assert ("2023-12-29", "2024-01-03") in {
         (r["min_ts"], r["max_ts"]) for r in micro.to_pylist()
     }
-
-
-def test_stats_table_arrow_merge_matches_spark_merge(spark, tmp_path):
-    schema = "ticker string, row_count bigint, min_ts bigint, max_ts bigint"
-    prior = [("AAPL", 2, 10, 20), ("MSFT", 1, None, None), (None, 1, 5, 5)]
-    delta = [("AAPL", 1, 5, None), ("MSFT", 2, 7, 9), ("NVDA", 1, None, None)]
-    arrow = StatsTable(spark, str(tmp_path / "a"), ["ticker"])
-    arrow.update(spark.createDataFrame(prior, schema))
-    arrow.update(pa.Table.from_pylist(
-        [dict(zip(["ticker", "row_count", "min_ts", "max_ts"], r)) for r in delta]
-    ))
-    want = merge_stats(
-        spark.createDataFrame(prior, schema),
-        spark.createDataFrame(delta, schema),
-        ["ticker"],
-    )
-    assert sorted(map(tuple, arrow.read().collect()), key=str) == sorted(
-        map(tuple, want.collect()), key=str
-    )

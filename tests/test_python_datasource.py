@@ -49,10 +49,10 @@ def test_rest_batch_interday_schema(pyds):
 
 
 def test_rest_backfill_service_ingests(pyds, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.sources.services import run_historical_backfill
 
-    store = ParquetStore(pyds, str(tmp_path / "s"))
+    store = ManifestStore(pyds, str(tmp_path / "s"))
     n = run_historical_backfill(
         pyds, store, "EODHD-mock", ["SPY", "VOO"], "US", "1h", "", ""
     )
@@ -165,13 +165,13 @@ def test_frame_log_quote_mapping(pyds, tmp_path):
 
 def test_frame_log_to_store_end_to_end(pyds, tmp_path):
     """Full S2 path: frame-log DataSource → transform-equivalent rows →
-    stream_ingest (foreachBatch dedup/version writer) → ParquetStore."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    stream_ingest (foreachBatch dedup/version writer) → ManifestStore."""
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.streaming.ingest import stream_ingest
 
     log = str(tmp_path / "frames.jsonl")
     _write_frames(log, 0, 6)
-    store = ParquetStore(pyds, str(tmp_path / "store"))
+    store = ManifestStore(pyds, str(tmp_path / "store"))
     stream = (
         pyds.readStream.format("stockops_frames")
         .option("path", log)

@@ -169,7 +169,7 @@ def test_stream_task_with_reconnect_policy(spark, tmp_path):
     """run_stream_task under a reconnect policy: provider drops after one
     frame per session, replays on re-dial — at-least-once frames, and the
     dedup writer lands effectively-once rows in the store."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.sources.providers import Provider, register
     from stock_ops_spark.sources.services import run_stream_task
 
@@ -189,7 +189,7 @@ def test_stream_task_with_reconnect_policy(spark, tmp_path):
         raise ConnectionError("provider dropped")
 
     register(Provider(name="flaky-mock", stream_frames=frames))
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     n = run_stream_task(
         spark,
         store,

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from stock_ops_spark import catalog
 from stock_ops_spark import schemas as S
 from stock_ops_spark.plans import audit as A
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.reader import ReadProcess
 
 SF = "/root/testdata/sf0.001"
@@ -59,7 +59,7 @@ def test_store_read_prunes_partitions(spark, tmp_path):
     """A day-bounded streaming read must touch only that day's partition
     directory (PartitionFilters at the scan, like the reference's filename
     enumeration — but done by Catalyst)."""
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     rows = []
     # three days of trades: 2025-08-18/19/20 in America/New_York
     for day, base_ms in ((18, 1755526571834), (19, 1755612971834), (20, 1755699371834)):
@@ -84,7 +84,7 @@ def test_store_read_prunes_partitions(spark, tmp_path):
 def test_clustered_rowgroups_carry_ticker_stats(spark, tmp_path):
     """sortWithinPartitions(ticker, ts) leaves per-file ticker min/max
     stats that parquet uses to skip files on ticker predicates."""
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     rows = [
         (t, 1751463000 + i, 1.0, 1.0, 1.0, 1.0, 1, "1h")
         for t in ("AAA", "MMM", "ZZZ")
@@ -113,7 +113,7 @@ def test_cross_year_read_prunes_months(spark, tmp_path):
     old between()-only predicate collapsed to year IN (Y, Y+1) and scanned
     every month partition of both years.  Assert via the executed scan's
     metrics that only the two boundary months were read."""
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     # 2024-10 .. 2025-03: first-of-month 09:30 America/New_York trades
     epochs = (1727789400, 1730471400, 1733063400, 1735828200, 1738506600, 1740925800)
     rows = [("SPY", e, 1.0, 2.0, 0.5, 1.5, 10, "1h") for e in epochs]
@@ -151,7 +151,7 @@ def test_inverted_range_raises_empty_not_crash(spark, tmp_path):
     month-enumeration predicate must not crash on an empty month set."""
     from stock_ops_spark.sources.reader import EmptyReadError
 
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     df = spark.createDataFrame(
         [("SPY", 1736951400, 1.0, 2.0, 0.5, 1.5, 10, "1h")],
         schema=S.HISTORICAL_INTRADAY,

@@ -446,11 +446,11 @@ def _deploy_daily(ops, name="d", ticker="NVDA", dtstart=datetime(2025, 3, 7, 17,
 
 
 def test_tick_catchup_idempotence_and_effectively_once(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     cfg = _deploy_daily(ops)
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     sched = SchedulerService(api, spark_runner(spark, store))
 
     now = datetime(2025, 3, 10, 0, 0, tzinfo=UTC)
@@ -471,11 +471,11 @@ def test_tick_catchup_idempotence_and_effectively_once(spark, tmp_path):
 
 
 def test_pause_advances_watermark_without_backfill(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     cfg = _deploy_daily(ops)
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     sched = SchedulerService(api, spark_runner(spark, store))
     sched.tick(datetime(2025, 3, 10, 0, 0, tzinfo=UTC))
 
@@ -489,11 +489,11 @@ def test_pause_advances_watermark_without_backfill(spark, tmp_path):
 
 
 def test_crash_between_record_and_dispatch_redelivers(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     cfg = _deploy_daily(ops)
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
 
     calls = {"n": 0}
     real = spark_runner(spark, store)
@@ -534,7 +534,7 @@ def test_crash_between_record_and_dispatch_redelivers(spark, tmp_path):
 
 
 def test_multi_deployment_fleet_tick(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     cfgs = [
@@ -542,7 +542,7 @@ def test_multi_deployment_fleet_tick(spark, tmp_path):
                       dtstart=datetime(2025, 3, 8, 17, 0))
         for i, t in enumerate(["NVDA", "AAPL", "MSFT"])
     ]
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     sched = SchedulerService(api, spark_runner(spark, store))
     res = sched.tick(datetime(2025, 3, 10, 0, 0, tzinfo=UTC))
     assert len(res) == 6  # 3 deployments x 2 fires
@@ -587,13 +587,13 @@ def test_racing_ticks_converge_on_one_run_per_key(tmp_path):
 
 
 def test_tick_watermark_is_one_commit_for_the_fleet(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     for i in range(3):
         _deploy_daily(ops, name=f"d{i}", ticker="NVDA",
                       dtstart=datetime(2025, 3, 9, 17, 0))
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     sched = SchedulerService(api, spark_runner(spark, store))
     v_before = api.log.version()
     sched.tick(datetime(2025, 3, 10, 0, 0, tzinfo=UTC))
@@ -724,18 +724,16 @@ def test_auto_compact_bounds_the_fold(tmp_path):
 
 def test_scheduled_compaction_runs_through_the_scheduler(spark, tmp_path):
     from stock_ops_spark import schemas as S
-    from stock_ops_spark.sources.ingest import ParquetStore
-    from stock_ops_spark.sources.maintenance import _data_files
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"), auto_compact_every=0)
     base = 1736951400  # 2025-01-15 09:30 EST
-    for i in range(4):  # micro-batch litter: one file set per append
+    for i in range(4):  # micro-batch litter: one batch dir per commit
         rows = [("SPY", base + 3600 * i, 1.0 * i, 2.0, 0.5, 1.5, 10 + i, "1h")]
         df = spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
         assert store.ingest_batch(df, "historical_intraday") == 1
-    path = store.data_path("historical_intraday")
-    files_before = len(_data_files(path))
-    assert files_before >= 4
+    log = store.log("historical_intraday")
+    assert len(log.state()["dirs"]) == 4
     before_rows = sorted(
         map(tuple, store.read_all("historical_intraday").collect())
     )
@@ -753,13 +751,13 @@ def test_scheduled_compaction_runs_through_the_scheduler(spark, tmp_path):
     sched = SchedulerService(api, spark_runner(spark, store))
     res = sched.tick(datetime(2025, 1, 16, 4, 0, tzinfo=UTC))
     assert [r.state for r in res] == ["COMPLETED"]
-    assert res[0].rows == files_before - 1  # files coalesced away
-    assert len(_data_files(path)) == 1
+    assert res[0].rows == 3  # batch dirs folded away
+    assert len(log.state()["dirs"]) == 1
     after_rows = sorted(
         map(tuple, store.read_all("historical_intraday").collect())
     )
     assert after_rows == before_rows
-    # next-night tick: nothing littered, compaction is a no-op run
+    # next-night tick: one live dir, compaction is a no-op run
     res2 = sched.tick(datetime(2025, 1, 17, 4, 0, tzinfo=UTC))
     assert [r.rows for r in res2] == [0]
 
@@ -767,9 +765,9 @@ def test_scheduled_compaction_runs_through_the_scheduler(spark, tmp_path):
 def test_maintain_retain_command_through_run_command(spark, tmp_path):
     from stock_ops_spark import schemas as S
     from stock_ops_spark.sources import services
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     rows = [  # Dec 2024 + Jan 2025 partitions (exchange-local routing)
         ("SPY", 1734705000, 600.0, 601.0, 599.0, 600.5, 1000, "1h"),
         ("SPY", 1736951400, 610.0, 611.0, 609.0, 610.5, 1100, "1h"),
@@ -780,7 +778,7 @@ def test_maintain_retain_command_through_run_command(spark, tmp_path):
         spark, store, "maintain_store",
         {"op": "retain", "mode": "historical_intraday", "keep_from": [2025]},
     )
-    assert n == 1  # the 2024 partition dropped, metadata-only
+    assert n == 1  # the one batch dir, rewritten without its 2024 row
     left = store.read_all("historical_intraday").collect()
     assert len(left) == 1 and left[0]["timestamp_UTC_s"] == 1736951400
     with pytest.raises(ValueError, match="Unsupported maintenance op"):
@@ -788,6 +786,63 @@ def test_maintain_retain_command_through_run_command(spark, tmp_path):
             spark, store, "maintain_store",
             {"op": "nope", "mode": "historical_intraday"},
         )
+
+
+def test_maintain_store_commits_through_the_manifest(spark, tmp_path):
+    """Every maintain_store op acts on the live batch dirs of the
+    manifest: retain drops the expired rows at the exchange-local cutoff
+    of its keep_from grain in each mode's time unit, and compact leaves
+    one live dir, partitioned or not."""
+    import datetime as _dt
+
+    from stock_ops_spark import schemas as S
+    from stock_ops_spark.sources import services
+    from stock_ops_spark.sources.commitlog import ManifestStore
+
+    store = ManifestStore(spark, str(tmp_path / "store"), auto_compact_every=0)
+
+    def run(op, mode, **kw):
+        return services.run_command(
+            spark, store, "maintain_store", {"op": op, "mode": mode, **kw}
+        )
+
+    # intraday: Jan/Feb/Mar 2025 (mid-month 09:30 EST), one commit each
+    jan, feb, mar = 1736951400, 1739629800, 1742045400
+    for ts in (jan, feb, mar):
+        store.ingest_batch(spark.createDataFrame(
+            [("SPY", ts, 1.0, 2.0, 0.5, 1.5, 10, "1h")],
+            schema=S.HISTORICAL_INTRADAY,
+        ), "historical_intraday")
+    assert run("retain", "historical_intraday", keep_from=[2025, 2]) == 1
+    kept = store.read_all("historical_intraday").collect()
+    assert sorted(r["timestamp_UTC_s"] for r in kept) == [feb, mar]
+    assert run("compact", "historical_intraday") == 1
+    assert len(store.log("historical_intraday").state()["dirs"]) == 1
+    assert store.read_all("historical_intraday").count() == 2
+
+    # interday (unpartitioned, ISO-date cutoff)
+    for d in (1, 2, 3):
+        store.ingest_batch(spark.createDataFrame(
+            [("SPY", _dt.date(2025, d, 15), 1.0, 2.0, 0.5, 1.5, 1.2, 100, "d")],
+            schema=S.HISTORICAL_INTERDAY,
+        ), "historical_interday")
+    assert run("compact", "historical_interday") == 2
+    assert len(store.log("historical_interday").state()["dirs"]) == 1
+    assert run("retain", "historical_interday", keep_from=[2025, 3]) == 1
+    kept = store.read_all("historical_interday").collect()
+    assert [r["date"] for r in kept] == [_dt.date(2025, 3, 15)]
+
+    # streaming (epoch-ms cutoff): 2025-08-17 23:59:59 EDT expires,
+    # 2025-08-18 00:00:00 EDT is kept
+    midnight_ms = 1755489600000
+    store.ingest_batch(spark.createDataFrame(
+        [("SPY", midnight_ms - 1000, 1.0, 1, None, None, None, None),
+         ("SPY", midnight_ms, 1.0, 1, None, None, None, None)],
+        schema=S.STREAMING,
+    ), "streaming")
+    assert run("retain", "streaming", keep_from=[2025, 8, 18]) == 1
+    kept = store.read_all("streaming").collect()
+    assert [r["timestamp_UTC_ms"] for r in kept] == [midnight_ms]
 
 
 def test_occurrences_fast_forward_equals_full_iteration():
@@ -899,13 +954,13 @@ def test_expander_matches_dateutil_rrule_reference():
 
 def test_batch_dispatch_coalesces_same_window_fetches(spark, tmp_path):
     from stock_ops_spark.scheduling import backfill_batcher
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     for i, t in enumerate(["NVDA", "AAPL", "MSFT"]):
         _deploy_daily(ops, name=f"d{i}", ticker=t,
                       dtstart=datetime(2025, 3, 9, 17, 0))
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     calls = {"n": 0}
     real = backfill_batcher(spark, store)
 
@@ -928,7 +983,7 @@ def test_batch_dispatch_coalesces_same_window_fetches(spark, tmp_path):
 
 
 def test_batch_dispatch_mixed_groups_and_failure(spark, tmp_path):
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     for i, t in enumerate(["NVDA", "AAPL"]):
@@ -944,7 +999,7 @@ def test_batch_dispatch_mixed_groups_and_failure(spark, tmp_path):
         dtstart_local=datetime(2025, 3, 9, 17, 0))]
     ops.schedule_deployment(cfg)
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     single_calls = {"n": 0}
     real_runner = spark_runner(spark, store)
 
@@ -967,11 +1022,11 @@ def test_crash_mid_dispatch_redelivers_running_run(spark, tmp_path):
     """A crash AFTER the RUNNING commit but before a terminal state must
     re-dispatch on the next tick (the at-least-once contract names this
     exact window) — RUNNING is non-terminal."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     api, ops = _mk_ops(tmp_path)
     cfg = _deploy_daily(ops, dtstart=datetime(2025, 3, 9, 17, 0))
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
 
     class Boom(BaseException):
         pass
@@ -1125,7 +1180,7 @@ def test_scheduled_stream_drain_cron_style(spark, tmp_path):
     redelivered rows, and the run log records post-dedup counts."""
     import json as _json
 
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     land = tmp_path / "landing"
     land.mkdir()
@@ -1152,7 +1207,7 @@ def test_scheduled_stream_drain_cron_style(spark, tmp_path):
         dtstart_local=datetime(2025, 1, 6, 8, 0))]
     ops.schedule_deployment(cfg)
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     sched = SchedulerService(api, spark_runner(spark, store))
     res = sched.tick(datetime(2025, 1, 6, 8, 30, tzinfo=UTC))
     assert [r.state for r in res] == ["COMPLETED"] and res[0].rows == 2

@@ -7,7 +7,7 @@ import json
 
 import pytest
 
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.providers import Provider, get, register, registered
 from stock_ops_spark.sources.services import run_historical_task, run_stream_task
 from stock_ops_spark.streaming.ingest import file_trade_source
@@ -25,7 +25,7 @@ def test_provider_registry():
 
 
 def test_historical_interday_service(spark, tmp_path):
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     n = run_historical_task(
         spark, store, "EODHD-mock", "VOO", "US", "d", "2024-10-01", "2024-10-31"
     )
@@ -43,7 +43,7 @@ def test_historical_interday_service(spark, tmp_path):
 
 
 def test_historical_intraday_service_null_volume(spark, tmp_path):
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     n = run_historical_task(
         spark, store, "EODHD-mock", "SPY", "US", "1h", "2025-07-02", "2025-07-03"
     )
@@ -53,7 +53,7 @@ def test_historical_intraday_service_null_volume(spark, tmp_path):
 
 
 def test_stream_service_trades_and_quotes_coexist(spark, tmp_path):
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     nt = run_stream_task(spark, store, "EODHD-mock", ["SPY"], "US", "trades")
     nq = run_stream_task(spark, store, "EODHD-mock", ["SPY"], "US", "quotes")
     assert nt == 2 and nq == 2
@@ -278,10 +278,10 @@ def test_streaming_sessions_gap_and_timeout(spark, tmp_path):
 def test_run_command_dispatch(spark, tmp_path):
     """Controller-twin dispatch: reference command dicts route to the
     right service; unknown types raise."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.sources.services import run_command
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     n = run_command(
         spark,
         store,
@@ -317,10 +317,10 @@ def test_reference_ci_workflow_end_to_end(spark, tmp_path):
     historical fetches (intraday 1h, interday d) and two stream drains
     (trades, quotes) dispatched as command dicts — every command lands
     rows in the right store mode."""
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.sources.services import run_command
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     commands = [
         (
             {"ticker": "SPY", "exchange": "US", "interval": "1h",

@@ -7,7 +7,7 @@ from __future__ import annotations
 import json
 import time
 
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.streaming.ingest import (
     file_trade_source,
     stream_ingest,
@@ -35,7 +35,7 @@ def test_stream_ingest_effectively_once(spark, tmp_path):
     _write_burst(src, "burst1.json", TRADES[:3])
     _write_burst(src, "burst2.json", TRADES[3:])
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
     q = stream_ingest(
         file_trade_source(spark, str(src)),
         store,
@@ -216,7 +216,7 @@ def test_socket_reconnect_replay_effectively_once(spark, tmp_path):
             time.sleep(hold_s)
         # abrupt close = the provider dropping the connection
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = ManifestStore(spark, str(tmp_path / "store"))
 
     def run_session(payload, expect_rows, hold_s=6):
         t = threading.Thread(target=serve, args=(payload, hold_s), daemon=True)

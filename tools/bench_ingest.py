@@ -9,7 +9,6 @@ Prints one JSON line: fresh-ingest rows/s, dedup-probe (full replay,
 zero appended) rows/s, and mixed (half dup / half new) rows/s.
 
     python tools/bench_ingest.py --micro [batch_rows] [n_batches]
-    python tools/bench_ingest.py --micro --manifest [batch_rows] [n_batches]
 
 Micro-batch cadence twin of the reference's 50–5,000 rows/s streaming
 envelope: N json files of B rows each drive ``file_trade_source →
@@ -17,10 +16,7 @@ stream_ingest`` (maxFilesPerTrigger=1, so one file == one micro-batch)
 with the full dedup/version/stats batch writer inside foreachBatch.
 Prints rows/s plus the per-micro-batch latency distribution
 (p50/p90/p99/max of triggerExecution) taken from the query's own
-progress records.  ``--manifest`` swaps in the commit-log store
-(sources/commitlog.py) so the atomicity tax — one extra stats-merge
-write + one fsync'd commit file per micro-batch — is a measured number
-next to the plain-parquet figure, not a guess.
+progress records.
 """
 
 from __future__ import annotations
@@ -37,7 +33,7 @@ def main() -> None:
 
     from stock_ops_spark import schemas as S
     from stock_ops_spark.session import get_spark
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     spark = get_spark("bench-ingest")
@@ -61,7 +57,7 @@ def main() -> None:
         return spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
 
     with tempfile.TemporaryDirectory() as tmp:
-        store = ParquetStore(spark, f"{tmp}/store")
+        store = ManifestStore(spark, f"{tmp}/store")
         b = batch(0, n).localCheckpoint(eager=True)  # exclude row build from timing
 
         t0 = time.monotonic()
@@ -96,11 +92,10 @@ def main_micro() -> None:
     import tempfile
 
     from stock_ops_spark.session import get_spark
-    from stock_ops_spark.sources.ingest import ParquetStore
+    from stock_ops_spark.sources.commitlog import ManifestStore
     from stock_ops_spark.streaming.ingest import file_trade_source, stream_ingest
 
-    use_manifest = "--manifest" in sys.argv
-    argv = [a for a in sys.argv[1:] if a not in ("--micro", "--manifest")]
+    argv = [a for a in sys.argv[1:] if a != "--micro"]
     batch_rows = int(argv[0]) if len(argv) > 0 else 500
     n_batches = int(argv[1]) if len(argv) > 1 else 200
     spark = get_spark("bench-ingest-micro")
@@ -135,12 +130,7 @@ def main_micro() -> None:
                         + "\n"
                     )
 
-        if use_manifest:
-            from stock_ops_spark.sources.commitlog import ManifestStore
-
-            store = ManifestStore(spark, f"{tmp}/store")
-        else:
-            store = ParquetStore(spark, f"{tmp}/store")
+        store = ManifestStore(spark, f"{tmp}/store")
         stream = file_trade_source(spark, src, max_files_per_trigger=1)
         t0 = time.monotonic()
         q = stream_ingest(
@@ -170,7 +160,6 @@ def main_micro() -> None:
         json.dumps(
             {
                 "metric": "micro_batch_ingest",
-                "store": "manifest" if use_manifest else "parquet",
                 "batch_rows": batch_rows,
                 "n_batches": n_batches,
                 "rows_per_sec": round(n / wall_s),
