@@ -998,33 +998,29 @@ class LocalDeploymentAPI:
     def compact(
         self, retain_last: int = 64, keep_terminal_runs: int = 200
     ) -> dict:
-        """Checkpoint-truncate the event log — the data-store vacuum
-        discipline (sources/commitlog.py::vacuum) applied to the
-        deployment log.  A long-lived scheduler appends one watermarks
-        commit per tick plus two state commits per run, and every fold
-        re-reads the whole log: O(commits) per tick, quadratic over the
-        deployment's lifetime.
+        """Checkpoint-truncate the event log through
+        ``ManifestLog.checkpoint`` — the store's vacuum
+        (sources/commitlog.py) applied to the deployment log.  A
+        long-lived scheduler appends one watermarks commit per tick plus
+        two state commits per run, and every fold re-reads the whole
+        log: O(commits) per tick, quadratic over the deployment's
+        lifetime.
 
-        Mechanics (each step crash-safe alone, like the store vacuum):
-        1. pick horizon H = current - retain_last + 1;
-        2. rewrite commit H in place (tmp + atomic rename) as a
-           self-contained ``checkpoint`` event: deployments, watermarks,
-           non-terminal runs IN FULL, the newest ``keep_terminal_runs``
-           terminal runs, and EVERY terminal run key — the at-least-once
-           dedup memory must survive truncation or a re-tick would
-           double-run old fires;
-        3. delete commits < H (idempotent; a crash after 2 leaves a
-           fold-identical log because the checkpoint RESETS the fold).
+        Commit H = current - retain_last + 1 becomes a self-contained
+        ``checkpoint`` event: deployments, watermarks, non-terminal runs
+        IN FULL, the newest ``keep_terminal_runs`` terminal runs, and
+        EVERY terminal run key — the at-least-once dedup memory must
+        survive truncation or a re-tick would double-run old fires.  The
+        commits below H are then deleted, stopping at the first failed
+        delete so the log never has a gap; a crash in between leaves a
+        fold-identical log because the checkpoint RESETS the fold.
 
         Truncation trades away old terminal run records (the store is
         the system of record for the data they ingested) — never keys,
         never non-terminal runs."""
-        import json as _json
-
         cur = self.log.version()
-        lo = self.log.min_version()
         horizon = cur - retain_last + 1
-        if cur == 0 or horizon <= lo:
+        if cur == 0 or horizon <= self.log.min_version():
             return {"checkpointed": 0, "commits_dropped": 0}
         st = self._fold(at_version=horizon)
         terminal = {
@@ -1052,8 +1048,7 @@ class LocalDeploymentAPI:
         done_keys = sorted(
             r["key"] for r in terminal.values() if r.get("key")
         )
-        doc = {
-            "version": horizon,
+        dropped = self.log.checkpoint(horizon, {
             "event": {
                 "action": "checkpoint",
                 "state": {
@@ -1063,21 +1058,7 @@ class LocalDeploymentAPI:
                     "done_keys": done_keys,
                 },
             },
-        }
-        final = self.log._path(horizon)
-        tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            _json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)  # atomic: readers see old or new, never torn
-        dropped = 0
-        for v in range(lo, horizon):
-            try:
-                os.remove(self.log._path(v))
-                dropped += 1
-            except OSError:
-                pass
+        })
         return {"checkpointed": horizon, "commits_dropped": dropped}
 
     # -- ApiLike surface --------------------------------------------------

@@ -33,6 +33,17 @@ Compaction rewrites many batch dirs into one and publishes
 removes+adds in a single commit — readers switch snapshots atomically;
 the old dirs stay until GC, so in-flight readers finish correctly.
 
+Every rewrite (merge, delete, retain, compact, restore, convert) runs
+one protocol, ``ManifestStore._commit``: an ATTEMPT folds the log once
+and works from that state alone (its prior stats included); it writes
+its batch, stats and CDC dirs invisibly, recording each in the state;
+the loop PUBLISHES the returned payload at ``state["version"] + 1``;
+a LOST race deletes the recorded dirs, backs off and re-runs the
+attempt against the fresh state.  Ingest keeps its two-tier retry
+(``_ingest_frame``) over the same write and cleanup helpers, and
+``ManifestLog.checkpoint`` is the one history truncation — shared with
+the deployment log in ``scheduling.py``.
+
 Reference parity: the reference's SQLite writer gets all of this from
 SQLite's own journal (src/stockops/data/database/sql_db.py — one
 process, one file, BEGIN..COMMIT); this module is the multi-writer,
@@ -105,6 +116,37 @@ def _meta_of(stats, tsc: str) -> dict:
     }
 
 
+def _disjoint(a, b) -> bool:
+    """True when two [lo, hi] ranges provably do NOT intersect (a
+    missing range or a None end is unbounded = may intersect)."""
+    if not a or not b:
+        return False
+    return (a[1] is not None and b[0] is not None and a[1] < b[0]) or (
+        b[1] is not None and a[0] is not None and b[1] < a[0]
+    )
+
+
+def _may_touch(meta: dict | None, tsc: str, tickers, ts) -> bool:
+    """Can a dir with recorded bounds ``meta`` hold a row inside the
+    (``tickers``, ``ts``) rectangle?  A shared key lies in both
+    rectangles, so a dir disjoint on EITHER axis holds none; a dir with
+    no recorded bounds must be read."""
+    if not meta:
+        return True
+    return not (
+        _disjoint(meta.get("ticker"), tickers) or _disjoint(meta.get(tsc), ts)
+    )
+
+
+def _union(frames: list) -> DataFrame | None:
+    """Union by name with missing columns NULL-filled (the mergeSchema
+    evolution contract), or None for no frames."""
+    out = None
+    for f in frames:
+        out = f if out is None else out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
 def _touched_parts(stats, parts: list[str]) -> list[tuple]:
     """The distinct partition tuples of a grouped-stats table's ``tp``
     lists, or ``[]`` — ``compute_versioned_delta``'s "known over-cap" —
@@ -165,32 +207,25 @@ class ManifestLog:
     def _path(self, version: int) -> str:
         return os.path.join(self.log_dir, f"{version:08d}.json")
 
+    def _versions(self) -> list[int]:
+        """The commit numbers on disk ([] before the first commit)."""
+        try:
+            names = os.listdir(self.log_dir)
+        except OSError:
+            return []
+        return [
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+        ]
+
     def version(self) -> int:
         """Highest committed version (0 = empty log)."""
-        try:
-            names = os.listdir(self.log_dir)
-        except OSError:
-            return 0
-        best = 0
-        for n in names:
-            if n.endswith(".json") and n[:-5].isdigit():
-                best = max(best, int(n[:-5]))
-        return best
+        return max(self._versions(), default=0)
 
     def min_version(self) -> int:
-        """Lowest retained commit (0 = empty log).  1 until ``vacuum``
+        """Lowest retained commit (0 = empty log).  1 until ``checkpoint``
         truncates history; afterwards the earliest retained commit is a
         self-contained checkpoint, so folding from it is complete."""
-        try:
-            names = os.listdir(self.log_dir)
-        except OSError:
-            return 0
-        best = 0
-        for n in names:
-            if n.endswith(".json") and n[:-5].isdigit():
-                v = int(n[:-5])
-                best = v if best == 0 else min(best, v)
-        return best
+        return min(self._versions(), default=0)
 
     def commits(self, upto: int | None = None) -> list[dict]:
         # A concurrent vacuum can remove a commit file between this
@@ -269,27 +304,58 @@ class ManifestLog:
         return {"version": version, "dirs": dirs, "stats": stats,
                 "stats_incs": stats_incs, "meta": meta}
 
-    def try_commit(self, version: int, payload: dict) -> None:
-        """Put-if-absent publish of ``version``; raises CommitConflict
-        if that version already exists (the POSIX compare-and-swap:
-        ``os.link`` fails with EEXIST where rename would overwrite)."""
+    def _put(self, version: int, doc: dict, publish) -> None:
+        """Write ``doc`` as commit ``version``: durably to a tmp name
+        first (fsync), then ``publish(tmp, final)`` makes it visible in
+        one step, so readers never see a torn commit."""
         os.makedirs(self.log_dir, exist_ok=True)
         final = self._path(version)
         tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-        doc = dict(payload, version=version)
         with open(tmp, "w") as f:
-            json.dump(doc, f)
+            json.dump(dict(doc, version=version), f)
             f.flush()
             os.fsync(f.fileno())
         try:
-            os.link(tmp, final)
-        except FileExistsError:
-            raise CommitConflict(f"version {version} already committed") from None
+            publish(tmp, final)
         finally:
             try:
                 os.remove(tmp)
             except OSError:
                 pass
+
+    def try_commit(self, version: int, payload: dict) -> None:
+        """Put-if-absent publish of ``version``; raises CommitConflict
+        if that version already exists (the POSIX compare-and-swap:
+        ``os.link`` fails with EEXIST where rename would overwrite)."""
+        try:
+            self._put(version, payload, os.link)
+        except FileExistsError:
+            raise CommitConflict(f"version {version} already committed") from None
+
+    def checkpoint(self, horizon: int, doc: dict) -> int:
+        """Truncate history below ``horizon``; returns the commits dropped.
+
+        1. replace commit ``horizon`` (atomic rename) with ``doc``, a
+           SELF-CONTAINED checkpoint: the caller's fold must give the
+           same state from it whether or not older commits still exist,
+           so a crash between the steps leaves a correct log;
+        2. delete the commits below it in ascending order, STOPPING at
+           the first failed delete: deleting v+1 while v survives would
+           leave a GAP in the contiguous [min_version, version] range
+           ``commits()`` folds, and every later fold would raise.  The
+           next checkpoint retries from the same horizon."""
+        lo = self.min_version()
+        self._put(horizon, doc, os.replace)
+        dropped = 0
+        for v in range(lo, horizon):
+            try:
+                os.remove(self._path(v))
+            except FileNotFoundError:
+                pass  # a concurrent/prior checkpoint already got it
+            except OSError:
+                break
+            dropped += 1
+        return dropped
 
 
 def _conflict_backoff(attempt: int) -> None:
@@ -368,21 +434,22 @@ class ManifestStore:
         return ManifestLog(self.data_path(mode) + "__log")
 
     # -- read ------------------------------------------------------------
-    def _read_dirs(self, mode: str, dirs: list[str]) -> DataFrame | None:
-        if not dirs:
-            return None
+    def _read_dirs(
+        self, mode: str, dirs: list[str], tag: bool = False
+    ) -> DataFrame | None:
+        """The union of ``dirs``, each read with its own basePath;
+        ``tag`` adds a ``__dir`` provenance column — the probe frame
+        file pruning works on (which batch dirs a mutation touches)."""
         frames = []
         for d in dirs:
             p = os.path.join(self.data_path(mode), d)
-            frames.append(
+            df = (
                 self.spark.read.option("mergeSchema", "true")
                 .option("basePath", p)
                 .parquet(p)
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+            frames.append(df.withColumn("__dir", F.lit(d)) if tag else df)
+        return _union(frames)
 
     def read_all(self, mode: str, at_version: int | None = None) -> DataFrame | None:
         """Current (or time-travel) snapshot, or None before the first
@@ -416,24 +483,12 @@ class ManifestStore:
         optimization, never a semantics change."""
         tsc = S.TS_COL[mode]
         state = self.log(mode).state(at_version)
-        meta = state["meta"]
-
-        def overlaps(m: dict | None) -> bool:
-            if not m:
-                return True  # unknown bounds: must read
-            tk = m.get("ticker")
-            if ticker is not None and tk and tk[0] is not None:
-                if _j(ticker) < tk[0] or _j(ticker) > tk[1]:
-                    return False
-            tb = m.get(tsc)
-            if tb and tb[0] is not None:
-                if ts_max is not None and _j(ts_max) < tb[0]:
-                    return False
-                if ts_min is not None and _j(ts_min) > tb[1]:
-                    return False
-            return True
-
-        keep = [d for d in state["dirs"] if overlaps(meta.get(d))]
+        tickers = None if ticker is None else [_j(ticker)] * 2
+        ts = [_j(ts_min), _j(ts_max)]
+        keep = [
+            d for d in state["dirs"]
+            if _may_touch(state["meta"].get(d), tsc, tickers, ts)
+        ]
         if stats is not None:
             stats["dirs_total"] = len(state["dirs"])
             stats["dirs_read"] = len(keep)
@@ -455,23 +510,31 @@ class ManifestStore:
         return latest_version_view(df, S.INDEX_COLS[mode])
 
     # -- stats (atomic with data — THE point) ------------------------------
-    def _stats_state(self, mode: str, at_version: int | None = None):
-        """(cumulative snapshot ptr | None, outstanding increment ptrs)."""
-        state = self.log(mode).state(at_version)
-        return state["stats"], state["stats_incs"]
-
     _STATS_KEYS = {"table": ["ticker"], "interval": ["ticker", "interval"]}
 
-    def _read_stats(self, mode: str, which: str, at_version: int | None = None):
-        """Current stats view: the last cumulative snapshot FOLDED with
-        every ingest increment committed since (r8).  The fold is one
-        union + one aggregate over tiny frames — sum/min/max per key is
-        associative, so a single groupBy equals the iterated
-        ``merge_stats`` the per-commit snapshot path used to run.  The
-        chain is bounded: ingest materializes a fresh snapshot every
-        ``STATS_FOLD_EVERY`` increments and every mutation/compaction
-        materializes too."""
-        cum, incs = self._stats_state(mode, at_version)
+    def _stats_keys(self, mode: str) -> dict:
+        """The stats tables ``mode`` keeps, {which: keys}: streaming rows
+        carry no interval, so they keep the table stats only."""
+        return {
+            which: keys for which, keys in self._STATS_KEYS.items()
+            if not (which == "interval" and mode == "streaming")
+        }
+
+    def _read_stats(
+        self, mode: str, which: str, at_version: int | None = None,
+        state: dict | None = None,
+    ):
+        """Stats view of ``state`` (default: the fold at ``at_version``):
+        the last cumulative snapshot FOLDED with every ingest increment
+        committed since (r8).  The fold is one union + one aggregate over
+        tiny frames — sum/min/max per key is associative, so a single
+        groupBy equals the iterated ``merge_stats`` the per-commit
+        snapshot path used to run.  The chain is bounded: ingest
+        materializes a fresh snapshot every ``STATS_FOLD_EVERY``
+        increments and every mutation/compaction materializes too."""
+        if state is None:
+            state = self.log(mode).state(at_version)
+        cum, incs = state["stats"], state["stats_incs"]
         log_dir = self.log(mode).log_dir
         paths = []
         if cum and which in cum:
@@ -497,42 +560,82 @@ class ManifestStore:
     def interval_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "interval")
 
-    def _write_stats_increment(
-        self, log, stats_dir: str, mode: str, grows
+    def _write_stats(
+        self, mode: str, state: dict, stats_of, inc: bool = False
     ) -> dict:
-        """Materialize one ingest's stats increment from the already-
-        computed grouped-stats table (``Delta.stat_rows``) — pyarrow on
-        the driver, zero Spark jobs (r8).  The table is small by contract
-        (the keys ONE batch touches); ``fold_stats`` folds it to the
-        catalog keys (dropping a group commit's batch ids, and interval
-        for the table stats), and ``as_catalog_stats`` gives the files
-        ``batch_stats``'s exact schema, so ``_read_stats`` folds them
-        with Spark-written snapshots interchangeably."""
+        """Write one stats dir under the log — invisible until a commit
+        points at it, and recorded in the attempt's ``state`` for cleanup
+        — and return its pointer {which: rel path}.  ``stats_of(which,
+        keys)`` gives each table, or None to leave it out:
+
+        - a Spark frame: a CUMULATIVE snapshot (``stats-<version>-*``);
+        - with ``inc``, an Arrow table in ``batch_stats``'s exact schema:
+          one ingest's version-independent INCREMENT (``stats-inc-*``),
+          written by pyarrow on the driver with zero Spark jobs (r8), so
+          ``_read_stats`` folds both kinds interchangeably."""
         import pyarrow.parquet as pq
 
-        whichs = ["table"] if mode == "streaming" else ["table", "interval"]
-        os.makedirs(os.path.join(log.log_dir, stats_dir), exist_ok=True)
-        stats_ptr = {}
-        for which in whichs:
-            keys = self._STATS_KEYS[which]
+        log_dir = self.log(mode).log_dir
+        stats_dir = (
+            f"stats-inc-{uuid.uuid4().hex[:12]}" if inc
+            else f"stats-{state['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
+        )
+        state["written"].append(os.path.join(log_dir, stats_dir))
+        ptr = {}
+        for which, keys in self._stats_keys(mode).items():
+            tbl = stats_of(which, keys)
+            if tbl is None:
+                continue
             rel = os.path.join(stats_dir, which)
-            pq.write_table(
-                as_catalog_stats(fold_stats(grows, keys), keys, mode),
-                os.path.join(log.log_dir, rel),
+            if inc:
+                os.makedirs(os.path.join(log_dir, stats_dir), exist_ok=True)
+                pq.write_table(tbl, os.path.join(log_dir, rel))
+            else:
+                tbl.coalesce(1).write.parquet(os.path.join(log_dir, rel))
+            ptr[which] = rel
+        return ptr
+
+    def _stats_plus(self, mode: str, state: dict, df: DataFrame):
+        """``stats_of`` for a commit that only ADDS ``df``'s rows: the
+        prior view merged with their batch stats."""
+        return lambda which, keys: merge_stats(
+            self._read_stats(mode, which, state=state),
+            batch_stats(df, mode, which == "interval"),
+            keys,
+        )
+
+    def _stats_after_removal(
+        self, mode: str, state: dict, affected: DataFrame,
+        removes: list[str], adds: list[str],
+    ) -> dict:
+        """Write the stats snapshot of a commit that REMOVES rows.  Stats
+        cannot be decremented (count/min/max do not subtract), so every
+        stats row keyed by ``affected`` — joined on its columns that are
+        stats keys — is recomputed exactly from the post-commit snapshot,
+        and the rest of the prior view is carried: bounded by the keys
+        the commit touched, never a rescan of untouched tickers."""
+        gone = set(removes)
+        post = self._read_dirs(
+            mode, [d for d in state["dirs"] if d not in gone] + adds
+        )
+
+        def stats_of(which, keys):
+            on = [k for k in keys if k in affected.columns]
+            prior = self._read_stats(mode, which, state=state)
+            fresh = None if post is None else batch_stats(
+                post.join(affected, on=on, how="left_semi"),
+                mode,
+                which == "interval",
             )
-            stats_ptr[which] = rel
-        return stats_ptr
+            if prior is None:
+                return fresh
+            kept = prior.join(affected, on=on, how="left_anti")
+            return kept if fresh is None else kept.unionByName(fresh)
+
+        return self._write_stats(mode, state, stats_of)
 
     # -- write -----------------------------------------------------------
     MAX_FAST_RETRIES = 24  # cheap logical-conflict retries (no recompute)
-
-    @staticmethod
-    def _bounds_disjoint(a, b) -> bool:
-        """True when two [lo, hi] ranges provably do NOT intersect
-        (missing/None bounds = unknown = may intersect)."""
-        if not a or not b or a[0] is None or b[0] is None:
-            return False
-        return a[1] < b[0] or b[1] < a[0]
 
     def _interleaved_commits_safe(
         self, mode: str, base_version: int, upto: int, dir_meta: dict
@@ -571,13 +674,8 @@ class ManifestStore:
                 return False
             for d in c.get("adds", []):
                 m = (c.get("meta") or {}).get(d)
-                if not m:
-                    return False
-                if not (
-                    self._bounds_disjoint(m.get("ticker"), dir_meta["ticker"])
-                    or self._bounds_disjoint(m.get(tsc), dir_meta[tsc])
-                ):
-                    return False
+                if _may_touch(m, tsc, dir_meta["ticker"], dir_meta[tsc]):
+                    return False  # no bounds, or a possibly shared key
         return True
 
     STATS_FOLD_EVERY = 32  # materialize a cumulative stats snapshot
@@ -637,11 +735,9 @@ class ManifestStore:
         declared = set(S.SCHEMAS[mode].fieldNames())
         if any(declared - set(b.columns) for b in batches):
             return [self.ingest_batch(b, mode) for b in batches]
-        tagged = batches[0].withColumn(_GBID, F.lit(0))
-        for i, b in enumerate(batches[1:], 1):
-            tagged = tagged.unionByName(
-                b.withColumn(_GBID, F.lit(i)), allowMissingColumns=True
-            )
+        tagged = _union(
+            [b.withColumn(_GBID, F.lit(i)) for i, b in enumerate(batches)]
+        )
         try:
             return self._ingest_frame(tagged, mode, n_bids=len(batches))
         except _GroupOverlap:
@@ -713,7 +809,8 @@ class ManifestStore:
         log = self.log(mode)
         tsc = S.TS_COL[mode]
         ign = (_GBID,) if n_bids else ()
-        gb_base = ["ticker"] if mode == "streaming" else ["ticker", "interval"]
+        # the finest stats grain: each increment folds from these rows
+        gb_base = max(self._stats_keys(mode).values(), key=len)
         gb = gb_base + list(ign)
 
         def _zero():
@@ -733,6 +830,7 @@ class ManifestStore:
 
         for _attempt in range(self.MAX_COMMIT_RETRIES):
             state = log.state()
+            state["written"] = []
             versioned = compute_versioned_delta(
                 batch, None, mode, self.tz, ignore_cols=ign
             )
@@ -752,21 +850,12 @@ class ManifestStore:
                 and grows["ticker"].null_count == 0
                 and dir_meta[tsc][0] is not None
             )
-            meta = state["meta"]
-
-            def _may_touch(m: dict | None) -> bool:
-                if not m:
-                    return True  # unknown bounds: must read
-                return not (
-                    self._bounds_disjoint(m.get("ticker"), dir_meta["ticker"])
-                    or self._bounds_disjoint(m.get(tsc), dir_meta[tsc])
+            overlap = [
+                d for d in state["dirs"]
+                if not keys_total or _may_touch(
+                    state["meta"].get(d), tsc, dir_meta["ticker"], dir_meta[tsc]
                 )
-
-            overlap = (
-                [d for d in state["dirs"] if _may_touch(meta.get(d))]
-                if keys_total
-                else list(state["dirs"])
-            )
+            ]
             if overlap:
                 # some live dir may share keys: re-run the dedup/version
                 # pass against just those dirs.  The optimistic delta is
@@ -790,20 +879,15 @@ class ManifestStore:
                 dir_meta = _meta_of(grows, tsc)
             base_version = state["version"]
             new_version = base_version + 1
-            batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
             out = delta.drop(*ign)
             # distinct partition-tuple count, free from the stats rows:
             # pins the write's repartition width so each partition value
             # is one task and its file create runs in parallel (r12 —
-            # see cluster_for_write)
-            n_parts = len(_touched_parts(grows, parts)) if parts else None
-            # micro deltas: files come straight from the collected Arrow
-            # table, driver-side — the fresh batch dir stays invisible
-            # until the manifest rename, so the crash model is unchanged
-            out.write(
-                os.path.join(self.data_path(mode), batch_dir),
-                mode,
-                n_parts=n_parts,
+            # see cluster_for_write).  Micro deltas write their files
+            # straight from the collected Arrow table, driver-side.
+            batch_dir = self._write_batch_dir(
+                out, mode, state,
+                n_parts=len(_touched_parts(grows, parts)) if parts else None,
             )
 
             # batch-only stats depend ONLY on this delta — written ONCE
@@ -814,29 +898,17 @@ class ManifestStore:
             # snapshot instead (the Spark merge path) so the fold chain
             # stays bounded.
             fold_now = len(state["stats_incs"]) >= self.STATS_FOLD_EVERY
-            whichs = (
-                [("table", False)]
-                if mode == "streaming"
-                else [("table", False), ("interval", True)]
-            )
             if fold_now:
-                stats_dir = f"stats-{new_version:08d}-{uuid.uuid4().hex[:8]}"
-                stats_ptr = {}
-                for which, by_interval in whichs:
-                    bdf = merge_stats(
-                        self._read_stats(mode, which),
-                        batch_stats(out.df, mode, by_interval),
-                        self._STATS_KEYS[which],
-                    )
-                    rel = os.path.join(stats_dir, which)
-                    bdf.coalesce(1).write.parquet(
-                        os.path.join(log.log_dir, rel)
-                    )
-                    stats_ptr[which] = rel
+                stats_ptr = self._write_stats(
+                    mode, state, self._stats_plus(mode, state, out.df)
+                )
             else:
-                stats_dir = f"stats-inc-{uuid.uuid4().hex[:12]}"
-                stats_ptr = self._write_stats_increment(
-                    log, stats_dir, mode, grows
+                stats_ptr = self._write_stats(
+                    mode, state,
+                    lambda which, keys: as_catalog_stats(
+                        fold_stats(grows, keys), keys, mode
+                    ),
+                    inc=True,
                 )
             stats_key = "stats" if fold_now else "stats_inc"
 
@@ -902,18 +974,78 @@ class ManifestStore:
             # (extreme contention): clean the invisible output and
             # recompute from fresh state; the outer loop's backoff is
             # the final fairness lever before giving up for real
-            shutil.rmtree(
-                os.path.join(log.log_dir, stats_dir), ignore_errors=True
-            )
-            shutil.rmtree(
-                os.path.join(self.data_path(mode), batch_dir),
-                ignore_errors=True,
-            )
+            self._discard(state)
             _conflict_backoff(_attempt)
-            continue
         raise RuntimeError(
             f"ingest lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
         )
+
+    # -- the rewrite commit protocol --------------------------------------
+    def _commit(self, mode: str, op: str, attempt):
+        """Run one rewrite commit under optimistic concurrency.
+
+        ``attempt(state)`` gets a fresh fold of the log (its prior stats
+        included — nothing re-folds it) with an empty ``state["written"]``
+        list; every invisible batch, stats and CDC dir it writes is
+        recorded there (``_write_batch_dir``, ``_write_stats``,
+        ``_write_cdc``).  It returns ``(payload, result)``, or
+        ``(None, result)`` when there is nothing to commit.  The loop
+        publishes the payload, stamped with ``op`` and ``ts``, at
+        ``state["version"] + 1`` and returns ``result``.  On a lost race
+        it deletes the recorded dirs — no commit references them — backs
+        off and re-runs the attempt against the fresh state."""
+        log = self.log(mode)
+        for i in range(self.MAX_COMMIT_RETRIES):
+            state = log.state()
+            state["written"] = []
+            payload, result = attempt(state)
+            if payload is None:
+                return result
+            try:
+                log.try_commit(
+                    state["version"] + 1, dict(payload, op=op, ts=time.time())
+                )
+                return result
+            except CommitConflict:
+                self._discard(state)
+                _conflict_backoff(i)
+        raise RuntimeError(
+            f"{op} lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
+        )
+
+    @staticmethod
+    def _discard(state: dict) -> None:
+        """Delete the invisible dirs a losing attempt wrote."""
+        for path in state["written"]:
+            shutil.rmtree(path, ignore_errors=True)
+
+    def _write_batch_dir(
+        self, delta: Delta, mode: str, state: dict,
+        meta: dict | None = None, n_parts: int | None = None,
+    ) -> str:
+        """Write ``delta`` as a fresh batch dir (invisible until the
+        manifest commit; recorded in ``state``) and, given ``meta``,
+        record its data-skipping bounds there — from the grouped-stats
+        table, so a micro delta costs no job for them."""
+        batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
+        path = os.path.join(self.data_path(mode), batch_dir)
+        state["written"].append(path)
+        delta.write(path, mode, n_parts=n_parts)
+        if meta is not None:
+            tsc = S.TS_COL[mode]
+            meta[batch_dir] = _meta_of(delta.stat_rows(["ticker"], tsc), tsc)
+        return batch_dir
+
+    def _write_cdc(self, mode: str, state: dict, cdc: DataFrame) -> str:
+        """Write a commit's change set under the log (invisible until the
+        commit; recorded in ``state``): micro change sets are one
+        driver-side file, with no sort — CDC rows carry no ordering
+        contract."""
+        rel = f"cdc-{state['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
+        path = os.path.join(self.log(mode).log_dir, rel)
+        state["written"].append(path)
+        _probe(cdc).write(path)
+        return rel
 
     # -- physical mutation: MERGE / DELETE (file-pruned rewrite) ---------
     def _dirs_overlapping_keys(
@@ -939,39 +1071,11 @@ class ManifestStore:
         ).collect()[0]
         if not b[0] or b[1] != b[0] or b[2] != b[0]:
             return dirs  # empty or NULL keys: cannot bound
-        bt = [_j(b[3]), _j(b[4])]
-        bts = [_j(b[5]), _j(b[6])]
-        meta = state["meta"]
-
-        def may_touch(m: dict | None) -> bool:
-            if not m:
-                return True
-            return not (
-                self._bounds_disjoint(m.get("ticker"), bt)
-                or self._bounds_disjoint(m.get(tsc), bts)
-            )
-
-        return [d for d in dirs if may_touch(meta.get(d))]
-
-    def _read_dirs_tagged(self, mode: str, dirs: list[str]) -> DataFrame | None:
-        """Snapshot union with a ``__dir`` provenance column — the probe
-        frame file pruning works on (which batch dirs does the mutation
-        actually touch)."""
-        if not dirs:
-            return None
-        frames = []
-        for d in dirs:
-            p = os.path.join(self.data_path(mode), d)
-            frames.append(
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", p)
-                .parquet(p)
-                .withColumn("__dir", F.lit(d))
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        tickers, ts = [_j(b[3]), _j(b[4])], [_j(b[5]), _j(b[6])]
+        return [
+            d for d in dirs
+            if _may_touch(state["meta"].get(d), tsc, tickers, ts)
+        ]
 
     def _dir_meta(self, df: DataFrame, mode: str) -> dict:
         """Per-dir data-skipping bounds: [min, max] of ticker and the
@@ -994,27 +1098,6 @@ class ManifestStore:
         }
         meta["n"] = row[2 * len(cols)]
         return meta
-
-    def _write_batch_dir(
-        self, delta: Delta, mode: str, meta_out: dict | None = None
-    ) -> str:
-        """Write ``delta`` as a fresh batch dir (invisible until the
-        manifest commit) and record its data-skipping bounds in
-        ``meta_out`` — from the grouped-stats table, so a micro delta
-        costs no job for them."""
-        batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
-        delta.write(os.path.join(self.data_path(mode), batch_dir), mode)
-        if meta_out is not None:
-            tsc = S.TS_COL[mode]
-            meta_out[batch_dir] = _meta_of(delta.stat_rows(["ticker"], tsc), tsc)
-        return batch_dir
-
-    def _write_cdc(self, log: ManifestLog, version: int, cdc: DataFrame) -> str:
-        rel = f"cdc-{version:08d}-{uuid.uuid4().hex[:8]}"
-        # micro change sets: one driver-side file (no sort — CDC rows
-        # carry no ordering contract), invisible until the commit
-        _probe(cdc).write(os.path.join(log.log_dir, rel))
-        return rel
 
     def _check_observers(self, action: str, on_observers: str) -> None:
         # Incremental MVs fold APPEND deltas; a physical update/delete
@@ -1059,7 +1142,6 @@ class ManifestStore:
         """
         self._check_observers("merge", on_observers)
         keys = S.INDEX_COLS[mode]
-        log = self.log(mode)
         src, _n_src, stbl = materialize_micro(source)
         if stbl is not None:
             # driver-side key-uniqueness check over the collected rows —
@@ -1072,8 +1154,8 @@ class ManifestStore:
         if dup:
             raise ValueError("merge source must be unique on index keys")
         src_payload = [c for c in src.columns if c not in keys]
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
+
+        def attempt(state):
             # commit-level probe pruning (r8): only dirs whose recorded
             # key rectangles can intersect the source's participate in
             # BOTH the touched-dir discovery and the insert anti-join —
@@ -1081,23 +1163,20 @@ class ManifestStore:
             # disjoint rectangles.  An upsert against a time-ordered
             # store probes O(touched) dirs, not the store.
             probe_dirs = self._dirs_overlapping_keys(mode, src, state)
-            tagged = self._read_dirs_tagged(mode, probe_dirs)
+            tagged = self._read_dirs(mode, probe_dirs, tag=True)
             src_keys = src.select(*keys).distinct()
             adds: list[str] = []
             removes: list[str] = []
-            meta_map: dict[str, dict] = {}
-            cdc_frames: list[DataFrame] = []
+            meta: dict[str, dict] = {}
+            cdc: list[DataFrame] = []
             n_upd = 0
-            if tagged is not None:
-                touched = sorted(
-                    r[0]
-                    for r in tagged.join(src_keys, on=keys, how="left_semi")
-                    .select("__dir")
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = []
+            touched = [] if tagged is None else sorted(
+                r[0]
+                for r in tagged.join(src_keys, on=keys, how="left_semi")
+                .select("__dir")
+                .distinct()
+                .collect()
+            )
             if touched:
                 tdf = self._read_dirs(mode, touched)
                 pre = tdf.join(src_keys, on=keys, how="left_semi")
@@ -1117,101 +1196,54 @@ class ManifestStore:
                 ]
                 post = tdf.join(s2, on=keys, how="inner").select(*repl, *new_cols)
                 post, n_upd, _ptbl = materialize_micro(post)
-                rewrite = keep.unionByName(post, allowMissingColumns=True)
-                adds.append(
-                    self._write_batch_dir(
-                        _probe(rewrite), mode, meta_out=meta_map
-                    )
-                )
-                removes = list(touched)
-                cdc_frames.append(
+                adds.append(self._write_batch_dir(
+                    _probe(_union([keep, post])), mode, state, meta
+                ))
+                removes = touched
+                cdc.append(
                     pre.withColumn("_change_type", F.lit("update_preimage"))
                 )
-                cdc_frames.append(
+                cdc.append(
                     post.withColumn("_change_type", F.lit("update_postimage"))
                 )
-            if tagged is not None:
-                ins_src = src.join(
-                    tagged.select(*keys), on=keys, how="left_anti"
-                )
-            else:
-                ins_src = src
-            inserts = compute_versioned_delta(ins_src, None, mode, self.tz)
-            ins = materialize_micro(inserts)
-            inserts, n_ins = ins.df, ins.n
+            ins_src = src if tagged is None else src.join(
+                tagged.select(*keys), on=keys, how="left_anti"
+            )
+            ins = materialize_micro(
+                compute_versioned_delta(ins_src, None, mode, self.tz)
+            )
             # pure update: carry the stats snapshot AND the outstanding
             # increment chain forward verbatim (index keys can't move);
             # with inserts, materialize a fresh cumulative snapshot
             # (the _read_stats fold already includes the chain)
-            stats_ptr, stats_incs = self._stats_state(mode)
-            stats_dir = None
-            new_version = state["version"] + 1
-            if n_ins:
-                stats_incs = []
-                adds.append(
-                    self._write_batch_dir(ins, mode, meta_out=meta_map)
-                )
-                cdc_frames.append(
-                    inserts.withColumn("_change_type", F.lit("insert"))
-                )
-                stats_ptr = {}
-                stats_dir = f"stats-{new_version:08d}-{uuid.uuid4().hex[:8]}"
-                for which, by_interval in (("table", False), ("interval", True)):
-                    if by_interval and mode == "streaming":
-                        continue
-                    skeys = ["ticker", "interval"] if by_interval else ["ticker"]
-                    prior = self._read_stats(mode, which)
-                    merged = merge_stats(
-                        prior, batch_stats(inserts, mode, by_interval), skeys
-                    )
-                    rel = os.path.join(stats_dir, which)
-                    merged.coalesce(1).write.parquet(
-                        os.path.join(log.log_dir, rel)
-                    )
-                    stats_ptr[which] = rel
-            if not adds:
-                return {"updated": 0, "inserted": 0, "rewritten_dirs": 0,
-                        "version": state["version"]}
-            cdc = cdc_frames[0]
-            for f in cdc_frames[1:]:
-                cdc = cdc.unionByName(f, allowMissingColumns=True)
-            cdc_rel = self._write_cdc(log, new_version, cdc)
-            try:
-                log.try_commit(
-                    new_version,
-                    {
-                        "adds": adds,
-                        "removes": removes,
-                        "stats": stats_ptr,
-                        "stats_incs": stats_incs,
-                        "meta": meta_map,
-                        "op": "merge",
-                        "cdc": cdc_rel,
-                        "ts": time.time(),
-                    },
-                )
-                return {
-                    "updated": n_upd,
-                    "inserted": n_ins,
-                    "rewritten_dirs": len(removes),
-                    "version": new_version,
+            stats = {"stats": state["stats"], "stats_incs": state["stats_incs"]}
+            if ins.n:
+                adds.append(self._write_batch_dir(ins, mode, state, meta))
+                cdc.append(ins.df.withColumn("_change_type", F.lit("insert")))
+                stats = {
+                    "stats": self._write_stats(
+                        mode, state, self._stats_plus(mode, state, ins.df)
+                    ),
+                    "stats_incs": [],
                 }
-            except CommitConflict:
-                for d in adds:
-                    shutil.rmtree(
-                        os.path.join(self.data_path(mode), d),
-                        ignore_errors=True,
-                    )
-                for d in (cdc_rel, stats_dir):
-                    if d:
-                        shutil.rmtree(
-                            os.path.join(log.log_dir, d), ignore_errors=True
-                        )
-                _conflict_backoff(_attempt)
-                continue
-        raise RuntimeError(
-            f"merge lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
-        )
+            if not adds:
+                return None, {"updated": 0, "inserted": 0, "rewritten_dirs": 0,
+                              "version": state["version"]}
+            payload = {
+                "adds": adds,
+                "removes": removes,
+                **stats,
+                "meta": meta,
+                "cdc": self._write_cdc(mode, state, _union(cdc)),
+            }
+            return payload, {
+                "updated": n_upd,
+                "inserted": ins.n,
+                "rewritten_dirs": len(removes),
+                "version": state["version"] + 1,
+            }
+
+        return self._commit(mode, "merge", attempt)
 
     def delete_where(
         self,
@@ -1224,24 +1256,19 @@ class ManifestStore:
         matching row (file-pruned like ``merge``).  NULL predicate rows
         are KEPT (SQL DELETE semantics: only TRUE deletes).
 
-        Stats cannot be decremented from the O(1) merge form (count/
-        min/max are not subtractable), so the affected (ticker[,
-        interval]) stats rows are recomputed exactly from the
-        post-delete snapshot — bounded by the tickers the delete
-        touched, never a full rescan of untouched tickers.  The commit
-        carries a CDC file of the deleted rows (_change_type='delete').
+        The affected (ticker[, interval]) stats rows are recomputed
+        exactly from the post-delete snapshot (``_stats_after_removal``).
+        The commit carries a CDC file of the deleted rows
+        (_change_type='delete').
         """
         self._check_observers("delete_where", on_observers)
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cond_true = F.coalesce(cond, F.lit(False))
-        log = self.log(mode)
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
-            tagged = self._read_dirs_tagged(mode, state["dirs"])
-            if tagged is None:
-                return {"deleted": 0, "rewritten_dirs": 0,
-                        "version": state["version"]}
-            touched = sorted(
+        finest = max(self._stats_keys(mode).values(), key=len)
+
+        def attempt(state):
+            tagged = self._read_dirs(mode, state["dirs"], tag=True)
+            touched = [] if tagged is None else sorted(
                 r[0]
                 for r in tagged.where(cond_true)
                 .select("__dir")
@@ -1249,93 +1276,36 @@ class ManifestStore:
                 .collect()
             )
             if not touched:
-                return {"deleted": 0, "rewritten_dirs": 0,
-                        "version": state["version"]}
+                return None, {"deleted": 0, "rewritten_dirs": 0,
+                              "version": state["version"]}
             tdf = self._read_dirs(mode, touched)
-            doomed, n_del, _dtbl = materialize_micro(tdf.where(cond_true))
+            doomed = materialize_micro(tdf.where(cond_true))
             keep = materialize_micro(tdf.where(~cond_true))
-            adds = []
-            meta_map: dict[str, dict] = {}
-            if keep.n:
-                adds.append(
-                    self._write_batch_dir(keep, mode, meta_out=meta_map)
-                )
-            new_version = state["version"] + 1
-            untouched = [d for d in state["dirs"] if d not in touched]
-            post_dirs = untouched + adds
-            post = self._read_dirs(mode, post_dirs)
-            stats_ptr = {}
-            stats_dir = f"stats-{new_version:08d}-{uuid.uuid4().hex[:8]}"
-            for which, by_interval in (("table", False), ("interval", True)):
-                if by_interval and mode == "streaming":
-                    continue
-                skeys = ["ticker", "interval"] if by_interval else ["ticker"]
-                prior = self._read_stats(mode, which)
-                affected = doomed.select(*skeys).distinct()
-                if post is not None:
-                    recomputed = batch_stats(
-                        post.join(affected, on=skeys, how="left_semi"),
-                        mode,
-                        by_interval,
-                    )
-                else:
-                    recomputed = None
-                if prior is not None:
-                    kept_stats = prior.join(
-                        affected, on=skeys, how="left_anti"
-                    )
-                    merged = (
-                        kept_stats.unionByName(recomputed)
-                        if recomputed is not None
-                        else kept_stats
-                    )
-                else:
-                    merged = recomputed
-                if merged is None:
-                    continue
-                rel = os.path.join(stats_dir, which)
-                merged.coalesce(1).write.parquet(
-                    os.path.join(log.log_dir, rel)
-                )
-                stats_ptr[which] = rel
-            cdc_rel = self._write_cdc(
-                log,
-                new_version,
-                doomed.withColumn("_change_type", F.lit("delete")),
+            meta: dict[str, dict] = {}
+            adds = (
+                [self._write_batch_dir(keep, mode, state, meta)]
+                if keep.n else []
             )
-            try:
-                log.try_commit(
-                    new_version,
-                    {
-                        "adds": adds,
-                        "removes": list(touched),
-                        "stats": stats_ptr,
-                        "meta": meta_map,
-                        "op": "delete",
-                        "cdc": cdc_rel,
-                        "ts": time.time(),
-                    },
-                )
-                return {
-                    "deleted": n_del,
-                    "rewritten_dirs": len(touched),
-                    "version": new_version,
-                }
-            except CommitConflict:
-                for d in adds:
-                    shutil.rmtree(
-                        os.path.join(self.data_path(mode), d),
-                        ignore_errors=True,
-                    )
-                for d in (cdc_rel, stats_dir):
-                    shutil.rmtree(
-                        os.path.join(log.log_dir, d), ignore_errors=True
-                    )
-                _conflict_backoff(_attempt)
-                continue
-        raise RuntimeError(
-            f"delete lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
-        )
+            affected = doomed.df.select(*finest).distinct()
+            payload = {
+                "adds": adds,
+                "removes": touched,
+                "stats": self._stats_after_removal(
+                    mode, state, affected, touched, adds
+                ),
+                "meta": meta,
+                "cdc": self._write_cdc(
+                    mode, state,
+                    doomed.df.withColumn("_change_type", F.lit("delete")),
+                ),
+            }
+            return payload, {
+                "deleted": doomed.n,
+                "rewritten_dirs": len(touched),
+                "version": state["version"] + 1,
+            }
+
+        return self._commit(mode, "delete", attempt)
 
     def retain_before(
         self, mode: str, cutoff, cdc: bool = False,
@@ -1366,9 +1336,9 @@ class ManifestStore:
         self._check_observers("retain_before", on_observers)
         tsc = S.TS_COL[mode]
         cut = _j(cutoff)
-        log = self.log(mode)
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
+        expired_rows = F.col(tsc) < F.lit(cutoff)
+
+        def attempt(state):
             doomed_dirs: list[str] = []
             straddle: list[str] = []
             for d in state["dirs"]:
@@ -1381,125 +1351,53 @@ class ManifestStore:
                     straddle.append(d)
             adds: list[str] = []
             removes: list[str] = []
-            meta_map: dict[str, dict] = {}
-            cdc_frames = []
-            n_dropped_dirs = len(doomed_dirs)
-            affected = None  # tickers whose stats must be recomputed
+            meta: dict[str, dict] = {}
+            gone: list[DataFrame] = []  # rows leaving the snapshot
+            affected: list[DataFrame] = []  # tickers whose stats move
             if straddle:
                 sdf = self._read_dirs(mode, straddle)
-                expired, n_exp, _etbl = materialize_micro(
-                    sdf.where(F.col(tsc) < F.lit(cutoff))
-                )
-                if n_exp:
-                    keep = materialize_micro(
-                        sdf.where(~(F.col(tsc) < F.lit(cutoff)))
-                    )
+                expired = materialize_micro(sdf.where(expired_rows))
+                if expired.n:
+                    keep = materialize_micro(sdf.where(~expired_rows))
                     if keep.n:
                         adds.append(
-                            self._write_batch_dir(
-                                keep, mode, meta_out=meta_map
-                            )
+                            self._write_batch_dir(keep, mode, state, meta)
                         )
                     removes += straddle
-                    affected = expired.select("ticker").distinct()
-                    if cdc:
-                        cdc_frames.append(
-                            expired.withColumn("_change_type", F.lit("delete"))
-                        )
+                    affected.append(expired.df.select("ticker"))
+                    gone.append(expired.df)
             if doomed_dirs:
                 removes += doomed_dirs
                 ddf = self._read_dirs(mode, doomed_dirs)
                 # one-column scan: just the tickers (stats recompute set);
                 # with cdc=True the full rows are read once for the feed
-                aff2 = ddf.select("ticker").distinct()
-                affected = (
-                    aff2 if affected is None
-                    else affected.unionByName(aff2).distinct()
-                )
-                if cdc:
-                    cdc_frames.append(
-                        ddf.withColumn("_change_type", F.lit("delete"))
-                    )
+                affected.append(ddf.select("ticker"))
+                gone.append(ddf)
             if not removes:
-                return {"deleted_dirs": 0, "rewritten_dirs": 0,
-                        "version": state["version"]}
-            affected = affected.localCheckpoint(eager=True)
-            new_version = state["version"] + 1
-            untouched = [d for d in state["dirs"] if d not in set(removes)]
-            post = self._read_dirs(mode, untouched + adds)
-            stats_ptr = {}
-            stats_dir = f"stats-{new_version:08d}-{uuid.uuid4().hex[:8]}"
-            for which, by_interval in (("table", False), ("interval", True)):
-                if by_interval and mode == "streaming":
-                    continue
-                skeys = ["ticker", "interval"] if by_interval else ["ticker"]
-                prior = self._read_stats(mode, which)
-                if post is not None:
-                    recomputed = batch_stats(
-                        post.join(affected, on="ticker", how="left_semi"),
-                        mode,
-                        by_interval,
-                    )
-                else:
-                    recomputed = None
-                if prior is not None:
-                    kept_stats = prior.join(
-                        affected, on="ticker", how="left_anti"
-                    )
-                    merged = (
-                        kept_stats.unionByName(recomputed)
-                        if recomputed is not None
-                        else kept_stats
-                    )
-                else:
-                    merged = recomputed
-                if merged is None:
-                    continue
-                rel = os.path.join(stats_dir, which)
-                merged.coalesce(1).write.parquet(
-                    os.path.join(log.log_dir, rel)
-                )
-                stats_ptr[which] = rel
-            cdc_rel = None
-            if cdc and cdc_frames:
-                cdcdf = cdc_frames[0]
-                for f in cdc_frames[1:]:
-                    cdcdf = cdcdf.unionByName(f, allowMissingColumns=True)
-                cdc_rel = self._write_cdc(log, new_version, cdcdf)
+                return None, {"deleted_dirs": 0, "rewritten_dirs": 0,
+                              "version": state["version"]}
+            aff = _union(affected).distinct().localCheckpoint(eager=True)
             payload = {
                 "adds": adds,
                 "removes": removes,
-                "stats": stats_ptr,
-                "meta": meta_map,
-                "op": "retain",
-                "ts": time.time(),
+                "stats": self._stats_after_removal(
+                    mode, state, aff, removes, adds
+                ),
+                "meta": meta,
             }
-            if cdc_rel:
-                payload["cdc"] = cdc_rel
-            try:
-                log.try_commit(new_version, payload)
-                return {
-                    "deleted_dirs": n_dropped_dirs,
-                    # straddlers are removed only when they held expired rows
-                    "rewritten_dirs": len(removes) - n_dropped_dirs,
-                    "version": new_version,
-                }
-            except CommitConflict:
-                for d in adds:
-                    shutil.rmtree(
-                        os.path.join(self.data_path(mode), d),
-                        ignore_errors=True,
-                    )
-                for d in (cdc_rel, stats_dir):
-                    if d:
-                        shutil.rmtree(
-                            os.path.join(log.log_dir, d), ignore_errors=True
-                        )
-                _conflict_backoff(_attempt)
-                continue
-        raise RuntimeError(
-            f"retain_before lost {self.MAX_COMMIT_RETRIES} races on {mode}"
-        )
+            if cdc:
+                payload["cdc"] = self._write_cdc(
+                    mode, state,
+                    _union(gone).withColumn("_change_type", F.lit("delete")),
+                )
+            return payload, {
+                "deleted_dirs": len(doomed_dirs),
+                # straddlers are removed only when they held expired rows
+                "rewritten_dirs": len(removes) - len(doomed_dirs),
+                "version": state["version"] + 1,
+            }
+
+        return self._commit(mode, "retain", attempt)
 
     def widen_types(self, mode: str) -> dict:
         """Cast-rewrite files whose physical column types conflict (the
@@ -1590,41 +1488,29 @@ class ManifestStore:
             else:
                 continue
             frames.append(df.withColumn("_commit_version", F.lit(v)))
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        return _union(frames)
 
     # -- maintenance -----------------------------------------------------
     def compact(self, mode: str) -> dict:
         """Rewrite all live batch dirs into one and swap atomically.
         Readers of the old snapshot keep working (old dirs survive
         until gc_orphans); new readers see one dir."""
-        parts = PARTITION_COLS[mode]
-        log = self.log(mode)
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
-            if len(state["dirs"]) <= 1:
-                return {"rewritten": 0, "dirs_before": len(state["dirs"])}
-            df = self._read_dirs(mode, state["dirs"])
-            new_dir = f"batch-{uuid.uuid4().hex[:12]}"
+
+        def attempt(state):
+            dirs = state["dirs"]
+            if len(dirs) <= 1:
+                return None, {"rewritten": 0, "dirs_before": len(dirs)}
+            df = self._read_dirs(mode, dirs)
             # live row count folds driver-side from the per-dir "n" meta
             # (exactly what the auto-compact cadence reads) — lets the
             # rewrite use the one-file-per-partition layout when small
-            metas = [state["meta"].get(d) for d in state["dirs"]]
+            metas = [state["meta"].get(d) for d in dirs]
             live_rows = (
                 sum(m["n"] for m in metas)
                 if all(m and m.get("n") is not None for m in metas)
                 else None
             )
-            writer = cluster_for_write(df, mode, n_rows=live_rows).write.option(
-                "compression", "zstd"
-            )
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(os.path.join(self.data_path(mode), new_dir))
+            new_dir = self._write_batch_dir(Delta(df, live_rows), mode, state)
             # data-skipping bounds for the compacted dir: fold the old
             # dirs' recorded bounds when every one has them (no extra
             # scan); otherwise one scalar aggregate over the rewrite
@@ -1643,37 +1529,22 @@ class ManifestStore:
                     new_meta["n"] = live_rows
             else:
                 new_meta = self._dir_meta(df, mode)
-            try:
-                log.try_commit(
-                    state["version"] + 1,
-                    {
-                        "adds": [new_dir],
-                        "removes": list(state["dirs"]),
-                        # physical rewrite: stats are untouched — carry
-                        # the snapshot AND the outstanding increment
-                        # chain forward verbatim
-                        "stats": state["stats"],
-                        "stats_incs": state["stats_incs"],
-                        "meta": {new_dir: new_meta},
-                        "op": "compact",
-                        "ts": time.time(),
-                    },
-                )
-                return {
-                    "rewritten": len(state["dirs"]),
-                    "dirs_before": len(state["dirs"]),
-                }
-            except CommitConflict:
-                shutil.rmtree(
-                    os.path.join(self.data_path(mode), new_dir),
-                    ignore_errors=True,
-                )
-                _conflict_backoff(_attempt)
-                continue
-        raise RuntimeError(f"compact lost {self.MAX_COMMIT_RETRIES} races")
+            payload = {
+                "adds": [new_dir],
+                "removes": list(dirs),
+                # physical rewrite: stats are untouched — carry the
+                # snapshot AND the outstanding increment chain forward
+                # verbatim
+                "stats": state["stats"],
+                "stats_incs": state["stats_incs"],
+                "meta": {new_dir: new_meta},
+            }
+            return payload, {"rewritten": len(dirs), "dirs_before": len(dirs)}
+
+        return self._commit(mode, "compact", attempt)
 
     def restore(
-        self, mode: str, to_version: int, on_observers: str = "raise"
+        self, mode: str, to_version: int, on_observers: str = "error"
     ) -> dict:
         """Make an earlier snapshot current again (Delta RESTORE): a new
         commit whose adds/removes swap the live dir set back to
@@ -1686,13 +1557,14 @@ class ManifestStore:
         History is preserved — RESTORE is a new version, and time travel
         into the undone span still works."""
         self._check_observers("restore", on_observers)
-        log = self.log(mode)
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
+
+        def attempt(state):
             if to_version == state["version"]:
-                return {"restored_to": to_version, "version": state["version"],
-                        "n_deleted": 0, "n_reinserted": 0}
-            target = log.state(at_version=to_version)  # VacuumedVersion if gone
+                return None, {"restored_to": to_version,
+                              "version": state["version"],
+                              "n_deleted": 0, "n_reinserted": 0}
+            # VacuumedVersion if gone
+            target = self.log(mode).state(at_version=to_version)
             missing = [
                 d
                 for d in target["dirs"]
@@ -1708,53 +1580,33 @@ class ManifestStore:
             cols = tgt.columns
             deleted = cur.select(*cols).exceptAll(tgt.select(*cols))
             reinserted = tgt.select(*cols).exceptAll(cur.select(*cols))
-            cdc = deleted.withColumn(
-                "_change_type", F.lit("delete")
-            ).unionByName(
-                reinserted.withColumn("_change_type", F.lit("insert"))
-            )
-            cdc = cdc.localCheckpoint(eager=True)
+            cdc = _union([
+                deleted.withColumn("_change_type", F.lit("delete")),
+                reinserted.withColumn("_change_type", F.lit("insert")),
+            ]).localCheckpoint(eager=True)
             n_del = cdc.where(F.col("_change_type") == "delete").count()
             n_ins = cdc.where(F.col("_change_type") == "insert").count()
-            new_version = state["version"] + 1
-            cdc_rel = self._write_cdc(log, new_version, cdc)
-            try:
-                log.try_commit(
-                    new_version,
-                    {
-                        "adds": [
-                            d for d in target["dirs"]
-                            if d not in set(state["dirs"])
-                        ],
-                        "removes": [
-                            d for d in state["dirs"]
-                            if d not in set(target["dirs"])
-                        ],
-                        "stats": target["stats"],
-                        "stats_incs": target["stats_incs"],
-                        "meta": {
-                            d: target["meta"][d]
-                            for d in target["dirs"]
-                            if d in target["meta"]
-                        },
-                        "op": "restore",
-                        "cdc": cdc_rel,
-                        "ts": time.time(),
-                    },
-                )
-                return {
-                    "restored_to": to_version,
-                    "version": new_version,
-                    "n_deleted": n_del,
-                    "n_reinserted": n_ins,
-                }
-            except CommitConflict:
-                shutil.rmtree(
-                    os.path.join(log.log_dir, cdc_rel), ignore_errors=True
-                )
-                _conflict_backoff(_attempt)
-                continue
-        raise RuntimeError(f"restore lost {self.MAX_COMMIT_RETRIES} races")
+            live, back = set(state["dirs"]), set(target["dirs"])
+            payload = {
+                "adds": [d for d in target["dirs"] if d not in live],
+                "removes": [d for d in state["dirs"] if d not in back],
+                "stats": target["stats"],
+                "stats_incs": target["stats_incs"],
+                "meta": {
+                    d: target["meta"][d]
+                    for d in target["dirs"]
+                    if d in target["meta"]
+                },
+                "cdc": self._write_cdc(mode, state, cdc),
+            }
+            return payload, {
+                "restored_to": to_version,
+                "version": state["version"] + 1,
+                "n_deleted": n_del,
+                "n_reinserted": n_ins,
+            }
+
+        return self._commit(mode, "restore", attempt)
 
     def convert_from(self, path: str, mode: str) -> dict:
         """Adopt an existing Hive-partitioned parquet tree at ``path`` as
@@ -1770,13 +1622,17 @@ class ManifestStore:
         exactly as if it had been ingested here, so the rows should carry
         the store's columns (``version`` and the mode's partition
         columns included).  Refuses a non-empty target (the adopted
-        snapshot must BE version 1, or time travel would lie)."""
-        log = self.log(mode)
-        if log.version() != 0:
-            raise ValueError(
+        snapshot must BE version 1, or time travel would lie) — also
+        when a racing writer commits first."""
+
+        def refuse(v):
+            return ValueError(
                 f"convert_from requires an empty target log; {mode} is at "
-                f"version {log.version()}"
+                f"version {v}"
             )
+
+        if self.log(mode).version() != 0:
+            raise refuse(self.log(mode).version())
         if not os.path.exists(path):
             return {"adopted_rows": 0, "version": 0}
         try:
@@ -1788,32 +1644,25 @@ class ManifestStore:
                 return {"adopted_rows": 0, "version": 0}
             raise
         delta = materialize_micro(df)
-        df, n = delta.df, delta.n
-        meta_map: dict[str, dict] = {}
-        batch_dir = self._write_batch_dir(delta, mode, meta_out=meta_map)
-        stats_ptr = {}
-        stats_dir = f"stats-{1:08d}-{uuid.uuid4().hex[:8]}"
-        for which, by_interval in (("table", False), ("interval", True)):
-            if by_interval and mode == "streaming":
-                continue
-            merged = batch_stats(df, mode, by_interval)
-            rel = os.path.join(stats_dir, which)
-            merged.coalesce(1).write.parquet(os.path.join(log.log_dir, rel))
-            stats_ptr[which] = rel
-        log.try_commit(
-            1,
-            {
-                "adds": [batch_dir],
+
+        def attempt(state):
+            if state["version"] != 0:
+                raise refuse(state["version"])
+            meta: dict[str, dict] = {}
+            payload = {
+                "adds": [self._write_batch_dir(delta, mode, state, meta)],
                 "removes": [],
-                "stats": stats_ptr,
-                "meta": meta_map,
-                "op": "convert",
-                "ts": time.time(),
-            },
-        )
+                "stats": self._write_stats(
+                    mode, state, self._stats_plus(mode, state, delta.df)
+                ),
+                "meta": meta,
+            }
+            return payload, {"adopted_rows": delta.n, "version": 1}
+
+        out = self._commit(mode, "convert", attempt)
         for obs in self.observers:
-            obs(df, mode)
-        return {"adopted_rows": n, "version": 1}
+            obs(delta.df, mode)
+        return out
 
     def vacuum(self, mode: str, retain_last: int = 8) -> dict:
         """Truncate commit history to the last ``retain_last`` versions —
@@ -1824,30 +1673,24 @@ class ManifestStore:
         re-read by EVERY ``state()`` fold; at 100 TB the metadata pass
         would dominate small reads long before the data does.
 
-        Mechanics (each step crash-safe on its own):
-
-        1. pick the horizon H = current - retain_last + 1;
-        2. rewrite commit H in place (tmp + atomic rename) as a
-           self-contained CHECKPOINT: adds = full live dir list at H,
-           removes = [], stats = stats pointer at H — state(H..) folds
-           identically whether or not older commits still exist, so a
-           crash between steps leaves a correct log;
-        3. delete commit files < H.  Stats/CDC dirs they referenced
-           become unreferenced and age out via ``gc_orphans`` (which
-           also gives in-flight readers its grace window).
+        The horizon is H = current - retain_last + 1; commit H becomes
+        a self-contained CHECKPOINT (adds = full live dir list at H,
+        removes = [], the stats pointer and increment chain at H) and
+        the commits below it are deleted — ``ManifestLog.checkpoint``,
+        each step crash-safe on its own.  Stats/CDC dirs they referenced
+        become unreferenced and age out via ``gc_orphans`` (which also
+        gives in-flight readers its grace window).
 
         Time travel below H and change-feed cursors below H raise
         ``VacuumedVersion`` afterwards — truncation is the documented
         trade, never a silent wrong answer."""
         log = self.log(mode)
         cur = log.version()
-        lo = log.min_version()
         horizon = cur - retain_last + 1
-        if cur == 0 or horizon <= lo:
+        if cur == 0 or horizon <= log.min_version():
             return {"checkpointed": 0, "commits_dropped": 0}
         st = log.state(at_version=horizon)
-        doc = {
-            "version": horizon,
+        dropped = log.checkpoint(horizon, {
             "adds": list(st["dirs"]),
             "removes": [],
             "stats": st["stats"],
@@ -1855,29 +1698,7 @@ class ManifestStore:
             "meta": {d: st["meta"][d] for d in st["dirs"] if d in st["meta"]},
             "op": "checkpoint",
             "ts": time.time(),
-        }
-        final = log._path(horizon)
-        tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)  # atomic: readers see old or new, never torn
-        dropped = 0
-        for v in range(lo, horizon):
-            try:
-                os.remove(log._path(v))
-                dropped += 1
-            except FileNotFoundError:
-                dropped += 1  # a concurrent/prior vacuum already got it
-            except OSError:
-                # STOP on the first failed remove: deleting v+1 while v
-                # survives would leave a GAP — commits() folds a
-                # contiguous [min_version, version] range, and the
-                # ascending deletion order is what guarantees the
-                # retained set is always a contiguous suffix.  The next
-                # vacuum retries from the same horizon.
-                break
+        })
         return {"checkpointed": horizon, "commits_dropped": dropped}
 
     def gc_orphans(self, mode: str, grace_s: float = 3600.0) -> list[str]:
@@ -1898,7 +1719,8 @@ class ManifestStore:
         GC knob are now coupled through the commit references.)"""
         log = self.log(mode)
         commits = log.commits()
-        live = set(log.state()["dirs"])
+        state = log.state()
+        live = set(state["dirs"])
         ever_adds = set(live)
         ever_stats = set()
         ever_cdc = set()
@@ -1914,10 +1736,9 @@ class ManifestStore:
                 ever_cdc.add(c["cdc"].split(os.sep)[0])
         # current stats (snapshot + outstanding increment chain) must
         # survive even past grace
-        cur, cur_incs = self._stats_state(mode)
         cur_stats = {
             rel.split(os.sep)[0]
-            for ptr in [cur or {}] + list(cur_incs)
+            for ptr in [state["stats"] or {}] + state["stats_incs"]
             for rel in ptr.values()
         }
         removed = []

@@ -118,6 +118,80 @@ def test_commit_race_loser_recomputes(spark, tmp_path, mstore):
     assert all(r["version"] == 1 for r in rows)  # replays absorbed, not versioned
 
 
+ROWS_RIVAL = [("QQQ", 1751400000, 1.0, 1.0, 1.0, 1.0, 10, "1h")]
+
+REWRITES = {
+    "merge": lambda s, spark: s.merge(_df(spark, SRC_MERGE), MODE),
+    "delete_where": lambda s, spark: s.delete_where(MODE, "close < 600"),
+    "retain_before": lambda s, spark: s.retain_before(MODE, 1751466600),
+    "retain_before_cdc": lambda s, spark: s.retain_before(
+        MODE, 1751466600, cdc=True
+    ),
+    "compact": lambda s, spark: s.compact(MODE),
+    "restore": lambda s, spark: s.restore(MODE, 1),
+}
+
+
+def _rows(df):
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
+@pytest.mark.parametrize("op", sorted(REWRITES))
+def test_rewrite_commit_conflict_path(spark, tmp_path, monkeypatch, op):
+    """Every rewrite commit's lost-race path: an always-conflicting log
+    raises RuntimeError and leaves nothing behind; one rival commit
+    landing before the first publish makes the rewrite recompute
+    against it and end exactly where a conflict-free run does — with
+    the losing attempt's invisible dirs cleaned up."""
+    import shutil
+
+    import stock_ops_spark.sources.commitlog as cl
+
+    run = REWRITES[op]
+    store = ManifestStore(spark, str(tmp_path / "raced"))
+    store.ingest_batch(_df(spark, ROWS_B1), MODE)
+    store.ingest_batch(_df(spark, ROWS_B2), MODE)
+    shutil.copytree(store.root, str(tmp_path / "ref"))
+    ref = ManifestStore(spark, str(tmp_path / "ref"))
+    ref.ingest_batch(_df(spark, ROWS_RIVAL), MODE)
+    want = run(ref, spark)
+
+    before = _rows(store.read_all(MODE))
+    real_commit = ManifestLog.try_commit
+
+    def always_lose(self, version, payload):
+        raise CommitConflict(f"version {version} already committed")
+
+    with monkeypatch.context() as m:
+        m.setattr(ManifestStore, "MAX_COMMIT_RETRIES", 1)
+        m.setattr(cl, "_conflict_backoff", lambda attempt: None)
+        m.setattr(ManifestLog, "try_commit", always_lose)
+        with pytest.raises(RuntimeError, match="commit races"):
+            run(store, spark)
+    assert store.gc_orphans(MODE, grace_s=0.0) == []
+    assert store.version(MODE) == 2
+    assert _rows(store.read_all(MODE)) == before
+
+    rival = ManifestStore(spark, store.root)
+    published = []
+
+    def racing(self, version, payload):
+        published.append((version, payload.get("op")))
+        if len(published) == 1:
+            rival.ingest_batch(_df(spark, ROWS_RIVAL), MODE)  # wins it
+        return real_commit(self, version, payload)
+
+    monkeypatch.setattr(cl, "_conflict_backoff", lambda attempt: None)
+    monkeypatch.setattr(ManifestLog, "try_commit", racing)
+    got = run(store, spark)
+    # the loser tried version 3 (taken by the rival), then won 4
+    assert [v for v, o in published if o != "ingest"] == [3, 4]
+    assert got == want
+    assert _rows(store.read_all(MODE)) == _rows(ref.read_all(MODE))
+    assert _rows(store.table_stats(MODE)) == _rows(ref.table_stats(MODE))
+    assert store.gc_orphans(MODE, grace_s=0.0) == []
+
+
 def test_compaction_atomic_swap_and_gc(spark, mstore):
     mstore.ingest_batch(_df(spark, ROWS_B1), MODE)
     mstore.ingest_batch(_df(spark, ROWS_B2), MODE)

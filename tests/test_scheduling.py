@@ -673,6 +673,42 @@ def test_compact_crash_between_checkpoint_and_delete_is_harmless(tmp_path):
     assert api._fold() == after
 
 
+def test_compact_stops_on_failed_remove_no_gap(tmp_path, monkeypatch):
+    """A delete that fails mid-truncation must STOP the loop: deleting
+    the newer commits past it would leave a gap in the contiguous
+    [min_version, version] range the fold reads, and every later fold
+    (so every scheduler tick) would raise FileNotFoundError."""
+    api, ops = _mk_ops(tmp_path)
+    cfg = {"deployment_name": "d1", "deployment_id": None,
+           "ticker": "T", "exchange": "US", "interval": "d",
+           "start": "2024-01-01", "end": "2024-01-02"}
+    ops.create_deployment(cfg)
+    cfg["schedules"] = [build_schedule(
+        timezone="UTC", freq="DAILY", dtstart_local=datetime(2025, 1, 6, 8, 0))]
+    ops.schedule_deployment(cfg)
+    sched = SchedulerService(api, _runner_const, auto_compact=None)
+    _tick_days(sched, 7, 4)
+    before = api._fold()
+    horizon = api.log.version() - 1
+    assert horizon > 4
+    real_remove = os.remove
+
+    def flaky(path):
+        if path.endswith(f"{3:08d}.json"):
+            raise PermissionError("simulated sticky file")
+        return real_remove(path)
+
+    monkeypatch.setattr(os, "remove", flaky)
+    res = api.compact(retain_last=2)
+    assert api._fold() == before
+    assert res == {"checkpointed": horizon, "commits_dropped": 2}
+    assert api.log.min_version() == 3  # a contiguous suffix survives
+    monkeypatch.setattr(os, "remove", real_remove)
+    api.compact(retain_last=2)  # the retry completes the truncation
+    assert api.log.min_version() == horizon
+    assert api._fold() == before
+
+
 def test_compact_truncates_terminal_history_keeps_pending(tmp_path):
     api, _ = _mk_ops(tmp_path)
     api.register_deployment("d1")

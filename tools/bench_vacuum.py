@@ -64,24 +64,16 @@ def main() -> None:
     state_before = log.state()
     horizon = state_before["version"] - 8 + 1
     st = log.state(at_version=horizon)
-    import os
-    import uuid
-
-    doc = {
-        "version": horizon,
-        "adds": list(st["dirs"]),
-        "removes": [],
-        "stats": st["stats"],
-        "op": "checkpoint",
-        "ts": 0.0,
-    }
-    final = log._path(horizon)
-    tmpf = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmpf, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmpf, final)
-    for v in range(1, horizon):
-        os.remove(log._path(v))
+    log.checkpoint(
+        horizon,
+        {
+            "adds": list(st["dirs"]),
+            "removes": [],
+            "stats": st["stats"],
+            "op": "checkpoint",
+            "ts": 0.0,
+        },
+    )
 
     state_after = log.state()
     assert state_after["version"] == state_before["version"]
