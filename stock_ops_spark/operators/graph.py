@@ -29,8 +29,6 @@ surface.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -204,12 +202,7 @@ def pagerank_cached(
         edges, src=src, dst=dst, iters=iters, damping=damping,
         broadcast_ranks=broadcast_ranks,
     )
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    ranks.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a concurrent writer won
+    artifacts.publish(ranks, path)
     return spark.read.parquet(path)
 
 

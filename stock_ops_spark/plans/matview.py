@@ -26,6 +26,16 @@ pure fold; it also dictates the contract:
   O(|delta| + |groups|), no fact scan; a view with min/max measures
   recomputes ONLY the groups a retraction touched from the snapshot
   (semi-join-bounded — the groups, not the table).  The cursor is
+  written INSIDE the view directory by the same rename that installs
+  the data, so a crash can never double-fold.  A view is maintained by
+  observers OR by sync, never both (guarded — mixing double-counts).
+- **Crash safety** comes from the generation swap
+  (``operators/artifacts.install``: write the next generation to a
+  staging dir, rename the live one aside, rename staging live) and its
+  ``heal``, which runs before every read: a SIGKILL at any point
+  leaves the previous or the next generation whole, with its cursor.
+  The one open window (delta appended, fold killed before install) is
+  healed by ``rebuild``.
 
 Measure algebra — maintenance cost per path (measured r9,
 ``tools/scale_curves.py --only mv_minmax_retract``):
@@ -60,15 +70,6 @@ Measure algebra — maintenance cost per path (measured r9,
   O(delta) until the heap underflows, then recompute anyway — state
   grows with groups × N and underflow is adversary-choosable, so the
   honest contract (measured, documented) beats the amortized one.
-  written INSIDE the view directory by the same rename that installs
-  the data, so a crash can never double-fold.  A view is maintained by
-  observers OR by sync, never both (guarded — mixing double-counts).
-- **Crash safety** comes from ``StatsTable``'s two-rename swap install
-  (write ``.tmp`` → aside → install), reused via its ``merge_fn`` hook:
-  a SIGKILL at any point leaves the previous or the next generation
-  whole.  The one open window (delta appended, fold killed before
-  install) is healed by ``rebuild`` — same analysis as the stats
-  catalog's, ``operators/stats.py``.
 
 At 100 TB the point of the MV is the read side: a dashboard query over
 the view touches |groups| rows instead of the fact table; the write-side
@@ -82,13 +83,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stock_ops_spark.operators.stats import StatsTable
+from stock_ops_spark.operators.artifacts import heal, install
 
 # Hidden per-group row multiplicity: lets the subtractable-fold path
 # drop a group whose last row was deleted (sum hitting 0 is NOT "group
@@ -185,13 +185,11 @@ class MatView:
         if (join_dim is None) != (join_on is None):
             raise ValueError("join_dim and join_on go together")
         self.spark = spark
+        self.path = path
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
         self.join_dim = join_dim
         self.join_on = list(join_on or [])
-        self._table = StatsTable(
-            spark, path, keys=self.group_cols, merge_fn=self._merge
-        )
 
     def _enrich(self, df: DataFrame) -> DataFrame:
         if self.join_dim is None:
@@ -226,9 +224,7 @@ class MatView:
         aggs.append((mult if sign > 0 else -mult).alias(_MULT))
         return delta.groupBy(*self.group_cols).agg(*aggs)
 
-    def _merge(
-        self, existing: DataFrame | None, delta: DataFrame, keys: list[str]
-    ) -> DataFrame:
+    def _merge(self, existing: DataFrame | None, delta: DataFrame) -> DataFrame:
         if existing is None:
             return delta
         names = list(self.measures)
@@ -239,6 +235,7 @@ class MatView:
             if _MULT not in existing.columns:
                 existing = existing.withColumn(_MULT, F.lit(None).cast("long"))
             names.append(_MULT)
+        keys = self.group_cols
         e = existing.select(
             *keys, *[F.col(m).alias(f"__e_{m}") for m in names]
         )
@@ -261,7 +258,7 @@ class MatView:
                 "view is CDC-synced (cursor present) — maintain it with "
                 "sync(), not refresh(); observer deltas would double-count"
             )
-        self._table.update(self._partial(delta))
+        self._install(self._merge(self._read(), self._partial(delta)))
 
     def observer(self) -> Callable[[DataFrame, str], None]:
         """Adapter for ``ManifestStore(observers=[...])``: ignores the
@@ -274,8 +271,8 @@ class MatView:
         never been cursor-initialized — it is observer-maintained, or a
         crash landed in the parquet-done/cursor-missing window and the
         heal is ``init_from_snapshot``)."""
-        self._table.read()  # trigger tmp/aside adoption first
-        p = os.path.join(self._table.path, _CURSOR_FILE)
+        self._read()  # heal an interrupted install first
+        p = os.path.join(self.path, _CURSOR_FILE)
         if not os.path.exists(p):
             return None
         with open(p) as f:
@@ -294,7 +291,7 @@ class MatView:
                 "empty store: nothing to aggregate — sync() from a fresh "
                 "view instead (it folds the feed from version 0)"
             )
-        self._install_partials(self._partial(fact), v)
+        self._install(self._partial(fact), v)
         return v
 
     def sync(self, store, mode: str, snapshot: DataFrame | None = None) -> dict:
@@ -311,7 +308,7 @@ class MatView:
         cursor advance are one atomic unit — a crash replays nothing.
         """
         cur = self.cursor()
-        existing = self._table.read()
+        existing = self._read()
         if cur is None:
             if existing is not None:
                 raise ValueError(
@@ -327,7 +324,7 @@ class MatView:
         changes = store.read_changes(mode, from_version=cur, to_version=v1)
         if changes is None:
             if existing is not None:  # compaction-only span: advance cursor
-                self._install_partials(existing, v1)
+                self._install(existing, v1)
                 return dict(noop, to=v1)
             return noop
         return self._fold_changes(
@@ -397,10 +394,10 @@ class MatView:
         keys = self.group_cols
         n_recomputed = 0
         if n_neg == 0:
-            merged = self._merge(existing, self._partial(pos), keys)
+            merged = self._merge(existing, self._partial(pos))
         elif self._subtractable:
-            merged = self._merge(existing, self._partial(pos), keys)
-            merged = self._merge(merged, self._partial(neg, sign=-1), keys)
+            merged = self._merge(existing, self._partial(pos))
+            merged = self._merge(merged, self._partial(neg, sign=-1))
         else:
             # affected groups live in ENRICHED space (group cols may be
             # dim attributes), so enrich the change rows before deriving
@@ -424,9 +421,7 @@ class MatView:
             # pos rows in affected groups are already inside the snapshot
             # recompute — folding them too would double-count
             pos_clean = self._enrich(pos).join(aff, on=keys, how="left_anti")
-            merged = self._merge(
-                existing, self._partial_enriched(pos_clean), keys
-            )
+            merged = self._merge(existing, self._partial_enriched(pos_clean))
             merged = merged.join(aff, on=keys, how="left_anti")
             if recomputed is not None:
                 merged = merged.unionByName(recomputed, allowMissingColumns=True)
@@ -436,11 +431,11 @@ class MatView:
             merged = merged.where(
                 F.coalesce(F.col(_MULT) != 0, F.lit(True))
             )
-        # no checkpoint here: _install_partials materializes merged
-        # (its own localCheckpoint) before any view file is touched —
-        # a second pin would just copy the blocks (r11: one fold
-        # materialization instead of two)
-        self._install_partials(merged, v1)
+        # no checkpoint here: _install materializes merged (its own
+        # localCheckpoint) before any view file is touched — a second
+        # pin would just copy the blocks (r11: one fold materialization
+        # instead of two)
+        self._install(merged, v1)
         return {"from": cur, "to": v1, "pos_rows": n_pos, "neg_rows": n_neg,
                 "recomputed_groups": n_recomputed}
 
@@ -474,7 +469,7 @@ class MatView:
         def fold(batch: DataFrame, _batch_id: int) -> None:
             cur = view_self.cursor()
             if cur is None:
-                if view_self._table.read() is not None:
+                if view_self._read() is not None:
                     raise ValueError(
                         "view exists without a cursor — heal with "
                         "init_from_snapshot before stream_sync"
@@ -485,7 +480,7 @@ class MatView:
             row = fresh.agg(F.max("_commit_version")).collect()[0]
             if row[0] is None:
                 return  # pure checkpoint replay: nothing new
-            existing = view_self._table.read()
+            existing = view_self._read()
             view_self._fold_changes(
                 fresh, cur, int(row[0]), existing, store, mode,
                 materialized=True,
@@ -508,48 +503,40 @@ class MatView:
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer.start()
 
-    def _install_partials(self, df: DataFrame, version: int) -> None:
-        """Swap-install ``df`` with the cursor file inside the new
-        generation — data and cursor publish in the same rename."""
-        t = self._table
+    def _install(self, df: DataFrame, version: int | None = None) -> None:
+        """Install ``df`` as the view's next generation by generation
+        swap.  With ``version``, the cursor file is written (and
+        fsync'd) into the staging dir, so data and cursor publish in
+        the same rename."""
+        # df's plan may read the live view, which the swap replaces —
+        # sever lineage first, then write the tiny result as one file
         full = df.localCheckpoint(eager=True)
-        shutil.rmtree(t._tmp, ignore_errors=True)
-        shutil.rmtree(t._aside, ignore_errors=True)
-        full.coalesce(1).write.mode("overwrite").parquet(t._tmp)
-        cpath = os.path.join(t._tmp, _CURSOR_FILE)
-        with open(cpath, "w") as f:
-            json.dump({"version": version}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        if os.path.exists(t.path):
-            os.rename(t.path, t._aside)
-        os.rename(t._tmp, t.path)
-        shutil.rmtree(t._aside, ignore_errors=True)
+
+        def write(staging: str) -> None:
+            full.coalesce(1).write.mode("overwrite").parquet(staging)
+            if version is not None:
+                with open(os.path.join(staging, _CURSOR_FILE), "w") as f:
+                    json.dump({"version": version}, f)
+                    f.flush()
+                    os.fsync(f.fileno())
+
+        install(self.path, write)
 
     def rebuild(self, fact: DataFrame) -> None:
         """Maintenance-time heal / first fill: one full aggregate of the
         fact table, installed atomically (replaces, never folds)."""
-        self._install_full(fact)
-
-    def _install_full(self, fact: DataFrame) -> None:
-        import os
-        import shutil
-
-        full = self._partial(fact).localCheckpoint(eager=True)
-        t = self._table
-        shutil.rmtree(t._tmp, ignore_errors=True)
-        shutil.rmtree(t._aside, ignore_errors=True)
-        full.coalesce(1).write.mode("overwrite").parquet(t._tmp)
-        if os.path.exists(t.path):
-            os.rename(t.path, t._aside)
-        os.rename(t._tmp, t.path)
-        shutil.rmtree(t._aside, ignore_errors=True)
+        self._install(self._partial(fact))
 
     # -- read ------------------------------------------------------------
+    def _read(self) -> DataFrame | None:
+        """The installed partials, bookkeeping column included (None
+        before the first fold), after healing an interrupted install."""
+        return heal(self.spark, self.path)
+
     def read(self) -> DataFrame | None:
         """The raw partial-aggregate table (None before the first fold).
         The hidden row-multiplicity bookkeeping column stays hidden."""
-        df = self._table.read()
+        df = self._read()
         if df is not None and _MULT in df.columns:
             df = df.drop(_MULT)
         return df

@@ -27,10 +27,7 @@ part of the training-data extension surface.
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,24 +37,34 @@ from stock_ops_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
+from stock_ops_spark.streaming.foldstate import FoldStateIndex
 
 
-class StreamingNearDupIndex:
+class StreamingNearDupIndex(FoldStateIndex):
     """Persisted LSH band index with per-batch probe + append.
 
     Wire ``process_batch`` into ``foreachBatch`` (streaming) or call it
-    directly per ingest batch.  Layout under ``root``:
+    directly per ingest batch.  Layout under ``root`` (each table +
+    ``batch_seq``):
 
     - ``bands/``  (id, band, bucket) probe index
     - ``sigs/``   (id, mh_0..mh_{k-1}) signatures for scoring
-    - ``flags/``  (new_id, matched_id, est_jaccard) advisory output
+    - ``flags/``  (new_id, matched_id, est_jaccard, flag_ts) advisory
+      output
+
+    A batch's three appends commit under ``FoldStateIndex``'s per-seq
+    markers, so a fold that crashed mid-append is pruned before its
+    redelivery folds again (no duplicate flags), and ``maintain``
+    rewrites tables by generation swap, healed on the next read.
 
     **Single-writer assumption**: one index instance owns ``root`` for
     writes (``process_batch`` / ``maintain``) — exactly the contract a
-    Structured Streaming ``foreachBatch`` sink provides.  Concurrent
-    READERS are safe across maintenance (rename-aside swap); concurrent
-    writers are not coordinated.
+    Structured Streaming ``foreachBatch`` sink provides.  Reads heal an
+    interrupted swap, so they belong to the writer's process too;
+    concurrent writers are not coordinated.
     """
+
+    PARTS = ("bands", "sigs", "flags")
 
     def __init__(
         self,
@@ -70,53 +77,25 @@ class StreamingNearDupIndex:
         bands: int = 16,
         shingle_n: int = 8,
     ):
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_n = shingle_n
-        self._seq: int | None = None  # recovered lazily from the index
-
-    def _path(self, part: str) -> str:
-        return os.path.join(self.root, part)
 
     def _existing(self, part: str) -> DataFrame | None:
-        p = self._path(part)
-        if not os.path.isdir(p):
-            return None
-        df = self.spark.read.parquet(p)
-        if "batch_seq" not in df.columns:
+        df = super()._existing(part)
+        if df is not None and "batch_seq" not in df.columns:
             # pre-retention index layout: treat as epoch batch 0
             df = df.withColumn("batch_seq", F.lit(0))
         return df
 
-    def _next_seq(self) -> int:
-        """Monotonic batch sequence — recovered from the persisted index
-        once per process (one footer-stats max() per dataset), then
-        advanced in memory.  Recovery takes the max across ALL THREE
-        datasets, not just bands: ``process_batch`` writes flags before
-        bands, so a crash between the two writes must not let the next
-        writer reuse a sequence already present in ``flags/``."""
-        if self._seq is None:
-            highest = -1
-            for part in ("bands", "sigs", "flags"):
-                ds = self._existing(part)
-                if ds is None:
-                    continue
-                row = ds.agg(F.max("batch_seq").alias("m")).collect()[0]
-                if row.m is not None:
-                    highest = max(highest, int(row.m))
-            self._seq = highest + 1
-        out = self._seq
-        self._seq += 1
-        return out
-
     def process_batch(self, batch: DataFrame) -> int:
         """Probe ``batch`` against the index, append its signatures, and
         return the number of advisory near-dup flags written."""
+        self._recover_crashed()
         seq = self._next_seq()
         sh = shingle_sets(batch, self.id_col, self.text_col, n=self.shingle_n)
         # sever lineage: signatures are consumed by probe AND append, and
@@ -165,13 +144,14 @@ class StreamingNearDupIndex:
                 .localCheckpoint(eager=True)
             )
             n_flags = flagged.count()
-            if n_flags:
-                # flag_ts (epoch seconds at write) powers AGE-based
-                # retention in maintain() — batch_seq counts batches,
-                # which is not wall-clock time
-                flagged.withColumn("batch_seq", F.lit(seq)).withColumn(
-                    "flag_ts", F.lit(float(time.time()))
-                ).write.mode("append").parquet(self._path("flags"))
+        self._mark_pending(seq)  # first append next: open the commit window
+        if n_flags:
+            # flag_ts (epoch seconds at write) powers AGE-based
+            # retention in maintain() — batch_seq counts batches,
+            # which is not wall-clock time
+            flagged.withColumn("batch_seq", F.lit(seq)).withColumn(
+                "flag_ts", F.lit(float(time.time()))
+            ).write.mode("append").parquet(self._path("flags"))
 
         stacked.withColumn("batch_seq", F.lit(seq)).write.mode("append").parquet(
             self._path("bands")
@@ -179,21 +159,14 @@ class StreamingNearDupIndex:
         sigs.withColumn("batch_seq", F.lit(seq)).write.mode("append").parquet(
             self._path("sigs")
         )
+        self._mark_committed(seq)
         return n_flags
 
     def flags(self) -> DataFrame | None:
+        self._recover_crashed()
         return self._existing("flags")
 
     # -- maintenance ------------------------------------------------------
-
-    @staticmethod
-    def _data_files(path: str) -> list[str]:
-        out = []
-        for dirpath, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    out.append(os.path.join(dirpath, f))
-        return out
 
     def maintain(
         self,
@@ -211,10 +184,10 @@ class StreamingNearDupIndex:
 
         - **compaction**: when a dataset holds more part-files than
           ``target_files`` (plus slack for one in-flight batch), rewrite
-          it to ``target_files`` files.  Materialize-to-temp THEN swap:
-          the read fully drains before the original directory is touched,
-          so no lineage hazard and a crash mid-rewrite leaves the old
-          index intact.
+          it to ``target_files`` files by ``FoldStateIndex``'s
+          generation swap: the rewrite fully drains before the live
+          directory is touched, and a crash at any point leaves a whole
+          generation the next read installs.
         - **retention** (``max_batches``): drop band/signature rows more
           than ``max_batches`` micro-batches old — the Redis-XTRIM analog
           for the at-ingest index.  The advisory ``flags/`` output is
@@ -234,6 +207,7 @@ class StreamingNearDupIndex:
         Call every N batches from ``foreachBatch`` or as a nightly job.
         Returns per-dataset file counts after maintenance.
         """
+        self._recover_crashed()
         # peg the cutoff to the writer's current position, not max(file)
         if self._seq is None:
             self._next_seq()
@@ -241,12 +215,11 @@ class StreamingNearDupIndex:
         cutoff = None if max_batches is None else self._seq - max_batches
         age_cutoff = None if flags_max_age_s is None else time.time() - flags_max_age_s
         out: dict[str, int] = {}
-        for part in ("bands", "sigs", "flags"):
+        for part in self.PARTS:
             part_cutoff = cutoff
             if part == "flags" and not trim_flags:
                 part_cutoff = None
             part_age_cutoff = age_cutoff if part == "flags" else None
-            path = self._path(part)
             df = self._existing(part)
             if df is None:
                 out[part] = 0
@@ -261,7 +234,6 @@ class StreamingNearDupIndex:
                     else F.lit(0.0)
                 )
                 df = df.withColumn("flag_ts", ts_col)
-            nfiles = len(self._data_files(path))
             needs_trim = False
             if part_cutoff is not None:
                 # footer-stats aggregation (parquet aggregate pushdown) —
@@ -271,23 +243,9 @@ class StreamingNearDupIndex:
             if part_age_cutoff is not None and not needs_trim:
                 mn = df.agg(F.min("flag_ts").alias("m")).collect()[0].m
                 needs_trim = mn is not None and mn < part_age_cutoff
-            if nfiles <= target_files + 1 and not needs_trim:
-                out[part] = nfiles
-                continue
             if part_cutoff is not None:
                 df = df.where(F.col("batch_seq") >= F.lit(part_cutoff))
             if part_age_cutoff is not None:
                 df = df.where(F.col("flag_ts") >= F.lit(part_age_cutoff))
-            tmp = f"{path}__rewrite_{uuid.uuid4().hex[:8]}"
-            df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-            # Swap via rename-aside, not rmtree-then-rename: a concurrent
-            # reader's window of absent-path shrinks from O(rmtree of the
-            # whole dataset) to the gap between two rename syscalls, and a
-            # crash mid-swap leaves either the old or the new index whole.
-            # (Single WRITER is still assumed — see class docstring.)
-            aside = f"{path}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(path, aside)
-            os.rename(tmp, path)
-            shutil.rmtree(aside)
-            out[part] = len(self._data_files(path))
+            out[part] = self._compact(part, df, target_files, force=needs_trim)
         return out

@@ -1,6 +1,7 @@
 """Shared machinery for persisted streaming fold-state indexes —
 append-only parquet tables folded per micro-batch under a per-seq
-commit protocol (StreamingSpanIndex, StreamingIVFIndex).
+commit protocol (StreamingSpanIndex, StreamingIVFIndex,
+StreamingLexicalIndex, StreamingNearDupIndex).
 
 One discipline, factored once (r11):
 
@@ -11,12 +12,12 @@ One discipline, factored once (r11):
   that seq's rows are pruned from ALL tables before the redelivery
   check runs — the redelivered batch then folds as if the crashed
   attempt never happened.  Common path: one listdir, zero Spark jobs.
-- **rename-aside swap** (``_swap_in``) with crash-window healing
-  (``_recover``): a compaction or prune writes to a ``__rewrite_`` tmp,
-  renames the live dataset aside, renames the tmp live, drops the
-  aside; a crash between the renames leaves a complete rewrite+aside
-  pair that the next touch swaps back instead of silently restarting
-  the index empty.
+- **generation swap**: a compaction or prune replaces a table whole
+  through ``operators/artifacts.install`` (write the rewrite beside
+  the live dataset, rename the live one aside, rename the rewrite
+  live), and every read goes through ``artifacts.heal``, so a crash
+  between the renames is finished on the next touch instead of
+  silently restarting the index empty.
 - **marker-derived sequences** (``_next_seq``): committed markers are
   authoritative (zero jobs); legacy pre-marker state falls back to a
   one-time scan of every dataset.
@@ -28,11 +29,11 @@ One discipline, factored once (r11):
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from stock_ops_spark.operators.artifacts import heal, install
 
 
 class FoldStateIndex:
@@ -85,68 +86,25 @@ class FoldStateIndex:
             df = self._existing(part)
             if df is None:
                 continue
-            self._swap_in(part, df.where(~F.col("batch_seq").isin(bad)))
+            kept = df.where(~F.col("batch_seq").isin(bad))
+            install(self._path(part), kept.write.mode("overwrite").parquet)
         for s in bad:
             os.remove(os.path.join(self._commits_dir(), f"{s}.pending"))
         self._seq = None  # recompute past the pruned state
 
-    # ---- dataset access with crash-window healing
-
-    def _recover(self, part: str) -> None:
-        """Heal ``_swap_in``'s rename-aside crash window: a crash
-        between the two renames leaves NO live dataset but a COMPLETE
-        ``__rewrite_`` (written fully before the swap began) and a
-        complete ``__old_`` aside — without recovery the index would
-        silently restart empty.  Recovery: finish the swap (prefer the
-        compacted rewrite; the aside holds identical rows).  When the
-        live dataset EXISTS, any sibling is pre-swap litter (a partial
-        rewrite, or an aside whose drop crashed) — remove."""
-        live = self._path(part)
-        base = os.path.basename(live)
-        try:
-            sibs = [
-                os.path.join(self.root, n)
-                for n in os.listdir(self.root)
-                if n.startswith((f"{base}__rewrite_", f"{base}__old_"))
-            ]
-        except FileNotFoundError:
-            return
-        if os.path.isdir(live):
-            for s in sibs:
-                shutil.rmtree(s, ignore_errors=True)
-            return
-        rewrites = [s for s in sibs if f"{base}__rewrite_" in s]
-        asides = [s for s in sibs if f"{base}__old_" in s]
-        if rewrites and asides:
-            os.rename(rewrites[0], live)
-            for s in asides + rewrites[1:]:
-                shutil.rmtree(s, ignore_errors=True)
-        elif asides:
-            os.rename(asides[0], live)
-        elif rewrites:
-            os.rename(rewrites[0], live)
+    # ---- dataset access
 
     def _existing(self, part: str) -> DataFrame | None:
-        self._recover(part)
-        p = self._path(part)
-        if not os.path.isdir(p):
-            return None
-        return self.spark.read.parquet(p)
+        return heal(self.spark, self._path(part))
 
-    def _swap_in(
-        self, part: str, df: DataFrame, nfiles: int | None = None
-    ) -> None:
-        """Replace ``part``'s live dataset with ``df`` via the
-        materialize-to-temp + rename-aside swap (crash window healed by
-        ``_recover``)."""
-        path = self._path(part)
-        out = df.repartition(nfiles) if nfiles else df
-        tmp = f"{path}__rewrite_{uuid.uuid4().hex[:8]}"
-        out.write.mode("overwrite").parquet(tmp)
-        aside = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, aside)
-        os.rename(tmp, path)
-        shutil.rmtree(aside)
+    def _file_count(self, part: str) -> int:
+        """Data files under ``part``'s live dataset (the maintain
+        trigger)."""
+        return sum(
+            f.endswith(".parquet") and not f.startswith(("_", "."))
+            for _dp, _d, fs in os.walk(self._path(part))
+            for f in fs
+        )
 
     # ---- sequences
 
@@ -191,29 +149,35 @@ class FoldStateIndex:
     def maintain(self, target_files: int = 8) -> dict[str, int]:
         """Bound the per-batch file litter: rewrite any dataset holding
         more part-files than ``target_files`` (plus one in-flight batch
-        of slack) down to ``target_files`` via the rename-aside swap.
+        of slack) down to ``target_files`` by generation swap.
         No retention knob: the state IS the fold memory — aging rows
-        out silently corrupts future folds."""
+        out silently corrupts future folds.  Returns per-dataset file
+        counts after maintenance."""
         self._recover_crashed()
-        out: dict[str, int] = {}
-        for part in self.PARTS:
-            df = self._existing(part)
-            path = self._path(part)
-            if df is None:
-                out[part] = 0
-                continue
-            files = [
-                os.path.join(dp, f)
-                for dp, _d, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-            if len(files) <= target_files + 1:
-                out[part] = len(files)
-                continue
-            self._swap_in(part, self._compact_df(part, df), target_files)
-            out[part] = target_files
-        return out
+        return {
+            part: self._compact(part, self._existing(part), target_files)
+            for part in self.PARTS
+        }
+
+    def _compact(
+        self,
+        part: str,
+        df: DataFrame | None,
+        target_files: int,
+        force: bool = False,
+    ) -> int:
+        """Rewrite ``part`` as ``df`` (through ``_compact_df``) in
+        ``target_files`` files when it holds more than
+        ``target_files + 1`` part-files, or when ``force``; return its
+        file count after."""
+        if df is None:
+            return 0
+        n = self._file_count(part)
+        if n <= target_files + 1 and not force:
+            return n
+        out = self._compact_df(part, df).repartition(target_files)
+        install(self._path(part), out.write.mode("overwrite").parquet)
+        return self._file_count(part)
 
 
 __all__ = ["FoldStateIndex"]

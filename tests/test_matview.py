@@ -1,7 +1,7 @@
 """Incremental materialized views (plans/matview.py): fold-equals-
 recompute equivalence, derived serving, dedup-aware integration through
 the store observer hook, and crash-state recovery via the shared
-StatsTable swap machinery."""
+generation swap (``operators/artifacts.install``/``heal``)."""
 
 from __future__ import annotations
 
@@ -122,16 +122,15 @@ def test_rebuild_replaces_not_folds(spark, tmp_path):
 
 def test_swap_debris_recovery(spark, tmp_path):
     """A kill between the two install renames leaves .tmp complete and
-    the main path absent — read() must adopt it (shared StatsTable
-    discipline, exercised through the MV's own table)."""
+    the main path absent — read() must adopt it (the shared generation
+    swap, ``artifacts.install``/``heal``, exercised through the MV)."""
     import os
 
     mv = _mv(spark, tmp_path)
     mv.refresh(spark.createDataFrame(_rows(0), schema=S.HISTORICAL_INTRADAY))
-    t = mv._table
-    os.rename(t.path, t._tmp)  # simulate: installed gen back to .tmp
+    os.rename(mv.path, mv.path + ".tmp")  # simulate: installed gen back to .tmp
     assert mv.read() is not None
-    assert os.path.exists(t.path) and not os.path.exists(t._tmp)
+    assert os.path.exists(mv.path) and not os.path.exists(mv.path + ".tmp")
     assert sum(r.n for r in mv.read().collect()) == 20
 
 

@@ -433,7 +433,7 @@ def test_streaming_changed_doc_refused(spark, tmp_path):
 
 def test_streaming_maintain_crash_window_recovers(spark, tmp_path):
     """ADVICE r9: a crash between maintain()'s two renames leaves no
-    live dataset but a complete __old_/__rewrite_ pair — the index
+    live dataset but a complete .old/.tmp pair — the index
     must heal on next touch instead of silently restarting empty."""
     import os
 
@@ -448,15 +448,15 @@ def test_streaming_maintain_crash_window_recovers(spark, tmp_path):
     n_grams = idx.state()["gramstats"].count()
     # simulate the crash window: live renamed aside, rewrite complete
     live = os.path.join(root, "gramstats")
-    rewrite = os.path.join(root, "gramstats__rewrite_deadbeef")
+    rewrite = os.path.join(root, "gramstats.tmp")
     spark.read.parquet(live).repartition(1).write.parquet(rewrite)
-    os.rename(live, os.path.join(root, "gramstats__old_deadbeef"))
+    os.rename(live, os.path.join(root, "gramstats.old"))
     assert not os.path.isdir(live)
 
     idx2 = StreamingSpanIndex(spark, root)  # fresh process
     assert idx2.state()["gramstats"].count() == n_grams  # memory intact
     assert os.path.isdir(live)
-    assert not os.path.isdir(os.path.join(root, "gramstats__old_deadbeef"))
+    assert not os.path.isdir(os.path.join(root, "gramstats.old"))
     # and the healed index keeps flagging cross-batch duplicates
     n = idx2.process_batch(
         spark.createDataFrame(rows[:12], "doc_id long, text string")

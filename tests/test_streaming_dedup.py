@@ -44,7 +44,7 @@ def test_unrelated_batches_accumulate_without_flags(spark, index):
     assert index.flags() is None
 
 
-def test_maintain_bounds_file_count_across_batches(spark, index, tmp_path):
+def test_maintain_bounds_file_count_across_batches(spark, index):
     """The index must not accumulate one file set per micro-batch forever:
     after maintain(), part-file counts are bounded regardless of how many
     batches were ingested, and probe results are unchanged."""
@@ -53,14 +53,13 @@ def test_maintain_bounds_file_count_across_batches(spark, index, tmp_path):
     docs = [DOC_A, DOC_B, DOC_C]
     for i in range(6):
         index.process_batch(_df(spark, [(100 + i, f"{docs[i % 3]} variant {i}")]))
-    bands_dir = str(tmp_path / "lsh" / "bands")
-    before = len(index._data_files(bands_dir))
+    before = index._file_count("bands")
     assert before >= 6  # one file set per batch accumulated
 
     counts = index.maintain(target_files=2)
     assert counts["bands"] <= 2
     assert counts["sigs"] <= 2
-    assert len(index._data_files(bands_dir)) <= 2
+    assert index._file_count("bands") <= 2
 
     # index still functionally intact after the rewrite
     n = index.process_batch(_df(spark, [(999, f"{DOC_A} variant 0")]))
@@ -154,3 +153,70 @@ def test_streaming_foreachbatch_wiring(spark, index, tmp_path):
     q.stop()
     flags = {(r["new_id"], r["matched_id"]) for r in index.flags().collect()}
     assert (3, 1) in flags
+
+
+def test_maintain_crash_between_renames_keeps_index(spark, tmp_path):
+    """A crash between maintain()'s two renames leaves no live bands/
+    but a complete rewrite beside the renamed-aside dataset.  A fresh
+    index must finish the swap — every band row still probed, the
+    near-dup still flagged — instead of restarting the probe index
+    empty."""
+    import os
+
+    root = str(tmp_path / "lsh")
+    StreamingNearDupIndex(spark, root, threshold=0.5).process_batch(
+        _df(spark, [(1, DOC_A), (2, DOC_B)])
+    )
+    bands = os.path.join(root, "bands")
+    n_bands = spark.read.parquet(bands).count()
+    spark.read.parquet(bands).repartition(1).write.parquet(bands + ".tmp")
+    os.rename(bands, bands + ".old")
+
+    fresh = StreamingNearDupIndex(spark, root, threshold=0.5)
+    assert fresh.process_batch(_df(spark, [(3, DOC_A_NEAR)])) == 1
+    assert {(r.new_id, r.matched_id) for r in fresh.flags().collect()} == {(3, 1)}
+    assert spark.read.parquet(bands).where("batch_seq = 0").count() == n_bands
+    assert not os.path.exists(bands + ".tmp")
+    assert not os.path.exists(bands + ".old")
+
+
+def test_crash_after_flags_append_redelivery_no_duplicate_flags(spark, tmp_path):
+    """A fold killed after its flags append but before the bands/sigs
+    appends, then redelivered: the crashed seq's flags are pruned
+    first, so flags() equals a crash-free run (no duplicate pairs)."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    b1 = [(1, DOC_A), (2, DOC_B)]
+    b2 = [(3, DOC_A_NEAR), (4, DOC_C)]
+    clean = StreamingNearDupIndex(spark, str(tmp_path / "clean"), threshold=0.5)
+    clean.process_batch(_df(spark, b1))
+    clean.process_batch(_df(spark, b2))
+
+    root = str(tmp_path / "lsh")
+    StreamingNearDupIndex(spark, root, threshold=0.5).process_batch(_df(spark, b1))
+    real = DataFrameWriter.parquet
+
+    def killed_at_bands(self, path, *args, **kwargs):
+        if os.path.basename(path) == "bands":
+            raise RuntimeError("killed before the bands append")
+        return real(self, path, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", killed_at_bands)
+        with pytest.raises(RuntimeError, match="killed"):
+            StreamingNearDupIndex(spark, root, threshold=0.5).process_batch(
+                _df(spark, b2)
+            )
+    assert spark.read.parquet(os.path.join(root, "flags")).count() == 1
+
+    redo = StreamingNearDupIndex(spark, root, threshold=0.5)
+    redo.process_batch(_df(spark, b2))
+
+    def flag_rows(ix):
+        return sorted(
+            (r.new_id, r.matched_id, r.est_jaccard) for r in ix.flags().collect()
+        )
+
+    assert flag_rows(redo) == flag_rows(clean)
