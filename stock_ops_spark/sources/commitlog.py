@@ -33,16 +33,17 @@ Compaction rewrites many batch dirs into one and publishes
 removes+adds in a single commit — readers switch snapshots atomically;
 the old dirs stay until GC, so in-flight readers finish correctly.
 
-Every rewrite (merge, delete, retain, compact, restore, convert) runs
-one protocol, ``ManifestStore._commit``: an ATTEMPT folds the log once
-and works from that state alone (its prior stats included); it writes
-its batch, stats and CDC dirs invisibly, recording each in the state;
-the loop PUBLISHES the returned payload at ``state["version"] + 1``;
-a LOST race deletes the recorded dirs, backs off and re-runs the
-attempt against the fresh state.  Ingest keeps its two-tier retry
-(``_ingest_frame``) over the same write and cleanup helpers, and
-``ManifestLog.checkpoint`` is the one history truncation — shared with
-the deployment log in ``scheduling.py``.
+Every write (ingest, merge, delete, retain, compact, restore, convert)
+runs one protocol, ``ManifestStore._commit``: an ATTEMPT folds the log
+once and works from that state alone (its prior stats included); it
+writes its batch, stats and CDC dirs invisibly, recording each in the
+state; the loop PUBLISHES the returned payload at
+``state["version"] + 1``.  A LOST race either REBASES — ingest's hook
+proves its written output still valid at the new head, and the same
+payload publishes there — or deletes the recorded dirs, backs off and
+re-runs the attempt against the fresh state.  ``ManifestLog.checkpoint``
+is the one history truncation — shared with the deployment log in
+``scheduling.py``.
 
 Reference parity: the reference's SQLite writer gets all of this from
 SQLite's own journal (src/stockops/data/database/sql_db.py — one
@@ -80,7 +81,6 @@ from stock_ops_spark.sources.microcommit import (
 from stock_ops_spark.sources.microcommit import write_micro  # noqa: F401
 from stock_ops_spark.sources.ingest import (
     _MAX_PRUNE_PARTITIONS,
-    cluster_for_write,
     compute_versioned_delta,
 )
 from stock_ops_spark.sources.layout import (
@@ -408,10 +408,12 @@ class ManifestStore:
         # POST-dedup rows of each non-empty ingest (already
         # localCheckpoint'd — safe to aggregate without recomputation);
         # incremental materialized views (plans/matview) ride this hook.
-        # They fire only AFTER try_commit succeeds — a losing attempt's
-        # delta was computed against a stale version and is recomputed
-        # on retry, so folding it would double-count exactly the rows
-        # the winner already committed.
+        # They fire once per published ingest, after ``_commit`` returns
+        # and BEFORE inline auto-compaction — a losing attempt's delta
+        # was computed against a stale version and is recomputed on
+        # retry, so folding it would double-count exactly the rows the
+        # winner already committed; and a compaction error must not
+        # hide a delta that is already published.
         self.observers = list(observers or [])
         # Reads union one relation per live batch dir, so read (and the
         # ingest dedup probe, which reads) degrades linearly in commits
@@ -635,7 +637,7 @@ class ManifestStore:
         return self._write_stats(mode, state, stats_of)
 
     # -- write -----------------------------------------------------------
-    MAX_FAST_RETRIES = 24  # cheap logical-conflict retries (no recompute)
+    MAX_FAST_RETRIES = 24  # rebases per _commit attempt (no recompute)
 
     def _interleaved_commits_safe(
         self, mode: str, base_version: int, upto: int, dir_meta: dict
@@ -647,15 +649,16 @@ class ManifestStore:
         interleaved commit touched ITS keys.  A key collision needs both
         the same ticker AND the same timestamp, so an interleaved ingest
         whose recorded (ticker, ts) bounds are disjoint from this
-        batch's on EITHER axis provably shares no keys.  Compaction and
-        vacuum checkpoints are physical-only.  Anything else (merge /
-        delete / retain / restore, a commit without bounds, vacuumed
-        history) returns False — the caller falls back to the full
-        recompute.  This is what keeps sustained multi-writer ingest
-        live: without it the slower writer PHASE-LOCKS (its ~seconds
-        recompute always overlaps the faster writer's next commit) and
-        starves through every retry — observed in the two-process race
-        test before this path existed."""
+        batch's on EITHER axis provably shares no keys.  Compaction is
+        physical-only.  Anything else returns False and the attempt
+        re-runs: merge / delete / retain / restore, a commit without
+        bounds, vacuumed history — and a vacuum checkpoint above the
+        base, which REPLACED the commit at its version and so may hide
+        an interleaved ingest that shares keys.  This is what keeps
+        sustained multi-writer ingest live: without it the slower writer
+        PHASE-LOCKS (its ~seconds recompute always overlaps the faster
+        writer's next commit) and starves through every retry — observed
+        in the two-process race test before this path existed."""
         log = self.log(mode)
         if log.min_version() > base_version + 1:
             return False  # vacuum ate interleaved history: can't verify
@@ -668,7 +671,7 @@ class ManifestStore:
             if c["version"] <= base_version:
                 continue
             op = c.get("op") or ("compact" if c.get("removes") else "ingest")
-            if op in ("compact", "checkpoint"):
+            if op == "compact":
                 continue  # physical rewrite: no logical change
             if op not in ("ingest", "convert"):
                 return False
@@ -691,10 +694,11 @@ class ManifestStore:
         """GROUP COMMIT (r8 directive #3): coalesce queued KEY-DISJOINT
         batches into ONE commit — one versioned-delta pass, one parquet
         write, one stats increment, one commit race — amortizing the
-        ~3-Spark-job fixed cost that dominates per-commit latency
-        (profiled r9: ~1.3 s/commit of JVM round-trips at the 500-row
-        scale, independent of batch size) across the whole group, and
-        cutting the multi-writer conflict rate by the group factor.
+        fixed per-commit cost across the whole group (measured on a
+        500-row time-ordered commit at ``local[2]``: four Spark jobs and
+        ~0.6–0.9 s, most of it JVM planning and job launch, whatever the
+        batch size), and cutting the multi-writer conflict rate by the
+        group factor.
 
         Disjointness is PROVEN, not assumed, from the same grouped-
         stats job the single-batch path already runs: two batches may
@@ -778,45 +782,41 @@ class ManifestStore:
     def _ingest_frame(
         self, batch: DataFrame, mode: str, n_bids: int | None
     ) -> int | list[int]:
-        """The ingest contract (``sources/ingest.py``), atomically.
+        """The ingest contract (``sources/ingest.py``), atomically: a
+        ``_commit`` attempt, its rebase hook and one post-publish step.
 
-        Optimistic concurrency, two-tier:
+        The ATTEMPT computes the delta OPTIMISTICALLY as a pure append
+        (no store probe) and its grouped-stats collect doubles as the
+        bounds probe: only live dirs whose recorded (ticker, ts)
+        rectangle intersects the batch's are read for the dedup/version
+        re-run (a key shared with a dir lies in both rectangles).  A
+        time-ordered or ticker-sharded 500-row commit thus runs four
+        Spark jobs whatever the store size (measured: three for the eager
+        checkpoint of the versioned delta, one Arrow collect; the micro
+        write and the stats increment run on the driver).  It writes the
+        batch dir and the batch's stats increment — every
+        ``STATS_FOLD_EVERY`` increments, a cumulative snapshot.
 
-        - FAST path (the common multi-writer case): on a commit
-          collision where every interleaved commit is a key-disjoint
-          ingest (``_interleaved_commits_safe``), the already-written
-          batch dir, version assignment AND stats increment are still
-          exactly right — the re-commit is a pure filesystem op (r8:
-          the per-commit stats snapshot became a version-independent
-          increment, so nothing Spark-side re-runs).
-        - SLOW path: any interleaved mutation or key overlap invalidates
-          the dedup/version assignment, so the whole body re-runs
-          against the fresh state (bounded retries, jittered backoff).
+        The REBASE hook: when every interleaved commit is a key-disjoint
+        ingest (``_interleaved_commits_safe``), the written dir, version
+        assignment and stats increment (version-independent, r8) are
+        still exact, so the same payload publishes at the new head — a
+        pure filesystem op.  A fold snapshot, an interleaved mutation or
+        a possibly shared key re-runs the attempt.
 
-        Per-commit cost (r8): the delta is computed OPTIMISTICALLY as a
-        pure append (no store probe at all) and its grouped-stats
-        collect doubles as the bounds probe: only when some live dir's
-        recorded (ticker, ts) rectangle actually intersects the batch's
-        does the dedup/version pass re-run against just those dirs (an
-        existing key equal to a batch key lies inside both rectangles,
-        so disjoint dirs provably contribute nothing to the anti-join
-        or the prior-max-version probe).  A time-ordered or
-        ticker-sharded workload therefore commits in THREE Spark jobs
-        (checkpoint, grouped stats, write) regardless of store size;
-        overlapping or replayed batches pay the probe read on top,
-        pruned to the overlapping dirs."""
+        After the publish the observers see the delta; only then may
+        ``_auto_compact`` fold the store, so a failing compaction cannot
+        hide a published delta from them."""
         parts = PARTITION_COLS[mode]
-        log = self.log(mode)
         tsc = S.TS_COL[mode]
         ign = (_GBID,) if n_bids else ()
         # the finest stats grain: each increment folds from these rows
         gb_base = max(self._stats_keys(mode).values(), key=len)
         gb = gb_base + list(ign)
+        zero = [0] * n_bids if n_bids else 0
+        last: dict = {}  # the latest attempt's payload and delta
 
-        def _zero():
-            return [0] * n_bids if n_bids else 0
-
-        def _materialize(v):
+        def materialize(v):
             """(Delta, stat rows): one eager checkpoint with the row count
             riding as an Observation; the stat rows come from the
             grouped-stats kernel when the delta proved micro, else from
@@ -828,25 +828,22 @@ class ManifestStore:
                 return d, None
             return d, d.stat_rows(gb, tsc, parts, _MAX_PRUNE_PARTITIONS)
 
-        for _attempt in range(self.MAX_COMMIT_RETRIES):
-            state = log.state()
-            state["written"] = []
-            versioned = compute_versioned_delta(
+        def attempt(state):
+            last.clear()
+            delta, grows = materialize(compute_versioned_delta(
                 batch, None, mode, self.tz, ignore_cols=ign
-            )
-            delta, grows = _materialize(versioned)
+            ))
             if not delta.n:
-                return _zero()
+                return None, zero
             if n_bids:
                 # prove pairwise batch disjointness BEFORE any write;
                 # raises _GroupOverlap -> caller ingests sequentially
                 self._check_group_disjoint(grows, gb_base)
-            n = delta.n
             dir_meta = _meta_of(grows, tsc)
             # rectangle pruning is only sound when every key is non-NULL
             # (NULL keys fall outside any recorded bounds)
             keys_total = (
-                pc.sum(grows["nts"]).as_py() == n
+                pc.sum(grows["nts"]).as_py() == delta.n
                 and grows["ticker"].null_count == 0
                 and dir_meta[tsc][0] is not None
             )
@@ -860,25 +857,20 @@ class ManifestStore:
                 # some live dir may share keys: re-run the dedup/version
                 # pass against just those dirs.  The optimistic delta is
                 # the checkpointed, already-routed batch — re-planning
-                # from it avoids re-paying the batch's own source.
-                existing = self._read_dirs(mode, overlap)
-                versioned = compute_versioned_delta(
+                # from it avoids re-paying the batch's own source.  No
+                # group re-check: the store anti-join only REMOVES rows,
+                # so it cannot create cross-batch overlap.
+                delta, grows = materialize(compute_versioned_delta(
                     delta.df.drop("version", *parts),
-                    existing,
+                    self._read_dirs(mode, overlap),
                     mode,
                     self.tz,
                     touched=_touched_parts(grows, parts) if parts else None,
                     ignore_cols=ign,
-                )
-                delta, grows = _materialize(versioned)
-                # no group re-check needed: the store anti-join only
-                # REMOVES rows — it cannot create cross-batch overlap
+                ))
                 if not delta.n:
-                    return _zero()
-                n = delta.n
+                    return None, zero
                 dir_meta = _meta_of(grows, tsc)
-            base_version = state["version"]
-            new_version = base_version + 1
             out = delta.drop(*ign)
             # distinct partition-tuple count, free from the stats rows:
             # pins the write's repartition width so each partition value
@@ -889,100 +881,72 @@ class ManifestStore:
                 out, mode, state,
                 n_parts=len(_touched_parts(grows, parts)) if parts else None,
             )
-
-            # batch-only stats depend ONLY on this delta — written ONCE
-            # as a version-independent INCREMENT (r8); readers fold it.
-            # The increment files come straight from the grouped rows
-            # above via pyarrow: zero extra Spark jobs.  Every
-            # STATS_FOLD_EVERY increments, materialize a cumulative
-            # snapshot instead (the Spark merge path) so the fold chain
-            # stays bounded.
+            # batch-only stats depend ONLY on this delta: a
+            # version-independent INCREMENT straight from the grouped
+            # rows via pyarrow, zero extra Spark jobs (r8).  Every
+            # STATS_FOLD_EVERY increments, a cumulative snapshot instead
+            # (the Spark merge path) keeps the fold chain bounded.
             fold_now = len(state["stats_incs"]) >= self.STATS_FOLD_EVERY
-            if fold_now:
-                stats_ptr = self._write_stats(
-                    mode, state, self._stats_plus(mode, state, out.df)
-                )
-            else:
-                stats_ptr = self._write_stats(
-                    mode, state,
-                    lambda which, keys: as_catalog_stats(
-                        fold_stats(grows, keys), keys, mode
-                    ),
-                    inc=True,
-                )
-            stats_key = "stats" if fold_now else "stats_inc"
+            stats_ptr = self._write_stats(
+                mode, state,
+                self._stats_plus(mode, state, out.df) if fold_now
+                else lambda which, keys: as_catalog_stats(
+                    fold_stats(grows, keys), keys, mode
+                ),
+                inc=not fold_now,
+            )
+            payload = {
+                "adds": [batch_dir],
+                "removes": [],
+                "stats" if fold_now else "stats_inc": stats_ptr,
+                "meta": {batch_dir: dir_meta},
+            }
+            last.update(payload=payload, df=out.df)
+            if not n_bids:
+                return payload, delta.n
+            per = fold_stats(grows, [_GBID], mins=(), maxs=())
+            got = dict(zip(*per.to_pydict().values()))
+            return payload, [got.get(i, 0) for i in range(n_bids)]
 
-            for _fast in range(self.MAX_FAST_RETRIES):
-                try:
-                    log.try_commit(
-                        new_version,
-                        {
-                            "adds": [batch_dir],
-                            "removes": [],
-                            stats_key: stats_ptr,
-                            "meta": {batch_dir: dir_meta},
-                            "op": "ingest",
-                            "ts": time.time(),
-                        },
-                    )
-                    if self.auto_compact_every:
-                        st = log.state()
-                        if self.auto_compact_every == "auto":
-                            from stock_ops_spark.plans.sizing import (
-                                compact_cadence,
-                            )
+        def rebase(state, head):
+            p = last["payload"]
+            return "stats_inc" in p and self._interleaved_commits_safe(
+                mode, state["version"], head, p["meta"][p["adds"][0]]
+            )
 
-                            live_rows = sum(
-                                (st["meta"].get(d) or {}).get("n") or 0
-                                for d in st["dirs"]
-                            )
-                            cadence = compact_cadence(live_rows)
-                        else:
-                            cadence = self.auto_compact_every
-                        if len(st["dirs"]) >= cadence:
-                            # best-effort fold; a lost race just means
-                            # another writer compacted (or appended —
-                            # next ingest retries)
-                            try:
-                                self.compact(mode)
-                            except RuntimeError:
-                                pass
-                    for obs in self.observers:
-                        obs(out.df, mode)
-                    if n_bids:
-                        per = fold_stats(grows, [_GBID], mins=(), maxs=())
-                        got = dict(zip(*per.to_pydict().values()))
-                        return [got.get(i, 0) for i in range(n_bids)]
-                    return n
-                except CommitConflict:
-                    head = log.version()
-                    if self._interleaved_commits_safe(
-                        mode, base_version, head, dir_meta
-                    ):
-                        # delta still valid: slide the base forward and
-                        # re-commit.  An INCREMENT is version-independent
-                        # so the retry is a pure filesystem op; a FOLD
-                        # snapshot is stale against the interleaved
-                        # commits, so fall through to the recompute.
-                        if not fold_now:
-                            base_version = head
-                            new_version = head + 1
-                            time.sleep(random.uniform(0.0, 0.05))  # desync
-                            continue
-                    break  # logical conflict (or stale fold): recompute
-            # loser with a LOGICAL conflict — or fast budget exhausted
-            # (extreme contention): clean the invisible output and
-            # recompute from fresh state; the outer loop's backoff is
-            # the final fairness lever before giving up for real
-            self._discard(state)
-            _conflict_backoff(_attempt)
-        raise RuntimeError(
-            f"ingest lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
-        )
+        result = self._commit(mode, "ingest", attempt, rebase)
+        if last:
+            for obs in self.observers:
+                obs(last["df"], mode)
+            self._auto_compact(mode)
+        return result
 
-    # -- the rewrite commit protocol --------------------------------------
-    def _commit(self, mode: str, op: str, attempt):
-        """Run one rewrite commit under optimistic concurrency.
+    def _auto_compact(self, mode: str) -> None:
+        """Fold the store after an ingest publish once its live dir
+        count reaches the ``auto_compact_every`` cadence ("auto": from
+        the live row count, a driver-side fold of the per-dir "n" meta).
+        Best-effort: a lost race just means another writer compacted (or
+        appended — the next ingest retries); any other error raises."""
+        if not self.auto_compact_every:
+            return
+        st = self.log(mode).state()
+        cadence = self.auto_compact_every
+        if cadence == "auto":
+            from stock_ops_spark.plans.sizing import compact_cadence
+
+            cadence = compact_cadence(sum(
+                (st["meta"].get(d) or {}).get("n") or 0 for d in st["dirs"]
+            ))
+        if len(st["dirs"]) >= cadence:
+            try:
+                self.compact(mode)
+            except RuntimeError:
+                pass
+
+    # -- the commit protocol ----------------------------------------------
+    def _commit(self, mode: str, op: str, attempt, rebase=None):
+        """Run one commit under optimistic concurrency — the one retry
+        loop every write of the store publishes through.
 
         ``attempt(state)`` gets a fresh fold of the log (its prior stats
         included — nothing re-folds it) with an empty ``state["written"]``
@@ -991,9 +955,15 @@ class ManifestStore:
         ``_write_cdc``).  It returns ``(payload, result)``, or
         ``(None, result)`` when there is nothing to commit.  The loop
         publishes the payload, stamped with ``op`` and ``ts``, at
-        ``state["version"] + 1`` and returns ``result``.  On a lost race
-        it deletes the recorded dirs — no commit references them — backs
-        off and re-runs the attempt against the fresh state."""
+        ``state["version"] + 1`` and returns ``result``.
+
+        On a lost race, ``rebase(state, head)`` — when given — may say
+        the attempt's written output is still valid at the new ``head``:
+        the loop moves ``state["version"]`` there and publishes the same
+        payload again, without re-running the attempt, at most
+        ``MAX_FAST_RETRIES`` times per attempt.  Otherwise it deletes the
+        recorded dirs — no commit references them — backs off and re-runs
+        the attempt against the fresh state."""
         log = self.log(mode)
         for i in range(self.MAX_COMMIT_RETRIES):
             state = log.state()
@@ -1001,14 +971,27 @@ class ManifestStore:
             payload, result = attempt(state)
             if payload is None:
                 return result
-            try:
-                log.try_commit(
-                    state["version"] + 1, dict(payload, op=op, ts=time.time())
-                )
-                return result
-            except CommitConflict:
-                self._discard(state)
-                _conflict_backoff(i)
+            rebases = 0
+            while True:
+                try:
+                    log.try_commit(
+                        state["version"] + 1,
+                        dict(payload, op=op, ts=time.time()),
+                    )
+                    return result
+                except CommitConflict:
+                    head = log.version()
+                    if not (
+                        rebase is not None
+                        and rebases < self.MAX_FAST_RETRIES
+                        and rebase(state, head)
+                    ):
+                        break
+                rebases += 1
+                state["version"] = head
+                time.sleep(random.uniform(0.0, 0.05))  # desync the writers
+            self._discard(state)
+            _conflict_backoff(i)
         raise RuntimeError(
             f"{op} lost {self.MAX_COMMIT_RETRIES} commit races on {mode}"
         )

@@ -192,6 +192,157 @@ def test_rewrite_commit_conflict_path(spark, tmp_path, monkeypatch, op):
     assert store.gc_orphans(MODE, grace_s=0.0) == []
 
 
+# a new key disjoint from ROWS_RIVAL on ticker, and a batch sharing
+# ROWS_RIVAL's key with another payload (a re-send: version 2)
+ROWS_DISJOINT = [("VOO", 1751600000, 2.0, 2.0, 2.0, 2.0, 20, "1h")]
+ROWS_RESEND = [("QQQ", 1751400000, 3.0, 3.0, 3.0, 3.0, 30, "1h")]
+
+
+def _ingest_race(spark, tmp_path, monkeypatch, rows):
+    """Ingest ``rows`` into a store at v2 while a rival publishes
+    ROWS_RIVAL at v3 before the first publish, and check the result,
+    rows and stats against a conflict-free run with the rival's commit
+    first and that no debris is left; returns (store, the batch dirs the
+    ingest wrote)."""
+    import shutil
+
+    import stock_ops_spark.sources.commitlog as cl
+
+    store = ManifestStore(spark, str(tmp_path / "raced"))
+    store.ingest_batch(_df(spark, ROWS_B1), MODE)
+    store.ingest_batch(_df(spark, ROWS_B2), MODE)
+    shutil.copytree(store.root, str(tmp_path / "ref"))
+    ref = ManifestStore(spark, str(tmp_path / "ref"))
+    ref.ingest_batch(_df(spark, ROWS_RIVAL), MODE)
+    want = ref.ingest_batch(_df(spark, rows), MODE)
+
+    rival = ManifestStore(spark, store.root)
+    real_commit = ManifestLog.try_commit
+    real_write = ManifestStore._write_batch_dir
+    published, written = [], []
+
+    def racing(self, version, payload):
+        published.append(version)
+        if len(published) == 1:
+            rival.ingest_batch(_df(spark, ROWS_RIVAL), MODE)  # wins it
+        return real_commit(self, version, payload)
+
+    def write(self, *a, **kw):
+        d = real_write(self, *a, **kw)
+        if self is store:
+            written.append(d)
+        return d
+
+    monkeypatch.setattr(cl, "_conflict_backoff", lambda attempt: None)
+    with monkeypatch.context() as m:
+        m.setattr(ManifestLog, "try_commit", racing)
+        m.setattr(ManifestStore, "_write_batch_dir", write)
+        got = store.ingest_batch(_df(spark, rows), MODE)
+    assert got == want
+    assert _rows(store.read_all(MODE)) == _rows(ref.read_all(MODE))
+    assert _rows(store.table_stats(MODE)) == _rows(ref.table_stats(MODE))
+    assert store.gc_orphans(MODE, grace_s=0.0) == []
+    # the rival's publish is the second entry; the loser tried 3, won 4
+    assert [published[0], published[-1]] == [3, 4]
+    return store, written
+
+
+def test_ingest_conflict_key_disjoint_rival_rebases(spark, tmp_path, monkeypatch):
+    """A lost race against a key-disjoint ingest REBASES: the attempt
+    runs once and its first batch dir is what publishes, at the next
+    version — and the ingest commit document keeps its key order, so
+    logs written before the one commit loop fold identically."""
+    store, written = _ingest_race(spark, tmp_path, monkeypatch, ROWS_DISJOINT)
+    log = store.log(MODE)
+    with open(log._path(4)) as f:
+        doc = json.load(f)
+    assert len(written) == 1
+    assert doc["adds"] == written
+    assert list(doc) == [
+        "adds", "removes", "stats_inc", "meta", "op", "ts", "version",
+    ]
+
+
+def test_ingest_conflict_key_overlap_rival_recomputes(spark, tmp_path, monkeypatch):
+    """A lost race against an ingest sharing a key RECOMPUTES: the
+    re-send becomes version 2 exactly as in a conflict-free run, and the
+    losing attempt's batch and stats dirs are deleted."""
+    store, written = _ingest_race(spark, tmp_path, monkeypatch, ROWS_RESEND)
+    assert len(written) == 2
+    assert store.log(MODE).state()["dirs"][-1] == written[-1]
+    versions = {
+        r["version"] for r in store.read_all(MODE).collect()
+        if r["ticker"] == "QQQ"
+    }
+    assert versions == {1, 2}
+
+
+def test_ingest_always_losing_gives_up_cleanly(spark, tmp_path, monkeypatch):
+    """An ingest that loses every race raises with the give-up message
+    and leaves the snapshot and the disk as they were."""
+    import stock_ops_spark.sources.commitlog as cl
+
+    store = ManifestStore(spark, str(tmp_path / "lost"))
+    store.ingest_batch(_df(spark, ROWS_B1), MODE)
+    store.ingest_batch(_df(spark, ROWS_B2), MODE)
+    before = _rows(store.read_all(MODE))
+
+    def always_lose(self, version, payload):
+        raise CommitConflict(f"version {version} already committed")
+
+    monkeypatch.setattr(ManifestStore, "MAX_COMMIT_RETRIES", 1)
+    monkeypatch.setattr(cl, "_conflict_backoff", lambda attempt: None)
+    monkeypatch.setattr(ManifestLog, "try_commit", always_lose)
+    with pytest.raises(RuntimeError, match="ingest lost 1 commit races on "):
+        store.ingest_batch(_df(spark, ROWS_RIVAL), MODE)
+    monkeypatch.undo()
+    assert store.version(MODE) == 2
+    assert _rows(store.read_all(MODE)) == before
+    assert store.gc_orphans(MODE, grace_s=0.0) == []
+
+
+def test_vacuum_checkpoint_does_not_hide_conflicting_ingest(spark, mstore, monkeypatch):
+    """A rival ingests the loser's row and vacuums down to that commit
+    before the loser's first publish: the checkpoint replaced the rival's
+    ingest commit, so the rebase check cannot see the shared key and
+    must recompute — the row lands once."""
+    mstore.ingest_batch(_df(spark, _mk_rows(0)), MODE)
+    rival = ManifestStore(spark, mstore.root)
+    real_commit = ManifestLog.try_commit
+    fired = []
+
+    def racing(self, version, payload):
+        if not fired:
+            fired.append(version)
+            rival.ingest_batch(_df(spark, _mk_rows(1)), MODE)  # v2
+            rival.vacuum(MODE, retain_last=1)  # v2 becomes a checkpoint
+        return real_commit(self, version, payload)
+
+    monkeypatch.setattr(ManifestLog, "try_commit", racing)
+    assert mstore.ingest_batch(_df(spark, _mk_rows(1)), MODE) == 0
+    assert fired == [2]
+    assert mstore.read_all(MODE).count() == 2
+
+
+def test_observers_see_delta_when_auto_compaction_fails(spark, tmp_path, monkeypatch):
+    """The observers fire once the ingest is published, before inline
+    auto-compaction: a compaction error still raises, but the published
+    delta has reached every observer — a redelivery commits 0 rows, so
+    a missed delta would leave an incremental view short for good."""
+    store = ManifestStore(spark, str(tmp_path / "obs"), auto_compact_every=1)
+    seen = []
+    store.observers.append(lambda df, mode: seen.append(df.count()))
+
+    def broken_compact(self, mode):
+        raise OSError("rewrite failed")
+
+    monkeypatch.setattr(ManifestStore, "compact", broken_compact)
+    with pytest.raises(OSError, match="rewrite failed"):
+        store.ingest_batch(_df(spark, ROWS_B1), MODE)
+    assert seen == [len(ROWS_B1)]
+    assert store.version(MODE) == 1
+
+
 def test_compaction_atomic_swap_and_gc(spark, mstore):
     mstore.ingest_batch(_df(spark, ROWS_B1), MODE)
     mstore.ingest_batch(_df(spark, ROWS_B2), MODE)

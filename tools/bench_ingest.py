@@ -179,9 +179,9 @@ def main_race() -> None:
     DISJOINT tickers into one ManifestStore concurrently (the
     test_commitlog_race.py shape, measured).  Reports aggregate rows/s,
     per-writer conflict counts, and the final gapless version count —
-    the number that shows the two-tier conflict path (fast re-commit on
-    key-disjoint interleaves) keeps sustained multi-writer ingest live
-    where the r6 full-recompute loop starved.
+    the number that shows the commit loop's rebase path (re-publish on
+    key-disjoint interleaves, no recompute) keeps sustained multi-writer
+    ingest live where the r6 full-recompute loop starved.
 
         python tools/bench_ingest.py --race [n_writers] [rounds] [batch_rows]
 

@@ -1,8 +1,12 @@
 """Phase-labelled job trace for the ManifestStore commit path (§1.5).
 
-Monkeypatches setJobDescription labels around each phase of
-ManifestStore._ingest_frame / read_changes so the event-log jobs map to
-code, answering which phase owns the fat 32-task jobs in the q306 trace.
+Monkeypatches setJobDescription labels around each phase of an ingest
+commit — the attempt ``ManifestStore._commit`` runs for
+``ingest_batch``: versioned delta, localCheckpoint, stat collect, batch
+write — and around ``read_changes``, so the event-log jobs map to code,
+answering which phase owns the fat 32-task jobs in the q306 trace.
+
+Run: ``SPARK_GRAFT_SF_DIR=<sf dir> python tools/probe_q306_phases.py``.
 """
 from __future__ import annotations
 
@@ -49,13 +53,15 @@ def main() -> None:
 
     CL.compute_versioned_delta = cvd
 
-    orig_cfw = CL.cluster_for_write
+    # Delta.write resolves the Spark-write layout from sources.ingest at
+    # call time (micro deltas write driver-side and run no job)
+    orig_cfw = ING.cluster_for_write
 
     def cfw(*a, **k):
         sc.setJobDescription("phase:write")
         return orig_cfw(*a, **k)
 
-    CL.cluster_for_write = cfw
+    ING.cluster_for_write = cfw
 
     # localCheckpoint + _stat_rows happen inline; patch DataFrame methods
     from pyspark.sql import DataFrame
