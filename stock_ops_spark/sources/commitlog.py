@@ -71,9 +71,11 @@ from stock_ops_spark.operators.stats import batch_stats, fold_stats, merge_stats
 from stock_ops_spark.operators.versioning import latest_version_view
 from stock_ops_spark.sources.microcommit import (
     Delta,
+    MICRO_COMMIT_ROWS,
     as_catalog_stats,
     collect_micro,
     materialize_micro,
+    plain_type,
 )
 
 # Commits reach write_micro through Delta.write; the name stays importable
@@ -82,6 +84,7 @@ from stock_ops_spark.sources.microcommit import write_micro  # noqa: F401
 from stock_ops_spark.sources.ingest import (
     _MAX_PRUNE_PARTITIONS,
     compute_versioned_delta,
+    versioned_delta_arrow,
 )
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
@@ -227,10 +230,12 @@ class ManifestLog:
         self-contained checkpoint, so folding from it is complete."""
         return min(self._versions(), default=0)
 
-    def commits(self, upto: int | None = None) -> list[dict]:
-        # A concurrent vacuum can remove a commit file between this
-        # fold's listing and its open; the horizon only ever ADVANCES,
-        # so re-reading min_version and retrying converges (bounded).
+    def commits(self, upto: int | None = None, since: int = 1) -> list[dict]:
+        """The retained commits from ``since`` (or the earliest retained
+        one, if later) to ``upto`` (default: the head), each opened once.
+        A concurrent vacuum can remove a commit file between this
+        fold's listing and its open; the horizon only ever ADVANCES,
+        so re-reading min_version and retrying converges (bounded)."""
         last_err: FileNotFoundError | None = None
         for _attempt in range(5):
             v = self.version() if upto is None else upto
@@ -245,7 +250,7 @@ class ManifestLog:
                 )
             out = []
             try:
-                for i in range(lo, v + 1):
+                for i in range(max(lo, since), v + 1):
                     with open(self._path(i)) as f:
                         out.append(json.load(f))
                 return out
@@ -452,6 +457,46 @@ class ManifestStore:
             )
             frames.append(df.withColumn("__dir", F.lit(d)) if tag else df)
         return _union(frames)
+
+    def _read_dirs_arrow(
+        self, mode: str, dirs: list[str], touched: list | None = None
+    ):
+        """``_read_dirs`` on the driver: the union of ``dirs`` as one Arrow
+        table, read through ``pyarrow.dataset`` with hive partitioning
+        and the missing columns NULL-filled — or None when that cannot
+        stand in for the Spark read: more than ``MICRO_COMMIT_ROWS``
+        rows, a column type outside ``plain_type``, or a type conflict
+        between dirs.  ``touched`` partition tuples prune fragments
+        before anything is counted or read, and the count comes from the
+        pruned fragments' parquet footers — so a large compacted dir
+        costs only the partitions a batch touches."""
+        import pyarrow.dataset as pads
+
+        parts = PARTITION_COLS[mode]
+        flt = None
+        for t in (touched or []) if parts else []:
+            conj = None
+            for c, v in zip(parts, t):
+                term = pads.field(c) == v
+                conj = term if conj is None else conj & term
+            flt = conj if flt is None else flt | conj
+        try:
+            sets, n = [], 0
+            for d in dirs:
+                dset = pads.dataset(
+                    os.path.join(self.data_path(mode), d),
+                    format="parquet", partitioning="hive",
+                )
+                n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
+                if n > MICRO_COMMIT_ROWS:
+                    return None
+                sets.append(dset)
+            tbl = pa.concat_tables(
+                [x.to_table(filter=flt) for x in sets], promote_options="default"
+            )
+        except pa.ArrowException:
+            return None
+        return tbl if all(plain_type(t) for t in tbl.schema.types) else None
 
     def read_all(self, mode: str, at_version: int | None = None) -> DataFrame | None:
         """Current (or time-travel) snapshot, or None before the first
@@ -663,13 +708,13 @@ class ManifestStore:
         if log.min_version() > base_version + 1:
             return False  # vacuum ate interleaved history: can't verify
         try:
-            commits = log.commits(upto=upto)
+            commits = log.commits(upto=upto, since=base_version + 1)
         except (VacuumedVersion, FileNotFoundError):
             return False
+        if commits and commits[0]["version"] != base_version + 1:
+            return False  # vacuumed since the check above
         tsc = S.TS_COL[mode]
         for c in commits:
-            if c["version"] <= base_version:
-                continue
             op = c.get("op") or ("compact" if c.get("removes") else "ingest")
             if op == "compact":
                 continue  # physical rewrite: no logical change
@@ -695,13 +740,14 @@ class ManifestStore:
         batches into ONE commit — one versioned-delta pass, one parquet
         write, one stats increment, one commit race — amortizing the
         fixed per-commit cost across the whole group (measured on a
-        500-row time-ordered commit at ``local[2]``: four Spark jobs and
-        ~0.6–0.9 s, most of it JVM planning and job launch, whatever the
-        batch size), and cutting the multi-writer conflict rate by the
-        group factor.
+        500-row streamed commit at ``local[2]``: one Spark job — the
+        probe of the batch — and ~0.1 s in the store, whatever the size
+        up to ``MICRO_COMMIT_ROWS``; over it, the Spark path's checkpoint
+        and write jobs), and cutting the multi-writer conflict rate by
+        the group factor.
 
-        Disjointness is PROVEN, not assumed, from the same grouped-
-        stats job the single-batch path already runs: two batches may
+        Disjointness is PROVEN, not assumed, from the same grouped
+        stats the single-batch path already computes: two batches may
         interact only if they share a (ticker[, interval]) group with
         overlapping ts ranges — an interacting key would be a row in
         both rectangles.  Any such pair (or any NULL key, which no
@@ -782,19 +828,29 @@ class ManifestStore:
     def _ingest_frame(
         self, batch: DataFrame, mode: str, n_bids: int | None
     ) -> int | list[int]:
-        """The ingest contract (``sources/ingest.py``), atomically: a
-        ``_commit`` attempt, its rebase hook and one post-publish step.
+        """The ingest contract (``sources/ingest.py``), atomically: one
+        probe of the batch, a ``_commit`` attempt, its rebase hook and
+        one post-publish step.
 
-        The ATTEMPT computes the delta OPTIMISTICALLY as a pure append
-        (no store probe) and its grouped-stats collect doubles as the
-        bounds probe: only live dirs whose recorded (ticker, ts)
-        rectangle intersects the batch's are read for the dedup/version
-        re-run (a key shared with a dir lies in both rectangles).  A
-        time-ordered or ticker-sharded 500-row commit thus runs four
-        Spark jobs whatever the store size (measured: three for the eager
-        checkpoint of the versioned delta, one Arrow collect; the micro
-        write and the stats increment run on the driver).  It writes the
-        batch dir and the batch's stats increment — every
+        The PROBE collects the raw batch once (``collect_micro``: one
+        ``limit(bound+1).toArrow()`` job on the source).  An empty batch
+        returns 0 with no commit.  A batch within ``MICRO_COMMIT_ROWS``
+        runs every step on the driver — ``versioned_delta_arrow``, the
+        Arrow dir reader, ``write_micro`` and the stats increment — so
+        a plain commit costs that one Spark job (measured at
+        ``local[2]`` on 500-row streamed commits: ~0.09 s in the store,
+        most of it the probe, where planning and checkpointing the
+        delta in Spark cost ~0.7 s and 5-6 jobs per trigger).  Over the
+        bound, or for a domain the Arrow path declines, the delta is
+        planned in Spark and checkpointed once (``materialize_micro``).
+
+        The delta is computed OPTIMISTICALLY as a pure append (no store
+        probe) and its grouped stats double as the bounds probe: only
+        live dirs whose recorded (ticker, ts) rectangle intersects the
+        batch's are read for the dedup/version re-run (a key shared
+        with a dir lies in both rectangles) — on the driver when their
+        touched partitions provably fit the bound.  The ATTEMPT writes
+        the batch dir and the batch's stats increment — every
         ``STATS_FOLD_EVERY`` increments, a cumulative snapshot.
 
         The REBASE hook: when every interleaved commit is a key-disjoint
@@ -814,72 +870,94 @@ class ManifestStore:
         gb_base = max(self._stats_keys(mode).values(), key=len)
         gb = gb_base + list(ign)
         zero = [0] * n_bids if n_bids else 0
-        last: dict = {}  # the latest attempt's payload and delta
+        session_tz = self.spark.conf.get("spark.sql.session.timeZone")
 
-        def materialize(v):
-            """(Delta, stat rows): one eager checkpoint with the row count
-            riding as an Observation; the stat rows come from the
-            grouped-stats kernel when the delta proved micro, else from
-            one grouped-aggregate job (see sources/microcommit.py).  The
-            Delta's DataFrame is the checkpointed one — parallel
-            partitions for the overlap re-dedup."""
-            d = materialize_micro(v)
+        def stats_of(d: Delta):
+            """The delta with its grouped stat rows (None when empty)."""
             if not d.n:
                 return d, None
             return d, d.stat_rows(gb, tsc, parts, _MAX_PRUNE_PARTITIONS)
 
+        def on_driver(tbl, prior=None):
+            """The versioned delta of the Arrow batch ``tbl`` against the
+            Arrow store rows ``prior``, or None when the Arrow path
+            declines; its DataFrame is built only if something asks."""
+            out = versioned_delta_arrow(tbl, prior, mode, self.tz, ign, session_tz)
+            if out is None:
+                return None
+            return stats_of(Delta(
+                lambda: self.spark.createDataFrame(out), out.num_rows, out
+            ))
+
+        def in_spark(frame, existing=None, touched=None):
+            """The versioned delta planned in Spark and checkpointed once;
+            its rows come back as Arrow when the count proves it micro."""
+            return stats_of(materialize_micro(compute_versioned_delta(
+                frame, existing, mode, self.tz, touched=touched,
+                ignore_cols=ign,
+            )))
+
+        src = collect_micro(batch)
+        if src is not None and not src.num_rows:
+            return zero
+        delta, grows = (src is not None and on_driver(src)) or in_spark(batch)
+        if not delta.n:
+            return zero
+        if n_bids:
+            # prove pairwise batch disjointness BEFORE any write;
+            # raises _GroupOverlap -> caller ingests sequentially
+            self._check_group_disjoint(grows, gb_base)
+        bounds = _meta_of(grows, tsc)
+        # rectangle pruning is only sound when every key is non-NULL
+        # (NULL keys fall outside any recorded bounds)
+        keys_total = (
+            pc.sum(grows["nts"]).as_py() == delta.n
+            and grows["ticker"].null_count == 0
+            and bounds[tsc][0] is not None
+        )
+        last: dict = {}  # the latest attempt's payload and delta
+
         def attempt(state):
             last.clear()
-            delta, grows = materialize(compute_versioned_delta(
-                batch, None, mode, self.tz, ignore_cols=ign
-            ))
-            if not delta.n:
-                return None, zero
-            if n_bids:
-                # prove pairwise batch disjointness BEFORE any write;
-                # raises _GroupOverlap -> caller ingests sequentially
-                self._check_group_disjoint(grows, gb_base)
-            dir_meta = _meta_of(grows, tsc)
-            # rectangle pruning is only sound when every key is non-NULL
-            # (NULL keys fall outside any recorded bounds)
-            keys_total = (
-                pc.sum(grows["nts"]).as_py() == delta.n
-                and grows["ticker"].null_count == 0
-                and dir_meta[tsc][0] is not None
-            )
+            d, g, dir_meta = delta, grows, bounds
             overlap = [
-                d for d in state["dirs"]
+                x for x in state["dirs"]
                 if not keys_total or _may_touch(
-                    state["meta"].get(d), tsc, dir_meta["ticker"], dir_meta[tsc]
+                    state["meta"].get(x), tsc, bounds["ticker"], bounds[tsc]
                 )
             ]
             if overlap:
                 # some live dir may share keys: re-run the dedup/version
-                # pass against just those dirs.  The optimistic delta is
-                # the checkpointed, already-routed batch — re-planning
-                # from it avoids re-paying the batch's own source.  No
-                # group re-check: the store anti-join only REMOVES rows,
-                # so it cannot create cross-batch overlap.
-                delta, grows = materialize(compute_versioned_delta(
+                # pass against just those dirs, from the optimistic delta
+                # (already deduped and routed — the batch's source is not
+                # read again).  No group re-check: the store anti-join
+                # only REMOVES rows, so it cannot create cross-batch
+                # overlap.
+                touched = _touched_parts(grows, parts) if parts else None
+                redo = None
+                if delta.tbl is not None:
+                    prior = self._read_dirs_arrow(mode, overlap, touched)
+                    if prior is not None:
+                        redo = on_driver(
+                            delta.tbl.drop_columns(["version", *parts]), prior
+                        )
+                d, g = redo or in_spark(
                     delta.df.drop("version", *parts),
                     self._read_dirs(mode, overlap),
-                    mode,
-                    self.tz,
-                    touched=_touched_parts(grows, parts) if parts else None,
-                    ignore_cols=ign,
-                ))
-                if not delta.n:
+                    touched,
+                )
+                if not d.n:
                     return None, zero
-                dir_meta = _meta_of(grows, tsc)
-            out = delta.drop(*ign)
+                dir_meta = _meta_of(g, tsc)
+            out = d.drop(*ign)
             # distinct partition-tuple count, free from the stats rows:
             # pins the write's repartition width so each partition value
             # is one task and its file create runs in parallel (r12 —
             # see cluster_for_write).  Micro deltas write their files
-            # straight from the collected Arrow table, driver-side.
+            # straight from the Arrow table, driver-side.
             batch_dir = self._write_batch_dir(
                 out, mode, state,
-                n_parts=len(_touched_parts(grows, parts)) if parts else None,
+                n_parts=len(_touched_parts(g, parts)) if parts else None,
             )
             # batch-only stats depend ONLY on this delta: a
             # version-independent INCREMENT straight from the grouped
@@ -891,7 +969,7 @@ class ManifestStore:
                 mode, state,
                 self._stats_plus(mode, state, out.df) if fold_now
                 else lambda which, keys: as_catalog_stats(
-                    fold_stats(grows, keys), keys, mode
+                    fold_stats(g, keys), keys, mode
                 ),
                 inc=not fold_now,
             )
@@ -901,10 +979,10 @@ class ManifestStore:
                 "stats" if fold_now else "stats_inc": stats_ptr,
                 "meta": {batch_dir: dir_meta},
             }
-            last.update(payload=payload, df=out.df)
+            last.update(payload=payload, delta=out)
             if not n_bids:
-                return payload, delta.n
-            per = fold_stats(grows, [_GBID], mins=(), maxs=())
+                return payload, d.n
+            per = fold_stats(g, [_GBID], mins=(), maxs=())
             got = dict(zip(*per.to_pydict().values()))
             return payload, [got.get(i, 0) for i in range(n_bids)]
 
@@ -917,7 +995,7 @@ class ManifestStore:
         result = self._commit(mode, "ingest", attempt, rebase)
         if last:
             for obs in self.observers:
-                obs(last["df"], mode)
+                obs(last["delta"].df, mode)
             self._auto_compact(mode)
         return result
 
@@ -1483,7 +1561,6 @@ class ManifestStore:
             dirs = state["dirs"]
             if len(dirs) <= 1:
                 return None, {"rewritten": 0, "dirs_before": len(dirs)}
-            df = self._read_dirs(mode, dirs)
             # live row count folds driver-side from the per-dir "n" meta
             # (exactly what the auto-compact cadence reads) — lets the
             # rewrite use the one-file-per-partition layout when small
@@ -1493,7 +1570,18 @@ class ManifestStore:
                 if all(m and m.get("n") is not None for m in metas)
                 else None
             )
-            new_dir = self._write_batch_dir(Delta(df, live_rows), mode, state)
+            # a store that provably fits the micro bound is rewritten on
+            # the driver: read, concat, sort, one file per partition
+            # value (``write_micro``); a type conflict or a declined
+            # write takes the Spark rewrite of the same dirs
+            tbl = None
+            if live_rows is not None and live_rows <= MICRO_COMMIT_ROWS:
+                tbl = self._read_dirs_arrow(mode, dirs)
+            delta = Delta(
+                lambda: self._read_dirs(mode, dirs),
+                live_rows if tbl is None else tbl.num_rows, tbl,
+            )
+            new_dir = self._write_batch_dir(delta, mode, state)
             # data-skipping bounds for the compacted dir: fold the old
             # dirs' recorded bounds when every one has them (no extra
             # scan); otherwise one scalar aggregate over the rewrite
@@ -1511,7 +1599,7 @@ class ManifestStore:
                 if live_rows is not None:
                     new_meta["n"] = live_rows
             else:
-                new_meta = self._dir_meta(df, mode)
+                new_meta = self._dir_meta(delta.df, mode)
             payload = {
                 "adds": [new_dir],
                 "removes": list(dirs),

@@ -12,10 +12,14 @@ steps every commit path shares:
 4. A3  anti-join vs existing rows with identical (key, payload)
 5. A4  version = prior max(version) per key + row_number within batch
 
-(``compute_versioned_delta``), plus the write layout of the delta
-(``cluster_for_write``).  The append into a fresh batch directory and
-the A5/A6 stats increment are the commit's, published together by one
-manifest commit.
+in two implementations with one semantics: ``compute_versioned_delta``
+plans them in Spark, for batches over the micro bound, and
+``versioned_delta_arrow`` runs them in pyarrow on a batch already
+collected to the driver — the path of every micro commit, where Spark's
+planning and job launches, not the data, were the cost.  Plus the write
+layout of the delta (``cluster_for_write``).  The append into a fresh
+batch directory and the A5/A6 stats increment are the commit's,
+published together by one manifest commit.
 
 Scale posture: the existing-store probe (steps 4-5) reads ONLY the
 partitions the batch touches — partition values are collected from the
@@ -26,6 +30,9 @@ and broadcast when small.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,9 +40,11 @@ from stock_ops_spark import schemas as S
 from stock_ops_spark.operators.versioning import assign_versions
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
+    arrow_partition_cols,
     partition_values_predicate,
     with_partition_cols,
 )
+from stock_ops_spark.sources.microcommit import plain_type
 
 # A micro-batch touches a handful of partitions; an unbounded backfill can
 # touch thousands.  Above this, the ingest dedup probe scans the store
@@ -118,6 +127,215 @@ def compute_versioned_delta(
             existing = existing.where(pred)
 
     return assign_versions(routed, existing, keys, payload)
+
+
+def _group_ids(tbl) -> np.ndarray:
+    """Per row of ``tbl``, a dense id shared by exactly the rows equal on
+    every column, NULLs equal to NULLs.  Each column is dictionary-coded
+    (NULL its own code) and the codes are paired column by column —
+    not ``Table.group_by``, whose multi-column keys misgroup rows when
+    a boolean key sits beside an all-NULL float key (pyarrow 16)."""
+    ids = np.zeros(tbl.num_rows, np.int64)
+    for col in tbl.columns:
+        codes = pc.dictionary_encode(
+            col.combine_chunks(), null_encoding="encode"
+        ).indices.to_numpy(zero_copy_only=False)
+        if len(codes):
+            _, ids = np.unique(ids * (codes.max() + 1) + codes, return_inverse=True)
+    return ids
+
+
+def _eq_cols(tbl, cols: list[str]):
+    """``cols`` of ``tbl`` re-encoded so ``_group_ids`` equality is
+    Spark's NULL-safe grouping equality: a float column becomes (is-NaN
+    flag, value with NaN zeroed), so NaN groups with NaN, and -0.0 —
+    already normalized to 0.0 by ``_norm_floats`` — with 0.0."""
+    out = {}
+    for c in cols:
+        a = tbl.column(c)
+        if pa.types.is_floating(a.type):
+            nan = pc.is_nan(a)
+            out[c + "\x00nan"] = nan
+            a = pc.if_else(nan, pa.scalar(0.0, a.type), a)
+        out[c] = a
+    return pa.table(out)
+
+
+def _norm_floats(tbl, cols: list[str]):
+    """-0.0 → 0.0 in the float columns among ``cols``: Spark's grouping
+    keys and join keys normalize it, and the dedup writes the normalized
+    value (``x + 0.0`` is +0.0 for both zeros, NaN and NULL unchanged)."""
+    for c in cols:
+        a = tbl.column(c)
+        if pa.types.is_floating(a.type):
+            i = tbl.column_names.index(c)
+            tbl = tbl.set_column(
+                i, tbl.field(i), pc.add(a, pa.scalar(0.0, a.type))
+            )
+    return tbl
+
+
+def _sort_keys(tbl, cols: list[str]):
+    """``cols`` as ascending ``sort_indices`` keys (NULLs first) that order
+    rows as Spark orders the struct of ``cols``: NULL first, then
+    values, then NaN — which Spark sorts above every number and pyarrow
+    right after the NULLs."""
+    out = {}
+    for c in cols:
+        a = tbl.column(c)
+        if pa.types.is_floating(a.type):
+            nan = pc.is_nan(a)
+            # 0 NULL, 1 number, 2 NaN; the value breaks ties among numbers
+            out[c + "\x00rank"] = pc.fill_null(
+                pc.if_else(nan, 2, 1).cast(pa.int8()), 0
+            )
+            a = pc.if_else(nan, pa.scalar(None, a.type), a)
+        out[c] = a
+    return pa.table(out)
+
+
+def versioned_delta_arrow(
+    tbl,
+    prior,
+    mode: str,
+    tz: str,
+    ignore_cols: tuple = (),
+    session_tz: str = "UTC",
+):
+    """``compute_versioned_delta`` on the driver, for a batch already
+    collected as the Arrow table ``tbl`` and the overlapping store rows
+    ``prior`` (an Arrow table, or None for a pure append).  Steps 1-5
+    run in pyarrow and numpy with Spark's observed semantics:
+
+    - P5: a row is dropped when every payload column is NULL or NaN
+      (``na.drop`` counts NaN as NULL);
+    - A3 within the batch: NULL keys and NULL fields are equal, NaN
+      equals NaN, -0.0 equals 0.0 and is written as 0.0;
+    - A2: ``arrow_partition_cols``;
+    - A3 against ``prior``: the payload matches NULL-safely, but the
+      index keys are an equi-join — a row with a NULL key never
+      matches a stored row and is appended again;
+    - A4: prior max version per key (NULL keys have none) plus a
+      ``row_number`` per key, NULL keys forming one window partition,
+      ordered by the payload struct (sorted field names; NULL first,
+      NaN last).
+
+    Columns come out in Spark's order and types: the batch's, then the
+    partition columns, then ``version``; against ``prior`` the index
+    keys lead, and store-only columns (NULL-filled, ``version`` among
+    them in sorted place) follow the partition columns.
+
+    Returns None — the caller takes the Spark path — when the inputs
+    fall outside what this reproduces exactly: a missing declared
+    column, a batch already carrying partition or ``version`` columns,
+    a column type outside ``plain_type``, a type that differs between
+    batch and store, or an epoch Spark cannot hold."""
+    keys = S.INDEX_COLS[mode]
+    declared = S.SCHEMAS[mode].fieldNames()
+    parts = PARTITION_COLS[mode]
+    cols = tbl.column_names
+    if (
+        set(declared) - set(cols)
+        or set(cols) & {*parts, "version"}
+        or not all(plain_type(t) for t in tbl.schema.types)
+        or prior is not None
+        and not all(plain_type(t) for t in prior.schema.types)
+    ):
+        return None
+    extra = [c for c in cols if c not in declared and c not in ignore_cols]
+    payload = S.payload_cols(mode) + extra
+    try:
+        routed = arrow_partition_cols(tbl, mode, tz, session_tz)
+    except pa.ArrowException:
+        return None
+
+    if prior is not None:
+        batch_cols = set(routed.column_names)
+        for c in sorted(set(prior.column_names) - batch_cols - set(parts)):
+            routed = routed.append_column(
+                prior.schema.field(c).with_nullable(True),
+                pa.nulls(routed.num_rows, prior.schema.field(c).type),
+            )
+        for c in keys + payload:
+            if c not in prior.column_names:
+                prior = prior.append_column(
+                    c, pa.nulls(prior.num_rows, routed.schema.field(c).type)
+                )
+            t, u = routed.schema.field(c).type, prior.schema.field(c).type
+            if t == u:
+                continue
+            if {t, u} <= {pa.string(), pa.large_string()}:
+                prior = prior.set_column(
+                    prior.column_names.index(c), c, prior.column(c).cast(t)
+                )
+            else:
+                return None
+
+    # P5, then A3 within the batch
+    allnull = np.ones(routed.num_rows, bool)
+    for c in payload:
+        allnull &= pc.is_null(routed.column(c), nan_is_null=True).to_numpy(
+            zero_copy_only=False
+        )
+    routed = _norm_floats(routed.filter(pa.array(~allnull)), payload)
+    _, first = np.unique(
+        _group_ids(_eq_cols(routed, keys + payload)), return_index=True
+    )
+    routed = routed.take(np.sort(first))
+    n = routed.num_rows
+
+    # one key id space over batch and store: NULL-equal, as the window
+    # partitions; a row with any NULL key joins nothing in the store
+    maxv = np.zeros(n, np.int64)
+    if prior is not None and prior.num_rows and n:
+        prior = _norm_floats(prior, payload)
+        both = pa.concat_tables([_eq_cols(routed, keys), _eq_cols(prior, keys)])
+        kid = _group_ids(both)
+        pid = _group_ids(pa.concat_tables([
+            _eq_cols(routed, payload), _eq_cols(prior, payload)
+        ]))
+        joins = np.ones(len(kid), bool)
+        for c in keys:
+            joins &= both.column(c).is_valid().to_numpy(zero_copy_only=False)
+        kp = kid * (pid.max() + 1) + pid
+        stored = kp[n:][joins[n:]]
+        keep = ~(joins[:n] & np.isin(kp[:n], stored))
+        per_key = np.zeros(kid.max() + 1, np.int64)
+        pv = prior.column("version").to_numpy(zero_copy_only=False)
+        ok = joins[n:] & ~np.isnan(pv.astype(float))
+        np.maximum.at(per_key, kid[n:][ok], pv[ok].astype(np.int64))
+        maxv = np.where(joins[:n], per_key[kid[:n]], 0)[keep]
+        routed = routed.filter(pa.array(keep))
+        n = routed.num_rows
+
+    # A4: row_number per key, ordered by the payload struct
+    order = _sort_keys(routed, sorted(payload))
+    win = _group_ids(_eq_cols(routed, keys))
+    order = order.append_column("\x00key", pa.array(win))
+    idx = pc.sort_indices(
+        order,
+        sort_keys=[("\x00key", "ascending")]
+        + [(c, "ascending") for c in order.column_names[:-1]],
+        null_placement="at_start",
+    ).to_numpy()
+    run = win[idx]
+    start = np.r_[True, run[1:] != run[:-1]] if n else np.zeros(0, bool)
+    pos = np.arange(n)
+    rn = np.empty(n, np.int64)
+    rn[idx] = pos - np.maximum.accumulate(np.where(start, pos, 0)) + 1
+    version = pa.array(maxv + rn, pa.int32())
+    vfield = pa.field("version", pa.int32(), nullable=False)
+    if "version" in routed.column_names:
+        routed = routed.set_column(
+            routed.column_names.index("version"), vfield, version
+        )
+    else:
+        routed = routed.append_column(vfield, version)
+    if prior is not None:
+        routed = routed.select(
+            keys + [c for c in routed.column_names if c not in keys]
+        )
+    return routed
 
 
 #: Write-layout bound (r12, guide §6): a delta KNOWN to be at most this

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stock_ops_spark.functions.timeutils import epoch_ms_to_local, epoch_s_to_local
+from stock_ops_spark.schemas import TS_COL
 
 PARTITION_COLS = {
     "historical_interday": [],
@@ -63,6 +64,43 @@ def with_partition_cols(df: DataFrame, mode: str, tz: str) -> DataFrame:
         out = out.withColumn("month", F.month(local))
     if "day" in parts:
         out = out.withColumn("day", F.dayofmonth(local))
+    return out
+
+
+#: epoch unit of the routed time column per partitioned mode
+_EPOCH_UNIT = {"historical_intraday": "s", "streaming": "ms"}
+
+
+def arrow_partition_cols(tbl, mode: str, tz: str, session_tz: str = "UTC"):
+    """``with_partition_cols`` on an Arrow table, by Spark's rule: the
+    epoch is read as a UTC instant and rendered as wall time in ``tz``
+    (``from_utc_timestamp``); ``year``/``month``/``day`` of that value
+    are then taken in the session time zone, so a non-UTC session sees
+    the same shifted parts Spark computes.  A UTC instant has exactly
+    one wall time in any zone, so DST edges need no special case.
+    Raises ``pyarrow.ArrowInvalid`` for an epoch Spark's microsecond
+    timestamps cannot hold."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts = PARTITION_COLS[mode]
+    if not parts:
+        return tbl
+    unit = _EPOCH_UNIT[mode]
+    epoch = tbl.column(TS_COL[mode]).cast(pa.int64())
+    lo, hi = pc.min_max(epoch).values()
+    limit = 2**63 // (1_000_000 if unit == "s" else 1_000)
+    if lo.is_valid and (lo.as_py() <= -limit or hi.as_py() >= limit):
+        raise pa.ArrowInvalid("epoch outside Spark's timestamp range")
+    wall = pc.local_timestamp(epoch.cast(pa.timestamp(unit, tz)))
+    if session_tz != "UTC":
+        wall = pc.local_timestamp(
+            wall.cast(pa.int64()).cast(pa.timestamp(unit, session_tz))
+        )
+    fns = {"year": pc.year, "month": pc.month, "day": pc.day}
+    out = tbl
+    for c in parts:
+        out = out.append_column(c, fns[c](wall).cast(pa.int32()))
     return out
 
 

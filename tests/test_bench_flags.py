@@ -11,6 +11,7 @@ drive the pure helpers with synthetic loaded/idle records — no Spark.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 
@@ -20,7 +21,10 @@ def _bench():
     if "bench" in sys.modules:
         return sys.modules["bench"]
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
+        "bench",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench"] = mod

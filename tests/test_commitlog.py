@@ -1216,3 +1216,32 @@ def test_auto_cadence_compacts_from_live_rows(spark, tmp_path):
     ops = [c.get("op") for c in store.log(MODE).commits()]
     assert ops.count("compact") == 1
     assert _table_counts(store) == {"AAA": 32}
+
+
+def test_rebase_check_opens_only_the_interleaved_commits(tmp_path, monkeypatch):
+    """``_interleaved_commits_safe`` reads base+1..head, not the whole
+    retained log: on a 200-commit log with one interleaved commit it
+    opens exactly one commit file, and still rejects a key it shares."""
+    import builtins
+
+    from stock_ops_spark.sources import commitlog as CL
+
+    store = ManifestStore(None, str(tmp_path))
+    log = store.log("streaming")
+    ts = "timestamp_UTC_ms"
+    for v in range(1, 201):
+        d = f"batch-{v}"
+        log.try_commit(v, {"op": "ingest", "adds": [d], "removes": [],
+                           "meta": {d: {"ticker": ["A", "A"], ts: [v, v]}}})
+    opened = []
+
+    def counting_open(path, *a, **kw):
+        opened.append(os.path.basename(str(path)))
+        return builtins.open(path, *a, **kw)
+
+    monkeypatch.setattr(CL, "open", counting_open, raising=False)
+    disjoint = {"ticker": ["B", "B"], ts: [200, 200]}
+    assert store._interleaved_commits_safe("streaming", 199, 200, disjoint)
+    assert opened == ["00000200.json"]
+    shared = {"ticker": ["A", "A"], ts: [200, 200]}
+    assert not store._interleaved_commits_safe("streaming", 199, 200, shared)

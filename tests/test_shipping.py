@@ -14,6 +14,8 @@ import zipfile
 
 from stock_ops_spark import shipping
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_package_zip_contents_and_reuse(tmp_path, monkeypatch):
     pkg = tmp_path / "stock_ops_spark"
@@ -50,7 +52,7 @@ def test_python_worker_query_from_foreign_cwd(tmp_path):
     mapInPandas registry query.  Subprocess so neither our cwd nor our
     imported modules leak in."""
     script = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
         "from pyspark.sql import SparkSession\n"
         "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
         "import __spark_entry__ as E\n"

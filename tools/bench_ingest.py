@@ -22,10 +22,12 @@ progress records.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -209,7 +211,7 @@ def main_race() -> None:
     go = os.path.join(root, "go")
     child_src = f"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from stock_ops_spark.session import get_spark
 from stock_ops_spark import schemas as S
 from stock_ops_spark.sources.commitlog import (

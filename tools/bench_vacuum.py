@@ -17,11 +17,12 @@ from __future__ import annotations
 
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stock_ops_spark.sources.commitlog import ManifestLog  # noqa: E402
 

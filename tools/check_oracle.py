@@ -16,10 +16,11 @@ driver-consumable record (CORRECTNESS_full.json) instead of the
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon(df) -> tuple[int, list[str], str]:

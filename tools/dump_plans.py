@@ -7,9 +7,11 @@ reviewable without running Spark.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADLINERS = [
     "q01_pricing_summary",
@@ -61,7 +63,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"## {name}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(HEADLINERS)} plans")
 
