@@ -5,37 +5,34 @@ re-runs its full plan per query, and Structured Streaming aggregations
 live inside one streaming query's state store.  This module maintains a
 grouped-aggregate table UNDER ANY ingest path (batch ``ingest_batch``
 calls, streaming ``foreachBatch`` micro-batches, backfills) by folding
-each appended delta into a tiny persisted partial-aggregate table —
-O(|delta| + |groups touched|) per refresh, never a rescan of the store.
+the store's change feed (``ManifestStore.read_changes``) into a tiny
+persisted partial-aggregate table — O(|delta| + |groups touched|) per
+sync, never a rescan of the store.
 
 Supported measures are the ADDITIVE partials: ``sum``, ``count``,
 ``min``, ``max`` (and anything derivable from them at read time — avg,
 rates, spans — via ``serve``).  Additivity is what makes maintenance a
 pure fold; it also dictates the contract:
 
-- **Append-only under observers.**  A retraction or in-place update is
-  not expressible with additive partials (min/max cannot un-see a
-  value).  Wire the view to the POST-dedup delta the store computes
-  (``ManifestStore``'s ``observers`` hook hands over exactly the rows
-  each committed ingest added, exactly once) — never to raw pre-dedup
-  batches, which replay on checkpoint recovery.
-- **Updates/deletes via the CDC feed.**  Against a ``ManifestStore``
-  (which has MERGE/DELETE and a ``read_changes`` feed), ``sync`` pulls
-  the change rows past a persisted cursor and folds them exactly once:
-  subtractable measures (sum/count) fold deletions NEGATIVELY — exact,
-  O(|delta| + |groups|), no fact scan; a view with min/max measures
-  recomputes ONLY the groups a retraction touched from the snapshot
-  (semi-join-bounded — the groups, not the table).  The cursor is
-  written INSIDE the view directory by the same rename that installs
-  the data, so a crash can never double-fold.  A view is maintained by
-  observers OR by sync, never both (guarded — mixing double-counts).
-- **Crash safety** comes from the generation swap
+- **One change feed.**  ``sync`` pulls the change rows past a persisted
+  cursor and folds them exactly once.  Ingest inserts are the POST-dedup
+  rows each commit added (never raw pre-dedup batches, which replay on
+  checkpoint recovery); subtractable measures (sum/count) fold
+  deletions NEGATIVELY — exact, O(|delta| + |groups|), no fact scan; a
+  view with min/max measures recomputes ONLY the groups a retraction
+  touched from the snapshot (semi-join-bounded — the groups, not the
+  table).  ``stream_sync`` folds the same feed as a stream;
+  ``init_from_snapshot`` is the bootstrap and the heal.  Those three are
+  the whole maintenance API.
+- **Crash safety.**  The cursor is written INSIDE the view directory by
+  the same generation swap that installs the data
   (``operators/artifacts.install``: write the next generation to a
-  staging dir, rename the live one aside, rename staging live) and its
-  ``heal``, which runs before every read: a SIGKILL at any point
-  leaves the previous or the next generation whole, with its cursor.
-  The one open window (delta appended, fold killed before install) is
-  healed by ``rebuild``.
+  staging dir, rename the live one aside, rename staging live), and
+  ``heal`` runs before every read: a SIGKILL at any point leaves the
+  previous or the next generation whole, with its cursor, so a sync
+  never double-folds.  A commit published just before a crash is still
+  in the feed, so the next ``sync`` folds it — there is no window in
+  which a view silently lacks a published delta.
 
 Measure algebra — maintenance cost per path (measured r9,
 ``tools/scale_curves.py --only mv_minmax_retract``):
@@ -83,7 +80,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -137,8 +133,8 @@ class MatView:
             "px_cents": ("sum",   "CAST(round(close * 100) AS BIGINT)"),
             "hi":       ("max",   "high"),
         })
-        mv.refresh(delta)                 # per ingested delta
-        mv.serve(avg_px="px_cents / n")   # derived columns at read time
+        mv.sync(store, "historical_intraday")  # fold the new commits
+        mv.serve(avg_px="px_cents / n")        # derived columns at read time
     """
 
     #: widest sync span (in commits) whose change set is pinned with
@@ -168,7 +164,7 @@ class MatView:
 
         - the dim must be STABLE for the view's lifetime (pin it to a
           store version / static snapshot); a changed dim invalidates
-          folded history — ``rebuild`` with the new dim.
+          folded history — ``init_from_snapshot`` with the new dim.
         - inner-join semantics: fact rows with no dim match are OUTSIDE
           the view (and their retractions fold as no-ops, consistently);
           dim attributes used as group keys must be non-NULL (NULL group
@@ -230,8 +226,7 @@ class MatView:
         names = list(self.measures)
         if _MULT in delta.columns:
             # pre-_MULT view generations lack the multiplicity column —
-            # fold from NULL (unknown); only sync-maintained views (which
-            # always start from a fresh partial) rely on its exactness
+            # fold from NULL (unknown)
             if _MULT not in existing.columns:
                 existing = existing.withColumn(_MULT, F.lit(None).cast("long"))
             names.append(_MULT)
@@ -248,35 +243,34 @@ class MatView:
             )
         return delta.join(e, on=keys, how="full_outer").select(*cols)
 
-    def refresh(self, delta: DataFrame) -> None:
-        """Fold one appended delta into the view (one partial aggregate
-        over the delta + one O(groups) merge + swap install).  Observer
-        path only — a CDC-synced view folds through ``sync`` (mixing the
-        two would count the same rows twice)."""
-        if self.cursor() is not None:
-            raise ValueError(
-                "view is CDC-synced (cursor present) — maintain it with "
-                "sync(), not refresh(); observer deltas would double-count"
-            )
-        self._install(self._merge(self._read(), self._partial(delta)))
-
-    def observer(self) -> Callable[[DataFrame, str], None]:
-        """Adapter for ``ManifestStore(observers=[...])``: ignores the
-        mode argument and folds every committed post-dedup delta."""
-        return lambda delta, _mode: self.refresh(delta)
-
     # -- CDC maintenance (ManifestStore.read_changes) --------------------
-    def cursor(self) -> int | None:
-        """Last store version folded by ``sync`` (None = this view has
-        never been cursor-initialized — it is observer-maintained, or a
-        crash landed in the parquet-done/cursor-missing window and the
-        heal is ``init_from_snapshot``)."""
-        self._read()  # heal an interrupted install first
+    def _state(self) -> tuple[DataFrame | None, int | None]:
+        """The installed partials, bookkeeping column included (None
+        before the first fold), and their cursor (None: none on disk),
+        after healing an interrupted install — one heal per call."""
+        df = heal(self.spark, self.path)
         p = os.path.join(self.path, _CURSOR_FILE)
         if not os.path.exists(p):
-            return None
+            return df, None
         with open(p) as f:
-            return json.load(f)["version"]
+            return df, json.load(f)["version"]
+
+    def _fold_base(self) -> tuple[DataFrame | None, int]:
+        """``_state`` for a fold: a view with no partials folds from
+        cursor 0; partials without a cursor (written by an older
+        per-delta refresh path, or a torn install) cannot be folded onto
+        — they raise, and ``init_from_snapshot`` heals them."""
+        existing, cur = self._state()
+        if cur is None and existing is not None:
+            raise ValueError(
+                "view exists without a cursor; heal with init_from_snapshot"
+            )
+        return existing, cur or 0
+
+    def cursor(self) -> int | None:
+        """Last store version folded by ``sync`` (None: never folded, or
+        partials without a cursor — see ``_fold_base``)."""
+        return self._state()[1]
 
     def init_from_snapshot(self, store, mode: str) -> int:
         """First fill / heal for a CDC-synced view: one full aggregate
@@ -307,15 +301,7 @@ class MatView:
         view directory before the install rename, so the fold and the
         cursor advance are one atomic unit — a crash replays nothing.
         """
-        cur = self.cursor()
-        existing = self._read()
-        if cur is None:
-            if existing is not None:
-                raise ValueError(
-                    "view exists without a cursor — observer-maintained "
-                    "(or a torn sync install); heal with init_from_snapshot"
-                )
-            cur = 0
+        existing, cur = self._fold_base()
         v1 = store.version(mode)
         noop = {"from": cur, "to": cur, "pos_rows": 0, "neg_rows": 0,
                 "recomputed_groups": 0}
@@ -467,20 +453,12 @@ class MatView:
         view_self = self
 
         def fold(batch: DataFrame, _batch_id: int) -> None:
-            cur = view_self.cursor()
-            if cur is None:
-                if view_self._read() is not None:
-                    raise ValueError(
-                        "view exists without a cursor — heal with "
-                        "init_from_snapshot before stream_sync"
-                    )
-                cur = 0
+            existing, cur = view_self._fold_base()
             fresh = batch.where(F.col("_commit_version") > cur)
             fresh = fresh.localCheckpoint(eager=True)
             row = fresh.agg(F.max("_commit_version")).collect()[0]
             if row[0] is None:
                 return  # pure checkpoint replay: nothing new
-            existing = view_self._read()
             view_self._fold_changes(
                 fresh, cur, int(row[0]), existing, store, mode,
                 materialized=True,
@@ -503,40 +481,29 @@ class MatView:
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer.start()
 
-    def _install(self, df: DataFrame, version: int | None = None) -> None:
+    def _install(self, df: DataFrame, version: int) -> None:
         """Install ``df`` as the view's next generation by generation
-        swap.  With ``version``, the cursor file is written (and
-        fsync'd) into the staging dir, so data and cursor publish in
-        the same rename."""
+        swap.  The cursor file ``version`` is written (and fsync'd) into
+        the staging dir, so data and cursor publish in the same
+        rename."""
         # df's plan may read the live view, which the swap replaces —
         # sever lineage first, then write the tiny result as one file
         full = df.localCheckpoint(eager=True)
 
         def write(staging: str) -> None:
             full.coalesce(1).write.mode("overwrite").parquet(staging)
-            if version is not None:
-                with open(os.path.join(staging, _CURSOR_FILE), "w") as f:
-                    json.dump({"version": version}, f)
-                    f.flush()
-                    os.fsync(f.fileno())
+            with open(os.path.join(staging, _CURSOR_FILE), "w") as f:
+                json.dump({"version": version}, f)
+                f.flush()
+                os.fsync(f.fileno())
 
         install(self.path, write)
 
-    def rebuild(self, fact: DataFrame) -> None:
-        """Maintenance-time heal / first fill: one full aggregate of the
-        fact table, installed atomically (replaces, never folds)."""
-        self._install(self._partial(fact))
-
     # -- read ------------------------------------------------------------
-    def _read(self) -> DataFrame | None:
-        """The installed partials, bookkeeping column included (None
-        before the first fold), after healing an interrupted install."""
-        return heal(self.spark, self.path)
-
     def read(self) -> DataFrame | None:
         """The raw partial-aggregate table (None before the first fold).
         The hidden row-multiplicity bookkeeping column stays hidden."""
-        df = self._read()
+        df = heal(self.spark, self.path)
         if df is not None and _MULT in df.columns:
             df = df.drop(_MULT)
         return df

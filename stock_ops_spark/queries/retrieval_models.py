@@ -3645,7 +3645,7 @@ def q316_matview_join_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         mv.sync(store, "streaming")
         store.ingest_batch(ev.where(~F.col("__even")).drop("__even"), "streaming")
         mv.sync(store, "streaming")
-        store.delete_where("streaming", "volume % 3 = 0", on_observers="ignore")
+        store.delete_where("streaming", "volume % 3 = 0")
         mv.sync(store, "streaming")
         rows = mv.read().collect()
         return _local_df(

@@ -1634,37 +1634,35 @@ def backfill_batcher(
     is the fleet dispatch shape: 5000 due nightly fetches are one Spark
     job, not 5000 sequential driver round-trips.
 
-    Per-run attribution: a temporary store observer reads the
-    POST-dedup delta's per-ticker counts (bounded collect: one row per
-    ticker), so each run's recorded ``rows`` matches what its ticker
-    actually appended — identical semantics to per-run dispatch."""
+    Per-run attribution: after the backfill, one bounded collect of the
+    per-ticker counts of the rows its commits added (``read_changes``
+    from the version before the run; one row per ticker), so each run's
+    recorded ``rows`` matches what its ticker actually appended —
+    identical semantics to per-run dispatch.  The counts assume the
+    backfill is the only writer of its mode while it runs."""
 
     def _run(group: dict[str, Any], tickers: list[str]) -> dict:
         from stock_ops_spark.sources import services
 
-        counts: dict[str, int] = {}
-
-        def _obs(delta, mode):
-            for row in delta.groupBy("ticker").count().collect():
-                counts[row["ticker"]] = counts.get(row["ticker"], 0) + int(
-                    row["count"]
-                )
-
-        store.observers.append(_obs)
-        try:
-            services.run_historical_backfill(
-                spark,
-                store,
-                provider or group.get("provider") or "EODHD-mock",
-                tickers=tickers,
-                exchange=group["exchange"],
-                interval=group["interval"],
-                start=group["start"],
-                end=group["end"],
-            )
-        finally:
-            store.observers.remove(_obs)
-        return counts
+        mode = services.historical_mode(group["interval"])
+        v0 = store.version(mode)
+        services.run_historical_backfill(
+            spark,
+            store,
+            provider or group.get("provider") or "EODHD-mock",
+            tickers=tickers,
+            exchange=group["exchange"],
+            interval=group["interval"],
+            start=group["start"],
+            end=group["end"],
+        )
+        rows = services.appended_rows(store, mode, v0)
+        if rows is None:
+            return {}
+        return {
+            r["ticker"]: int(r["count"])
+            for r in rows.groupBy("ticker").count().collect()
+        }
 
     return _run
 

@@ -402,24 +402,12 @@ class ManifestStore:
         exchange: str = "US",
         tz: str = "America/New_York",
         auto_compact_every: "int | str" = "auto",
-        observers: list | None = None,
     ):
         self.spark = spark
         self.root = root
         self.provider = provider
         self.exchange = exchange
         self.tz = tz
-        # delta observers: callables (versioned_delta, mode) handed the
-        # POST-dedup rows of each non-empty ingest (already
-        # localCheckpoint'd — safe to aggregate without recomputation);
-        # incremental materialized views (plans/matview) ride this hook.
-        # They fire once per published ingest, after ``_commit`` returns
-        # and BEFORE inline auto-compaction — a losing attempt's delta
-        # was computed against a stale version and is recomputed on
-        # retry, so folding it would double-count exactly the rows the
-        # winner already committed; and a compaction error must not
-        # hide a delta that is already published.
-        self.observers = list(observers or [])
         # Reads union one relation per live batch dir, so read (and the
         # ingest dedup probe, which reads) degrades linearly in commits
         # since the last compaction — measured 4x rows/s loss at 100
@@ -860,9 +848,10 @@ class ManifestStore:
         pure filesystem op.  A fold snapshot, an interleaved mutation or
         a possibly shared key re-runs the attempt.
 
-        After the publish the observers see the delta; only then may
-        ``_auto_compact`` fold the store, so a failing compaction cannot
-        hide a published delta from them."""
+        Only after the publish may ``_auto_compact`` fold the store.
+        Consumers learn of the commit from ``read_changes``, so a
+        failing compaction or a crash after the publish cannot hide the
+        delta from them."""
         parts = PARTITION_COLS[mode]
         tsc = S.TS_COL[mode]
         ign = (_GBID,) if n_bids else ()
@@ -915,7 +904,7 @@ class ManifestStore:
             and grows["ticker"].null_count == 0
             and bounds[tsc][0] is not None
         )
-        last: dict = {}  # the latest attempt's payload and delta
+        last: dict = {}  # the latest attempt's payload
 
         def attempt(state):
             last.clear()
@@ -979,7 +968,7 @@ class ManifestStore:
                 "stats" if fold_now else "stats_inc": stats_ptr,
                 "meta": {batch_dir: dir_meta},
             }
-            last.update(payload=payload, delta=out)
+            last["payload"] = payload
             if not n_bids:
                 return payload, d.n
             per = fold_stats(g, [_GBID], mins=(), maxs=())
@@ -994,8 +983,6 @@ class ManifestStore:
 
         result = self._commit(mode, "ingest", attempt, rebase)
         if last:
-            for obs in self.observers:
-                obs(last["delta"].df, mode)
             self._auto_compact(mode)
         return result
 
@@ -1160,22 +1147,7 @@ class ManifestStore:
         meta["n"] = row[2 * len(cols)]
         return meta
 
-    def _check_observers(self, action: str, on_observers: str) -> None:
-        # Incremental MVs fold APPEND deltas; a physical update/delete
-        # silently invalidates them.  Fail loudly unless the caller
-        # acknowledges (then rebuild the views from the new snapshot).
-        if self.observers and on_observers != "ignore":
-            raise ValueError(
-                f"{action} with registered observers would leave "
-                "incremental views stale; pass on_observers='ignore' and "
-                "rebuild them from the post-mutation snapshot — or drop "
-                "the observer wiring and maintain the view with "
-                "MatView.sync (CDC cursor folds updates/deletes exactly)"
-            )
-
-    def merge(
-        self, source: DataFrame, mode: str, on_observers: str = "error"
-    ) -> dict:
+    def merge(self, source: DataFrame, mode: str) -> dict:
         """Delta-style MERGE: matched index keys get their payload
         REPLACED in place (version preserved — a correction, not a new
         logical version); unmatched source rows are inserted as version 1.
@@ -1201,7 +1173,6 @@ class ManifestStore:
         INSERT OR REPLACE under its journal (sql_db.py); this is the
         multi-file equivalent with the rewrite pruned to touched files.
         """
-        self._check_observers("merge", on_observers)
         keys = S.INDEX_COLS[mode]
         src, _n_src, stbl = materialize_micro(source)
         if stbl is not None:
@@ -1306,12 +1277,7 @@ class ManifestStore:
 
         return self._commit(mode, "merge", attempt)
 
-    def delete_where(
-        self,
-        mode: str,
-        predicate: "Column | str",
-        on_observers: str = "error",
-    ) -> dict:
+    def delete_where(self, mode: str, predicate: "Column | str") -> dict:
         """Delta-style DELETE: physically remove rows matching
         ``predicate``, rewriting ONLY the batch dirs that contain a
         matching row (file-pruned like ``merge``).  NULL predicate rows
@@ -1322,7 +1288,6 @@ class ManifestStore:
         The commit carries a CDC file of the deleted rows
         (_change_type='delete').
         """
-        self._check_observers("delete_where", on_observers)
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cond_true = F.coalesce(cond, F.lit(False))
         finest = max(self._stats_keys(mode).values(), key=len)
@@ -1368,10 +1333,7 @@ class ManifestStore:
 
         return self._commit(mode, "delete", attempt)
 
-    def retain_before(
-        self, mode: str, cutoff, cdc: bool = False,
-        on_observers: str = "error",
-    ) -> dict:
+    def retain_before(self, mode: str, cutoff, cdc: bool = False) -> dict:
         """Retention as a manifest commit (reference parity: the Redis
         ``XTRIM`` analog, writer.py:293-297): drop rows whose time
         column is below ``cutoff``, driven by the commit-level
@@ -1394,7 +1356,6 @@ class ManifestStore:
         silently keeping expired rows.  ``cdc=True`` reads the doomed
         rows once and keeps the feed exact (delete changes).
         """
-        self._check_observers("retain_before", on_observers)
         tsc = S.TS_COL[mode]
         cut = _j(cutoff)
         expired_rows = F.col(tsc) < F.lit(cutoff)
@@ -1509,10 +1470,8 @@ class ManifestStore:
                 f"up to version {lo} was vacuumed/checkpointed"
             )
         frames = []
-        for c in log.commits(upto=upto):
+        for c in log.commits(upto=upto, since=from_version + 1):
             v = c["version"]
-            if v <= from_version:
-                continue
             op = c.get("op") or ("compact" if c.get("removes") else "ingest")
             if op == "compact":
                 continue
@@ -1614,9 +1573,7 @@ class ManifestStore:
 
         return self._commit(mode, "compact", attempt)
 
-    def restore(
-        self, mode: str, to_version: int, on_observers: str = "error"
-    ) -> dict:
+    def restore(self, mode: str, to_version: int) -> dict:
         """Make an earlier snapshot current again (Delta RESTORE): a new
         commit whose adds/removes swap the live dir set back to
         ``to_version``'s — metadata-only for the data (the old batch
@@ -1627,7 +1584,6 @@ class ManifestStore:
         stream keep folding exactly instead of silently diverging.
         History is preserved — RESTORE is a new version, and time travel
         into the undone span still works."""
-        self._check_observers("restore", on_observers)
 
         def attempt(state):
             if to_version == state["version"]:
@@ -1730,10 +1686,7 @@ class ManifestStore:
             }
             return payload, {"adopted_rows": delta.n, "version": 1}
 
-        out = self._commit(mode, "convert", attempt)
-        for obs in self.observers:
-            obs(delta.df, mode)
-        return out
+        return self._commit(mode, "convert", attempt)
 
     def vacuum(self, mode: str, retain_last: int = 8) -> dict:
         """Truncate commit history to the last ``retain_last`` versions —

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from stock_ops_spark.localrel import local_relation
 from stock_ops_spark.schemas import INTERDAY_INTERVALS
@@ -74,12 +75,10 @@ def run_historical_task(
     if interval in INTERDAY_INTERVALS:
         raw = local_relation(spark, raw_rows, _INTERDAY_RAW)
         normalized, _rejects = X.interday(raw, ticker, interval)
-        mode = "historical_interday"
     else:
         raw = local_relation(spark, raw_rows, _INTRADAY_RAW)
         normalized, _rejects = X.intraday(raw, ticker, interval)
-        mode = "historical_intraday"
-    return store.ingest_batch(normalized, mode)
+    return store.ingest_batch(normalized, historical_mode(interval))
 
 
 def run_stream_task(
@@ -193,35 +192,30 @@ def run_command(
         # checkpoint progress exactly-once; the idempotent writer makes
         # redelivered rows effectively-once).  Command: {path,
         # checkpoint, mode?, max_files_per_trigger?}.  Returns rows
-        # appended (post-dedup), observed from the store's delta hook.
+        # appended (post-dedup): one count over the change feed of the
+        # run's commits, which assumes the drain is the only writer of
+        # its mode while it runs.
         from stock_ops_spark.streaming.ingest import (
             file_trade_source,
             stream_ingest,
         )
 
-        appended = {"n": 0}
-
-        def _count_delta(delta, _mode):
-            appended["n"] += delta.count()
-
+        mode = command.get("mode", "streaming")
         source = file_trade_source(
             spark,
             command["path"],
             max_files_per_trigger=int(command.get("max_files_per_trigger", 1)),
         )
-        store.observers.append(_count_delta)
-        try:
-            q = stream_ingest(
-                source,
-                store,
-                mode=command.get("mode", "streaming"),
-                checkpoint=command["checkpoint"],
-                available_now=True,
-            )
-            q.awaitTermination()
-        finally:
-            store.observers.remove(_count_delta)
-        return appended["n"]
+        v0 = store.version(mode)
+        stream_ingest(
+            source,
+            store,
+            mode=mode,
+            checkpoint=command["checkpoint"],
+            available_now=True,
+        ).awaitTermination()
+        rows = appended_rows(store, mode, v0)
+        return 0 if rows is None else rows.count()
     if command_type == "maintain_store":
         # Engine extension (no reference analog: the reference trims its
         # Redis buffer inline at write time, writer.py:35-37,293-297 —
@@ -257,6 +251,24 @@ def run_command(
         )
     raise ValueError(f"Unsupported command type: {command_type!r}")
 
+def historical_mode(interval: str) -> str:
+    """The store mode a historical fetch of ``interval`` lands in."""
+    if interval in INTERDAY_INTERVALS:
+        return "historical_interday"
+    return "historical_intraday"
+
+
+def appended_rows(store: ManifestStore, mode: str, since: int) -> DataFrame | None:
+    """The rows the commits to ``mode`` after version ``since`` added —
+    the insert and update_postimage rows of ``read_changes`` — or None
+    when there are none.  Compaction commits are invisible to the feed,
+    so they add nothing."""
+    feed = store.read_changes(mode, since)
+    if feed is None:
+        return None
+    return feed.where(F.col("_change_type").isin("insert", "update_postimage"))
+
+
 def run_historical_backfill(
     spark: SparkSession,
     store: ManifestStore,
@@ -290,8 +302,6 @@ def run_historical_backfill(
     )
     if interval in INTERDAY_INTERVALS:
         normalized, _rejects = X.interday(raw, None, interval)
-        mode = "historical_interday"
     else:
         normalized, _rejects = X.intraday(raw, None, interval)
-        mode = "historical_intraday"
-    return store.ingest_batch(normalized, mode)
+    return store.ingest_batch(normalized, historical_mode(interval))

@@ -324,14 +324,16 @@ def test_vacuum_checkpoint_does_not_hide_conflicting_ingest(spark, mstore, monke
     assert mstore.read_all(MODE).count() == 2
 
 
-def test_observers_see_delta_when_auto_compaction_fails(spark, tmp_path, monkeypatch):
-    """The observers fire once the ingest is published, before inline
-    auto-compaction: a compaction error still raises, but the published
-    delta has reached every observer — a redelivery commits 0 rows, so
-    a missed delta would leave an incremental view short for good."""
-    store = ManifestStore(spark, str(tmp_path / "obs"), auto_compact_every=1)
-    seen = []
-    store.observers.append(lambda df, mode: seen.append(df.count()))
+def test_published_delta_in_feed_when_auto_compaction_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Inline auto-compaction runs after the ingest's publish: a
+    compaction error still raises, but the published delta is in the
+    change feed and a synced view folds it — a redelivery commits 0
+    rows, so a delta lost here would leave the view short for good."""
+    from stock_ops_spark.plans.matview import MatView
+
+    store = ManifestStore(spark, str(tmp_path / "feed"), auto_compact_every=1)
 
     def broken_compact(self, mode):
         raise OSError("rewrite failed")
@@ -339,8 +341,13 @@ def test_observers_see_delta_when_auto_compaction_fails(spark, tmp_path, monkeyp
     monkeypatch.setattr(ManifestStore, "compact", broken_compact)
     with pytest.raises(OSError, match="rewrite failed"):
         store.ingest_batch(_df(spark, ROWS_B1), MODE)
-    assert seen == [len(ROWS_B1)]
     assert store.version(MODE) == 1
+    feed = store.read_changes(MODE, 0)
+    assert feed.count() == len(ROWS_B1)
+    assert {r["_commit_version"] for r in feed.collect()} == {1}
+    mv = MatView(spark, str(tmp_path / "mv"), ["ticker"], {"n": ("count", None)})
+    assert mv.sync(store, MODE)["pos_rows"] == len(ROWS_B1)
+    assert sum(r["n"] for r in mv.read().collect()) == len(ROWS_B1)
 
 
 def test_compaction_atomic_swap_and_gc(spark, mstore):
@@ -635,18 +642,6 @@ def test_read_changes_feed(spark, mstore):
     assert mstore.read_changes(MODE, from_version=5) is None
 
 
-def test_mutations_guard_incremental_observers(spark, mstore):
-    mstore.ingest_batch(_df(spark, ROWS_B1), MODE)
-    mstore.observers.append(object())  # any registered incremental MV
-    with pytest.raises(ValueError, match="observers"):
-        mstore.merge(_df(spark, SRC_MERGE), MODE)
-    with pytest.raises(ValueError, match="observers"):
-        mstore.delete_where(MODE, "close < 600")
-    # acknowledged: the caller owns the rebuild
-    res = mstore.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
-    assert res["deleted"] == 1
-
-
 def test_gc_collects_orphan_cdc_keeps_referenced(spark, mstore):
     mstore.ingest_batch(_df(spark, ROWS_B1), MODE)
     mstore.merge(_df(spark, SRC_MERGE), MODE)
@@ -903,17 +898,12 @@ def test_restore_swaps_snapshot_and_feeds_cdc(spark, mstore):
     assert mstore.read_all(MODE).count() == 3
 
 
-def test_restore_guards_observers_and_gc(spark, tmp_path):
+def test_restore_refuses_garbage_collected_version(spark, tmp_path):
     from stock_ops_spark.sources.commitlog import ManifestStore
 
-    store = ManifestStore(
-        spark, str(tmp_path / "m"), observers=[lambda df, m: None]
-    )
+    store = ManifestStore(spark, str(tmp_path / "m"))
     store.ingest_batch(_df(spark, _mk_rows(0)), MODE)
     store.ingest_batch(_df(spark, _mk_rows(1)), MODE)
-    with pytest.raises(ValueError, match="observers"):
-        store.restore(MODE, 1)
-    store.observers.clear()
     # simulate GC of a version-1 dir: restore must refuse loudly
     import shutil as _sh
     import os as _os

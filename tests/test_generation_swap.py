@@ -1,7 +1,7 @@
 """Crash at every boundary of the generation swap
 (``operators/artifacts.install``) for each protocol that replaces a
-parquet state through it: ``MatView.refresh``, ``MatView.sync``,
-``FoldStateIndex.maintain`` and ``StreamingNearDupIndex.maintain``.
+parquet state through it: ``MatView.sync``, ``FoldStateIndex.maintain``
+and ``StreamingNearDupIndex.maintain``.
 
 ``os.rename`` is made to raise once 0, 1 or 2 of the swap's renames
 have completed — after the staging write, after the live dir is renamed
@@ -85,26 +85,6 @@ def _copies(base: str, tmp_path):
         path = str(tmp_path / f"at{n}")
         shutil.copytree(base, path)
         yield n, path
-
-
-def test_matview_refresh_crash_at_every_boundary(spark, tmp_path, monkeypatch):
-    base = str(tmp_path / "mv")
-    _mv(spark, base).refresh(_fact(spark, ROWS_A))
-    old = _rows(_mv(spark, base).read())
-    clean = str(tmp_path / "clean")
-    shutil.copytree(base, clean)
-    _mv(spark, clean).refresh(_fact(spark, ROWS_B))
-    new = _rows(_mv(spark, clean).read())
-    assert new != old
-
-    for n, path in _copies(base, tmp_path):
-        with monkeypatch.context() as m:
-            _crash_after(m, path, n)
-            with pytest.raises(Killed):
-                _mv(spark, path).refresh(_fact(spark, ROWS_B))
-        got = _rows(_mv(spark, path).read())
-        assert got == (old if n == 0 else new), n
-        assert _debris(path) == [], n
 
 
 def test_matview_sync_crash_at_every_boundary(spark, tmp_path, monkeypatch):

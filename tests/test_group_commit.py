@@ -8,7 +8,7 @@ Contracts pinned:
   before anything is written and falls back to sequential order;
 - exact cross-batch duplicates stay exactly-once (attribution caveat
   documented on the method);
-- observers receive the group delta once, without the internal tag;
+- the change feed sees a group as one commit, without the internal tag;
 - the tag column never reaches the stored parquet.
 """
 from __future__ import annotations
@@ -121,13 +121,15 @@ def test_group_trivial_shapes(spark, tmp_path):
     assert g.version(MODE) == 1
 
 
-def test_group_observer_sees_untagged_delta_once(spark, tmp_path):
+def test_group_commit_is_one_untagged_feed_version(spark, tmp_path):
+    """A group commit reaches the change feed as ONE ``_commit_version``
+    carrying every batch's rows, without the internal batch tag."""
     g = ManifestStore(spark, str(tmp_path / "g"), auto_compact_every=0)
-    seen = []
-    g.observers.append(lambda df, mode: seen.append(df.columns))
     g.ingest_group([_batch(spark, "AAA", 0, n=4), _batch(spark, "BBB", 0, n=4)], MODE)
-    assert len(seen) == 1  # one group -> one observer call
-    assert "__gbid" not in seen[0]
+    feed = g.read_changes(MODE)
+    assert "__gbid" not in feed.columns
+    assert {r["_commit_version"] for r in feed.collect()} == {1}
+    assert feed.count() == 8
     # and the stored parquet carries no tag column either
     assert "__gbid" not in g.read_all(MODE).columns
 

@@ -1,7 +1,8 @@
 """Incremental materialized views (plans/matview.py): fold-equals-
-recompute equivalence, derived serving, dedup-aware integration through
-the store observer hook, and crash-state recovery via the shared
-generation swap (``operators/artifacts.install``/``heal``)."""
+recompute equivalence, derived serving, dedup-aware maintenance from
+the store's change feed (``sync``), recovery from a crash between a
+commit's publish and the view's fold, and crash-state recovery via the
+shared generation swap (``operators/artifacts.install``/``heal``)."""
 
 from __future__ import annotations
 
@@ -37,28 +38,38 @@ def _rows(seed: int):
     return out
 
 
+def _store(spark, tmp_path, name="store") -> ManifestStore:
+    return ManifestStore(spark, str(tmp_path / name))
+
+
+def _ingest_and_sync(mv, store, rows) -> int:
+    """Commit ``rows`` to the store, then fold the feed into ``mv``."""
+    n = store.ingest_batch(
+        store.spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY),
+        "historical_intraday",
+    )
+    mv.sync(store, "historical_intraday")
+    return n
+
+
+def _by_ticker(df) -> dict:
+    return {r["ticker"]: {m: r[m] for m in MEASURES} for r in df.collect()}
+
+
 def test_fold_equals_full_recompute(spark, tmp_path):
     mv = _mv(spark, tmp_path)
-    batches = [
-        spark.createDataFrame(_rows(s), schema=S.HISTORICAL_INTRADAY)
-        for s in range(4)
-    ]
-    for b in batches:
-        mv.refresh(b)
-    full = batches[0]
-    for b in batches[1:]:
-        full = full.unionByName(b)
-    expect = {
-        r["ticker"]: {m: r[m] for m in MEASURES}
-        for r in mv._partial(full).collect()
-    }
-    got = {r["ticker"]: {m: r[m] for m in MEASURES} for r in mv.read().collect()}
-    assert got == expect
+    store = _store(spark, tmp_path)
+    for s in range(4):
+        _ingest_and_sync(mv, store, _rows(s))
+    full = spark.createDataFrame(
+        [r for s in range(4) for r in _rows(s)], schema=S.HISTORICAL_INTRADAY
+    )
+    assert _by_ticker(mv.read()) == _by_ticker(mv._partial(full))
 
 
 def test_serve_derives_from_partials(spark, tmp_path):
     mv = _mv(spark, tmp_path)
-    mv.refresh(spark.createDataFrame(_rows(0), schema=S.HISTORICAL_INTRADAY))
+    _ingest_and_sync(mv, _store(spark, tmp_path), _rows(0))
     served = mv.serve(avg_px="round(px_cents / n / 100.0, 4)").collect()
     for r in served:
         assert abs(r.avg_px - r.px_cents / r.n / 100.0) < 1e-6
@@ -69,19 +80,14 @@ def test_rejects_non_additive_measure(spark, tmp_path):
         MatView(spark, str(tmp_path / "x"), ["t"], {"med": ("median", "v")})
 
 
-def test_observer_sees_post_dedup_delta_only(spark, tmp_path):
-    """The store hands the MV exactly the rows that entered the store:
-    replaying the same batch (checkpoint-recovery shape) must NOT
-    double-count, because the dedup empties the second delta."""
+def test_sync_sees_post_dedup_delta_only(spark, tmp_path):
+    """The change feed hands the MV exactly the rows that entered the
+    store: replaying the same batch (checkpoint-recovery shape) must
+    NOT double-count, because the dedup empties the second delta."""
     mv = _mv(spark, tmp_path)
-    store = ManifestStore(
-        spark, str(tmp_path / "store"), observers=[mv.observer()]
-    )
-    batch = spark.createDataFrame(_rows(1), schema=S.HISTORICAL_INTRADAY)
-    n1 = store.ingest_batch(batch, "historical_intraday")
-    assert n1 == 20
-    n2 = store.ingest_batch(batch, "historical_intraday")  # full replay
-    assert n2 == 0
+    store = _store(spark, tmp_path)
+    assert _ingest_and_sync(mv, store, _rows(1)) == 20
+    assert _ingest_and_sync(mv, store, _rows(1)) == 0  # full replay
     counts = {r.ticker: r.n for r in mv.read().collect()}
     assert sum(counts.values()) == 20  # folded once, not twice
 
@@ -90,34 +96,12 @@ def test_view_matches_store_after_mixed_ingest(spark, tmp_path):
     """End-to-end: after several batches with partial overlap, the view
     equals a full recompute over what the STORE holds."""
     mv = _mv(spark, tmp_path)
-    store = ManifestStore(
-        spark, str(tmp_path / "store"), observers=[mv.observer()]
-    )
+    store = _store(spark, tmp_path)
     for s in range(3):
         rows = _rows(s) + _rows(max(0, s - 1))[:5]  # 5-row replay overlap
-        store.ingest_batch(
-            spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY),
-            "historical_intraday",
-        )
+        _ingest_and_sync(mv, store, rows)
     stored = store.read_all("historical_intraday")
-    expect = {
-        r["ticker"]: {m: r[m] for m in MEASURES}
-        for r in mv._partial(stored).collect()
-    }
-    got = {
-        r["ticker"]: {m: r[m] for m in MEASURES} for r in mv.read().collect()
-    }
-    assert got == expect
-
-
-def test_rebuild_replaces_not_folds(spark, tmp_path):
-    mv = _mv(spark, tmp_path)
-    b = spark.createDataFrame(_rows(2), schema=S.HISTORICAL_INTRADAY)
-    mv.refresh(b)
-    mv.refresh(b)  # wired to raw batches by mistake: double-counted
-    assert sum(r.n for r in mv.read().collect()) == 40
-    mv.rebuild(b)  # heal: full replace
-    assert sum(r.n for r in mv.read().collect()) == 20
+    assert _by_ticker(mv.read()) == _by_ticker(mv._partial(stored))
 
 
 def test_swap_debris_recovery(spark, tmp_path):
@@ -127,40 +111,32 @@ def test_swap_debris_recovery(spark, tmp_path):
     import os
 
     mv = _mv(spark, tmp_path)
-    mv.refresh(spark.createDataFrame(_rows(0), schema=S.HISTORICAL_INTRADAY))
+    _ingest_and_sync(mv, _store(spark, tmp_path), _rows(0))
     os.rename(mv.path, mv.path + ".tmp")  # simulate: installed gen back to .tmp
     assert mv.read() is not None
     assert os.path.exists(mv.path) and not os.path.exists(mv.path + ".tmp")
     assert sum(r.n for r in mv.read().collect()) == 20
+    assert mv.cursor() == 1  # the cursor rode the same generation
 
 
-def test_manifest_store_observer_fires_after_commit(spark, tmp_path):
-    """Observers see each committed delta exactly once, and a replayed
+def test_manifest_store_sync_folds_each_commit_once(spark, tmp_path):
+    """A sync folds each committed delta exactly once, and a replayed
     batch (empty delta) folds nothing."""
     mv = _mv(spark, tmp_path)
-    store = ManifestStore(
-        spark, str(tmp_path / "mstore"), observers=[mv.observer()]
-    )
-    batch = spark.createDataFrame(_rows(3), schema=S.HISTORICAL_INTRADAY)
-    assert store.ingest_batch(batch, "historical_intraday") == 20
-    assert store.ingest_batch(batch, "historical_intraday") == 0
+    store = _store(spark, tmp_path, "mstore")
+    assert _ingest_and_sync(mv, store, _rows(3)) == 20
+    assert _ingest_and_sync(mv, store, _rows(3)) == 0
+    assert mv.cursor() == 1
     assert sum(r.n for r in mv.read().collect()) == 20
     stored = store.read_all("historical_intraday")
-    expect = {
-        r["ticker"]: {m: r[m] for m in MEASURES}
-        for r in mv._partial(stored).collect()
-    }
-    got = {
-        r["ticker"]: {m: r[m] for m in MEASURES} for r in mv.read().collect()
-    }
-    assert got == expect
+    assert _by_ticker(mv.read()) == _by_ticker(mv._partial(stored))
 
 
 def test_streaming_ingest_maintains_view(spark, tmp_path):
     """The MV rides the streaming path untouched: stream_ingest →
-    foreachBatch → ingest_batch → observer.  Checkpointed replay of an
-    already-seen burst folds nothing (effectively-once extends to the
-    view)."""
+    foreachBatch → ingest_batch → commit, then ``sync`` folds the
+    commits.  Checkpointed replay of an already-seen burst folds
+    nothing (effectively-once extends to the view)."""
     import json
 
     from stock_ops_spark.streaming.ingest import (
@@ -190,32 +166,26 @@ def test_streaming_ingest_maintains_view(spark, tmp_path):
         ["ticker"],
         {"n": ("count", None), "vol": ("sum", "CAST(volume AS BIGINT)")},
     )
-    store = ManifestStore(
-        spark, str(tmp_path / "store"), observers=[mv.observer()]
-    )
-    q = stream_ingest(
-        file_trade_source(spark, str(src)),
-        store,
-        checkpoint=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    got = {r.ticker: (r.n, r.vol) for r in mv.read().collect()}
-    assert got == {"SPY": (2, 14), "VOO": (1, 2)}
+    store = _store(spark, tmp_path)
+
+    def drain_and_sync():
+        q = stream_ingest(
+            file_trade_source(spark, str(src)),
+            store,
+            checkpoint=str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        mv.sync(store, "streaming")
+        return {r.ticker: (r.n, r.vol) for r in mv.read().collect()}
+
+    assert drain_and_sync() == {"SPY": (2, 14), "VOO": (1, 2)}
 
     # replayed burst → empty post-dedup delta → view unchanged
     with open(src / "burst2.json", "w") as f:
         for r in trades[:2]:
             f.write(json.dumps(r) + "\n")
-    q2 = stream_ingest(
-        file_trade_source(spark, str(src)),
-        store,
-        checkpoint=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q2.awaitTermination(120)
-    got = {r.ticker: (r.n, r.vol) for r in mv.read().collect()}
-    assert got == {"SPY": (2, 14), "VOO": (1, 2)}
+    assert drain_and_sync() == {"SPY": (2, 14), "VOO": (1, 2)}
 
 
 # -- CDC-driven maintenance (ManifestStore.read_changes) -------------------
@@ -270,7 +240,7 @@ def test_sync_subtractable_folds_mutations_without_fact_scan(spark, tmp_path):
         ("SPY", 1751463000, 617.0, 618.7, 616.6, 618.6, 5000, "1h"),
         ("IVV", 1751463000, 500.0, 501.0, 499.0, 500.5, 10, "1h"),
     ]
-    store.merge(_fact_df(spark, src), MODE, on_observers="ignore")
+    store.merge(_fact_df(spark, src), MODE)
     res = mv.sync(store, MODE)
     assert res["recomputed_groups"] == 0  # subtractable: NO fact scan
     assert res["neg_rows"] == 1 and res["pos_rows"] == 2
@@ -279,7 +249,7 @@ def test_sync_subtractable_folds_mutations_without_fact_scan(spark, tmp_path):
     assert got["SPY"] == (2, 5900)  # 1000 -> 5000 replaced, 900 kept
 
     # DELETE of a whole group: VOO leaves the view entirely
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.delete_where(MODE, "ticker = 'VOO'")
     res = mv.sync(store, MODE)
     assert res["neg_rows"] == 1 and res["recomputed_groups"] == 0
     _assert_view_equals_recompute(mv, store)
@@ -297,7 +267,7 @@ def test_sync_minmax_recomputes_only_retracted_groups(spark, tmp_path):
     mv.sync(store, MODE)
     hi0 = {r.ticker: r.hi for r in mv.read().collect()}
     assert hi0["SPY"] == 630.0
-    store.delete_where(MODE, "high = 630.0", on_observers="ignore")
+    store.delete_where(MODE, "high = 630.0")
     res = mv.sync(store, MODE)
     assert res["recomputed_groups"] == 1  # SPY only — VOO untouched
     _assert_view_equals_recompute(mv, store)
@@ -315,6 +285,24 @@ def test_sync_is_exactly_once_and_cursor_atomic(spark, tmp_path):
     r2 = mv.sync(store, MODE)
     assert r2 == {"from": 1, "to": 1, "pos_rows": 0, "neg_rows": 0,
                   "recomputed_groups": 0}
+    _assert_view_equals_recompute(mv, store)
+
+
+def test_sync_refuses_view_without_cursor(spark, tmp_path):
+    """Partials on disk with no cursor (a view written by the older
+    per-delta refresh path, or a torn install) cannot be folded onto:
+    sync refuses rather than refolding history on top of them, and
+    init_from_snapshot heals the view."""
+    store = ManifestStore(spark, str(tmp_path / "cstore"))
+    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
+    mv = MatView(spark, str(tmp_path / "cmv"), ["ticker"], SUB_MEASURES)
+    mv._partial(store.read_all(MODE)).write.parquet(mv.path)
+    assert mv.cursor() is None
+    with pytest.raises(ValueError, match="init_from_snapshot"):
+        mv.sync(store, MODE)
+    assert mv.init_from_snapshot(store, MODE) == 1
+    store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
+    assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
     _assert_view_equals_recompute(mv, store)
 
 
@@ -348,7 +336,6 @@ def test_sync_wide_span_skips_checkpoint_same_result(spark, tmp_path):
             [("SPY", 1751463000, 617.0, 618.7, 616.6, 618.6, 5000, "1h")],
         ),
         MODE,
-        on_observers="ignore",
     )
 
     mv = MatView(spark, str(tmp_path / "mv_wide"), ["ticker"], SUB_MEASURES)
@@ -397,25 +384,77 @@ def test_init_from_snapshot_equals_sync_from_zero(spark, tmp_path):
     )
     assert key(a) == key(b)
     # and both keep folding identically past the bootstrap
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.delete_where(MODE, "ticker = 'VOO'")
     a.sync(store, MODE)
     b.sync(store, MODE)
     assert key(a) == key(b)
 
 
-def test_sync_and_observer_paths_cannot_mix(spark, tmp_path):
-    store = ManifestStore(spark, str(tmp_path / "cstore"))
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
-    synced = MatView(spark, str(tmp_path / "mv_s"), ["ticker"], SUB_MEASURES)
-    synced.sync(store, MODE)
-    with pytest.raises(ValueError, match="CDC-synced"):
-        synced.refresh(_fact_df(spark, CDC_ROWS_B))
-    # and the reverse: an observer-built view has no cursor -> sync
-    # refuses rather than refolding history on top of it
-    obs = MatView(spark, str(tmp_path / "mv_o"), ["ticker"], SUB_MEASURES)
-    obs.refresh(_fact_df(spark, CDC_ROWS_A))
-    with pytest.raises(ValueError, match="init_from_snapshot"):
-        obs.sync(store, MODE)
+_CRASH_CHILD = r"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from stock_ops_spark import schemas as S
+from stock_ops_spark.plans.matview import MatView
+from stock_ops_spark.session import get_spark
+from stock_ops_spark.sources.commitlog import ManifestLog, ManifestStore
+
+spark = get_spark("mv-crash-child", master="local[1]", shuffle_partitions=2)
+store = ManifestStore(spark, {store!r})
+mv = MatView(spark, {mv!r}, ["ticker"], {measures!r})
+fact = lambda rows: spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
+store.ingest_batch(fact({rows_a!r}), {mode!r})
+mv.sync(store, {mode!r})
+publish = ManifestLog.try_commit
+
+
+def publish_then_die(self, version, payload):
+    publish(self, version, payload)
+    os._exit(0)  # killed right after the publish: nothing else runs
+
+
+ManifestLog.try_commit = publish_then_die
+store.ingest_batch(fact({rows_b!r}), {mode!r})
+os._exit(3)  # not reached once the publish happened
+"""
+
+
+def test_sync_after_crash_between_publish_and_fold(spark, tmp_path):
+    """A process killed right after a commit's publish leaves the view
+    one commit behind; the next ``sync`` — in a fresh process — folds
+    the published delta from the change feed, so the view equals the
+    one a crash-free run builds."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root, path = str(tmp_path / "store"), str(tmp_path / "mv")
+    script = tmp_path / "child.py"
+    script.write_text(_CRASH_CHILD.format(
+        repo=repo, store=root, mv=path, measures=SUB_MEASURES, mode=MODE,
+        rows_a=CDC_ROWS_A, rows_b=CDC_ROWS_B,
+    ))
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=300,
+    )
+    assert proc.returncode == 0, "the child never reached the publish"
+
+    store = ManifestStore(spark, root)
+    mv = MatView(spark, path, ["ticker"], SUB_MEASURES)
+    assert store.version(MODE) == 2 and mv.cursor() == 1
+    assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
+
+    clean = ManifestStore(spark, str(tmp_path / "clean"))
+    want = MatView(spark, str(tmp_path / "mv_clean"), ["ticker"], SUB_MEASURES)
+    for rows in (CDC_ROWS_A, CDC_ROWS_B):
+        clean.ingest_batch(_fact_df(spark, rows), MODE)
+    want.sync(clean, MODE)
+    assert sorted(map(tuple, mv.read().collect())) == sorted(
+        map(tuple, want.read().collect())
+    )
+    assert mv.cursor() == want.cursor() == 2
+    _assert_view_equals_recompute(mv, store)
 
 
 def test_fresh_view_syncs_from_converted_store(spark, tmp_path):
@@ -453,7 +492,7 @@ def test_sync_raises_on_uncdc_retention_and_heals(spark, tmp_path):
     store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
     mv.sync(store, MODE)
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
-    store.retain_before(MODE, 1751500000, on_observers="ignore")  # drops ROWS_A
+    store.retain_before(MODE, 1751500000)  # drops ROWS_A
     with pytest.raises(ChangeFeedGap):
         mv.sync(store, MODE)
     # heal: one full aggregate of the post-retention snapshot + cursor
@@ -490,8 +529,8 @@ def test_stream_sync_maintains_view_from_cdc_stream(spark, tmp_path):
 
     # offline mutations: a MERGE correction + a DELETE, then resume
     src = [("SPY", 1751463000, 617.0, 618.7, 616.6, 618.6, 5000, "1h")]
-    store.merge(_fact_df(spark, src), MODE, on_observers="ignore")
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.merge(_fact_df(spark, src), MODE)
+    store.delete_where(MODE, "ticker = 'VOO'")
     drain()
     assert mv.cursor() == 4
     _assert_view_equals_recompute(mv, store)
@@ -551,13 +590,13 @@ def test_join_view_sync_through_ingest_merge_delete(spark, tmp_path):
         ("SPY", 1751463000, 617.0, 618.7, 616.6, 618.6, 5000, "1h"),
         ("IVV", 1751463000, 500.0, 501.0, 499.0, 500.5, 10, "1h"),
     ]
-    store.merge(_fact_df(spark, src), MODE, on_observers="ignore")
+    store.merge(_fact_df(spark, src), MODE)
     res = mv.sync(store, MODE)
     assert res["recomputed_groups"] == 0  # subtractable: no fact scan
     _assert_view_equals_recompute(mv, store)
 
     # deleting every VOO row empties sector B out of the view
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.delete_where(MODE, "ticker = 'VOO'")
     mv.sync(store, MODE)
     _assert_view_equals_recompute(mv, store)
     assert "B" not in {r.sector for r in mv.read().collect()}
@@ -576,7 +615,7 @@ def test_join_view_minmax_recomputes_only_affected_sector(spark, tmp_path):
     mv.sync(store, MODE)
     hi0 = {r.sector: r.hi for r in mv.read().collect()}
     assert hi0["A"] == 630.0
-    store.delete_where(MODE, "high = 630.0", on_observers="ignore")
+    store.delete_where(MODE, "high = 630.0")
     res = mv.sync(store, MODE)
     assert res["recomputed_groups"] == 1  # sector A only
     _assert_view_equals_recompute(mv, store)
@@ -596,7 +635,7 @@ def test_join_view_unmatched_fact_rows_stay_outside(spark, tmp_path):
     _assert_view_equals_recompute(mv, store)
     got = {r.sector: (r.n, r.vol) for r in mv.read().collect()}
     assert got == {"A": (2, 1900)}  # VOO rows invisible
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.delete_where(MODE, "ticker = 'VOO'")
     res = mv.sync(store, MODE)  # retraction of unmatched rows: no-op
     _assert_view_equals_recompute(mv, store)
     assert {r.sector: (r.n, r.vol) for r in mv.read().collect()} == got
@@ -613,7 +652,7 @@ def test_join_view_retention_gap_and_heal(spark, tmp_path):
     store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
     mv.sync(store, MODE)
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
-    store.retain_before(MODE, 1751500000, on_observers="ignore")
+    store.retain_before(MODE, 1751500000)
     with pytest.raises(ChangeFeedGap):
         mv.sync(store, MODE)
     mv.init_from_snapshot(store, MODE)
@@ -644,7 +683,7 @@ def test_join_view_stream_sync(spark, tmp_path):
     drain()
     assert mv.cursor() == 2
     _assert_view_equals_recompute(mv, store)
-    store.delete_where(MODE, "ticker = 'VOO'", on_observers="ignore")
+    store.delete_where(MODE, "ticker = 'VOO'")
     drain()
     _assert_view_equals_recompute(mv, store)
     got = {r.sector: (r.n, r.vol) for r in mv.read().collect()}
@@ -654,25 +693,15 @@ def test_join_view_stream_sync(spark, tmp_path):
     assert sorted(map(tuple, mv.read().collect())) == before
 
 
-def test_join_view_observer_path(spark, tmp_path):
-    """join_dim works on the OBSERVER (refresh) path too: every
-    post-dedup delta is enriched before the partial fold, so a
-    store-observer-maintained join view equals the fact⋈dim recompute."""
-    mv = MatView(
-        spark,
-        str(tmp_path / "jmv_obs"),
-        ["sector"],
-        SUB_MEASURES,
-        join_dim=_dim(spark),
-        join_on=["ticker"],
-    )
-    store = ManifestStore(
-        spark, str(tmp_path / "store"), observers=[mv.observer()]
-    )
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), "historical_intraday")
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_B), "historical_intraday")
-    # replay: dedup'd away -> observer sees nothing -> view unchanged
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), "historical_intraday")
+def test_join_view_sync_folds_post_dedup_deltas(spark, tmp_path):
+    """A join view synced after every ingest folds only the post-dedup
+    rows: every delta is enriched before the partial fold, and a
+    replayed batch (deduped to nothing) leaves the view unchanged."""
+    mv = _join_mv(spark, tmp_path, SUB_MEASURES)
+    store = ManifestStore(spark, str(tmp_path / "store"))
+    for rows in (CDC_ROWS_A, CDC_ROWS_B, CDC_ROWS_A):  # the last: a replay
+        store.ingest_batch(_fact_df(spark, rows), MODE)
+        mv.sync(store, MODE)
     expect = {
         r["sector"]: (r["n"], r["vol"])
         for r in mv._partial(
@@ -696,7 +725,7 @@ def test_retention_gap_heal_minmax(spark, tmp_path):
     store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
     mv.sync(store, MODE)
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
-    store.retain_before(MODE, 1751500000, on_observers="ignore")  # drops A
+    store.retain_before(MODE, 1751500000)  # drops A
     with pytest.raises(ChangeFeedGap):
         mv.sync(store, MODE)
     mv.init_from_snapshot(store, MODE)
@@ -707,7 +736,7 @@ def test_retention_gap_heal_minmax(spark, tmp_path):
     assert got["SPY"] == pytest.approx(630.0)
     # post-heal delete of the SPY max takes the recompute path and the
     # max falls back correctly (no stale extremum)
-    res = store.delete_where(MODE, "volume = 800", on_observers="ignore")
+    res = store.delete_where(MODE, "volume = 800")
     assert res["deleted"] == 1
     out = mv.sync(store, MODE)
     assert out["recomputed_groups"] == 1  # SPY only

@@ -1261,3 +1261,57 @@ def test_scheduled_stream_drain_cron_style(spark, tmp_path):
     # idle fire: nothing to drain
     res3 = sched.tick(datetime(2025, 1, 6, 10, 30, tzinfo=UTC))
     assert [r.rows for r in res3] == [0]
+
+
+def test_scheduled_drain_builds_no_delta_frame(spark, tmp_path, monkeypatch):
+    """A scheduled drain of driver-side micro commits never builds a
+    commit's delta DataFrame: the run's row count is one count over the
+    change feed after the run, not a count job per commit.  Three
+    500-row bursts stay under ``STATS_FOLD_EVERY`` commits, so no
+    cumulative stats snapshot needs a frame either."""
+    import json as _json
+
+    from stock_ops_spark.sources import microcommit
+    from stock_ops_spark.sources.commitlog import ManifestStore
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    t0 = 1755526571000
+    trades = [
+        {"ticker": ["SPY", "VOO", "QQQ"][i % 3], "timestamp_UTC_ms": t0 + i,
+         "price": 100.0 + i / 100.0, "volume": 1 + i % 7}
+        for i in range(1500)
+    ]
+    # bursts overlap by 20 redelivered rows: post-dedup appends are 1480
+    for b, lo in enumerate((0, 480, 1000)):
+        with open(land / f"b{b}.json", "w") as f:
+            for r in trades[lo:lo + 500]:
+                f.write(_json.dumps(r) + "\n")
+    assert ManifestStore.STATS_FOLD_EVERY > 3
+
+    api, _ = _mk_ops(tmp_path)
+    ops = DeploymentOps(api, provider="EODHD-mock", mode="drain")
+    cfg = {"deployment_name": "drain-hourly", "deployment_id": None,
+           "path": str(land), "checkpoint": str(tmp_path / "ckpt")}
+    ops.create_deployment(cfg)
+    cfg["schedules"] = [build_schedule(
+        timezone="UTC", freq="HOURLY",
+        dtstart_local=datetime(2025, 1, 6, 8, 0))]
+    ops.schedule_deployment(cfg)
+
+    builds = []
+    frame = microcommit.Delta.df.fget
+
+    def counting(self):
+        if callable(self._df):
+            builds.append(self.n)
+        return frame(self)
+
+    monkeypatch.setattr(microcommit.Delta, "df", property(counting))
+    store = ManifestStore(spark, str(tmp_path / "store"))
+    sched = SchedulerService(api, spark_runner(spark, store))
+    res = sched.tick(datetime(2025, 1, 6, 8, 30, tzinfo=UTC))
+    assert [r.state for r in res] == ["COMPLETED"]
+    assert store.version("streaming") >= 3
+    assert builds == []
+    assert res[0].rows == 1480 == store.read_all("streaming").count()

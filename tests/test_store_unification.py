@@ -81,7 +81,7 @@ def test_retain_with_cdc_keeps_feed_exact_for_views(spark, tmp_path, mstore):
         {"n": ("count", None), "vol": ("sum", "CAST(volume AS BIGINT)")},
     )
     mv.sync(mstore, MODE)
-    res = mstore.retain_before(MODE, FEB, cdc=True, on_observers="ignore")
+    res = mstore.retain_before(MODE, FEB, cdc=True)
     feed = mstore.read_changes(MODE, from_version=3, to_version=res["version"])
     assert feed.where(F.col("_change_type") == "delete").count() == 1
     mv.sync(mstore, MODE)  # subtractable fold of the delete

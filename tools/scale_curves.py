@@ -456,7 +456,7 @@ def p_merge_touched_dirs(spark, sf):
             .localCheckpoint(eager=True)
         )
         t0 = time.perf_counter()
-        res = store.merge(src, "streaming", on_observers="ignore")
+        res = store.merge(src, "streaming")
         el = time.perf_counter() - t0
         return n, res["updated"], el
     finally:
@@ -493,10 +493,7 @@ def p_mv_minmax_retract(spark, sf):
         )
         mv.sync(store, "streaming")
         # delete a handful of rows from ONE ticker group
-        store.delete_where(
-            "streaming", "ticker = 'error' AND volume % 97 = 0",
-            on_observers="ignore",
-        )
+        store.delete_where("streaming", "ticker = 'error' AND volume % 97 = 0")
         t0 = time.perf_counter()
         res = mv.sync(store, "streaming")
         el = time.perf_counter() - t0
