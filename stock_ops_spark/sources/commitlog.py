@@ -88,7 +88,9 @@ from stock_ops_spark.sources.ingest import (
 )
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
+    arrow_partition_cols,
     mode_root,
+    partition_values_predicate,
     with_partition_cols,
 )
 
@@ -165,6 +167,60 @@ def _touched_parts(stats, parts: list[str]) -> list[tuple]:
     if uniq.num_rows > _MAX_PRUNE_PARTITIONS:
         return []
     return list(zip(*(uniq[c].to_pylist() for c in parts)))
+
+
+def _bound_expr(parts: list[str], vals: list, lower: bool):
+    """``(parts) >= vals`` (``lower``) or ``(parts) <= vals``, compared as
+    tuples, as a ``pyarrow.dataset`` expression: the partition range a
+    time bound routes to."""
+    import pyarrow.dataset as pads
+
+    expr = None
+    for c, v in reversed(list(zip(parts, vals))):
+        f = pads.field(c)
+        if expr is None:
+            expr = f >= v if lower else f <= v
+        else:
+            expr = (f > v if lower else f < v) | ((f == v) & expr)
+    return expr
+
+
+def _range_filter(mode: str, tz: str, session_tz: str, ticker, ts_min, ts_max):
+    """``read_where``'s predicate as a ``pyarrow.dataset`` filter: the
+    ticker and time bounds, ANDed with the partition range the two
+    bounds route to (``arrow_partition_cols``, the rule every row was
+    routed by), so fragments outside it are never opened.  That prune
+    is sound because routing is monotone in the event time: a later
+    instant never falls on an earlier local day.  Raises for a bound
+    the driver read cannot compare as Spark does (an interday bound
+    that is not an ISO date, an epoch outside Spark's range)."""
+    import pyarrow.dataset as pads
+
+    tsc, parts = S.TS_COL[mode], PARTITION_COLS[mode]
+    terms = [] if ticker is None else [pads.field("ticker") == ticker]
+    for v, lower in ((ts_min, True), (ts_max, False)):
+        if v is None:
+            continue
+        if mode == "historical_interday":
+            v = pa.scalar(v).cast(pa.date32())
+        f = pads.field(tsc)
+        terms.append(f >= v if lower else f <= v)
+        if parts:
+            at = pa.table({tsc: pa.array([v], pa.int64())})
+            routed = arrow_partition_cols(at, mode, tz, session_tz)
+            terms.append(_bound_expr(parts, [routed[c][0].as_py() for c in parts], lower))
+    flt = None
+    for t in terms:
+        flt = t if flt is None else flt & t
+    return flt
+
+
+def _local_frame(spark: SparkSession, tbl) -> DataFrame:
+    """A driver-side read's rows as one local relation (LocalTableScan),
+    every column nullable as in Spark's parquet reads."""
+    return spark.createDataFrame(
+        tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema]))
+    )
 
 
 def _probe(df: DataFrame) -> Delta:
@@ -447,27 +503,22 @@ class ManifestStore:
         return _union(frames)
 
     def _read_dirs_arrow(
-        self, mode: str, dirs: list[str], touched: list | None = None
+        self, mode: str, dirs: list[str], flt=None,
+        bound: int = MICRO_COMMIT_ROWS,
     ):
-        """``_read_dirs`` on the driver: the union of ``dirs`` as one Arrow
-        table, read through ``pyarrow.dataset`` with hive partitioning
-        and the missing columns NULL-filled — or None when that cannot
-        stand in for the Spark read: more than ``MICRO_COMMIT_ROWS``
-        rows, a column type outside ``plain_type``, or a type conflict
-        between dirs.  ``touched`` partition tuples prune fragments
+        """``_read_dirs`` on the driver: the union of ``dirs`` (relative to
+        the mode's data path, or absolute) as one Arrow table, read
+        through ``pyarrow.dataset`` with hive partitioning, the missing
+        columns NULL-filled and only the rows the ``pyarrow.dataset``
+        expression ``flt`` keeps — or None when that cannot stand in for
+        the Spark read: more than ``bound`` rows, a column type outside
+        ``plain_type``, a type conflict between dirs, a filter the
+        columns cannot evaluate, or a dir that cannot be opened.  ``flt`` prunes partition fragments
         before anything is counted or read, and the count comes from the
         pruned fragments' parquet footers — so a large compacted dir
-        costs only the partitions a batch touches."""
+        costs only the partitions the filter can touch."""
         import pyarrow.dataset as pads
 
-        parts = PARTITION_COLS[mode]
-        flt = None
-        for t in (touched or []) if parts else []:
-            conj = None
-            for c, v in zip(parts, t):
-                term = pads.field(c) == v
-                conj = term if conj is None else conj & term
-            flt = conj if flt is None else flt | conj
         try:
             sets, n = [], 0
             for d in dirs:
@@ -476,13 +527,14 @@ class ManifestStore:
                     format="parquet", partitioning="hive",
                 )
                 n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
-                if n > MICRO_COMMIT_ROWS:
+                if n > bound:
                     return None
                 sets.append(dset)
             tbl = pa.concat_tables(
                 [x.to_table(filter=flt) for x in sets], promote_options="default"
             )
-        except pa.ArrowException:
+        except (pa.ArrowException, OSError):
+            # a missing dir too: the Spark read raises its own error
             return None
         return tbl if all(plain_type(t) for t in tbl.schema.types) else None
 
@@ -515,7 +567,16 @@ class ManifestStore:
         manifest-level skip Delta/Iceberg use.  Dirs with no recorded
         meta (pre-feature commits) are conservatively read.  The same
         predicate is re-applied as a residual filter, so pruning is an
-        optimization, never a semantics change."""
+        optimization, never a semantics change.
+
+        When the kept dirs' fragments in the partition range of the time
+        bounds hold at most ``MICRO_COMMIT_ROWS`` rows, the read runs on
+        the driver (``_read_dirs_arrow``, the predicate pushed into its
+        filter), is sorted by the time column in Arrow — NULL times
+        first, as Spark orders them — and comes back as one local
+        relation (``DataFrame.isLocal()``): no Spark job has run, and
+        its rows are already in time order.  A larger read, or one the
+        driver read declines, is the Spark read of the same dirs."""
         tsc = S.TS_COL[mode]
         state = self.log(mode).state(at_version)
         tickers = None if ticker is None else [_j(ticker)] * 2
@@ -527,6 +588,22 @@ class ManifestStore:
         if stats is not None:
             stats["dirs_total"] = len(state["dirs"])
             stats["dirs_read"] = len(keep)
+        if not keep:
+            return None
+        try:
+            flt = _range_filter(
+                mode, self.tz, self.spark.conf.get("spark.sql.session.timeZone"),
+                ticker, ts_min, ts_max,
+            )
+        except (pa.ArrowException, TypeError, ValueError):
+            tbl = None
+        else:
+            tbl = self._read_dirs_arrow(mode, keep, flt)
+        if tbl is not None:
+            return _local_frame(
+                self.spark,
+                tbl.sort_by([(tsc, "ascending")], null_placement="at_start"),
+            )
         df = self._read_dirs(mode, keep)
         if df is None:
             return None
@@ -561,12 +638,16 @@ class ManifestStore:
     ):
         """Stats view of ``state`` (default: the fold at ``at_version``):
         the last cumulative snapshot FOLDED with every ingest increment
-        committed since (r8).  The fold is one union + one aggregate over
-        tiny frames — sum/min/max per key is associative, so a single
-        groupBy equals the iterated ``merge_stats`` the per-commit
-        snapshot path used to run.  The chain is bounded: ingest
-        materializes a fresh snapshot every ``STATS_FOLD_EVERY``
-        increments and every mutation/compaction materializes too."""
+        committed since (r8), as one local relation.  Stats tables hold
+        one row per key, so the snapshot and the increments are read
+        with ``pyarrow.parquet`` and folded on the driver by
+        ``fold_stats`` — sum/min/max per key is associative, so one fold
+        equals the iterated ``merge_stats`` — and no Spark job runs.
+        The chain is bounded: ingest materializes a fresh snapshot every
+        ``STATS_FOLD_EVERY`` increments and every mutation/compaction
+        materializes too."""
+        import pyarrow.parquet as pq
+
         if state is None:
             state = self.log(mode).state(at_version)
         cum, incs = state["stats"], state["stats_incs"]
@@ -579,15 +660,13 @@ class ManifestStore:
         )
         if not paths:
             return None
-        df = self.spark.read.parquet(*paths)
-        if len(paths) == 1:
-            return df
-        keys = self._STATS_KEYS[which]
-        return df.groupBy(*keys).agg(
-            F.sum("row_count").alias("row_count"),
-            F.min("min_ts").alias("min_ts"),
-            F.max("max_ts").alias("max_ts"),
+        tbl = pa.concat_tables(
+            [pq.read_table(p) for p in paths], promote_options="permissive"
         )
+        return _local_frame(self.spark, fold_stats(
+            tbl, self._STATS_KEYS[which],
+            sums=("row_count",), mins=("min_ts",), maxs=("max_ts",),
+        ))
 
     def table_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "table")
@@ -925,7 +1004,12 @@ class ManifestStore:
                 touched = _touched_parts(grows, parts) if parts else None
                 redo = None
                 if delta.tbl is not None:
-                    prior = self._read_dirs_arrow(mode, overlap, touched)
+                    import pyarrow.dataset as pads
+
+                    prior = self._read_dirs_arrow(
+                        mode, overlap,
+                        partition_values_predicate(parts, touched or [], pads.field),
+                    )
                     if prior is not None:
                         redo = on_driver(
                             delta.tbl.drop_columns(["version", *parts]), prior
@@ -1455,6 +1539,14 @@ class ManifestStore:
         Requires the referenced batch dirs to still exist — run
         ``gc_orphans`` with a grace no shorter than the slowest
         consumer's lag.
+
+        A span whose pieces hold at most ``MICRO_COMMIT_ROWS`` rows in
+        all is read on the driver (``_read_dirs_arrow``): per commit one
+        Arrow table, ``_change_type`` (string) and ``_commit_version``
+        (int32) added in Arrow, the tables concatenated by name into one
+        local relation — no Spark job, where the Spark read runs one
+        schema-inference job per commit.  If any piece declines, the
+        whole span is the Spark read.
         """
         log = self.log(mode)
         upto = log.version() if to_version is None else to_version
@@ -1469,7 +1561,9 @@ class ManifestStore:
                 f"change feed from {from_version} is incomplete: history "
                 f"up to version {lo} was vacuumed/checkpointed"
             )
-        frames = []
+        # (version, dirs, derive): the dirs holding one commit's changes,
+        # and whether its _change_type is derived from the version column
+        pieces = []
         for c in log.commits(upto=upto, since=from_version + 1):
             v = c["version"]
             op = c.get("op") or ("compact" if c.get("removes") else "ingest")
@@ -1487,28 +1581,56 @@ class ManifestStore:
                     f"snapshot at version >= {v}"
                 )
             if c.get("cdc"):
-                df = self.spark.read.parquet(
-                    os.path.join(log.log_dir, c["cdc"])
-                )
-            elif op in ("ingest", "convert"):
+                pieces.append((v, [os.path.join(log.log_dir, c["cdc"])], False))
+            elif op in ("ingest", "convert") and c["adds"]:
                 # convert_from adopts a Hive-parquet tree as version
                 # 1 — its rows ARE the feed's opening changes (a fresh
                 # MatView that "just syncs" from cursor 0 must see them;
                 # skipping convert here silently produced a view missing
                 # every adopted row).  Derivation is identical to ingest:
                 # the adopted rows carry their version column.
-                df = self._read_dirs(mode, c["adds"])
-                if df is None:
-                    continue
-                df = df.withColumn(
+                pieces.append((v, c["adds"], True))
+        tbl = self._changes_arrow(mode, pieces)
+        if tbl is not None:
+            return _local_frame(self.spark, tbl)
+        frames = []
+        for v, dirs, derive in pieces:
+            if derive:
+                df = self._read_dirs(mode, dirs).withColumn(
                     "_change_type",
                     F.when(F.col("version") > 1, F.lit("update_postimage"))
                     .otherwise(F.lit("insert")),
                 )
             else:
-                continue
+                df = self.spark.read.parquet(*dirs)
             frames.append(df.withColumn("_commit_version", F.lit(v)))
         return _union(frames)
+
+    def _changes_arrow(self, mode: str, pieces: list):
+        """``read_changes``'s union of ``pieces`` built on the driver, or
+        None when the span holds more than ``MICRO_COMMIT_ROWS`` rows in
+        all, any piece declines the driver read, or the pieces' types
+        conflict."""
+        tbls, left = [], MICRO_COMMIT_ROWS
+        for v, dirs, derive in pieces:
+            tbl = self._read_dirs_arrow(mode, dirs, bound=left)
+            if tbl is None or derive and "version" not in tbl.column_names:
+                return None
+            left -= tbl.num_rows
+            if derive:
+                upd = pc.fill_null(pc.greater(tbl["version"], 1), False)
+                tbl = tbl.append_column("_change_type", pc.if_else(
+                    upd, pa.scalar("update_postimage"), pa.scalar("insert")
+                ))
+            tbls.append(tbl.append_column(
+                "_commit_version", pa.array([v] * tbl.num_rows, pa.int32())
+            ))
+        if not tbls:
+            return None
+        try:
+            return pa.concat_tables(tbls, promote_options="default")
+        except pa.ArrowException:
+            return None
 
     # -- maintenance -----------------------------------------------------
     def compact(self, mode: str) -> dict:

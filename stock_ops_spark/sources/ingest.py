@@ -35,6 +35,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.operators.versioning import assign_versions
@@ -85,6 +86,14 @@ def compute_versioned_delta(
     parts = PARTITION_COLS[mode]
 
     routed = with_partition_cols(batch, mode, tz)
+    # -0.0 is written as 0.0 whatever the plan: the dedup's grouping
+    # normalizes it only while the optimizer keeps the Aggregate, which
+    # it drops when the batch is a one-row local relation
+    for f in routed.schema.fields:
+        if f.name in payload and isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+            routed = routed.withColumn(
+                f.name, F.col(f.name) + F.lit(0.0).cast(f.dataType)
+            )
 
     if existing is not None:
         # align schemas both ways: a batch may carry a brand-new column

@@ -104,15 +104,17 @@ def arrow_partition_cols(tbl, mode: str, tz: str, session_tz: str = "UTC"):
     return out
 
 
-def partition_values_predicate(parts: list[str], tuples) -> "Column | None":
+def partition_values_predicate(parts: list[str], tuples, col=F.col):
     """OR-of-conjunctions over literal partition tuples — reaches the file
     listing as static partition pruning.  Shared by the ingest dedup
-    probe and maintenance compaction.  Returns None for an empty list."""
+    probe and maintenance compaction; ``col=pyarrow.dataset.field``
+    builds the same predicate as the filter of the driver-side dir
+    read.  Returns None for an empty list."""
     pred = None
     for t in tuples:
         conj = None
         for c, v in zip(parts, t):
-            term = F.col(c) == F.lit(v)
+            term = col(c) == v
             conj = term if conj is None else (conj & term)
         pred = conj if pred is None else (pred | conj)
     return pred

@@ -2,11 +2,18 @@
 
 The reference plans which partition files a range query touches by
 enumerating filenames (``data/utils.py:79-99``), opens each SQLite file,
-probes, scans, unions, sorts, and materializes a tz-aware pandas frame.
-Here every one of those stages is Catalyst's job: the range predicate on
-the partition-derived columns prunes directories; the ts-range predicate
-pushes into parquet row-group stats; union across files is the native
-multi-file scan.
+probes, scans, unions, sorts, and materializes a tz-aware pandas frame,
+all in one process.  Here the store's manifest first drops every batch
+dir whose recorded bounds miss the range (``ManifestStore.read_where``).
+A read whose remaining partition fragments fit ``MICRO_COMMIT_ROWS``
+then runs like the reference's, in one process: pyarrow scans the
+fragments of the range's partitions, filters on ticker and time, sorts
+by time, and the rows enter Spark as one local relation — the range
+read runs no Spark job and ``to_pandas`` one.  A larger read is
+Catalyst's: the range predicate on the partition-derived columns prunes
+directories, the ts-range predicate pushes into parquet row-group stats,
+union across files is the native multi-file scan, and the sort is a
+Spark sort.
 
 API behavior preserved exactly:
 - bounds are interpreted per mode (ISO date strings for interday,
@@ -85,7 +92,10 @@ class ReadProcess:
     (``ManifestStore.read_where``), so batch dirs provably outside the
     (ticker, ts) bounds are never listed at all; the full predicate is
     still applied below, so the prune is an optimization, never a
-    semantics change."""
+    semantics change.  A local relation from ``read_where`` is its
+    driver-side read, already in time order: the predicate folds into
+    it and the emptiness check runs no job, and no Spark sort is
+    added (``latest_only``'s window still needs one)."""
 
     def __init__(self, store: ManifestStore):
         self.store = store
@@ -137,7 +147,8 @@ class ReadProcess:
             from stock_ops_spark.schemas import INDEX_COLS
 
             out = latest_version_view(out, INDEX_COLS[mode])
-        out = out.orderBy(ts_col)
+        if latest_only or not df.isLocal():
+            out = out.orderBy(ts_col)
         if out.limit(1).isEmpty():
             raise EmptyReadError(
                 f"no rows for {ticker} {mode} in [{start}, {end}] interval={interval}"

@@ -92,3 +92,53 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture()
+def driver_reads(monkeypatch):
+    """Records what the store's driver-side dir read opens: every dataset
+    root it lists (``dirs``) and every partition fragment it counts and
+    reads (``fragments``) — the pruning the driver path applies."""
+    import pyarrow.dataset as pads
+
+    real = pads.dataset
+    opened = {"dirs": [], "fragments": []}
+
+    class _Recorded:
+        def __init__(self, dset):
+            self._dset = dset
+
+        def get_fragments(self, filter=None):
+            frags = list(self._dset.get_fragments(filter=filter))
+            opened["fragments"] += [f.path for f in frags]
+            return frags
+
+        def to_table(self, **kw):
+            return self._dset.to_table(**kw)
+
+    def dataset(source, **kw):
+        opened["dirs"].append(source)
+        return _Recorded(real(source, **kw))
+
+    monkeypatch.setattr(pads, "dataset", dataset)
+    return opened
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` is ``(fn(), the number of Spark jobs it ran)``,
+    counted through a job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -762,13 +762,16 @@ def _rows_at(day_offset, ticker="SPY"):
     return [(ticker, base, 1.0, 2.0, 0.5, 1.5, 100 + day_offset, "1h")]
 
 
-def test_read_where_prunes_dirs_by_ts_and_ticker(spark, mstore):
+def test_read_where_prunes_dirs_by_ts_and_ticker(spark, mstore, monkeypatch):
     """Three batches with disjoint time ranges: a point predicate must
     hand Spark ONLY the matching batch dir (no listing, no footer read
-    of the others), and the residual filter keeps semantics exact."""
+    of the others), and the residual filter keeps semantics exact.
+    Pinned on the Spark path, the one a read over the driver bound
+    takes."""
     for k in range(3):
         mstore.ingest_batch(_df(spark, _rows_at(k)), MODE)
     mstore.ingest_batch(_df(spark, _rows_at(1, ticker="VOO")), MODE)
+    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
     stats = {}
     ts1 = 1751463000 + 86400
     df = mstore.read_where(
@@ -787,6 +790,34 @@ def test_read_where_prunes_dirs_by_ts_and_ticker(spark, mstore):
     files = df.inputFiles()
     assert files and all("batch-" in f for f in files)
     assert len({f.split("batch-")[1].split("/")[0] for f in files}) == 1
+
+
+def test_read_where_prunes_dirs_by_ts_and_ticker_on_driver(spark, mstore, driver_reads):
+    """The same point read on the driver path opens only the matching
+    batch dir and its one month, and returns a local relation equal to
+    the unpruned read."""
+    for k in range(3):
+        mstore.ingest_batch(_df(spark, _rows_at(k)), MODE)
+    mstore.ingest_batch(_df(spark, _rows_at(1, ticker="VOO")), MODE)
+    driver_reads["dirs"].clear()
+    driver_reads["fragments"].clear()
+    stats = {}
+    ts1 = 1751463000 + 86400
+    df = mstore.read_where(
+        MODE, ticker="SPY", ts_min=ts1, ts_max=ts1, stats=stats
+    )
+    assert stats["dirs_total"] == 4 and stats["dirs_read"] == 1
+    assert df.isLocal()
+    rows = df.collect()
+    assert len(rows) == 1 and rows[0]["ticker"] == "SPY"
+    full = mstore.read_all(MODE).where(
+        (F.col("ticker") == "SPY")
+        & (F.col("timestamp_UTC_s") == ts1)
+    )
+    assert [r.asDict() for r in full.collect()] == [r.asDict() for r in rows]
+    assert len({d.split("batch-")[1] for d in driver_reads["dirs"]}) == 1
+    frags = driver_reads["fragments"]
+    assert frags and all("/year=2025/month=7/" in f for f in frags)
 
 
 def test_read_where_meta_survives_compaction_and_vacuum(spark, mstore):

@@ -55,10 +55,7 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_store_read_prunes_partitions(spark, tmp_path):
-    """A day-bounded streaming read must touch only that day's partition
-    directory (PartitionFilters at the scan, like the reference's filename
-    enumeration — but done by Catalyst)."""
+def _three_day_store(spark, tmp_path):
     store = ManifestStore(spark, str(tmp_path / "s"))
     rows = []
     # three days of trades: 2025-08-18/19/20 in America/New_York
@@ -68,6 +65,16 @@ def test_store_read_prunes_partitions(spark, tmp_path):
         ]
     df = spark.createDataFrame(rows, schema=S.STREAMING)
     assert store.ingest_batch(df, "streaming") == 15
+    return store
+
+
+def test_store_read_prunes_partitions(spark, tmp_path, monkeypatch):
+    """A day-bounded streaming read must touch only that day's partition
+    directory (PartitionFilters at the scan, like the reference's filename
+    enumeration — but done by Catalyst).  Pinned on the Spark path, the
+    one a read over the driver bound takes."""
+    store = _three_day_store(spark, tmp_path)
+    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
 
     rp = ReadProcess(store)
     out = rp.read_dt_range(
@@ -79,6 +86,20 @@ def test_store_read_prunes_partitions(spark, tmp_path):
     # string truncates long filter lists — check the leading fragment)
     assert "PartitionFilters: [isnotnull(year" in plan
     assert "(year" in plan.split("PartitionFilters")[1][:200]
+
+
+def test_store_read_prunes_partitions_on_driver(spark, tmp_path, driver_reads):
+    """The same day-bounded read on the driver path opens only that day's
+    partition fragment: the time bounds' partition range prunes the
+    others before any footer is read."""
+    store = _three_day_store(spark, tmp_path)
+    driver_reads["fragments"].clear()
+    out = ReadProcess(store).read_dt_range(
+        "streaming", "SPY", "2025-08-19 00:00", "2025-08-19 23:59"
+    )
+    assert out.count() == 5
+    frags = driver_reads["fragments"]
+    assert frags and all("/year=2025/month=8/day=19/" in f for f in frags)
 
 
 def test_clustered_rowgroups_carry_ticker_stats(spark, tmp_path):
@@ -108,17 +129,24 @@ def test_clustered_rowgroups_carry_ticker_stats(spark, tmp_path):
             assert st is not None and st.has_min_max
 
 
-def test_cross_year_read_prunes_months(spark, tmp_path):
-    """A Dec→Jan intraday range must enumerate (year, month) pairs — the
-    old between()-only predicate collapsed to year IN (Y, Y+1) and scanned
-    every month partition of both years.  Assert via the executed scan's
-    metrics that only the two boundary months were read."""
+def _six_month_store(spark, tmp_path):
     store = ManifestStore(spark, str(tmp_path / "s"))
     # 2024-10 .. 2025-03: first-of-month 09:30 America/New_York trades
     epochs = (1727789400, 1730471400, 1733063400, 1735828200, 1738506600, 1740925800)
     rows = [("SPY", e, 1.0, 2.0, 0.5, 1.5, 10, "1h") for e in epochs]
     df = spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
     assert store.ingest_batch(df, "historical_intraday") == 6
+    return store
+
+
+def test_cross_year_read_prunes_months(spark, tmp_path, monkeypatch):
+    """A Dec→Jan intraday range must enumerate (year, month) pairs — the
+    old between()-only predicate collapsed to year IN (Y, Y+1) and scanned
+    every month partition of both years.  Assert via the executed scan's
+    metrics that only the two boundary months were read (the Spark
+    path, forced)."""
+    store = _six_month_store(spark, tmp_path)
+    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")  # unwrapped scan node
@@ -144,6 +172,23 @@ def test_cross_year_read_prunes_months(spark, tmp_path):
         assert scans["numFiles"] == 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_cross_year_read_prunes_months_on_driver(spark, tmp_path, driver_reads):
+    """The Dec→Jan read on the driver path opens the two boundary months'
+    fragments and no other of the six."""
+    store = _six_month_store(spark, tmp_path)
+    driver_reads["fragments"].clear()
+    out = ReadProcess(store).read_dt_range(
+        "historical_intraday", "SPY", "2024-12-01 00:00", "2025-01-31 23:59",
+        interval="1h",
+    )
+    assert [r.timestamp_UTC_s for r in out.collect()] == [1733063400, 1735828200]
+    months = sorted(
+        f.split("/year=")[1].split("/")[0] + "-" + f.split("/month=")[1].split("/")[0]
+        for f in driver_reads["fragments"]
+    )
+    assert months == ["2024-12", "2025-1"]
 
 
 def test_inverted_range_raises_empty_not_crash(spark, tmp_path):

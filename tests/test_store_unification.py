@@ -150,9 +150,11 @@ def test_manifest_widen_types(spark, mstore):
 # -- ReadProcess over the manifest store: commit-level skipping -------------
 
 
-def test_readprocess_uses_commit_level_skipping(spark, mstore):
+def test_readprocess_uses_commit_level_skipping(spark, mstore, monkeypatch):
     for ts in (JAN, FEB, MAR):
         mstore.ingest_batch(_df(spark, [_row(ts), _row(ts, "VOO")]), MODE)
+    # the Spark path, as a read over the driver bound takes it
+    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
     rp = ReadProcess(mstore)
     out = rp.read_dt_range(MODE, "SPY", "2025-02-01 00:00", "2025-02-28 23:59")
     assert [r["timestamp_UTC_s"] for r in out.collect()] == [FEB]
@@ -160,6 +162,25 @@ def test_readprocess_uses_commit_level_skipping(spark, mstore):
     dirs = {f.split("/batch-")[1].split("/")[0] for f in out.inputFiles()}
     assert len(dirs) == 1
     # the API contract is unchanged: empty range raises
+    from stock_ops_spark.sources.reader import EmptyReadError
+
+    with pytest.raises(EmptyReadError):
+        rp.read_dt_range(MODE, "SPY", "2024-01-01 00:00", "2024-01-02 00:00")
+
+
+def test_readprocess_uses_commit_level_skipping_on_driver(spark, mstore, driver_reads):
+    """The driver path opens only the FEB batch dir, and its one month."""
+    for ts in (JAN, FEB, MAR):
+        mstore.ingest_batch(_df(spark, [_row(ts), _row(ts, "VOO")]), MODE)
+    driver_reads["dirs"].clear()
+    driver_reads["fragments"].clear()
+    rp = ReadProcess(mstore)
+    out = rp.read_dt_range(MODE, "SPY", "2025-02-01 00:00", "2025-02-28 23:59")
+    assert [r["timestamp_UTC_s"] for r in out.collect()] == [FEB]
+    dirs = {d.split("/batch-")[1] for d in driver_reads["dirs"]}
+    assert len(dirs) == 1
+    frags = driver_reads["fragments"]
+    assert frags and all("/year=2025/month=2/" in f for f in frags)
     from stock_ops_spark.sources.reader import EmptyReadError
 
     with pytest.raises(EmptyReadError):
