@@ -90,6 +90,7 @@ from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
     arrow_partition_cols,
     mode_root,
+    partition_range_predicate,
     partition_values_predicate,
     with_partition_cols,
 )
@@ -169,50 +170,52 @@ def _touched_parts(stats, parts: list[str]) -> list[tuple]:
     return list(zip(*(uniq[c].to_pylist() for c in parts)))
 
 
-def _bound_expr(parts: list[str], vals: list, lower: bool):
-    """``(parts) >= vals`` (``lower``) or ``(parts) <= vals``, compared as
-    tuples, as a ``pyarrow.dataset`` expression: the partition range a
-    time bound routes to."""
-    import pyarrow.dataset as pads
-
-    expr = None
-    for c, v in reversed(list(zip(parts, vals))):
-        f = pads.field(c)
-        if expr is None:
-            expr = f >= v if lower else f <= v
-        else:
-            expr = (f > v if lower else f < v) | ((f == v) & expr)
-    return expr
+def _inside(a, b) -> bool:
+    """True when the [lo, hi] range ``a`` lies inside ``b`` (a None end
+    of ``b`` is open; a missing or open ``a`` is not inside)."""
+    if not a or a[0] is None or a[1] is None:
+        return False
+    return (b[0] is None or b[0] <= a[0]) and (b[1] is None or a[1] <= b[1])
 
 
-def _range_filter(mode: str, tz: str, session_tz: str, ticker, ts_min, ts_max):
-    """``read_where``'s predicate as a ``pyarrow.dataset`` filter: the
-    ticker and time bounds, ANDed with the partition range the two
-    bounds route to (``arrow_partition_cols``, the rule every row was
-    routed by), so fragments outside it are never opened.  That prune
-    is sound because routing is monotone in the event time: a later
-    instant never falls on an earlier local day.  Raises for a bound
-    the driver read cannot compare as Spark does (an interday bound
+def _route(mode: str, tz: str, session_tz: str, v):
+    """A time bound as the driver read compares it (an interday bound as
+    a date) and the partition tuple it routes to by the rule every row
+    was routed by (``arrow_partition_cols``; None for an unpartitioned
+    mode or bound).  Routing is monotone in the event time — a later
+    instant never falls on an earlier local day — so the tuples of two
+    bounds bound the partitions a range can touch.  Raises for a bound
+    that cannot be typed or routed as Spark does (an interday bound
     that is not an ISO date, an epoch outside Spark's range)."""
-    import pyarrow.dataset as pads
+    if v is None:
+        return None, None
+    if mode == "historical_interday":
+        return pa.scalar(v).cast(pa.date32()).as_py(), None
+    tsc = S.TS_COL[mode]
+    at = arrow_partition_cols(
+        pa.table({tsc: pa.array([v], pa.int64())}), mode, tz, session_tz
+    )
+    return v, tuple(at[c][0].as_py() for c in PARTITION_COLS[mode])
 
-    tsc, parts = S.TS_COL[mode], PARTITION_COLS[mode]
-    terms = [] if ticker is None else [pads.field("ticker") == ticker]
-    for v, lower in ((ts_min, True), (ts_max, False)):
-        if v is None:
-            continue
-        if mode == "historical_interday":
-            v = pa.scalar(v).cast(pa.date32())
-        f = pads.field(tsc)
-        terms.append(f >= v if lower else f <= v)
-        if parts:
-            at = pa.table({tsc: pa.array([v], pa.int64())})
-            routed = arrow_partition_cols(at, mode, tz, session_tz)
-            terms.append(_bound_expr(parts, [routed[c][0].as_py() for c in parts], lower))
-    flt = None
+
+def _range_predicate(mode: str, ticker, lo, hi, parts_lo, parts_hi, col):
+    """``read_where``'s predicate over ``col`` — ``F.col`` for the Spark
+    read, ``pyarrow.dataset.field`` for the driver read: the ticker, the
+    time bounds and the partition range between the bounds' routed
+    tuples.  None when nothing is bounded."""
+    tsc = S.TS_COL[mode]
+    terms = [] if ticker is None else [col("ticker") == ticker]
+    if lo is not None:
+        terms.append(col(tsc) >= lo)
+    if hi is not None:
+        terms.append(col(tsc) <= hi)
+    prange = partition_range_predicate(PARTITION_COLS[mode], parts_lo, parts_hi, col)
+    if prange is not None:
+        terms.append(prange)
+    pred = None
     for t in terms:
-        flt = t if flt is None else flt & t
-    return flt
+        pred = t if pred is None else pred & t
+    return pred
 
 
 def _local_frame(spark: SparkSession, tbl) -> DataFrame:
@@ -504,7 +507,7 @@ class ManifestStore:
 
     def _read_dirs_arrow(
         self, mode: str, dirs: list[str], flt=None,
-        bound: int = MICRO_COMMIT_ROWS,
+        bound: int | None = MICRO_COMMIT_ROWS,
     ):
         """``_read_dirs`` on the driver: the union of ``dirs`` (relative to
         the mode's data path, or absolute) as one Arrow table, read
@@ -513,10 +516,13 @@ class ManifestStore:
         expression ``flt`` keeps — or None when that cannot stand in for
         the Spark read: more than ``bound`` rows, a column type outside
         ``plain_type``, a type conflict between dirs, a filter the
-        columns cannot evaluate, or a dir that cannot be opened.  ``flt`` prunes partition fragments
-        before anything is counted or read, and the count comes from the
-        pruned fragments' parquet footers — so a large compacted dir
-        costs only the partitions the filter can touch."""
+        columns cannot evaluate, or a dir that cannot be opened.  ``flt``
+        prunes partition fragments before anything is counted or read,
+        and the count comes from the pruned fragments' parquet footers —
+        so a large compacted dir costs only the partitions the filter
+        can touch.  ``bound=None`` is a caller that already knows the
+        rows fit (from the manifest's per-dir counts): nothing is
+        counted."""
         import pyarrow.dataset as pads
 
         try:
@@ -526,9 +532,10 @@ class ManifestStore:
                     os.path.join(self.data_path(mode), d),
                     format="parquet", partitioning="hive",
                 )
-                n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
-                if n > bound:
-                    return None
+                if bound is not None:
+                    n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
+                    if n > bound:
+                        return None
                 sets.append(dset)
             tbl = pa.concat_tables(
                 [x.to_table(filter=flt) for x in sets], promote_options="default"
@@ -569,51 +576,68 @@ class ManifestStore:
         predicate is re-applied as a residual filter, so pruning is an
         optimization, never a semantics change.
 
-        When the kept dirs' fragments in the partition range of the time
-        bounds hold at most ``MICRO_COMMIT_ROWS`` rows, the read runs on
-        the driver (``_read_dirs_arrow``, the predicate pushed into its
-        filter), is sorted by the time column in Arrow — NULL times
-        first, as Spark orders them — and comes back as one local
-        relation (``DataFrame.isLocal()``): no Spark job has run, and
-        its rows are already in time order.  A larger read, or one the
-        driver read declines, is the Spark read of the same dirs."""
+        When the kept dirs hold at most ``MICRO_COMMIT_ROWS`` rows in the
+        partition range of the time bounds, the read runs on the driver
+        (``_read_dirs_arrow``, the predicate as its filter) and comes
+        back as one local relation (``DataFrame.isLocal()``) without a
+        Spark job; a larger read, or one the driver read declines, is
+        the Spark read of the same dirs.  The manifest's per-dir row
+        counts decide without I/O where they can: kept dirs whose counts
+        sum within the bound are read uncounted, and a read whose dirs
+        lying wholly inside the predicate already hold more goes to
+        Spark with nothing opened; only a read in between counts its
+        partition fragments' footers first.
+
+        Either way the rows come back in time order, NULL times first
+        (sorted in Arrow on the driver, a Spark sort otherwise)."""
         tsc = S.TS_COL[mode]
         state = self.log(mode).state(at_version)
         tickers = None if ticker is None else [_j(ticker)] * 2
         ts = [_j(ts_min), _j(ts_max)]
-        keep = [
-            d for d in state["dirs"]
-            if _may_touch(state["meta"].get(d), tsc, tickers, ts)
-        ]
+        metas = state["meta"]
+        keep = [d for d in state["dirs"] if _may_touch(metas.get(d), tsc, tickers, ts)]
         if stats is not None:
             stats["dirs_total"] = len(state["dirs"])
             stats["dirs_read"] = len(keep)
         if not keep:
             return None
+        session_tz = self.spark.conf.get("spark.sql.session.timeZone")
         try:
-            flt = _range_filter(
-                mode, self.tz, self.spark.conf.get("spark.sql.session.timeZone"),
-                ticker, ts_min, ts_max,
+            (lo, parts_lo), (hi, parts_hi) = (
+                _route(mode, self.tz, session_tz, v) for v in (ts_min, ts_max)
             )
         except (pa.ArrowException, TypeError, ValueError):
-            tbl = None
+            # a bound the driver read cannot compare as Spark does: the
+            # Spark read, with the bounds as given
+            (lo, parts_lo), (hi, parts_hi) = (ts_min, None), (ts_max, None)
+            on_driver = False
         else:
-            tbl = self._read_dirs_arrow(mode, keep, flt)
-        if tbl is not None:
-            return _local_frame(
-                self.spark,
-                tbl.sort_by([(tsc, "ascending")], null_placement="at_start"),
+            ns = [(metas.get(d) or {}).get("n") for d in keep]
+            inside = sum(
+                n for d, n in zip(keep, ns)
+                if n and _inside(metas[d].get("ticker"), tickers or [None, None])
+                and _inside(metas[d].get(tsc), ts)
             )
+            on_driver = inside <= MICRO_COMMIT_ROWS
+        if on_driver:
+            import pyarrow.dataset as pads
+
+            fits = None not in ns and sum(ns) <= MICRO_COMMIT_ROWS
+            tbl = self._read_dirs_arrow(
+                mode, keep,
+                _range_predicate(mode, ticker, lo, hi, parts_lo, parts_hi, pads.field),
+                bound=None if fits else MICRO_COMMIT_ROWS,
+            )
+            if tbl is not None:
+                return _local_frame(
+                    self.spark,
+                    tbl.sort_by([(tsc, "ascending")], null_placement="at_start"),
+                )
         df = self._read_dirs(mode, keep)
-        if df is None:
-            return None
-        if ticker is not None:
-            df = df.where(F.col("ticker") == ticker)
-        if ts_min is not None:
-            df = df.where(F.col(tsc) >= ts_min)
-        if ts_max is not None:
-            df = df.where(F.col(tsc) <= ts_max)
-        return df
+        pred = _range_predicate(mode, ticker, lo, hi, parts_lo, parts_hi, F.col)
+        if pred is not None:
+            df = df.where(pred)
+        return df.orderBy(tsc)
 
     def latest(self, mode: str) -> DataFrame | None:
         df = self.read_all(mode)
@@ -1546,7 +1570,8 @@ class ManifestStore:
         (int32) added in Arrow, the tables concatenated by name into one
         local relation — no Spark job, where the Spark read runs one
         schema-inference job per commit.  If any piece declines, the
-        whole span is the Spark read.
+        whole span is the Spark read.  The ingest commits' recorded row
+        counts send an over-bound span to Spark before anything is read.
         """
         log = self.log(mode)
         upto = log.version() if to_version is None else to_version
@@ -1561,8 +1586,9 @@ class ManifestStore:
                 f"change feed from {from_version} is incomplete: history "
                 f"up to version {lo} was vacuumed/checkpointed"
             )
-        # (version, dirs, derive): the dirs holding one commit's changes,
-        # and whether its _change_type is derived from the version column
+        # (version, dirs, derive, n): the dirs holding one commit's
+        # changes, whether its _change_type is derived from the version
+        # column, and its row count when the commit recorded one
         pieces = []
         for c in log.commits(upto=upto, since=from_version + 1):
             v = c["version"]
@@ -1581,7 +1607,7 @@ class ManifestStore:
                     f"snapshot at version >= {v}"
                 )
             if c.get("cdc"):
-                pieces.append((v, [os.path.join(log.log_dir, c["cdc"])], False))
+                pieces.append((v, [os.path.join(log.log_dir, c["cdc"])], False, None))
             elif op in ("ingest", "convert") and c["adds"]:
                 # convert_from adopts a Hive-parquet tree as version
                 # 1 — its rows ARE the feed's opening changes (a fresh
@@ -1589,12 +1615,13 @@ class ManifestStore:
                 # skipping convert here silently produced a view missing
                 # every adopted row).  Derivation is identical to ingest:
                 # the adopted rows carry their version column.
-                pieces.append((v, c["adds"], True))
+                ns = [((c.get("meta") or {}).get(d) or {}).get("n") for d in c["adds"]]
+                pieces.append((v, c["adds"], True, None if None in ns else sum(ns)))
         tbl = self._changes_arrow(mode, pieces)
         if tbl is not None:
             return _local_frame(self.spark, tbl)
         frames = []
-        for v, dirs, derive in pieces:
+        for v, dirs, derive, _ in pieces:
             if derive:
                 df = self._read_dirs(mode, dirs).withColumn(
                     "_change_type",
@@ -1610,25 +1637,36 @@ class ManifestStore:
         """``read_changes``'s union of ``pieces`` built on the driver, or
         None when the span holds more than ``MICRO_COMMIT_ROWS`` rows in
         all, any piece declines the driver read, or the pieces' types
-        conflict."""
-        tbls, left = [], MICRO_COMMIT_ROWS
-        for v, dirs, derive in pieces:
-            tbl = self._read_dirs_arrow(mode, dirs, bound=left)
+        conflict.  The recorded counts decide first, without I/O; the
+        pieces without one (change-data files) are read next, counted
+        against what the others leave, and the counted pieces last,
+        uncounted — so a span declines before any recorded piece is
+        read."""
+        left = MICRO_COMMIT_ROWS - sum(p[3] for p in pieces if p[3] is not None)
+        if left < 0:
+            return None
+        tbls = {}
+        for i in sorted(range(len(pieces)), key=lambda i: pieces[i][3] is not None):
+            v, dirs, derive, n = pieces[i]
+            tbl = self._read_dirs_arrow(mode, dirs, bound=left if n is None else None)
             if tbl is None or derive and "version" not in tbl.column_names:
                 return None
-            left -= tbl.num_rows
+            if n is None:
+                left -= tbl.num_rows
             if derive:
                 upd = pc.fill_null(pc.greater(tbl["version"], 1), False)
                 tbl = tbl.append_column("_change_type", pc.if_else(
                     upd, pa.scalar("update_postimage"), pa.scalar("insert")
                 ))
-            tbls.append(tbl.append_column(
+            tbls[i] = tbl.append_column(
                 "_commit_version", pa.array([v] * tbl.num_rows, pa.int32())
-            ))
+            )
         if not tbls:
             return None
         try:
-            return pa.concat_tables(tbls, promote_options="default")
+            return pa.concat_tables(
+                [tbls[i] for i in sorted(tbls)], promote_options="default"
+            )
         except pa.ArrowException:
             return None
 
@@ -1657,7 +1695,7 @@ class ManifestStore:
             # write takes the Spark rewrite of the same dirs
             tbl = None
             if live_rows is not None and live_rows <= MICRO_COMMIT_ROWS:
-                tbl = self._read_dirs_arrow(mode, dirs)
+                tbl = self._read_dirs_arrow(mode, dirs, bound=None)
             delta = Delta(
                 lambda: self._read_dirs(mode, dirs),
                 live_rows if tbl is None else tbl.num_rows, tbl,

@@ -120,6 +120,36 @@ def partition_values_predicate(parts: list[str], tuples, col=F.col):
     return pred
 
 
+def partition_range_predicate(parts: list[str], lo, hi, col=F.col):
+    """``lo <= (parts) <= hi``, partition value tuples compared as tuples
+    (a None bound is open) — the partition range a time range routes
+    to, so it prunes a Dec→Jan range to its two months.  The leading
+    parts both bounds share become equalities, so a range inside one
+    partition is a plain conjunction.  ``col=pyarrow.dataset.field``
+    builds it as the filter of the driver-side dir read.  Returns None
+    when nothing is bounded."""
+    terms, k = [], 0
+    if lo is not None and hi is not None:
+        while k < len(parts) and lo[k] == hi[k]:
+            terms.append(col(parts[k]) == lo[k])
+            k += 1
+    for b, lower in ((lo, True), (hi, False)):
+        if b is None or k == len(parts):
+            continue
+        expr = None
+        for c, v in reversed(list(zip(parts[k:], b[k:]))):
+            f = col(c)
+            if expr is None:
+                expr = f >= v if lower else f <= v
+            else:
+                expr = (f > v if lower else f < v) | ((f == v) & expr)
+        terms.append(expr)
+    pred = None
+    for t in terms:
+        pred = t if pred is None else (pred & t)
+    return pred
+
+
 def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     """Morton (z-order) interleave of the low ``bits`` bits of two
     non-negative integer columns: result bit 2i carries bit i of ``a``,

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from stock_ops_spark.schemas import TS_COL
 from stock_ops_spark.sources.commitlog import ManifestStore
-from stock_ops_spark.sources.layout import PARTITION_COLS
 
 
 class EmptyReadError(RuntimeError):
@@ -49,42 +48,6 @@ def _local_wall_to_epoch(s: str, tz: str) -> int:
     return int(naive.replace(tzinfo=ZoneInfo(tz)).timestamp())
 
 
-def _partition_range_pred(parts: list[str], start: _dt.datetime, end: _dt.datetime):
-    """Exact partition predicate for an arbitrary local-time range — an
-    OR of per-month conjunctions, exactly the month/day set the reference
-    enumerates as filenames (``data/utils.py:79-99``).
-
-    The previous between()-only form degraded across boundaries: a Dec→Jan
-    range constrained only ``year`` and scanned all 24 month partitions of
-    the two years.  Enumerating the months keeps the term count tiny (one
-    per month spanned) while letting Catalyst prune every untouched
-    directory, any range shape.
-    """
-    if (start.year, start.month) > (end.year, end.month):
-        # inverted range: always-false predicate (the ts-range filter is
-        # empty too; keeps the clean EmptyReadError path, no crash)
-        return F.lit(False)
-    terms = []
-    y, m = start.year, start.month
-    while (y, m) <= (end.year, end.month):
-        conj = (F.col("year") == y) & (F.col("month") == m)
-        if "day" in parts:
-            first = (y, m) == (start.year, start.month)
-            last = (y, m) == (end.year, end.month)
-            if first and last:
-                conj &= F.col("day").between(start.day, end.day)
-            elif first:
-                conj &= F.col("day") >= start.day
-            elif last:
-                conj &= F.col("day") <= end.day
-        terms.append(conj)
-        y, m = (y + 1, 1) if m == 12 else (y, m + 1)
-    pred = terms[0]
-    for t in terms[1:]:
-        pred = pred | t
-    return pred
-
-
 class ReadProcess:
     """Mirror of the reference ReadProcess over the store.
 
@@ -92,10 +55,10 @@ class ReadProcess:
     (``ManifestStore.read_where``), so batch dirs provably outside the
     (ticker, ts) bounds are never listed at all; the full predicate is
     still applied below, so the prune is an optimization, never a
-    semantics change.  A local relation from ``read_where`` is its
-    driver-side read, already in time order: the predicate folds into
-    it and the emptiness check runs no job, and no Spark sort is
-    added (``latest_only``'s window still needs one)."""
+    semantics change.  ``read_where`` returns its rows in time order on
+    both of its paths, so only ``latest_only``'s window needs a sort
+    again; on its driver path (a local relation) the predicate folds
+    into the rows and the emptiness check runs no job."""
 
     def __init__(self, store: ManifestStore):
         self.store = store
@@ -114,13 +77,11 @@ class ReadProcess:
         if mode == "historical_interday":
             lo, hi = F.lit(start).cast("date"), F.lit(end).cast("date")
             lo_v, hi_v = start, end  # ISO strings order like the dates
-            start_local = _dt.datetime.strptime(start, "%Y-%m-%d")
-            end_local = _dt.datetime.strptime(end, "%Y-%m-%d")
+            for s in (start, end):  # a malformed bound raises ValueError
+                _dt.datetime.strptime(s, "%Y-%m-%d")
         else:
             lo_s = _local_wall_to_epoch(start, self.tz)
             hi_s = _local_wall_to_epoch(end, self.tz)
-            start_local = _dt.datetime.strptime(start, "%Y-%m-%d %H:%M")
-            end_local = _dt.datetime.strptime(end, "%Y-%m-%d %H:%M")
             mult = 1000 if mode == "streaming" else 1
             lo_v, hi_v = lo_s * mult, hi_s * mult
             lo, hi = F.lit(lo_v), F.lit(hi_v)
@@ -129,14 +90,7 @@ class ReadProcess:
         if df is None:
             raise EmptyReadError(f"no data ingested for mode={mode}")
 
-        # partition pruning: constrain the partition-derived columns from
-        # the local-time bounds (what the reference's filename enumeration
-        # did, P7) — Catalyst turns this into directory pruning
         pred = (F.col(ts_col) >= lo) & (F.col(ts_col) <= hi)
-        parts = PARTITION_COLS[mode]
-        if parts:
-            pred &= _partition_range_pred(parts, start_local, end_local)
-
         pred &= F.col("ticker") == ticker
         if interval is not None:
             pred &= F.col("interval") == interval
@@ -146,9 +100,7 @@ class ReadProcess:
             from stock_ops_spark.operators.versioning import latest_version_view
             from stock_ops_spark.schemas import INDEX_COLS
 
-            out = latest_version_view(out, INDEX_COLS[mode])
-        if latest_only or not df.isLocal():
-            out = out.orderBy(ts_col)
+            out = latest_version_view(out, INDEX_COLS[mode]).orderBy(ts_col)
         if out.limit(1).isEmpty():
             raise EmptyReadError(
                 f"no rows for {ticker} {mode} in [{start}, {end}] interval={interval}"

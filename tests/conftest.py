@@ -97,24 +97,35 @@ def sf_dir():
 @pytest.fixture()
 def driver_reads(monkeypatch):
     """Records what the store's driver-side dir read opens: every dataset
-    root it lists (``dirs``) and every partition fragment it counts and
-    reads (``fragments``) — the pruning the driver path applies."""
+    root it lists (``dirs``), every partition fragment it keeps and reads
+    (``fragments``) — the pruning the driver path applies — and every
+    fragment whose footer it counts (``counted``)."""
     import pyarrow.dataset as pads
 
     real = pads.dataset
-    opened = {"dirs": [], "fragments": []}
+    opened = {"dirs": [], "fragments": [], "counted": []}
+
+    class _Fragment:
+        def __init__(self, frag):
+            self.path = frag.path
+            self._frag = frag
+
+        def count_rows(self, **kw):
+            opened["counted"].append(self.path)
+            return self._frag.count_rows(**kw)
 
     class _Recorded:
         def __init__(self, dset):
             self._dset = dset
 
         def get_fragments(self, filter=None):
-            frags = list(self._dset.get_fragments(filter=filter))
-            opened["fragments"] += [f.path for f in frags]
-            return frags
+            return [_Fragment(f) for f in self._dset.get_fragments(filter=filter)]
 
-        def to_table(self, **kw):
-            return self._dset.to_table(**kw)
+        def to_table(self, filter=None, **kw):
+            opened["fragments"] += [
+                f.path for f in self._dset.get_fragments(filter=filter)
+            ]
+            return self._dset.to_table(filter=filter, **kw)
 
     def dataset(source, **kw):
         opened["dirs"].append(source)

@@ -213,6 +213,81 @@ def test_micro_read_runs_one_job(spark, tmp_path, spark_jobs):
     assert (n_read, n_pandas) == (0, 1)
 
 
+def _day_store(spark, tmp_path, n=20):
+    """Three streaming commits of ``n`` SPY trades, one local day each
+    (2025-08-18/19/20 in America/New_York), written newest first."""
+    store = ManifestStore(spark, str(tmp_path / "s"), auto_compact_every=0)
+    for k in (2, 0, 1):
+        rows = [("SPY", 1755526571834 + 86400_000 * k + i, 600.0 + i, 1,
+                 None, None, None, None) for i in range(n)]
+        store.ingest_batch(spark.createDataFrame(rows, S.STREAMING), "streaming")
+    return store
+
+
+@pytest.mark.parametrize("spark_path", [False, True])
+def test_read_where_returns_rows_in_time_order(spark, tmp_path, spark_path):
+    """``read_where`` owns the ordering: on either path its rows come
+    back in time order, with and without time bounds."""
+    store = _day_store(spark, tmp_path)
+    base = 1755526571834
+    with _spark_path() if spark_path else contextlib.nullcontext():
+        for bounds in ({}, {"ts_min": base + 10, "ts_max": base + 86400_000 * 2 + 5}):
+            df = store.read_where("streaming", ticker="SPY", **bounds)
+            assert df.isLocal() != spark_path
+            ts = [r.timestamp_UTC_ms for r in df.collect()]
+            assert ts == sorted(ts) and len(ts) == (60 if not bounds else 36)
+
+
+def test_read_where_decides_from_recorded_counts(spark, tmp_path, driver_reads, monkeypatch):
+    """The manifest's per-dir row counts pick the path without I/O where
+    they can: kept dirs that sum within the bound are read with no
+    footer counted; dirs wholly inside the range that already hold
+    more go to Spark with no dataset opened; only a read in between
+    counts its fragments' footers."""
+    import stock_ops_spark.sources.commitlog as CL
+
+    store = _day_store(spark, tmp_path)
+    monkeypatch.setattr(CL, "MICRO_COMMIT_ROWS", 30)
+    base = 1755526571834
+    day = 86400_000
+
+    def read(lo, hi):
+        for k in driver_reads:
+            driver_reads[k].clear()
+        df = store.read_where("streaming", ticker="SPY", ts_min=lo, ts_max=hi)
+        return df, [r.timestamp_UTC_ms for r in df.collect()]
+
+    # one kept dir of 20 rows: fits, read uncounted
+    df, ts = read(base + day, base + day + 9)
+    assert df.isLocal() and len(ts) == 10
+    assert driver_reads["dirs"] and not driver_reads["counted"]
+    # three dirs of 20 rows wholly inside the range: 60 > 30, nothing opened
+    df, ts = read(base, base + 2 * day + 19)
+    assert not df.isLocal() and ts == sorted(ts) and len(ts) == 60
+    assert not driver_reads["dirs"]
+    # two dirs partly inside: only their footers can tell, 40 > 30
+    df, ts = read(base + day + 10, base + 2 * day + 4)
+    assert not df.isLocal() and len(ts) == 15
+    assert driver_reads["counted"] and not driver_reads["fragments"]
+
+
+def test_change_feed_decides_from_recorded_counts(spark, tmp_path, driver_reads, monkeypatch):
+    """An ingest-only span whose recorded row counts sum over the bound
+    goes to the Spark reads with no dir opened; one within it is read on
+    the driver with no footer counted."""
+    import stock_ops_spark.sources.commitlog as CL
+
+    store = _day_store(spark, tmp_path)
+    monkeypatch.setattr(CL, "MICRO_COMMIT_ROWS", 59)
+    df = store.read_changes("streaming")
+    assert not df.isLocal() and df.count() == 60
+    assert not driver_reads["dirs"]
+    monkeypatch.setattr(CL, "MICRO_COMMIT_ROWS", 60)
+    df = store.read_changes("streaming")
+    assert df.isLocal() and df.count() == 60
+    assert len(driver_reads["dirs"]) == 3 and not driver_reads["counted"]
+
+
 def test_change_feed_count_runs_at_most_two_jobs(spark, tmp_path, spark_jobs):
     """A count over a 12-commit feed reads the span on the driver: at most
     2 jobs, where one schema-inference job per commit made it 14."""
