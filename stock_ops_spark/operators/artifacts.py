@@ -18,12 +18,9 @@ One discipline, three users:
   concurrent fitters race benignly and a crash never leaves a
   half-written artifact at the final path.
 
-The same module owns the **generation swap** for small parquet states
-that are replaced whole rather than published once (a materialized
-view's partials, a streaming fold state's compaction or prune):
-``install`` writes the next generation beside the live dir and swaps
-it in with two renames, and ``heal`` — called before every read —
-finishes or undoes a swap a crash interrupted.
+Parquet states that change rather than publish once (a materialized
+view, a streaming fold state) are not artifacts: they publish through
+their own commit log (``streaming/foldstate.py``).
 """
 
 from __future__ import annotations
@@ -136,88 +133,6 @@ def publish(df, path: str) -> None:
         os.rename(tmp, path)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)  # a concurrent writer won
-
-
-# Sibling names of one generation swap: the next generation is filled
-# at ``<path>.tmp`` and the live one waits at ``<path>.old`` between the
-# two renames.  One writer per path, so the names need no nonce.
-_STAGING, _ASIDE = ".tmp", ".old"
-
-# A SIGKILL-torn parquet file always lacks its footer (the footer is
-# written at close), so a footer-read failure IS the torn-write signal.
-_TORN_MARKERS = (
-    "UNABLE_TO_INFER_SCHEMA",
-    "PATH_NOT_FOUND",
-    "CANNOT_READ_FILE_FOOTER",
-    "FAILED_READ_FILE",
-)
-
-
-def install(path: str, write) -> None:
-    """Replace the parquet state at ``path`` with a new generation.
-
-    ``write(staging)`` fills the new generation at ``<path>.tmp``; only
-    then is the live dir renamed aside to ``<path>.old``, the staging
-    dir renamed live, and the aside dropped.  A crash at any point
-    leaves a whole generation that ``heal`` installs: the new one, the
-    previous one, or — when the caller did not heal an earlier
-    interrupted swap first — the aside that swap left.  ``write`` may
-    read ``path``: the live dir is untouched until it returns.  One
-    writer per path."""
-    staging, aside = path + _STAGING, path + _ASIDE
-    shutil.rmtree(staging, ignore_errors=True)
-    write(staging)
-    if os.path.exists(path):
-        shutil.rmtree(aside, ignore_errors=True)
-        os.rename(path, aside)
-    os.rename(staging, path)
-    shutil.rmtree(aside, ignore_errors=True)
-
-
-def _whole(spark, path: str):
-    """``path``'s parquet generation with a footer read forced, or None
-    when ``path`` is absent or torn (other read errors raise)."""
-    if not os.path.exists(path):
-        return None
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force the footer read so a torn dir fails HERE
-        return df
-    except Exception as e:  # AnalysisException or a Py4J footer error
-        if any(m in str(e) for m in _TORN_MARKERS):
-            return None
-        raise
-
-
-def heal(spark, path: str):
-    """Finish or undo an ``install`` a crash interrupted at ``path``,
-    sweep its debris, and return the live generation as a DataFrame
-    (None when the state has never been installed).
-
-    A whole live dir wins; its staging and aside siblings are debris.
-    Without one, the staging dir (the newer generation: it is written
-    before either rename) and then the aside are tried, and the first
-    whole one is renamed live.  A torn live dir is deleted only when
-    such a replacement exists; with none it stays in place and the
-    read raises."""
-    staging, aside = path + _STAGING, path + _ASIDE
-    df = _whole(spark, path)
-    if df is None:
-        cand = next(
-            (c for c in (staging, aside) if _whole(spark, c) is not None), None
-        )
-        if cand is not None:
-            shutil.rmtree(path, ignore_errors=True)
-            os.rename(cand, path)
-            df = spark.read.parquet(path)
-        elif os.path.exists(path):
-            # torn, with nothing whole to replace it: fail loudly
-            # instead of restarting the state empty
-            df = spark.read.parquet(path)
-            df.schema
-    for debris in (staging, aside):
-        shutil.rmtree(debris, ignore_errors=True)
-    return df
 
 
 def gc(

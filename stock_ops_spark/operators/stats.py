@@ -7,10 +7,9 @@ already carry per-file min/max, but the engine still exposes the same
 *catalog view*, merged per ingested batch from the batch alone — never a
 rescan of the store.  The store publishes each batch's stats increment in
 the same manifest commit as its data (``sources/commitlog.py``); this
-module holds the aggregate (``batch_stats``), its Spark merge
-(``merge_stats``) and the driver-side fold (``fold_stats``).  A
-materialized view's grouped partials (``plans/matview.py``) generalize
-the same fold and install through ``operators/artifacts.install``.
+module holds the Spark aggregate (``batch_stats``) and the one fold
+(``fold_stats``, on the driver).  A materialized view's grouped
+partials (``plans/matview.py``) generalize the same fold.
 """
 
 from __future__ import annotations
@@ -38,34 +37,10 @@ def batch_stats(batch: DataFrame, mode: str, by_interval: bool) -> DataFrame:
     )
 
 
-def merge_stats(existing: DataFrame | None, delta: DataFrame, keys: list[str]) -> DataFrame:
-    """O(1)-per-key merge of a batch's stats into the running stats
-    (reference update_min_max, sql_db.py:34-40)."""
-    if existing is None:
-        return delta
-    e = existing.select(
-        *keys,
-        F.col("row_count").alias("__rc"),
-        F.col("min_ts").alias("__lo"),
-        F.col("max_ts").alias("__hi"),
-    )
-    return (
-        delta.join(e, on=keys, how="full_outer")
-        .select(
-            *keys,
-            (F.coalesce(F.col("row_count"), F.lit(0)) + F.coalesce(F.col("__rc"), F.lit(0))).alias(
-                "row_count"
-            ),
-            F.least(F.col("min_ts"), F.col("__lo")).alias("min_ts"),
-            F.greatest(F.col("max_ts"), F.col("__hi")).alias("max_ts"),
-        )
-    )
-
-
 def fold_stats(tbl, keys, sums=("rc",), mins=("lo",), maxs=("hi",), lists=()):
-    """The one null-safe stats fold on the driver (``merge_stats`` is its
-    Spark counterpart): one pyarrow ``group_by`` over an Arrow table of
-    per-key stat rows — sum of each count column
+    """The one null-safe stats fold, on the driver (the reference's
+    update_min_max, sql_db.py:34-40): one pyarrow ``group_by`` over an
+    Arrow table of per-key stat rows — sum of each count column
     (NULL counts as 0), min of each low and max of each high (NULLs
     ignored, like Spark's least/greatest), plus the listed columns
     gathered per key.  Folding a concatenation of stat tables is their

@@ -24,15 +24,15 @@ pure fold; it also dictates the contract:
   table).  ``stream_sync`` folds the same feed as a stream;
   ``init_from_snapshot`` is the bootstrap and the heal.  Those three are
   the whole maintenance API.
-- **Crash safety.**  The cursor is written INSIDE the view directory by
-  the same generation swap that installs the data
-  (``operators/artifacts.install``: write the next generation to a
-  staging dir, rename the live one aside, rename staging live), and
-  ``heal`` runs before every read: a SIGKILL at any point leaves the
-  previous or the next generation whole, with its cursor, so a sync
-  never double-folds.  A commit published just before a crash is still
-  in the feed, so the next ``sync`` folds it — there is no window in
-  which a view silently lacks a published delta.
+- **Crash safety.**  A view is a ``streaming/foldstate.FoldState``:
+  each install writes the partials to a fresh dir and publishes it in
+  ONE commit of the view's own log, carrying the source-store cursor,
+  so a SIGKILL anywhere leaves the previous or the next state whole and
+  a sync never double-folds; the replaced dir outlives one more
+  install, for readers that took the view before it.  A commit
+  published just before a crash is still in the feed, so the next
+  ``sync`` folds it.  A view written before the log is adopted with its
+  cursor file on first open, or refused without one.
 
 Measure algebra — maintenance cost per path (measured r9,
 ``tools/scale_curves.py --only mv_minmax_retract``):
@@ -80,21 +80,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stock_ops_spark.operators.artifacts import heal, install
+from stock_ops_spark.streaming.foldstate import FoldState
 
 # Hidden per-group row multiplicity: lets the subtractable-fold path
 # drop a group whose last row was deleted (sum hitting 0 is NOT "group
 # gone"; count of live rows hitting 0 is).  Maintained by every partial,
 # excluded from read()/serve().
 _MULT = "__n"
-# Written inside the view directory by the SAME rename that installs the
-# folded data — cursor and state are one atomic unit.  Spark's file
-# listing skips underscore-prefixed names, so readers never see it.
-_CURSOR_FILE = "_mv_cursor.json"
 _SUBTRACTABLE = frozenset({"sum", "count"})
 
 # measure kind -> (partial aggregate over delta, pairwise combine)
@@ -120,7 +117,7 @@ _KINDS = {
 }
 
 
-class MatView:
+class MatView(FoldState):
     """One materialized grouped-aggregate view.
 
     ``measures`` maps output column -> ``(kind, sql_expr)`` with kind in
@@ -138,12 +135,9 @@ class MatView:
     """
 
     #: widest sync span (in commits) whose change set is pinned with
-    #: ``localCheckpoint`` before folding.  A routine incremental sync
-    #: spans a handful of commits and the pin saves re-running the CDC
-    #: plan per consumer; a fresh-view bootstrap ("just sync" from
-    #: cursor 0 over deep history — ADVICE r11) would pin the ENTIRE
-    #: historical feed in executor memory, so past this bound the fold
-    #: reads the (replayable) CDC plan instead of pinning it.
+    #: ``localCheckpoint`` before folding: past it (a fresh-view
+    #: bootstrap over deep history) the fold re-reads the replayable
+    #: CDC plan instead of pinning the whole feed in executor memory.
     SPAN_CKPT_MAX_COMMITS = 64
 
     def __init__(
@@ -180,7 +174,7 @@ class MatView:
                 )
         if (join_dim is None) != (join_on is None):
             raise ValueError("join_dim and join_on go together")
-        self.spark = spark
+        super().__init__(spark, path)
         self.path = path
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
@@ -244,33 +238,58 @@ class MatView:
         return delta.join(e, on=keys, how="full_outer").select(*cols)
 
     # -- CDC maintenance (ManifestStore.read_changes) --------------------
-    def _state(self) -> tuple[DataFrame | None, int | None]:
-        """The installed partials, bookkeeping column included (None
-        before the first fold), and their cursor (None: none on disk),
-        after healing an interrupted install — one heal per call."""
-        df = heal(self.spark, self.path)
-        p = os.path.join(self.path, _CURSOR_FILE)
-        if not os.path.exists(p):
-            return df, None
-        with open(p) as f:
-            return df, json.load(f)["version"]
+    @staticmethod
+    def _cursor_of(st: dict) -> int | None:
+        return st["meta"][st["dirs"][0]]["cursor"] if st["dirs"] else None
 
-    def _fold_base(self) -> tuple[DataFrame | None, int]:
+    def _legacy(self, src: str) -> DataFrame | None:
+        """The partials a view written before the log kept as plain
+        files in ``src`` (None: none)."""
+        names = sorted(os.listdir(src)) if os.path.isdir(src) else []
+        files = [os.path.join(src, n) for n in names if n.endswith(".parquet")]
+        return self.spark.read.parquet(*files) if files else None
+
+    def _convert(self, st: dict) -> dict:
+        """Adopt a view written before the log: the first of its live
+        dir, an interrupted swap's staging dir and its aside dir that
+        holds a cursor file installs as version 1, with that cursor."""
+        for src in (self.path, self.path + ".tmp", self.path + ".old"):
+            try:
+                with open(os.path.join(src, "_mv_cursor.json")) as f:
+                    cur = json.load(f)["version"]
+            except FileNotFoundError:
+                continue
+            st = self._install(st, self._legacy(src), cur)
+            for sibling in (".tmp", ".old"):
+                shutil.rmtree(self.path + sibling, ignore_errors=True)
+            break
+        return st
+
+    def _state(self) -> tuple[dict, DataFrame | None, int | None]:
+        """The log snapshot, the installed partials, bookkeeping column
+        included (None before the first fold), and their cursor (None:
+        none recorded)."""
+        st = self._snapshot()
+        if not st["dirs"]:
+            return st, self._legacy(self.path), None
+        return st, self._existing("view", st), self._cursor_of(st)
+
+    def _fold_base(self) -> tuple[dict, DataFrame | None, int]:
         """``_state`` for a fold: a view with no partials folds from
-        cursor 0; partials without a cursor (written by an older
-        per-delta refresh path, or a torn install) cannot be folded onto
-        — they raise, and ``init_from_snapshot`` heals them."""
-        existing, cur = self._state()
+        cursor 0; partials without a cursor (written before the log by
+        an older per-delta refresh path) cannot be folded onto — they
+        raise, and ``init_from_snapshot`` replaces them."""
+        st, existing, cur = self._state()
         if cur is None and existing is not None:
             raise ValueError(
                 "view exists without a cursor; heal with init_from_snapshot"
             )
-        return existing, cur or 0
+        return st, existing, cur or 0
 
     def cursor(self) -> int | None:
         """Last store version folded by ``sync`` (None: never folded, or
         partials without a cursor — see ``_fold_base``)."""
-        return self._state()[1]
+        return self._cursor_of(self._snapshot())
 
     def init_from_snapshot(self, store, mode: str) -> int:
         """First fill / heal for a CDC-synced view: one full aggregate
@@ -285,7 +304,7 @@ class MatView:
                 "empty store: nothing to aggregate — sync() from a fresh "
                 "view instead (it folds the feed from version 0)"
             )
-        self._install(self._partial(fact), v)
+        self._install(self._snapshot(), self._partial(fact), v)
         return v
 
     def sync(self, store, mode: str, snapshot: DataFrame | None = None) -> dict:
@@ -297,11 +316,11 @@ class MatView:
         A view with min/max measures instead recomputes the retraction-
         touched groups from the version-pinned snapshot (semi-join keeps
         it bounded by those groups' rows); insert-only change sets fold
-        additively either way.  The new cursor is written inside the
-        view directory before the install rename, so the fold and the
-        cursor advance are one atomic unit — a crash replays nothing.
+        additively either way.  The new cursor rides the commit that
+        installs the fold, so the two are one atomic unit — a crash
+        replays nothing.
         """
-        existing, cur = self._fold_base()
+        st, existing, cur = self._fold_base()
         v1 = store.version(mode)
         noop = {"from": cur, "to": cur, "pos_rows": 0, "neg_rows": 0,
                 "recomputed_groups": 0}
@@ -310,16 +329,17 @@ class MatView:
         changes = store.read_changes(mode, from_version=cur, to_version=v1)
         if changes is None:
             if existing is not None:  # compaction-only span: advance cursor
-                self._install(existing, v1)
+                self._rewrite(st, {st["dirs"][0]: {"cursor": v1}})
                 return dict(noop, to=v1)
             return noop
         return self._fold_changes(
-            changes, cur, v1, existing, store, mode, snapshot
+            changes, st, cur, v1, existing, store, mode, snapshot
         )
 
     def _fold_changes(
         self,
         changes: DataFrame,
+        st: dict,
         cur: int,
         v1: int,
         existing: DataFrame | None,
@@ -332,25 +352,15 @@ class MatView:
         ``stream_sync`` (stockops_cdc micro-batches): fold ``changes``
         into the view and install with cursor ``v1`` atomically.
 
-        The change set is materialized ONCE (r11, §5): every consumer —
-        the neg/pos counts, the fold, the enrich branch — reads the
-        checkpointed blocks; the old shape re-ran the CDC plan three
-        times (neg checkpoint, the fold's pos branch, ``pos.count()``).
-        ``materialized=True`` skips the checkpoint when the caller
-        already pinned the frame (``stream_sync``'s per-batch fold).
-
-        r12 refinements (§1/§5):
-
-        - the pos/neg counts RIDE the checkpoint job as Observations
-          (zero extra actions; previously two ``count()`` jobs per
-          sync), or fold into ONE grouped count when the frame is
-          already pinned;
-        - a span wider than ``SPAN_CKPT_MAX_COMMITS`` commits (a
-          fresh-view bootstrap over deep history — ADVICE r11) is NOT
-          localCheckpoint'ed: pinning the entire historical feed in
-          executor memory is the risk, re-reading the bounded CDC plan
-          once more is the price (the counts then come from the one
-          grouped-count pass)."""
+        The change set is materialized ONCE, with the pos/neg counts
+        riding that job as Observations, so every consumer reads the
+        checkpointed blocks.  ``materialized=True`` skips the
+        checkpoint when the caller already pinned the frame
+        (``stream_sync``'s per-batch fold); a span wider than
+        ``SPAN_CKPT_MAX_COMMITS`` commits (a fresh-view bootstrap over
+        deep history) is not pinned either — pinning the whole
+        historical feed in executor memory is the risk — and both
+        count in one grouped pass instead."""
         ct = F.col("_change_type")
         _POS_TYPES = ("insert", "update_postimage")
         _NEG_TYPES = ("delete", "update_preimage")
@@ -417,11 +427,9 @@ class MatView:
             merged = merged.where(
                 F.coalesce(F.col(_MULT) != 0, F.lit(True))
             )
-        # no checkpoint here: _install materializes merged (its own
-        # localCheckpoint) before any view file is touched — a second
-        # pin would just copy the blocks (r11: one fold materialization
-        # instead of two)
-        self._install(merged, v1)
+        # no checkpoint here: the install writes merged into a fresh dir
+        # while the dir it reads stays live, so one job materializes it
+        self._install(st, merged, v1)
         return {"from": cur, "to": v1, "pos_rows": n_pos, "neg_rows": n_neg,
                 "recomputed_groups": n_recomputed}
 
@@ -453,14 +461,14 @@ class MatView:
         view_self = self
 
         def fold(batch: DataFrame, _batch_id: int) -> None:
-            existing, cur = view_self._fold_base()
+            st, existing, cur = view_self._fold_base()
             fresh = batch.where(F.col("_commit_version") > cur)
             fresh = fresh.localCheckpoint(eager=True)
             row = fresh.agg(F.max("_commit_version")).collect()[0]
             if row[0] is None:
                 return  # pure checkpoint replay: nothing new
             view_self._fold_changes(
-                fresh, cur, int(row[0]), existing, store, mode,
+                fresh, st, cur, int(row[0]), existing, store, mode,
                 materialized=True,
             )
 
@@ -481,29 +489,17 @@ class MatView:
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer.start()
 
-    def _install(self, df: DataFrame, version: int) -> None:
-        """Install ``df`` as the view's next generation by generation
-        swap.  The cursor file ``version`` is written (and fsync'd) into
-        the staging dir, so data and cursor publish in the same
-        rename."""
-        # df's plan may read the live view, which the swap replaces —
-        # sever lineage first, then write the tiny result as one file
-        full = df.localCheckpoint(eager=True)
-
-        def write(staging: str) -> None:
-            full.coalesce(1).write.mode("overwrite").parquet(staging)
-            with open(os.path.join(staging, _CURSOR_FILE), "w") as f:
-                json.dump({"version": version}, f)
-                f.flush()
-                os.fsync(f.fileno())
-
-        install(self.path, write)
+    def _install(self, st: dict, df: DataFrame, version: int) -> dict:
+        """Publish ``df`` (one file) as the view's next state with
+        cursor ``version``: one rewrite commit of the view's log."""
+        fresh = self._write("view", df.coalesce(1))
+        return self._rewrite(st, {fresh: {"cursor": version}}, st["dirs"])
 
     # -- read ------------------------------------------------------------
     def read(self) -> DataFrame | None:
         """The raw partial-aggregate table (None before the first fold).
         The hidden row-multiplicity bookkeeping column stays hidden."""
-        df = heal(self.spark, self.path)
+        df = self._state()[1]
         if df is not None and _MULT in df.columns:
             df = df.drop(_MULT)
         return df

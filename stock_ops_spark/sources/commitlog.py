@@ -67,7 +67,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.stats import batch_stats, fold_stats, merge_stats
+from stock_ops_spark.operators.stats import batch_stats, fold_stats
 from stock_ops_spark.operators.versioning import latest_version_view
 from stock_ops_spark.sources.microcommit import (
     Delta,
@@ -656,24 +656,23 @@ class ManifestStore:
             if not (which == "interval" and mode == "streaming")
         }
 
-    def _read_stats(
-        self, mode: str, which: str, at_version: int | None = None,
-        state: dict | None = None,
-    ):
-        """Stats view of ``state`` (default: the fold at ``at_version``):
-        the last cumulative snapshot FOLDED with every ingest increment
-        committed since (r8), as one local relation.  Stats tables hold
-        one row per key, so the snapshot and the increments are read
+    def _stats_grain(self, mode: str) -> list[str]:
+        """The finest stats keys of ``mode``: every table folds from
+        stat rows grouped by these."""
+        return max(self._stats_keys(mode).values(), key=len)
+
+    def _stats_table(self, mode: str, which: str, state: dict, extra=None):
+        """Arrow stats view of ``state``: the last cumulative snapshot
+        FOLDED with every ingest increment committed since (r8), and
+        with ``extra`` (rows in the same schema), or None when there is
+        nothing.  Stats tables hold one row per key, so they are read
         with ``pyarrow.parquet`` and folded on the driver by
-        ``fold_stats`` — sum/min/max per key is associative, so one fold
-        equals the iterated ``merge_stats`` — and no Spark job runs.
-        The chain is bounded: ingest materializes a fresh snapshot every
-        ``STATS_FOLD_EVERY`` increments and every mutation/compaction
-        materializes too."""
+        ``fold_stats`` — sum/min/max per key is associative — and no
+        Spark job runs.  The chain is bounded: ingest materializes a
+        fresh snapshot every ``STATS_FOLD_EVERY`` increments and every
+        mutation/compaction materializes too."""
         import pyarrow.parquet as pq
 
-        if state is None:
-            state = self.log(mode).state(at_version)
         cum, incs = state["stats"], state["stats_incs"]
         log_dir = self.log(mode).log_dir
         paths = []
@@ -682,15 +681,27 @@ class ManifestStore:
         paths.extend(
             os.path.join(log_dir, i[which]) for i in incs if which in i
         )
-        if not paths:
+        tbls = [pq.read_table(p) for p in paths]
+        if extra is not None:
+            tbls.append(extra)
+        if not tbls:
             return None
-        tbl = pa.concat_tables(
-            [pq.read_table(p) for p in paths], promote_options="permissive"
-        )
-        return _local_frame(self.spark, fold_stats(
-            tbl, self._STATS_KEYS[which],
+        return fold_stats(
+            pa.concat_tables(tbls, promote_options="permissive"),
+            self._STATS_KEYS[which],
             sums=("row_count",), mins=("min_ts",), maxs=("max_ts",),
-        ))
+        )
+
+    def _read_stats(
+        self, mode: str, which: str, at_version: int | None = None,
+        state: dict | None = None,
+    ):
+        """``_stats_table`` of ``state`` (default: the fold at
+        ``at_version``) as one local relation."""
+        if state is None:
+            state = self.log(mode).state(at_version)
+        tbl = self._stats_table(mode, which, state)
+        return None if tbl is None else _local_frame(self.spark, tbl)
 
     def table_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "table")
@@ -704,13 +715,12 @@ class ManifestStore:
         """Write one stats dir under the log — invisible until a commit
         points at it, and recorded in the attempt's ``state`` for cleanup
         — and return its pointer {which: rel path}.  ``stats_of(which,
-        keys)`` gives each table, or None to leave it out:
-
-        - a Spark frame: a CUMULATIVE snapshot (``stats-<version>-*``);
-        - with ``inc``, an Arrow table in ``batch_stats``'s exact schema:
-          one ingest's version-independent INCREMENT (``stats-inc-*``),
-          written by pyarrow on the driver with zero Spark jobs (r8), so
-          ``_read_stats`` folds both kinds interchangeably."""
+        keys)`` gives each table as Arrow in ``batch_stats``'s exact
+        schema, or None to leave it out; ``pyarrow.parquet`` writes it
+        on the driver.  A CUMULATIVE snapshot lands in
+        ``stats-<version>-*``, one ingest's version-independent
+        INCREMENT (``inc``) in ``stats-inc-*``; ``_stats_table`` folds
+        both kinds interchangeably."""
         import pyarrow.parquet as pq
 
         log_dir = self.log(mode).log_dir
@@ -725,21 +735,19 @@ class ManifestStore:
             if tbl is None:
                 continue
             rel = os.path.join(stats_dir, which)
-            if inc:
-                os.makedirs(os.path.join(log_dir, stats_dir), exist_ok=True)
-                pq.write_table(tbl, os.path.join(log_dir, rel))
-            else:
-                tbl.coalesce(1).write.parquet(os.path.join(log_dir, rel))
+            os.makedirs(os.path.join(log_dir, stats_dir), exist_ok=True)
+            pq.write_table(tbl, os.path.join(log_dir, rel))
             ptr[which] = rel
         return ptr
 
-    def _stats_plus(self, mode: str, state: dict, df: DataFrame):
-        """``stats_of`` for a commit that only ADDS ``df``'s rows: the
-        prior view merged with their batch stats."""
-        return lambda which, keys: merge_stats(
-            self._read_stats(mode, which, state=state),
-            batch_stats(df, mode, which == "interval"),
-            keys,
+    def _stats_plus(self, mode: str, state: dict, rows):
+        """``stats_of`` for a commit that only ADDS rows whose grouped
+        stat rows (``Delta.stat_rows`` at a grain covering every stats
+        key) are ``rows``: the prior view folded with them, on the
+        driver."""
+        return lambda which, keys: self._stats_table(
+            mode, which, state,
+            extra=as_catalog_stats(fold_stats(rows, keys), keys, mode),
         )
 
     def _stats_after_removal(
@@ -751,7 +759,9 @@ class ManifestStore:
         stats row keyed by ``affected`` — joined on its columns that are
         stats keys — is recomputed exactly from the post-commit snapshot,
         and the rest of the prior view is carried: bounded by the keys
-        the commit touched, never a rescan of untouched tickers."""
+        the commit touched, never a rescan of untouched tickers.  The
+        recompute runs in Spark; its result reaches ``_write_stats`` as
+        Arrow."""
         gone = set(removes)
         post = self._read_dirs(
             mode, [d for d in state["dirs"] if d not in gone] + adds
@@ -765,10 +775,10 @@ class ManifestStore:
                 mode,
                 which == "interval",
             )
-            if prior is None:
-                return fresh
-            kept = prior.join(affected, on=on, how="left_anti")
-            return kept if fresh is None else kept.unionByName(fresh)
+            if prior is not None:
+                kept = prior.join(affected, on=on, how="left_anti")
+                fresh = kept if fresh is None else kept.unionByName(fresh)
+            return None if fresh is None else fresh.toArrow()
 
         return self._write_stats(mode, state, stats_of)
 
@@ -958,8 +968,7 @@ class ManifestStore:
         parts = PARTITION_COLS[mode]
         tsc = S.TS_COL[mode]
         ign = (_GBID,) if n_bids else ()
-        # the finest stats grain: each increment folds from these rows
-        gb_base = max(self._stats_keys(mode).values(), key=len)
+        gb_base = self._stats_grain(mode)
         gb = gb_base + list(ign)
         zero = [0] * n_bids if n_bids else 0
         session_tz = self.spark.conf.get("spark.sql.session.timeZone")
@@ -1060,11 +1069,12 @@ class ManifestStore:
             # version-independent INCREMENT straight from the grouped
             # rows via pyarrow, zero extra Spark jobs (r8).  Every
             # STATS_FOLD_EVERY increments, a cumulative snapshot instead
-            # (the Spark merge path) keeps the fold chain bounded.
+            # (the prior view folded with the same rows, on the driver
+            # too) keeps the fold chain bounded.
             fold_now = len(state["stats_incs"]) >= self.STATS_FOLD_EVERY
             stats_ptr = self._write_stats(
                 mode, state,
-                self._stats_plus(mode, state, out.df) if fold_now
+                self._stats_plus(mode, state, g) if fold_now
                 else lambda which, keys: as_catalog_stats(
                     fold_stats(g, keys), keys, mode
                 ),
@@ -1361,9 +1371,10 @@ class ManifestStore:
                 adds.append(self._write_batch_dir(ins, mode, state, meta))
                 cdc.append(ins.df.withColumn("_change_type", F.lit("insert")))
                 stats = {
-                    "stats": self._write_stats(
-                        mode, state, self._stats_plus(mode, state, ins.df)
-                    ),
+                    "stats": self._write_stats(mode, state, self._stats_plus(
+                        mode, state,
+                        ins.stat_rows(self._stats_grain(mode), S.TS_COL[mode]),
+                    )),
                     "stats_incs": [],
                 }
             if not adds:
@@ -1839,9 +1850,10 @@ class ManifestStore:
             payload = {
                 "adds": [self._write_batch_dir(delta, mode, state, meta)],
                 "removes": [],
-                "stats": self._write_stats(
-                    mode, state, self._stats_plus(mode, state, delta.df)
-                ),
+                "stats": self._write_stats(mode, state, self._stats_plus(
+                    mode, state,
+                    delta.stat_rows(self._stats_grain(mode), S.TS_COL[mode]),
+                )),
                 "meta": meta,
             }
             return payload, {"adopted_rows": delta.n, "version": 1}

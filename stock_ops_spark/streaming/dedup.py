@@ -52,16 +52,16 @@ class StreamingNearDupIndex(FoldStateIndex):
     - ``flags/``  (new_id, matched_id, est_jaccard, flag_ts) advisory
       output
 
-    A batch's three appends commit under ``FoldStateIndex``'s per-seq
-    markers, so a fold that crashed mid-append is pruned before its
-    redelivery folds again (no duplicate flags), and ``maintain``
-    rewrites tables by generation swap, healed on the next read.
+    A batch's three writes publish in one commit of the index's log
+    (``FoldStateIndex``), so a fold that crashed before it leaves
+    nothing its redelivery sees (no duplicate flags), and ``maintain``
+    is one rewrite commit.
 
     **Single-writer assumption**: one index instance owns ``root`` for
     writes (``process_batch`` / ``maintain``) — exactly the contract a
-    Structured Streaming ``foreachBatch`` sink provides.  Reads heal an
-    interrupted swap, so they belong to the writer's process too;
-    concurrent writers are not coordinated.
+    Structured Streaming ``foreachBatch`` sink provides; a second
+    writer's commit raises ``CommitConflict``.  Reads take a snapshot
+    of the log, so they may run from any process.
     """
 
     PARTS = ("bands", "sigs", "flags")
@@ -85,30 +85,22 @@ class StreamingNearDupIndex(FoldStateIndex):
         self.bands = bands
         self.shingle_n = shingle_n
 
-    def _existing(self, part: str) -> DataFrame | None:
-        df = super()._existing(part)
-        if df is not None and "batch_seq" not in df.columns:
-            # pre-retention index layout: treat as epoch batch 0
-            df = df.withColumn("batch_seq", F.lit(0))
-        return df
-
     def process_batch(self, batch: DataFrame) -> int:
         """Probe ``batch`` against the index, append its signatures, and
         return the number of advisory near-dup flags written."""
-        self._recover_crashed()
-        seq = self._next_seq()
+        st = self._snapshot()
+        seq = self._next_seq(st)
         sh = shingle_sets(batch, self.id_col, self.text_col, n=self.shingle_n)
-        # sever lineage: signatures are consumed by probe AND append, and
-        # the append writes under a directory the probe reads
+        # pinned: signatures are consumed by the probe AND the write
         sigs = minhash_signatures(sh, num_hashes=self.num_hashes).localCheckpoint(
             eager=True
         )
         stacked = band_stack(sigs, num_hashes=self.num_hashes, bands=self.bands)
 
         n_flags = 0
-        idx = self._existing("bands")
+        idx = self._existing("bands", st)
         if idx is not None:
-            old_sigs = self._existing("sigs")
+            old_sigs = self._existing("sigs", st)
             cand = (
                 stacked.join(
                     idx.select(
@@ -144,26 +136,22 @@ class StreamingNearDupIndex(FoldStateIndex):
                 .localCheckpoint(eager=True)
             )
             n_flags = flagged.count()
-        self._mark_pending(seq)  # first append next: open the commit window
+        adds = []
         if n_flags:
             # flag_ts (epoch seconds at write) powers AGE-based
             # retention in maintain() — batch_seq counts batches,
             # which is not wall-clock time
-            flagged.withColumn("batch_seq", F.lit(seq)).withColumn(
-                "flag_ts", F.lit(float(time.time()))
-            ).write.mode("append").parquet(self._path("flags"))
-
-        stacked.withColumn("batch_seq", F.lit(seq)).write.mode("append").parquet(
-            self._path("bands")
-        )
-        sigs.withColumn("batch_seq", F.lit(seq)).write.mode("append").parquet(
-            self._path("sigs")
-        )
-        self._mark_committed(seq)
+            adds.append(self._append(
+                "flags",
+                flagged.withColumn("flag_ts", F.lit(float(time.time()))),
+                seq,
+            ))
+        adds.append(self._append("bands", stacked, seq))
+        adds.append(self._append("sigs", sigs, seq))
+        self._publish_fold(st, seq, adds)
         return n_flags
 
     def flags(self) -> DataFrame | None:
-        self._recover_crashed()
         return self._existing("flags")
 
     # -- maintenance ------------------------------------------------------
@@ -184,10 +172,10 @@ class StreamingNearDupIndex(FoldStateIndex):
 
         - **compaction**: when a dataset holds more part-files than
           ``target_files`` (plus slack for one in-flight batch), rewrite
-          it to ``target_files`` files by ``FoldStateIndex``'s
-          generation swap: the rewrite fully drains before the live
-          directory is touched, and a crash at any point leaves a whole
-          generation the next read installs.
+          it to ``target_files`` files in ``FoldStateIndex``'s one
+          rewrite commit: a crash before it leaves the old state whole,
+          and a reader of the old state keeps its dirs until the next
+          rewrite.
         - **retention** (``max_batches``): drop band/signature rows more
           than ``max_batches`` micro-batches old — the Redis-XTRIM analog
           for the at-ingest index.  The advisory ``flags/`` output is
@@ -207,26 +195,19 @@ class StreamingNearDupIndex(FoldStateIndex):
         Call every N batches from ``foreachBatch`` or as a nightly job.
         Returns per-dataset file counts after maintenance.
         """
-        self._recover_crashed()
-        # peg the cutoff to the writer's current position, not max(file)
-        if self._seq is None:
-            self._next_seq()
-            self._seq -= 1
-        cutoff = None if max_batches is None else self._seq - max_batches
+        st = self._snapshot()
+        # peg the cutoff to the writer's next seq, not max(file)
+        cutoff = None if max_batches is None else self._next_seq(st) - max_batches
         age_cutoff = None if flags_max_age_s is None else time.time() - flags_max_age_s
-        out: dict[str, int] = {}
+        frames = {}
         for part in self.PARTS:
             part_cutoff = cutoff
             if part == "flags" and not trim_flags:
                 part_cutoff = None
             part_age_cutoff = age_cutoff if part == "flags" else None
-            df = self._existing(part)
+            df = self._existing(part, st)
             if df is None:
-                out[part] = 0
                 continue
-            # mixed-vintage files: rows predating the batch_seq column
-            # surface as null — treat as epoch batch 0, never drop silently
-            df = df.withColumn("batch_seq", F.coalesce(F.col("batch_seq"), F.lit(0)))
             if part_age_cutoff is not None:
                 ts_col = (
                     F.coalesce(F.col("flag_ts"), F.lit(0.0))
@@ -247,5 +228,5 @@ class StreamingNearDupIndex(FoldStateIndex):
                 df = df.where(F.col("batch_seq") >= F.lit(part_cutoff))
             if part_age_cutoff is not None:
                 df = df.where(F.col("flag_ts") >= F.lit(part_age_cutoff))
-            out[part] = self._compact(part, df, target_files, force=needs_trim)
-        return out
+            frames[part] = (df, needs_trim)
+        return self._compact(st, frames, target_files)

@@ -1,145 +1,148 @@
-"""Shared machinery for persisted streaming fold-state indexes —
-append-only parquet tables folded per micro-batch under a per-seq
-commit protocol (StreamingSpanIndex, StreamingIVFIndex,
-StreamingLexicalIndex, StreamingNearDupIndex).
+"""Parquet states published through the commit log: the streaming fold
+indexes (span, IVF, lexical, near-dup) and ``plans/matview.MatView``.
 
-One discipline, factored once (r11):
+A state is a set of parquet dirs ``<root>/<part>-<hex>``; ``<root>/_log``,
+a ``sources/commitlog.ManifestLog`` like the store's, says which are
+live — a versioned state store plus its write-ahead log, one version
+per epoch (Structured Streaming, SIGMOD'18):
 
-- **per-seq commit markers**: a batch_seq's appends are not atomic as a
-  group; ``_commits/<seq>.pending`` is touched before the first append
-  and renamed (atomic) to ``_commits/<seq>`` after the last.  On every
-  entry point a leftover ``.pending`` identifies a crashed fold and
-  that seq's rows are pruned from ALL tables before the redelivery
-  check runs — the redelivered batch then folds as if the crashed
-  attempt never happened.  Common path: one listdir, zero Spark jobs.
-- **generation swap**: a compaction or prune replaces a table whole
-  through ``operators/artifacts.install`` (write the rewrite beside
-  the live dataset, rename the live one aside, rename the rewrite
-  live), and every read goes through ``artifacts.heal``, so a crash
-  between the renames is finished on the next touch instead of
-  silently restarting the index empty.
-- **marker-derived sequences** (``_next_seq``): committed markers are
-  authoritative (zero jobs); legacy pre-marker state falls back to a
-  one-time scan of every dataset.
-- **``maintain``**: bounds per-batch file litter by rewriting any
-  dataset holding more part-files than the target; subclasses hook
-  ``_compact_df`` to merge log-structured partials during the rewrite.
+- **fold**: each part's rows go to a fresh dir, and ONE ``try_commit``
+  publishes them all, its per-dir meta carrying the batch seq.  A crash
+  before it leaves only unreferenced dirs: the redelivered batch folds
+  as if the crashed attempt never happened.
+- **rewrite** (``maintain``, a view install): one commit adds the new
+  dirs and removes the old, checkpoints the log, and deletes every
+  entry of ``root`` referenced by neither the state before nor after
+  it — so a removed dir outlives exactly one more rewrite (a reader of
+  the older state still collects a whole generation), and crash debris
+  goes the same way.
+- **reads** take one snapshot, one ``spark.read.parquet(*dirs)`` per
+  part; a single writer's lost ``try_commit`` raises ``CommitConflict``.
+
+A fold root written before the log converts into version 1 on first
+open, keeping the rows of committed seqs only.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stock_ops_spark.operators.artifacts import heal, install
+from stock_ops_spark.sources.commitlog import ManifestLog
 
 
-class FoldStateIndex:
-    """Base for persisted streaming fold states.  Subclasses set
-    ``PARTS`` (the state table names under ``root``) and implement
-    ``process_batch``."""
-
-    PARTS: tuple[str, ...] = ()
+class FoldState:
+    """Dirs under ``root`` whose live set is the fold of ``root/_log``."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._seq: int | None = None
+        self.log = ManifestLog(os.path.join(root, "_log"))
 
-    def _path(self, part: str) -> str:
-        return os.path.join(self.root, part)
+    def _snapshot(self) -> dict:
+        """The log's state, once a root from before the log converted."""
+        st = self.log.state()
+        return st if st["version"] else self._convert(st)
 
-    # ---- per-seq commit markers
+    def _convert(self, st: dict) -> dict:
+        """Hook: adopt a root written before the log (default: none)."""
+        return st
 
-    def _commits_dir(self) -> str:
-        return os.path.join(self.root, "_commits")
+    @staticmethod
+    def _dirs(st: dict, part: str) -> list[str]:
+        return [d for d in st["dirs"] if d.rsplit("-", 1)[0] == part]
 
-    def _mark_pending(self, seq: int) -> None:
-        os.makedirs(self._commits_dir(), exist_ok=True)
-        with open(os.path.join(self._commits_dir(), f"{seq}.pending"), "w"):
-            pass
+    def _existing(self, part: str, st: dict | None = None) -> DataFrame | None:
+        """``part``'s rows in ``st`` (default: the current snapshot)."""
+        st = st or self._snapshot()
+        dirs = [os.path.join(self.root, d) for d in self._dirs(st, part)]
+        return self.spark.read.parquet(*dirs) if dirs else None
 
-    def _mark_committed(self, seq: int) -> None:
-        d = self._commits_dir()
-        os.replace(
-            os.path.join(d, f"{seq}.pending"), os.path.join(d, str(seq))
+    def _write(self, part: str, df: DataFrame) -> str:
+        """Write ``df`` to a fresh dir of ``part``; returns its name."""
+        name = f"{part}-{uuid.uuid4().hex[:12]}"
+        df.write.parquet(os.path.join(self.root, name))
+        return name
+
+    def _publish(self, st: dict, meta: dict, removes=()) -> None:
+        """Commit ``meta``'s dirs ({dir: meta}; re-adding a live dir only
+        updates its meta) less ``removes`` as the version after ``st``."""
+        self.log.try_commit(st["version"] + 1, {
+            "adds": list(meta), "removes": list(removes), "meta": meta,
+        })
+
+    def _rewrite(self, st: dict, meta: dict, removes=()) -> dict:
+        """``_publish``, checkpoint the log, delete what neither ``st`` nor
+        the new state references; returns the new state."""
+        self._publish(st, meta, removes)
+        after = self.log.state()
+        self.log.checkpoint(
+            after["version"], {"adds": after["dirs"], "meta": after["meta"]}
         )
+        keep = {"_log", *st["dirs"], *after["dirs"]}
+        for name in set(os.listdir(self.root)) - keep:
+            p = os.path.join(self.root, name)
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.remove(p)
+        return after
 
-    def _recover_crashed(self) -> None:
-        """Prune every table of rows belonging to seqs whose fold
-        crashed mid-append (a ``.pending`` marker survived) so the
-        redelivered batch folds as if the crashed attempt never
-        happened.  No-op (one listdir, zero jobs) when no marker
-        exists — the common path."""
-        try:
-            names = os.listdir(self._commits_dir())
-        except FileNotFoundError:
-            return
-        bad = [
-            int(n[: -len(".pending")]) for n in names if n.endswith(".pending")
-        ]
-        if not bad:
-            return
-        for part in self.PARTS:
-            df = self._existing(part)
-            if df is None:
-                continue
-            kept = df.where(~F.col("batch_seq").isin(bad))
-            install(self._path(part), kept.write.mode("overwrite").parquet)
-        for s in bad:
-            os.remove(os.path.join(self._commits_dir(), f"{s}.pending"))
-        self._seq = None  # recompute past the pruned state
-
-    # ---- dataset access
-
-    def _existing(self, part: str) -> DataFrame | None:
-        return heal(self.spark, self._path(part))
-
-    def _file_count(self, part: str) -> int:
-        """Data files under ``part``'s live dataset (the maintain
-        trigger)."""
+    def _file_count(self, part: str, st: dict | None = None) -> int:
+        """Data files in ``part``'s live dirs (the maintain trigger)."""
+        st = st or self._snapshot()
         return sum(
-            f.endswith(".parquet") and not f.startswith(("_", "."))
-            for _dp, _d, fs in os.walk(self._path(part))
-            for f in fs
+            f.endswith(".parquet") for d in self._dirs(st, part)
+            for f in os.listdir(os.path.join(self.root, d))
         )
 
-    # ---- sequences
 
-    def _next_seq(self) -> int:
-        """Monotonic batch sequence.  The commit markers are
-        authoritative: every committed seq has a marker, pending seqs
-        were pruned by ``_recover_crashed`` before this runs, so
-        max(marker)+1 needs no Spark job.  Legacy pre-marker state
-        falls back to a one-time scan of every dataset; markers take
-        over from the next fold."""
-        if self._seq is None:
-            highest = -1
-            try:
-                for n in os.listdir(self._commits_dir()):
-                    if not n.endswith(".pending"):
-                        highest = max(highest, int(n))
-            except (FileNotFoundError, ValueError):
-                highest = -1
-            if highest < 0:
-                # legacy state, or a legacy state whose first marker-era
-                # fold crashed and was pruned: an empty marker set must
-                # not alias legacy rows' seqs — scan the datasets once
-                for part in self.PARTS:
-                    ds = self._existing(part)
-                    if ds is None:
-                        continue
-                    row = ds.agg(F.max("batch_seq").alias("m")).collect()[0]
-                    if row.m is not None:
-                        highest = max(highest, int(row.m))
-            self._seq = highest + 1
-        out = self._seq
-        self._seq += 1
-        return out
+class FoldStateIndex(FoldState):
+    """Base for the streaming fold indexes.  Subclasses set ``PARTS``
+    (the state table names) and implement ``process_batch``."""
 
-    # ---- compaction
+    PARTS: tuple[str, ...] = ()
+
+    @staticmethod
+    def _next_seq(st: dict) -> int:
+        """One past the highest batch seq the live dirs record."""
+        return 1 + max((m["seq"] for m in st["meta"].values()), default=-1)
+
+    def _append(self, part: str, df: DataFrame, seq: int) -> str:
+        return self._write(part, df.withColumn("batch_seq", F.lit(seq)))
+
+    def _publish_fold(self, st: dict, seq: int, dirs: list[str]) -> None:
+        self._publish(st, {d: {"seq": seq} for d in dirs})
+
+    def _convert(self, st: dict) -> dict:
+        """Version 1 from a root written before the log: each part's
+        dataset (live dir first, then an interrupted swap's staging and
+        aside dirs) less the rows of seqs whose marker kept its suffix
+        (a fold that crashed mid-append)."""
+        frames, marks = {}, os.path.join(self.root, "_commits")
+        names = os.listdir(marks) if os.path.isdir(marks) else []
+        crashed = [int(n.partition(".")[0]) for n in names if not n.isdigit()]
+        seq = max((int(n) for n in names if n.isdigit()), default=-1)
+        for part in self.PARTS:
+            src = next((p for p in (os.path.join(self.root, part + s) for s in (
+                "", ".tmp", ".old")) if os.path.isdir(p)), None)
+            if src is None:
+                continue
+            df = self.spark.read.option("mergeSchema", "true").parquet(src)
+            old = F.col("batch_seq") if "batch_seq" in df.columns else F.lit(None)
+            df = df.withColumn("batch_seq", F.coalesce(old, F.lit(0)))  # pre-seq: 0
+            frames[part] = df.where(~F.col("batch_seq").isin(crashed))
+            top = frames[part].agg(F.max("batch_seq")).first()[0]
+            seq = max(seq, -1 if top is None else top)
+        if not frames:
+            return st
+        return self._rewrite(
+            st, {self._write(p, df): {"seq": seq} for p, df in frames.items()}
+        )
 
     def _compact_df(self, part: str, df: DataFrame) -> DataFrame:
         """Hook: transform ``part``'s rows during a maintain rewrite
@@ -147,37 +150,33 @@ class FoldStateIndex:
         return df
 
     def maintain(self, target_files: int = 8) -> dict[str, int]:
-        """Bound the per-batch file litter: rewrite any dataset holding
+        """Bound the per-batch file litter: rewrite any part holding
         more part-files than ``target_files`` (plus one in-flight batch
-        of slack) down to ``target_files`` by generation swap.
-        No retention knob: the state IS the fold memory — aging rows
-        out silently corrupts future folds.  Returns per-dataset file
-        counts after maintenance."""
-        self._recover_crashed()
-        return {
-            part: self._compact(part, self._existing(part), target_files)
-            for part in self.PARTS
-        }
+        of slack) down to ``target_files``, in one rewrite commit.  No
+        retention knob: the state IS the fold memory.  Returns per-part
+        file counts after maintenance."""
+        st = self._snapshot()
+        return self._compact(
+            st, {p: (self._existing(p, st), False) for p in self.PARTS},
+            target_files,
+        )
 
-    def _compact(
-        self,
-        part: str,
-        df: DataFrame | None,
-        target_files: int,
-        force: bool = False,
-    ) -> int:
-        """Rewrite ``part`` as ``df`` (through ``_compact_df``) in
-        ``target_files`` files when it holds more than
-        ``target_files + 1`` part-files, or when ``force``; return its
-        file count after."""
-        if df is None:
-            return 0
-        n = self._file_count(part)
-        if n <= target_files + 1 and not force:
-            return n
-        out = self._compact_df(part, df).repartition(target_files)
-        install(self._path(part), out.write.mode("overwrite").parquet)
-        return self._file_count(part)
+    def _compact(self, st: dict, frames: dict, target_files: int) -> dict[str, int]:
+        """Rewrite each part of ``frames`` ({part: (rows, force)}) whose
+        live dirs hold more than ``target_files + 1`` part-files, or
+        when forced, into one fresh dir (through ``_compact_df``);
+        publish them as one rewrite.  Returns per-part file counts."""
+        meta, removes = {}, []
+        for part, (df, force) in frames.items():
+            n = self._file_count(part, st)
+            if df is None or (n <= target_files + 1 and not force):
+                continue
+            out = self._compact_df(part, df).repartition(target_files)
+            meta[self._write(part, out)] = {"seq": self._next_seq(st) - 1}
+            removes += self._dirs(st, part)
+        if meta:
+            st = self._rewrite(st, meta, removes)
+        return {part: self._file_count(part, st) for part in self.PARTS}
 
 
-__all__ = ["FoldStateIndex"]
+__all__ = ["FoldState", "FoldStateIndex"]

@@ -21,8 +21,9 @@ same ``assign`` table at ingest:
   join, no shuffle), bit-identical to the batch append path's
   assignment, so N streamed batches leave ``assign`` EXACTLY equal to
   batch-mode ``ivf_index_cached`` over the union (pinned by test).
-- per-seq commit markers + crash pruning + maintain compaction come
-  from ``FoldStateIndex`` — the span index's recovery contract.
+- one commit per batch on the index's log, crash debris that readers
+  never see, and maintain compaction come from ``FoldStateIndex`` —
+  the span index's recovery contract.
 
 ``publish_artifact`` lands the streamed state at the exact versioned
 paths ``ivf_index_cached`` computes for the corpus's CURRENT version
@@ -85,13 +86,13 @@ class StreamingIVFIndex(FoldStateIndex):
         (0 for an identical re-delivery).  Two Spark jobs."""
         from pyspark.sql import Observation
 
-        self._recover_crashed()
-        seq = self._next_seq()
+        st = self._snapshot()
+        seq = self._next_seq(st)
         fps = batch.select(
             F.col(self.id_col).alias("vec_id"),
             _fp(self.vec_col).alias("fp"),
         )
-        old = self._existing("assign")
+        old = self._existing("assign", st)
         if old is not None:
             obs = Observation()
             fold = (
@@ -128,11 +129,10 @@ class StreamingIVFIndex(FoldStateIndex):
             fresh = batch
         add = assign_table(fresh, self.centroids, self.id_col, self.vec_col)
         obs_n = Observation()
-        self._mark_pending(seq)
-        add.observe(obs_n, F.count(F.lit(1)).alias("n")).withColumn(
-            "batch_seq", F.lit(seq)
-        ).write.mode("append").parquet(self._path("assign"))
-        self._mark_committed(seq)
+        d = self._append(
+            "assign", add.observe(obs_n, F.count(F.lit(1)).alias("n")), seq
+        )
+        self._publish_fold(st, seq, [d])
         return int(obs_n.get["n"])
 
     def state(self) -> dict[str, DataFrame] | None:
@@ -207,8 +207,8 @@ def from_artifact(
 ) -> StreamingIVFIndex:
     """Seed a StreamingIVFIndex from an ``ivf_index_cached`` artifact:
     the FROZEN quantizer becomes the index's, and the artifact's
-    ``assign`` table folds in as the initial state (seq 0, under the
-    same commit markers) — so the streamed state is always the FULL
+    ``assign`` table folds in as the initial state (seq 0, one commit
+    of the index's log) — so the streamed state is always the FULL
     corpus assignment, publishable back to the artifact family, and a
     re-streamed base row is recognized as already-assigned rather than
     re-folded.  The quantizer must be the family's own —
@@ -220,14 +220,11 @@ def from_artifact(
         spark, root, _load_centroid_rows(index["centroids"]),
         id_col=id_col, vec_col=vec_col,
     )
-    idx._recover_crashed()
-    if idx._existing("assign") is None:
-        seq = idx._next_seq()
-        idx._mark_pending(seq)
-        index["assign"].select("vec_id", "cid", "fp").withColumn(
-            "batch_seq", F.lit(seq)
-        ).write.mode("append").parquet(idx._path("assign"))
-        idx._mark_committed(seq)
+    st = idx._snapshot()
+    if not idx._dirs(st, "assign"):
+        seq = idx._next_seq(st)
+        rows = index["assign"].select("vec_id", "cid", "fp")
+        idx._publish_fold(st, seq, [idx._append("assign", rows, seq)])
     return idx
 
 

@@ -33,20 +33,16 @@ exact versioned paths for the corpus's CURRENT version, so
 q278/q303/q310/q312-style consumers serve WARM right after streaming
 ingest — no rebuild, no second state.
 
-Per-seq commit markers, crash pruning and compaction come from
+One commit per batch on the index's log and compaction come from
 ``FoldStateIndex`` (the span index's recovery contract).  Cost shape
 per micro-batch: ONE fold job (fingerprint anti-join against dl — the
-only state read; never a corpus rescan), the postings append (the
-batch's one full materialization; the appended slice reads back
-file-pruned for the df partial), the df append, and the dl append —
-four driver actions.  **Single-writer contract** as in
-``StreamingSpanIndex`` — and note (ADVICE r11) that the dl derivation
-leans on it: dl is summed from the post-append READ-BACK of the
-postings directory filtered to ``batch_seq == seq``, which observes
-exactly this batch's files only while no concurrent ``process_batch``
-or ``maintain()`` compaction runs between the append and the dl write
-(``tests/test_streaming_lexical.py`` pins the read-back's id set
-against the fingerprint frame).
+only state read; never a corpus rescan), the postings write (the
+batch's one full materialization; its fresh dir reads back for the df
+partial and dl), the df write, and the dl write — four driver actions.
+**Single-writer contract** as in ``StreamingSpanIndex``; the read-back
+is the batch's own dir, so it holds exactly this batch's postings
+(``tests/test_streaming_lexical.py`` pins its id set against the
+fingerprint frame).
 
 Reference parity: none (training-data extension surface; the batch
 twins are q278/q310).
@@ -85,18 +81,18 @@ class StreamingLexicalIndex(FoldStateIndex):
         """Fold a micro-batch: detect fresh docs by text fingerprint,
         tokenize ONLY them — and only ONCE: the postings append is the
         sole tokenize pass; the df partial AND the dl table both derive
-        from the file-pruned read-back of that append.  Returns the
+        from the read-back of that write's fresh dir.  Returns the
         number of fresh docs folded (0 for an identical re-delivery).
-        Four driver actions warm (checkpoint + three appends)."""
+        Four driver actions warm (checkpoint + three writes)."""
         from pyspark.sql import Observation
 
-        self._recover_crashed()
-        seq = self._next_seq()
+        st = self._snapshot()
+        seq = self._next_seq(st)
         fps = batch.select(
             F.col(self.id_col).alias("id"),
             F.md5(F.col(self.text_col)).alias("fp"),
         )
-        old_dl = self._existing("dl")
+        old_dl = self._existing("dl", st)
         n_fresh: int
         if old_dl is not None:
             obs = Observation()
@@ -139,32 +135,25 @@ class StreamingLexicalIndex(FoldStateIndex):
         else:
             fresh_fps = fps
             fresh_docs = batch
-            n_fresh = -1  # counted on the dl append below
+            n_fresh = -1  # counted on the dl write below
 
         add_postings = lexical_stats(
             fresh_docs, self.id_col, self.text_col
         )[0]
-        self._mark_pending(seq)  # first append next: open the commit window
-        add_postings.withColumn("batch_seq", F.lit(seq)).write.mode(
-            "append"
-        ).parquet(self._path("postings"))
-        # the appended slice, read back file-pruned (one batch_seq per
-        # part file → footer min==max stats skip the rest), feeds the
-        # df partial without re-tokenizing
-        posts_fresh = (
-            self.spark.read.parquet(self._path("postings"))
-            .where(F.col("batch_seq") == seq)
+        posts_dir = self._append("postings", add_postings, seq)
+        # the fresh dir, read back, feeds the df partial without
+        # re-tokenizing
+        posts_fresh = self.spark.read.parquet(
+            os.path.join(self.root, posts_dir)
         )
-        partial = (
-            posts_fresh.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-            .withColumn("batch_seq", F.lit(seq))
+        partial = posts_fresh.groupBy("term").agg(
+            F.count(F.lit(1)).cast("bigint").alias("df")
         )
-        partial.write.mode("append").parquet(self._path("df"))
+        adds = [posts_dir, self._append("df", partial, seq)]
         # dl = Σ tf over the just-written postings (postings are
         # (id, term)-unique with tf = occurrence count, so the sum IS
-        # the doc length) — derived from the same file-pruned read-back
-        # as the df partial, so each batch is TOKENIZED ONCE instead of
+        # the doc length) — derived from the same read-back as the df
+        # partial, so each batch is TOKENIZED ONCE instead of
         # twice; zero-token docs keep their dl=0 row via the left join
         # from the fingerprint frame (they are dedup memory too).
         add_dl = fresh_fps.join(
@@ -175,16 +164,14 @@ class StreamingLexicalIndex(FoldStateIndex):
             "left",
         ).fillna({"dl": 0})
         obs_dl = Observation()
-        add_dl.observe(obs_dl, F.count(F.lit(1)).alias("n")).withColumn(
-            "batch_seq", F.lit(seq)
-        ).write.mode("append").parquet(self._path("dl"))
-        if n_fresh < 0:
-            n_fresh = int(obs_dl.get["n"])
-        self._mark_committed(seq)
-        return n_fresh
+        adds.append(self._append(
+            "dl", add_dl.observe(obs_dl, F.count(F.lit(1)).alias("n")), seq
+        ))
+        self._publish_fold(st, seq, adds)
+        return n_fresh if n_fresh >= 0 else int(obs_dl.get["n"])
 
-    def _df_view(self) -> DataFrame | None:
-        d = self._existing("df")
+    def _df_view(self, st: dict) -> DataFrame | None:
+        d = self._existing("df", st)
         if d is None:
             return None
         return d.groupBy("term").agg(
@@ -195,14 +182,15 @@ class StreamingLexicalIndex(FoldStateIndex):
         """The batch artifact's three tables from the streamed state
         (``batch_seq`` dropped, df partials merged), or None before the
         first batch."""
-        dl = self._existing("dl")
+        st = self._snapshot()
+        dl = self._existing("dl", st)
         if dl is None:
             return None
-        posts = self._existing("postings")
+        posts = self._existing("postings", st)
         return {
             "postings": posts.select("id", "term", "tf"),
             "dl": dl.select("id", "fp", "dl"),
-            "df": self._df_view(),
+            "df": self._df_view(st),
         }
 
     def _compact_df(self, part: str, df: DataFrame) -> DataFrame:

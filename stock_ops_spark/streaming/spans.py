@@ -55,21 +55,15 @@ same tables.  **Single-writer contract** as in ``StreamingNearDupIndex``
 safe), but a CHANGED text under an existing doc_id raises — in-place
 rewrites are the batch path's job (``span_state_cached`` folds them).
 
-**Per-seq commit protocol** (ADVICE r10): the four per-batch appends
+**One commit per batch** (ADVICE r10): the four per-batch writes
 (flags, docstats, postings, gramstats) are not atomic as a group, and
-neither append order survives a crash+redelivery — docstats-first makes
-the fp dedup anti-join every redelivered doc out so its postings and
-gramstats partials are never written (silent divergence from the batch
-oracle); partials-first double-counts nd on redelivery.  So a batch_seq
-is folded under a marker pair: ``_commits/<seq>.pending`` is touched
-BEFORE the first append and renamed to ``_commits/<seq>`` (atomic)
-after the LAST append.  A seq is committed iff its final marker exists.
-On every entry point a leftover ``.pending`` marker identifies a
-crashed fold, and that seq's rows are PRUNED from all four tables
-(filtered rewrite through the same rename-aside swap ``maintain`` uses)
-before the redelivery check runs — the redelivered batch then folds as
-if the crashed attempt never happened.  The common path pays one
-listdir, zero Spark jobs.
+no write order survives a crash+redelivery on its own — docstats-first
+makes the fp dedup anti-join every redelivered doc out so its postings
+and gramstats partials are never written; partials-first double-counts
+nd.  So each table's rows go to a fresh dir, and one commit of the
+index's log publishes all four (``streaming/foldstate.py``): a crash
+before it leaves nothing a reader or the redelivery check sees, and
+the redelivered batch folds as if the crashed attempt never happened.
 
 Reference parity: none (training-data extension surface; the batch
 twins are q318/q319/q320).
@@ -119,10 +113,10 @@ class StreamingSpanIndex(FoldStateIndex):
 
     PARTS = ("postings", "docstats", "gramstats", "flags")
 
-    def _gramstats_view(self) -> DataFrame | None:
+    def _gramstats_view(self, st: dict) -> DataFrame | None:
         """(gram, nd, keep_doc) — the partials' merge, exactly
         ``gram_stats`` over the state postings."""
-        gs = self._existing("gramstats")
+        gs = self._existing("gramstats", st)
         if gs is None:
             return None
         return gs.groupBy("gram").agg(
@@ -134,10 +128,10 @@ class StreamingSpanIndex(FoldStateIndex):
         """The batch artifact's three tables from the streamed state
         (postings, docstats, gramstats — ``batch_seq`` dropped,
         partials merged), or None before the first batch."""
-        self._recover_crashed()
-        posts = self._existing("postings")
-        ds = self._existing("docstats")
-        gs = self._gramstats_view()
+        st = self._snapshot()
+        posts = self._existing("postings", st)
+        ds = self._existing("docstats", st)
+        gs = self._gramstats_view(st)
         if ds is None:
             return None
         if posts is None:  # all batches too short to emit grams
@@ -160,25 +154,25 @@ class StreamingSpanIndex(FoldStateIndex):
         Job budget (r11, VERDICT #3): FIVE driver actions — the fold
         checkpoint (ONE join over the prior docstats decides
         fresh/stale/changed, with the batch/changed/fresh counts riding
-        it as Observations), the postings append (the batch's ONLY full
-        materialization — the appended slice is read back file-pruned
-        on batch_seq and reused as the postings frame for both the
-        gramstats partial and, on the no-stale common path, the probe),
-        the gramstats append, the docstats append, and the flags append
-        (count observed on the write).  A batch containing stale
-        (re-delivered) docs re-tokenizes inside the flags job — no
-        extra action — because the probe must still cover them.  The
-        r10 shape ran ~10 actions and materialized the postings TWICE
-        (checkpoint + append)."""
+        it as Observations), the postings write (the batch's ONLY full
+        materialization — its fresh dir is read back and reused as the
+        postings frame for both the gramstats partial and, on the
+        no-stale common path, the probe), the gramstats write, the
+        docstats write, and the flags write (count observed on the
+        write); one commit then publishes the four dirs.  A batch
+        containing stale (re-delivered) docs re-tokenizes inside the
+        flags job — no extra action — because the probe must still
+        cover them.  The r10 shape ran ~10 actions and materialized the
+        postings TWICE (checkpoint + append)."""
         from pyspark.sql import Observation, Window
 
-        self._recover_crashed()
-        seq = self._next_seq()
+        st = self._snapshot()
+        seq = self._next_seq(st)
         # not checkpointed (r10 trim): each reuse recomputes one cheap
         # map-side md5+split over the batch — less than a checkpoint
         # job's fixed cost at micro-batch sizes
         ds_batch = doc_stats(batch, self.id_col, self.text_col)
-        old_ds = self._existing("docstats")
+        old_ds = self._existing("docstats", st)
         if old_ds is not None:
             # at-least-once tolerance: identical re-delivery (same fp)
             # folds to nothing; a CHANGED text under a known doc_id is
@@ -222,15 +216,12 @@ class StreamingSpanIndex(FoldStateIndex):
             fresh = ds_batch
             n_stale = 0
 
-        # the state's gram view, captured BEFORE this batch's gramstats
-        # append (the parquet file index snapshots at creation) — the
-        # probe must see the pre-batch state, not the in-flight fold
-        sv = self._gramstats_view()
+        # the probe sees the pre-batch state: the snapshot's dirs only
+        sv = self._gramstats_view(st)
 
-        self._mark_pending(seq)  # first append next: open the commit window
         # ---- fold: fresh docs only (append-only state).  The postings
-        # append is the batch's one full materialization; unconditional
-        # appends (r10 trim): a flag-free or all-stale batch writes
+        # write is the batch's one full materialization; unconditional
+        # writes (r10 trim): a flag-free or all-stale batch writes
         # empty schema-only parts, which the read view and maintain()
         # tolerate — cheaper than a per-batch emptiness probe job.
         posts_all = gram_postings(batch, self.id_col, self.text_col)
@@ -241,28 +232,19 @@ class StreamingSpanIndex(FoldStateIndex):
                 F.broadcast(fresh.select("doc_id")), "doc_id", "left_semi"
             )
         )
-        fresh_posts.withColumn("batch_seq", F.lit(seq)).write.mode(
-            "append"
-        ).parquet(self._path("postings"))
-        # the appended slice, read back file-pruned: every part file
-        # carries ONE batch_seq, so min==max footer stats skip the rest
-        posts_fresh = (
-            self.spark.read.parquet(self._path("postings"))
-            .where(F.col("batch_seq") == seq)
-            .drop("batch_seq")
+        posts_dir = self._append("postings", fresh_posts, seq)
+        posts_fresh = self.spark.read.parquet(
+            os.path.join(self.root, posts_dir)
+        ).drop("batch_seq")
+        partial = posts_fresh.groupBy("gram").agg(
+            F.countDistinct("doc_id").cast("bigint").alias("nd"),
+            F.min("doc_id").alias("keep_doc"),
         )
-        partial = (
-            posts_fresh.groupBy("gram")
-            .agg(
-                F.countDistinct("doc_id").cast("bigint").alias("nd"),
-                F.min("doc_id").alias("keep_doc"),
-            )
-            .withColumn("batch_seq", F.lit(seq))
-        )
-        partial.write.mode("append").parquet(self._path("gramstats"))
-        fresh.withColumn("batch_seq", F.lit(seq)).write.mode("append").parquet(
-            self._path("docstats")
-        )
+        adds = [
+            posts_dir,
+            self._append("gramstats", partial, seq),
+            self._append("docstats", fresh, seq),
+        ]
 
         # ---- probe: union-distinct nd >= 2, decided from the state
         # view + the batch's own distinct-doc counts (module docstring).
@@ -272,7 +254,7 @@ class StreamingSpanIndex(FoldStateIndex):
         # the posting row itself — the r10 shape's distinct + groupBy +
         # re-join + semi-join chain cost four extra Exchanges per batch
         # for the same three-clause rule.  On the common path the
-        # postings frame is the slice just appended; with stale docs it
+        # postings frame is the dir just written; with stale docs it
         # re-tokenizes the batch (the probe covers re-delivered docs
         # too — flags must equal batch-mode restricted to the batch).
         posts = (
@@ -320,15 +302,13 @@ class StreamingSpanIndex(FoldStateIndex):
             .where(F.col("dup_frac") >= F.lit(self.min_dup_frac))
         )
         obs_flags = Observation()
-        flags.observe(obs_flags, F.count(F.lit(1)).alias("n")).withColumn(
-            "batch_seq", F.lit(seq)
-        ).write.mode("append").parquet(self._path("flags"))
-        n_flags = int(obs_flags.get["n"])
-        self._mark_committed(seq)
-        return n_flags
+        adds.append(self._append(
+            "flags", flags.observe(obs_flags, F.count(F.lit(1)).alias("n")), seq
+        ))
+        self._publish_fold(st, seq, adds)
+        return int(obs_flags.get["n"])
 
     def flags(self) -> DataFrame | None:
-        self._recover_crashed()
         return self._existing("flags")
 
     def publish_artifact(

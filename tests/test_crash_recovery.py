@@ -22,8 +22,6 @@ import subprocess
 import sys
 import time
 
-import pytest
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # 8 bursts x 5 rows; every burst its own micro-batch (maxFilesPerTrigger=1)
@@ -168,64 +166,3 @@ def test_sigkill_mid_stream_then_resume_effectively_once(spark, tmp_path):
         for r in burst:
             truth[r["ticker"]] = truth.get(r["ticker"], 0) + 1
     assert by_ticker == truth
-
-
-def test_stats_swap_recovery_states(spark, tmp_path):
-    """Drive the generation swap (``artifacts.install``/``heal``, what
-    MatView and the streaming fold states install through) over a
-    stats table through each crash state the two-rename swap can leave
-    behind and assert heal() recovers the last whole generation (never
-    raises, never loses a committed merge) — and that a torn live dir
-    with nothing whole to replace it fails loudly instead of being
-    dropped."""
-    import os
-    import shutil
-
-    from stock_ops_spark.operators.artifacts import heal, install
-    from stock_ops_spark.operators.stats import merge_stats
-
-    path = str(tmp_path / "stats")
-
-    def delta(ticker, n, lo, hi):
-        return spark.createDataFrame(
-            [(ticker, n, lo, hi)], "ticker string, row_count long, min_ts long, max_ts long"
-        )
-
-    def update(d):
-        merged = merge_stats(heal(spark, path), d, ["ticker"])
-        merged = merged.localCheckpoint(eager=True)
-        install(path, merged.coalesce(1).write.mode("overwrite").parquet)
-
-    update(delta("SPY", 5, 10, 50))
-    update(delta("SPY", 3, 60, 90))
-    assert {r["row_count"] for r in heal(spark, path).collect()} == {8}
-
-    # state A: kill mid tmp-write — torn .tmp beside a healthy install
-    os.makedirs(path + ".tmp", exist_ok=True)
-    open(path + ".tmp/part-torn.parquet", "wb").close()
-    assert heal(spark, path).collect()[0]["row_count"] == 8
-    assert not os.path.exists(path + ".tmp")  # debris swept
-
-    # state B: kill between the renames — no install, complete .tmp
-    update(delta("SPY", 2, 95, 99))  # -> 10
-    shutil.copytree(path, path + ".tmp")
-    shutil.rmtree(path)
-    assert heal(spark, path).collect()[0]["row_count"] == 10  # tmp adopted
-    assert os.path.exists(path) and not os.path.exists(path + ".tmp")
-
-    # state C: stranded .old only (legacy in-place overwrite torn mid-write)
-    shutil.copytree(path, path + ".old")
-    shutil.rmtree(path)
-    os.makedirs(path)
-    open(path + "/part-torn.parquet", "wb").close()
-    assert heal(spark, path).collect()[0]["row_count"] == 10  # aside restored
-    assert not os.path.exists(path + ".old")
-
-    # state D: torn live dir, no whole generation beside it — the read
-    # raises and the dir stays for inspection (never a silent restart)
-    shutil.rmtree(path)
-    os.makedirs(path)
-    open(path + "/part-torn.parquet", "wb").close()
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER|FAILED_READ"):
-        heal(spark, path)
-    assert os.path.exists(path + "/part-torn.parquet")

@@ -1,8 +1,8 @@
 """Incremental materialized views (plans/matview.py): fold-equals-
 recompute equivalence, derived serving, dedup-aware maintenance from
 the store's change feed (``sync``), recovery from a crash between a
-commit's publish and the view's fold, and crash-state recovery via the
-shared generation swap (``operators/artifacts.install``/``heal``)."""
+commit's publish and the view's fold, and from a crash inside an
+install (the view's own commit log, ``streaming/foldstate.py``)."""
 
 from __future__ import annotations
 
@@ -105,18 +105,33 @@ def test_view_matches_store_after_mixed_ingest(spark, tmp_path):
 
 
 def test_swap_debris_recovery(spark, tmp_path):
-    """A kill between the two install renames leaves .tmp complete and
-    the main path absent — read() must adopt it (the shared generation
-    swap, ``artifacts.install``/``heal``, exercised through the MV)."""
+    """A kill after an install wrote its dir but before the commit
+    published it leaves debris no commit references: reads keep the
+    last published view and cursor, and the next install deletes it."""
     import os
 
     mv = _mv(spark, tmp_path)
-    _ingest_and_sync(mv, _store(spark, tmp_path), _rows(0))
-    os.rename(mv.path, mv.path + ".tmp")  # simulate: installed gen back to .tmp
-    assert mv.read() is not None
-    assert os.path.exists(mv.path) and not os.path.exists(mv.path + ".tmp")
+    store = _store(spark, tmp_path)
+    _ingest_and_sync(mv, store, _rows(0))
+    store.ingest_batch(
+        spark.createDataFrame(_rows(1), schema=S.HISTORICAL_INTRADAY),
+        "historical_intraday",
+    )
+    with pytest.MonkeyPatch.context() as m:
+        def killed(*_a, **_k):
+            raise RuntimeError("killed before the publish")
+
+        m.setattr(mv.log, "try_commit", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            mv.sync(store, "historical_intraday")
+    debris = set(os.listdir(mv.path)) - {"_log"} - set(mv.log.state()["dirs"])
+    assert debris
     assert sum(r.n for r in mv.read().collect()) == 20
-    assert mv.cursor() == 1  # the cursor rode the same generation
+    assert mv.cursor() == 1
+    mv.sync(store, "historical_intraday")
+    assert sum(r.n for r in mv.read().collect()) == 40
+    assert mv.cursor() == 2
+    assert not debris & set(os.listdir(mv.path))
 
 
 def test_manifest_store_sync_folds_each_commit_once(spark, tmp_path):
@@ -304,6 +319,33 @@ def test_sync_refuses_view_without_cursor(spark, tmp_path):
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
     assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
     _assert_view_equals_recompute(mv, store)
+
+
+def test_view_written_before_the_log_is_adopted_with_its_cursor(
+    spark, tmp_path
+):
+    """A view dir from before the log (partials as plain files plus a
+    ``_mv_cursor.json``) becomes version 1 of the view's log on first
+    open, with its cursor: the next sync folds only the later commits,
+    never the feed from 0, and the old files are gone."""
+    import json
+    import os
+
+    store = ManifestStore(spark, str(tmp_path / "cstore"))
+    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
+    mv = MatView(spark, str(tmp_path / "cmv"), ["ticker"], SUB_MEASURES)
+    mv._partial(store.read_all(MODE)).coalesce(1).write.parquet(mv.path)
+    with open(os.path.join(mv.path, "_mv_cursor.json"), "w") as f:
+        json.dump({"version": 1}, f)
+
+    assert mv.cursor() == 1
+    assert mv.log.version() == 1
+    store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
+    assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
+    _assert_view_equals_recompute(mv, store)
+    assert all(
+        n == "_log" or n.startswith("view-") for n in os.listdir(mv.path)
+    )
 
 
 def test_sync_advances_cursor_over_compaction_only_span(spark, tmp_path):

@@ -117,3 +117,37 @@ def test_matview_maintains_from_the_feed_only():
     }
     assert {"sync", "stream_sync", "init_from_snapshot"} <= methods
     assert not methods & {"refresh", "observer", "rebuild"}, methods
+
+
+def test_fold_states_publish_through_the_commit_log_only():
+    """The fold indexes and views publish through their own
+    ``ManifestLog``: the per-seq marker protocol, its crash prune, the
+    view's cursor file and the rename-aside swap with its heal-on-read
+    are gone, and nothing may bring one back."""
+    banned = {"_mark_pending", "_mark_committed", "_recover_crashed",
+              "_CURSOR_FILE", "heal"}
+    offenders = []
+    for path in _py_files("stock_ops_spark"):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        names = set(_names(tree))
+        hits = banned & names
+        hits.update(".pending" for n in names if ".pending" in n)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute) and node.attr == "install"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "artifacts"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").endswith("artifacts")
+                and any(a.name == "install" for a in node.names)
+            ) or (
+                path.endswith(os.path.join("operators", "artifacts.py"))
+                and isinstance(node, ast.FunctionDef)
+                and node.name == "install"
+            ):
+                hits.add("artifacts.install")
+        if hits:
+            offenders.append((os.path.relpath(path, REPO), sorted(hits)))
+    assert not offenders, offenders

@@ -431,10 +431,31 @@ def test_streaming_changed_doc_refused(spark, tmp_path):
         )
 
 
+def _killed(idx, m, after_part: str | None = None) -> None:
+    """Make ``idx``'s next fold or rewrite die like a killed process:
+    right after it writes ``after_part``'s dir, or (None) at its
+    publish — every dir written, no commit."""
+    if after_part is None:
+        def boom(*_a, **_k):
+            raise RuntimeError("killed before the publish")
+
+        m.setattr(idx.log, "try_commit", boom)
+        return
+    real = idx._write
+
+    def write(part, df):
+        name = real(part, df)
+        if part == after_part:
+            raise RuntimeError(f"killed after the {part} write")
+        return name
+
+    m.setattr(idx, "_write", write)
+
+
 def test_streaming_maintain_crash_window_recovers(spark, tmp_path):
-    """ADVICE r9: a crash between maintain()'s two renames leaves no
-    live dataset but a complete .old/.tmp pair — the index
-    must heal on next touch instead of silently restarting empty."""
+    """ADVICE r9: a crash inside maintain() — its rewrite written, the
+    commit not yet published — must leave the index's memory whole,
+    never restart it empty; the next rewrite deletes the debris."""
     import os
 
     from stock_ops_spark.streaming.spans import StreamingSpanIndex
@@ -442,38 +463,37 @@ def test_streaming_maintain_crash_window_recovers(spark, tmp_path):
     rows = _corpus(24)
     root = str(tmp_path / "sidx")
     idx = StreamingSpanIndex(spark, root)
-    idx.process_batch(
-        spark.createDataFrame(rows[:12], "doc_id long, text string")
-    )
+    for lo in (0, 8, 16):  # three batches: over maintain's file target
+        idx.process_batch(
+            spark.createDataFrame(rows[lo:lo + 8], "doc_id long, text string")
+        )
     n_grams = idx.state()["gramstats"].count()
-    # simulate the crash window: live renamed aside, rewrite complete
-    live = os.path.join(root, "gramstats")
-    rewrite = os.path.join(root, "gramstats.tmp")
-    spark.read.parquet(live).repartition(1).write.parquet(rewrite)
-    os.rename(live, os.path.join(root, "gramstats.old"))
-    assert not os.path.isdir(live)
+    with pytest.MonkeyPatch.context() as m:
+        _killed(idx, m)
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.maintain(target_files=1)
+    debris = set(os.listdir(root)) - {"_log"} - set(idx.log.state()["dirs"])
+    assert debris
 
     idx2 = StreamingSpanIndex(spark, root)  # fresh process
     assert idx2.state()["gramstats"].count() == n_grams  # memory intact
-    assert os.path.isdir(live)
-    assert not os.path.isdir(os.path.join(root, "gramstats.old"))
-    # and the healed index keeps flagging cross-batch duplicates
+    # and the index keeps flagging cross-batch duplicates
     n = idx2.process_batch(
         spark.createDataFrame(rows[:12], "doc_id long, text string")
     )
     assert n >= 0
+    idx2.maintain(target_files=1)
+    assert not debris & set(os.listdir(root))
 
 
 def test_streaming_crash_after_docstats_recovers(spark, tmp_path):
-    """ADVICE r10 (medium): the four per-batch appends are not atomic —
-    a crash after the docstats append but before postings/gramstats,
-    followed by at-least-once redelivery, used to anti-join every doc
-    of the batch out as already-seen, silently losing its postings and
-    partials forever.  With the per-seq commit marker the crashed seq
-    is pruned on recovery and the redelivered batch folds completely:
-    final state EQUALS batch-mode span_state over the union."""
-    import os
-
+    """ADVICE r10 (medium): the four per-batch writes are not atomic —
+    a crash after the docstats write, followed by at-least-once
+    redelivery, used to anti-join every doc of the batch out as
+    already-seen, silently losing its postings and partials forever.
+    The batch's dirs publish in one commit, so the dead fold's dirs
+    are never read and the redelivered batch folds completely: final
+    state EQUALS batch-mode span_state over the union."""
     from stock_ops_spark.streaming.spans import StreamingSpanIndex
 
     rows = _corpus(24)
@@ -482,18 +502,12 @@ def test_streaming_crash_after_docstats_recovers(spark, tmp_path):
     root = str(tmp_path / "sidx")
     idx = StreamingSpanIndex(spark, root)
     idx.process_batch(spark.createDataFrame(b1, "doc_id long, text string"))
-
-    # simulate batch2's fold crashing right after the docstats append:
-    # pending marker open, docstats rows present, postings/gramstats and
-    # the commit marker missing — the exact on-disk state the advice's
-    # failure scenario leaves behind
-    idx._mark_pending(1)
-    SP.doc_stats(
-        spark.createDataFrame(b2, "doc_id long, text string"),
-        "doc_id", "text",
-    ).withColumn("batch_seq", F.lit(1)).write.mode("append").parquet(
-        os.path.join(root, "docstats")
-    )
+    with pytest.MonkeyPatch.context() as m:
+        _killed(idx, m, after_part="docstats")
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.process_batch(
+                spark.createDataFrame(b2, "doc_id long, text string")
+            )
 
     idx2 = StreamingSpanIndex(spark, root)  # fresh process, redelivery
     idx2.process_batch(spark.createDataFrame(b2, "doc_id long, text string"))
@@ -503,20 +517,13 @@ def test_streaming_crash_after_docstats_recovers(spark, tmp_path):
     _assert_state_equal(
         (got["postings"], got["docstats"], got["gramstats"]), (p, ds, gs)
     )
-    # no pending litter survives
-    assert not [
-        n for n in os.listdir(os.path.join(root, "_commits"))
-        if n.endswith(".pending")
-    ]
 
 
-def test_streaming_crash_before_commit_marker_no_double_count(spark, tmp_path):
-    """The dual failure mode: all four appends landed but the commit
-    marker didn't — redelivery must prune the uncommitted seq first,
-    or the gramstats partials double-count nd (the reason reordering
-    the appends alone cannot fix the crash window)."""
-    import os
-
+def test_streaming_crash_before_publish_no_double_count(spark, tmp_path):
+    """The dual failure mode: all four writes landed but the commit
+    didn't — the redelivery must not see them, or the gramstats
+    partials double-count nd (the reason reordering the writes alone
+    cannot fix the crash window)."""
     from stock_ops_spark.streaming.spans import StreamingSpanIndex
 
     rows = _corpus(24)
@@ -525,11 +532,12 @@ def test_streaming_crash_before_commit_marker_no_double_count(spark, tmp_path):
     root = str(tmp_path / "sidx")
     idx = StreamingSpanIndex(spark, root)
     idx.process_batch(spark.createDataFrame(b1, "doc_id long, text string"))
-    idx.process_batch(spark.createDataFrame(b2, "doc_id long, text string"))
-    # roll seq 1's commit back to pending: every append of that batch is
-    # on disk but the fold never committed
-    d = os.path.join(root, "_commits")
-    os.replace(os.path.join(d, "1"), os.path.join(d, "1.pending"))
+    with pytest.MonkeyPatch.context() as m:
+        _killed(idx, m)
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.process_batch(
+                spark.createDataFrame(b2, "doc_id long, text string")
+            )
 
     idx2 = StreamingSpanIndex(spark, root)
     idx2.process_batch(spark.createDataFrame(b2, "doc_id long, text string"))
@@ -542,24 +550,23 @@ def test_streaming_crash_before_commit_marker_no_double_count(spark, tmp_path):
 
 
 def test_streaming_first_batch_crash_recovers_from_empty(spark, tmp_path):
-    """Crash during the very FIRST fold (every row of every table is
-    uncommitted): recovery prunes to empty-but-readable datasets and
-    the redelivered batch cold-folds; reads before the redelivery see
-    an empty state, not the half-written one."""
-    import os
-
+    """Crash during the very FIRST fold, before its publish: reads
+    before the redelivery see no state, not the half-written one, and
+    the redelivered batch cold-folds."""
     from stock_ops_spark.streaming.spans import StreamingSpanIndex
 
     rows = _corpus(12)
     root = str(tmp_path / "sidx")
     idx = StreamingSpanIndex(spark, root)
-    idx.process_batch(spark.createDataFrame(rows, "doc_id long, text string"))
-    d = os.path.join(root, "_commits")
-    os.replace(os.path.join(d, "0"), os.path.join(d, "0.pending"))
+    with pytest.MonkeyPatch.context() as m:
+        _killed(idx, m)
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.process_batch(
+                spark.createDataFrame(rows, "doc_id long, text string")
+            )
 
     idx2 = StreamingSpanIndex(spark, root)
-    st = idx2.state()
-    assert st is None or st["docstats"].count() == 0
+    assert idx2.state() is None
     idx2.process_batch(spark.createDataFrame(rows, "doc_id long, text string"))
     got = idx2.state()
     full = spark.createDataFrame(rows, "doc_id long, text string")

@@ -155,35 +155,41 @@ def test_streaming_foreachbatch_wiring(spark, index, tmp_path):
     assert (3, 1) in flags
 
 
-def test_maintain_crash_between_renames_keeps_index(spark, tmp_path):
-    """A crash between maintain()'s two renames leaves no live bands/
-    but a complete rewrite beside the renamed-aside dataset.  A fresh
-    index must finish the swap — every band row still probed, the
-    near-dup still flagged — instead of restarting the probe index
-    empty."""
+def test_maintain_crash_before_publish_keeps_index(spark, tmp_path):
+    """A maintain killed after its rewrite wrote but before the commit
+    published it leaves the old index whole: a fresh index keeps
+    probing every band row, still flags the near-dup, and its next
+    rewrite deletes the dead attempt's dirs."""
     import os
 
     root = str(tmp_path / "lsh")
-    StreamingNearDupIndex(spark, root, threshold=0.5).process_batch(
-        _df(spark, [(1, DOC_A), (2, DOC_B)])
-    )
-    bands = os.path.join(root, "bands")
-    n_bands = spark.read.parquet(bands).count()
-    spark.read.parquet(bands).repartition(1).write.parquet(bands + ".tmp")
-    os.rename(bands, bands + ".old")
+    idx = StreamingNearDupIndex(spark, root, threshold=0.5)
+    for row in [(1, DOC_A), (2, DOC_B), (4, DOC_C)]:
+        idx.process_batch(_df(spark, [row]))
+    n_bands = idx._existing("bands").count()
+    assert idx._file_count("bands") > 2
+    with pytest.MonkeyPatch.context() as m:
+        def killed(*_a, **_k):
+            raise RuntimeError("killed before the publish")
+
+        m.setattr(idx.log, "try_commit", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.maintain(target_files=1)
+    debris = set(os.listdir(root)) - {"_log"} - set(idx.log.state()["dirs"])
+    assert debris  # the dead rewrite's dirs, never referenced
 
     fresh = StreamingNearDupIndex(spark, root, threshold=0.5)
+    assert fresh._existing("bands").count() == n_bands
     assert fresh.process_batch(_df(spark, [(3, DOC_A_NEAR)])) == 1
     assert {(r.new_id, r.matched_id) for r in fresh.flags().collect()} == {(3, 1)}
-    assert spark.read.parquet(bands).where("batch_seq = 0").count() == n_bands
-    assert not os.path.exists(bands + ".tmp")
-    assert not os.path.exists(bands + ".old")
+    fresh.maintain(target_files=1)
+    assert not debris & set(os.listdir(root))
 
 
 def test_crash_after_flags_append_redelivery_no_duplicate_flags(spark, tmp_path):
-    """A fold killed after its flags append but before the bands/sigs
-    appends, then redelivered: the crashed seq's flags are pruned
-    first, so flags() equals a crash-free run (no duplicate pairs)."""
+    """A fold killed after its flags write but before the bands/sigs
+    writes, then redelivered: the dead fold never published, so
+    flags() equals a crash-free run (no duplicate pairs)."""
     import os
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -199,7 +205,7 @@ def test_crash_after_flags_append_redelivery_no_duplicate_flags(spark, tmp_path)
     real = DataFrameWriter.parquet
 
     def killed_at_bands(self, path, *args, **kwargs):
-        if os.path.basename(path) == "bands":
+        if os.path.basename(path).startswith("bands-"):
             raise RuntimeError("killed before the bands append")
         return real(self, path, *args, **kwargs)
 
@@ -209,7 +215,9 @@ def test_crash_after_flags_append_redelivery_no_duplicate_flags(spark, tmp_path)
             StreamingNearDupIndex(spark, root, threshold=0.5).process_batch(
                 _df(spark, b2)
             )
-    assert spark.read.parquet(os.path.join(root, "flags")).count() == 1
+    # the dead fold's flags dir landed, but no commit references it
+    assert any(n.startswith("flags-") for n in os.listdir(root))
+    assert StreamingNearDupIndex(spark, root).flags() is None
 
     redo = StreamingNearDupIndex(spark, root, threshold=0.5)
     redo.process_batch(_df(spark, b2))

@@ -10,13 +10,13 @@ Contracts pinned:
 - ``publish_artifact`` lands the streamed state at the batch family's
   versioned paths, so ``ivf_index_cached`` serves WARM (zero
   assignment work) right after streaming ingest;
-- a crashed fold (pending marker, uncommitted append) is pruned and
-  the redelivered batch refolds — state equals the never-crashed run;
+- a fold killed before its publish leaves nothing its redelivery
+  sees: the redelivered batch refolds — state equals the never-crashed
+  run;
 - recall is re-measurable from the served state (probe-all == 1.0).
 """
 from __future__ import annotations
 
-import os
 import random
 
 import pytest
@@ -155,7 +155,7 @@ def test_publish_serves_batch_consumers_warm(spark, tmp_path):
     assert float(full.recall_at_k) == 1.0
 
 
-def test_crashed_fold_pruned_and_refolded(spark, tmp_path):
+def test_crash_before_publish_refolds(spark, tmp_path):
     rows = _vectors(40)
     src = str(tmp_path / "emb.parquet")
     v1 = _write(spark, rows, src)
@@ -167,16 +167,17 @@ def test_crashed_fold_pruned_and_refolded(spark, tmp_path):
     sidx = from_artifact(spark, root, idx)
     delta = _vectors(20, seed=9, base_id=500)
     b = spark.createDataFrame(delta, "vec_id long, embedding array<float>")
-    sidx.process_batch(b)
-    expect = _aset(sidx.state()["assign"])
-    # simulate the crash: the fold's append landed but the commit
-    # marker didn't
-    d = os.path.join(root, "_commits")
-    os.replace(os.path.join(d, "1"), os.path.join(d, "1.pending"))
+    clean = from_artifact(spark, str(tmp_path / "clean"), idx)
+    clean.process_batch(b)
+    # the crash: the fold's write landed but its commit didn't
+    with pytest.MonkeyPatch.context() as m:
+        def killed(*_a, **_k):
+            raise RuntimeError("killed before the publish")
+
+        m.setattr(sidx.log, "try_commit", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            sidx.process_batch(b)
 
     sidx2 = from_artifact(spark, root, idx)  # fresh process, redelivery
     assert sidx2.process_batch(b) == 20  # refolds (not anti-joined out)
-    assert _aset(sidx2.state()["assign"]) == expect
-    assert not [
-        n for n in os.listdir(d) if n.endswith(".pending")
-    ]
+    assert _aset(sidx2.state()["assign"]) == _aset(clean.state()["assign"])

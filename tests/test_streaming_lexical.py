@@ -12,11 +12,11 @@ Contracts pinned:
 - ``publish_artifact`` lands at the batch family's versioned paths so
   ``lexical_stats_cached`` serves warm (no tokenize) after streaming
   ingest;
-- a crashed fold (pending marker) is pruned and refolds on redelivery.
+- a fold killed before its publish leaves nothing its redelivery
+  sees: the redelivered batch refolds to a crash-free run's state.
 """
 from __future__ import annotations
 
-import os
 import random
 
 import pytest
@@ -65,10 +65,10 @@ def test_stream_equals_batch_and_serves_bm25(spark, tmp_path):
         idx.process_batch(full.where(F.col("doc_id") % 3 == part))
     st = idx.state()
 
-    # ADVICE r11: dl derives from the post-append read-back of the
-    # postings slice (batch_seq pruning) — pin that the read-back's id
-    # set never exceeds the fingerprint frame's (dl table) id set, i.e.
-    # the single-writer read-back saw exactly this stream's appends.
+    # ADVICE r11: dl derives from the read-back of the batch's fresh
+    # postings dir — pin that the read-back's id set never exceeds the
+    # fingerprint frame's (dl table) id set, i.e. the read-back saw
+    # exactly this stream's writes.
     post_ids = {r.id for r in st["postings"].select("id").distinct().collect()}
     dl_ids = {r.id for r in st["dl"].select("id").distinct().collect()}
     assert post_ids <= dl_ids
@@ -125,18 +125,26 @@ def test_publish_serves_batch_consumers_warm(spark, tmp_path):
     )
 
 
-def test_crashed_fold_pruned_and_refolded(spark, tmp_path):
+def test_crash_before_publish_refolds(spark, tmp_path):
     rows = _corpus(24)
     full = _write(spark, rows, str(tmp_path / "docs.parquet"))
     root = str(tmp_path / "slex")
     idx = StreamingLexicalIndex(spark, root)
-    idx.process_batch(full.where(F.col("doc_id") < 12))
+    clean = StreamingLexicalIndex(spark, str(tmp_path / "clean"))
+    b1 = full.where(F.col("doc_id") < 12)
     b2 = full.where(F.col("doc_id") >= 12)
-    idx.process_batch(b2)
-    expect = _sets(idx.state())
-    d = os.path.join(root, "_commits")
-    os.replace(os.path.join(d, "1"), os.path.join(d, "1.pending"))
+    for ix in (clean, idx):
+        ix.process_batch(b1)
+    clean.process_batch(b2)
+    # the crash: every write of the fold landed, its commit did not
+    with pytest.MonkeyPatch.context() as m:
+        def killed(*_a, **_k):
+            raise RuntimeError("killed before the publish")
+
+        m.setattr(idx.log, "try_commit", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            idx.process_batch(b2)
 
     idx2 = StreamingLexicalIndex(spark, root)  # fresh process
     assert idx2.process_batch(b2) == 12  # refolds, not anti-joined out
-    assert _sets(idx2.state()) == expect
+    assert _sets(idx2.state()) == _sets(clean.state())
