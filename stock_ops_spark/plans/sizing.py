@@ -213,96 +213,6 @@ def ivf_nprobe(
     return pts[-1][0] * 2
 
 
-def commit_group_size(
-    queue_depth: int,
-    fixed_commit_s: float = 1.3,
-    union_marginal_s: float = 0.05,
-    cap: int = 64,
-) -> int:
-    """How many queued batches one ``ingest_group`` call should
-    coalesce (VERDICT r9 #4) — from the two constants the r9 profiling
-    measured, not a guess:
-
-    - ``fixed_commit_s``: per-commit JVM fixed cost amortized by
-      grouping (~1.3 s measured: localCheckpoint 0.6, write 0.2,
-      stats collect 0.2, commit fsync).
-    - ``union_marginal_s``: extra analyzer/union cost each additional
-      group member adds to EVERY member's pass (the "hundreds make the
-      analyzer cost visible" term) — per-batch cost ≈ fixed/G +
-      union_marginal·G, minimized at G* = √(fixed/union_marginal).
-
-    With the measured defaults G* ≈ 5, squarely inside the r9 sweep's
-    best band (group=4: 4-writer 524 → 1,203 rows/s, 8-writer 422 →
-    1,023; per-batch knee at 2 writers).  Never larger than the queue
-    (grouping only amortizes batches that are ALREADY waiting — holding
-    a commit open to fish for future batches trades durability lag for
-    nothing the queue doesn't prove) and capped well below the
-    hundreds-regime.
-    """
-    if queue_depth <= 1:
-        return max(queue_depth, 0)
-    if fixed_commit_s <= 0 or union_marginal_s <= 0:
-        raise ValueError("cost constants must be positive")
-    g_star = int(round(math.sqrt(fixed_commit_s / union_marginal_s)))
-    return max(1, min(queue_depth, g_star, cap))
-
-
-def commit_linger_s(
-    gaps_s: list[float],
-    default: float = 0.1,
-    lo: float = 0.02,
-    hi: float = 0.45,
-) -> float:
-    """Group-commit linger derived from the OBSERVED arrival cadence
-    (VERDICT r10 #4).  The r10 lesson: a fixed linger can sit exactly
-    wrong — 0.3 s against a 4-stream trigger cadence phase-locked the
-    drain into 3+1 group splits and measured SLOWER than no
-    coordinator (194 rows/s), while 0.1 s coalesced perfectly (929).
-    The right linger is a property of the arrival pattern, so measure
-    it in flight.  ``gaps_s`` is the inter-arrival gaps in ARRIVAL
-    order (the leader passes its recent submit history):
-
-    - trigger-aligned streams arrive in BURSTS: the sorted gaps are
-      bimodal (small intra-burst gaps, trigger-period inter gaps).
-      The two clusters split at the largest multiplicative jump (>=4x)
-      between consecutive sorted gaps.  The linger must cover one
-      burst's full SPAN from its first arrival (the leader starts
-      lingering at the burst head): 1.25 x the longest observed run of
-      intra gaps — but never reach halfway to the next burst
-      (<= 0.5 x min inter gap), which is the phase-lock condition,
-      excluded by construction.
-    - an unstructured cadence (no >=4x jump) has no bursts to cover:
-      half the median gap groups adjacent arrivals without holding a
-      commit open for a full period.
-    - fewer than 3 observed gaps: the measured r10 default (0.1 s).
-
-    Clamped to [lo, hi]: lo absorbs scheduler jitter, hi stays a small
-    fraction of the ~1.3 s fixed commit cost the linger amortizes."""
-    import statistics
-
-    g = sorted(x for x in gaps_s if x >= 0.0)
-    if len(g) < 3:
-        return default
-    ji, jr = None, 4.0  # require a clear (>=4x) cluster separation
-    for i in range(len(g) - 1):
-        a, b = max(g[i], 1e-4), g[i + 1]
-        if b / a >= jr:
-            jr, ji = b / a, i
-    if ji is None:
-        return min(max(0.5 * statistics.median(g), lo), hi)
-    inter = g[ji + 1:]
-    thr = math.sqrt(max(g[ji], 1e-4) * g[ji + 1])  # geometric midpoint
-    span, max_span = 0.0, 0.0
-    for x in gaps_s:  # arrival order: accumulate intra-burst runs
-        if 0.0 <= x <= thr:
-            span += x
-            max_span = max(max_span, span)
-        else:
-            span = 0.0
-    linger = min(1.25 * max_span, 0.5 * min(inter))
-    return min(max(linger, lo), hi)
-
-
 def ivf_refresh_needed(
     curve: list[tuple[int, float]],
     target_recall: float,

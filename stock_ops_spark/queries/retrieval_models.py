@@ -3828,9 +3828,9 @@ def q322_ivf_index_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), m AS (
       SELECT
         CAST((SELECT count(*) FROM b) AS BIGINT) AS group_rows,
-        CAST(1 AS BIGINT) AS version_after_group,
+        CAST(3 AS BIGINT) AS version_after_group,
         CAST((SELECT count(*) FROM c) * 2 AS BIGINT) AS fallback_rows,
-        CAST(3 AS BIGINT) AS version_final,
+        CAST(5 AS BIGINT) AS version_final,
         CAST((SELECT count(*) FROM b) + (SELECT count(*) FROM c) * 2
           AS BIGINT) AS rows_total,
         CAST((SELECT coalesce(sum(cents), 0) FROM b)
@@ -3850,18 +3850,16 @@ def q322_ivf_index_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q325_group_commit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end GROUP COMMIT audit, driver-oracled — the q315
-    discipline applied to ``ManifestStore.ingest_group``: three
-    key-disjoint batches (per-batch ticker suffix → provably disjoint
-    rectangles) must coalesce into ONE commit (version_after_group = 1),
-    then a deliberately CONFLICTING pair (same keys, different payload)
-    must refuse the group path and fall back to sequential ingestion
-    (two more commits; the conflicting copy version-chains to 2).  The
-    store's observable outcome — row counts per path, commit versions,
-    max per-key version and the latest-view integer-cents checksum —
-    must equal SQL set-algebra predictions from the raw events table.
-    Scale shape: one group ingest + one fallback pair + one latest-view
-    aggregate; seven output rows."""
+    """End-to-end batch-sequence audit, driver-oracled — the q315
+    discipline applied to ``ManifestStore.ingest_batch``: three
+    key-disjoint batches (per-batch ticker suffix) commit one version
+    each (version_after_group = 3), then a deliberately CONFLICTING
+    pair (same keys, different payload) commits two more, the
+    conflicting copy version-chaining to 2.  The store's observable
+    outcome — row counts per batch set, commit versions, max per-key
+    version and the latest-view integer-cents checksum — must equal SQL
+    set-algebra predictions from the raw events table.  Scale shape:
+    five ingests + one latest-view aggregate; seven output rows."""
     import shutil
     import tempfile
 
@@ -3896,9 +3894,9 @@ def q325_group_commit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         store = ManifestStore(spark, root)
-        counts = store.ingest_group(group, "streaming")
+        counts = [store.ingest_batch(b, "streaming") for b in group]
         v_group = store.version("streaming")
-        counts2 = store.ingest_group([c1, c2], "streaming")
+        counts2 = [store.ingest_batch(b, "streaming") for b in (c1, c2)]
         after = store.latest("streaming")
         agg = after.agg(
             F.count(F.lit(1)).alias("n"),
@@ -3958,27 +3956,22 @@ def q325_group_commit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q329_stream_group_commit_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """CONCURRENT streaming writers through the GroupCommitCoordinator
-    (VERDICT r9 #4), end-to-end and driver-oracled — the q325
-    discipline applied to the streaming wiring: three key-disjoint
-    event slices are submitted from three concurrent threads (the
-    foreachBatch shape — each submit BLOCKS until its batch is durably
-    committed), the leader drains ``sizing.commit_group_size`` batches
-    per ``ingest_group`` call, and one slice is then REPLAYED through
-    the coordinator (at-least-once) and must append nothing.  Every
-    reported metric is timing-independent — store CONTENT (row count,
-    integer-cents checksum, distinct keys, per-key max version) plus
-    the coordinator's own conservation law sum(group sizes) == batches
-    — so the audit is deterministic whether a given run coalesces
-    3+0 or 2+1; the grouping itself is pinned by
-    tests/test_group_commit.py.  Scale shape: three bounded ingests +
-    one replay probe + one latest-view aggregate; six output rows."""
+    """CONCURRENT writers into one store, end-to-end and driver-oracled
+    — the q325 discipline applied to the streaming shape: three
+    key-disjoint event slices are ingested by three concurrent threads
+    calling ``store.ingest_batch`` (what several streams' foreachBatch
+    do), and one slice is then REPLAYED (at-least-once) and must append
+    nothing.  Every reported metric is timing-independent — store
+    CONTENT (row count, integer-cents checksum, distinct keys, per-key
+    max version) plus the commit count before the replay, one per
+    batch however the threads interleave (the commit loop rebases a
+    key-disjoint loser).  Scale shape: three bounded ingests + one
+    replay probe + one latest-view aggregate; six output rows."""
     import shutil
     import tempfile
-    import threading
+    from concurrent.futures import ThreadPoolExecutor
 
     from stock_ops_spark.sources.commitlog import ManifestStore
-    from stock_ops_spark.streaming.ingest import GroupCommitCoordinator
 
     ev = _t(spark, sf_dir, "events")
 
@@ -4006,20 +3999,13 @@ def q329_stream_group_commit_audit(
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         store = ManifestStore(spark, root)
-        coord = GroupCommitCoordinator(store, mode="streaming", linger_s=0.3)
-        results: dict[int, int] = {}
-
-        def run(i: int) -> None:
-            results[i] = coord.submit(batches[i], "streaming")
-
-        threads = [
-            threading.Thread(target=run, args=(i,)) for i in range(3)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        replay = coord.submit(batches[0], "streaming")
+        with ThreadPoolExecutor(3) as pool:
+            for f in [
+                pool.submit(store.ingest_batch, b, "streaming") for b in batches
+            ]:
+                f.result()
+        committed = store.version("streaming")
+        replay = store.ingest_batch(batches[0], "streaming")
         after = store.latest("streaming")
         agg = after.agg(
             F.count(F.lit(1)).alias("n"),
@@ -4030,7 +4016,7 @@ def q329_stream_group_commit_audit(
             F.max("version")
         ).collect()[0][0]
         rows = [
-            ("batches_committed", int(sum(coord.groups_committed)) - 1),
+            ("batches_committed", int(committed)),
             ("cents_latest", int(agg["c"])),
             ("max_key_version", int(maxv)),
             ("n_keys", int(agg["k"])),

@@ -243,16 +243,6 @@ class VacuumedVersion(Exception):
     """The requested version's history was truncated by ``vacuum``."""
 
 
-class _GroupOverlap(Exception):
-    """Internal: a group-commit's batches could not be PROVEN
-    key-disjoint; the caller falls back to sequential ingestion."""
-
-
-#: caller-internal batch-id tag column carried through the group-commit
-#: versioned-delta pass (excluded from payload/dedup/tiebreak/write)
-_GBID = "__gbid"
-
-
 class ChangeFeedGap(Exception):
     """The requested change-feed span crosses a commit whose row-level
     changes were deliberately not recorded (``retain_before(cdc=False)``
@@ -832,106 +822,14 @@ class ManifestStore:
     # _read_stats fold and the carried "stats_incs" lists
 
     def ingest_batch(self, batch: DataFrame, mode: str) -> int:
-        """One batch, one commit — see ``_ingest_frame`` for the
-        optimistic-concurrency contract."""
-        return self._ingest_frame(batch, mode, n_bids=None)
-
-    def ingest_group(self, batches: list, mode: str) -> list[int]:
-        """GROUP COMMIT (r8 directive #3): coalesce queued KEY-DISJOINT
-        batches into ONE commit — one versioned-delta pass, one parquet
-        write, one stats increment, one commit race — amortizing the
-        fixed per-commit cost across the whole group (measured on a
-        500-row streamed commit at ``local[2]``: one Spark job — the
-        probe of the batch — and ~0.1 s in the store, whatever the size
-        up to ``MICRO_COMMIT_ROWS``; over it, the Spark path's checkpoint
-        and write jobs), and cutting the multi-writer conflict rate by
-        the group factor.
-
-        Disjointness is PROVEN, not assumed, from the same grouped
-        stats the single-batch path already computes: two batches may
-        interact only if they share a (ticker[, interval]) group with
-        overlapping ts ranges — an interacting key would be a row in
-        both rectangles.  Any such pair (or any NULL key, which no
-        rectangle can bound) aborts the group BEFORE anything is
-        written and falls back to sequential ``ingest_batch`` in list
-        order, so observable semantics are exactly sequential
-        ingestion; when the group path runs, union-level dedup equals
-        sequential dedup BECAUSE no key crosses batches.
-
-        Group size is the latency/amortization knob: tens of batches
-        per group amortize the fixed jobs fully; hundreds make the
-        union's analyzer cost visible and delay the first batch's
-        durability by the whole group — callers draining a queue should
-        cap the group (the bench uses 4–8).
-
-        Returns per-batch appended-row counts.  One caveat, pinned in
-        tests: a row submitted IDENTICALLY by two batches of the same
-        group is appended once (exactly-once holds) but attributed to
-        one of the two arbitrarily — sequential ingestion attributes it
-        to the earlier batch.  Atomicity is all-or-nothing for the
-        group (stronger than sequential's prefix-on-crash)."""
-        if not batches:
-            return []
-        if len(batches) == 1:
-            return [self.ingest_batch(batches[0], mode)]
-        # Schema gate (r10, advice): the tag-union below uses
-        # ``allowMissingColumns=True`` so a batch MISSING a declared
-        # schema column would be silently NULL-padded and committed,
-        # where plain ``ingest_batch`` (and therefore the sequential
-        # fallback) raises on the same input.  Route any such group to
-        # the sequential path up front so observable semantics are
-        # EXACTLY sequential ingestion for malformed batches too —
-        # whatever error (or tolerance) the plain path has, the group
-        # entry point now has identically.
-        declared = set(S.SCHEMAS[mode].fieldNames())
-        if any(declared - set(b.columns) for b in batches):
-            return [self.ingest_batch(b, mode) for b in batches]
-        tagged = _union(
-            [b.withColumn(_GBID, F.lit(i)) for i, b in enumerate(batches)]
-        )
-        try:
-            return self._ingest_frame(tagged, mode, n_bids=len(batches))
-        except _GroupOverlap:
-            return [self.ingest_batch(b, mode) for b in batches]
-
-    @staticmethod
-    def _check_group_disjoint(grows, gb_base: list) -> None:
-        """Prove pairwise key-disjointness of a group's batches from the
-        per-(group key, batch id) stat rows of the POST-DEDUP delta, or
-        raise ``_GroupOverlap``.  Sound because a key shared by two
-        batches either survives dedup in both (two stat rows whose
-        [lo, hi] ranges contain the shared ts → ranges intersect →
-        caught) or was an exact duplicate (one surviving copy — content
-        identical to what sequential ingestion stores).  NULL keys and
-        NULL timestamps fall outside every rectangle → conservative
-        abort."""
-        per: dict = {}
-        for r in grows.to_pylist():
-            if (
-                r["ticker"] is None
-                or r["lo"] is None
-                or r["nts"] != r["rc"]
-            ):
-                raise _GroupOverlap
-            k = tuple(r[c] for c in gb_base)
-            per.setdefault(k, []).append((r["lo"], r["hi"], r[_GBID]))
-        for lst in per.values():
-            if len(lst) == 1:
-                continue
-            lst.sort()
-            for (_, h1, b1), (l2, _, b2) in zip(lst, lst[1:]):
-                # distinct bids by construction (one stat row per
-                # (key, bid)); ranges may not even touch: an equal ts
-                # in both batches would be the same index key
-                if b1 != b2 and l2 <= h1:
-                    raise _GroupOverlap
-
-    def _ingest_frame(
-        self, batch: DataFrame, mode: str, n_bids: int | None
-    ) -> int | list[int]:
-        """The ingest contract (``sources/ingest.py``), atomically: one
-        probe of the batch, a ``_commit`` attempt, its rebase hook and
-        one post-publish step.
+        """One batch, one commit: the ingest contract
+        (``sources/ingest.py``), atomically — one probe of the batch, a
+        ``_commit`` attempt, its rebase hook and one post-publish step.
+        Returns the appended-row count.  Concurrent writers (several
+        streams' ``foreachBatch``, several processes) each call this;
+        the commit loop's rebase path keeps them live without grouping
+        their batches (measured in interleaved pairs, grouping lost or
+        tied in every shape tried — SCALING.md).
 
         The PROBE collects the raw batch once (``collect_micro``: one
         ``limit(bound+1).toArrow()`` job on the source).  An empty batch
@@ -967,10 +865,7 @@ class ManifestStore:
         delta from them."""
         parts = PARTITION_COLS[mode]
         tsc = S.TS_COL[mode]
-        ign = (_GBID,) if n_bids else ()
-        gb_base = self._stats_grain(mode)
-        gb = gb_base + list(ign)
-        zero = [0] * n_bids if n_bids else 0
+        gb = self._stats_grain(mode)
         session_tz = self.spark.conf.get("spark.sql.session.timeZone")
 
         def stats_of(d: Delta):
@@ -983,7 +878,7 @@ class ManifestStore:
             """The versioned delta of the Arrow batch ``tbl`` against the
             Arrow store rows ``prior``, or None when the Arrow path
             declines; its DataFrame is built only if something asks."""
-            out = versioned_delta_arrow(tbl, prior, mode, self.tz, ign, session_tz)
+            out = versioned_delta_arrow(tbl, prior, mode, self.tz, session_tz)
             if out is None:
                 return None
             return stats_of(Delta(
@@ -995,19 +890,14 @@ class ManifestStore:
             its rows come back as Arrow when the count proves it micro."""
             return stats_of(materialize_micro(compute_versioned_delta(
                 frame, existing, mode, self.tz, touched=touched,
-                ignore_cols=ign,
             )))
 
         src = collect_micro(batch)
         if src is not None and not src.num_rows:
-            return zero
+            return 0
         delta, grows = (src is not None and on_driver(src)) or in_spark(batch)
         if not delta.n:
-            return zero
-        if n_bids:
-            # prove pairwise batch disjointness BEFORE any write;
-            # raises _GroupOverlap -> caller ingests sequentially
-            self._check_group_disjoint(grows, gb_base)
+            return 0
         bounds = _meta_of(grows, tsc)
         # rectangle pruning is only sound when every key is non-NULL
         # (NULL keys fall outside any recorded bounds)
@@ -1031,9 +921,7 @@ class ManifestStore:
                 # some live dir may share keys: re-run the dedup/version
                 # pass against just those dirs, from the optimistic delta
                 # (already deduped and routed — the batch's source is not
-                # read again).  No group re-check: the store anti-join
-                # only REMOVES rows, so it cannot create cross-batch
-                # overlap.
+                # read again).
                 touched = _touched_parts(grows, parts) if parts else None
                 redo = None
                 if delta.tbl is not None:
@@ -1053,16 +941,15 @@ class ManifestStore:
                     touched,
                 )
                 if not d.n:
-                    return None, zero
+                    return None, 0
                 dir_meta = _meta_of(g, tsc)
-            out = d.drop(*ign)
             # distinct partition-tuple count, free from the stats rows:
             # pins the write's repartition width so each partition value
             # is one task and its file create runs in parallel (r12 —
             # see cluster_for_write).  Micro deltas write their files
             # straight from the Arrow table, driver-side.
             batch_dir = self._write_batch_dir(
-                out, mode, state,
+                d, mode, state,
                 n_parts=len(_touched_parts(g, parts)) if parts else None,
             )
             # batch-only stats depend ONLY on this delta: a
@@ -1087,11 +974,7 @@ class ManifestStore:
                 "meta": {batch_dir: dir_meta},
             }
             last["payload"] = payload
-            if not n_bids:
-                return payload, d.n
-            per = fold_stats(g, [_GBID], mins=(), maxs=())
-            got = dict(zip(*per.to_pydict().values()))
-            return payload, [got.get(i, 0) for i in range(n_bids)]
+            return payload, d.n
 
         def rebase(state, head):
             p = last["payload"]

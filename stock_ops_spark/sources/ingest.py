@@ -59,7 +59,6 @@ def compute_versioned_delta(
     mode: str,
     tz: str,
     touched: list | None = None,
-    ignore_cols: tuple = (),
 ) -> DataFrame:
     """Steps 1-5 of the ingest contract (P5/A2/A3/A4), shared by every
     commit path of the store (``sources/commitlog.py``): route
@@ -71,17 +70,10 @@ def compute_versioned_delta(
     ``touched``: optional precomputed partition-value tuples the batch
     hits (a caller that already ran an aggregate over the routed batch
     can fold the collect in and save one Spark job — r8).  ``[]`` means
-    "known over-cap: skip pruning"; ``None`` means "compute here".
-
-    ``ignore_cols``: caller-internal tag columns (the group-commit
-    batch id — r9) that must ride through the pass UNTOUCHED: excluded
-    from the dedup payload and the conflict tiebreak, never compared
-    against the store."""
+    "known over-cap: skip pruning"; ``None`` means "compute here"."""
     keys = S.INDEX_COLS[mode]
     declared = set(S.SCHEMAS[mode].fieldNames())
-    extra = [
-        c for c in batch.columns if c not in declared and c not in ignore_cols
-    ]
+    extra = [c for c in batch.columns if c not in declared]
     payload = S.payload_cols(mode) + extra
     parts = PARTITION_COLS[mode]
 
@@ -208,7 +200,6 @@ def versioned_delta_arrow(
     prior,
     mode: str,
     tz: str,
-    ignore_cols: tuple = (),
     session_tz: str = "UTC",
 ):
     """``compute_versioned_delta`` on the driver, for a batch already
@@ -251,7 +242,7 @@ def versioned_delta_arrow(
         and not all(plain_type(t) for t in prior.schema.types)
     ):
         return None
-    extra = [c for c in cols if c not in declared and c not in ignore_cols]
+    extra = [c for c in cols if c not in declared]
     payload = S.payload_cols(mode) + extra
     try:
         routed = arrow_partition_cols(tbl, mode, tz, session_tz)

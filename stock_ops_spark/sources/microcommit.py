@@ -235,13 +235,6 @@ class Delta:
     def __getitem__(self, i):
         return tuple(self)[i]
 
-    def drop(self, *cols: str) -> "Delta":
-        """The same delta without caller-internal tag columns."""
-        if not cols:
-            return self
-        tbl = None if self.tbl is None else self.tbl.drop_columns(list(cols))
-        return Delta(lambda: self.df.drop(*cols), self.n, tbl)
-
     def stat_rows(self, keys, ts_col: str, parts=(), part_cap=None):
         """Per-key rc/nts/lo/hi[/tp] (see ``grouped_stats``), as Arrow."""
         if self.tbl is not None:

@@ -25,144 +25,12 @@ state, matching the reference's never-drop ingest posture.
 
 from __future__ import annotations
 
-import threading
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from stock_ops_spark.schemas import STREAMING
 from stock_ops_spark.sources.commitlog import ManifestStore
-
-
-class GroupCommitCoordinator:
-    """Driver-side GROUP COMMIT for concurrent streams into one store
-    (VERDICT r9 #4) — the WAL group-commit discipline (first arrival
-    leads, lingers briefly, commits everything queued in one
-    ``ManifestStore.ingest_group`` call).
-
-    Several streaming queries writing to one store each pay the
-    per-commit fixed cost (one probe job and ~0.1 s in the store for a
-    micro batch at ``local[2]``; seconds for a batch over the micro
-    bound) and contend on the commit race; coalescing their
-    concurrently-arriving micro-batches amortizes both (measured when
-    every commit planned its delta in Spark: 4-writer 524 → 1,203
-    rows/s).  Protocol per
-    ``submit``:
-
-    - enqueue the batch and try to become the LEADER; a follower just
-      waits for its batch's commit to land.
-    - the leader LINGERS (enough for same-trigger batches from sibling
-      streams to arrive, far less than a commit), then drains
-      ``sizing.commit_group_size(queue_depth)`` batches through
-      ``ingest_group`` — which PROVES key-disjointness and falls back
-      to sequential ingestion for anything it can't prove, so
-      correctness never depends on the grouping.
-
-    The linger AUTO-TUNES by default (r11, VERDICT #4): a fixed value
-    can sit exactly wrong against the streams' trigger cadence — r10
-    measured 0.3 s phase-locking a 4-stream drain into 3+1 splits at
-    194 rows/s while 0.1 s coalesced perfect groups of 4 at 929.  The
-    coordinator records submit inter-arrival gaps (a bounded deque)
-    and the leader sets each linger from
-    ``sizing.commit_linger_s(gaps)`` — covering the observed burst
-    span without reaching halfway to the next burst, which excludes
-    the phase-lock by construction.  Pass a float ``linger_s`` to pin
-    it; before enough history accrues, auto uses the measured r10
-    default (0.1 s).  Chosen values land in ``lingers_used``.
-
-    ``submit`` BLOCKS until the caller's batch is durably committed —
-    that is what keeps foreachBatch's effectively-once contract intact:
-    Spark only checkpoints a micro-batch after ``write_batch`` returns,
-    so a crash replays exactly the batches whose commits had not
-    landed (and the store's dedup makes the replay idempotent).  A
-    failed group propagates its exception to every submitter in it."""
-
-    def __init__(
-        self,
-        store: ManifestStore,
-        mode: str = "streaming",
-        linger_s: float | str = "auto",
-        max_group: int = 64,
-    ):
-        from collections import deque
-
-        self.store = store
-        self.mode = mode
-        self.linger_s = linger_s
-        self.max_group = max_group
-        self._lock = threading.Lock()
-        self._queue: list[dict] = []
-        self._leading = False
-        #: submit arrival times (monotonic), bounded — the linger
-        #: auto-tune's measurement window
-        self._arrivals: deque = deque(maxlen=65)
-        #: commit-shape telemetry: list of group sizes actually committed
-        self.groups_committed: list[int] = []
-        #: linger telemetry: the value each leader actually slept
-        self.lingers_used: list[float] = []
-
-    def _resolve_linger(self) -> float:
-        if not isinstance(self.linger_s, str):
-            return float(self.linger_s)
-        from stock_ops_spark.plans.sizing import commit_linger_s
-
-        with self._lock:
-            arr = list(self._arrivals)
-        return commit_linger_s([b - a for a, b in zip(arr, arr[1:])])
-
-    def submit(self, batch_df: DataFrame, mode: str | None = None) -> int:
-        from stock_ops_spark.plans.sizing import commit_group_size
-
-        if mode is not None and mode != self.mode:
-            raise ValueError("one coordinator coalesces one table mode")
-        entry = {"df": batch_df, "done": threading.Event(), "n": None,
-                 "err": None}
-        with self._lock:
-            self._arrivals.append(time.monotonic())
-            self._queue.append(entry)
-        while True:
-            with self._lock:
-                lead = not self._leading
-                if lead:
-                    self._leading = True
-            if not lead:
-                # follower: wake periodically in case the leader exited
-                # between our enqueue and its drain
-                entry["done"].wait(timeout=0.05)
-                if entry["done"].is_set():
-                    break
-                continue
-            try:
-                linger = self._resolve_linger()
-                self.lingers_used.append(linger)
-                time.sleep(linger)
-                with self._lock:
-                    g = commit_group_size(len(self._queue), cap=self.max_group)
-                    take, self._queue = self._queue[:g], self._queue[g:]
-                if take:
-                    try:
-                        ns = self.store.ingest_group(
-                            [t["df"] for t in take], self.mode
-                        )
-                        self.groups_committed.append(len(take))
-                        for t, n in zip(take, ns):
-                            t["n"] = n
-                    except Exception as e:  # noqa: BLE001 — propagate to owners
-                        for t in take:
-                            t["err"] = e
-                    finally:
-                        for t in take:
-                            t["done"].set()
-            finally:
-                with self._lock:
-                    self._leading = False
-            if entry["done"].is_set():
-                break
-        if entry["err"] is not None:
-            raise entry["err"]
-        return entry["n"]
 
 
 def stream_ingest(
@@ -172,23 +40,18 @@ def stream_ingest(
     checkpoint: str | None = None,
     trigger_seconds: int = 10,
     available_now: bool = False,
-    coordinator: GroupCommitCoordinator | None = None,
 ) -> StreamingQuery:
     """Attach the batch writer (with full dedup/version semantics) to a
-    streaming DataFrame via foreachBatch.  Pass a shared
-    ``coordinator`` when several streams feed ONE store: their
-    micro-batches group-commit (see ``GroupCommitCoordinator``) instead
-    of each paying the per-commit fixed cost; with a single stream the
-    queue never exceeds one batch, so the coordinator degrades to the
-    plain path (group of 1 == ``ingest_batch``)."""
+    streaming DataFrame via foreachBatch: each micro-batch is one
+    ``store.ingest_batch`` commit.  Several streams may feed ONE store;
+    each commits its own micro-batches and the commit loop's rebase path
+    keeps them live (``ManifestStore.ingest_batch``), so batch size is
+    set only by the trigger and ``maxFilesPerTrigger``."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # no emptiness job first: the store's probe of the batch is the
         # one job a micro-batch runs, and an empty one commits nothing
-        if coordinator is not None:
-            coordinator.submit(batch_df, mode)
-        else:
-            store.ingest_batch(batch_df, mode)
+        store.ingest_batch(batch_df, mode)
 
     writer = stream.writeStream.foreachBatch(write_batch).outputMode("append")
     if checkpoint:

@@ -17,7 +17,6 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import glob
-import math
 import os
 
 import pyarrow as pa
@@ -73,14 +72,6 @@ def _schema(mode: str, extra=(), version: bool = False) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _canon(v):
-    """Spark's grouping equality as a Python value: NaN equals NaN and
-    -0.0 equals 0.0."""
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v + 0.0
-    return v
-
-
 @st.composite
 def cases(draw):
     mode = draw(st.sampled_from(list(S.SCHEMAS)))
@@ -90,12 +81,9 @@ def cases(draw):
     )
     batch = draw(st.lists(row, max_size=10))
     extra = draw(st.sampled_from(["none", "batch", "store", "both"]))
-    tagged = draw(st.booleans())
     for r in batch:
         if extra in ("batch", "both"):
             r["x"] = draw(st.sampled_from(FLOATS))
-        if tagged:
-            r["__gbid"] = draw(st.integers(0, 2))
     # exact re-sends of batch rows, then rows that may conflict
     resent = draw(st.lists(st.integers(0, 9), max_size=4))
     prior = [dict(batch[i]) for i in resent if i < len(batch)]
@@ -105,28 +93,20 @@ def cases(draw):
         if extra in ("store", "both"):
             r["y"] = draw(st.sampled_from([None, "s"]))
     return {"mode": mode, "batch": batch, "prior": prior or None,
-            "extra": extra, "tagged": tagged}
+            "extra": extra}
 
 
-def _case(mode, batch, prior=None, extra="none", tagged=False):
+def _case(mode, batch, prior=None, extra="none"):
     full = S.SCHEMAS[mode].fieldNames()
     base = {c: None for c in full}
     return {"mode": mode, "batch": [dict(base, **r) for r in batch],
             "prior": None if prior is None else [dict(base, **r) for r in prior],
-            "extra": extra, "tagged": tagged}
+            "extra": extra}
 
 
 def _tables(case):
-    mode, extra, tagged = case["mode"], case["extra"], case["tagged"]
+    mode, extra = case["mode"], case["extra"]
     bx = [("x", pa.float64())] if extra in ("batch", "both") else []
-    if tagged:
-        bx.append(("__gbid", pa.int64()))
-        # rows equal under Spark's dedup share one tag, so which copy
-        # survives cannot show (the group path's documented caveat)
-        first = {}
-        for r in case["batch"]:
-            k = tuple(_canon(v) for c, v in r.items() if c != "__gbid")
-            r["__gbid"] = first.setdefault(k, r["__gbid"])
     batch = pa.Table.from_pylist(case["batch"], schema=_schema(mode, bx))
     if case["prior"] is None:
         return batch, None
@@ -201,15 +181,13 @@ def _stats(tbl, keys, mode):
 def test_arrow_delta_matches_spark(spark, case):
     mode = case["mode"]
     batch, prior = _tables(case)
-    ign = ("__gbid",) if case["tagged"] else ()
     df = spark.createDataFrame(batch)
     existing = None if prior is None else spark.createDataFrame(prior)
     want = MC.materialize_micro(compute_versioned_delta(
         df, existing, mode, TZ, touched=[] if existing is not None else None,
-        ignore_cols=ign,
     ))
     tbl = MC.collect_micro(df)
-    got = versioned_delta_arrow(tbl, prior, mode, TZ, ign)
+    got = versioned_delta_arrow(tbl, prior, mode, TZ)
     assert got is not None
     if not want.n:
         assert got.num_rows == 0

@@ -11,6 +11,7 @@ import glob
 import os
 
 import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -188,6 +189,35 @@ def test_micro_ingest_null_ts_matches_distributed(spark, tmp_path, monkeypatch):
         CL, "materialize_micro", lambda df: MC.materialize_micro(df, bound=0)
     )
     assert ingest(tmp_path / "dist") == micro
+
+
+@pytest.mark.parametrize("path", ["micro", "spark"])
+def test_ingest_missing_declared_column_raises_and_commits_nothing(
+    spark, tmp_path, monkeypatch, path
+):
+    # a batch missing a declared column is never NULL-padded: the plain
+    # commit raises AnalysisException before writing, on the micro path
+    # and on the Spark path (forced with bound 0) alike
+    from pyspark.errors import AnalysisException
+
+    if path == "spark":
+        monkeypatch.setattr(
+            CL, "collect_micro", lambda df: MC.collect_micro(df, bound=0)
+        )
+        monkeypatch.setattr(
+            CL, "materialize_micro", lambda df: MC.materialize_micro(df, bound=0)
+        )
+    store = CL.ManifestStore(spark, str(tmp_path / "store"))
+    assert store.ingest_batch(_batch(spark), "streaming") == 4
+    before = sorted(map(tuple, store.read_all("streaming").collect()), key=str)
+    bad = _batch(
+        spark, extra_rows=[("IBM", 1700000000000, 5.0, 1, None, None, None, None)]
+    ).drop("volume")
+    with pytest.raises(AnalysisException):
+        store.ingest_batch(bad, "streaming")
+    assert store.version("streaming") == 1
+    after = sorted(map(tuple, store.read_all("streaming").collect()), key=str)
+    assert after == before
 
 
 def _catalog_micro(tbl, mode, keys):

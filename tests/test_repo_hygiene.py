@@ -1,7 +1,8 @@
 """Spark-free pins on how the repository's own scripts and harnesses
 reach the code: every ``sys.path`` insert resolves the checkout the file
-lives in, every engine attribute the perfbench tracer wraps exists, and
-the change feed stays the only way to learn of a store commit.
+lives in, every engine attribute the perfbench tracer wraps exists, the
+change feed stays the only way to learn of a store commit, and each
+batch stays one commit.
 """
 
 from __future__ import annotations
@@ -82,8 +83,12 @@ def _names(tree):
             yield node.attr
         elif isinstance(node, (ast.arg, ast.keyword)) and node.arg:
             yield node.arg
-        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        elif isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
             yield node.name
+        elif isinstance(node, ast.alias):
+            yield node.asname or node.name
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             yield node.value
 
@@ -148,6 +153,26 @@ def test_fold_states_publish_through_the_commit_log_only():
                 and node.name == "install"
             ):
                 hits.add("artifacts.install")
+        if hits:
+            offenders.append((os.path.relpath(path, REPO), sorted(hits)))
+    assert not offenders, offenders
+
+
+def test_no_group_commit():
+    """Each batch is one ``ingest_batch`` commit: measured in interleaved
+    pairs, grouping batches into one commit lost or tied in every
+    shape, so the coordinator, the grouped ingest and their sizing rules
+    were deleted and nothing may bring one back."""
+    banned = {
+        "ingest_group", "GroupCommitCoordinator", "_check_group_disjoint",
+        "_GroupOverlap", "_GBID", "__gbid", "n_bids", "ignore_cols",
+        "commit_group_size", "commit_linger_s",
+    }
+    offenders = []
+    for path in _py_files("stock_ops_spark", "tools"):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        hits = banned.intersection(_names(tree))
         if hits:
             offenders.append((os.path.relpath(path, REPO), sorted(hits)))
     assert not offenders, offenders

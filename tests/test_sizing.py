@@ -196,66 +196,6 @@ def test_lsh_bands_rule():
         lsh_bands(0.5, 1.0)
 
 
-def test_commit_group_size_rule():
-    from stock_ops_spark.plans.sizing import commit_group_size
-
-    # never exceed the queue; grouping only amortizes waiting batches
-    assert commit_group_size(0) == 0
-    assert commit_group_size(1) == 1
-    assert commit_group_size(3) == 3
-    # measured defaults: G* = round(sqrt(1.3/0.05)) = 5 — inside the
-    # r9 sweep's best band (group=4 gave 2.3-2.4x at 4/8 writers)
-    assert commit_group_size(100) == 5
-    assert 4 <= commit_group_size(10**6) <= 8
-    # the cap bounds the hundreds-regime even with absurd constants
-    assert commit_group_size(10**6, fixed_commit_s=10_000.0) == 64
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        commit_group_size(5, fixed_commit_s=0.0)
-
-
-def test_commit_linger_rule_escapes_phase_lock():
-    """r11 (VERDICT #4): the auto linger must cover one burst's span
-    from its first arrival but never reach halfway to the next burst —
-    the phase-lock condition r10 measured by hand (a 0.3 s fixed
-    linger against a ~0.5 s cadence split a 4-stream drain into 3+1
-    groups at 194 rows/s; 0.1 s coalesced perfectly at 929)."""
-    from stock_ops_spark.plans.sizing import commit_linger_s
-
-    # 4 trigger-aligned streams: 3 intra-burst gaps (~0.03 s) then one
-    # inter-burst gap (~0.4 s), repeating — the r10 shape
-    gaps = [0.03, 0.03, 0.04, 0.40] * 6
-    linger = commit_linger_s(gaps)
-    max_span = 0.03 + 0.03 + 0.04
-    assert linger >= max_span          # covers the burst's straggler
-    assert linger <= 0.5 * 0.40        # never reaches the next burst
-    # the hand-measured failure value violates the no-reach bound —
-    # exactly what the rule excludes by construction
-    assert 0.3 > 0.5 * 0.40
-
-
-def test_commit_linger_rule_unstructured_and_short():
-    from stock_ops_spark.plans.sizing import commit_linger_s
-
-    # no burst structure: half the median gap, clamped
-    assert commit_linger_s([0.2] * 10) == 0.1
-    assert commit_linger_s([0.01] * 10) == 0.02   # lo clamp
-    assert commit_linger_s([2.0] * 10) == 0.45    # hi clamp
-    # too little history: the measured r10 default
-    assert commit_linger_s([]) == 0.1
-    assert commit_linger_s([0.1, 0.2]) == 0.1
-
-
-def test_commit_linger_rule_tight_bursts_clamped_low():
-    from stock_ops_spark.plans.sizing import commit_linger_s
-
-    # near-simultaneous bursts: span ~0 -> lo clamp, not zero
-    gaps = [0.001, 0.001, 0.001, 1.0] * 4
-    linger = commit_linger_s(gaps)
-    assert 0.02 <= linger <= 0.5
-
-
 # --- session: local-mode driver heap sizing (r11 session fix) ---------------
 
 

@@ -256,14 +256,12 @@ def test_socket_reconnect_replay_effectively_once(spark, tmp_path):
     }
 
 
-def test_two_streams_one_store_group_commit(spark, tmp_path):
-    """VERDICT r9 #4 wiring: two streaming queries feeding ONE
-    ManifestStore through a shared GroupCommitCoordinator — every row
-    lands exactly once, replay stays idempotent, and the coordinator's
-    telemetry shows real coalescing is at least possible (group >= 1;
-    trigger alignment decides how often it happens)."""
+def test_two_streams_one_store_per_batch_commits(spark, tmp_path):
+    """Two streaming queries feeding ONE ManifestStore, each micro-batch
+    its own ``ingest_batch`` commit: every row lands exactly once, the
+    racing commits leave gapless versions, and a replay through a fresh
+    checkpoint appends nothing."""
     from stock_ops_spark.sources.commitlog import ManifestStore
-    from stock_ops_spark.streaming.ingest import GroupCommitCoordinator
 
     srcs = []
     for si, tk in enumerate(("SPY", "VOO")):
@@ -286,14 +284,12 @@ def test_two_streams_one_store_group_commit(spark, tmp_path):
         srcs.append(src)
 
     store = ManifestStore(spark, str(tmp_path / "store"), auto_compact_every=0)
-    coord = GroupCommitCoordinator(store, mode="streaming", linger_s=0.3)
     qs = [
         stream_ingest(
             file_trade_source(spark, str(src)),
             store,
             checkpoint=str(tmp_path / f"ckpt{si}"),
             available_now=True,
-            coordinator=coord,
         )
         for si, src in enumerate(srcs)
     ]
@@ -301,14 +297,16 @@ def test_two_streams_one_store_group_commit(spark, tmp_path):
         q.awaitTermination(180)
     data = store.read_all("streaming")
     assert data.count() == 18  # 2 streams x 3 bursts x 3 rows
-    assert sum(coord.groups_committed) >= 1  # every commit went through it
+    assert data.select("ticker", "timestamp_UTC_ms").distinct().count() == 18
+    versions = [c["version"] for c in store.log("streaming").commits()]
+    assert versions == list(range(1, 7))  # one commit per burst, gapless
     # replay one stream through a fresh checkpoint: dedup holds
     q3 = stream_ingest(
         file_trade_source(spark, str(srcs[0])),
         store,
         checkpoint=str(tmp_path / "ckpt-replay"),
         available_now=True,
-        coordinator=coord,
     )
     q3.awaitTermination(180)
     assert store.read_all("streaming").count() == 18
+    assert store.version("streaming") == 6

@@ -17,6 +17,14 @@ with the full dedup/version/stats batch writer inside foreachBatch.
 Prints rows/s plus the per-micro-batch latency distribution
 (p50/p90/p99/max of triggerExecution) taken from the query's own
 progress records.
+
+    python tools/bench_ingest.py --race [n_writers] [rounds] [batch_rows]
+    python tools/bench_ingest.py --streams [K] [batch_rows] [n_batches]
+
+Several writers into ONE store, each batch its own ``ingest_batch``
+commit: N writer processes (``--race``) or K streaming queries in one
+session (``--streams``).  Each prints aggregate rows/s and the commit
+count.
 """
 
 from __future__ import annotations
@@ -186,11 +194,6 @@ def main_race() -> None:
     ingest live where the r6 full-recompute loop starved.
 
         python tools/bench_ingest.py --race [n_writers] [rounds] [batch_rows]
-
-    ``--group G`` makes each writer coalesce G queued batches per
-    ``ingest_group`` call (r9): same total rows, rounds/G commits per
-    writer — the group-commit amortization measured against the
-    per-batch baseline.
     """
     import os
     import subprocess
@@ -201,11 +204,6 @@ def main_race() -> None:
     n_writers = int(args[0]) if len(args) > 0 else 2
     rounds = int(args[1]) if len(args) > 1 else 8
     batch_rows = int(args[2]) if len(args) > 2 else 500
-    group = 1
-    if "--group" in sys.argv:
-        group = int(sys.argv[sys.argv.index("--group") + 1])
-        if rounds % group:
-            raise SystemExit("rounds must divide by --group")
 
     root = tempfile.mkdtemp(prefix="race_bench_")
     go = os.path.join(root, "go")
@@ -246,17 +244,13 @@ open({root!r} + f"/ready-{{i}}", "w").close()
 while not os.path.exists({go!r}):
     time.sleep(0.01)
 total = 0
-queue = []
 for r in range({rounds}):
     rows = [(f"T{{i:02d}}", 1751463000 + 60 * ({batch_rows} * r + j),
              1.0, 2.0, 0.5, 1.5, 100 + j, "1h") for j in range({batch_rows})]
-    queue.append(spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY))
-    if len(queue) == {group}:
-        if {group} == 1:
-            total += store.ingest_batch(queue[0], "historical_intraday")
-        else:
-            total += sum(store.ingest_group(queue, "historical_intraday"))
-        queue = []
+    total += store.ingest_batch(
+        spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY),
+        "historical_intraday",
+    )
 print("DONE", total, conflicts[0], flush=True)
 """
     scr = os.path.join(root, "child.py")
@@ -323,40 +317,23 @@ print("DONE", total, conflicts[0], flush=True)
 
 
 def main_streams() -> None:
-    """Concurrent streaming queries into ONE ManifestStore — the
-    coordinator wiring measured (r10, VERDICT #4):
+    """Concurrent streaming queries into ONE ManifestStore:
 
-        python tools/bench_ingest.py --streams [K] [batch_rows] [n_batches] [--coordinated]
+        python tools/bench_ingest.py --streams [K] [batch_rows] [n_batches]
 
     K file streams (disjoint tickers, maxFilesPerTrigger=1 so one file
-    == one micro-batch) run availableNow against one commit-log store.
-    Baseline: each foreachBatch commits alone (K writers contending on
-    the ~1.3 s/commit fixed cost).  ``--coordinated``: all streams
-    submit through one GroupCommitCoordinator, whose leader drains
-    ``sizing.commit_group_size`` batches per ``ingest_group`` call.
-    Prints rows/s + commits + observed group sizes."""
+    == one micro-batch) run availableNow against one commit-log store;
+    each foreachBatch is its own ``ingest_batch`` commit, the K writers
+    racing through the commit loop's rebase path.  Prints rows/s and the
+    commit count."""
     import os
     import tempfile
 
     from stock_ops_spark.session import get_spark
     from stock_ops_spark.sources.commitlog import ManifestStore
-    from stock_ops_spark.streaming.ingest import (
-        GroupCommitCoordinator,
-        file_trade_source,
-        stream_ingest,
-    )
+    from stock_ops_spark.streaming.ingest import file_trade_source, stream_ingest
 
-    coordinated = "--coordinated" in sys.argv
-    linger: float | str = "auto"  # r11: the coordinator's default
-    if "--linger" in sys.argv:
-        v = sys.argv[sys.argv.index("--linger") + 1]
-        linger = v if v == "auto" else float(v)
-    argv = [
-        a
-        for i, a in enumerate(sys.argv[1:], 1)
-        if not a.startswith("--")
-        and not (i > 1 and sys.argv[i - 1] == "--linger")
-    ]
+    argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     k_streams = int(argv[0]) if len(argv) > 0 else 4
     batch_rows = int(argv[1]) if len(argv) > 1 else 500
     n_batches = int(argv[2]) if len(argv) > 2 else 8
@@ -395,11 +372,6 @@ def main_streams() -> None:
             "streaming",
         )
         store = ManifestStore(spark, f"{tmp}/store", auto_compact_every=0)
-        coord = (
-            GroupCommitCoordinator(store, mode="streaming", linger_s=linger)
-            if coordinated
-            else None
-        )
         t0 = time.monotonic()
         qs = [
             stream_ingest(
@@ -408,7 +380,6 @@ def main_streams() -> None:
                 mode="streaming",
                 checkpoint=f"{tmp}/ckpt{s}",
                 available_now=True,
-                coordinator=coord,
             )
             for s in range(k_streams)
         ]
@@ -423,18 +394,11 @@ def main_streams() -> None:
         json.dumps(
             {
                 "metric": "multi_stream_ingest",
-                "coordinated": coordinated,
                 "k_streams": k_streams,
                 "batch_rows": batch_rows,
                 "n_batches": n_batches,
                 "rows_per_sec": round(n / wall_s),
                 "commits": version,
-                "group_sizes": coord.groups_committed if coord else None,
-                "linger": linger,
-                "lingers_used": (
-                    [round(x, 3) for x in coord.lingers_used]
-                    if coord else None
-                ),
             }
         )
     )
