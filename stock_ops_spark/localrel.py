@@ -9,10 +9,20 @@ through one Arrow table instead plans as a true ``LocalTableScan``: no
 RDD, no Python eval at action time, ~0.1 s per action on the same relation
 — and any join against it can be broadcast from plan-visible size.
 
-Used for the tiny frames the engine fabricates on the driver: provider
-fetch results entering the ingest path, audit tails, rate/term/lag
-dimension tables.  Values, schema and every downstream operator are
-unchanged — this is purely the leaf's physical encoding.
+``arrow_relation`` is the engine's one builder of such a leaf from an
+Arrow table: the store's driver-side reads (range reads, change feeds,
+stats views) and driver-computed commit deltas enter Spark through it,
+and ``local_relation`` routes rows through it after building their
+table.  Those rows are the tiny frames the engine fabricates on the
+driver: provider fetch results entering the ingest path, audit tails,
+rate/term/lag dimension tables.  Values, schema and every downstream
+operator are unchanged — this is purely the leaf's physical encoding.
+
+The frame ``arrow_relation`` returns remembers its table
+(``arrow_table``), so a consumer that wants the rows back on the driver
+— ``ReadProcess.to_pandas`` — converts them with no Spark job.  Only
+that exact frame does: anything derived from it (a ``select``, a
+``where``, an operator's output) is a new plan and reads through Spark.
 
 Timestamp fields decline to the classic path: a naive ``datetime`` means
 "driver-local wall clock" there, and replicating that conversion through
@@ -21,8 +31,33 @@ Arrow's tz-aware arrays buys nothing for the row counts involved.
 
 from __future__ import annotations
 
+import weakref
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType, TimestampNTZType
+
+#: frame -> the Arrow table it was built from, for frames built here only
+_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def arrow_relation(spark: SparkSession, tbl: pa.Table, schema=None) -> DataFrame:
+    """The Arrow table ``tbl`` as one local relation (LocalTableScan).
+
+    With no ``schema`` every column is nullable, as in Spark's parquet
+    reads; a ``schema`` (StructType) is Spark's ``createDataFrame``
+    schema.  The returned frame remembers ``tbl`` for ``arrow_table``."""
+    if schema is None:
+        tbl = tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema]))
+    df = spark.createDataFrame(tbl, schema)
+    _TABLES[df] = tbl
+    return df
+
+
+def arrow_table(df: DataFrame) -> pa.Table | None:
+    """The Arrow table ``df`` was built from by ``arrow_relation``, or
+    None for any other frame — derived ones included."""
+    return _TABLES.get(df)
 
 
 def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
@@ -49,12 +84,11 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
         for f in struct.fields
     ) and (by_name or all(len(r) == len(names) for r in rows)):
         try:
-            import pyarrow as pa
             from pyspark.sql.pandas.types import to_arrow_schema
 
             data = rows if by_name else [dict(zip(names, r)) for r in rows]
             tbl = pa.Table.from_pylist(data, schema=to_arrow_schema(struct))
-            return spark.createDataFrame(tbl, struct)
+            return arrow_relation(spark, tbl, struct)
         except Exception:
             pass
     return spark.createDataFrame(rows, struct)

@@ -67,6 +67,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
+from stock_ops_spark.localrel import arrow_relation
 from stock_ops_spark.operators.stats import batch_stats, fold_stats
 from stock_ops_spark.operators.versioning import latest_version_view
 from stock_ops_spark.sources.microcommit import (
@@ -198,13 +199,15 @@ def _route(mode: str, tz: str, session_tz: str, v):
     return v, tuple(at[c][0].as_py() for c in PARTITION_COLS[mode])
 
 
-def _range_predicate(mode: str, ticker, lo, hi, parts_lo, parts_hi, col):
+def _range_predicate(mode: str, ticker, interval, lo, hi, parts_lo, parts_hi, col):
     """``read_where``'s predicate over ``col`` — ``F.col`` for the Spark
     read, ``pyarrow.dataset.field`` for the driver read: the ticker, the
-    time bounds and the partition range between the bounds' routed
-    tuples.  None when nothing is bounded."""
+    interval, the time bounds and the partition range between the
+    bounds' routed tuples.  None when nothing is bounded."""
     tsc = S.TS_COL[mode]
     terms = [] if ticker is None else [col("ticker") == ticker]
+    if interval is not None:
+        terms.append(col("interval") == interval)
     if lo is not None:
         terms.append(col(tsc) >= lo)
     if hi is not None:
@@ -216,14 +219,6 @@ def _range_predicate(mode: str, ticker, lo, hi, parts_lo, parts_hi, col):
     for t in terms:
         pred = t if pred is None else pred & t
     return pred
-
-
-def _local_frame(spark: SparkSession, tbl) -> DataFrame:
-    """A driver-side read's rows as one local relation (LocalTableScan),
-    every column nullable as in Spark's parquet reads."""
-    return spark.createDataFrame(
-        tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema]))
-    )
 
 
 def _probe(df: DataFrame) -> Delta:
@@ -553,30 +548,37 @@ class ManifestStore:
         ts_max=None,
         at_version: int | None = None,
         stats: dict | None = None,
+        interval: str | None = None,
     ) -> DataFrame | None:
-        """Predicate read with COMMIT-LEVEL data skipping: batch dirs
-        whose recorded [min, max] bounds (``_dir_meta``, kept in the
-        commit payload and folded by ``state()``) provably miss the
-        predicate are never handed to Spark at all — no file listing,
-        no footer read, no plan relation.  Parquet's own footer stats
-        prune row groups only after every file is opened; at 10^4+
-        batch dirs the listing itself is the cost, and this is the
-        manifest-level skip Delta/Iceberg use.  Dirs with no recorded
-        meta (pre-feature commits) are conservatively read.  The same
-        predicate is re-applied as a residual filter, so pruning is an
-        optimization, never a semantics change.
+        """The rows of ``ticker`` and ``interval`` with the time column in
+        [``ts_min``, ``ts_max``] (each None: unbounded) — the reference's
+        ``_query_range``, ``AND interval = ?`` included.
+
+        COMMIT-LEVEL data skipping: batch dirs whose recorded [min, max]
+        bounds (``_dir_meta``, kept in the commit payload and folded by
+        ``state()``) provably miss the predicate are never handed to
+        Spark at all — no file listing, no footer read, no plan
+        relation.  Parquet's own footer stats prune row groups only
+        after every file is opened; at 10^4+ batch dirs the listing
+        itself is the cost, and this is the manifest-level skip
+        Delta/Iceberg use.  Dirs with no recorded meta (pre-feature
+        commits) are conservatively read.  The whole predicate is then
+        applied to the kept dirs' rows, so pruning is an optimization,
+        never a semantics change.
 
         When the kept dirs hold at most ``MICRO_COMMIT_ROWS`` rows in the
         partition range of the time bounds, the read runs on the driver
         (``_read_dirs_arrow``, the predicate as its filter) and comes
         back as one local relation (``DataFrame.isLocal()``) without a
-        Spark job; a larger read, or one the driver read declines, is
-        the Spark read of the same dirs.  The manifest's per-dir row
-        counts decide without I/O where they can: kept dirs whose counts
-        sum within the bound are read uncounted, and a read whose dirs
-        lying wholly inside the predicate already hold more goes to
-        Spark with nothing opened; only a read in between counts its
-        partition fragments' footers first.
+        Spark job, remembering its Arrow table (``localrel.arrow_table``)
+        so a caller can take the rows back without one either; a larger
+        read, or one the driver read declines, is the Spark read of the
+        same dirs.  The manifest's per-dir row counts decide without I/O
+        where they can: kept dirs whose counts sum within the bound are
+        read uncounted, and a read whose dirs lying wholly inside the
+        predicate already hold more goes to Spark with nothing opened;
+        only a read in between counts its partition fragments' footers
+        first.
 
         Either way the rows come back in time order, NULL times first
         (sorted in Arrow on the driver, a Spark sort otherwise)."""
@@ -615,16 +617,20 @@ class ManifestStore:
             fits = None not in ns and sum(ns) <= MICRO_COMMIT_ROWS
             tbl = self._read_dirs_arrow(
                 mode, keep,
-                _range_predicate(mode, ticker, lo, hi, parts_lo, parts_hi, pads.field),
+                _range_predicate(
+                    mode, ticker, interval, lo, hi, parts_lo, parts_hi, pads.field
+                ),
                 bound=None if fits else MICRO_COMMIT_ROWS,
             )
             if tbl is not None:
-                return _local_frame(
+                return arrow_relation(
                     self.spark,
                     tbl.sort_by([(tsc, "ascending")], null_placement="at_start"),
                 )
         df = self._read_dirs(mode, keep)
-        pred = _range_predicate(mode, ticker, lo, hi, parts_lo, parts_hi, F.col)
+        pred = _range_predicate(
+            mode, ticker, interval, lo, hi, parts_lo, parts_hi, F.col
+        )
         if pred is not None:
             df = df.where(pred)
         return df.orderBy(tsc)
@@ -691,7 +697,7 @@ class ManifestStore:
         if state is None:
             state = self.log(mode).state(at_version)
         tbl = self._stats_table(mode, which, state)
-        return None if tbl is None else _local_frame(self.spark, tbl)
+        return None if tbl is None else arrow_relation(self.spark, tbl)
 
     def table_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "table")
@@ -882,7 +888,7 @@ class ManifestStore:
             if out is None:
                 return None
             return stats_of(Delta(
-                lambda: self.spark.createDataFrame(out), out.num_rows, out
+                lambda: arrow_relation(self.spark, out), out.num_rows, out
             ))
 
         def in_spark(frame, existing=None, touched=None):
@@ -1513,7 +1519,7 @@ class ManifestStore:
                 pieces.append((v, c["adds"], True, None if None in ns else sum(ns)))
         tbl = self._changes_arrow(mode, pieces)
         if tbl is not None:
-            return _local_frame(self.spark, tbl)
+            return arrow_relation(self.spark, tbl)
         frames = []
         for v, dirs, derive, _ in pieces:
             if derive:

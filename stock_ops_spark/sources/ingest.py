@@ -195,6 +195,38 @@ def _sort_keys(tbl, cols: list[str]):
     return pa.table(out)
 
 
+def _max_version(kid, n_keys: int, v, rows):
+    """The max of the versions ``v`` (numpy, NaN for NULL) per key id
+    ``kid`` (ids below ``n_keys``) over the rows of the mask ``rows``,
+    NULL versions skipped; the int64 minimum for a key with none.  A4's
+    prior max in ``versioned_delta_arrow`` and O5's pick in
+    ``latest_version_arrow``."""
+    ok = rows & ~np.isnan(v.astype(float))
+    out = np.full(n_keys, np.iinfo(np.int64).min)
+    np.maximum.at(out, kid[ok], v[ok].astype(np.int64))
+    return out
+
+
+def latest_version_arrow(tbl, keys: list[str]):
+    """``operators.versioning.latest_version_view`` on the driver, for
+    rows already held as the Arrow table ``tbl``: per key — NULL keys
+    equal, as the window partitions them — the row with the max
+    ``version``, the first in ``tbl``'s order among ties, and the picked
+    rows in ``tbl``'s order.  None — the caller takes the Spark path —
+    when a ``version`` is NULL (the window's descending order puts those
+    last)."""
+    if tbl.column("version").null_count:
+        return None
+    if not tbl.num_rows:
+        return tbl
+    kid = _group_ids(_eq_cols(tbl, keys))
+    v = tbl.column("version").to_numpy(zero_copy_only=False)
+    top = _max_version(kid, kid.max() + 1, v, np.ones(tbl.num_rows, bool))
+    cand = np.flatnonzero(v == top[kid])
+    _, first = np.unique(kid[cand], return_index=True)
+    return tbl.take(np.sort(cand[first]))
+
+
 def versioned_delta_arrow(
     tbl,
     prior,
@@ -300,11 +332,9 @@ def versioned_delta_arrow(
         kp = kid * (pid.max() + 1) + pid
         stored = kp[n:][joins[n:]]
         keep = ~(joins[:n] & np.isin(kp[:n], stored))
-        per_key = np.zeros(kid.max() + 1, np.int64)
         pv = prior.column("version").to_numpy(zero_copy_only=False)
-        ok = joins[n:] & ~np.isnan(pv.astype(float))
-        np.maximum.at(per_key, kid[n:][ok], pv[ok].astype(np.int64))
-        maxv = np.where(joins[:n], per_key[kid[:n]], 0)[keep]
+        per_key = _max_version(kid[n:], kid.max() + 1, pv, joins[n:])
+        maxv = np.where(joins[:n], np.maximum(per_key[kid[:n]], 0), 0)[keep]
         routed = routed.filter(pa.array(keep))
         n = routed.num_rows
 

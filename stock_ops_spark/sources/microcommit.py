@@ -213,8 +213,8 @@ class Delta:
 
     ``df`` may be given as a zero-argument callable: the frame is then
     built on first use only.  A delta computed on the driver passes
-    ``createDataFrame`` of its table (one LocalTableScan), so a commit
-    that never needs a frame — no cumulative stats snapshot, no
+    ``localrel.arrow_relation`` of its table (one LocalTableScan), so a
+    commit that never needs a frame — no cumulative stats snapshot, no
     declined ``write_micro`` — builds none.  Unpacks like a tuple:
     ``df, n, tbl = materialize_micro(...)``."""
 

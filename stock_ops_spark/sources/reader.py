@@ -7,13 +7,15 @@ all in one process.  Here the store's manifest first drops every batch
 dir whose recorded bounds miss the range (``ManifestStore.read_where``).
 A read whose remaining partition fragments fit ``MICRO_COMMIT_ROWS``
 then runs like the reference's, in one process: pyarrow scans the
-fragments of the range's partitions, filters on ticker and time, sorts
-by time, and the rows enter Spark as one local relation — the range
-read runs no Spark job and ``to_pandas`` one.  A larger read is
-Catalyst's: the range predicate on the partition-derived columns prunes
-directories, the ts-range predicate pushes into parquet row-group stats,
-union across files is the native multi-file scan, and the sort is a
-Spark sort.
+fragments of the range's partitions, filters on ticker, interval and
+time, sorts by time, and the rows enter Spark as one local relation
+that keeps its Arrow table.  ``latest_only`` picks each key's latest
+version from that table, and ``to_pandas`` converts it directly — a
+micro range read and its pandas frame run no Spark job.  A larger read
+is Catalyst's: the range predicate on the partition-derived columns
+prunes directories, the ts-range predicate pushes into parquet
+row-group stats, union across files is the native multi-file scan, the
+sort is a Spark sort, and ``to_pandas`` is ``toPandas``.
 
 API behavior preserved exactly:
 - bounds are interpreted per mode (ISO date strings for interday,
@@ -31,10 +33,12 @@ import datetime as _dt
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from stock_ops_spark.schemas import TS_COL
+from stock_ops_spark.localrel import arrow_relation, arrow_table
+from stock_ops_spark.operators.versioning import latest_version_view
+from stock_ops_spark.schemas import INDEX_COLS, TS_COL
 from stock_ops_spark.sources.commitlog import ManifestStore
+from stock_ops_spark.sources.ingest import latest_version_arrow
 
 
 class EmptyReadError(RuntimeError):
@@ -51,14 +55,15 @@ def _local_wall_to_epoch(s: str, tz: str) -> int:
 class ReadProcess:
     """Mirror of the reference ReadProcess over the store.
 
-    The range read goes through the store's commit-level data skipping
-    (``ManifestStore.read_where``), so batch dirs provably outside the
-    (ticker, ts) bounds are never listed at all; the full predicate is
-    still applied below, so the prune is an optimization, never a
-    semantics change.  ``read_where`` returns its rows in time order on
-    both of its paths, so only ``latest_only``'s window needs a sort
-    again; on its driver path (a local relation) the predicate folds
-    into the rows and the emptiness check runs no job."""
+    The range read is the store's ``read_where``: commit-level data
+    skipping drops batch dirs provably outside the (ticker, ts) bounds
+    before anything is listed, and the whole predicate — ticker,
+    interval, time bounds — is applied to the rest, which come back in
+    time order.  On its driver path (a local relation that keeps its
+    Arrow table) the emptiness check, ``latest_only``'s pick and
+    ``to_pandas`` all run on that table, with no Spark job; on its
+    Spark path they are an ``isEmpty`` job, a window plus a sort, and
+    ``toPandas``."""
 
     def __init__(self, store: ManifestStore):
         self.store = store
@@ -73,9 +78,7 @@ class ReadProcess:
         interval: str | None = None,
         latest_only: bool = False,
     ) -> DataFrame:
-        ts_col = TS_COL[mode]
         if mode == "historical_interday":
-            lo, hi = F.lit(start).cast("date"), F.lit(end).cast("date")
             lo_v, hi_v = start, end  # ISO strings order like the dates
             for s in (start, end):  # a malformed bound raises ValueError
                 _dt.datetime.strptime(s, "%Y-%m-%d")
@@ -84,24 +87,21 @@ class ReadProcess:
             hi_s = _local_wall_to_epoch(end, self.tz)
             mult = 1000 if mode == "streaming" else 1
             lo_v, hi_v = lo_s * mult, hi_s * mult
-            lo, hi = F.lit(lo_v), F.lit(hi_v)
 
-        df = self.store.read_where(mode, ticker=ticker, ts_min=lo_v, ts_max=hi_v)
-        if df is None:
+        out = self.store.read_where(
+            mode, ticker=ticker, ts_min=lo_v, ts_max=hi_v, interval=interval
+        )
+        if out is None:
             raise EmptyReadError(f"no data ingested for mode={mode}")
-
-        pred = (F.col(ts_col) >= lo) & (F.col(ts_col) <= hi)
-        pred &= F.col("ticker") == ticker
-        if interval is not None:
-            pred &= F.col("interval") == interval
-
-        out = df.where(pred)
+        tbl = arrow_table(out)
         if latest_only:
-            from stock_ops_spark.operators.versioning import latest_version_view
-            from stock_ops_spark.schemas import INDEX_COLS
-
-            out = latest_version_view(out, INDEX_COLS[mode]).orderBy(ts_col)
-        if out.limit(1).isEmpty():
+            tbl = None if tbl is None else latest_version_arrow(tbl, INDEX_COLS[mode])
+            if tbl is not None:
+                out = arrow_relation(self.store.spark, tbl)
+            else:
+                out = latest_version_view(out, INDEX_COLS[mode]).orderBy(TS_COL[mode])
+        empty = out.limit(1).isEmpty() if tbl is None else not tbl.num_rows
+        if empty:
             raise EmptyReadError(
                 f"no rows for {ticker} {mode} in [{start}, {end}] interval={interval}"
             )
@@ -109,11 +109,14 @@ class ReadProcess:
 
     def to_pandas(self, df: DataFrame, mode: str):
         """S7 pandas materialization: epoch → tz-aware datetime index,
-        sorted (reference get_df, reader.py:72-91)."""
+        sorted (reference get_df, reader.py:72-91).  A frame
+        ``read_dt_range`` built on the driver converts its Arrow table;
+        any other frame is ``toPandas``."""
         import pandas as pd
 
         ts_col = TS_COL[mode]
-        pdf = df.toPandas()
+        tbl = arrow_table(df)
+        pdf = df.toPandas() if tbl is None else tbl.to_pandas()
         if mode == "historical_interday":
             idx = pd.to_datetime(pdf[ts_col]).dt.tz_localize(self.tz)
         elif mode == "historical_intraday":

@@ -6,8 +6,9 @@ Contract under test: the driver path returns what the Spark path
 returns — the same frame from ``read_dt_range`` + ``to_pandas``
 (column order, dtypes, index, bitwise values, ``EmptyReadError``), the
 same change feed and the same stats rows — at a fixed, small number of
-Spark jobs.  The Spark path is forced by making ``_read_dirs_arrow``
-decline, as an over-bound read does.
+Spark jobs: none for a micro range read and its pandas frame.  The
+Spark path is forced by making ``_read_dirs_arrow`` decline, as an
+over-bound read does.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from stock_ops_spark import schemas as S
+from stock_ops_spark.localrel import arrow_table
 from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.ingest import versioned_delta_arrow
 from stock_ops_spark.sources.reader import EmptyReadError, ReadProcess
@@ -195,22 +197,65 @@ def test_driver_read_covers_an_added_column(stores):
     pd.testing.assert_frame_equal(_bits(got), _bits(want), check_exact=True)
 
 
-def test_micro_read_runs_one_job(spark, tmp_path, spark_jobs):
-    """On a micro store ``read_dt_range`` runs no Spark job (the read, the
-    filter and the emptiness check are on the driver) and ``to_pandas``
-    runs one."""
+def test_micro_read_runs_no_job(spark, tmp_path, stores, spark_jobs):
+    """On a micro store ``read_dt_range`` and ``to_pandas`` run no Spark
+    job: the read, its interval filter, ``latest_only``'s pick and the
+    emptiness check run on the driver's Arrow table, and ``to_pandas``
+    converts that table."""
     store = ManifestStore(spark, str(tmp_path / "s"))
     for k in range(3):
         rows = [("SPY", 1755612971834 + 86400_000 * k + i, 600.0 + i, 1,
                  None, None, None, None) for i in range(20)]
         store.ingest_batch(spark.createDataFrame(rows, S.STREAMING), "streaming")
-    rp = ReadProcess(store)
-    df, n_read = spark_jobs(lambda: rp.read_dt_range(
-        "streaming", "SPY", "2025-08-19 00:00", "2025-08-20 23:59"
-    ))
-    pdf, n_pandas = spark_jobs(lambda: rp.to_pandas(df, "streaming"))
+    bars = ("historical_intraday", "SPY", EDGES[0], EDGES[-1])
+
+    def read(st, args, **kw):
+        rp = ReadProcess(st)
+        df, n_read = spark_jobs(lambda: rp.read_dt_range(*args, **kw))
+        pdf, n_pandas = spark_jobs(lambda: rp.to_pandas(df, args[0]))
+        assert (n_read, n_pandas) == (0, 0), kw
+        return pdf
+
+    pdf = read(store, ("streaming", "SPY", "2025-08-19 00:00", "2025-08-20 23:59"))
     assert len(pdf) == 40
-    assert (n_read, n_pandas) == (0, 1)
+    pdf = read(stores["historical_intraday"], bars, interval="1h")
+    assert len(pdf) and set(pdf["interval"]) == {"1h"}
+    pdf = read(stores["historical_intraday"], bars, latest_only=True)
+    assert len(pdf) and not pdf.duplicated(["timestamp_UTC_s", "interval"]).any()
+
+
+def test_derived_frame_converts_through_spark(stores, spark_jobs):
+    """Only the frame the driver read built keeps its Arrow table: a
+    frame derived from it converts through ``toPandas`` (a Spark job)
+    and gives the same pandas frame as the direct conversion."""
+    mode = "historical_intraday"
+    rp = ReadProcess(stores[mode])
+    df = rp.read_dt_range(mode, "SPY", EDGES[0], EDGES[-1], interval="1d")
+    derived = df.select("*")
+    assert arrow_table(df) is not None and arrow_table(derived) is None
+    want, direct_jobs = spark_jobs(lambda: rp.to_pandas(df, mode))
+    got, derived_jobs = spark_jobs(lambda: rp.to_pandas(derived, mode))
+    assert direct_jobs == 0 and derived_jobs >= 1
+    assert list(got.dtypes) == list(want.dtypes)
+    pd.testing.assert_frame_equal(_bits(got), _bits(want), check_exact=True)
+
+
+def test_read_where_filters_interval_on_both_paths(stores):
+    """``read_where(interval=)`` keeps only that interval's rows, on the
+    Spark path as on the driver path."""
+    store = stores["historical_intraday"]
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    got = store.read_where("historical_intraday", ticker="VOO", interval="1h")
+    with _spark_path():
+        want = store.read_where("historical_intraday", ticker="VOO", interval="1h")
+    assert got.isLocal() and not want.isLocal()
+    assert {r.interval for r in want.collect()} == {"1h"}
+    assert rows(got) == rows(want)
+    everything = store.read_where("historical_intraday", ticker="VOO")
+    assert 0 < want.count() < everything.count()
 
 
 def _day_store(spark, tmp_path, n=20):

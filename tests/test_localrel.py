@@ -28,3 +28,16 @@ def test_wrong_length_rows_raise_like_create_dataframe(spark, rows):
         spark.createDataFrame(rows, SCHEMA).collect()
     with pytest.raises(type(classic.value)):
         local_relation(spark, rows, SCHEMA).collect()
+
+
+def test_arrow_relation_remembers_its_table_for_that_frame_only(spark):
+    import pyarrow as pa
+
+    from stock_ops_spark.localrel import arrow_relation, arrow_table
+
+    tbl = pa.table({"ticker": ["AAPL", None], "n": pa.array([1, 2], pa.int64())})
+    df = arrow_relation(spark, tbl)
+    assert df.isLocal() and all(f.nullable for f in df.schema)
+    assert arrow_table(df).equals(tbl)
+    assert arrow_table(df.select("n")) is None
+    assert arrow_table(local_relation(spark, [("AAPL", 1)], SCHEMA)) is not None

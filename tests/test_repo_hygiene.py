@@ -1,8 +1,9 @@
 """Spark-free pins on how the repository's own scripts and harnesses
 reach the code: every ``sys.path`` insert resolves the checkout the file
 lives in, every engine attribute the perfbench tracer wraps exists, the
-change feed stays the only way to learn of a store commit, and each
-batch stays one commit.
+change feed stays the only way to learn of a store commit, each batch
+stays one commit, and the store builds its local relations through
+``localrel``.
 """
 
 from __future__ import annotations
@@ -176,3 +177,18 @@ def test_no_group_commit():
         if hits:
             offenders.append((os.path.relpath(path, REPO), sorted(hits)))
     assert not offenders, offenders
+
+
+def test_store_builds_local_relations_through_localrel():
+    """The store's driver-side frames — reads, change feeds, stats views,
+    commit deltas — enter Spark through ``localrel.arrow_relation``, the
+    one builder of a local relation from an Arrow table, so none calls
+    ``createDataFrame`` itself."""
+    path = os.path.join(REPO, "stock_ops_spark", "sources", "commitlog.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    hits = [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+    assert not hits, hits

@@ -140,3 +140,25 @@ def test_latest_version_view_as_of_snapshot(spark):
 
     birth = {r["k"]: r["payload"] for r in latest_version_view(df, ["k"], as_of=0).collect()}
     assert birth == {"k1": "a", "k2": "x"}
+
+
+def test_latest_version_arrow_matches_window(spark):
+    """The driver pick equals the window: NULL keys are one key, as the
+    window partitions them, and the rows keep the table's order; a NULL
+    version declines to the Spark path."""
+    import pyarrow as pa
+
+    from stock_ops_spark.sources.ingest import latest_version_arrow
+
+    tbl = pa.table({
+        "k": ["a", "a", None, "b", None, "a"],
+        "iv": ["1h", "1h", "1d", None, "1d", "1d"],
+        "version": pa.array([1, 3, 2, 1, 5, 2], pa.int32()),
+        "row": [0, 1, 2, 3, 4, 5],
+    })
+    want = latest_version_view(spark.createDataFrame(tbl), ["k", "iv"])
+    got = latest_version_arrow(tbl, ["k", "iv"])
+    assert got["row"].to_pylist() == [1, 3, 4, 5]
+    assert sorted(r.row for r in want.collect()) == got["row"].to_pylist()
+    nulls = tbl.set_column(2, "version", pa.array([1, None, 2, 1, 5, 2], pa.int32()))
+    assert latest_version_arrow(nulls, ["k", "iv"]) is None
