@@ -23,6 +23,10 @@ The frame ``arrow_relation`` returns remembers its table
 — ``ReadProcess.to_pandas`` — converts them with no Spark job.  Only
 that exact frame does: anything derived from it (a ``select``, a
 ``where``, an operator's output) is a new plan and reads through Spark.
+Every frame built here keeps its table alive for as long as the frame
+lives, whether or not anything reads it back: a driver read, change
+feed, stats view or commit delta holds at most ``MICRO_COMMIT_ROWS``
+rows, and a ``local_relation`` frame holds the rows its caller passed.
 
 Timestamp fields decline to the classic path: a naive ``datetime`` means
 "driver-local wall clock" there, and replicating that conversion through
@@ -46,7 +50,8 @@ def arrow_relation(spark: SparkSession, tbl: pa.Table, schema=None) -> DataFrame
 
     With no ``schema`` every column is nullable, as in Spark's parquet
     reads; a ``schema`` (StructType) is Spark's ``createDataFrame``
-    schema.  The returned frame remembers ``tbl`` for ``arrow_table``."""
+    schema.  The returned frame remembers ``tbl`` for ``arrow_table``,
+    which keeps ``tbl`` in driver memory until the frame is collected."""
     if schema is None:
         tbl = tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema]))
     df = spark.createDataFrame(tbl, schema)

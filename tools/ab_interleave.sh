@@ -13,12 +13,13 @@
 #       Pair i runs both sides with seed i; the base runs first in odd
 #       pairs and HEAD first in even ones.  Each run appends one JSON
 #       line to <out.jsonl>: workload, side, pair, seed, first, rc, the
-#       run's env line (load_avg_1m, cpu_mark_ms, ...) and its result.
+#       run's env line (load_avg_1m, cpu_mark_ms, ...) and its result;
+#       its stderr goes to <out>_base.log or <out>_head.log.  Every run
+#       lasts BENCHMARK.json's run_seconds.
 #       Report: python tools/ab_report.py --perfbench OUT.jsonl
 #
 # AB_BASE is the base checkout (default /tmp/r12_base); HEAD is the
-# checkout this script lives in.  AB_SECONDS is perfbench's --seconds
-# (default 25, BENCHMARK.json's run_seconds).
+# checkout this script lives in.
 set -u
 HERE=$(cd "$(dirname "$0")/.." && pwd)
 BASE=${AB_BASE:-/tmp/r12_base}
@@ -28,12 +29,14 @@ if [ "${1:-}" = "--perfbench" ]; then
   PAIRS=$1; shift
   OUT=$1; shift
   WORKLOADS=${*:-live_stream query_mix}
-  SECONDS_=${AB_SECONDS:-25}
+  SECONDS_=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+    "$HERE/BENCHMARK.json")
   run_side() {  # side dir workload pair first
     local log rc
     log=$(mktemp)
+    echo "== $3 pair $4 $1 ==" >> "${OUT%.jsonl}_$1.log"
     (cd "$2" && python3 perfbench/run.py --workload "$3" --seed "$4" \
-       --seconds "$SECONDS_" --trace 0 2>/dev/null > "$log")
+       --seconds "$SECONDS_" --trace 0 2>> "${OUT%.jsonl}_$1.log" > "$log")
     rc=$?
     python3 "$HERE/tools/ab_report.py" --record "$3" "$1" "$4" "$4" "$5" "$rc" \
       < "$log" >> "$OUT"

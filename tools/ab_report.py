@@ -22,8 +22,6 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-#: older records name the sides parent/change
-SIDES = {"parent": "base", "change": "head"}
 
 
 def load(path: str) -> list[dict]:
@@ -92,8 +90,6 @@ def perfbench_report(path: str) -> None:
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
     runs = load(path)
-    for r in runs:
-        r["side"] = SIDES.get(r["side"], r["side"])
     for w in sorted({r["workload"] for r in runs}):
         by = {(r["pair"], r["side"]): r for r in runs if r["workload"] == w}
         pairs = sorted(p for p, s in by if s == "base" and (p, "head") in by)
