@@ -91,8 +91,16 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
         try:
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            data = rows if by_name else [dict(zip(names, r)) for r in rows]
-            tbl = pa.Table.from_pylist(data, schema=to_arrow_schema(struct))
+            arrow_schema = to_arrow_schema(struct)
+            if by_name:
+                tbl = pa.Table.from_pylist(rows, schema=arrow_schema)
+            else:
+                # positional rows: transposed, then built column-wise
+                cols = list(zip(*rows)) or [()] * len(names)
+                tbl = pa.Table.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                    schema=arrow_schema,
+                )
             return arrow_relation(spark, tbl, struct)
         except Exception:
             pass

@@ -4,12 +4,14 @@ The reference maintains ``__table_stats__`` (row_count, min/max ts, min/max
 date) and ``__interval_stats__`` (the same, grouped by interval) per DB
 file, merged O(1) per batch (``sql_db.py:540-669``).  Parquet footers
 already carry per-file min/max, but the engine still exposes the same
-*catalog view*, merged per ingested batch from the batch alone — never a
-rescan of the store.  The store publishes each batch's stats increment in
-the same manifest commit as its data (``sources/commitlog.py``); this
-module holds the Spark aggregate (``batch_stats``) and the one fold
-(``fold_stats``, on the driver).  A materialized view's grouped
-partials (``plans/matview.py``) generalize the same fold.
+*catalog view*, from each batch alone — never a rescan of the store.
+Every batch dir the store writes records its per-key stats rows in its
+own commit meta, and the store's stats views fold the live dirs' rows
+(``sources/commitlog.py``), so a removed dir's stats leave with it.
+This module holds the Spark aggregate (``batch_stats``, the reference
+the tests compare the views against) and the one fold (``fold_stats``,
+on the driver).  A materialized view's grouped partials
+(``plans/matview.py``) generalize the same fold.
 """
 
 from __future__ import annotations

@@ -1,24 +1,27 @@
 """The store: partitioned parquet under a manifest commit log.
 
 ``ManifestStore`` is the engine's one store.  Every write — ingest,
-merge, delete, retain, compaction — touches two things, the data files
+merge, delete, retain, compaction — changes two things, the data files
 and the stats catalog, and a plain append of each would leave a window
 where a kill lands between them.  The reference closes that window with
 SQLite's journal; this module closes it the way Delta Lake / Iceberg
 do, reduced to what plain files can guarantee:
 
-- every ingest writes its data to a FRESH batch directory
+- every write puts its data in a FRESH batch directory
   (``batch-<uuid>/``, invisible to readers — nothing lists it);
-- the batch's stats INCREMENT parquet is written next, also invisible
-  (r8: version-independent per-batch deltas; readers fold the last
-  cumulative snapshot + the outstanding chain, and the chain is
-  bounded by periodic folds and by mutation snapshots);
 - then ONE atomic, put-if-absent commit file
-  (``__log/<version>.json``) publishes {batch dirs, stats dirs}
-  together.  ``os.link`` from a tmp name gives compare-and-swap on
-  POSIX (rename would silently overwrite a racing writer's commit).
+  (``__log/<version>.json``) publishes the batch dirs together with
+  each dir's ``meta``: its data-skipping bounds, its row count and its
+  per-key stats rows (``_meta_of``).  ``os.link`` from a tmp name gives
+  compare-and-swap on POSIX (rename would silently overwrite a racing
+  writer's commit).
 
-A SIGKILL anywhere leaves either no commit (data + stats dirs are
+The stats catalog is a driver fold of the live dirs' recorded stats
+(``table_stats``, ``interval_stats``), the way Delta Lake keeps per-file
+stats in its log's add actions: a removed dir's stats leave with it, so
+no commit rewrites or recomputes stats, and no stats file exists.
+
+A SIGKILL anywhere leaves either no commit (the data dirs are
 unreferenced orphans, swept by ``gc_orphans``; the streaming replay
 re-ingests the batch) or a complete commit.  There is no torn state
 and no stats lag, so there is no stats-rebuild job to run.
@@ -35,15 +38,14 @@ the old dirs stay until GC, so in-flight readers finish correctly.
 
 Every write (ingest, merge, delete, retain, compact, restore, convert)
 runs one protocol, ``ManifestStore._commit``: an ATTEMPT folds the log
-once and works from that state alone (its prior stats included); it
-writes its batch, stats and CDC dirs invisibly, recording each in the
-state; the loop PUBLISHES the returned payload at
-``state["version"] + 1``.  A LOST race either REBASES — ingest's hook
-proves its written output still valid at the new head, and the same
-payload publishes there — or deletes the recorded dirs, backs off and
-re-runs the attempt against the fresh state.  ``ManifestLog.checkpoint``
-is the one history truncation — shared with the deployment log in
-``scheduling.py``.
+once and works from that state alone; it writes its batch and CDC dirs
+invisibly, recording each in the state; the loop PUBLISHES the returned
+payload at ``state["version"] + 1``.  A LOST race either REBASES —
+ingest's hook proves its written output still valid at the new head,
+and the same payload publishes there — or deletes the recorded dirs,
+backs off and re-runs the attempt against the fresh state.
+``ManifestLog.checkpoint`` is the one history truncation — shared with
+the deployment log in ``scheduling.py``.
 
 Reference parity: the reference's SQLite writer gets all of this from
 SQLite's own journal (src/stockops/data/database/sql_db.py — one
@@ -68,7 +70,7 @@ from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.localrel import arrow_relation
-from stock_ops_spark.operators.stats import batch_stats, fold_stats
+from stock_ops_spark.operators.stats import fold_stats
 from stock_ops_spark.operators.versioning import latest_version_view
 from stock_ops_spark.sources.microcommit import (
     Delta,
@@ -109,10 +111,14 @@ def _span(lo, hi) -> list:
 
 
 def _meta_of(stats, tsc: str) -> dict:
-    """Per-dir data-skipping bounds from a grouped-stats table (keyed by
-    ticker, with ``rc``/``lo``/``hi``): [min, max] of ticker and of the
-    mode's time column, NULLs ignored, plus the dir's row count — the
-    same shape as ``ManifestStore._dir_meta``."""
+    """A dir's commit meta from its grouped-stats table (keyed by ticker
+    and, at the stats grain outside streaming, interval, with
+    ``rc``/``lo``/``hi``): the data-skipping bounds — [min, max] of
+    ticker and of the mode's time column, NULLs ignored — the dir's row
+    count ``n``, and ``stats``, the per-key rows themselves as JSON
+    columns (``lo``/``hi`` through ``_j``) that ``table_stats`` and
+    ``interval_stats`` fold."""
+    keys = [k for k in ("ticker", "interval") if k in stats.column_names]
     return {
         "ticker": _span(stats["ticker"], stats["ticker"]),
         tsc: _span(stats["lo"], stats["hi"]),
@@ -120,7 +126,36 @@ def _meta_of(stats, tsc: str) -> dict:
         # a DRIVER-SIDE fold of the manifest — the auto-compaction
         # cadence reads it without a Spark job
         "n": pc.sum(stats["rc"]).as_py() or 0,
+        "stats": {
+            **{k: stats[k].to_pylist() for k in keys},
+            "rc": stats["rc"].to_pylist(),
+            "lo": [_j(v) for v in stats["lo"].to_pylist()],
+            "hi": [_j(v) for v in stats["hi"].to_pylist()],
+        },
     }
+
+
+def _key_rect(stats, tsc: str) -> dict | None:
+    """``_meta_of`` a grouped-stats table (with ``nts``) whose rows all
+    have a ticker and a time, else None — also for no rows.  Rectangle
+    pruning is sound only then: a NULL key falls outside any recorded
+    bounds."""
+    n = pc.sum(stats["rc"]).as_py()
+    if not n or pc.sum(stats["nts"]).as_py() != n or stats["ticker"].null_count:
+        return None
+    return _meta_of(stats, tsc)
+
+
+def _dirs_touching(state: dict, tsc: str, rect: dict | None) -> list[str]:
+    """The live dirs of ``state`` whose recorded (ticker, ts) rectangle
+    may hold a key of ``rect`` (``_key_rect``; None: every live dir).  A
+    key present in a dir lies in both rectangles, so a dir disjoint from
+    ``rect`` holds none."""
+    return [
+        d for d in state["dirs"]
+        if rect is None
+        or _may_touch(state["meta"].get(d), tsc, rect["ticker"], rect[tsc])
+    ]
 
 
 def _disjoint(a, b) -> bool:
@@ -304,19 +339,14 @@ class ManifestLog:
         raise last_err
 
     def state(self, at_version: int | None = None) -> dict:
-        """Fold commits → {'version', 'dirs', 'stats', 'meta'} where
-        'dirs' is the live batch-dir list, 'stats' the LATEST commit's
-        stats pointer (stats are cumulative snapshots, not deltas) and
-        'meta' the per-dir data-skipping bounds ({dir: {col: [lo, hi]}};
-        dirs written before the skipping feature simply have no entry
-        and are never pruned)."""
+        """Fold commits → {'version', 'dirs', 'meta'} where 'dirs' is
+        the live dir list and 'meta' each live dir's recorded meta
+        ({dir: {...}}: for a store's batch dir, ``_meta_of``)."""
         commits = self.commits(upto=at_version)
         dirs: list[str] = []
         seen: set[str] = set()  # membership twin of `dirs` (keeps the
         # fold linear; dirs alone would make every add/remove an O(n)
         # list scan — measured 2x on a 4k-dir checkpoint)
-        stats = None
-        stats_incs: list[dict] = []
         meta: dict[str, dict] = {}
         for c in commits:
             removes = c.get("removes", [])
@@ -336,22 +366,8 @@ class ManifestLog:
                     dirs.append(a)
                     seen.add(a)
             meta.update(c.get("meta") or {})
-            # Stats pointers, two shapes (r8):
-            # - "stats": a CUMULATIVE snapshot — resets the increment
-            #   chain (a mutation/fold materialized everything so far);
-            #   carried-forward snapshots (compact/restore/checkpoint)
-            #   also carry "stats_incs", the outstanding chain verbatim.
-            # - "stats_inc": an ingest's batch-only INCREMENT — appends
-            #   to the chain; readers fold snapshot + chain
-            #   (sum/min/max per key is associative).
-            if "stats" in c or "stats_incs" in c:
-                stats = c.get("stats")
-                stats_incs = list(c.get("stats_incs") or [])
-            if c.get("stats_inc"):
-                stats_incs.append(c["stats_inc"])
         version = commits[-1]["version"] if commits else 0
-        return {"version": version, "dirs": dirs, "stats": stats,
-                "stats_incs": stats_incs, "meta": meta}
+        return {"version": version, "dirs": dirs, "meta": meta}
 
     def _put(self, version: int, doc: dict, publish) -> None:
         """Write ``doc`` as commit ``version``: durably to a tmp name
@@ -428,7 +444,7 @@ class ManifestStore:
 
         <root>/<provider>/<exchange>/<mode>/batch-<uuid>/<hive parts>/
         <root>/<provider>/<exchange>/<mode>__log/NNNNNNNN.json
-        <root>/<provider>/<exchange>/<mode>__log/stats-NNNNNNNN-<uuid>/
+        <root>/<provider>/<exchange>/<mode>__log/cdc-NNNNNNNN-<uuid>/
 
     Reads fold the manifest: each live batch dir is read with its own
     basePath (Spark refuses partition discovery across non-Hive
@@ -555,7 +571,7 @@ class ManifestStore:
         ``_query_range``, ``AND interval = ?`` included.
 
         COMMIT-LEVEL data skipping: batch dirs whose recorded [min, max]
-        bounds (``_dir_meta``, kept in the commit payload and folded by
+        bounds (``_meta_of``, kept in the commit payload and folded by
         ``state()``) provably miss the predicate are never handed to
         Spark at all — no file listing, no footer read, no plan
         relation.  Parquet's own footer stats prune row groups only
@@ -657,126 +673,41 @@ class ManifestStore:
         stat rows grouped by these."""
         return max(self._stats_keys(mode).values(), key=len)
 
-    def _stats_table(self, mode: str, which: str, state: dict, extra=None):
-        """Arrow stats view of ``state``: the last cumulative snapshot
-        FOLDED with every ingest increment committed since (r8), and
-        with ``extra`` (rows in the same schema), or None when there is
-        nothing.  Stats tables hold one row per key, so they are read
-        with ``pyarrow.parquet`` and folded on the driver by
-        ``fold_stats`` — sum/min/max per key is associative — and no
-        Spark job runs.  The chain is bounded: ingest materializes a
-        fresh snapshot every ``STATS_FOLD_EVERY`` increments and every
-        mutation/compaction materializes too."""
-        import pyarrow.parquet as pq
-
-        cum, incs = state["stats"], state["stats_incs"]
-        log_dir = self.log(mode).log_dir
-        paths = []
-        if cum and which in cum:
-            paths.append(os.path.join(log_dir, cum[which]))
-        paths.extend(
-            os.path.join(log_dir, i[which]) for i in incs if which in i
-        )
-        tbls = [pq.read_table(p) for p in paths]
-        if extra is not None:
-            tbls.append(extra)
-        if not tbls:
-            return None
-        return fold_stats(
-            pa.concat_tables(tbls, promote_options="permissive"),
-            self._STATS_KEYS[which],
-            sums=("row_count",), mins=("min_ts",), maxs=("max_ts",),
-        )
+    def _dir_stats(self, mode: str, dirs: list[str], metas: dict):
+        """The per-key stat rows the commit meta ``metas`` records for
+        ``dirs``, as one Arrow table at the stats grain (``rc``, ``lo``
+        and ``hi`` typed as the catalog keeps them)."""
+        ts = pa.string() if mode == "historical_interday" else pa.int64()
+        types = {k: pa.string() for k in self._stats_grain(mode)}
+        types.update(rc=pa.int64(), lo=ts, hi=ts)
+        recs = [metas[d]["stats"] for d in dirs]
+        return pa.table({
+            c: pa.array([v for r in recs for v in r[c]], t)
+            for c, t in types.items()
+        })
 
     def _read_stats(
-        self, mode: str, which: str, at_version: int | None = None,
-        state: dict | None = None,
-    ):
-        """``_stats_table`` of ``state`` (default: the fold at
-        ``at_version``) as one local relation."""
-        if state is None:
-            state = self.log(mode).state(at_version)
-        tbl = self._stats_table(mode, which, state)
-        return None if tbl is None else arrow_relation(self.spark, tbl)
+        self, mode: str, which: str, at_version: int | None = None
+    ) -> DataFrame | None:
+        """The ``which`` stats view at ``at_version`` (default: the head)
+        as one local relation in ``batch_stats``'s schema: the live
+        dirs' recorded stats folded on the driver by ``fold_stats`` —
+        sum/min/max per key is associative — so no file is read and no
+        Spark job runs.  None before the first commit and for a table
+        ``mode`` does not keep; empty once no row is live."""
+        state = self.log(mode).state(at_version)
+        if not state["version"] or which not in self._stats_keys(mode):
+            return None
+        keys = self._STATS_KEYS[which]
+        rows = self._dir_stats(mode, state["dirs"], state["meta"])
+        tbl = fold_stats(rows, keys)
+        return arrow_relation(self.spark, as_catalog_stats(tbl, keys, mode))
 
     def table_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "table")
 
     def interval_stats(self, mode: str) -> DataFrame | None:
         return self._read_stats(mode, "interval")
-
-    def _write_stats(
-        self, mode: str, state: dict, stats_of, inc: bool = False
-    ) -> dict:
-        """Write one stats dir under the log — invisible until a commit
-        points at it, and recorded in the attempt's ``state`` for cleanup
-        — and return its pointer {which: rel path}.  ``stats_of(which,
-        keys)`` gives each table as Arrow in ``batch_stats``'s exact
-        schema, or None to leave it out; ``pyarrow.parquet`` writes it
-        on the driver.  A CUMULATIVE snapshot lands in
-        ``stats-<version>-*``, one ingest's version-independent
-        INCREMENT (``inc``) in ``stats-inc-*``; ``_stats_table`` folds
-        both kinds interchangeably."""
-        import pyarrow.parquet as pq
-
-        log_dir = self.log(mode).log_dir
-        stats_dir = (
-            f"stats-inc-{uuid.uuid4().hex[:12]}" if inc
-            else f"stats-{state['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        state["written"].append(os.path.join(log_dir, stats_dir))
-        ptr = {}
-        for which, keys in self._stats_keys(mode).items():
-            tbl = stats_of(which, keys)
-            if tbl is None:
-                continue
-            rel = os.path.join(stats_dir, which)
-            os.makedirs(os.path.join(log_dir, stats_dir), exist_ok=True)
-            pq.write_table(tbl, os.path.join(log_dir, rel))
-            ptr[which] = rel
-        return ptr
-
-    def _stats_plus(self, mode: str, state: dict, rows):
-        """``stats_of`` for a commit that only ADDS rows whose grouped
-        stat rows (``Delta.stat_rows`` at a grain covering every stats
-        key) are ``rows``: the prior view folded with them, on the
-        driver."""
-        return lambda which, keys: self._stats_table(
-            mode, which, state,
-            extra=as_catalog_stats(fold_stats(rows, keys), keys, mode),
-        )
-
-    def _stats_after_removal(
-        self, mode: str, state: dict, affected: DataFrame,
-        removes: list[str], adds: list[str],
-    ) -> dict:
-        """Write the stats snapshot of a commit that REMOVES rows.  Stats
-        cannot be decremented (count/min/max do not subtract), so every
-        stats row keyed by ``affected`` — joined on its columns that are
-        stats keys — is recomputed exactly from the post-commit snapshot,
-        and the rest of the prior view is carried: bounded by the keys
-        the commit touched, never a rescan of untouched tickers.  The
-        recompute runs in Spark; its result reaches ``_write_stats`` as
-        Arrow."""
-        gone = set(removes)
-        post = self._read_dirs(
-            mode, [d for d in state["dirs"] if d not in gone] + adds
-        )
-
-        def stats_of(which, keys):
-            on = [k for k in keys if k in affected.columns]
-            prior = self._read_stats(mode, which, state=state)
-            fresh = None if post is None else batch_stats(
-                post.join(affected, on=on, how="left_semi"),
-                mode,
-                which == "interval",
-            )
-            if prior is not None:
-                kept = prior.join(affected, on=on, how="left_anti")
-                fresh = kept if fresh is None else kept.unionByName(fresh)
-            return None if fresh is None else fresh.toArrow()
-
-        return self._write_stats(mode, state, stats_of)
 
     # -- write -----------------------------------------------------------
     MAX_FAST_RETRIES = 24  # rebases per _commit attempt (no recompute)
@@ -812,7 +743,7 @@ class ManifestStore:
             return False  # vacuumed since the check above
         tsc = S.TS_COL[mode]
         for c in commits:
-            op = c.get("op") or ("compact" if c.get("removes") else "ingest")
+            op = c["op"]
             if op == "compact":
                 continue  # physical rewrite: no logical change
             if op not in ("ingest", "convert"):
@@ -822,10 +753,6 @@ class ManifestStore:
                 if _may_touch(m, tsc, dir_meta["ticker"], dir_meta[tsc]):
                     return False  # no bounds, or a possibly shared key
         return True
-
-    STATS_FOLD_EVERY = 32  # materialize a cumulative stats snapshot
-    # once the increment chain reaches this length — bounds the
-    # _read_stats fold and the carried "stats_incs" lists
 
     def ingest_batch(self, batch: DataFrame, mode: str) -> int:
         """One batch, one commit: the ingest contract
@@ -841,7 +768,7 @@ class ManifestStore:
         ``limit(bound+1).toArrow()`` job on the source).  An empty batch
         returns 0 with no commit.  A batch within ``MICRO_COMMIT_ROWS``
         runs every step on the driver — ``versioned_delta_arrow``, the
-        Arrow dir reader, ``write_micro`` and the stats increment — so
+        Arrow dir reader, ``write_micro`` and the dir's meta — so
         a plain commit costs that one Spark job (measured at
         ``local[2]`` on 500-row streamed commits: ~0.09 s in the store,
         most of it the probe, where planning and checkpointing the
@@ -855,15 +782,15 @@ class ManifestStore:
         batch's are read for the dedup/version re-run (a key shared
         with a dir lies in both rectangles) — on the driver when their
         touched partitions provably fit the bound.  The ATTEMPT writes
-        the batch dir and the batch's stats increment — every
-        ``STATS_FOLD_EVERY`` increments, a cumulative snapshot.
+        the batch dir; the same grouped rows give its commit meta
+        (``_meta_of``: bounds, row count and per-key stats).
 
         The REBASE hook: when every interleaved commit is a key-disjoint
         ingest (``_interleaved_commits_safe``), the written dir, version
-        assignment and stats increment (version-independent, r8) are
+        assignment and meta (which depends on this delta alone) are
         still exact, so the same payload publishes at the new head — a
-        pure filesystem op.  A fold snapshot, an interleaved mutation or
-        a possibly shared key re-runs the attempt.
+        pure filesystem op.  An interleaved mutation or a possibly
+        shared key re-runs the attempt.
 
         Only after the publish may ``_auto_compact`` fold the store.
         Consumers learn of the commit from ``read_changes``, so a
@@ -904,25 +831,14 @@ class ManifestStore:
         delta, grows = (src is not None and on_driver(src)) or in_spark(batch)
         if not delta.n:
             return 0
-        bounds = _meta_of(grows, tsc)
-        # rectangle pruning is only sound when every key is non-NULL
-        # (NULL keys fall outside any recorded bounds)
-        keys_total = (
-            pc.sum(grows["nts"]).as_py() == delta.n
-            and grows["ticker"].null_count == 0
-            and bounds[tsc][0] is not None
-        )
+        rect = _key_rect(grows, tsc)
+        bounds = rect or _meta_of(grows, tsc)
         last: dict = {}  # the latest attempt's payload
 
         def attempt(state):
             last.clear()
             d, g, dir_meta = delta, grows, bounds
-            overlap = [
-                x for x in state["dirs"]
-                if not keys_total or _may_touch(
-                    state["meta"].get(x), tsc, bounds["ticker"], bounds[tsc]
-                )
-            ]
+            overlap = _dirs_touching(state, tsc, rect)
             if overlap:
                 # some live dir may share keys: re-run the dedup/version
                 # pass against just those dirs, from the optimistic delta
@@ -958,25 +874,9 @@ class ManifestStore:
                 d, mode, state,
                 n_parts=len(_touched_parts(g, parts)) if parts else None,
             )
-            # batch-only stats depend ONLY on this delta: a
-            # version-independent INCREMENT straight from the grouped
-            # rows via pyarrow, zero extra Spark jobs (r8).  Every
-            # STATS_FOLD_EVERY increments, a cumulative snapshot instead
-            # (the prior view folded with the same rows, on the driver
-            # too) keeps the fold chain bounded.
-            fold_now = len(state["stats_incs"]) >= self.STATS_FOLD_EVERY
-            stats_ptr = self._write_stats(
-                mode, state,
-                self._stats_plus(mode, state, g) if fold_now
-                else lambda which, keys: as_catalog_stats(
-                    fold_stats(g, keys), keys, mode
-                ),
-                inc=not fold_now,
-            )
             payload = {
                 "adds": [batch_dir],
                 "removes": [],
-                "stats" if fold_now else "stats_inc": stats_ptr,
                 "meta": {batch_dir: dir_meta},
             }
             last["payload"] = payload
@@ -984,7 +884,7 @@ class ManifestStore:
 
         def rebase(state, head):
             p = last["payload"]
-            return "stats_inc" in p and self._interleaved_commits_safe(
+            return self._interleaved_commits_safe(
                 mode, state["version"], head, p["meta"][p["adds"][0]]
             )
 
@@ -1020,12 +920,11 @@ class ManifestStore:
         """Run one commit under optimistic concurrency — the one retry
         loop every write of the store publishes through.
 
-        ``attempt(state)`` gets a fresh fold of the log (its prior stats
-        included — nothing re-folds it) with an empty ``state["written"]``
-        list; every invisible batch, stats and CDC dir it writes is
-        recorded there (``_write_batch_dir``, ``_write_stats``,
-        ``_write_cdc``).  It returns ``(payload, result)``, or
-        ``(None, result)`` when there is nothing to commit.  The loop
+        ``attempt(state)`` gets a fresh fold of the log (nothing re-folds
+        it) with an empty ``state["written"]`` list; every invisible
+        batch and CDC dir it writes is recorded there
+        (``_write_batch_dir``, ``_write_cdc``).  It returns ``(payload,
+        result)``, or ``(None, result)`` when there is nothing to commit.  The loop
         publishes the payload, stamped with ``op`` and ``ts``, at
         ``state["version"] + 1`` and returns ``result``.
 
@@ -1080,15 +979,17 @@ class ManifestStore:
     ) -> str:
         """Write ``delta`` as a fresh batch dir (invisible until the
         manifest commit; recorded in ``state``) and, given ``meta``,
-        record its data-skipping bounds there — from the grouped-stats
-        table, so a micro delta costs no job for them."""
+        record its ``_meta_of`` there — from the delta's grouped stats
+        at the stats grain, so a micro delta costs no job for them."""
         batch_dir = f"batch-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.data_path(mode), batch_dir)
         state["written"].append(path)
         delta.write(path, mode, n_parts=n_parts)
         if meta is not None:
             tsc = S.TS_COL[mode]
-            meta[batch_dir] = _meta_of(delta.stat_rows(["ticker"], tsc), tsc)
+            meta[batch_dir] = _meta_of(
+                delta.stat_rows(self._stats_grain(mode), tsc), tsc
+            )
         return batch_dir
 
     def _write_cdc(self, mode: str, state: dict, cdc: DataFrame) -> str:
@@ -1103,57 +1004,6 @@ class ManifestStore:
         return rel
 
     # -- physical mutation: MERGE / DELETE (file-pruned rewrite) ---------
-    def _dirs_overlapping_keys(
-        self, mode: str, df: DataFrame, state: dict
-    ) -> list[str]:
-        """Live dirs whose recorded (ticker, ts) rectangles can contain
-        any of ``df``'s keys — the merge-probe twin of ingest's
-        optimistic bounds check (r8).  A key present in a dir lies
-        inside that dir's rectangle AND inside ``df``'s, so dirs with a
-        provably-disjoint rectangle cannot hold a matching key and are
-        skipped BEFORE the tagged probe read.  Falls back to every dir
-        when bounds are unavailable (missing columns, NULL keys, empty
-        frame)."""
-        dirs = state["dirs"]
-        tsc = S.TS_COL[mode]
-        if not dirs or "ticker" not in df.columns or tsc not in df.columns:
-            return dirs
-        b = df.agg(
-            F.count(F.lit(1)),
-            F.count("ticker"), F.count(tsc),
-            F.min("ticker"), F.max("ticker"),
-            F.min(tsc), F.max(tsc),
-        ).collect()[0]
-        if not b[0] or b[1] != b[0] or b[2] != b[0]:
-            return dirs  # empty or NULL keys: cannot bound
-        tickers, ts = [_j(b[3]), _j(b[4])], [_j(b[5]), _j(b[6])]
-        return [
-            d for d in dirs
-            if _may_touch(state["meta"].get(d), tsc, tickers, ts)
-        ]
-
-    def _dir_meta(self, df: DataFrame, mode: str) -> dict:
-        """Per-dir data-skipping bounds: [min, max] of ticker and the
-        mode's time column — the commit-level twin of parquet footer
-        stats.  One bounded scalar aggregate — compaction's fallback
-        when an old dir has no recorded bounds (written batch dirs take
-        theirs from ``_meta_of``); values are JSON-coerced (dates → ISO
-        strings, which compare in the same order)."""
-        cols = ["ticker", S.TS_COL[mode]]
-        cols = [c for c in cols if c in df.columns]
-        if not cols:
-            return {}
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c), F.max(c)]
-        aggs.append(F.count(F.lit(1)))
-        row = df.agg(*aggs).collect()[0]
-        meta = {
-            c: [_j(row[2 * i]), _j(row[2 * i + 1])] for i, c in enumerate(cols)
-        }
-        meta["n"] = row[2 * len(cols)]
-        return meta
-
     def merge(self, source: DataFrame, mode: str) -> dict:
         """Delta-style MERGE: matched index keys get their payload
         REPLACED in place (version preserved — a correction, not a new
@@ -1168,10 +1018,9 @@ class ManifestStore:
         insert rows) is written under the log and referenced by the
         commit so ``read_changes`` never has to diff snapshots.
 
-        Pure updates cannot move table/interval stats (index keys —
-        ticker and the timestamp — are immutable under MERGE; only
-        payload columns change), so the stats pointer is carried over
-        and only re-merged when the merge inserts rows.
+        Every dir the commit writes records its own stats in its meta,
+        so the stats view follows the rewrite with nothing carried or
+        recomputed.
 
         Source contract: key columns typed per ``schemas.SCHEMAS[mode]``,
         key-unique (raises otherwise), payload = every non-key column;
@@ -1181,7 +1030,9 @@ class ManifestStore:
         multi-file equivalent with the rewrite pruned to touched files.
         """
         keys = S.INDEX_COLS[mode]
-        src, _n_src, stbl = materialize_micro(source)
+        tsc = S.TS_COL[mode]
+        sdelta = materialize_micro(source)
+        src, _n_src, stbl = sdelta
         if stbl is not None:
             # driver-side key-uniqueness check over the collected rows —
             # same NULL handling as groupBy (NULL keys form groups)
@@ -1193,6 +1044,9 @@ class ManifestStore:
         if dup:
             raise ValueError("merge source must be unique on index keys")
         src_payload = [c for c in src.columns if c not in keys]
+        # the source's (ticker, ts) rectangle from the grouped statistic
+        # ingest's bounds come from: no job for a micro source
+        rect = _key_rect(sdelta.stat_rows(["ticker"], tsc), tsc)
 
         def attempt(state):
             # commit-level probe pruning (r8): only dirs whose recorded
@@ -1201,7 +1055,7 @@ class ManifestStore:
             # a key in a pruned dir would have to lie in two provably
             # disjoint rectangles.  An upsert against a time-ordered
             # store probes O(touched) dirs, not the store.
-            probe_dirs = self._dirs_overlapping_keys(mode, src, state)
+            probe_dirs = _dirs_touching(state, tsc, rect)
             tagged = self._read_dirs(mode, probe_dirs, tag=True)
             src_keys = src.select(*keys).distinct()
             adds: list[str] = []
@@ -1251,28 +1105,15 @@ class ManifestStore:
             ins = materialize_micro(
                 compute_versioned_delta(ins_src, None, mode, self.tz)
             )
-            # pure update: carry the stats snapshot AND the outstanding
-            # increment chain forward verbatim (index keys can't move);
-            # with inserts, materialize a fresh cumulative snapshot
-            # (the _read_stats fold already includes the chain)
-            stats = {"stats": state["stats"], "stats_incs": state["stats_incs"]}
             if ins.n:
                 adds.append(self._write_batch_dir(ins, mode, state, meta))
                 cdc.append(ins.df.withColumn("_change_type", F.lit("insert")))
-                stats = {
-                    "stats": self._write_stats(mode, state, self._stats_plus(
-                        mode, state,
-                        ins.stat_rows(self._stats_grain(mode), S.TS_COL[mode]),
-                    )),
-                    "stats_incs": [],
-                }
             if not adds:
                 return None, {"updated": 0, "inserted": 0, "rewritten_dirs": 0,
                               "version": state["version"]}
             payload = {
                 "adds": adds,
                 "removes": removes,
-                **stats,
                 "meta": meta,
                 "cdc": self._write_cdc(mode, state, _union(cdc)),
             }
@@ -1291,14 +1132,12 @@ class ManifestStore:
         matching row (file-pruned like ``merge``).  NULL predicate rows
         are KEPT (SQL DELETE semantics: only TRUE deletes).
 
-        The affected (ticker[, interval]) stats rows are recomputed
-        exactly from the post-delete snapshot (``_stats_after_removal``).
-        The commit carries a CDC file of the deleted rows
-        (_change_type='delete').
+        The rewritten dir records its own stats, so the stats view
+        drops the deleted rows with nothing recomputed.  The commit
+        carries a CDC file of the deleted rows (_change_type='delete').
         """
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         cond_true = F.coalesce(cond, F.lit(False))
-        finest = max(self._stats_keys(mode).values(), key=len)
 
         def attempt(state):
             tagged = self._read_dirs(mode, state["dirs"], tag=True)
@@ -1320,13 +1159,9 @@ class ManifestStore:
                 [self._write_batch_dir(keep, mode, state, meta)]
                 if keep.n else []
             )
-            affected = doomed.df.select(*finest).distinct()
             payload = {
                 "adds": adds,
                 "removes": touched,
-                "stats": self._stats_after_removal(
-                    mode, state, affected, touched, adds
-                ),
                 "meta": meta,
                 "cdc": self._write_cdc(
                     mode, state,
@@ -1348,8 +1183,8 @@ class ManifestStore:
         data-skipping bounds:
 
         - dirs whose recorded ts upper bound < ``cutoff`` are removed
-          METADATA-ONLY — zero data bytes read (their one-column ticker
-          scan funds the stats recompute, nothing else);
+          METADATA-ONLY — nothing read (their recorded stats leave the
+          stats view with them);
         - dirs straddling the cutoff get a keep-part rewrite (bounded by
           the straddlers, never the store);
         - dirs with no recorded bounds are conservatively treated as
@@ -1383,7 +1218,6 @@ class ManifestStore:
             removes: list[str] = []
             meta: dict[str, dict] = {}
             gone: list[DataFrame] = []  # rows leaving the snapshot
-            affected: list[DataFrame] = []  # tickers whose stats move
             if straddle:
                 sdf = self._read_dirs(mode, straddle)
                 expired = materialize_micro(sdf.where(expired_rows))
@@ -1394,28 +1228,16 @@ class ManifestStore:
                             self._write_batch_dir(keep, mode, state, meta)
                         )
                     removes += straddle
-                    affected.append(expired.df.select("ticker"))
                     gone.append(expired.df)
-            if doomed_dirs:
-                removes += doomed_dirs
-                ddf = self._read_dirs(mode, doomed_dirs)
-                # one-column scan: just the tickers (stats recompute set);
-                # with cdc=True the full rows are read once for the feed
-                affected.append(ddf.select("ticker"))
-                gone.append(ddf)
+            removes += doomed_dirs
             if not removes:
                 return None, {"deleted_dirs": 0, "rewritten_dirs": 0,
                               "version": state["version"]}
-            aff = _union(affected).distinct().localCheckpoint(eager=True)
-            payload = {
-                "adds": adds,
-                "removes": removes,
-                "stats": self._stats_after_removal(
-                    mode, state, aff, removes, adds
-                ),
-                "meta": meta,
-            }
+            payload = {"adds": adds, "removes": removes, "meta": meta}
             if cdc:
+                # the doomed dirs' rows are read only for the feed
+                if doomed_dirs:
+                    gone.append(self._read_dirs(mode, doomed_dirs))
                 payload["cdc"] = self._write_cdc(
                     mode, state,
                     _union(gone).withColumn("_change_type", F.lit("delete")),
@@ -1492,7 +1314,7 @@ class ManifestStore:
         pieces = []
         for c in log.commits(upto=upto, since=from_version + 1):
             v = c["version"]
-            op = c.get("op") or ("compact" if c.get("removes") else "ingest")
+            op = c["op"]
             if op == "compact":
                 continue
             if op == "retain" and not c.get("cdc"):
@@ -1583,50 +1405,30 @@ class ManifestStore:
             # live row count folds driver-side from the per-dir "n" meta
             # (exactly what the auto-compact cadence reads) — lets the
             # rewrite use the one-file-per-partition layout when small
-            metas = [state["meta"].get(d) for d in dirs]
-            live_rows = (
-                sum(m["n"] for m in metas)
-                if all(m and m.get("n") is not None for m in metas)
-                else None
-            )
+            live_rows = sum(state["meta"][d]["n"] for d in dirs)
             # a store that provably fits the micro bound is rewritten on
             # the driver: read, concat, sort, one file per partition
             # value (``write_micro``); a type conflict or a declined
             # write takes the Spark rewrite of the same dirs
             tbl = None
-            if live_rows is not None and live_rows <= MICRO_COMMIT_ROWS:
+            if live_rows <= MICRO_COMMIT_ROWS:
                 tbl = self._read_dirs_arrow(mode, dirs, bound=None)
             delta = Delta(
                 lambda: self._read_dirs(mode, dirs),
                 live_rows if tbl is None else tbl.num_rows, tbl,
             )
             new_dir = self._write_batch_dir(delta, mode, state)
-            # data-skipping bounds for the compacted dir: fold the old
-            # dirs' recorded bounds when every one has them (no extra
-            # scan); otherwise one scalar aggregate over the rewrite
-            if all(metas):
-                new_meta = {
-                    c: _span(
-                        pa.array([m[c][0] for m in metas if c in m]),
-                        pa.array([m[c][1] for m in metas if c in m]),
-                    )
-                    for c in dict.fromkeys(c for m in metas for c in m)
-                    if c != "n"
-                }
-                # a pre-r8 dir without "n" leaves the fold without one
-                # (unknown beats wrong; the cadence treats missing as 0)
-                if live_rows is not None:
-                    new_meta["n"] = live_rows
-            else:
-                new_meta = self._dir_meta(delta.df, mode)
+            # the compacted dir's meta is the fold of the old dirs'
+            # recorded stats: bounds, row count and per-key stats with
+            # no scan (a physical rewrite moves no statistic)
+            grain = self._stats_grain(mode)
+            new_meta = _meta_of(
+                fold_stats(self._dir_stats(mode, dirs, state["meta"]), grain),
+                S.TS_COL[mode],
+            )
             payload = {
                 "adds": [new_dir],
                 "removes": list(dirs),
-                # physical rewrite: stats are untouched — carry the
-                # snapshot AND the outstanding increment chain forward
-                # verbatim
-                "stats": state["stats"],
-                "stats_incs": state["stats_incs"],
                 "meta": {new_dir: new_meta},
             }
             return payload, {"rewritten": len(dirs), "dirs_before": len(dirs)}
@@ -1664,28 +1466,35 @@ class ManifestStore:
                 )
             cur = self._read_dirs(mode, state["dirs"])
             tgt = self._read_dirs(mode, target["dirs"])
-            cols = tgt.columns
-            deleted = cur.select(*cols).exceptAll(tgt.select(*cols))
-            reinserted = tgt.select(*cols).exceptAll(cur.select(*cols))
-            cdc = _union([
-                deleted.withColumn("_change_type", F.lit("delete")),
-                reinserted.withColumn("_change_type", F.lit("insert")),
-            ]).localCheckpoint(eager=True)
-            n_del = cdc.where(F.col("_change_type") == "delete").count()
-            n_ins = cdc.where(F.col("_change_type") == "insert").count()
+            base = cur if tgt is None else tgt
+            cols = [] if base is None else base.columns
+
+            def changes(a, b, kind):
+                """Rows of ``a`` missing from ``b`` as ``kind`` changes;
+                None for a snapshot with no live dir (every row deleted)."""
+                if a is None:
+                    return None
+                rows = a.select(*cols)
+                if b is not None:
+                    rows = rows.exceptAll(b.select(*cols))
+                return rows.withColumn("_change_type", F.lit(kind))
+
             live, back = set(state["dirs"]), set(target["dirs"])
             payload = {
                 "adds": [d for d in target["dirs"] if d not in live],
                 "removes": [d for d in state["dirs"] if d not in back],
-                "stats": target["stats"],
-                "stats_incs": target["stats_incs"],
-                "meta": {
-                    d: target["meta"][d]
-                    for d in target["dirs"]
-                    if d in target["meta"]
-                },
-                "cdc": self._write_cdc(mode, state, cdc),
+                "meta": {d: target["meta"][d] for d in target["dirs"]},
             }
+            n_del = n_ins = 0
+            cdc = _union([
+                c for c in (changes(cur, tgt, "delete"), changes(tgt, cur, "insert"))
+                if c is not None
+            ])
+            if cdc is not None:
+                cdc = cdc.localCheckpoint(eager=True)
+                n_del = cdc.where(F.col("_change_type") == "delete").count()
+                n_ins = cdc.where(F.col("_change_type") == "insert").count()
+                payload["cdc"] = self._write_cdc(mode, state, cdc)
             return payload, {
                 "restored_to": to_version,
                 "version": state["version"] + 1,
@@ -1702,15 +1511,15 @@ class ManifestStore:
         log without re-ingesting (Delta's CONVERT TO DELTA).  The tree is
         read with ``mergeSchema`` (files written before a column existed
         surface it as NULL), then one bandwidth-bound rewrite of it lands
-        in a fresh batch dir, the running stats are computed from the
-        adopted rows, and both publish in one atomic commit with
-        data-skipping bounds.  The source tree is untouched; subsequent
-        ``ingest_batch`` calls dedup/version against the adopted history
-        exactly as if it had been ingested here, so the rows should carry
-        the store's columns (``version`` and the mode's partition
-        columns included).  Refuses a non-empty target (the adopted
-        snapshot must BE version 1, or time travel would lie) — also
-        when a racing writer commits first."""
+        in a fresh batch dir and publishes in one atomic commit with its
+        meta (data-skipping bounds and stats of the adopted rows).  The
+        source tree is untouched; subsequent ``ingest_batch`` calls
+        dedup/version against the adopted history exactly as if it had
+        been ingested here, so the rows should carry the store's columns
+        (``version`` and the mode's partition columns included).
+        Refuses a non-empty target (the adopted snapshot must BE version
+        1, or time travel would lie) — also when a racing writer commits
+        first."""
 
         def refuse(v):
             return ValueError(
@@ -1739,10 +1548,6 @@ class ManifestStore:
             payload = {
                 "adds": [self._write_batch_dir(delta, mode, state, meta)],
                 "removes": [],
-                "stats": self._write_stats(mode, state, self._stats_plus(
-                    mode, state,
-                    delta.stat_rows(self._stats_grain(mode), S.TS_COL[mode]),
-                )),
                 "meta": meta,
             }
             return payload, {"adopted_rows": delta.n, "version": 1}
@@ -1759,12 +1564,12 @@ class ManifestStore:
         would dominate small reads long before the data does.
 
         The horizon is H = current - retain_last + 1; commit H becomes
-        a self-contained CHECKPOINT (adds = full live dir list at H,
-        removes = [], the stats pointer and increment chain at H) and
-        the commits below it are deleted — ``ManifestLog.checkpoint``,
-        each step crash-safe on its own.  Stats/CDC dirs they referenced
-        become unreferenced and age out via ``gc_orphans`` (which also
-        gives in-flight readers its grace window).
+        a self-contained CHECKPOINT (adds = full live dir list at H with
+        their meta, removes = []) and the commits below it are deleted —
+        ``ManifestLog.checkpoint``, each step crash-safe on its own.
+        Batch/CDC dirs they referenced become unreferenced and age out
+        via ``gc_orphans`` (which also gives in-flight readers its grace
+        window).
 
         Time travel below H and change-feed cursors below H raise
         ``VacuumedVersion`` afterwards — truncation is the documented
@@ -1778,16 +1583,14 @@ class ManifestStore:
         dropped = log.checkpoint(horizon, {
             "adds": list(st["dirs"]),
             "removes": [],
-            "stats": st["stats"],
-            "stats_incs": st["stats_incs"],
-            "meta": {d: st["meta"][d] for d in st["dirs"] if d in st["meta"]},
+            "meta": {d: st["meta"][d] for d in st["dirs"]},
             "op": "checkpoint",
             "ts": time.time(),
         })
         return {"checkpointed": horizon, "commits_dropped": dropped}
 
     def gc_orphans(self, mode: str, grace_s: float = 3600.0) -> list[str]:
-        """Remove batch/stats/cdc dirs referenced by NO retained commit
+        """Remove batch/cdc dirs referenced by NO retained commit
         (crash debris, commit-race losers), once older than ``grace_s``
         (in-flight writers get that long to finish — at 100 TB set it
         above the longest expected job).
@@ -1805,27 +1608,12 @@ class ManifestStore:
         log = self.log(mode)
         commits = log.commits()
         state = log.state()
-        live = set(state["dirs"])
-        ever_adds = set(live)
-        ever_stats = set()
+        ever_adds = set(state["dirs"])
         ever_cdc = set()
         for c in commits:
             ever_adds.update(c.get("adds", []))
-            for ptr in (
-                [c.get("stats"), c.get("stats_inc")]
-                + list(c.get("stats_incs") or [])
-            ):
-                for rel in (ptr or {}).values():
-                    ever_stats.add(rel.split(os.sep)[0])
             if c.get("cdc"):
                 ever_cdc.add(c["cdc"].split(os.sep)[0])
-        # current stats (snapshot + outstanding increment chain) must
-        # survive even past grace
-        cur_stats = {
-            rel.split(os.sep)[0]
-            for ptr in [state["stats"] or {}] + state["stats_incs"]
-            for rel in ptr.values()
-        }
         removed = []
         now = time.time()
         data_root = self.data_path(mode)
@@ -1849,18 +1637,10 @@ class ManifestStore:
             lnames = []
         for n in lnames:
             p = os.path.join(log.log_dir, n)
-            if not os.path.isdir(p):
-                continue
-            if n.startswith("stats-"):
-                if n in cur_stats or n in ever_stats:
-                    continue  # current or referenced history: keep
-            elif n.startswith("cdc-"):
-                # CDC files referenced by a commit ARE the change feed's
-                # history — keep them; only commit-race / crash debris
-                # (written but never referenced) is collectable.
-                if n in ever_cdc:
-                    continue
-            else:
+            # CDC files referenced by a commit ARE the change feed's
+            # history — keep them; only commit-race / crash debris
+            # (written but never referenced) is collectable.
+            if not n.startswith("cdc-") or n in ever_cdc or not os.path.isdir(p):
                 continue
             if now - os.path.getmtime(p) < grace_s:
                 continue  # maybe an in-flight writer's pre-commit output

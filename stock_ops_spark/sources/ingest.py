@@ -18,8 +18,8 @@ plans them in Spark, for batches over the micro bound, and
 collected to the driver — the path of every micro commit, where Spark's
 planning and job launches, not the data, were the cost.  Plus the write
 layout of the delta (``cluster_for_write``).  The append into a fresh
-batch directory and the A5/A6 stats increment are the commit's,
-published together by one manifest commit.
+batch directory and its A5/A6 stats rows (in the dir's commit meta)
+are the commit's, published together by one manifest commit.
 
 Scale posture: the existing-store probe (steps 4-5) reads ONLY the
 partitions the batch touches — partition values are collected from the

@@ -6,13 +6,13 @@ a launch.  Measured at ``local[2]`` on 500-row streamed commits (p50
 per trigger, 4-core box), the delta planned and checkpointed in Spark
 cost ~0.7 s and 5-6 jobs per micro-batch; collecting the raw batch once
 (``collect_micro``) and running dedup, versioning, the overlap read,
-the write and the stats increment in pyarrow costs that one job —
+the write and the dir's stats in pyarrow costs that one job —
 ~0.29 s per trigger, of which the store's part is ~0.09 s and the rest
 is Structured Streaming's own offset and commit logs.  For a batch
 PROVEN small, the cheapest correct execution is: pull its rows to the
 driver as one Arrow table once, and derive everything downstream — the
 versioned delta (``ingest.versioned_delta_arrow``), the grouped stat
-rows, the partitioned batch-dir files, the stats-catalog increment —
+rows, the partitioned batch-dir files and the dir's commit meta —
 in-process.
 
 Every commit path holds its delta as one ``Delta`` value: its rows as a
@@ -173,7 +173,7 @@ def _stat_rows(df: DataFrame, keys, ts_col: str, parts=(), part_cap=None):
     """The Spark implementation of ``grouped_stats`` (same columns, as
     Arrow): ONE grouped aggregate job.  It is small by contract — the
     keys one batch touches — so it serves the emptiness gate, the
-    data-skipping bounds, the stats increment and the touched-partition
+    data-skipping bounds, the dir's stats rows and the touched-partition
     literals at once."""
     aggs = [
         F.count(F.lit(1)).alias("rc"),
@@ -214,8 +214,8 @@ class Delta:
     ``df`` may be given as a zero-argument callable: the frame is then
     built on first use only.  A delta computed on the driver passes
     ``localrel.arrow_relation`` of its table (one LocalTableScan), so a
-    commit that never needs a frame — no cumulative stats snapshot, no
-    declined ``write_micro`` — builds none.  Unpacks like a tuple:
+    commit that never needs a frame — no declined ``write_micro`` —
+    builds none.  Unpacks like a tuple:
     ``df, n, tbl = materialize_micro(...)``."""
 
     __slots__ = ("_df", "n", "tbl")

@@ -372,7 +372,7 @@ class ManifestCDCStreamReader(SimpleDataSourceStreamReader):
         import pyarrow.dataset as ds
 
         v = c["version"]
-        op = c.get("op") or ("compact" if c.get("removes") else "ingest")
+        op = c["op"]
         if op in ("compact", "checkpoint"):
             return
         if op == "retain" and not c.get("cdc"):

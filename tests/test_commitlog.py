@@ -64,13 +64,13 @@ def test_try_commit_is_put_if_absent(tmp_path):
 
 def test_state_folds_adds_and_removes(tmp_path):
     log = ManifestLog(str(tmp_path / "log"))
-    log.try_commit(1, {"adds": ["a"], "removes": [], "stats": {"table": "s1"}})
-    log.try_commit(2, {"adds": ["b"], "removes": [], "stats": {"table": "s2"}})
-    log.try_commit(3, {"adds": ["c"], "removes": ["a", "b"], "stats": {"table": "s3"}})
+    log.try_commit(1, {"adds": ["a"], "removes": [], "meta": {"a": {"n": 1}}})
+    log.try_commit(2, {"adds": ["b"], "removes": [], "meta": {"b": {"n": 2}}})
+    log.try_commit(3, {"adds": ["c"], "removes": ["a", "b"], "meta": {"c": {"n": 3}}})
     assert log.state()["dirs"] == ["c"]
-    assert log.state()["stats"] == {"table": "s3"}
+    assert log.state()["meta"] == {"c": {"n": 3}}  # removed dirs' meta leaves
     assert log.state(at_version=2)["dirs"] == ["a", "b"]
-    assert log.state(at_version=2)["stats"] == {"table": "s2"}
+    assert log.state(at_version=2)["meta"] == {"a": {"n": 1}, "b": {"n": 2}}
 
 
 # -- time travel ----------------------------------------------------------
@@ -250,8 +250,7 @@ def _ingest_race(spark, tmp_path, monkeypatch, rows):
 def test_ingest_conflict_key_disjoint_rival_rebases(spark, tmp_path, monkeypatch):
     """A lost race against a key-disjoint ingest REBASES: the attempt
     runs once and its first batch dir is what publishes, at the next
-    version — and the ingest commit document keeps its key order, so
-    logs written before the one commit loop fold identically."""
+    version — and the ingest commit document keeps its key order."""
     store, written = _ingest_race(spark, tmp_path, monkeypatch, ROWS_DISJOINT)
     log = store.log(MODE)
     with open(log._path(4)) as f:
@@ -259,14 +258,14 @@ def test_ingest_conflict_key_disjoint_rival_rebases(spark, tmp_path, monkeypatch
     assert len(written) == 1
     assert doc["adds"] == written
     assert list(doc) == [
-        "adds", "removes", "stats_inc", "meta", "op", "ts", "version",
+        "adds", "removes", "meta", "op", "ts", "version",
     ]
 
 
 def test_ingest_conflict_key_overlap_rival_recomputes(spark, tmp_path, monkeypatch):
     """A lost race against an ingest sharing a key RECOMPUTES: the
     re-send becomes version 2 exactly as in a conflict-free run, and the
-    losing attempt's batch and stats dirs are deleted."""
+    losing attempt's batch dir is deleted."""
     store, written = _ingest_race(spark, tmp_path, monkeypatch, ROWS_RESEND)
     assert len(written) == 2
     assert store.log(MODE).state()["dirs"][-1] == written[-1]
@@ -458,7 +457,7 @@ def test_sigkill_mid_ingest_keeps_data_and_stats_atomic(spark, tmp_path):
         }
         for t, row in agg.items():
             assert stats[t]["row_count"] == row["count(1)"]
-    # crash debris (uncommitted batch/stats dirs) is sweepable, replay heals
+    # crash debris (uncommitted batch dirs) is sweepable, replay heals
     store.gc_orphans(MODE, grace_s=0.0)
     child_rows = [
         ("SPY", 1751463000 + i * 600, 600.0 + i, 601.0 + i, 599.0 + i,
@@ -568,14 +567,14 @@ def test_merge_updates_inserts_and_prunes_files(spark, mstore):
     assert st["SPY"]["row_count"] == 3  # updates don't move counts
 
 
-def test_merge_pure_update_carries_stats_pointer(spark, mstore):
+def test_merge_pure_update_keeps_stats(spark, mstore):
     mstore.ingest_batch(_df(spark, ROWS_B1), MODE)
-    ptr_before = mstore.log(MODE).state()["stats"]
+    before = sorted(mstore.table_stats(MODE).collect())
     res = mstore.merge(_df(spark, SRC_MERGE[:1]), MODE)
     assert res["updated"] == 1 and res["inserted"] == 0
     # index keys are immutable under MERGE, so count/min/max cannot move:
-    # the commit re-points at the SAME stats snapshot (no recompute)
-    assert mstore.log(MODE).state()["stats"] == ptr_before
+    # the rewritten dir's recorded stats equal the dir's it replaced
+    assert sorted(mstore.table_stats(MODE).collect()) == before
 
 
 def test_merge_rejects_duplicate_source_keys(spark, mstore):
@@ -597,8 +596,7 @@ def test_delete_where_sql_null_semantics_and_stats(spark, mstore):
     assert snap.where("ticker='VOO'").count() == 0
     assert snap.where("ticker='QQQ'").count() == 1
     assert snap.count() == 4  # 3 SPY + QQQ
-    # stats: affected ticker recomputed exactly (VOO emptied -> gone),
-    # untouched tickers' rows carried over
+    # stats: the emptied ticker is gone (VOO), the others unchanged
     st = {r["ticker"]: r for r in mstore.table_stats(MODE).collect()}
     assert "VOO" not in st
     assert st["SPY"]["row_count"] == 3
@@ -684,7 +682,7 @@ def test_vacuum_checkpoints_and_truncates(spark, mstore):
     # current snapshot identical; retained time travel works
     assert {tuple(r) for r in mstore.read_all(MODE).collect()} == before
     assert mstore.read_all(MODE, at_version=4).count() == 4
-    # stats pointer survived the checkpoint rewrite
+    # the stats recorded in the dirs' meta survived the checkpoint rewrite
     assert mstore.table_stats(MODE).count() == 1
     # vacuumed versions raise, never silently return empty
     with pytest.raises(VacuumedVersion):
@@ -693,11 +691,11 @@ def test_vacuum_checkpoints_and_truncates(spark, mstore):
     mstore.ingest_batch(_df(spark, _mk_rows(9)), MODE)
     assert mstore.version(MODE) == 6
     assert mstore.read_all(MODE).count() == 6
-    # dropped-history stats dirs became unreferenced -> gc-collectable,
-    # while the live pointer's dir survives even at zero grace
+    # dropped-history dirs became unreferenced -> gc-collectable, while
+    # the stats stay whole even at zero grace
     removed = mstore.gc_orphans(MODE, grace_s=0.0)
     assert mstore.table_stats(MODE).count() == 1
-    assert all("stats-000000" in p or "batch-" in p or "cdc-" in p for p in removed)
+    assert all("batch-" in p or "cdc-" in p for p in removed)
 
 
 def test_vacuum_crash_window_is_idempotent(spark, mstore):
@@ -715,7 +713,7 @@ def test_vacuum_crash_window_is_idempotent(spark, mstore):
         "version": 3,
         "adds": list(st3["dirs"]),
         "removes": [],
-        "stats": st3["stats"],
+        "meta": st3["meta"],
         "op": "checkpoint",
         "ts": 0.0,
     }
@@ -917,7 +915,7 @@ def test_restore_swaps_snapshot_and_feeds_cdc(spark, mstore):
     assert {tuple(r) for r in mstore.read_all(MODE).collect()} == v1_rows
     # history preserved: the undone span still time-travels
     assert mstore.read_all(MODE, at_version=3).count() == 3
-    # the stats pointer followed the snapshot
+    # the stats followed the snapshot
     assert mstore.table_stats(MODE).agg({"row_count": "sum"}).collect()[0][0] == 1
     # CDC: the restore commit carries the two departed rows as deletes
     feed = mstore.read_changes(MODE, from_version=3)
@@ -1147,7 +1145,7 @@ def test_gc_preserves_time_travel_for_retained_merge_history(spark, mstore):
     assert res["restored_to"] == 1
 
 
-# -- r8: stats-increment chain -------------------------------------------
+# -- stats recorded in the dirs' commit meta -------------------------------
 
 
 def _batch_at(spark, ticker, base_ts, n=4):
@@ -1165,37 +1163,9 @@ def _table_counts(store):
     }
 
 
-def test_stats_increment_chain_folds_exactly(spark, mstore):
-    """Five increment commits fold to the same stats one snapshot
-    would; the commit payloads really are increments (no per-commit
-    cumulative snapshot on the hot path)."""
-    for i in range(5):
-        mstore.ingest_batch(_batch_at(spark, "AAA", 1751463000 + 86400 * i), MODE)
-    assert _table_counts(mstore) == {"AAA": 20}
-    log = mstore.log(MODE)
-    ops = [("stats_inc" in c, "stats" in c) for c in log.commits()]
-    assert all(inc and not cum for inc, cum in ops)
-    st = log.state()
-    assert st["stats"] is None and len(st["stats_incs"]) == 5
-
-
-def test_stats_fold_rollover_materializes_snapshot(spark, mstore, monkeypatch):
-    """The STATS_FOLD_EVERY-th increment materializes a cumulative
-    snapshot and RESETS the chain — the fold is bounded."""
-    monkeypatch.setattr(type(mstore), "STATS_FOLD_EVERY", 3)
-    for i in range(5):
-        mstore.ingest_batch(_batch_at(spark, "AAA", 1751463000 + 86400 * i), MODE)
-    st = mstore.log(MODE).state()
-    # commits: inc, inc, inc, FOLD(snapshot), inc
-    assert st["stats"] is not None
-    assert len(st["stats_incs"]) == 1
-    assert _table_counts(mstore) == {"AAA": 20}
-
-
-def test_vacuum_checkpoint_carries_increment_chain(spark, tmp_path):
-    """Vacuum below outstanding increments must not lose them: the
-    checkpoint commit carries the chain verbatim, gc keeps the
-    referenced increment dirs, and stats stay exact afterwards."""
+def test_vacuum_checkpoint_keeps_dir_stats(spark, tmp_path):
+    """Vacuum carries every live dir's meta into its checkpoint: the
+    stats stay exact, gc finds nothing to remove, and ingest goes on."""
     store = ManifestStore(spark, str(tmp_path / "vstore"), auto_compact_every=0)
     for i in range(6):
         store.ingest_batch(_batch_at(spark, "AAA", 1751463000 + 86400 * i), MODE)
@@ -1209,10 +1179,10 @@ def test_vacuum_checkpoint_carries_increment_chain(spark, tmp_path):
     assert _table_counts(store) == {"AAA": 24, "BBB": 4}
 
 
-def test_compact_carries_increment_chain(spark, tmp_path):
-    """Compaction is physical-only: it must carry the snapshot AND the
-    outstanding increments forward, and the folded per-dir 'n' meta
-    equals the live row count (the auto-cadence input)."""
+def test_compact_folds_dir_stats(spark, tmp_path):
+    """Compaction is physical-only: the compacted dir's meta is the fold
+    of the old dirs' — its 'n' is the live row count (the auto-cadence
+    input) and its per-key stats keep the stats view exact."""
     store = ManifestStore(spark, str(tmp_path / "cstore"), auto_compact_every=0)
     for i in range(4):
         store.ingest_batch(_batch_at(spark, "AAA", 1751463000 + 86400 * i), MODE)
@@ -1220,9 +1190,9 @@ def test_compact_carries_increment_chain(spark, tmp_path):
     assert _table_counts(store) == {"AAA": 16}
     st = store.log(MODE).state()
     assert len(st["dirs"]) == 1
-    assert st["meta"][st["dirs"][0]]["n"] == 16
-    # increments survived the compact commit
-    assert len(st["stats_incs"]) == 4
+    meta = st["meta"][st["dirs"][0]]
+    assert meta["n"] == 16
+    assert meta["stats"]["rc"] == [16]  # one (ticker, interval) key
     store.ingest_batch(_batch_at(spark, "BBB", 1751463000), MODE)
     assert _table_counts(store) == {"AAA": 16, "BBB": 4}
 

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
-import os
 from unittest import mock
 
 import numpy as np
@@ -366,29 +365,13 @@ def test_change_feed_on_driver_matches_spark(spark, stores):
     ]
 
 
-def _parent_stats(spark, store, mode, which):
-    """The stats view as the Spark fold computed it: one parquet read of
-    the snapshot and increments, and a ``groupBy`` fold when there are
-    more than one."""
-    state = store.log(mode).state()
-    log_dir = store.log(mode).log_dir
-    paths = [os.path.join(log_dir, state["stats"][which])] if state["stats"] else []
-    paths += [os.path.join(log_dir, i[which]) for i in state["stats_incs"]]
-    df = spark.read.parquet(*paths)
-    if len(paths) == 1:
-        return df
-    return df.groupBy(*ManifestStore._STATS_KEYS[which]).agg(
-        F.sum("row_count").alias("row_count"),
-        F.min("min_ts").alias("min_ts"),
-        F.max("max_ts").alias("max_ts"),
-    )
+def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, spark_jobs):
+    """``table_stats`` and ``interval_stats``, folded in pyarrow from
+    the live dirs' recorded stats, equal ``batch_stats`` over the
+    snapshot — column names, types and rows — after ingests and a
+    delete, and run no job."""
+    from stock_ops_spark.operators.stats import batch_stats
 
-
-@pytest.mark.parametrize("state", ["snapshot", "snapshot+increments", "increments"])
-def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, state, spark_jobs):
-    """``table_stats`` and ``interval_stats`` folded in pyarrow equal the
-    Spark fold, schema and rows, whether the log holds a snapshot only,
-    a snapshot and increments, or increments only — and run no job."""
     mode = "historical_intraday"
     store = ManifestStore(spark, str(tmp_path / "s"), auto_compact_every=0)
 
@@ -398,20 +381,16 @@ def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, state, spark_j
         store.ingest_batch(spark.createDataFrame(rows, S.HISTORICAL_INTRADAY), mode)
 
     ingest(0)
-    if state != "increments":
-        # a mutation writes a cumulative snapshot and ends the chain
-        store.delete_where(mode, (F.col("ticker") == "VOO") & (F.col("interval") == "1d"))
-    if state != "snapshot":
-        ingest(1)
-        ingest(2)
-    st = store.log(mode).state()
-    assert bool(st["stats"]) == (state != "increments")
-    assert bool(st["stats_incs"]) == (state != "snapshot")
+    store.delete_where(mode, (F.col("ticker") == "VOO") & (F.col("interval") == "1d"))
+    ingest(1)
+    ingest(2)
     for which in ("table", "interval"):
         got, jobs = spark_jobs(lambda: (
             store.table_stats(mode) if which == "table" else store.interval_stats(mode)
         ))
         assert jobs == 0 and got.isLocal()
-        want = _parent_stats(spark, store, mode, which)
-        assert got.schema == want.schema
+        want = batch_stats(store.read_all(mode), mode, which == "interval")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
         assert sorted(got.collect()) == sorted(want.collect())

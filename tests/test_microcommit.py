@@ -132,13 +132,35 @@ def test_ingest_falls_back_and_stays_correct_on_decimal_payload(
     assert store.ingest_batch(batch, "streaming") == 0
 
 
-def test_meta_of_matches_spark_dir_meta(spark, tmp_path):
-    routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
+def test_meta_of_matches_spark_dir_meta(spark):
+    """A dir's meta from the driver's grouped stats equals the one from
+    Spark's, and its bounds, count and stats rows equal Spark
+    aggregates of the same rows."""
+    routed = with_partition_cols(
+        _batch(spark, [(None, None, 1.0, 1, None, None, None, None)]),
+        "streaming", "America/New_York",
+    )
     tbl = MC.collect_micro(routed)
     ts = "timestamp_UTC_ms"
     got = CL._meta_of(MC.grouped_stats(tbl, ["ticker"], ts), ts)
-    store = CL.ManifestStore(spark, str(tmp_path / "m"))
-    assert got == store._dir_meta(routed, "streaming")
+    spark_meta = CL._meta_of(MC._stat_rows(routed, ["ticker"], ts), ts)
+
+    def rows(m):
+        return sorted(zip(*m["stats"].values()), key=repr)
+
+    assert {k: v for k, v in got.items() if k != "stats"} == {
+        k: v for k, v in spark_meta.items() if k != "stats"
+    }
+    assert rows(got) == rows(spark_meta)
+    b = routed.agg(
+        F.min("ticker"), F.max("ticker"), F.min(ts), F.max(ts), F.count(F.lit(1))
+    ).collect()[0]
+    assert [got["ticker"], got[ts], got["n"]] == [[b[0], b[1]], [b[2], b[3]], b[4]]
+    want = batch_stats(routed, "streaming", False).collect()
+    assert rows(got) == sorted(
+        ((r["ticker"], r["row_count"], r["min_ts"], r["max_ts"]) for r in want),
+        key=repr,
+    )
 
 
 def test_materialize_micro_counts_and_parallelism(spark):

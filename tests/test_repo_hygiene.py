@@ -192,3 +192,23 @@ def test_store_builds_local_relations_through_localrel():
         if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
     ]
     assert not hits, hits
+
+
+def test_stats_ride_the_manifest_only():
+    """Each batch dir's per-key stats live in its commit meta, and the
+    stats views fold them: the stats files, their pointers, the
+    increment chain and its fold cadence, the Spark recompute after a
+    row removal and the compaction-only bounds aggregate were deleted,
+    and nothing may bring one back."""
+    banned = {
+        "_write_stats", "_stats_plus", "_stats_after_removal",
+        "STATS_FOLD_EVERY", "stats_inc", "stats_incs", "_dir_meta",
+    }
+    offenders = []
+    for path in _py_files("stock_ops_spark", "tools"):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        hits = banned.intersection(_names(tree))
+        if hits:
+            offenders.append((os.path.relpath(path, REPO), sorted(hits)))
+    assert not offenders, offenders

@@ -7,10 +7,14 @@ of N commits (pure JSON, no Spark — the fold cost is file IO + JSON
 parse, which is exactly what vacuum bounds), times the fold at several
 log lengths, vacuums to an 8-version horizon, and times it again.
 
+Each commit has the shape a streaming ingest commit publishes: one
+batch dir whose meta carries its bounds, its row count and its per-key
+stats rows for ``TICKERS`` tickers.
+
     python tools/bench_vacuum.py [max_commits]
 
-Prints one JSON line: fold ms per log length, post-vacuum fold ms, and
-the retained file count.
+Prints one JSON line: fold ms per log length, the mean commit file
+size, post-vacuum fold ms, and the retained file count.
 """
 
 from __future__ import annotations
@@ -25,6 +29,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stock_ops_spark.sources.commitlog import ManifestLog  # noqa: E402
+
+TICKERS = 12  # distinct tickers per synthetic commit
+ROWS = 500  # rows per synthetic commit
+
+
+def dir_meta(n: int) -> dict:
+    """The commit meta of the ``n``-th synthetic batch dir: streaming
+    bounds, row count and one stats row per ticker."""
+    t0 = 1_751_463_000_000 + 60_000 * n
+    tickers = [f"T{i:03d}" for i in range(TICKERS)]
+    return {
+        "ticker": [tickers[0], tickers[-1]],
+        "timestamp_UTC_ms": [t0, t0 + 59_999],
+        "n": ROWS,
+        "stats": {
+            "ticker": tickers,
+            "rc": [ROWS // TICKERS] * TICKERS,
+            "lo": [t0 + i for i in range(TICKERS)],
+            "hi": [t0 + 59_999 - i for i in range(TICKERS)],
+        },
+    }
 
 
 def fold_ms(log: ManifestLog, reps: int = 5) -> float:
@@ -48,17 +73,21 @@ def main() -> None:
     for target in probe_points:
         while n < target:
             n += 1
+            d = f"batch-{n:08d}"
             log.try_commit(
                 n,
                 {
-                    "adds": [f"batch-{n:08d}"],
+                    "adds": [d],
                     "removes": [],
-                    "stats": {"table": f"stats-{n:08d}/table"},
+                    "meta": {d: dir_meta(n)},
                     "op": "ingest",
                     "ts": float(n),
                 },
             )
         out["fold_ms_by_commits"][str(target)] = round(fold_ms(log), 2)
+    out["bytes_per_commit"] = round(
+        sum(os.path.getsize(log._path(v)) for v in range(1, n + 1)) / n
+    )
 
     # vacuum to an 8-version horizon: the fold cost must drop to O(8)
     # regardless of history length
@@ -70,7 +99,7 @@ def main() -> None:
         {
             "adds": list(st["dirs"]),
             "removes": [],
-            "stats": st["stats"],
+            "meta": st["meta"],
             "op": "checkpoint",
             "ts": 0.0,
         },
