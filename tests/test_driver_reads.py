@@ -365,11 +365,14 @@ def test_change_feed_on_driver_matches_spark(spark, stores):
     ]
 
 
-def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, spark_jobs):
+@pytest.mark.parametrize("state", ["snapshot", "snapshot+increments", "increments"])
+def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, state, spark_jobs):
     """``table_stats`` and ``interval_stats``, folded in pyarrow from
     the live dirs' recorded stats, equal ``batch_stats`` over the
-    snapshot — column names, types and rows — after ingests and a
-    delete, and run no job."""
+    snapshot — column names, types and rows — and run no job, whether
+    the last commit is a delete (``snapshot``), ingests follow a delete
+    (``snapshot+increments``) or the log holds ingests only
+    (``increments``)."""
     from stock_ops_spark.operators.stats import batch_stats
 
     mode = "historical_intraday"
@@ -381,9 +384,11 @@ def test_stats_fold_on_driver_matches_spark_fold(spark, tmp_path, spark_jobs):
         store.ingest_batch(spark.createDataFrame(rows, S.HISTORICAL_INTRADAY), mode)
 
     ingest(0)
-    store.delete_where(mode, (F.col("ticker") == "VOO") & (F.col("interval") == "1d"))
-    ingest(1)
-    ingest(2)
+    if state != "increments":
+        store.delete_where(mode, (F.col("ticker") == "VOO") & (F.col("interval") == "1d"))
+    if state != "snapshot":
+        ingest(1)
+        ingest(2)
     for which in ("table", "interval"):
         got, jobs = spark_jobs(lambda: (
             store.table_stats(mode) if which == "table" else store.interval_stats(mode)
