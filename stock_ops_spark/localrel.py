@@ -54,6 +54,12 @@ def arrow_relation(spark: SparkSession, tbl: pa.Table, schema=None) -> DataFrame
     which keeps ``tbl`` in driver memory until the frame is collected."""
     if schema is None:
         tbl = tbl.cast(pa.schema([f.with_nullable(True) for f in tbl.schema]))
+    # createDataFrame drops every row after an empty record batch that
+    # follows a non-empty one (a concatenated change feed with an empty
+    # change-data file lost its later commits): hand it non-empty ones
+    tbl = pa.Table.from_batches(
+        [b for b in tbl.to_batches() if b.num_rows], tbl.schema
+    )
     df = spark.createDataFrame(tbl, schema)
     _TABLES[df] = tbl
     return df

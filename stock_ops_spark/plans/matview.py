@@ -31,8 +31,7 @@ pure fold; it also dictates the contract:
   a sync never double-folds; the replaced dir outlives one more
   install, for readers that took the view before it.  A commit
   published just before a crash is still in the feed, so the next
-  ``sync`` folds it.  A view written before the log is adopted with its
-  cursor file on first open, or refused without one.
+  ``sync`` folds it.
 
 Measure algebra — maintenance cost per path (measured r9,
 ``tools/scale_curves.py --only mv_minmax_retract``):
@@ -77,10 +76,6 @@ measures).
 """
 
 from __future__ import annotations
-
-import json
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -217,13 +212,7 @@ class MatView(FoldState):
     def _merge(self, existing: DataFrame | None, delta: DataFrame) -> DataFrame:
         if existing is None:
             return delta
-        names = list(self.measures)
-        if _MULT in delta.columns:
-            # pre-_MULT view generations lack the multiplicity column —
-            # fold from NULL (unknown)
-            if _MULT not in existing.columns:
-                existing = existing.withColumn(_MULT, F.lit(None).cast("long"))
-            names.append(_MULT)
+        names = [*self.measures, _MULT]
         keys = self.group_cols
         e = existing.select(
             *keys, *[F.col(m).alias(f"__e_{m}") for m in names]
@@ -242,54 +231,17 @@ class MatView(FoldState):
     def _cursor_of(st: dict) -> int | None:
         return st["meta"][st["dirs"][0]]["cursor"] if st["dirs"] else None
 
-    def _legacy(self, src: str) -> DataFrame | None:
-        """The partials a view written before the log kept as plain
-        files in ``src`` (None: none)."""
-        names = sorted(os.listdir(src)) if os.path.isdir(src) else []
-        files = [os.path.join(src, n) for n in names if n.endswith(".parquet")]
-        return self.spark.read.parquet(*files) if files else None
-
-    def _convert(self, st: dict) -> dict:
-        """Adopt a view written before the log: the first of its live
-        dir, an interrupted swap's staging dir and its aside dir that
-        holds a cursor file installs as version 1, with that cursor."""
-        for src in (self.path, self.path + ".tmp", self.path + ".old"):
-            try:
-                with open(os.path.join(src, "_mv_cursor.json")) as f:
-                    cur = json.load(f)["version"]
-            except FileNotFoundError:
-                continue
-            st = self._install(st, self._legacy(src), cur)
-            for sibling in (".tmp", ".old"):
-                shutil.rmtree(self.path + sibling, ignore_errors=True)
-            break
-        return st
-
-    def _state(self) -> tuple[dict, DataFrame | None, int | None]:
+    def _state(self) -> tuple[dict, DataFrame | None, int]:
         """The log snapshot, the installed partials, bookkeeping column
-        included (None before the first fold), and their cursor (None:
-        none recorded)."""
-        st = self._snapshot()
-        if not st["dirs"]:
-            return st, self._legacy(self.path), None
-        return st, self._existing("view", st), self._cursor_of(st)
-
-    def _fold_base(self) -> tuple[dict, DataFrame | None, int]:
-        """``_state`` for a fold: a view with no partials folds from
-        cursor 0; partials without a cursor (written before the log by
-        an older per-delta refresh path) cannot be folded onto — they
-        raise, and ``init_from_snapshot`` replaces them."""
-        st, existing, cur = self._state()
-        if cur is None and existing is not None:
-            raise ValueError(
-                "view exists without a cursor; heal with init_from_snapshot"
-            )
-        return st, existing, cur or 0
+        included, and their cursor — None and 0 before the first
+        install, so a fresh view folds the feed from version 0.  Only
+        the dirs the view's log lists are read."""
+        st = self.log.state()
+        return st, self._existing("view", st), self._cursor_of(st) or 0
 
     def cursor(self) -> int | None:
-        """Last store version folded by ``sync`` (None: never folded, or
-        partials without a cursor — see ``_fold_base``)."""
-        return self._cursor_of(self._snapshot())
+        """Last store version folded by ``sync`` (None: never folded)."""
+        return self._cursor_of(self.log.state())
 
     def init_from_snapshot(self, store, mode: str) -> int:
         """First fill / heal for a CDC-synced view: one full aggregate
@@ -304,7 +256,7 @@ class MatView(FoldState):
                 "empty store: nothing to aggregate — sync() from a fresh "
                 "view instead (it folds the feed from version 0)"
             )
-        self._install(self._snapshot(), self._partial(fact), v)
+        self._install(self.log.state(), self._partial(fact), v)
         return v
 
     def sync(self, store, mode: str, snapshot: DataFrame | None = None) -> dict:
@@ -320,7 +272,7 @@ class MatView(FoldState):
         installs the fold, so the two are one atomic unit — a crash
         replays nothing.
         """
-        st, existing, cur = self._fold_base()
+        st, existing, cur = self._state()
         v1 = store.version(mode)
         noop = {"from": cur, "to": cur, "pos_rows": 0, "neg_rows": 0,
                 "recomputed_groups": 0}
@@ -421,12 +373,8 @@ class MatView(FoldState):
             merged = merged.join(aff, on=keys, how="left_anti")
             if recomputed is not None:
                 merged = merged.unionByName(recomputed, allowMissingColumns=True)
-        if _MULT in merged.columns:
-            # a group's last live row retracted -> the group leaves the
-            # view (NULL multiplicity = pre-_MULT generation: keep)
-            merged = merged.where(
-                F.coalesce(F.col(_MULT) != 0, F.lit(True))
-            )
+        # a group's last live row retracted -> the group leaves the view
+        merged = merged.where(F.col(_MULT) != 0)
         # no checkpoint here: the install writes merged into a fresh dir
         # while the dir it reads stays live, so one job materializes it
         self._install(st, merged, v1)
@@ -461,7 +409,7 @@ class MatView(FoldState):
         view_self = self
 
         def fold(batch: DataFrame, _batch_id: int) -> None:
-            st, existing, cur = view_self._fold_base()
+            st, existing, cur = view_self._state()
             fresh = batch.where(F.col("_commit_version") > cur)
             fresh = fresh.localCheckpoint(eager=True)
             row = fresh.agg(F.max("_commit_version")).collect()[0]

@@ -989,8 +989,6 @@ class LocalDeploymentAPI:
                     r["state"] = {"type": e["state"]}
                     if "rows" in e:
                         r["rows"] = e["rows"]
-            elif a == "watermark":
-                marks[e["dep_id"]] = e["upto_utc"]
             elif a == "watermarks":
                 marks.update(e["marks"])
         return {"deployments": deps, "flow_runs": runs, "watermarks": marks}

@@ -67,6 +67,7 @@ import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NullType
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.localrel import arrow_relation
@@ -113,11 +114,12 @@ def _span(lo, hi) -> list:
 def _meta_of(stats, tsc: str) -> dict:
     """A dir's commit meta from its grouped-stats table (keyed by ticker
     and, at the stats grain outside streaming, interval, with
-    ``rc``/``lo``/``hi``): the data-skipping bounds — [min, max] of
-    ticker and of the mode's time column, NULLs ignored — the dir's row
-    count ``n``, and ``stats``, the per-key rows themselves as JSON
+    ``rc``/``nts``/``lo``/``hi``): the data-skipping bounds — [min, max]
+    of ticker and of the mode's time column, NULLs ignored — the dir's
+    row count ``n``, and ``stats``, the per-key rows themselves as JSON
     columns (``lo``/``hi`` through ``_j``) that ``table_stats`` and
-    ``interval_stats`` fold."""
+    ``interval_stats`` fold and ``retain_before`` reads the non-NULL
+    time counts ``nts`` of."""
     keys = [k for k in ("ticker", "interval") if k in stats.column_names]
     return {
         "ticker": _span(stats["ticker"], stats["ticker"]),
@@ -129,6 +131,7 @@ def _meta_of(stats, tsc: str) -> dict:
         "stats": {
             **{k: stats[k].to_pylist() for k in keys},
             "rc": stats["rc"].to_pylist(),
+            "nts": stats["nts"].to_pylist(),
             "lo": [_j(v) for v in stats["lo"].to_pylist()],
             "hi": [_j(v) for v in stats["hi"].to_pylist()],
         },
@@ -154,7 +157,7 @@ def _dirs_touching(state: dict, tsc: str, rect: dict | None) -> list[str]:
     return [
         d for d in state["dirs"]
         if rect is None
-        or _may_touch(state["meta"].get(d), tsc, rect["ticker"], rect[tsc])
+        or _may_touch(state["meta"][d], tsc, rect["ticker"], rect[tsc])
     ]
 
 
@@ -168,16 +171,11 @@ def _disjoint(a, b) -> bool:
     )
 
 
-def _may_touch(meta: dict | None, tsc: str, tickers, ts) -> bool:
+def _may_touch(meta: dict, tsc: str, tickers, ts) -> bool:
     """Can a dir with recorded bounds ``meta`` hold a row inside the
     (``tickers``, ``ts``) rectangle?  A shared key lies in both
-    rectangles, so a dir disjoint on EITHER axis holds none; a dir with
-    no recorded bounds must be read."""
-    if not meta:
-        return True
-    return not (
-        _disjoint(meta.get("ticker"), tickers) or _disjoint(meta.get(tsc), ts)
-    )
+    rectangles, so a dir disjoint on EITHER axis holds none."""
+    return not (_disjoint(meta["ticker"], tickers) or _disjoint(meta[tsc], ts))
 
 
 def _union(frames: list) -> DataFrame | None:
@@ -435,6 +433,133 @@ def _conflict_backoff(attempt: int) -> None:
     time.sleep(random.uniform(0.05, min(2.0, 0.2 * (2 ** attempt))))
 
 
+def store_log(data_path: str) -> ManifestLog:
+    """The commit log of the store data under ``data_path`` — the one
+    place its ``__log`` sibling is named."""
+    return ManifestLog(data_path + "__log")
+
+
+def _read_dirs_arrow(
+    root: str, dirs: list[str], flt=None, bound: int | None = MICRO_COMMIT_ROWS,
+    parts: list[str] | None = None,
+):
+    """The store read of ``dirs`` (relative to ``root``, or absolute) on
+    the driver: their union as one Arrow table, read through
+    ``pyarrow.dataset`` with hive partitioning, the missing columns
+    NULL-filled and only the rows the ``pyarrow.dataset`` expression
+    ``flt`` keeps — or None when that cannot stand in for the Spark
+    read: more than ``bound`` rows, a column type outside
+    ``plain_type``, a type conflict between dirs, a filter the columns
+    cannot evaluate, or a dir that cannot be opened.  ``flt`` prunes
+    partition fragments before anything is counted or read, and the
+    count comes from the pruned fragments' parquet footers — so a large
+    compacted dir costs only the partitions the filter can touch.
+    ``bound=None`` is a caller that already knows the rows fit (from the
+    manifest's per-dir counts): nothing is counted.  Given ``parts``, the
+    mode's partition columns, the hive partitions are typed as the
+    layout routes them (int32) rather than inferred from the paths, so a
+    dir whose partition values are all NULL reads as NULLs."""
+    import pyarrow.dataset as pads
+
+    hive = "hive" if parts is None else pads.partitioning(
+        pa.schema([(c, pa.int32()) for c in parts]), flavor="hive"
+    )
+    try:
+        sets, n = [], 0
+        for d in dirs:
+            dset = pads.dataset(
+                os.path.join(root, d), format="parquet", partitioning=hive,
+            )
+            if bound is not None:
+                n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
+                if n > bound:
+                    return None
+            sets.append(dset)
+        tbl = pa.concat_tables(
+            [x.to_table(filter=flt) for x in sets], promote_options="default"
+        )
+    except (pa.ArrowException, OSError):
+        # a missing dir too: the Spark read raises its own error
+        return None
+    return tbl if all(plain_type(t) for t in tbl.schema.types) else None
+
+
+def change_pieces(log: ManifestLog, from_version: int, upto: int) -> list[tuple]:
+    """The change feed of a store's commits (``from_version``, ``upto``]
+    planned from its ``log`` alone, as pieces ``(version, dirs, derive,
+    n)``: the dirs holding one commit's changes, whether its
+    ``_change_type`` is derived from the ``version`` column, and its row
+    count when the commit recorded one (None for a change-data file).
+
+    A commit that published a change-data file (merge, delete, a
+    ``cdc=True`` retention, restore) is that file, absolute; an ingest
+    or ``convert_from`` commit is its added dirs, relative to the data
+    path, whose rows are version-1 'insert' or re-sent
+    'update_postimage' changes; compaction is no logical change.
+    Raises ``VacuumedVersion`` for a span starting below the vacuum
+    horizon and ``ChangeFeedGap`` for one crossing a retention recorded
+    without row changes — never a silent skip."""
+    lo = log.min_version()
+    if lo > 1 and from_version < lo:
+        # Commits < lo are gone AND lo itself was rewritten as a
+        # checkpoint (its original row changes are no longer
+        # derivable), so any cursor below lo would silently miss
+        # changes — fail loudly instead (the consumer re-bootstraps
+        # from a snapshot at lo, then resumes the feed from there).
+        raise VacuumedVersion(
+            f"change feed from {from_version} is incomplete: history "
+            f"up to version {lo} was vacuumed/checkpointed"
+        )
+    pieces = []
+    for c in log.commits(upto=upto, since=from_version + 1):
+        v = c["version"]
+        op = c["op"]
+        if op == "compact":
+            continue
+        if op == "retain" and not c.get("cdc"):
+            # metadata-only retention recorded no row changes; a cursor
+            # below it cannot fold deletions it never sees
+            raise ChangeFeedGap(
+                f"change feed from {from_version} crosses retention "
+                f"commit {v} recorded without row-level CDC "
+                f"(retain_before(cdc=False)); re-bootstrap from a "
+                f"snapshot at version >= {v}"
+            )
+        if c.get("cdc"):
+            pieces.append((v, [os.path.join(log.log_dir, c["cdc"])], False, None))
+        elif op in ("ingest", "convert") and c["adds"]:
+            # convert_from's adopted rows ARE the feed's opening
+            # changes, derived like ingest's from their version column
+            n = sum(c["meta"][d]["n"] for d in c["adds"])
+            pieces.append((v, c["adds"], True, n))
+    return pieces
+
+
+def change_piece_arrow(
+    root: str, parts: list[str], piece: tuple, bound: int | None = None
+):
+    """One ``change_pieces`` piece read on the driver (``_read_dirs_arrow``
+    under ``root``, the store's data path, partitioned by ``parts``,
+    counted against ``bound``) with its ``_change_type`` (string;
+    derived from ``version`` for an ingest piece) and
+    ``_commit_version`` (int32) columns, or None when the driver read
+    declines."""
+    v, dirs, derive, _n = piece
+    tbl = _read_dirs_arrow(
+        root, dirs, bound=bound, parts=parts if derive else None
+    )
+    if tbl is None or derive and "version" not in tbl.column_names:
+        return None
+    if derive:
+        upd = pc.fill_null(pc.greater(tbl["version"], 1), False)
+        tbl = tbl.append_column("_change_type", pc.if_else(
+            upd, pa.scalar("update_postimage"), pa.scalar("insert")
+        ))
+    return tbl.append_column(
+        "_commit_version", pa.array([v] * tbl.num_rows, pa.int32())
+    )
+
+
 class ManifestStore:
     """Partitioned-parquet store for one (provider, exchange), every
     write published by a manifest commit.
@@ -486,7 +611,7 @@ class ManifestStore:
         return mode_root(self.root, mode, self.provider, self.exchange)
 
     def log(self, mode: str) -> ManifestLog:
-        return ManifestLog(self.data_path(mode) + "__log")
+        return store_log(self.data_path(mode))
 
     # -- read ------------------------------------------------------------
     def _read_dirs(
@@ -494,7 +619,10 @@ class ManifestStore:
     ) -> DataFrame | None:
         """The union of ``dirs``, each read with its own basePath;
         ``tag`` adds a ``__dir`` provenance column — the probe frame
-        file pruning works on (which batch dirs a mutation touches)."""
+        file pruning works on (which batch dirs a mutation touches).
+        Partition columns are int, as the layout routes them: Spark
+        types the partitions of a dir whose values are all NULL as
+        VOID, which a rewrite cannot partition by."""
         frames = []
         for d in dirs:
             p = os.path.join(self.data_path(mode), d)
@@ -503,48 +631,14 @@ class ManifestStore:
                 .option("basePath", p)
                 .parquet(p)
             )
+            void = [
+                f.name for f in df.schema
+                if f.name in PARTITION_COLS[mode] and isinstance(f.dataType, NullType)
+            ]
+            if void:
+                df = df.withColumns({c: F.col(c).cast("int") for c in void})
             frames.append(df.withColumn("__dir", F.lit(d)) if tag else df)
         return _union(frames)
-
-    def _read_dirs_arrow(
-        self, mode: str, dirs: list[str], flt=None,
-        bound: int | None = MICRO_COMMIT_ROWS,
-    ):
-        """``_read_dirs`` on the driver: the union of ``dirs`` (relative to
-        the mode's data path, or absolute) as one Arrow table, read
-        through ``pyarrow.dataset`` with hive partitioning, the missing
-        columns NULL-filled and only the rows the ``pyarrow.dataset``
-        expression ``flt`` keeps — or None when that cannot stand in for
-        the Spark read: more than ``bound`` rows, a column type outside
-        ``plain_type``, a type conflict between dirs, a filter the
-        columns cannot evaluate, or a dir that cannot be opened.  ``flt``
-        prunes partition fragments before anything is counted or read,
-        and the count comes from the pruned fragments' parquet footers —
-        so a large compacted dir costs only the partitions the filter
-        can touch.  ``bound=None`` is a caller that already knows the
-        rows fit (from the manifest's per-dir counts): nothing is
-        counted."""
-        import pyarrow.dataset as pads
-
-        try:
-            sets, n = [], 0
-            for d in dirs:
-                dset = pads.dataset(
-                    os.path.join(self.data_path(mode), d),
-                    format="parquet", partitioning="hive",
-                )
-                if bound is not None:
-                    n += sum(f.count_rows() for f in dset.get_fragments(filter=flt))
-                    if n > bound:
-                        return None
-                sets.append(dset)
-            tbl = pa.concat_tables(
-                [x.to_table(filter=flt) for x in sets], promote_options="default"
-            )
-        except (pa.ArrowException, OSError):
-            # a missing dir too: the Spark read raises its own error
-            return None
-        return tbl if all(plain_type(t) for t in tbl.schema.types) else None
 
     def read_all(self, mode: str, at_version: int | None = None) -> DataFrame | None:
         """Current (or time-travel) snapshot, or None before the first
@@ -577,10 +671,9 @@ class ManifestStore:
         relation.  Parquet's own footer stats prune row groups only
         after every file is opened; at 10^4+ batch dirs the listing
         itself is the cost, and this is the manifest-level skip
-        Delta/Iceberg use.  Dirs with no recorded meta (pre-feature
-        commits) are conservatively read.  The whole predicate is then
-        applied to the kept dirs' rows, so pruning is an optimization,
-        never a semantics change.
+        Delta/Iceberg use.  The whole predicate is then applied to the
+        kept dirs' rows, so pruning is an optimization, never a
+        semantics change.
 
         When the kept dirs hold at most ``MICRO_COMMIT_ROWS`` rows in the
         partition range of the time bounds, the read runs on the driver
@@ -603,7 +696,7 @@ class ManifestStore:
         tickers = None if ticker is None else [_j(ticker)] * 2
         ts = [_j(ts_min), _j(ts_max)]
         metas = state["meta"]
-        keep = [d for d in state["dirs"] if _may_touch(metas.get(d), tsc, tickers, ts)]
+        keep = [d for d in state["dirs"] if _may_touch(metas[d], tsc, tickers, ts)]
         if stats is not None:
             stats["dirs_total"] = len(state["dirs"])
             stats["dirs_read"] = len(keep)
@@ -620,19 +713,19 @@ class ManifestStore:
             (lo, parts_lo), (hi, parts_hi) = (ts_min, None), (ts_max, None)
             on_driver = False
         else:
-            ns = [(metas.get(d) or {}).get("n") for d in keep]
+            ns = [metas[d]["n"] for d in keep]
             inside = sum(
                 n for d, n in zip(keep, ns)
-                if n and _inside(metas[d].get("ticker"), tickers or [None, None])
-                and _inside(metas[d].get(tsc), ts)
+                if _inside(metas[d]["ticker"], tickers or [None, None])
+                and _inside(metas[d][tsc], ts)
             )
             on_driver = inside <= MICRO_COMMIT_ROWS
         if on_driver:
             import pyarrow.dataset as pads
 
-            fits = None not in ns and sum(ns) <= MICRO_COMMIT_ROWS
-            tbl = self._read_dirs_arrow(
-                mode, keep,
+            fits = sum(ns) <= MICRO_COMMIT_ROWS
+            tbl = _read_dirs_arrow(
+                self.data_path(mode), keep,
                 _range_predicate(
                     mode, ticker, interval, lo, hi, parts_lo, parts_hi, pads.field
                 ),
@@ -676,10 +769,11 @@ class ManifestStore:
     def _dir_stats(self, mode: str, dirs: list[str], metas: dict):
         """The per-key stat rows the commit meta ``metas`` records for
         ``dirs``, as one Arrow table at the stats grain (``rc``, ``lo``
-        and ``hi`` typed as the catalog keeps them)."""
+        and ``hi`` typed as the catalog keeps them, ``nts`` beside
+        ``rc``)."""
         ts = pa.string() if mode == "historical_interday" else pa.int64()
         types = {k: pa.string() for k in self._stats_grain(mode)}
-        types.update(rc=pa.int64(), lo=ts, hi=ts)
+        types.update(rc=pa.int64(), nts=pa.int64(), lo=ts, hi=ts)
         recs = [metas[d]["stats"] for d in dirs]
         return pa.table({
             c: pa.array([v for r in recs for v in r[c]], t)
@@ -724,10 +818,10 @@ class ManifestStore:
         whose recorded (ticker, ts) bounds are disjoint from this
         batch's on EITHER axis provably shares no keys.  Compaction is
         physical-only.  Anything else returns False and the attempt
-        re-runs: merge / delete / retain / restore, a commit without
-        bounds, vacuumed history — and a vacuum checkpoint above the
-        base, which REPLACED the commit at its version and so may hide
-        an interleaved ingest that shares keys.  This is what keeps
+        re-runs: merge / delete / retain / restore, vacuumed history —
+        and a vacuum checkpoint above the base, which REPLACED the
+        commit at its version and so may hide an interleaved ingest
+        that shares keys.  This is what keeps
         sustained multi-writer ingest live: without it the slower writer
         PHASE-LOCKS (its ~seconds recompute always overlaps the faster
         writer's next commit) and starves through every retry — observed
@@ -748,10 +842,9 @@ class ManifestStore:
                 continue  # physical rewrite: no logical change
             if op not in ("ingest", "convert"):
                 return False
-            for d in c.get("adds", []):
-                m = (c.get("meta") or {}).get(d)
-                if _may_touch(m, tsc, dir_meta["ticker"], dir_meta[tsc]):
-                    return False  # no bounds, or a possibly shared key
+            for d in c["adds"]:
+                if _may_touch(c["meta"][d], tsc, dir_meta["ticker"], dir_meta[tsc]):
+                    return False  # a possibly shared key
         return True
 
     def ingest_batch(self, batch: DataFrame, mode: str) -> int:
@@ -849,8 +942,8 @@ class ManifestStore:
                 if delta.tbl is not None:
                     import pyarrow.dataset as pads
 
-                    prior = self._read_dirs_arrow(
-                        mode, overlap,
+                    prior = _read_dirs_arrow(
+                        self.data_path(mode), overlap,
                         partition_values_predicate(parts, touched or [], pads.field),
                     )
                     if prior is not None:
@@ -906,9 +999,7 @@ class ManifestStore:
         if cadence == "auto":
             from stock_ops_spark.plans.sizing import compact_cadence
 
-            cadence = compact_cadence(sum(
-                (st["meta"].get(d) or {}).get("n") or 0 for d in st["dirs"]
-            ))
+            cadence = compact_cadence(sum(st["meta"][d]["n"] for d in st["dirs"]))
         if len(st["dirs"]) >= cadence:
             try:
                 self.compact(mode)
@@ -1180,15 +1271,17 @@ class ManifestStore:
         """Retention as a manifest commit (reference parity: the Redis
         ``XTRIM`` analog, writer.py:293-297): drop rows whose time
         column is below ``cutoff``, driven by the commit-level
-        data-skipping bounds:
+        data-skipping bounds.  A NULL time is KEPT (``delete_where``'s
+        rule: only TRUE deletes):
 
-        - dirs whose recorded ts upper bound < ``cutoff`` are removed
-          METADATA-ONLY — nothing read (their recorded stats leave the
-          stats view with them);
-        - dirs straddling the cutoff get a keep-part rewrite (bounded by
-          the straddlers, never the store);
-        - dirs with no recorded bounds are conservatively treated as
-          straddlers.
+        - dirs whose recorded ts upper bound < ``cutoff`` and whose
+          stats count no NULL time are removed METADATA-ONLY — nothing
+          read (their recorded stats leave the stats view with them);
+        - dirs whose lower bound >= ``cutoff``, or with no time at all,
+          are untouched;
+        - the others — straddling the cutoff, or expired but holding
+          NULL times — get a keep-part rewrite (bounded by them, never
+          the store).
 
         ``cdc=False`` (default — the 100 TB posture) records op='retain'
         with NO row-level change file: expiring a year of history must
@@ -1197,21 +1290,23 @@ class ManifestStore:
         ``ChangeFeedGap`` for any cursor below such a commit, so a
         downstream view re-bootstraps from a snapshot instead of
         silently keeping expired rows.  ``cdc=True`` reads the doomed
-        rows once and keeps the feed exact (delete changes).
+        rows once and keeps the feed exact: its delete changes are
+        exactly the rows that leave.
         """
         tsc = S.TS_COL[mode]
         cut = _j(cutoff)
-        expired_rows = F.col(tsc) < F.lit(cutoff)
+        expired_rows = F.coalesce(F.col(tsc) < F.lit(cutoff), F.lit(False))
 
         def attempt(state):
             doomed_dirs: list[str] = []
             straddle: list[str] = []
             for d in state["dirs"]:
-                tb = (state["meta"].get(d) or {}).get(tsc)
-                if tb and tb[1] is not None and _j(tb[1]) < cut:
-                    doomed_dirs.append(d)
-                elif tb and tb[0] is not None and _j(tb[0]) >= cut:
+                m = state["meta"][d]
+                lo, hi = m[tsc]
+                if lo is None or lo >= cut:
                     continue  # provably all-retained: untouched
+                if hi < cut and sum(m["stats"]["nts"]) == m["n"]:
+                    doomed_dirs.append(d)
                 else:
                     straddle.append(d)
             adds: list[str] = []
@@ -1274,71 +1369,33 @@ class ManifestStore:
         incremental (MV rebuilds, index refresh, replication) without
         snapshot diffing.
 
-        Per commit kind: ingest adds are DERIVED as changes with no
-        extra storage (``_change_type`` = 'insert' for version-1 rows,
-        'update_postimage' for a conflict-versioned re-send — the
-        logical update in this store's versioned model); merge/delete
-        commits read the explicit CDC file their commit published;
-        compaction is invisible (no logical change).  Every row carries
-        ``_commit_version`` so a consumer can checkpoint its own cursor.
+        One planner, two consumers: ``change_pieces`` plans the span
+        from the log and ``change_piece_arrow`` reads a piece on the
+        driver, for this method and for the ``stockops_cdc`` stream
+        (``sources/pyds.py``) alike.  Per commit kind: ingest adds are
+        DERIVED as changes with no extra storage (``_change_type`` =
+        'insert' for version-1 rows, 'update_postimage' for a
+        conflict-versioned re-send — the logical update in this store's
+        versioned model); merge/delete commits read the explicit CDC
+        file their commit published; compaction is invisible (no logical
+        change).  Every row carries ``_commit_version`` so a consumer
+        can checkpoint its own cursor.
 
         Requires the referenced batch dirs to still exist — run
         ``gc_orphans`` with a grace no shorter than the slowest
         consumer's lag.
 
         A span whose pieces hold at most ``MICRO_COMMIT_ROWS`` rows in
-        all is read on the driver (``_read_dirs_arrow``): per commit one
-        Arrow table, ``_change_type`` (string) and ``_commit_version``
-        (int32) added in Arrow, the tables concatenated by name into one
-        local relation — no Spark job, where the Spark read runs one
-        schema-inference job per commit.  If any piece declines, the
-        whole span is the Spark read.  The ingest commits' recorded row
-        counts send an over-bound span to Spark before anything is read.
+        all is read on the driver: per commit one Arrow table, the
+        tables concatenated by name into one local relation — no Spark
+        job, where the Spark read runs one schema-inference job per
+        commit.  If any piece declines, the whole span is the Spark
+        read.  The ingest commits' recorded row counts send an
+        over-bound span to Spark before anything is read.
         """
         log = self.log(mode)
         upto = log.version() if to_version is None else to_version
-        lo = log.min_version()
-        if lo > 1 and from_version < lo:
-            # Commits < lo are gone AND lo itself was rewritten as a
-            # checkpoint (its original row changes are no longer
-            # derivable), so any cursor below lo would silently miss
-            # changes — fail loudly instead (the consumer re-bootstraps
-            # from a snapshot at lo, then resumes the feed from there).
-            raise VacuumedVersion(
-                f"change feed from {from_version} is incomplete: history "
-                f"up to version {lo} was vacuumed/checkpointed"
-            )
-        # (version, dirs, derive, n): the dirs holding one commit's
-        # changes, whether its _change_type is derived from the version
-        # column, and its row count when the commit recorded one
-        pieces = []
-        for c in log.commits(upto=upto, since=from_version + 1):
-            v = c["version"]
-            op = c["op"]
-            if op == "compact":
-                continue
-            if op == "retain" and not c.get("cdc"):
-                # metadata-only retention recorded no row changes; a
-                # cursor below it cannot fold deletions it never sees —
-                # fail loudly (consumer re-bootstraps from a snapshot
-                # at >= this commit), never silently skip
-                raise ChangeFeedGap(
-                    f"change feed from {from_version} crosses retention "
-                    f"commit {v} recorded without row-level CDC "
-                    f"(retain_before(cdc=False)); re-bootstrap from a "
-                    f"snapshot at version >= {v}"
-                )
-            if c.get("cdc"):
-                pieces.append((v, [os.path.join(log.log_dir, c["cdc"])], False, None))
-            elif op in ("ingest", "convert") and c["adds"]:
-                # convert_from adopts a Hive-parquet tree as version
-                # 1 — its rows ARE the feed's opening changes (a fresh
-                # MatView that "just syncs" from cursor 0 must see them;
-                # skipping convert here silently produced a view missing
-                # every adopted row).  Derivation is identical to ingest:
-                # the adopted rows carry their version column.
-                ns = [((c.get("meta") or {}).get(d) or {}).get("n") for d in c["adds"]]
-                pieces.append((v, c["adds"], True, None if None in ns else sum(ns)))
+        pieces = change_pieces(log, from_version, upto)
         tbl = self._changes_arrow(mode, pieces)
         if tbl is not None:
             return arrow_relation(self.spark, tbl)
@@ -1369,20 +1426,16 @@ class ManifestStore:
             return None
         tbls = {}
         for i in sorted(range(len(pieces)), key=lambda i: pieces[i][3] is not None):
-            v, dirs, derive, n = pieces[i]
-            tbl = self._read_dirs_arrow(mode, dirs, bound=left if n is None else None)
-            if tbl is None or derive and "version" not in tbl.column_names:
+            n = pieces[i][3]
+            tbl = change_piece_arrow(
+                self.data_path(mode), PARTITION_COLS[mode], pieces[i],
+                bound=left if n is None else None,
+            )
+            if tbl is None:
                 return None
             if n is None:
                 left -= tbl.num_rows
-            if derive:
-                upd = pc.fill_null(pc.greater(tbl["version"], 1), False)
-                tbl = tbl.append_column("_change_type", pc.if_else(
-                    upd, pa.scalar("update_postimage"), pa.scalar("insert")
-                ))
-            tbls[i] = tbl.append_column(
-                "_commit_version", pa.array([v] * tbl.num_rows, pa.int32())
-            )
+            tbls[i] = tbl
         if not tbls:
             return None
         try:
@@ -1412,7 +1465,7 @@ class ManifestStore:
             # write takes the Spark rewrite of the same dirs
             tbl = None
             if live_rows <= MICRO_COMMIT_ROWS:
-                tbl = self._read_dirs_arrow(mode, dirs, bound=None)
+                tbl = _read_dirs_arrow(self.data_path(mode), dirs, bound=None)
             delta = Delta(
                 lambda: self._read_dirs(mode, dirs),
                 live_rows if tbl is None else tbl.num_rows, tbl,
@@ -1423,7 +1476,10 @@ class ManifestStore:
             # no scan (a physical rewrite moves no statistic)
             grain = self._stats_grain(mode)
             new_meta = _meta_of(
-                fold_stats(self._dir_stats(mode, dirs, state["meta"]), grain),
+                fold_stats(
+                    self._dir_stats(mode, dirs, state["meta"]), grain,
+                    sums=("rc", "nts"),
+                ),
                 S.TS_COL[mode],
             )
             payload = {

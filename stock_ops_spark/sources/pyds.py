@@ -20,9 +20,15 @@ source progression, with the store's idempotent dedup as the
 effectively-once backstop.  Reference twin:
 eodhd_streaming_service.py:206-266 (socket frame loop + resume).
 
-Both sources register with ``register_data_sources(spark)`` and read
-via ``spark.read.format("stockops_rest")`` /
-``spark.readStream.format("stockops_frames")`` — plan-level sources,
+``stockops_cdc`` streams a ``ManifestStore``'s change feed with commit
+versions as offsets.  Its reader runs in Spark's Python streaming-source
+worker and reads the store's log through ``sources/commitlog.py``: the
+change planner and piece reader ``ManifestStore.read_changes`` uses.
+
+The sources register with ``register_data_sources(spark)`` and read via
+``spark.read.format("stockops_rest")`` /
+``spark.readStream.format("stockops_frames")`` /
+``spark.readStream.format("stockops_cdc")`` — plan-level sources,
 prunable and AQE-visible, not driver loops.
 """
 
@@ -252,7 +258,7 @@ class FrameLogStreamReader(SimpleDataSourceStreamReader):
 
 
 def register_data_sources(spark) -> None:
-    """Idempotently register both sources with a session."""
+    """Idempotently register the sources with a session."""
     for cls in (
         RestHistoricalDataSource,
         FrameLogDataSource,
@@ -289,12 +295,16 @@ class ManifestCDCDataSource(DataSource):
 
     Options: ``store_root`` (the ManifestStore root), ``mode``,
     ``provider``/``exchange`` (layout, defaults EODHD/US).  Each
-    micro-batch drains commits (start, latest]; ingest commits derive
-    their rows from the committed batch dirs exactly like
-    ``ManifestStore.read_changes`` (insert vs update_postimage by
-    version), merge/delete commits replay their published CDC files,
-    compact/checkpoint commits are invisible.  A cursor below the
-    vacuum horizon raises rather than silently skipping history."""
+    micro-batch drains commits (start, latest] — a deterministic replay
+    of the store's log, planned by the same ``change_pieces`` and read
+    by the same ``change_piece_arrow`` as ``ManifestStore.read_changes``
+    (``sources/commitlog.py``), so a cursor below the vacuum horizon or
+    across a retention recorded without row changes raises the same
+    ``VacuumedVersion`` / ``ChangeFeedGap`` rather than silently
+    skipping history.  The schema is the mode's declared columns plus
+    ``version``, the partition columns, ``_change_type`` and
+    ``_commit_version``: a column that exists only because the store's
+    schema evolved is not streamed."""
 
     @classmethod
     def name(cls) -> str:
@@ -308,12 +318,20 @@ class ManifestCDCDataSource(DataSource):
 
 
 class ManifestCDCStreamReader(SimpleDataSourceStreamReader):
+    """Runs in Spark's Python streaming-source worker, a process of its
+    own: it opens the store's log as a ``ManifestLog`` and reads every
+    piece of a span on the driver, whole (no row bound), through
+    ``change_piece_arrow`` — a piece that reader declines raises, it is
+    never skipped."""
+
     def __init__(self, options: dict):
         root = options.get("store_root")
         if not root:
             raise ValueError("stockops_cdc requires a 'store_root' option")
         self.mode = options.get("mode", "streaming")
-        from stock_ops_spark.sources.layout import mode_root
+        from stock_ops_spark import schemas as S
+        from stock_ops_spark.sources.commitlog import store_log
+        from stock_ops_spark.sources.layout import PARTITION_COLS, mode_root
 
         self.data_root = mode_root(
             root,
@@ -321,107 +339,49 @@ class ManifestCDCStreamReader(SimpleDataSourceStreamReader):
             options.get("provider", "EODHD"),
             options.get("exchange", "US"),
         )
-        self.log_dir = self.data_root + "__log"
-        from stock_ops_spark import schemas as S
-        from stock_ops_spark.sources.layout import PARTITION_COLS
-
+        self.log = store_log(self.data_root)
+        self.parts = PARTITION_COLS[self.mode]
         self.cols = (
             [f.name for f in S.SCHEMAS[self.mode].fields]
             + ["version"]
-            + PARTITION_COLS[self.mode]
+            + self.parts
             + ["_change_type", "_commit_version"]
         )
-
-    # -- log primitives (executor-side, so no ManifestStore object) -------
-    def _versions(self) -> list[int]:
-        try:
-            names = os.listdir(self.log_dir)
-        except OSError:
-            return []
-        return sorted(
-            int(n[:-5])
-            for n in names
-            if n.endswith(".json") and n[:-5].isdigit()
-        )
-
-    def _commit(self, v: int) -> dict:
-        with open(os.path.join(self.log_dir, f"{v:08d}.json")) as f:
-            return json.load(f)
 
     def initialOffset(self) -> dict:
         return {"version": 0}
 
-    def _rows_of_table(self, table, change_from_version: bool, cv: int):
-        import pyarrow as pa  # noqa: F401
-
-        cols = table.column_names
-        pydict = table.to_pydict()
-        n = table.num_rows
-        for i in range(n):
-            row = {c: pydict[c][i] for c in cols}
-            if change_from_version:
-                row["_change_type"] = (
-                    "update_postimage"
-                    if (row.get("version") or 1) > 1
-                    else "insert"
-                )
-            row["_commit_version"] = cv
-            yield tuple(row.get(c) for c in self.cols)
-
-    def _read_commit_rows(self, c: dict):
-        import pyarrow.dataset as ds
-
-        v = c["version"]
-        op = c["op"]
-        if op in ("compact", "checkpoint"):
-            return
-        if op == "retain" and not c.get("cdc"):
-            raise ValueError(
-                f"stockops_cdc cursor crosses retention commit {v} recorded "
-                "without row-level CDC (retain_before(cdc=False)); "
-                "re-bootstrap from a snapshot at a version >= it"
-            )
-        if c.get("cdc"):
-            table = ds.dataset(
-                os.path.join(self.log_dir, c["cdc"]), format="parquet"
-            ).to_table()
-            yield from self._rows_of_table(table, False, v)
-        elif op in ("ingest", "convert"):
-            # convert_from's adopted snapshot IS version 1's change set
-            # (same derivation as ingest: the rows carry their version);
-            # skipping it made a cursor-0 consumer miss every adopted row.
-            for d in c.get("adds", []):
-                table = ds.dataset(
-                    os.path.join(self.data_root, d),
-                    format="parquet",
-                    partitioning="hive",
-                ).to_table()
-                yield from self._rows_of_table(table, True, v)
-
     def _drain(self, start_v: int, end_v: int):
-        versions = self._versions()
-        if versions and versions[0] > 1 and start_v < versions[0]:
-            raise ValueError(
-                f"stockops_cdc cursor {start_v} is below the vacuum "
-                f"horizon {versions[0]}; re-bootstrap from a snapshot"
-            )
-        rows = []
-        for v in versions:
-            if start_v < v <= end_v:
-                rows.extend(self._read_commit_rows(self._commit(v)))
-        return rows
+        """The rows of commits (``start_v``, ``end_v``], column-wise in
+        the schema's order."""
+        from stock_ops_spark.sources.commitlog import (
+            change_piece_arrow,
+            change_pieces,
+        )
+
+        cols = {c: [] for c in self.cols}
+        for piece in change_pieces(self.log, start_v, end_v):
+            tbl = change_piece_arrow(self.data_root, self.parts, piece)
+            if tbl is None:
+                raise ValueError(
+                    f"stockops_cdc cannot read commit {piece[0]} of "
+                    f"{self.data_root} on the driver"
+                )
+            for c, vals in cols.items():
+                vals += (
+                    tbl[c].to_pylist() if c in tbl.column_names
+                    else [None] * tbl.num_rows
+                )
+        return zip(*cols.values())
 
     def read(self, start: dict):
-        versions = self._versions()
-        latest = versions[-1] if versions else 0
+        latest = self.log.version()
         if latest <= start["version"]:
             return iter([]), start
-        return iter(self._drain(start["version"], latest)), {
-            "version": latest
-        }
+        return self._drain(start["version"], latest), {"version": latest}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._drain(start["version"], end["version"]))
+        return self._drain(start["version"], end["version"])
 
     def commit(self, end: dict) -> None:  # offsets live in the checkpoint
         pass

@@ -88,7 +88,7 @@ class StreamingNearDupIndex(FoldStateIndex):
     def process_batch(self, batch: DataFrame) -> int:
         """Probe ``batch`` against the index, append its signatures, and
         return the number of advisory near-dup flags written."""
-        st = self._snapshot()
+        st = self.log.state()
         seq = self._next_seq(st)
         sh = shingle_sets(batch, self.id_col, self.text_col, n=self.shingle_n)
         # pinned: signatures are consumed by the probe AND the write
@@ -195,7 +195,7 @@ class StreamingNearDupIndex(FoldStateIndex):
         Call every N batches from ``foreachBatch`` or as a nightly job.
         Returns per-dataset file counts after maintenance.
         """
-        st = self._snapshot()
+        st = self.log.state()
         # peg the cutoff to the writer's next seq, not max(file)
         cutoff = None if max_batches is None else self._next_seq(st) - max_batches
         age_cutoff = None if flags_max_age_s is None else time.time() - flags_max_age_s

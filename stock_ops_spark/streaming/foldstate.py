@@ -18,9 +18,6 @@ per epoch (Structured Streaming, SIGMOD'18):
   goes the same way.
 - **reads** take one snapshot, one ``spark.read.parquet(*dirs)`` per
   part; a single writer's lost ``try_commit`` raises ``CommitConflict``.
-
-A fold root written before the log converts into version 1 on first
-open, keeping the rows of committed seqs only.
 """
 
 from __future__ import annotations
@@ -43,22 +40,13 @@ class FoldState:
         self.root = root
         self.log = ManifestLog(os.path.join(root, "_log"))
 
-    def _snapshot(self) -> dict:
-        """The log's state, once a root from before the log converted."""
-        st = self.log.state()
-        return st if st["version"] else self._convert(st)
-
-    def _convert(self, st: dict) -> dict:
-        """Hook: adopt a root written before the log (default: none)."""
-        return st
-
     @staticmethod
     def _dirs(st: dict, part: str) -> list[str]:
         return [d for d in st["dirs"] if d.rsplit("-", 1)[0] == part]
 
     def _existing(self, part: str, st: dict | None = None) -> DataFrame | None:
         """``part``'s rows in ``st`` (default: the current snapshot)."""
-        st = st or self._snapshot()
+        st = st or self.log.state()
         dirs = [os.path.join(self.root, d) for d in self._dirs(st, part)]
         return self.spark.read.parquet(*dirs) if dirs else None
 
@@ -94,7 +82,7 @@ class FoldState:
 
     def _file_count(self, part: str, st: dict | None = None) -> int:
         """Data files in ``part``'s live dirs (the maintain trigger)."""
-        st = st or self._snapshot()
+        st = st or self.log.state()
         return sum(
             f.endswith(".parquet") for d in self._dirs(st, part)
             for f in os.listdir(os.path.join(self.root, d))
@@ -118,32 +106,6 @@ class FoldStateIndex(FoldState):
     def _publish_fold(self, st: dict, seq: int, dirs: list[str]) -> None:
         self._publish(st, {d: {"seq": seq} for d in dirs})
 
-    def _convert(self, st: dict) -> dict:
-        """Version 1 from a root written before the log: each part's
-        dataset (live dir first, then an interrupted swap's staging and
-        aside dirs) less the rows of seqs whose marker kept its suffix
-        (a fold that crashed mid-append)."""
-        frames, marks = {}, os.path.join(self.root, "_commits")
-        names = os.listdir(marks) if os.path.isdir(marks) else []
-        crashed = [int(n.partition(".")[0]) for n in names if not n.isdigit()]
-        seq = max((int(n) for n in names if n.isdigit()), default=-1)
-        for part in self.PARTS:
-            src = next((p for p in (os.path.join(self.root, part + s) for s in (
-                "", ".tmp", ".old")) if os.path.isdir(p)), None)
-            if src is None:
-                continue
-            df = self.spark.read.option("mergeSchema", "true").parquet(src)
-            old = F.col("batch_seq") if "batch_seq" in df.columns else F.lit(None)
-            df = df.withColumn("batch_seq", F.coalesce(old, F.lit(0)))  # pre-seq: 0
-            frames[part] = df.where(~F.col("batch_seq").isin(crashed))
-            top = frames[part].agg(F.max("batch_seq")).first()[0]
-            seq = max(seq, -1 if top is None else top)
-        if not frames:
-            return st
-        return self._rewrite(
-            st, {self._write(p, df): {"seq": seq} for p, df in frames.items()}
-        )
-
     def _compact_df(self, part: str, df: DataFrame) -> DataFrame:
         """Hook: transform ``part``'s rows during a maintain rewrite
         (e.g. merge log-structured partials).  Default: identity."""
@@ -155,7 +117,7 @@ class FoldStateIndex(FoldState):
         of slack) down to ``target_files``, in one rewrite commit.  No
         retention knob: the state IS the fold memory.  Returns per-part
         file counts after maintenance."""
-        st = self._snapshot()
+        st = self.log.state()
         return self._compact(
             st, {p: (self._existing(p, st), False) for p in self.PARTS},
             target_files,

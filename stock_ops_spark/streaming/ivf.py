@@ -86,7 +86,7 @@ class StreamingIVFIndex(FoldStateIndex):
         (0 for an identical re-delivery).  Two Spark jobs."""
         from pyspark.sql import Observation
 
-        st = self._snapshot()
+        st = self.log.state()
         seq = self._next_seq(st)
         fps = batch.select(
             F.col(self.id_col).alias("vec_id"),
@@ -220,7 +220,7 @@ def from_artifact(
         spark, root, _load_centroid_rows(index["centroids"]),
         id_col=id_col, vec_col=vec_col,
     )
-    st = idx._snapshot()
+    st = idx.log.state()
     if not idx._dirs(st, "assign"):
         seq = idx._next_seq(st)
         rows = index["assign"].select("vec_id", "cid", "fp")

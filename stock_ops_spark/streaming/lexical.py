@@ -86,7 +86,7 @@ class StreamingLexicalIndex(FoldStateIndex):
         Four driver actions warm (checkpoint + three writes)."""
         from pyspark.sql import Observation
 
-        st = self._snapshot()
+        st = self.log.state()
         seq = self._next_seq(st)
         fps = batch.select(
             F.col(self.id_col).alias("id"),
@@ -182,7 +182,7 @@ class StreamingLexicalIndex(FoldStateIndex):
         """The batch artifact's three tables from the streamed state
         (``batch_seq`` dropped, df partials merged), or None before the
         first batch."""
-        st = self._snapshot()
+        st = self.log.state()
         dl = self._existing("dl", st)
         if dl is None:
             return None

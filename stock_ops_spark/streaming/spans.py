@@ -128,7 +128,7 @@ class StreamingSpanIndex(FoldStateIndex):
         """The batch artifact's three tables from the streamed state
         (postings, docstats, gramstats — ``batch_seq`` dropped,
         partials merged), or None before the first batch."""
-        st = self._snapshot()
+        st = self.log.state()
         posts = self._existing("postings", st)
         ds = self._existing("docstats", st)
         gs = self._gramstats_view(st)
@@ -166,7 +166,7 @@ class StreamingSpanIndex(FoldStateIndex):
         postings TWICE (checkpoint + append)."""
         from pyspark.sql import Observation, Window
 
-        st = self._snapshot()
+        st = self.log.state()
         seq = self._next_seq(st)
         # not checkpointed (r10 trim): each reuse recomputes one cheap
         # map-side md5+split over the batch — less than a checkpoint

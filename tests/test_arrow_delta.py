@@ -262,7 +262,7 @@ def test_compaction_on_driver_matches_spark_rewrite(spark, tmp_path, monkeypatch
     calls.clear()
     assert driver.compact("streaming")["rewritten"] == 4
     assert calls == [True]  # the rewrite ran on the driver
-    monkeypatch.setattr(CL.ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    monkeypatch.setattr(CL, "_read_dirs_arrow", lambda *a, **kw: None)
     calls.clear()
     assert spark_side.compact("streaming")["rewritten"] == 4
     assert calls == []

@@ -766,10 +766,12 @@ def test_read_where_prunes_dirs_by_ts_and_ticker(spark, mstore, monkeypatch):
     of the others), and the residual filter keeps semantics exact.
     Pinned on the Spark path, the one a read over the driver bound
     takes."""
+    import stock_ops_spark.sources.commitlog as cl
+
     for k in range(3):
         mstore.ingest_batch(_df(spark, _rows_at(k)), MODE)
     mstore.ingest_batch(_df(spark, _rows_at(1, ticker="VOO")), MODE)
-    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    monkeypatch.setattr(cl, "_read_dirs_arrow", lambda *a, **kw: None)
     stats = {}
     ts1 = 1751463000 + 86400
     df = mstore.read_where(
@@ -839,21 +841,19 @@ def test_read_where_meta_survives_compaction_and_vacuum(spark, mstore):
 
 
 def test_read_where_unknown_meta_is_read_not_skipped(spark, mstore):
-    """A dir committed without bounds (pre-feature log) must always be
-    read — pruning may only use proven-disjoint bounds."""
-    mstore.ingest_batch(_df(spark, _rows_at(0)), MODE)
-    log = mstore.log(MODE)
-    # strip the recorded meta, simulating an old commit
-    import json as _json
+    """A dir whose recorded time bounds are unknown — [None, None], every
+    time in it NULL — must be read by a range read: pruning may only use
+    proven-disjoint bounds, and the residual filter keeps semantics
+    exact."""
+    from pyspark.sql import types as T
 
-    path = log._path(1)
-    with open(path) as f:
-        doc = _json.load(f)
-    doc.pop("meta", None)
-    import os as _os
-
-    _os.remove(path)
-    log.try_commit(1, doc)
+    nullable = T.StructType([
+        T.StructField(f.name, f.dataType, True) for f in S.HISTORICAL_INTRADAY
+    ])
+    row = ("SPY", None, 1.0, 2.0, 0.5, 1.5, 100, "1h")
+    mstore.ingest_batch(spark.createDataFrame([row], nullable), MODE)
+    (d,) = mstore.log(MODE).state()["dirs"]
+    assert mstore.log(MODE).state()["meta"][d]["timestamp_UTC_s"] == [None, None]
     stats = {}
     df = mstore.read_where(MODE, ts_min=9999999999, stats=stats)
     assert stats["dirs_read"] == 1  # unknown bounds: must scan
@@ -1072,14 +1072,16 @@ def test_read_changes_includes_convert_commit(spark, tmp_path, mstore):
     }
     assert counts == {"insert": 3, "update_postimage": 1}
     assert feed.select("_commit_version").distinct().collect()[0][0] == 1
-    # and the streaming CDC reader agrees (same derivation, arrow path)
+    # and the stockops_cdc stream reader agrees (same planner and reader)
     from stock_ops_spark.sources.pyds import ManifestCDCStreamReader
 
     rdr = ManifestCDCStreamReader(
         {"store_root": mstore.root, "mode": MODE}
     )
-    rows = list(rdr._read_commit_rows(rdr._commit(1)))
-    assert len(rows) == 4
+    rows = list(rdr.readBetweenOffsets({"version": 0}, {"version": 1}))
+    kinds = [r[rdr.cols.index("_change_type")] for r in rows]
+    assert sorted(kinds) == ["insert"] * 3 + ["update_postimage"]
+    assert {r[rdr.cols.index("_commit_version")] for r in rows} == {1}
 
 
 def test_vacuum_stops_on_failed_remove_no_gap(spark, mstore, monkeypatch):

@@ -7,8 +7,10 @@ with nothing shared but the filesystem).
 Pins: the commit log is a GAPLESS linear version sequence, both
 writers' rows land exactly once with correct stats, and at least one
 loser actually walked the CommitConflict-recompute path (children
-count conflicts and report them; the start barrier makes the first
-round a near-certain collision)."""
+count conflicts and report them).  The first round collides for
+certain: each child touches ``attempted-<i>`` before its first
+``try_commit`` and waits until both files exist, so both publish
+version 1 from the same base."""
 
 from __future__ import annotations
 
@@ -38,6 +40,13 @@ store = ManifestStore(spark, {root!r})
 conflicts = [0]
 _orig = ManifestLog.try_commit
 def counting(self, version, payload):
+    if not os.path.exists({attempted!r}):
+        open({attempted!r}, "w").close()
+        deadline = time.time() + 300
+        while not all(os.path.exists(p) for p in {both!r}):
+            if time.time() > deadline:
+                raise RuntimeError("the rival writer never reached its commit")
+            time.sleep(0.01)
     try:
         return _orig(self, version, payload)
     except CommitConflict:
@@ -67,6 +76,7 @@ def test_two_process_commit_race_gapless_exactly_once(spark, tmp_path):
     root = str(tmp_path / "mstore")
     go = str(tmp_path / "go")
     procs, readies = [], []
+    both = [str(tmp_path / f"attempted-{i}") for i in range(2)]
     for i, ticker in enumerate(("AAA", "BBB")):
         ready = str(tmp_path / f"ready-{i}")
         readies.append(ready)
@@ -75,6 +85,7 @@ def test_two_process_commit_race_gapless_exactly_once(spark, tmp_path):
             _CHILD.format(
                 repo=REPO, app=f"mrace-{i}", root=root, ready=ready,
                 go=go, rounds=ROUNDS, ticker=ticker, mode=MODE,
+                attempted=both[i], both=both,
             )
         )
         procs.append(

@@ -29,6 +29,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.localrel import arrow_table
+from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.ingest import versioned_delta_arrow
 from stock_ops_spark.sources.reader import EmptyReadError, ReadProcess
@@ -134,7 +135,7 @@ def _bits(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def _spark_path():
     """Force the Spark path: the driver read declines, as over the bound."""
-    return mock.patch.object(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    return mock.patch.object(CL, "_read_dirs_arrow", lambda *a, **kw: None)
 
 
 def _read(store, mode, args, spark_path: bool):
@@ -288,8 +289,6 @@ def test_read_where_decides_from_recorded_counts(spark, tmp_path, driver_reads, 
     footer counted; dirs wholly inside the range that already hold
     more go to Spark with no dataset opened; only a read in between
     counts its fragments' footers."""
-    import stock_ops_spark.sources.commitlog as CL
-
     store = _day_store(spark, tmp_path)
     monkeypatch.setattr(CL, "MICRO_COMMIT_ROWS", 30)
     base = 1755526571834
@@ -319,8 +318,6 @@ def test_change_feed_decides_from_recorded_counts(spark, tmp_path, driver_reads,
     """An ingest-only span whose recorded row counts sum over the bound
     goes to the Spark reads with no dir opened; one within it is read on
     the driver with no footer counted."""
-    import stock_ops_spark.sources.commitlog as CL
-
     store = _day_store(spark, tmp_path)
     monkeypatch.setattr(CL, "MICRO_COMMIT_ROWS", 59)
     df = store.read_changes("streaming")

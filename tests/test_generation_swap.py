@@ -162,7 +162,7 @@ def test_foldstate_maintain_crash_at_every_boundary(spark, tmp_path, monkeypatch
     base = str(tmp_path / "fs")
     idx = _OneTable(spark, base)
     for seq in range(4):
-        st = idx._snapshot()
+        st = idx.log.state()
         rows = spark.range(seq * 5, seq * 5 + 5).coalesce(1)
         idx._publish_fold(st, seq, [idx._append("t", rows, seq)])
     assert idx._file_count("t") == 4
@@ -257,7 +257,7 @@ def test_reader_before_a_rewrite_collects_its_whole_generation(spark, tmp_path):
     of the log, but they stay on disk until the next rewrite."""
     idx = _OneTable(spark, str(tmp_path / "fs"))
     for seq in range(4):
-        st = idx._snapshot()
+        st = idx.log.state()
         rows = spark.range(seq * 5, seq * 5 + 5).coalesce(1)
         idx._publish_fold(st, seq, [idx._append("t", rows, seq)])
     old = idx._existing("t")

@@ -41,3 +41,18 @@ def test_arrow_relation_remembers_its_table_for_that_frame_only(spark):
     assert arrow_table(df).equals(tbl)
     assert arrow_table(df.select("n")) is None
     assert arrow_table(local_relation(spark, [("AAPL", 1)], SCHEMA)) is not None
+
+
+def test_arrow_relation_keeps_rows_after_an_empty_batch(spark):
+    """``createDataFrame`` of an Arrow table drops every row after an
+    empty record batch that follows a non-empty one — the shape of a
+    change feed whose span holds an empty change-data file."""
+    import pyarrow as pa
+
+    from stock_ops_spark.localrel import arrow_relation
+
+    one = pa.table({"x": pa.array([1], pa.int64())})
+    tbl = pa.concat_tables(
+        [one, one.slice(0, 0), pa.table({"x": pa.array([2, 3], pa.int64())})]
+    )
+    assert sorted(r.x for r in arrow_relation(spark, tbl).collect()) == [1, 2, 3]

@@ -303,49 +303,28 @@ def test_sync_is_exactly_once_and_cursor_atomic(spark, tmp_path):
     _assert_view_equals_recompute(mv, store)
 
 
-def test_sync_refuses_view_without_cursor(spark, tmp_path):
-    """Partials on disk with no cursor (a view written by the older
-    per-delta refresh path, or a torn install) cannot be folded onto:
-    sync refuses rather than refolding history on top of them, and
-    init_from_snapshot heals the view."""
-    store = ManifestStore(spark, str(tmp_path / "cstore"))
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
-    mv = MatView(spark, str(tmp_path / "cmv"), ["ticker"], SUB_MEASURES)
-    mv._partial(store.read_all(MODE)).write.parquet(mv.path)
-    assert mv.cursor() is None
-    with pytest.raises(ValueError, match="init_from_snapshot"):
-        mv.sync(store, MODE)
-    assert mv.init_from_snapshot(store, MODE) == 1
-    store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
-    assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
-    _assert_view_equals_recompute(mv, store)
-
-
-def test_view_written_before_the_log_is_adopted_with_its_cursor(
-    spark, tmp_path
-):
-    """A view dir from before the log (partials as plain files plus a
-    ``_mv_cursor.json``) becomes version 1 of the view's log on first
-    open, with its cursor: the next sync folds only the later commits,
-    never the feed from 0, and the old files are gone."""
-    import json
+def test_stray_files_in_view_root_are_not_read_and_swept(spark, tmp_path):
+    """Only the dirs the view's log lists are the view: partials left in
+    its root by anything else (loose part files, an unreferenced view
+    dir) are not read, so a fresh view folds the feed from version 0
+    without counting them, and the first install sweeps them."""
     import os
 
     store = ManifestStore(spark, str(tmp_path / "cstore"))
     store.ingest_batch(_fact_df(spark, CDC_ROWS_A), MODE)
     mv = MatView(spark, str(tmp_path / "cmv"), ["ticker"], SUB_MEASURES)
-    mv._partial(store.read_all(MODE)).coalesce(1).write.parquet(mv.path)
-    with open(os.path.join(mv.path, "_mv_cursor.json"), "w") as f:
-        json.dump({"version": 1}, f)
-
-    assert mv.cursor() == 1
-    assert mv.log.version() == 1
+    stray = mv._partial(store.read_all(MODE))
+    stray.write.parquet(mv.path)
+    stray.write.parquet(os.path.join(mv.path, "view-deadbeef0000"))
+    assert mv.cursor() is None and mv.read() is None
+    assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_A)
+    _assert_view_equals_recompute(mv, store)
+    assert sorted(os.listdir(mv.path)) == sorted(
+        ["_log", *mv.log.state()["dirs"]]
+    )
     store.ingest_batch(_fact_df(spark, CDC_ROWS_B), MODE)
     assert mv.sync(store, MODE)["pos_rows"] == len(CDC_ROWS_B)
     _assert_view_equals_recompute(mv, store)
-    assert all(
-        n == "_log" or n.startswith("view-") for n in os.listdir(mv.path)
-    )
 
 
 def test_sync_advances_cursor_over_compaction_only_span(spark, tmp_path):

@@ -134,8 +134,8 @@ def test_ingest_falls_back_and_stays_correct_on_decimal_payload(
 
 def test_meta_of_matches_spark_dir_meta(spark):
     """A dir's meta from the driver's grouped stats equals the one from
-    Spark's, and its bounds, count and stats rows equal Spark
-    aggregates of the same rows."""
+    Spark's, and its bounds, count and stats rows (non-NULL time counts
+    included) equal Spark aggregates of the same rows."""
     routed = with_partition_cols(
         _batch(spark, [(None, None, 1.0, 1, None, None, None, None)]),
         "streaming", "America/New_York",
@@ -157,10 +157,13 @@ def test_meta_of_matches_spark_dir_meta(spark):
     ).collect()[0]
     assert [got["ticker"], got[ts], got["n"]] == [[b[0], b[1]], [b[2], b[3]], b[4]]
     want = batch_stats(routed, "streaming", False).collect()
-    assert rows(got) == sorted(
+    cols = [got["stats"][c] for c in ("ticker", "rc", "lo", "hi")]
+    assert sorted(zip(*cols), key=repr) == sorted(
         ((r["ticker"], r["row_count"], r["min_ts"], r["max_ts"]) for r in want),
         key=repr,
     )
+    nts = routed.groupBy("ticker").agg(F.count(ts)).collect()
+    assert dict(zip(got["stats"]["ticker"], got["stats"]["nts"])) == dict(nts)
 
 
 def test_materialize_micro_counts_and_parallelism(spark):

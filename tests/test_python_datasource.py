@@ -271,7 +271,7 @@ def test_manifest_cdc_stream_drains_and_resumes(pyds, tmp_path):
 
 def test_manifest_cdc_cursor_below_vacuum_horizon_raises(pyds, tmp_path):
     from stock_ops_spark import schemas as S
-    from stock_ops_spark.sources.commitlog import ManifestStore
+    from stock_ops_spark.sources.commitlog import ManifestStore, VacuumedVersion
     from stock_ops_spark.sources.pyds import ManifestCDCStreamReader
 
     MODE = "historical_intraday"
@@ -285,7 +285,7 @@ def test_manifest_cdc_cursor_below_vacuum_horizon_raises(pyds, tmp_path):
     reader = ManifestCDCStreamReader(
         {"store_root": str(tmp_path / "m"), "mode": MODE}
     )
-    with pytest.raises(ValueError, match="vacuum horizon"):
+    with pytest.raises(VacuumedVersion, match="vacuumed"):
         reader.readBetweenOffsets({"version": 2}, {"version": 5})
     # a cursor at/above the horizon drains fine (checkpoint commit is
     # invisible; only commit 5 carries changes)

@@ -1,9 +1,10 @@
 """Spark-free pins on how the repository's own scripts and harnesses
 reach the code: every ``sys.path`` insert resolves the checkout the file
 lives in, every engine attribute the perfbench tracer wraps exists, the
-change feed stays the only way to learn of a store commit, each batch
-stays one commit, and the store builds its local relations through
-``localrel``.
+change feed stays the only way to learn of a store commit and has one
+planner, each batch stays one commit, the store builds its local
+relations through ``localrel``, and no reader of a pre-log format
+comes back.
 """
 
 from __future__ import annotations
@@ -209,6 +210,45 @@ def test_stats_ride_the_manifest_only():
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), path)
         hits = banned.intersection(_names(tree))
+        if hits:
+            offenders.append((os.path.relpath(path, REPO), sorted(hits)))
+    assert not offenders, offenders
+
+
+def test_stockops_cdc_reads_through_the_change_planner():
+    """The ``stockops_cdc`` stream and ``read_changes`` plan and read the
+    feed with the same two functions of ``sources/commitlog.py``: the
+    stream reader's own log listing, commit opener and row derivation
+    were deleted, and nothing may bring one back."""
+    path = os.path.join(REPO, "stock_ops_spark", "sources", "pyds.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    defined = {
+        n.name for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    banned = {"_versions", "_commit", "_read_commit_rows", "_rows_of_table"}
+    assert not defined & banned, sorted(defined & banned)
+    assert {"change_pieces", "change_piece_arrow"} <= set(_names(tree))
+
+
+def test_no_reader_of_pre_log_formats():
+    """Every fold root and view is written through its ``ManifestLog``:
+    the adoption of roots written before it (the per-seq ``_commits``
+    markers, the view's plain partials and ``_mv_cursor`` file, the
+    ``_convert`` hooks) was deleted, and nothing may bring one back."""
+    offenders = []
+    for path in _py_files("stock_ops_spark"):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        names = set(_names(tree))
+        hits = {"_legacy", "_commits"} & names
+        hits.update("_mv_cursor" for n in names if "_mv_cursor" in n)
+        hits.update(
+            "_convert" for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.name == "_convert"
+        )
         if hits:
             offenders.append((os.path.relpath(path, REPO), sorted(hits)))
     assert not offenders, offenders

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from stock_ops_spark import catalog
 from stock_ops_spark import schemas as S
 from stock_ops_spark.plans import audit as A
+from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.reader import ReadProcess
 
@@ -74,7 +75,7 @@ def test_store_read_prunes_partitions(spark, tmp_path, monkeypatch):
     enumeration — but done by Catalyst).  Pinned on the Spark path, the
     one a read over the driver bound takes."""
     store = _three_day_store(spark, tmp_path)
-    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    monkeypatch.setattr(CL, "_read_dirs_arrow", lambda *a, **kw: None)
 
     rp = ReadProcess(store)
     out = rp.read_dt_range(
@@ -146,7 +147,7 @@ def test_cross_year_read_prunes_months(spark, tmp_path, monkeypatch):
     metrics that only the two boundary months were read (the Spark
     path, forced)."""
     store = _six_month_store(spark, tmp_path)
-    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    monkeypatch.setattr(CL, "_read_dirs_arrow", lambda *a, **kw: None)
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")  # unwrapped scan node

@@ -1,11 +1,14 @@
-"""Stats recorded in the commit meta stay exact.
+"""Stats recorded in the commit meta stay exact, and the change feed has
+one meaning.
 
 ``ManifestStore.table_stats`` / ``interval_stats`` fold the per-key stats
 each live batch dir records in its commit meta.  After every operation of
 a random sequence — ingests with re-sends and NULL keys, merge, delete,
 retention with and without CDC, compaction, restore and vacuum — both
 views must equal ``batch_stats`` over the snapshot (``read_all``), column
-names and types as well as rows, in all three modes.
+names and types as well as rows, in all three modes; and the
+``stockops_cdc`` stream reader must yield what ``read_changes`` returns
+over the whole log, or raise the same exception.
 """
 
 from __future__ import annotations
@@ -22,7 +25,12 @@ from pyspark.sql import types as T
 
 from stock_ops_spark import schemas as S
 from stock_ops_spark.operators.stats import batch_stats
-from stock_ops_spark.sources.commitlog import ManifestStore
+from stock_ops_spark.sources.commitlog import (
+    ChangeFeedGap,
+    ManifestStore,
+    VacuumedVersion,
+)
+from stock_ops_spark.sources.pyds import ManifestCDCStreamReader
 
 DAY0 = dt.date(2025, 7, 1)
 INTERVALS = {"historical_interday": ("d", "w"),
@@ -141,6 +149,30 @@ def _check(spark, store, mode: str) -> None:
         ), (which, mode)
 
 
+def _outcome(rows):
+    """``rows()`` sorted, or the class of the feed error it raised."""
+    try:
+        return sorted(rows(), key=repr)
+    except (VacuumedVersion, ChangeFeedGap) as e:
+        return type(e)
+
+
+def _check_feed(store, mode: str) -> None:
+    """Commits (0, head] through the stream reader, called directly (no
+    streaming query), against ``read_changes`` on the stream's
+    columns."""
+    rdr = ManifestCDCStreamReader({"store_root": store.root, "mode": mode})
+    head = {"version": store.version(mode)}
+
+    def batch():
+        df = store.read_changes(mode, 0)
+        return [] if df is None else map(tuple, df.select(*rdr.cols).collect())
+
+    assert _outcome(
+        lambda: rdr.readBetweenOffsets({"version": 0}, head)
+    ) == _outcome(batch), mode
+
+
 @pytest.mark.parametrize("mode", sorted(S.SCHEMAS))
 @settings(
     max_examples=3,
@@ -157,6 +189,7 @@ def test_stats_exact_after_random_ops(spark, mode, ops):
         for op in ops:
             _apply(spark, store, mode, op, sent)
             _check(spark, store, mode)
+            _check_feed(store, mode)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -182,3 +215,52 @@ def test_retain_of_whole_dirs_runs_no_job(spark, tmp_path, spark_jobs):
         ("SPY", 4, _ts(mode, 2), _ts(mode, 3)),
         ("VOO", 4, _ts(mode, 2), _ts(mode, 3)),
     ]
+
+
+def _keys(df, mode: str) -> list:
+    tsc = S.TS_COL[mode]
+    return sorted(
+        ((r["ticker"], r[tsc]) for r in df.select("ticker", tsc).collect()),
+        key=repr,
+    )
+
+
+def test_retain_keeps_null_times_of_a_straddling_dir(spark, tmp_path):
+    """One dir holding a row before the cutoff, a NULL-time row and a
+    row after it: only the expired row leaves, and it is the feed's one
+    delete."""
+    mode = "streaming"
+    store = ManifestStore(spark, str(tmp_path / "s"), auto_compact_every=0)
+    rows = [("SPY", 0, 0, 1.0), ("VOO", None, 0, 1.0), ("SPY", 3, 0, 1.0)]
+    store.ingest_batch(_frame(spark, mode, rows), mode)
+    store.retain_before(mode, _ts(mode, 2), cdc=True)
+    assert _keys(store.read_all(mode), mode) == sorted(
+        [("VOO", None), ("SPY", _ts(mode, 3))], key=repr
+    )
+    feed = store.read_changes(mode, 1)
+    assert [(r["_change_type"], r["ticker"]) for r in feed.collect()] == [
+        ("delete", "SPY")
+    ]
+    _check(spark, store, mode)
+    _check_feed(store, mode)
+
+
+def test_retain_of_expired_dir_keeps_its_null_times(spark, tmp_path):
+    """A dir whose times all lie below the cutoff but which holds a
+    NULL-time row is rewritten, not dropped whole: the NULL-time row
+    stays, and the feed's deletes are exactly the rows that left."""
+    mode = "historical_interday"
+    store = ManifestStore(spark, str(tmp_path / "s"), auto_compact_every=0)
+    expired = [("SPY", 0, 0, 1.0), ("SPY", 1, 0, 1.0), ("VOO", None, 0, 1.0)]
+    store.ingest_batch(_frame(spark, mode, expired), mode)
+    store.ingest_batch(_frame(spark, mode, [("SPY", 3, 0, 1.0)]), mode)
+    before = _keys(store.read_all(mode), mode)
+    res = store.retain_before(mode, _ts(mode, 2), cdc=True)
+    assert res["deleted_dirs"] == 0 and res["rewritten_dirs"] == 1
+    after = _keys(store.read_all(mode), mode)
+    assert after == sorted([("VOO", None), ("SPY", _ts(mode, 3))], key=repr)
+    feed = store.read_changes(mode, 2)
+    assert {r["_change_type"] for r in feed.collect()} == {"delete"}
+    assert _keys(feed, mode) == [k for k in before if k not in after]
+    _check(spark, store, mode)
+    _check_feed(store, mode)

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_ops_spark import schemas as S
+from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources.commitlog import ChangeFeedGap, ManifestStore
 from stock_ops_spark.sources.pyds import register_data_sources
 from stock_ops_spark.sources.reader import ReadProcess
@@ -154,7 +155,7 @@ def test_readprocess_uses_commit_level_skipping(spark, mstore, monkeypatch):
     for ts in (JAN, FEB, MAR):
         mstore.ingest_batch(_df(spark, [_row(ts), _row(ts, "VOO")]), MODE)
     # the Spark path, as a read over the driver bound takes it
-    monkeypatch.setattr(ManifestStore, "_read_dirs_arrow", lambda *a, **kw: None)
+    monkeypatch.setattr(CL, "_read_dirs_arrow", lambda *a, **kw: None)
     rp = ReadProcess(mstore)
     out = rp.read_dt_range(MODE, "SPY", "2025-02-01 00:00", "2025-02-28 23:59")
     assert [r["timestamp_UTC_s"] for r in out.collect()] == [FEB]

@@ -46,6 +46,7 @@ def dir_meta(n: int) -> dict:
         "stats": {
             "ticker": tickers,
             "rc": [ROWS // TICKERS] * TICKERS,
+            "nts": [ROWS // TICKERS] * TICKERS,
             "lo": [t0 + i for i in range(TICKERS)],
             "hi": [t0 + 59_999 - i for i in range(TICKERS)],
         },
