@@ -21,9 +21,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "que", "es", "una", "por", "con"),
 }
 
-EN_STOPWORDS = LANG_STOPWORDS["en"]
-
-
 def tokens(text: Column) -> Column:
     """Whitespace tokenization with empty tokens removed."""
     return F.filter(F.split(text, r"\s+"), lambda t: t != F.lit(""))
@@ -66,14 +63,6 @@ def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are not letter/digit/space."""
     stripped = F.regexp_replace(text, r"[\p{L}\p{N}\s]", "")
     return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
-
-
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    """Fraction of tokens that are (lowercased) stopwords."""
-    toks = F.transform(tokens(text), F.lower)
-    sw = F.array(*[F.lit(w) for w in stopwords])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
 
 
 def mean_token_len(text: Column) -> Column:
@@ -159,8 +148,3 @@ def normalized_text(text: Column) -> Column:
 def fingerprint_md5(text: Column) -> Column:
     """Content fingerprint = md5 of normalized text (exact-dup key)."""
     return F.md5(normalized_text(text))
-
-
-def fingerprint64(text: Column) -> Column:
-    """64-bit rolling-hash-style fingerprint (xxhash64 of normalized text)."""
-    return F.xxhash64(normalized_text(text))

@@ -35,11 +35,6 @@ def normalize_ts_to_seconds(ts: Column) -> Column:
     )
 
 
-def ts_from_epoch_any(ts: Column) -> Column:
-    """Epoch int of unknown unit → TimestampType (UTC)."""
-    return F.timestamp_seconds(normalize_ts_to_seconds(ts))
-
-
 def epoch_s_to_local(ts_s: Column, tz: str) -> Column:
     """Epoch seconds → exchange-local wall-clock timestamp
     (reference utcts_to_tzstr, data/utils.py:124-136)."""
@@ -48,20 +43,6 @@ def epoch_s_to_local(ts_s: Column, tz: str) -> Column:
 
 def epoch_ms_to_local(ts_ms: Column, tz: str) -> Column:
     return F.from_utc_timestamp(F.timestamp_millis(ts_ms), tz)
-
-
-def local_to_epoch_s(local_ts: Column, tz: str) -> Column:
-    """Exchange-local wall time → epoch seconds (reference tzstr_to_utcts,
-    data/utils.py:139-145)."""
-    return F.unix_timestamp(F.to_utc_timestamp(local_ts, tz))
-
-
-def event_date_parts(ts_s: Column, tz: str) -> tuple[Column, Column, Column]:
-    """(year, month, day) of the event in exchange-local time — the
-    partition-routing triple (reference get_db_filename_for_date,
-    data/utils.py:62-76)."""
-    local = epoch_s_to_local(ts_s, tz)
-    return F.year(local), F.month(local), F.dayofmonth(local)
 
 
 def is_valid_isodate(s: Column) -> Column:

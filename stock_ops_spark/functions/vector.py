@@ -40,18 +40,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def simhash64(a: Column) -> Column:
     """Sign-bit sketch of the first 64 dims: bit i set iff a[i] > 0.
     For 64-d embeddings this is a full sign sketch; hamming distance on it

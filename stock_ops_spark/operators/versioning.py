@@ -1,94 +1,15 @@
-"""Dedup + conflict-versioning semantics (reference A3/A4/O5).
-
-Reference behavior (``src/stockops/data/database/sql_db.py:455-553``):
-- an incoming row whose index key matches an existing row AND whose entire
-  payload (including NULLs) equals that row → skipped (exact duplicate, A3)
-- same key but different payload → stored with version = max(existing)+1 (A4)
-- readers see all versions; the "current" view is the max-version row (O5)
-
-Spark-first shape: the store is an **append-only versioned log on plain
-Parquet** — exactly the reference's semantics (it never updates in place) —
-so no Delta/MERGE machinery is required.  Version assignment is a window
-``row_number`` per key over a deterministic tiebreak, offset by the prior
-max per key obtained with an aggregated broadcast-able join (NOT a row-level
-lookup).  All comparisons use null-safe equality (SURVEY §7.3.2).
-
-Parallelism note (SURVEY §7.3.1): max+1 versioning is only well-defined
-single-writer; here version numbers are assigned per micro-batch with a
-stable intra-batch order, so any shuffle of the input yields the same *set*
-of stored rows, with version numbers deterministic given the batch content.
+"""The O5 'current' view of the versioned log (reference
+``sql_db.py:455-553``): readers see every version, and the current row
+of a key is its max-version row.  The store is an append-only versioned
+log on plain Parquet — the reference never updates in place — so the
+view is one window per key over the stored rows.  The versions
+themselves are assigned at ingest (``sources/ingest.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _payload_struct(cols: list[str]):
-    """Canonical payload struct for whole-payload equality; null-safe
-    because struct equality in Spark treats NULL fields as equal."""
-    return F.struct(*[F.col(c) for c in sorted(cols)])
-
-
-def drop_allnull_payload(df: DataFrame, payload_cols: list[str]) -> DataFrame:
-    """P5: reject rows whose every payload column is NULL
-    (reference sql_db.py:464-467)."""
-    return df.na.drop(how="all", subset=payload_cols)
-
-
-def dedup_exact(df: DataFrame, key_cols: list[str], payload_cols: list[str]) -> DataFrame:
-    """A3 within-batch: one row per (key, full payload), NULL-safe."""
-    return df.dropDuplicates(key_cols + payload_cols)
-
-
-def assign_versions(
-    batch: DataFrame,
-    existing: DataFrame | None,
-    key_cols: list[str],
-    payload_cols: list[str],
-    order_col: str | None = None,
-) -> DataFrame:
-    """Full A3+A4 pass for one micro-batch against the existing store.
-
-    Returns ONLY the rows to append, each with a ``version`` column.
-    ``existing`` must carry ``version``; pass None for a fresh store.
-    ``order_col`` provides the deterministic intra-batch tiebreak for
-    conflicting payloads; defaults to the payload struct itself (stable
-    under input shuffling, per the reference's order-shuffled fixture test).
-    """
-    batch = drop_allnull_payload(batch, payload_cols)
-    batch = dedup_exact(batch, key_cols, payload_cols)
-
-    tiebreak = F.col(order_col) if order_col else _payload_struct(payload_cols)
-
-    if existing is not None:
-        # A3 vs store: anti-join on (key, whole payload) — null-safe via
-        # struct equality — drops rows already present verbatim.
-        probe = existing.select(
-            *key_cols, _payload_struct(payload_cols).alias("__pay")
-        )
-        batch = (
-            batch.withColumn("__pay", _payload_struct(payload_cols))
-            .join(probe, on=key_cols + ["__pay"], how="left_anti")
-            .drop("__pay")
-        )
-        # Prior max version per key: aggregate FIRST, then join — the
-        # aggregated side is small (one row per distinct key) and
-        # broadcast-able; never join row-level history.
-        prior = existing.groupBy(*key_cols).agg(F.max("version").alias("__maxv"))
-        batch = batch.join(prior, on=key_cols, how="left")
-    else:
-        batch = batch.withColumn("__maxv", F.lit(None).cast("int"))
-
-    w = Window.partitionBy(*key_cols).orderBy(tiebreak)
-    return (
-        batch.withColumn(
-            "version",
-            (F.coalesce(F.col("__maxv"), F.lit(0)) + F.row_number().over(w)).cast("int"),
-        )
-        .drop("__maxv")
-    )
 
 
 def latest_version_view(

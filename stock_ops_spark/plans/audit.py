@@ -32,14 +32,6 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (struct<[^>]*)", plan_string(df))
 
 
-def scan_column_count(df: DataFrame) -> int:
-    """Number of columns read by the first parquet scan."""
-    schemas = read_schemas(df)
-    if not schemas:
-        return -1
-    return schemas[0].count(":")
-
-
 def count_shuffles(df: DataFrame) -> int:
     return plan_string(df).count("Exchange hashpartitioning")
 

@@ -65,7 +65,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NullType
 
@@ -87,8 +87,8 @@ from stock_ops_spark.sources.microcommit import (
 from stock_ops_spark.sources.microcommit import write_micro  # noqa: F401
 from stock_ops_spark.sources.ingest import (
     _MAX_PRUNE_PARTITIONS,
-    compute_versioned_delta,
     versioned_delta_arrow,
+    versioned_delta_spark,
 )
 from stock_ops_spark.sources.layout import (
     PARTITION_COLS,
@@ -96,7 +96,6 @@ from stock_ops_spark.sources.layout import (
     mode_root,
     partition_range_predicate,
     partition_values_predicate,
-    with_partition_cols,
 )
 
 
@@ -119,8 +118,10 @@ def _meta_of(stats, tsc: str) -> dict:
     row count ``n``, and ``stats``, the per-key rows themselves as JSON
     columns (``lo``/``hi`` through ``_j``) that ``table_stats`` and
     ``interval_stats`` fold and ``retain_before`` reads the non-NULL
-    time counts ``nts`` of."""
+    time counts ``nts`` of.  The rows are listed in key order, so the
+    meta does not depend on the order the delta's rows came in."""
     keys = [k for k in ("ticker", "interval") if k in stats.column_names]
+    stats = stats.sort_by([(k, "ascending") for k in keys])
     return {
         "ticker": _span(stats["ticker"], stats["ticker"]),
         tsc: _span(stats["lo"], stats["hi"]),
@@ -189,7 +190,7 @@ def _union(frames: list) -> DataFrame | None:
 
 def _touched_parts(stats, parts: list[str]) -> list[tuple]:
     """The distinct partition tuples of a grouped-stats table's ``tp``
-    lists, or ``[]`` — ``compute_versioned_delta``'s "known over-cap" —
+    lists, or ``[]`` — "known over-cap": leave the store probe unpruned —
     when there are more than ``_MAX_PRUNE_PARTITIONS`` (one key's list
     hit its cap, or the union is past it)."""
     tp = stats["tp"]
@@ -860,14 +861,16 @@ class ManifestStore:
         The PROBE collects the raw batch once (``collect_micro``: one
         ``limit(bound+1).toArrow()`` job on the source).  An empty batch
         returns 0 with no commit.  A batch within ``MICRO_COMMIT_ROWS``
-        runs every step on the driver — ``versioned_delta_arrow``, the
-        Arrow dir reader, ``write_micro`` and the dir's meta — so
-        a plain commit costs that one Spark job (measured at
-        ``local[2]`` on 500-row streamed commits: ~0.09 s in the store,
-        most of it the probe, where planning and checkpointing the
-        delta in Spark cost ~0.7 s and 5-6 jobs per trigger).  Over the
-        bound, or for a domain the Arrow path declines, the delta is
-        planned in Spark and checkpointed once (``materialize_micro``).
+        runs every step on the driver — the one delta kernel
+        ``versioned_delta_arrow``, the Arrow dir reader, ``write_micro``
+        and the dir's meta — so a plain commit costs that one Spark job
+        (measured at ``local[2]`` on 500-row streamed commits: ~0.09 s
+        in the store, most of it the probe, where planning and
+        checkpointing the delta in Spark cost ~0.7 s and 5-6 jobs per
+        trigger).  Over the bound, or for a column type outside
+        ``plain_type``, the same kernel runs in Spark once per key
+        bucket (``versioned_delta_spark``) and the delta is checkpointed
+        once (``materialize_micro``).
 
         The delta is computed OPTIMISTICALLY as a pure append (no store
         probe) and its grouped stats double as the bounds probe: only
@@ -901,22 +904,16 @@ class ManifestStore:
             return d, d.stat_rows(gb, tsc, parts, _MAX_PRUNE_PARTITIONS)
 
         def on_driver(tbl, prior=None):
-            """The versioned delta of the Arrow batch ``tbl`` against the
-            Arrow store rows ``prior``, or None when the Arrow path
-            declines; its DataFrame is built only if something asks."""
-            out = versioned_delta_arrow(tbl, prior, mode, self.tz, session_tz)
-            if out is None:
-                return None
-            return stats_of(Delta(
-                lambda: arrow_relation(self.spark, out), out.num_rows, out
-            ))
+            d = self._driver_delta(tbl, prior, mode, session_tz)
+            return d and stats_of(d)
 
-        def in_spark(frame, existing=None, touched=None):
-            """The versioned delta planned in Spark and checkpointed once;
-            its rows come back as Arrow when the count proves it micro."""
-            return stats_of(materialize_micro(compute_versioned_delta(
-                frame, existing, mode, self.tz, touched=touched,
-            )))
+        def in_spark(frame, existing=None):
+            """The kernel run per key bucket in Spark and checkpointed
+            once; its rows come back as Arrow when the count proves it
+            micro."""
+            return stats_of(materialize_micro(
+                versioned_delta_spark(frame, existing, mode, self.tz)
+            ))
 
         src = collect_micro(batch)
         if src is not None and not src.num_rows:
@@ -950,11 +947,13 @@ class ManifestStore:
                         redo = on_driver(
                             delta.tbl.drop_columns(["version", *parts]), prior
                         )
-                d, g = redo or in_spark(
-                    delta.df.drop("version", *parts),
-                    self._read_dirs(mode, overlap),
-                    touched,
-                )
+                if redo is None:
+                    existing = self._read_dirs(mode, overlap)
+                    pred = partition_values_predicate(parts, touched or [])
+                    if pred is not None:
+                        existing = existing.where(pred)
+                    redo = in_spark(delta.df.drop("version", *parts), existing)
+                d, g = redo
                 if not d.n:
                     return None, 0
                 dir_meta = _meta_of(g, tsc)
@@ -985,6 +984,22 @@ class ManifestStore:
         if last:
             self._auto_compact(mode)
         return result
+
+    def _driver_delta(
+        self, tbl, prior, mode: str, session_tz: str
+    ) -> Delta | None:
+        """``versioned_delta_arrow`` of the Arrow batch ``tbl`` against
+        the Arrow store rows ``prior`` (or None; the dir reader yields
+        only ``plain_type`` columns), on the driver, as a ``Delta`` whose
+        frame is built only if something asks; None when a batch column
+        type is outside ``plain_type`` or the kernel declines — the
+        caller then runs the kernel in Spark."""
+        if not all(plain_type(t) for t in tbl.schema.types):
+            return None
+        out = versioned_delta_arrow(tbl, prior, mode, self.tz, session_tz)
+        if out is None:
+            return None
+        return Delta(lambda: arrow_relation(self.spark, out), out.num_rows, out)
 
     def _auto_compact(self, mode: str) -> None:
         """Fold the store after an ingest publish once its live dir
@@ -1083,7 +1098,7 @@ class ManifestStore:
             )
         return batch_dir
 
-    def _write_cdc(self, mode: str, state: dict, cdc: DataFrame) -> str:
+    def _write_cdc(self, mode: str, state: dict, cdc: Delta) -> str:
         """Write a commit's change set under the log (invisible until the
         commit; recorded in ``state``): micro change sets are one
         driver-side file, with no sort — CDC rows carry no ordering
@@ -1091,7 +1106,7 @@ class ManifestStore:
         rel = f"cdc-{state['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         path = os.path.join(self.log(mode).log_dir, rel)
         state["written"].append(path)
-        _probe(cdc).write(path)
+        cdc.write(path)
         return rel
 
     # -- physical mutation: MERGE / DELETE (file-pruned rewrite) ---------
@@ -1122,6 +1137,7 @@ class ManifestStore:
         """
         keys = S.INDEX_COLS[mode]
         tsc = S.TS_COL[mode]
+        session_tz = self.spark.conf.get("spark.sql.session.timeZone")
         sdelta = materialize_micro(source)
         src, _n_src, stbl = sdelta
         if stbl is not None:
@@ -1193,8 +1209,16 @@ class ManifestStore:
             ins_src = src if tagged is None else src.join(
                 tagged.select(*keys), on=keys, how="left_anti"
             )
-            ins = materialize_micro(
-                compute_versioned_delta(ins_src, None, mode, self.tz)
+            # the inserts of a micro source are micro: the kernel runs on
+            # the driver over their collected rows
+            ins_tbl = stbl if tagged is None else (
+                None if stbl is None else collect_micro(ins_src)
+            )
+            ins = (
+                ins_tbl is not None
+                and self._driver_delta(ins_tbl, None, mode, session_tz)
+            ) or materialize_micro(
+                versioned_delta_spark(ins_src, None, mode, self.tz)
             )
             if ins.n:
                 adds.append(self._write_batch_dir(ins, mode, state, meta))
@@ -1206,7 +1230,7 @@ class ManifestStore:
                 "adds": adds,
                 "removes": removes,
                 "meta": meta,
-                "cdc": self._write_cdc(mode, state, _union(cdc)),
+                "cdc": self._write_cdc(mode, state, _probe(_union(cdc))),
             }
             return payload, {
                 "updated": n_upd,
@@ -1254,10 +1278,9 @@ class ManifestStore:
                 "adds": adds,
                 "removes": touched,
                 "meta": meta,
-                "cdc": self._write_cdc(
-                    mode, state,
-                    doomed.df.withColumn("_change_type", F.lit("delete")),
-                ),
+                "cdc": self._write_cdc(mode, state, _probe(
+                    doomed.df.withColumn("_change_type", F.lit("delete"))
+                )),
             }
             return payload, {
                 "deleted": doomed.n,
@@ -1333,10 +1356,9 @@ class ManifestStore:
                 # the doomed dirs' rows are read only for the feed
                 if doomed_dirs:
                     gone.append(self._read_dirs(mode, doomed_dirs))
-                payload["cdc"] = self._write_cdc(
-                    mode, state,
-                    _union(gone).withColumn("_change_type", F.lit("delete")),
-                )
+                payload["cdc"] = self._write_cdc(mode, state, _probe(
+                    _union(gone).withColumn("_change_type", F.lit("delete"))
+                ))
             return payload, {
                 "deleted_dirs": len(doomed_dirs),
                 # straddlers are removed only when they held expired rows
@@ -1499,7 +1521,9 @@ class ManifestStore:
         raises with the missing dirs named), plus one honest CDC file:
         rows leaving the snapshot are 'delete' changes and rows
         returning are 'insert', so MatView.sync and the stockops_cdc
-        stream keep folding exactly instead of silently diverging.
+        stream keep folding exactly instead of silently diverging.  A
+        restore that changes no row writes no CDC file, and the change
+        feed reads nothing for it.
         History is preserved — RESTORE is a new version, and time travel
         into the undone span still works."""
 
@@ -1547,10 +1571,18 @@ class ManifestStore:
                 if c is not None
             ])
             if cdc is not None:
-                cdc = cdc.localCheckpoint(eager=True)
-                n_del = cdc.where(F.col("_change_type") == "delete").count()
-                n_ins = cdc.where(F.col("_change_type") == "insert").count()
-                payload["cdc"] = self._write_cdc(mode, state, cdc)
+                # both kinds counted by the one checkpoint pass; an empty
+                # change set (the snapshots hold the same rows) is no file
+                obs = Observation()
+                kind = F.col("_change_type")
+                delta = materialize_micro(cdc.observe(
+                    obs,
+                    F.count_if(kind == "delete").alias("d"),
+                    F.count_if(kind == "insert").alias("i"),
+                ))
+                n_del, n_ins = obs.get["d"], obs.get["i"]
+                if delta.n:
+                    payload["cdc"] = self._write_cdc(mode, state, delta)
             return payload, {
                 "restored_to": to_version,
                 "version": state["version"] + 1,

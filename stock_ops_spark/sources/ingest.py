@@ -1,4 +1,4 @@
-"""The ingest contract's shared delta computation (S5, A1-A6).
+"""The ingest contract's one delta kernel (S5, A1-A6).
 
 Every store commit (``sources/commitlog.ManifestStore``) is the
 Spark-first equivalent of the reference's entire Redis-buffer → writer →
@@ -12,20 +12,21 @@ steps every commit path shares:
 4. A3  anti-join vs existing rows with identical (key, payload)
 5. A4  version = prior max(version) per key + row_number within batch
 
-in two implementations with one semantics: ``compute_versioned_delta``
-plans them in Spark, for batches over the micro bound, and
-``versioned_delta_arrow`` runs them in pyarrow on a batch already
-collected to the driver — the path of every micro commit, where Spark's
-planning and job launches, not the data, were the cost.  Plus the write
-layout of the delta (``cluster_for_write``).  The append into a fresh
-batch directory and its A5/A6 stats rows (in the dir's commit meta)
-are the commit's, published together by one manifest commit.
+in one implementation, ``versioned_delta_arrow``, over Arrow tables.  A
+batch already collected to the driver — every micro commit, where
+Spark's planning and job launches, not the data, were the cost — runs
+it there; any other batch runs it inside Spark
+(``versioned_delta_spark``), once per bucket of a hash of the index
+keys, so each key meets all of its batch and store rows in one call.
+Plus the write layout of the delta (``cluster_for_write``).  The append
+into a fresh batch directory and its A5/A6 stats rows (in the dir's
+commit meta) are the commit's, published together by one manifest
+commit.
 
-Scale posture: the existing-store probe (steps 4-5) reads ONLY the
-partitions the batch touches — partition values are collected from the
-(small) batch and pushed as an IN filter, so Catalyst prunes everything
-else.  The per-key max-version aggregate is computed on that pruned slice
-and broadcast when small.
+Scale posture: the store rows a delta is computed against are only the
+live dirs whose recorded (ticker, ts) bounds meet the batch's, pruned
+to the partitions the batch touches — both read from the delta's
+grouped stats, with no Spark job (``ManifestStore.ingest_batch``).
 """
 
 from __future__ import annotations
@@ -35,99 +36,16 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.versioning import assign_versions
-from stock_ops_spark.sources.layout import (
-    PARTITION_COLS,
-    arrow_partition_cols,
-    partition_values_predicate,
-    with_partition_cols,
-)
+from stock_ops_spark.sources.layout import PARTITION_COLS, arrow_partition_cols
 from stock_ops_spark.sources.microcommit import plain_type
 
 # A micro-batch touches a handful of partitions; an unbounded backfill can
-# touch thousands.  Above this, the ingest dedup probe scans the store
-# unpruned rather than collecting partition literals to the driver.
+# touch thousands.  Above this, the ingest dedup probe reads the store
+# rows unpruned rather than filtering them on a many-thousand-term
+# predicate of partition literals.
 _MAX_PRUNE_PARTITIONS = 256
-
-
-def compute_versioned_delta(
-    batch: DataFrame,
-    existing: DataFrame | None,
-    mode: str,
-    tz: str,
-    touched: list | None = None,
-) -> DataFrame:
-    """Steps 1-5 of the ingest contract (P5/A2/A3/A4), shared by every
-    commit path of the store (``sources/commitlog.py``): route
-    partitions, align evolved schemas both ways, prune the
-    existing-store probe to the touched partitions, dedup against it,
-    and assign versions.  Returns the lazy delta — the caller decides
-    how to materialize and commit it.
-
-    ``touched``: optional precomputed partition-value tuples the batch
-    hits (a caller that already ran an aggregate over the routed batch
-    can fold the collect in and save one Spark job — r8).  ``[]`` means
-    "known over-cap: skip pruning"; ``None`` means "compute here"."""
-    keys = S.INDEX_COLS[mode]
-    declared = set(S.SCHEMAS[mode].fieldNames())
-    extra = [c for c in batch.columns if c not in declared]
-    payload = S.payload_cols(mode) + extra
-    parts = PARTITION_COLS[mode]
-
-    routed = with_partition_cols(batch, mode, tz)
-    # -0.0 is written as 0.0 whatever the plan: the dedup's grouping
-    # normalizes it only while the optimizer keeps the Aggregate, which
-    # it drops when the batch is a one-row local relation
-    for f in routed.schema.fields:
-        if f.name in payload and isinstance(f.dataType, (T.FloatType, T.DoubleType)):
-            routed = routed.withColumn(
-                f.name, F.col(f.name) + F.lit(0.0).cast(f.dataType)
-            )
-
-    if existing is not None:
-        # align schemas both ways: a batch may carry a brand-new column
-        # (absent from every stored file) and the store may carry
-        # columns this batch omits — NULL-fill so the null-safe payload
-        # comparison and version probe see one union schema
-        batch_cols = set(routed.columns)
-        store_cols = set(existing.columns)
-        # Store-only columns are NULL-filled for the append but stay OUT
-        # of the dedup payload: the reference compares only the incoming
-        # payload's own keys (sql_db.py:487-497), so a re-sent row that
-        # matches a stored row on every column the producer knows about
-        # is an exact duplicate even if the store has since evolved a
-        # column the producer doesn't send (ADVICE r1).
-        for c in sorted(store_cols - batch_cols - set(parts)):
-            routed = routed.withColumn(c, F.lit(None).cast(existing.schema[c].dataType))
-        for c in sorted(set(payload) - store_cols):
-            existing = existing.withColumn(c, F.lit(None).cast(routed.schema[c].dataType))
-    if existing is not None and parts:
-        # prune the store probe to just the partitions this batch hits:
-        # an OR-of-conjunctions over literal partition values reaches the
-        # file listing as partition pruning (a batch touches few).
-        # Guard: the collect is bounded by construction for a
-        # micro-batch, but a historical backfill fed through this path
-        # could touch thousands of partitions — cap the literal list;
-        # past the cap, skip pruning (full probe beats an unbounded
-        # driver collect + a many-thousand-term predicate).
-        if touched is None:
-            touched = [
-                tuple(r)
-                for r in routed.select(*parts)
-                .distinct()
-                .limit(_MAX_PRUNE_PARTITIONS + 1)
-                .collect()
-            ]
-        if len(touched) > _MAX_PRUNE_PARTITIONS:
-            touched = []
-        pred = partition_values_predicate(parts, touched)
-        if pred is not None:
-            existing = existing.where(pred)
-
-    return assign_versions(routed, existing, keys, payload)
 
 
 def _group_ids(tbl) -> np.ndarray:
@@ -146,6 +64,38 @@ def _group_ids(tbl) -> np.ndarray:
     return ids
 
 
+def _order_key(v):
+    """A Python sort key that orders values as Spark does: NULL first,
+    NaN above every number, -0.0 equal to 0.0, structs and arrays
+    element by element (a shorter array first among equal prefixes)."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    if isinstance(v, dict):
+        v = list(v.values())
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(_order_key(x) for x in v))
+    return (1, v)
+
+
+def _ranked(a) -> pa.Array:
+    """The values of ``a`` as dense int64 ranks in Spark's order
+    (``_order_key``), NULL kept: equal values share a rank, so the ranks
+    stand in for a type the Arrow kernels cannot group or sort exactly
+    as Spark does (decimal, timestamp, nested)."""
+    ks = [None if v is None else _order_key(v) for v in a.to_pylist()]
+    rank = {k: i for i, k in enumerate(sorted(set(ks) - {None}))}
+    return pa.array([None if k is None else rank[k] for k in ks], pa.int64())
+
+
+def _cmp(tbl, c: str):
+    """Column ``c`` of ``tbl`` as the kernel compares it: its ``_ranked``
+    stand-in when it has one."""
+    r = c + "\x00rank"
+    return tbl.column(r if r in tbl.column_names else c)
+
+
 def _eq_cols(tbl, cols: list[str]):
     """``cols`` of ``tbl`` re-encoded so ``_group_ids`` equality is
     Spark's NULL-safe grouping equality: a float column becomes (is-NaN
@@ -153,7 +103,7 @@ def _eq_cols(tbl, cols: list[str]):
     already normalized to 0.0 by ``_norm_floats`` — with 0.0."""
     out = {}
     for c in cols:
-        a = tbl.column(c)
+        a = _cmp(tbl, c)
         if pa.types.is_floating(a.type):
             nan = pc.is_nan(a)
             out[c + "\x00nan"] = nan
@@ -183,7 +133,7 @@ def _sort_keys(tbl, cols: list[str]):
     right after the NULLs."""
     out = {}
     for c in cols:
-        a = tbl.column(c)
+        a = _cmp(tbl, c)
         if pa.types.is_floating(a.type):
             nan = pc.is_nan(a)
             # 0 NULL, 1 number, 2 NaN; the value breaks ties among numbers
@@ -234,48 +184,45 @@ def versioned_delta_arrow(
     tz: str,
     session_tz: str = "UTC",
 ):
-    """``compute_versioned_delta`` on the driver, for a batch already
-    collected as the Arrow table ``tbl`` and the overlapping store rows
-    ``prior`` (an Arrow table, or None for a pure append).  Steps 1-5
-    run in pyarrow and numpy with Spark's observed semantics:
+    """Steps 1-5 of the ingest contract for the batch ``tbl`` (an Arrow
+    table) against the overlapping store rows ``prior`` (an Arrow table,
+    or None for a pure append), in pyarrow and numpy with Spark's
+    semantics:
 
     - P5: a row is dropped when every payload column is NULL or NaN
       (``na.drop`` counts NaN as NULL);
     - A3 within the batch: NULL keys and NULL fields are equal, NaN
       equals NaN, -0.0 equals 0.0 and is written as 0.0;
-    - A2: ``arrow_partition_cols``;
+    - A2: ``arrow_partition_cols``; partition columns the batch carries
+      are replaced, and are not payload;
     - A3 against ``prior``: the payload matches NULL-safely, but the
       index keys are an equi-join — a row with a NULL key never
       matches a stored row and is appended again;
     - A4: prior max version per key (NULL keys have none) plus a
       ``row_number`` per key, NULL keys forming one window partition,
       ordered by the payload struct (sorted field names; NULL first,
-      NaN last).
+      NaN last).  A ``version`` the batch carries is payload, then
+      replaced.
 
-    Columns come out in Spark's order and types: the batch's, then the
+    A column outside ``plain_type`` is compared through its ``_ranked``
+    stand-in.  Columns come out in the batch's order and types, then the
     partition columns, then ``version``; against ``prior`` the index
     keys lead, and store-only columns (NULL-filled, ``version`` among
     them in sorted place) follow the partition columns.
 
-    Returns None — the caller takes the Spark path — when the inputs
-    fall outside what this reproduces exactly: a missing declared
-    column, a batch already carrying partition or ``version`` columns,
-    a column type outside ``plain_type``, a type that differs between
-    batch and store, or an epoch Spark cannot hold."""
+    Returns None when the batch lacks a declared column, a type differs
+    between batch and store (``versioned_delta_spark`` casts both sides
+    to Spark's common type first), or an epoch is one Spark cannot
+    hold."""
     keys = S.INDEX_COLS[mode]
     declared = S.SCHEMAS[mode].fieldNames()
     parts = PARTITION_COLS[mode]
-    cols = tbl.column_names
-    if (
-        set(declared) - set(cols)
-        or set(cols) & {*parts, "version"}
-        or not all(plain_type(t) for t in tbl.schema.types)
-        or prior is not None
-        and not all(plain_type(t) for t in prior.schema.types)
-    ):
+    if set(declared) - set(tbl.column_names):
         return None
-    extra = [c for c in cols if c not in declared]
-    payload = S.payload_cols(mode) + extra
+    tbl = tbl.drop_columns([c for c in parts if c in tbl.column_names])
+    payload = S.payload_cols(mode) + [
+        c for c in tbl.column_names if c not in declared
+    ]
     try:
         routed = arrow_partition_cols(tbl, mode, tz, session_tz)
     except pa.ArrowException:
@@ -302,6 +249,17 @@ def versioned_delta_arrow(
                 )
             else:
                 return None
+    for c in keys + payload:
+        if plain_type(routed.schema.field(c).type):
+            continue
+        n = routed.num_rows
+        both = [routed.column(c)] + ([] if prior is None else [prior.column(c)])
+        r = _ranked(pa.chunked_array(
+            [k for a in both for k in a.chunks], both[0].type
+        ))
+        routed = routed.append_column(c + "\x00rank", r[:n])
+        if prior is not None:
+            prior = prior.append_column(c + "\x00rank", r[n:])
 
     # P5, then A3 within the batch
     allnull = np.ones(routed.num_rows, bool)
@@ -361,11 +319,76 @@ def versioned_delta_arrow(
         )
     else:
         routed = routed.append_column(vfield, version)
+    cols = [c for c in routed.column_names if not c.endswith("\x00rank")]
     if prior is not None:
-        routed = routed.select(
-            keys + [c for c in routed.column_names if c not in keys]
+        cols = keys + [c for c in cols if c not in keys]
+    return routed.select(cols)
+
+
+def versioned_delta_spark(
+    batch: DataFrame, existing: DataFrame | None, mode: str, tz: str
+) -> DataFrame:
+    """``versioned_delta_arrow`` over frames of any size: the rows of
+    ``batch`` and of the store rows ``existing`` (None for a pure
+    append) are grouped by ``pmod(xxhash64(index keys), n)``, ``n`` the
+    session's ``spark.sql.shuffle.partitions``, and the kernel runs once
+    per group in a Python worker.  Equal keys hash alike, NULLs
+    included, so each key meets all of its rows in one call and the
+    per-key dedup and versioning are exact.
+
+    A column whose type differs between the two sides is compared as
+    Spark compares it — both sides cast to their common type — and
+    comes back in the batch's type.  Raises ``AnalysisException`` for a
+    missing declared column; an epoch Spark cannot hold raises in the
+    worker."""
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+    from stock_ops_spark.shipping import ensure_package_on_executors
+
+    spark = batch.sparkSession
+    batch.select(*S.SCHEMAS[mode].fieldNames())  # analysis names a missing one
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    back = {}
+    if existing is not None:
+        shared = set(batch.columns) & set(existing.columns)
+        for c in sorted(shared - set(PARTITION_COLS[mode])):
+            t, u = batch.schema[c].dataType, existing.schema[c].dataType
+            if t == u:
+                continue
+            common = spark.range(0).select(
+                F.coalesce(F.lit(None).cast(t), F.lit(None).cast(u))
+            ).schema[0].dataType
+            batch = batch.withColumn(c, F.col(c).cast(common))
+            existing = existing.withColumn(c, F.col(c).cast(common))
+            if c != "version":
+                back[c] = t
+
+    def empty(df):
+        return None if df is None else to_arrow_schema(df.schema).empty_table()
+
+    out_schema = versioned_delta_arrow(
+        empty(batch), empty(existing), mode, tz, session_tz
+    ).schema
+
+    def kernel(tbl, prior):
+        out = versioned_delta_arrow(tbl, prior, mode, tz, session_tz)
+        if out is None:  # the casts above leave only the epoch range
+            raise ValueError(f"an epoch of {mode} is outside Spark's timestamp range")
+        return out.cast(out_schema)
+
+    ensure_package_on_executors(spark)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bucket = F.pmod(F.xxhash64(*S.INDEX_COLS[mode]), F.lit(n))
+    schema = from_arrow_schema(out_schema)
+    if existing is None:
+        out = batch.groupBy(bucket).applyInArrow(lambda t: kernel(t, None), schema)
+    else:
+        out = batch.groupBy(bucket).cogroup(existing.groupBy(bucket)).applyInArrow(
+            kernel, schema
         )
-    return routed
+    for c, t in back.items():
+        out = out.withColumn(c, F.col(c).cast(t))
+    return out
 
 
 #: Write-layout bound (r12, guide §6): a delta KNOWN to be at most this

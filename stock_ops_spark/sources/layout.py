@@ -22,7 +22,6 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from stock_ops_spark.functions.timeutils import epoch_ms_to_local, epoch_s_to_local
 from stock_ops_spark.schemas import TS_COL
 
 PARTITION_COLS = {
@@ -39,40 +38,15 @@ def mode_root(root: str, mode: str, provider: str, exchange: str) -> str:
     return os.path.join(root, f"mode={mode}", f"provider={provider}", f"exchange={exchange}")
 
 
-def _local_event_time(df: DataFrame, mode: str, tz: str) -> Column:
-    if mode == "historical_interday":
-        return F.col("date").cast("timestamp")
-    if mode == "historical_intraday":
-        return epoch_s_to_local(F.col("timestamp_UTC_s"), tz)
-    if mode == "streaming":
-        return epoch_ms_to_local(F.col("timestamp_UTC_ms"), tz)
-    raise ValueError(f"unknown mode {mode!r}")
-
-
-def with_partition_cols(df: DataFrame, mode: str, tz: str) -> DataFrame:
-    """A2 event-time partition routing: derive (year[, month[, day]]) from
-    the event timestamp converted to exchange-local time, so late rows land
-    in their correct historical partition (never watermark-dropped)."""
-    parts = PARTITION_COLS[mode]
-    if not parts:
-        return df
-    local = _local_event_time(df, mode, tz)
-    out = df
-    if "year" in parts:
-        out = out.withColumn("year", F.year(local))
-    if "month" in parts:
-        out = out.withColumn("month", F.month(local))
-    if "day" in parts:
-        out = out.withColumn("day", F.dayofmonth(local))
-    return out
-
-
 #: epoch unit of the routed time column per partitioned mode
 _EPOCH_UNIT = {"historical_intraday": "s", "streaming": "ms"}
 
 
 def arrow_partition_cols(tbl, mode: str, tz: str, session_tz: str = "UTC"):
-    """``with_partition_cols`` on an Arrow table, by Spark's rule: the
+    """A2 event-time partition routing of an Arrow table: the partition
+    columns (year[, month[, day]]) of the event timestamp in
+    exchange-local time, so late rows land in their correct historical
+    partition (never watermark-dropped).  By Spark's rule: the
     epoch is read as a UTC instant and rendered as wall time in ``tz``
     (``from_utc_timestamp``); ``year``/``month``/``day`` of that value
     are then taken in the session time zone, so a non-UTC session sees

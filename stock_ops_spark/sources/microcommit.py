@@ -266,9 +266,10 @@ class Delta:
 
 def plain_type(t) -> bool:
     """Integer, floating, boolean, string, binary or date: the value
-    domains the driver-side versioned delta and dir reader handle exactly
-    as Spark does (nested, decimal and timestamp columns take the Spark
-    path)."""
+    domains a commit runs on the driver end to end — the delta kernel
+    over the collected batch, and the dir reader — exactly as Spark
+    would.  A batch with a nested, decimal or timestamp column runs the
+    same kernel per key bucket in Spark (``ingest.versioned_delta_spark``)."""
     import pyarrow as pa
 
     return (

@@ -1238,3 +1238,36 @@ def test_rebase_check_opens_only_the_interleaved_commits(tmp_path, monkeypatch):
     assert opened == ["00000200.json"]
     shared = {"ticker": ["A", "A"], ts: [200, 200]}
     assert not store._interleaved_commits_safe("streaming", 199, 200, shared)
+
+
+def test_restore_to_equal_rows_writes_no_change_file(spark, tmp_path, spark_jobs):
+    """merge, merge, restore(1): the merge re-sent equal rows, so the
+    restored snapshot holds the current rows — the restore commits with
+    no change file, counted in one pass, and the change feed and the
+    ``stockops_cdc`` stream read nothing for it."""
+    import datetime as dt
+    import glob
+
+    from stock_ops_spark.sources.commitlog import ManifestStore
+    from stock_ops_spark.sources.pyds import ManifestCDCStreamReader
+
+    mode = "historical_interday"
+    store = ManifestStore(spark, str(tmp_path / "m"), auto_compact_every=0)
+    src = spark.createDataFrame(
+        [("VOO", dt.date(2024, 10, 25), 1.0, 2.0, 0.5, 1.5, 1.4, 10, "d")],
+        S.HISTORICAL_INTERDAY,
+    )
+    assert store.merge(src, mode)["inserted"] == 1
+    assert store.merge(src, mode)["updated"] == 1
+    res, jobs = spark_jobs(lambda: store.restore(mode, 1))
+    assert res == {"restored_to": 1, "version": 3, "n_deleted": 0,
+                   "n_reinserted": 0}
+    assert jobs == 5
+    log = store.log(mode)
+    [commit] = log.commits(upto=3, since=3)
+    assert "cdc" not in commit
+    assert not glob.glob(os.path.join(log.log_dir, "cdc-00000003-*"))
+    assert store.read_changes(mode, from_version=2) is None
+    rdr = ManifestCDCStreamReader({"store_root": store.root, "mode": mode})
+    assert list(rdr.readBetweenOffsets({"version": 2}, {"version": 3})) == []
+    assert store.read_all(mode).count() == 1

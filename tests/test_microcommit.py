@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from stock_ops_spark.operators.stats import batch_stats
 from stock_ops_spark.sources import commitlog as CL
 from stock_ops_spark.sources import microcommit as MC
-from stock_ops_spark.sources.layout import PARTITION_COLS, with_partition_cols
+from stock_ops_spark.sources.layout import PARTITION_COLS, arrow_partition_cols
 
 
 def _batch(spark, extra_rows=()):
@@ -38,6 +38,12 @@ def _batch(spark, extra_rows=()):
     )
 
 
+def _routed(spark, df):
+    """``df`` with its streaming partition columns (New York days)."""
+    tbl = arrow_partition_cols(df.toArrow(), "streaming", "America/New_York")
+    return spark.createDataFrame(tbl)
+
+
 def _by_key(stats, keys, parts=()):
     """Grouped-stats table -> {key tuple: (rc, nts, lo, hi, {tp})}."""
     out = {}
@@ -50,7 +56,7 @@ def _by_key(stats, keys, parts=()):
 
 
 def test_stat_rows_kernel_matches_spark_aggregate(spark):
-    routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
+    routed = _routed(spark, _batch(spark))
     # NULL-ts row exercises the nts/min/max NULL handling
     routed = routed.withColumn(
         "timestamp_UTC_ms",
@@ -69,7 +75,7 @@ def test_stat_rows_kernel_matches_spark_aggregate(spark):
 
 
 def test_write_micro_layout_readable_and_clustered(spark, tmp_path):
-    routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
+    routed = _routed(spark, _batch(spark))
     tbl = MC.collect_micro(routed)
     dest = str(tmp_path / "micro")
     assert MC.write_micro(
@@ -97,7 +103,7 @@ def test_collect_micro_declines_over_bound(spark):
 
 def test_write_micro_declines_uncovered_domains(spark, tmp_path):
     # NULL partition value
-    routed = with_partition_cols(_batch(spark), "streaming", "America/New_York")
+    routed = _routed(spark, _batch(spark))
     nulled = routed.withColumn(
         "day", F.when(F.col("ticker") == "AAPL", None).otherwise(F.col("day"))
     )
@@ -136,9 +142,8 @@ def test_meta_of_matches_spark_dir_meta(spark):
     """A dir's meta from the driver's grouped stats equals the one from
     Spark's, and its bounds, count and stats rows (non-NULL time counts
     included) equal Spark aggregates of the same rows."""
-    routed = with_partition_cols(
-        _batch(spark, [(None, None, 1.0, 1, None, None, None, None)]),
-        "streaming", "America/New_York",
+    routed = _routed(
+        spark, _batch(spark, [(None, None, 1.0, 1, None, None, None, None)])
     )
     tbl = MC.collect_micro(routed)
     ts = "timestamp_UTC_ms"

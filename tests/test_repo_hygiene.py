@@ -2,7 +2,8 @@
 reach the code: every ``sys.path`` insert resolves the checkout the file
 lives in, every engine attribute the perfbench tracer wraps exists, the
 change feed stays the only way to learn of a store commit and has one
-planner, each batch stays one commit, the store builds its local
+planner, each batch stays one commit, every delta runs the one delta
+kernel, the store builds its local
 relations through ``localrel``, and no reader of a pre-log format
 comes back.
 """
@@ -172,6 +173,27 @@ def test_no_group_commit():
     }
     offenders = []
     for path in _py_files("stock_ops_spark", "tools"):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        hits = banned.intersection(_names(tree))
+        if hits:
+            offenders.append((os.path.relpath(path, REPO), sorted(hits)))
+    assert not offenders, offenders
+
+
+def test_one_versioned_delta_kernel():
+    """Every delta is ``ingest.versioned_delta_arrow``, on the driver or
+    per key bucket in Spark: the Spark SQL twin of P5-A4 and the helpers
+    nothing called were deleted, and nothing may bring one back."""
+    banned = {
+        "compute_versioned_delta", "assign_versions", "dedup_exact",
+        "drop_allnull_payload", "_payload_struct",
+        "l2_distance", "event_date_parts", "local_to_epoch_s",
+        "ts_from_epoch_any", "stopword_ratio", "fingerprint64",
+        "scan_column_count",
+    }
+    offenders = []
+    for path in _py_files("stock_ops_spark", "tools", "perfbench"):
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), path)
         hits = banned.intersection(_names(tree))

@@ -1,19 +1,21 @@
-"""Golden-fixture semantics per FIXTURES.md: exact-dup skip, key-conflict
-versioning, all-null-payload rejection, order independence, co-timestamped
-trade+quote coexistence."""
+"""Golden-fixture semantics per FIXTURES.md, on the one delta kernel
+(``versioned_delta_arrow``): exact-dup skip, key-conflict versioning,
+all-null-payload rejection, order independence, co-timestamped
+trade+quote coexistence; and the O5 current view."""
 
 from __future__ import annotations
 
 import random
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.versioning import (
-    assign_versions,
-    drop_allnull_payload,
-    latest_version_view,
-)
+from stock_ops_spark.operators.versioning import latest_version_view
+from stock_ops_spark.sources.ingest import versioned_delta_arrow
+
+TZ = "America/New_York"
 
 # streaming fixture rows (shape of FIXTURES.md §3/§4) incl. the anomalies:
 # an exact duplicate, and a co-timestamped trade+quote pair
@@ -29,19 +31,29 @@ STREAM_ROWS = [
 INTERDAY_COLS = ["ticker", "date", "open", "high", "low", "close", "adjusted_close", "volume", "interval"]
 
 
-def make_stream_df(spark, rows):
-    return spark.createDataFrame(rows, schema=S.STREAMING)
+def _table(rows, mode):
+    schema = S.SCHEMAS[mode]
+    return pa.Table.from_pylist(
+        [dict(zip(schema.fieldNames(), r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+
+
+def _delta(rows, mode, prior=None):
+    """The kernel's delta of ``rows`` against the stored rows ``prior``."""
+    return versioned_delta_arrow(_table(rows, mode), prior, mode, TZ)
+
+
+def _pick(tbl, *cols):
+    return list(zip(*(tbl[c].to_pylist() for c in cols)))
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_exact_dup_skipped_order_independent(spark, seed):
+def test_exact_dup_skipped_order_independent(seed):
     rows = STREAM_ROWS[:]
     random.Random(seed).shuffle(rows)
-    df = make_stream_df(spark, rows)
-    out = assign_versions(
-        df, None, S.INDEX_COLS["streaming"], S.payload_cols("streaming")
-    )
-    got = {(r.ticker, r.timestamp_UTC_ms, r.price, r.version) for r in out.collect()}
+    out = _delta(rows, "streaming")
+    got = set(_pick(out, "ticker", "timestamp_UTC_ms", "price", "version"))
     # dup stored once → 5 logical rows regardless of input order; the
     # co-timestamped trade+quote pair shares a key so it carries versions
     # {1,2}; every other key has a single version-1 row
@@ -59,65 +71,53 @@ def test_key_conflict_versions(spark):
         ("VOO", d, 534.65, 537.26, 531.41, 532.26, 527.10, 4327190, "d"),
         ("VOO", d, 999.99, 537.26, 531.41, 532.26, 527.10, 4327190, "d"),  # changed open
     ]
-    df = spark.createDataFrame(rows, schema=S.HISTORICAL_INTERDAY)
-    out = assign_versions(
-        df, None, S.INDEX_COLS["historical_interday"], S.payload_cols("historical_interday")
+    out = _delta(rows, "historical_interday")
+    assert sorted(out["version"].to_pylist()) == [1, 2]
+    latest = latest_version_view(
+        spark.createDataFrame(out), S.INDEX_COLS["historical_interday"]
     )
-    vers = sorted(r.version for r in out.collect())
-    assert vers == [1, 2]
-    latest = latest_version_view(out, S.INDEX_COLS["historical_interday"])
     assert latest.count() == 1
     assert latest.collect()[0].version == 2
 
 
-def test_version_continues_from_existing(spark):
+def test_version_continues_from_existing():
     import datetime
 
     d = datetime.date(2024, 10, 25)
     base = [("VOO", d, 534.65, None, None, None, None, None, "d")]
-    df0 = spark.createDataFrame(base, schema=S.HISTORICAL_INTERDAY)
-    keys = S.INDEX_COLS["historical_interday"]
-    pay = S.payload_cols("historical_interday")
-    existing = assign_versions(df0, None, keys, pay)
-
-    batch = spark.createDataFrame(
-        [
-            ("VOO", d, 534.65, None, None, None, None, None, "d"),  # exact dup of stored
-            ("VOO", d, 777.77, None, None, None, None, None, "d"),  # conflict
-        ],
-        schema=S.HISTORICAL_INTERDAY,
-    )
-    appended = assign_versions(batch, existing, keys, pay)
-    got = [(r.open, r.version) for r in appended.collect()]
-    assert got == [(777.77, 2)]  # dup dropped, conflict gets max+1
+    existing = _delta(base, "historical_interday")
+    batch = [
+        ("VOO", d, 534.65, None, None, None, None, None, "d"),  # exact dup of stored
+        ("VOO", d, 777.77, None, None, None, None, None, "d"),  # conflict
+    ]
+    appended = _delta(batch, "historical_interday", existing)
+    # dup dropped, conflict gets max+1
+    assert _pick(appended, "open", "version") == [(777.77, 2)]
 
 
-def test_allnull_payload_dropped(spark):
+def test_allnull_payload_dropped():
     rows = [
         ("SPY", 1751486400, None, None, None, None, None, "1h"),  # all-null payload
         ("SPY", 1751463000, 617.24, 618.72, 616.61, 618.60, None, "1h"),  # null volume OK
     ]
-    df = spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
-    keys = S.INDEX_COLS["historical_intraday"]
-    pay = S.payload_cols("historical_intraday")
-    kept = drop_allnull_payload(df, pay)
-    assert kept.count() == 1
-    out = assign_versions(df, None, keys, pay)
-    row = out.collect()[0]
-    assert row.timestamp_UTC_s == 1751463000 and row.volume is None and row.version == 1
+    out = _delta(rows, "historical_intraday")
+    assert _pick(out, "timestamp_UTC_s", "volume", "version") == [
+        (1751463000, None, 1)
+    ]
 
 
-def test_co_timestamped_trade_quote_both_stored(spark):
-    df = make_stream_df(spark, STREAM_ROWS)
-    out = assign_versions(df, None, S.INDEX_COLS["streaming"], S.payload_cols("streaming"))
-    co = out.where(out.timestamp_UTC_ms == 1755526651074).collect()
+def test_co_timestamped_trade_quote_both_stored():
+    out = _delta(STREAM_ROWS, "streaming")
+    co = [
+        v for ts, v in _pick(out, "timestamp_UTC_ms", "version")
+        if ts == 1755526651074
+    ]
     # Both rows stored.  Reference versioning looks up max version by index
     # key only (sql_db.py:499-506), so the second arrival of the pair gets
     # version 2 (arrival-order-dependent there; deterministic payload-order
     # here).  FIXTURES.md §anomaly-6 says "both version 1", but the
     # reference code yields {1,2}; we follow the code.
-    assert len(co) == 2
-    assert sorted(r.version for r in co) == [1, 2]
+    assert sorted(co) == [1, 2]
 
 
 def test_latest_version_view_as_of_snapshot(spark):

@@ -1,4 +1,5 @@
-"""Property-based tests (hypothesis) for dedup/versioning invariants.
+"""Property-based tests (hypothesis) for dedup/versioning invariants of
+the one delta kernel, ``versioned_delta_arrow``.
 
 The reference tests only a fixed golden fixture; these verify the
 semantics hold for arbitrary batches:
@@ -13,14 +14,15 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import HealthCheck, given, settings
+import pyarrow as pa
+from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.operators.versioning import assign_versions
+from stock_ops_spark.sources.ingest import versioned_delta_arrow
 
-KEYS = S.INDEX_COLS["streaming"]
-PAYLOAD = S.payload_cols("streaming")
+TZ = "America/New_York"
 
 # small domains force key collisions and payload conflicts
 row_strategy = st.tuples(
@@ -35,25 +37,25 @@ row_strategy = st.tuples(
 )
 
 
-def _stored(spark, rows):
-    df = spark.createDataFrame(rows, schema=S.STREAMING)
-    out = assign_versions(df, None, KEYS, PAYLOAD)
-    return [
-        (r.ticker, r.timestamp_UTC_ms, r.price, r.volume, r.ask_price, r.version)
-        for r in out.collect()
-    ]
+def _table(rows):
+    names = S.STREAMING.fieldNames()
+    return pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(S.STREAMING)
+    )
 
 
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
+def _stored(rows):
+    out = versioned_delta_arrow(_table(rows), None, "streaming", TZ)
+    cols = ["ticker", "timestamp_UTC_ms", "price", "volume", "ask_price", "version"]
+    return list(zip(*(out[c].to_pylist() for c in cols)))
+
+
+@settings(max_examples=100, deadline=None)
 @given(rows=st.lists(row_strategy, min_size=1, max_size=12), seed=st.integers(0, 3))
-def test_versioning_invariants(spark, rows, seed):
+def test_versioning_invariants(rows, seed):
     # drop rows whose payload is entirely None only from EXPECTATION—the
     # engine must do it itself
-    stored = _stored(spark, rows)
+    stored = _stored(rows)
 
     # 1. no duplicate (key, payload)
     kp = [(t, ts, p, v, a) for (t, ts, p, v, a, _ver) in stored]
@@ -74,17 +76,13 @@ def test_versioning_invariants(spark, rows, seed):
     # 4. order independence of the full stored set
     shuffled = rows[:]
     random.Random(seed).shuffle(shuffled)
-    assert set(stored) == set(_stored(spark, shuffled))
+    assert set(stored) == set(_stored(shuffled))
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
+@settings(max_examples=100, deadline=None)
 @given(rows=st.lists(row_strategy, min_size=1, max_size=8))
-def test_reingest_idempotent(spark, rows):
-    df = spark.createDataFrame(rows, schema=S.STREAMING)
-    first = assign_versions(df, None, KEYS, PAYLOAD).localCheckpoint(eager=True)
-    again = assign_versions(df, first, KEYS, PAYLOAD)
-    assert again.count() == 0
+def test_reingest_idempotent(rows):
+    batch = _table(rows)
+    first = versioned_delta_arrow(batch, None, "streaming", TZ)
+    again = versioned_delta_arrow(batch, first, "streaming", TZ)
+    assert again.num_rows == 0

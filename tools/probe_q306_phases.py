@@ -45,13 +45,13 @@ def main() -> None:
     sc = spark.sparkContext
 
     # label phases by wrapping the module functions used inside commits
-    orig_cvd = CL.compute_versioned_delta
+    orig_vds = CL.versioned_delta_spark
 
-    def cvd(*a, **k):
-        sc.setJobDescription("phase:compute_versioned_delta")
-        return orig_cvd(*a, **k)
+    def vds(*a, **k):
+        sc.setJobDescription("phase:versioned_delta_spark")
+        return orig_vds(*a, **k)
 
-    CL.compute_versioned_delta = cvd
+    CL.versioned_delta_spark = vds
 
     # Delta.write resolves the Spark-write layout from sources.ingest at
     # call time (micro deltas write driver-side and run no job)
